@@ -41,6 +41,7 @@ from .operators.providers import get_provider, token_rates
 from .sources.transcript import read_transcript
 
 CONTEXT_TOKENS = 150  # reserved for chunk context (big_chunkeroosky.py:28)
+FILE_ORDER_STRIDE = 1_000_000_000  # reduce-order id offset per input file
 
 
 def _read_prompt_file(path: str | None, what: str) -> str | None:
@@ -73,7 +74,8 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--model", help="Model name (default: provider default)")
     p.add_argument("--max-tokens-per-chunk", type=int, default=4000)
     p.add_argument("--max-concurrent-requests", type=int, default=5,
-                   help="Per-partition request batch size")
+                   help="Requests in flight at once per map task (the "
+                        "reference's per-process semaphore)")
     p.add_argument("--max-requests-per-sec", type=float, default=None,
                    help="Cluster-wide live-API request ceiling (the "
                         "reference's max_concurrent_requests semaphore "
@@ -114,11 +116,17 @@ def _chunk_texts(chunked: DataFrame) -> DataFrame:
         F.sum("n_tokens").alias("token_count"),
         F.min("start").alias("start_time"),
         F.max("end").alias("end_time"),
+        F.sum("n_segments").alias("n_segments"),
     )
 
 
 def run(spark: SparkSession, args: argparse.Namespace) -> dict:
-    """Execute the pipeline; returns the reference-shaped report dict."""
+    """Execute the pipeline; returns the reference-shaped report dict.
+
+    Spark work: one job chain materializes the chunk summaries, one
+    groupBy over them yields every count the report needs, and one
+    ``first()`` runs the reduce, whose depth is planned from those
+    counts."""
     t0 = time.time()
     segments = read_transcript(spark, args.input)
     if args.limit_segments is not None:
@@ -126,19 +134,21 @@ def run(spark: SparkSession, args: argparse.Namespace) -> dict:
     # full fidelity: the reference's clean path always removes repeated
     # words (preprocessor.py:84) — the CLI is the parity surface
     pre = preprocess_segments(segments, full_fidelity=True)
-    n_segments = pre.count()
 
+    # n_segments: source segments per row, summed per chunk and per
+    # document below, so the report's segment count needs no count()
     if not args.no_merge:
         merged = merge_same_speaker(
             pre, float(args.max_segment_duration), doc_col="doc_id"
         )
         segs = merged.select(
             "doc_id", F.col("group_id").alias("seg_id"),
-            "start", "end", "speaker", "text",
+            "start", "end", "speaker", "text", "n_segments",
         )
     else:
         segs = pre.select(
-            "doc_id", "seg_id", "start", "end", "speaker", "text"
+            "doc_id", "seg_id", "start", "end", "speaker", "text",
+            F.lit(1).cast("long").alias("n_segments"),
         )
 
     effective_budget = max(1, args.max_tokens_per_chunk - CONTEXT_TOKENS)
@@ -161,44 +171,49 @@ def run(spark: SparkSession, args: argparse.Namespace) -> dict:
         provider=provider,
         prompt_template=template,
         system_prompt=system,
-        batch_size=args.max_concurrent_requests,
+        max_concurrent_requests=args.max_concurrent_requests,
     )
     summaries = executor.process_chunks(chunks, text_col="text")
     summaries = with_time_headers(summaries).withColumn(
         "completion_tokens", token_count(F.col("summary")).cast("long")
     )
-    # one materialization feeds save-chunks, the token/cost report and
-    # the reduce (hierarchical_reduce localCheckpoints internally too)
+    # one materialization feeds save-chunks, the report and the reduce
     summaries = summaries.transform(materialize)
 
     if args.save_chunks:
-        summaries.write.mode("overwrite").parquet(args.save_chunks)
+        summaries.drop("n_segments").write.mode("overwrite").parquet(
+            args.save_chunks
+        )
 
-    stats = summaries.agg(
-        F.count(F.lit(1)).alias("chunks"),
-        F.sum("token_count").alias("prompt_tokens"),
-        F.sum("completion_tokens").alias("completion_tokens"),
-    ).first()
-    n_chunks = stats["chunks"] or 0
-    prompt_toks = stats["prompt_tokens"] or 0
-    completion_toks = stats["completion_tokens"] or 0
+    per_doc = sorted(
+        summaries.groupBy("doc_id").agg(
+            F.count(F.lit(1)).alias("chunks"),
+            F.sum("token_count").alias("prompt_tokens"),
+            F.sum("completion_tokens").alias("completion_tokens"),
+            F.sum("n_segments").alias("segments"),
+        ).collect(),
+        key=lambda r: r["doc_id"],
+    )
+    n_segments = sum(r["segments"] for r in per_doc)
+    n_chunks = sum(r["chunks"] for r in per_doc)
+    prompt_toks = sum(r["prompt_tokens"] for r in per_doc)
+    completion_toks = sum(r["completion_tokens"] for r in per_doc)
     prompt_rate, completion_rate = token_rates(model)
     cost = prompt_toks * prompt_rate + completion_toks * completion_rate
 
     # global reduce order across input files: chunk ids are per-doc, so
-    # offset them by a per-file index. One row per input FILE — a tiny
-    # driver-side plan step (the reference runs one file per process).
-    doc_ids = sorted(
-        r["doc_id"] for r in summaries.select("doc_id").distinct().collect()
-    )
-    if len(doc_ids) > 1:
-        idx = {d: i for i, d in enumerate(doc_ids)}
-        mapping = F.create_map(
-            *[F.lit(x) for kv in idx.items() for x in kv]
-        )
+    # offset them by a per-file index (path order; the reference runs
+    # one file per process). Each document's chunk ids are then the run
+    # [i * 1e9, i * 1e9 + chunks), which plans the reduce depth.
+    offsets = [i * FILE_ORDER_STRIDE for i in range(len(per_doc))]
+    ranges = [(o, o + r["chunks"]) for o, r in zip(offsets, per_doc)]
+    if len(per_doc) > 1:
+        mapping = F.create_map(*[
+            x for r, o in zip(per_doc, offsets)
+            for x in (F.lit(r["doc_id"]), F.lit(o).cast("long"))
+        ])
         ordered = summaries.select(
-            (mapping[F.col("doc_id")] * F.lit(1_000_000_000)
-             + F.col("chunk_id")).alias("chunk_id"),
+            (mapping[F.col("doc_id")] + F.col("chunk_id")).alias("chunk_id"),
             "summary",
         )
     else:
@@ -209,7 +224,8 @@ def run(spark: SparkSession, args: argparse.Namespace) -> dict:
         )
     else:
         final = hierarchical_reduce(
-            ordered, "chunk_id", "summary", template=aggregator_template
+            ordered, "chunk_id", "summary", template=aggregator_template,
+            ranges=ranges,
         )
     row = final.select("summary").first()
     summary_text = row["summary"] if row else ""

@@ -50,13 +50,13 @@ def format_timestamp(seconds: Column) -> Column:
     """
     total = F.floor(seconds).cast("long")
     hours = (total / 3600).cast("long")
-    rem = total % 3600
-    minutes = (rem / 60).cast("long")
-    secs = rem % 60
+    minutes = ((total % 3600) / 60).cast("long")
+    secs = total % 60
     two = lambda c: F.lpad(c.cast("string"), 2, "0")  # noqa: E731
-    return F.when(
-        hours > 0, F.concat_ws(":", two(hours), two(minutes), two(secs))
-    ).otherwise(F.concat_ws(":", two(minutes), two(secs)))
+    # concat_ws skips the NULL hour field when hours <= 0
+    return F.concat_ws(
+        ":", F.when(hours > 0, two(hours)), two(minutes), two(secs)
+    )
 
 
 def token_count(col: Column) -> Column:

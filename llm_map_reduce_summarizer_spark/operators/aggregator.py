@@ -3,16 +3,19 @@
 The reference batches summaries (≤10/batch), summarizes each batch,
 then combines batch summaries — a 2-level tree. On Spark each level is
 one ``groupBy(ord // batch_size)`` with an order-stable string
-aggregation; ``hierarchical_reduce`` iterates levels driver-side until
-one row remains, giving ``ceil(log_B(n))`` shrinking shuffles — the
+aggregation, giving ``ceil(log_B(n))`` shrinking shuffles — the
 map-side partial aggregation does most of the combining before any
-exchange.
+exchange. ``hierarchical_reduce`` plans the depth on the driver
+(``reduce_plan``) from the ids' runs, which the CLI already knows from
+its per-document chunk counts, so the whole tree is one lazy plan that
+the caller's final action runs.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from .persist import materialize
 
@@ -69,26 +72,75 @@ def reduce_level(
     )
 
 
+def _id_ranges(df: DataFrame, ord_col: str) -> list[tuple[int, int]]:
+    """The distinct ``ord_col`` values as sorted half-open runs
+    [lo, hi) — gaps and islands over the distinct ids, one action."""
+    ids = df.select(F.col(ord_col).cast("long").alias("o")).distinct()
+    island = F.col("o") - F.row_number().over(Window.orderBy("o"))
+    runs = ids.withColumn("isl", island).groupBy("isl").agg(
+        F.min("o").alias("lo"), (F.max("o") + 1).alias("hi")
+    )
+    return sorted((r["lo"], r["hi"]) for r in runs.collect())
+
+
+def reduce_plan(
+    ranges: list[tuple[int, int]], batch_size: int = 10
+) -> list[int]:
+    """Rows entering each tree level, then the final count, simulated
+    on the driver from the ids' half-open runs: a level maps every id
+    to id // B, so a run [lo, hi) becomes [lo // B, (hi - 1) // B + 1),
+    and runs that then touch merge. The tree ends at the first level
+    with at most one row."""
+    runs = sorted(ranges)
+    counts = [sum(hi - lo for lo, hi in runs)]
+    while counts[-1] > 1:
+        merged: list[tuple[int, int]] = []
+        for lo, hi in runs:
+            lo, hi = lo // batch_size, (hi - 1) // batch_size + 1
+            if merged and lo <= merged[-1][1]:
+                merged[-1] = (merged[-1][0], max(merged[-1][1], hi))
+            else:
+                merged.append((lo, hi))
+        if merged == runs:
+            # only ids on both sides of zero end here (-1 and 0 are
+            # fixed points of // B): the tree would never close
+            raise ValueError(
+                f"hierarchical_reduce: ids {runs} never reduce to one row"
+            )
+        runs = merged
+        counts.append(sum(hi - lo for lo, hi in runs))
+    return counts
+
+
 def hierarchical_reduce(
     df: DataFrame,
     ord_col: str = "chunk_id",
     text_col: str = "summary",
     batch_size: int = 10,
     template: str | None = None,
+    ranges: list[tuple[int, int]] | None = None,
 ) -> DataFrame:
     """Tree-reduce to a single final-summary row (log-depth groupBys).
 
-    Each level is localCheckpointed (eager): the per-level ``count`` and
-    the next reduction read materialized partitions, so level k never
-    re-executes levels 1..k-1 — O(L) scans of shrinking data instead of
-    the O(L^2) full-lineage recompute a lazy loop would do. The
-    checkpointed sets shrink by batch_size per level, so executor
-    storage cost is a geometric series bounded by ~2x level 1.
+    ``df`` holds one row per ``ord_col`` id. The level plan — the rows
+    entering each level, and so which levels take the final header and
+    template — is worked out on the driver by ``reduce_plan`` from the
+    ids' half-open runs ``ranges`` (one run per document for contiguous
+    per-document chunk ids). Callers that know the runs pass them;
+    otherwise one action derives them, after the input is materialized
+    so the reduce does not recompute it. The levels then form one lazy
+    plan, run by the caller's single action.
     """
-    out = df.transform(materialize)
-    level = 0
-    n = out.count()
-    while n > 1:
+    if ranges is None:
+        df = df.transform(materialize)
+        ranges = _id_ranges(df, ord_col)
+    counts = reduce_plan(ranges, batch_size)
+    levels = len(counts) - 1
+    out = df
+    for n in counts[:-1]:
+        # a level of at most B rows counts as final, as in the
+        # reference's batching; ids spread over several runs (one per
+        # input file) can take more such levels before one row is left
         is_final = n <= batch_size
         header = (
             "# Transcript Summary" if is_final else "# Intermediate Summary"
@@ -97,15 +149,12 @@ def hierarchical_reduce(
             out, ord_col, text_col, batch_size, header,
             template=template if is_final else None,
         )
-        out = out.transform(materialize)
-        level += 1
-        n = out.count()
-    if level == 0 and template is not None:
+    if levels == 0 and template is not None:
         # single input row: the reference still formats it through the
         # custom aggregation template
         out = out.withColumn(text_col, _templated(F.col(text_col), template))
     return out.select(
-        F.col(text_col).alias("summary"), F.lit(level).alias("levels")
+        F.col(text_col).alias("summary"), F.lit(levels).alias("levels")
     )
 
 

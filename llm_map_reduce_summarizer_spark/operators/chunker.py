@@ -10,15 +10,17 @@ Two implementations:
   (each chunk's token sum stays within budget + one segment overshoot,
   exactly like the greedy version's last-segment overshoot rule).
 
-* ``assign_chunks_greedy`` — faithful reset semantics via
-  ``applyInPandas`` (parallel across transcripts, sequential within —
-  the reference's own data dependency). Use when bit-level parity with
-  the reference chunk boundaries matters more than the extra scan.
+* ``assign_chunks_greedy`` — faithful reset semantics as a JVM fold
+  (``aggregate``) over each transcript's sorted segment array:
+  parallel across transcripts, sequential within — the reference's
+  own data dependency — with no Python worker and no exchange beyond
+  the per-transcript grouping. The CLI and the catalog's
+  ``chunk_greedy`` key use it wherever parity with the reference's
+  chunk boundaries matters.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -134,57 +136,58 @@ def chunk_stats(
     return stats
 
 
-GREEDY_SCHEMA = (
-    "seg_id long, start double, end double, speaker string, "
-    "seg_text string, n_tokens long, chunk_id long"
-)
-
-
 def assign_chunks_greedy(
     segments: DataFrame,
     max_tokens_per_chunk: int = 500,
     doc_col: str | None = None,
     counter: str = "regex",
 ) -> DataFrame:
-    """Faithful greedy accumulate-and-reset chunking.
+    """Faithful greedy accumulate-and-reset chunking, as a JVM fold.
 
-    Parallel across transcripts (one pandas group per doc_col value),
-    sequential within — the reference's own dependency structure
-    (big_chunkeroosky.py:86-99). Oversized single segments keep their
-    own chunk (sentence-splitting of pathological segments is handled
-    upstream by merge caps). ``counter='tiktoken'`` gives BPE-exact
-    budgets matching the reference when the library is installed.
+    Parallel across transcripts (one collected segment array per
+    doc_col value), sequential within — the reference's own dependency
+    structure (big_chunkeroosky.py:86-99). Oversized single segments
+    keep their own chunk (sentence-splitting of pathological segments
+    is handled upstream by merge caps). ``counter='tiktoken'`` gives
+    BPE-exact budgets matching the reference when the library is
+    installed.
+
+    The fold (``aggregate``) walks the seg_id-sorted array keeping only
+    the running token sum and the 1-based positions where chunks
+    start; ``slice`` then cuts each chunk back out and ``inline`` turns
+    the segments into rows. Every input column is carried through,
+    plus ``seg_text``, ``n_tokens`` and ``chunk_id``.
     """
-    counted = with_token_counts(segments, counter).select(
-        "seg_id", "start", "end", "speaker", "seg_text", "n_tokens",
-        *( [doc_col] if doc_col else [] ),
+    part = _part(doc_col)
+    counted = with_token_counts(segments, counter)
+    rest = [c for c in counted.columns if c not in (*part, "seg_id")]
+    cols = ["seg_id", *rest]  # seg_id first: array_sort orders by it
+    segs = counted.groupBy(*part).agg(
+        F.array_sort(F.collect_list(F.struct(*cols))).alias("_segs")
     )
-
-    def greedy(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("seg_id").reset_index(drop=True)
-        chunk_ids, cid, acc = [], 0, 0
-        for n in pdf["n_tokens"]:
-            if acc > 0 and acc + n > max_tokens_per_chunk:
-                cid += 1
-                acc = 0
-            chunk_ids.append(cid)
-            acc += n
-        pdf["chunk_id"] = chunk_ids
-        return pdf[[
-            *( [doc_col] if doc_col else [] ),
-            "seg_id", "start", "end", "speaker", "seg_text", "n_tokens",
-            "chunk_id",
-        ]]
-
-    if doc_col:
-        doc_type = counted.schema[doc_col].dataType.simpleString()
-        return counted.groupBy(doc_col).applyInPandas(
-            greedy, schema=f"{doc_col} {doc_type}, " + GREEDY_SCHEMA
-        )
-    # Single-transcript fallback ONLY: one pandas group = one task. Any
-    # corpus-scale caller must pass doc_col so groups parallelize.
-    return counted.withColumn("_g", F.lit(0)).groupBy("_g").applyInPandas(
-        lambda pdf: greedy(pdf.drop(columns=["_g"])), schema=GREEDY_SCHEMA
+    # The reference's reset rule: a non-empty chunk that would overflow
+    # closes, and the segment opens the next one. The starts accumulate
+    # as a ',N' string, not an array: Spark copies the fold's
+    # accumulator on every element, and a string copies in one block
+    # where an array copies element by element.
+    budget = int(max_tokens_per_chunk)
+    starts = F.expr(f"""aggregate(
+        _segs,
+        named_struct('starts', '', 'tokens', 0L, 'i', 1),
+        (acc, x) -> IF(
+            acc.i = 1 OR (acc.tokens > 0 AND acc.tokens + x.n_tokens > {budget}),
+            named_struct('starts', concat(acc.starts, ',', acc.i),
+                         'tokens', x.n_tokens, 'i', acc.i + 1),
+            named_struct('starts', acc.starts,
+                         'tokens', acc.tokens + x.n_tokens, 'i', acc.i + 1)),
+        acc -> transform(array_remove(split(acc.starts, ','), ''), s -> int(s)))""")
+    chunks = F.expr("""inline(flatten(transform(_starts, (first, k) -> transform(
+        slice(_segs, first, coalesce(get(_starts, k + 1), size(_segs) + 1) - first),
+        x -> named_struct('_seg', x, 'chunk_id', bigint(k))))))""")
+    return (
+        segs.select(*part, "_segs", starts.alias("_starts"))
+        .select(*part, chunks)
+        .select(*part, "_seg.*", "chunk_id")
     )
 
 

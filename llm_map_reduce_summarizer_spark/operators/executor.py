@@ -1,9 +1,10 @@
 """Chunk 'LLM' map stage (reference: llm_executor.py).
 
-The reference fans chunks out to an LLM API with a semaphore; on Spark
-the fan-out IS the cluster — each partition's chunks are processed by
-its executor, so parallelism = partitions, and rate limiting becomes
-partition count × per-partition batching.
+The reference fans chunks out to an LLM API under an asyncio semaphore;
+on Spark the fan-out is the cluster — each partition's chunks are
+processed by its executor — and inside each map task a bounded thread
+pool keeps up to ``max_concurrent_requests`` prompts in flight, the
+reference's semaphore per task.
 
 Two paths:
 
@@ -12,20 +13,30 @@ Two paths:
   mock provider: llm_executor.py:411-432). JVM-side, codegen'd,
   oracle-expressible.
 
-* ``SparkLLMExecutor`` — pluggable batch executor over
-  ``mapInPandas`` for real model calls: a provider callable maps a
-  batch of prompts to completions. Network calls happen inside the
-  Arrow batch iterator (one session per partition, retries included) —
-  the Spark-native shape of the reference's asyncio semaphore loop.
+* ``SparkLLMExecutor`` — pluggable executor over ``mapInPandas`` for
+  real model calls. Each prompt is its own ``provider([prompt])``
+  call, so a rate-capped provider (operators/providers.py) takes one
+  token from its process bucket per request, and each prompt retries
+  on its own with bounded exponential backoff that honours a 429's
+  ``Retry-After``.
 """
 
 from __future__ import annotations
 
+import time
 from collections.abc import Callable, Iterator
+from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+# per-prompt retry waits: exponential backoff from RETRY_BACKOFF_S up
+# to MAX_BACKOFF_S, or a 429's Retry-After up to MAX_RETRY_AFTER_S
+RETRY_BACKOFF_S = 0.25
+MAX_BACKOFF_S = 8.0
+MAX_RETRY_AFTER_S = 60.0
 
 DEFAULT_PROMPT = "Please summarize the following transcript segment:\n\n{transcript}"
 
@@ -91,13 +102,66 @@ def mock_provider(prompts: list[str], model: str = "mock-model") -> list[str]:
     ]
 
 
+def _retry_after_s(exc: BaseException) -> float | None:
+    """Seconds a 429's ``Retry-After`` header asks for, read from the
+    ``urllib.error.HTTPError`` the HTTP adapters raise; None when the
+    error is not a 429 or the header is absent or not a number."""
+    if getattr(exc, "code", None) != 429:
+        return None
+    headers = getattr(exc, "headers", None)
+    value = headers.get("Retry-After") if headers is not None else None
+    try:
+        return max(0.0, float(value))
+    except (TypeError, ValueError):
+        return None
+
+
+def complete_prompts(
+    provider: Callable[[list[str]], list[str]],
+    prompts: list[str],
+    attempts: int = 3,
+    concurrency: int = 5,
+    sleep: Callable[[float], None] = time.sleep,
+) -> list[str]:
+    """Completions for ``prompts``, in order: each prompt is its own
+    ``provider([p])`` call, up to ``concurrency`` in flight, and
+    retries on its own. The wait before retry k is a 429's
+    ``Retry-After`` (up to ``MAX_RETRY_AFTER_S``), else
+    ``RETRY_BACKOFF_S * 2**k`` (up to ``MAX_BACKOFF_S``). Once
+    ``attempts`` run out the prompt gets the reference's
+    '[Error processing chunk: ...]' sentinel (llm_executor.py:216-228)
+    instead of failing the task."""
+
+    def one(prompt: str) -> str:
+        attempt = 0
+        while True:
+            try:
+                return provider([prompt])[0]
+            except Exception as exc:  # noqa: BLE001
+                attempt += 1
+                if attempt >= attempts:
+                    return f"[Error processing chunk: {exc}]"
+                wait = _retry_after_s(exc)
+                if wait is None:
+                    wait = min(RETRY_BACKOFF_S * 2 ** (attempt - 1), MAX_BACKOFF_S)
+                sleep(min(wait, MAX_RETRY_AFTER_S))
+
+    workers = min(len(prompts), max(1, concurrency))
+    if workers <= 1:
+        return [one(p) for p in prompts]
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        return list(pool.map(one, prompts))
+
+
 class SparkLLMExecutor:
     """Distribute per-chunk prompt completion across the cluster.
 
-    provider: ``(list[str]) -> list[str]`` executed per Arrow batch on
-    executors. Retries with bounded attempts; failures produce the
-    reference's '[Error processing chunk: ...]' sentinel rather than
-    failing the job (llm_executor.py:216-228).
+    provider: ``(list[str]) -> list[str]``, called on executors through
+    ``complete_prompts``: one prompt per call, up to
+    ``max_concurrent_requests`` in flight per map task — the
+    reference's semaphore (llm_executor.py:132-142) — each retried on
+    its own. A rate-capped provider takes one token from its process
+    bucket per request, retries included.
     """
 
     def __init__(
@@ -106,20 +170,23 @@ class SparkLLMExecutor:
         prompt_template: str = DEFAULT_PROMPT,
         system_prompt: str | None = None,
         retry_attempts: int = 3,
-        batch_size: int = 16,
+        max_concurrent_requests: int = 5,
     ):
         self.provider = provider or mock_provider
         self.prompt_template = prompt_template
         self.system_prompt = system_prompt
         self.retry_attempts = retry_attempts
-        self.batch_size = batch_size
+        self.max_concurrent_requests = max_concurrent_requests
 
     def process_chunks(self, chunks: DataFrame, text_col: str = "text") -> DataFrame:
-        provider = self.provider
         template = self.prompt_template
-        system = self.system_prompt
-        attempts = self.retry_attempts
-        bs = self.batch_size
+        prefix = (self.system_prompt + "\n\n") if self.system_prompt else ""
+        # plain values only: the closure ships to executors
+        complete = partial(
+            complete_prompts, self.provider,
+            attempts=self.retry_attempts,
+            concurrency=self.max_concurrent_requests,
+        )
         out_schema = ", ".join(
             f"{f.name} {f.dataType.simpleString()}" for f in chunks.schema.fields
         ) + ", summary string"
@@ -127,22 +194,9 @@ class SparkLLMExecutor:
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
                 prompts = [
-                    ((system + "\n\n") if system else "")
-                    + template.format(transcript=t)
+                    prefix + template.format(transcript=t)
                     for t in pdf[text_col].astype(str)
                 ]
-                outs: list[str] = []
-                for i in range(0, len(prompts), bs):
-                    batch = prompts[i : i + bs]
-                    for attempt in range(attempts):
-                        try:
-                            outs.extend(provider(batch))
-                            break
-                        except Exception as exc:  # noqa: BLE001
-                            if attempt == attempts - 1:
-                                outs.extend(
-                                    [f"[Error processing chunk: {exc}]"] * len(batch)
-                                )
-                yield pdf.assign(summary=outs)
+                yield pdf.assign(summary=complete(prompts))
 
         return chunks.mapInPandas(run, schema=out_schema)

@@ -147,6 +147,10 @@ def materialize_all(dfs: list[DataFrame]) -> list[DataFrame]:
     # function-only form warns and skips them). Cap the pool — each
     # worker is a concurrent Spark job, and past a handful they only
     # contend for the same executor slots.
-    target = inheritable_thread_target(dfs[0].sparkSession)(materialize)
+    # Without pinned threads (PYSPARK_PIN_THREAD=false) there are no
+    # per-thread properties to carry, and the call hands the session
+    # back instead of a decorator: use plain materialize then.
+    wrap = inheritable_thread_target(dfs[0].sparkSession)
+    target = wrap(materialize) if callable(wrap) else materialize
     with ThreadPoolExecutor(max_workers=min(len(dfs), 8)) as pool:
         return list(pool.map(target, dfs))

@@ -3,14 +3,17 @@
 The reference implements OpenAI and Anthropic HTTP adapters with an
 asyncio semaphore and retry loop (llm_executor.py:234-248) and falls
 back to a keyless mock provider. Here each adapter is a plain
-``list[str] -> list[str]`` callable executed inside
-``SparkLLMExecutor``'s Arrow-batch loop on executors — cluster
-parallelism replaces the semaphore for CONCURRENCY (= partitions), the
-executor's bounded-attempt retry wraps every batch, and the reference's
-global request CEILING (``asyncio.Semaphore(max_concurrent_requests)``,
+``list[str] -> list[str]`` callable that ``SparkLLMExecutor`` calls on
+executors with one prompt at a time, from a bounded per-task thread
+pool (its ``max_concurrent_requests``) that retries each prompt on its
+own. A failed request raises, so the executor sees the
+``urllib.error.HTTPError`` and, for a 429, its ``Retry-After``. The
+reference's global request CEILING
+(``asyncio.Semaphore(max_concurrent_requests)``,
 llm_executor.py:81,132-142) is enforced by ``cluster_rate_limited``:
 per-worker token buckets each holding a driver-computed slice of
-``max_requests_per_sec``, so 1000 executors cannot stampede the API.
+``max_requests_per_sec``, shared by every thread of the worker
+process, so 1000 executors cannot stampede the API.
 
 Only public HTTP APIs and env-keyed credentials are used
 (``OPENAI_API_KEY`` / ``ANTHROPIC_API_KEY``); with no key configured,

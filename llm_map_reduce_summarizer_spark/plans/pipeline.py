@@ -322,8 +322,8 @@ def chunk_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Faithful greedy chunker (rows-only check: sequential reset).
 
     Partitioned by ``source`` — each source is one transcript stream, so
-    the sequential accumulate-and-reset runs per transcript in parallel
-    pandas groups, never as a single global task.
+    the sequential accumulate-and-reset fold runs per transcript in
+    parallel groups, never as a single global task.
     """
     segs = _segments_clean(spark, sf_dir).withColumn(
         "transcript", F.col("speaker")

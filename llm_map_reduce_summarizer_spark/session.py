@@ -1,6 +1,8 @@
 """SparkSession factory tuned for this engine.
 
-Local test mode is ``local[$SPARK_GRAFT_CPUS]`` (default 32). The same
+Local test mode is ``local[$SPARK_GRAFT_CPUS]`` (default 32), with a
+driver heap of ``$SPARK_GRAFT_DRIVER_MEM`` (default: 16g, capped at a
+share of physical memory, see ``default_driver_memory``). The same
 settings are the right defaults on a real cluster: AQE for runtime
 re-planning and skew joins, Arrow for every Pandas-UDF exchange, and
 shuffle partitions sized to the parallelism at hand rather than the
@@ -12,6 +14,30 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Share of physical memory the default driver heap may take. In local
+# mode the driver JVM also runs every task, and beside it sit the
+# Python driver and its workers: a heap near RAM lets the collector
+# grow it until the kernel's OOM killer ends the JVM (a 16g heap on a
+# 15 GB machine was killed at 13 GB resident, mid test suite).
+HEAP_SHARE_OF_RAM = 0.4
+MAX_DEFAULT_HEAP_MB = 16 * 1024
+
+
+def physical_memory_bytes() -> int | None:
+    try:
+        return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):
+        return None
+
+
+def default_driver_memory() -> str:
+    """Driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: 16g, or
+    ``HEAP_SHARE_OF_RAM`` of physical memory when that is less."""
+    total = physical_memory_bytes()
+    if not total:
+        return f"{MAX_DEFAULT_HEAP_MB}m"
+    return f"{min(MAX_DEFAULT_HEAP_MB, int(total * HEAP_SHARE_OF_RAM) >> 20)}m"
 
 
 def get_spark(app_name: str = "llm_map_reduce_summarizer_spark") -> SparkSession:
@@ -40,8 +66,15 @@ def get_spark(app_name: str = "llm_map_reduce_summarizer_spark") -> SparkSession
         # long and normalize in the loader (sources/tables.py handles
         # nanos-long, TIMESTAMP_NTZ, and plain TIMESTAMP generations)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
+        # Spark 4 otherwise records a Python call site (several extra
+        # Py4J round trips) on every Column/DataFrame call; the cost of
+        # turning it off is that analysis errors lose that context
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -78,6 +78,61 @@ def test_cli_multi_file_input_orders_across_files(spark, tmp_path):
     assert result["segments"] == 8
 
 
+def test_cli_four_or_more_files_sum_counts(spark, tmp_path):
+    """Four files: the per-file reduce-order offset (file index x 1e9)
+    needs long arithmetic; the report sums every file's counts."""
+    one = run(
+        spark,
+        build_parser().parse_args(
+            ["--input", _write_transcript(tmp_path, "single.json"), "--quiet"]
+        ),
+    )
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+    for name in ("a.json", "b.json", "c.json", "d.json"):
+        _write_transcript(corpus, name)
+    result = run(
+        spark, build_parser().parse_args(["--input", str(corpus), "--quiet"])
+    )
+    assert result["segments"] == 4 * one["segments"] == 48
+    assert result["chunks"] == 4 * one["chunks"]
+    assert result["summary"].startswith("# Transcript Summary")
+    assert result["summary"].count("[Mock response using") == result["chunks"]
+
+
+def test_cli_request_job_budget(spark, tmp_path, monkeypatch):
+    """One transcript through run() launches at most 6 Spark jobs, and
+    the provider is called exactly once per chunk."""
+    from llm_map_reduce_summarizer_spark import __main__ as m
+
+    path = _write_transcript(tmp_path, n=40)
+    log = tmp_path / "provider_calls.log"
+
+    def counting(prompts):
+        with open(log, "a", encoding="utf-8") as f:
+            f.write("call\n")
+        return [f"summary of {len(p)} chars" for p in prompts]
+
+    monkeypatch.setattr(
+        m, "get_provider", lambda *a, **k: (counting, "counting-model", False)
+    )
+    args = build_parser().parse_args(
+        ["--input", path, "--quiet", "--max-tokens-per-chunk", "400"]
+    )
+    sc = spark.sparkContext
+    group = "test-cli-request-job-budget"
+    sc.setJobGroup(group, "one run() call")
+    try:
+        result = run(spark, args)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert result["chunks"] > 1
+    assert len(jobs) <= 6, f"{len(jobs)} Spark jobs for one request"
+    assert len(log.read_text(encoding="utf-8").splitlines()) == result["chunks"]
+
+
 def test_cli_custom_prompt_file(spark, tmp_path):
     path = _write_transcript(tmp_path)
     prompt = tmp_path / "prompt.txt"

@@ -204,6 +204,38 @@ def test_hierarchical_reduce_log_depth(spark):
     assert out["summary"][0].startswith("# Transcript Summary")
 
 
+def test_reduce_plan_simulates_id_levels():
+    from llm_map_reduce_summarizer_spark.operators.aggregator import (
+        reduce_plan,
+    )
+
+    assert reduce_plan([]) == [0]
+    assert reduce_plan([(0, 1)]) == [1]
+    assert reduce_plan([(0, 10)]) == [10, 1]
+    assert reduce_plan([(0, 101)]) == [101, 11, 2, 1]
+    # per-file runs offset by 1e9: the runs only meet at the 10th level
+    stride = 1_000_000_000
+    runs = [(0, 3), (stride, stride + 4), (2 * stride, 2 * stride + 1)]
+    assert reduce_plan(runs) == [8, 3, 3, 3, 3, 3, 3, 3, 3, 3, 1]
+    with pytest.raises(ValueError):
+        reduce_plan([(-1, 1)])
+
+
+def test_hierarchical_reduce_given_ranges_matches_derived(spark):
+    """Runs passed by the caller plan the same tree as runs derived
+    from the data, gaps between runs included."""
+    ids = [*range(0, 23), *range(40, 47), 1000]
+    df = spark.createDataFrame(
+        [(i, f"s{i}") for i in ids], "chunk_id long, summary string"
+    )
+    derived = hierarchical_reduce(df, batch_size=10).collect()
+    given = hierarchical_reduce(
+        df, batch_size=10, ranges=[(0, 23), (40, 47), (1000, 1001)]
+    ).collect()
+    assert derived == given
+    assert derived[0]["levels"] == 4  # 31 -> 5 -> 2 -> 2 -> 1
+
+
 def test_lsh_topk_consistent_with_exact_scores(spark):
     e = load_table(spark, SF, "embeddings")
     q = e.filter(F.col("vec_id") < 10)
@@ -515,6 +547,65 @@ def test_executor_retries_then_error_sentinel(spark):
         .toPandas()
     )
     assert all(s.startswith("[Mock response") for s in ok["summary"])
+
+
+def test_executor_retries_only_the_failed_prompt():
+    """A one-shot failure on prompt 3 of 5 retries that prompt alone:
+    5 first attempts + 1 retry, not a resend of the whole batch."""
+    import threading
+
+    from llm_map_reduce_summarizer_spark.operators.executor import (
+        RETRY_BACKOFF_S,
+        complete_prompts,
+    )
+
+    calls: list[str] = []
+    lock = threading.Lock()
+    waits: list[float] = []
+
+    def flaky_once(prompts):
+        (p,) = prompts
+        with lock:
+            calls.append(p)
+            first = calls.count(p) == 1
+        if p.endswith("p2") and first:
+            raise RuntimeError("transient upstream error")
+        return [f"done {p[-2:]}"]
+
+    prompts = [f"p{i}" for i in range(5)]
+    out = complete_prompts(flaky_once, prompts, concurrency=5, sleep=waits.append)
+    assert out == [f"done p{i}" for i in range(5)]
+    assert len(calls) == 6
+    assert waits == [RETRY_BACKOFF_S]
+
+
+def test_executor_honours_retry_after_on_429():
+    """A 429's Retry-After header sets the wait before the retry
+    (through the injectable sleep), then the retry succeeds."""
+    import email.message
+    import urllib.error
+
+    from llm_map_reduce_summarizer_spark.operators.executor import (
+        complete_prompts,
+    )
+
+    headers = email.message.Message()
+    headers["Retry-After"] = "7"
+    attempts: list[str] = []
+    waits: list[float] = []
+
+    def limited(prompts):
+        attempts.append(prompts[0])
+        if len(attempts) == 1:
+            raise urllib.error.HTTPError(
+                "http://llm.invalid/v1", 429, "Too Many Requests", headers, None
+            )
+        return ["ok"]
+
+    out = complete_prompts(limited, ["p"], sleep=waits.append)
+    assert out == ["ok"]
+    assert attempts == ["p", "p"]
+    assert waits == [7.0]
 
 
 def test_fake_decode_deterministic():

@@ -226,3 +226,26 @@ def test_materialize_all_concurrent_checkpoints(spark):
     only = materialize_all([a])
     assert only[0].count() == 10
     assert materialize_all([]) == []
+
+
+def test_materialize_all_without_pinned_threads(spark, monkeypatch):
+    """With pinned-thread mode off, ``inheritable_thread_target(session)``
+    returns the session itself rather than a decorator; materialize_all
+    must fall back to plain materialize instead of calling it."""
+    import py4j.clientserver
+
+    from llm_map_reduce_summarizer_spark.operators.persist import (
+        materialize_all,
+    )
+
+    # pyspark tells pinned mode from the gateway's class: make the
+    # shared gateway fail that check, as a non-pinned gateway would
+    monkeypatch.setattr(
+        py4j.clientserver, "ClientServer", type("NotPinned", (), {})
+    )
+    a = spark.range(4).withColumnRenamed("id", "a")
+    b = spark.range(6).withColumnRenamed("id", "b")
+    out = materialize_all([a, b])
+    monkeypatch.undo()
+    assert [df.count() for df in out] == [4, 6]
+    assert "ExistingRDD" in out[1]._jdf.queryExecution().toString()

@@ -65,6 +65,97 @@ def test_greedy_chunker_invariants(spark, words_per_seg):
         assert prev_sums[row["chunk_id"] - 1] + row["n_tokens"] > BUDGET
 
 
+def greedy_reference(tokens: list[int], budget: int) -> list[int]:
+    """Plain-Python accumulate-and-reset: a non-empty chunk that the
+    next segment would push over the budget closes first."""
+    ids: list[int] = []
+    cid, acc = -1, 0
+    for n in tokens:
+        if cid < 0 or (acc > 0 and acc + n > budget):
+            cid, acc = cid + 1, 0
+        ids.append(cid)
+        acc += n
+    return ids
+
+
+# "[00:00] S: " is 7 regex tokens ahead of the words (start 0.0)
+SEG_OVERHEAD = 7
+
+
+def _assert_greedy_parity(spark, docs: list[list[int]], budget: int) -> None:
+    """``docs``: words per segment, per document (a document may be
+    empty). Every document's chunk ids must equal the reference's."""
+    rows = [
+        (f"d{d}", i, 0.0, 1.0, "S", " ".join(["tok"] * n))
+        for d, words in enumerate(docs)
+        for i, n in enumerate(words)
+    ]
+    segs = spark.createDataFrame(
+        rows,
+        "doc string, seg_id long, start double, end double, "
+        "speaker string, text string",
+    )
+    out = (
+        assign_chunks_greedy(segs, budget, doc_col="doc")
+        .select("doc", "seg_id", "n_tokens", "chunk_id")
+        .toPandas()
+        .sort_values(["doc", "seg_id"])
+    )
+    got = {doc: g for doc, g in out.groupby("doc")}
+    for d, words in enumerate(docs):
+        if not words:
+            assert f"d{d}" not in got
+            continue
+        g = got[f"d{d}"]
+        tokens = [n + SEG_OVERHEAD for n in words]
+        assert list(g["seg_id"]) == list(range(len(words)))
+        assert list(g["n_tokens"]) == tokens
+        assert list(g["chunk_id"]) == greedy_reference(tokens, budget)
+
+
+def test_greedy_chunker_edge_cases_match_reference(spark):
+    """Empty input, an empty document next to others, segments larger
+    than the budget, and chunks that land exactly on the budget."""
+    exact = BUDGET - SEG_OVERHEAD  # one segment fills the budget
+    half = BUDGET // 2 - SEG_OVERHEAD  # two fill it exactly
+    _assert_greedy_parity(spark, [], BUDGET)
+    _assert_greedy_parity(
+        spark,
+        [
+            [],
+            [exact, exact, 1, exact],
+            [half, half, half, half, half],
+            [3 * BUDGET, 1, 2 * BUDGET, 2 * BUDGET, 1, 1],
+            [half, half + 1, half - 1, half],
+            [1],
+        ],
+        BUDGET,
+    )
+
+
+def test_greedy_chunker_long_document_matches_reference(spark):
+    """One 50k-segment document: parity with the reference (the fold
+    must not degrade to per-segment array appends)."""
+    import random
+
+    rng = random.Random(50_000)
+    words = [rng.randint(1, 12) for _ in range(50_000)]
+    _assert_greedy_parity(spark, [words, [5, 40, 2]], BUDGET)
+
+
+doc_lists = st.lists(
+    st.lists(st.integers(min_value=0, max_value=60), max_size=25),
+    max_size=4,
+)
+
+
+@settings(max_examples=20, deadline=None)
+@given(docs=doc_lists)
+@pytest.mark.slow
+def test_greedy_chunker_matches_reference_property(spark, docs):
+    _assert_greedy_parity(spark, docs, BUDGET)
+
+
 @settings(max_examples=25, deadline=None)
 @given(words_per_seg=seg_lists)
 @pytest.mark.slow

@@ -334,7 +334,7 @@ def test_executor_integration_with_throttled_mock(spark):
         "chunk_id long, text string",
     )
     out = (
-        SparkLLMExecutor(provider=provider, batch_size=4)
+        SparkLLMExecutor(provider=provider, max_concurrent_requests=4)
         .process_chunks(chunks)
         .toPandas()
     )
