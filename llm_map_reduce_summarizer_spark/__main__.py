@@ -13,7 +13,8 @@ Flag set matches reference main.py:406-480: --input/--output/
 --max-segment-duration/--no-merge/--no-hierarchical/--limit-segments/
 --report/--prompt-file/--system-prompt-file/--save-chunks/
 --aggregator-prompt-file/--quiet (plus --tokenizer to pick the token
-counter backend and --sf-cpus for local parallelism).
+counter backend). Local parallelism comes from ``SPARK_GRAFT_CPUS``,
+else the machine's CPU count (``session.default_cpus``).
 """
 
 from __future__ import annotations
@@ -24,7 +25,7 @@ import sys
 import time
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .functions.text import token_count
@@ -33,8 +34,12 @@ from .operators.aggregator import (
     reduce_direct,
     with_time_headers,
 )
-from .operators.chunker import assign_chunks_greedy
-from .operators.executor import SparkLLMExecutor, resolve_prompt
+from .operators.chunker import assign_chunks_greedy, chunk_texts
+from .operators.executor import (
+    SparkLLMExecutor,
+    read_prompt_file,
+    resolve_prompt,
+)
 from .operators.persist import materialize
 from .operators.preprocess import merge_same_speaker, preprocess_segments
 from .operators.providers import get_provider, token_rates
@@ -42,22 +47,6 @@ from .sources.transcript import read_transcript
 
 CONTEXT_TOKENS = 150  # reserved for chunk context (big_chunkeroosky.py:28)
 FILE_ORDER_STRIDE = 1_000_000_000  # reduce-order id offset per input file
-
-
-def _read_prompt_file(path: str | None, what: str) -> str | None:
-    """Load an optional prompt file; warn (like the reference's logged
-    error, main.py:216) and fall back to the default when unreadable."""
-    if not path:
-        return None
-    try:
-        text = Path(path).read_text(encoding="utf-8").strip()
-        return text or None
-    except OSError as exc:
-        print(
-            f"warning: failed to load {what} from {path}: {exc}",
-            file=sys.stderr,
-        )
-        return None
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -99,25 +88,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--quiet", "-q", action="store_true")
     p.add_argument("--tokenizer", choices=["regex", "tiktoken", "auto"],
                    default="regex", help="Token counter backend")
-    p.add_argument("--sf-cpus", type=int, default=8,
-                   help="local[N] parallelism when building the session")
     return p
-
-
-def _chunk_texts(chunked: DataFrame) -> DataFrame:
-    """(doc_id, chunk_id) -> ordered chunk text + stats, one shuffle."""
-    pairs = F.collect_list(
-        F.struct(F.col("seg_id").alias("o"), F.col("seg_text").alias("t"))
-    )
-    return chunked.groupBy("doc_id", "chunk_id").agg(
-        F.array_join(
-            F.transform(F.array_sort(pairs), lambda x: x["t"]), "\n\n"
-        ).alias("text"),
-        F.sum("n_tokens").alias("token_count"),
-        F.min("start").alias("start_time"),
-        F.max("end").alias("end_time"),
-        F.sum("n_segments").alias("n_segments"),
-    )
 
 
 def run(spark: SparkSession, args: argparse.Namespace) -> dict:
@@ -155,7 +126,9 @@ def run(spark: SparkSession, args: argparse.Namespace) -> dict:
     chunked = assign_chunks_greedy(
         segs, effective_budget, doc_col="doc_id", counter=args.tokenizer
     )
-    chunks = _chunk_texts(chunked)
+    chunks = chunk_texts(
+        chunked, "doc_id", F.sum("n_segments").alias("n_segments")
+    )
 
     provider, model, is_mock = get_provider(
         args.provider,
@@ -163,8 +136,8 @@ def run(spark: SparkSession, args: argparse.Namespace) -> dict:
         max_requests_per_sec=args.max_requests_per_sec,
     )
     template = resolve_prompt(prompt_file=args.prompt_file)
-    system = _read_prompt_file(args.system_prompt_file, "system prompt")
-    aggregator_template = _read_prompt_file(
+    system = read_prompt_file(args.system_prompt_file, "system prompt")
+    aggregator_template = read_prompt_file(
         args.aggregator_prompt_file, "aggregator prompt"
     )
     executor = SparkLLMExecutor(
@@ -246,9 +219,7 @@ def run(spark: SparkSession, args: argparse.Namespace) -> dict:
 def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
     from .session import get_spark
-    import os
 
-    os.environ.setdefault("SPARK_GRAFT_CPUS", str(args.sf_cpus))
     spark = get_spark("llm-map-reduce-cli")
     try:
         result = run(spark, args)

@@ -64,8 +64,23 @@ def token_count(col: Column) -> Column:
     return F.size(F.regexp_extract_all(col, F.lit(TOKEN_PATTERN), 0))
 
 
-def word_count(col: Column) -> Column:
-    return F.size(F.split(F.trim(col), r"\s+"))
+def collect_sorted(*fields: Column) -> Column:
+    """Aggregate: the group's ``struct(*fields)`` values as an array
+    sorted by those fields, left to right (``array_sort`` compares
+    struct fields by position and ignores their names)."""
+    return F.array_sort(F.collect_list(F.struct(*fields)))
+
+
+def ordered_join(text: Column | str, sep: str, *order: Column | str) -> Column:
+    """Aggregate: the group's ``text`` values joined by ``sep`` in
+    ``order`` order — the order keys first, then the text as the last
+    tie-breaker."""
+    keys = [F.col(o) if isinstance(o, str) else o for o in order]
+    text = F.col(text) if isinstance(text, str) else text
+    pairs = collect_sorted(
+        *(k.alias(f"o{i}") for i, k in enumerate(keys)), text.alias("t")
+    )
+    return F.array_join(F.transform(pairs, lambda x: x["t"]), sep)
 
 
 def quantize(col: Column, decimals: int) -> Column:

@@ -17,14 +17,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.text import format_timestamp, ordered_join
 from .persist import materialize
-
-
-def _ordered_join(ord_col: str, text_col: str, sep: str):
-    pairs = F.collect_list(
-        F.struct(F.col(ord_col).alias("o"), F.col(text_col).alias("t"))
-    )
-    return F.array_join(F.transform(F.array_sort(pairs), lambda x: x["t"]), sep)
 
 
 def _templated(joined, template: str):
@@ -53,7 +47,7 @@ def reduce_level(
     """
     batch = F.floor(F.col(ord_col) / F.lit(batch_size)).alias("batch_id")
     grouped = df.groupBy(batch).agg(
-        _ordered_join(ord_col, text_col, "\n\n").alias("joined"),
+        ordered_join(text_col, "\n\n", ord_col).alias("joined"),
         F.count(F.lit(1)).alias("n_parts"),
     )
     if template is not None:
@@ -166,8 +160,6 @@ def with_time_headers(
 ) -> DataFrame:
     """Prepend the reference's '[Time: MM:SS - MM:SS]' position header
     to each chunk summary (result_aggregator.py:86-88)."""
-    from ..functions.text import format_timestamp
-
     header = F.concat(
         F.lit("[Time: "),
         format_timestamp(F.col(start_col)),

@@ -17,15 +17,22 @@ Two implementations:
   the per-transcript grouping. The CLI and the catalog's
   ``chunk_greedy`` key use it wherever parity with the reference's
   chunk boundaries matters.
+
+Either output goes through ``chunk_texts`` to build each chunk's text.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.text import format_timestamp, quantize, token_count
+from ..functions.text import (
+    collect_sorted,
+    format_timestamp,
+    ordered_join,
+    quantize,
+)
 
 
 def _part(doc_col: str | None) -> list[str]:
@@ -119,21 +126,25 @@ def chunk_stats(
             ),
             F.min("t0").alias("t0"),
         )
-        .withColumn(
-            "position_pct",
-            F.when(
-                F.col("end_time") > F.col("t0"),
-                quantize(
-                    100.0
-                    * (F.col("start_time") - F.col("t0"))
-                    / (F.col("end_time") - F.col("t0")),
-                    4,
-                ),
-            ).otherwise(0.0),
-        )
+        .withColumn("position_pct", position_pct())
         .drop("t0")
     )
     return stats
+
+
+def position_pct() -> Column:
+    """A chunk's start as a percentage of the way from the transcript's
+    ``t0`` to the chunk's ``end_time`` (the reference's chunk-relative
+    formula, big_chunkeroosky.py:182-184); 0 for a zero-length span."""
+    return F.when(
+        F.col("end_time") > F.col("t0"),
+        quantize(
+            100.0
+            * (F.col("start_time") - F.col("t0"))
+            / (F.col("end_time") - F.col("t0")),
+            4,
+        ),
+    ).otherwise(0.0)
 
 
 def assign_chunks_greedy(
@@ -161,10 +172,8 @@ def assign_chunks_greedy(
     part = _part(doc_col)
     counted = with_token_counts(segments, counter)
     rest = [c for c in counted.columns if c not in (*part, "seg_id")]
-    cols = ["seg_id", *rest]  # seg_id first: array_sort orders by it
-    segs = counted.groupBy(*part).agg(
-        F.array_sort(F.collect_list(F.struct(*cols))).alias("_segs")
-    )
+    cols = ["seg_id", *rest]  # seg_id first: collect_sorted orders by it
+    segs = counted.groupBy(*part).agg(collect_sorted(*cols).alias("_segs"))
     # The reference's reset rule: a non-empty chunk that would overflow
     # closes, and the segment opens the next one. The starts accumulate
     # as a ',N' string, not an array: Spark copies the fold's
@@ -188,6 +197,23 @@ def assign_chunks_greedy(
         segs.select(*part, "_segs", starts.alias("_starts"))
         .select(*part, chunks)
         .select(*part, "_seg.*", "chunk_id")
+    )
+
+
+def chunk_texts(
+    chunked: DataFrame, doc_col: str | None, *extra_aggs: Column
+) -> DataFrame:
+    """One row per (``doc_col``, chunk_id) of a chunker's output: the
+    chunk's ``seg_text`` values joined by blank lines in seg_id order
+    (``text``), ``token_count``, ``start_time`` and ``end_time``.
+    ``extra_aggs`` are further per-chunk aggregates computed in the same
+    groupBy, so a caller's stats cost no second aggregation."""
+    return chunked.groupBy(*_part(doc_col), "chunk_id").agg(
+        ordered_join("seg_text", "\n\n", "seg_id").alias("text"),
+        F.sum("n_tokens").alias("token_count"),
+        F.min("start").alias("start_time"),
+        F.max("end").alias("end_time"),
+        *extra_aggs,
     )
 
 
@@ -278,21 +304,7 @@ def split_oversized(
         )
     )
 
-    ordered_text = F.array_join(
-        F.transform(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("sent_idx").alias("o1"),
-                        F.col("j").alias("o2"),
-                        F.col("piece").alias("t"),
-                    )
-                )
-            ),
-            lambda x: x["t"],
-        ),
-        " ",
-    )
+    ordered_text = ordered_join("piece", " ", "sent_idx", "j")
     dur = F.col("end") - F.col("start")
     frac0 = F.col("c0").cast("double") / F.col("total_chars")
     frac1 = (F.col("c0") + F.col("clen")).cast("double") / F.col("total_chars")

@@ -14,15 +14,16 @@ Two paths:
   oracle-expressible.
 
 * ``SparkLLMExecutor`` — pluggable executor over ``mapInPandas`` for
-  real model calls. Each prompt is its own ``provider([prompt])``
-  call, so a rate-capped provider (operators/providers.py) takes one
-  token from its process bucket per request, and each prompt retries
-  on its own with bounded exponential backoff that honours a 429's
-  ``Retry-After``.
+  real model calls. A provider maps one prompt to one completion
+  (``str -> str``), so a rate-capped provider
+  (operators/providers.py) takes one token from its process bucket
+  per request, and each prompt retries on its own with bounded
+  exponential backoff that honours a 429's ``Retry-After``.
 """
 
 from __future__ import annotations
 
+import sys
 import time
 from collections.abc import Callable, Iterator
 from concurrent.futures import ThreadPoolExecutor
@@ -41,26 +42,29 @@ MAX_RETRY_AFTER_S = 60.0
 DEFAULT_PROMPT = "Please summarize the following transcript segment:\n\n{transcript}"
 
 
+def read_prompt_file(path: str | None, what: str) -> str | None:
+    """The stripped text of an optional prompt file, or None when no
+    path is given or the file is empty. An unreadable file prints a
+    warning (the reference logs an error, main.py:216) and also gives
+    None, so the caller falls back to its default."""
+    if not path:
+        return None
+    try:
+        with open(path, encoding="utf-8") as f:
+            return f.read().strip() or None
+    except OSError as exc:
+        print(f"warning: failed to load {what} from {path}: {exc}", file=sys.stderr)
+        return None
+
+
 def resolve_prompt(
     explicit: str | None = None,
     prompt_file: str | None = None,
     default: str = DEFAULT_PROMPT,
 ) -> str:
     """The reference's prompt-resolution priority (main.py:155-167):
-    explicit template > template file > built-in default. A missing or
-    unreadable file falls back to the default rather than failing the
-    pipeline."""
-    if explicit:
-        return explicit
-    if prompt_file:
-        try:
-            with open(prompt_file, encoding="utf-8") as f:
-                content = f.read().strip()
-            if content:
-                return content
-        except OSError:
-            pass
-    return default
+    explicit template > template file > built-in default."""
+    return explicit or read_prompt_file(prompt_file, "prompt template") or default
 
 
 def extractive_summary(
@@ -94,12 +98,12 @@ def summarize_chunks(chunk_texts: DataFrame, head_chars: int = 150) -> DataFrame
 # Pluggable executor (real-LLM path; default provider = offline mock)
 
 
-def mock_provider(prompts: list[str], model: str = "mock-model") -> list[str]:
+def mock_provider(prompt: str, model: str = "mock-model") -> str:
     """Keyless deterministic provider (mirrors llm_executor mock)."""
-    return [
+    return (
         f"[Mock response using {model}]\n\nSimulated summary of a "
-        f"{len(p)}-char prompt." for p in prompts
-    ]
+        f"{len(prompt)}-char prompt."
+    )
 
 
 def _retry_after_s(exc: BaseException) -> float | None:
@@ -117,16 +121,16 @@ def _retry_after_s(exc: BaseException) -> float | None:
 
 
 def complete_prompts(
-    provider: Callable[[list[str]], list[str]],
+    provider: Callable[[str], str],
     prompts: list[str],
     attempts: int = 3,
     concurrency: int = 5,
     sleep: Callable[[float], None] = time.sleep,
 ) -> list[str]:
-    """Completions for ``prompts``, in order: each prompt is its own
-    ``provider([p])`` call, up to ``concurrency`` in flight, and
-    retries on its own. The wait before retry k is a 429's
-    ``Retry-After`` (up to ``MAX_RETRY_AFTER_S``), else
+    """Completions for ``prompts``, in order: one ``provider(p)`` call
+    per prompt, up to ``concurrency`` in flight, each retried on its
+    own. The wait before retry k is a 429's ``Retry-After`` (up to
+    ``MAX_RETRY_AFTER_S``), else
     ``RETRY_BACKOFF_S * 2**k`` (up to ``MAX_BACKOFF_S``). Once
     ``attempts`` run out the prompt gets the reference's
     '[Error processing chunk: ...]' sentinel (llm_executor.py:216-228)
@@ -136,7 +140,7 @@ def complete_prompts(
         attempt = 0
         while True:
             try:
-                return provider([prompt])[0]
+                return provider(prompt)
             except Exception as exc:  # noqa: BLE001
                 attempt += 1
                 if attempt >= attempts:
@@ -156,7 +160,7 @@ def complete_prompts(
 class SparkLLMExecutor:
     """Distribute per-chunk prompt completion across the cluster.
 
-    provider: ``(list[str]) -> list[str]``, called on executors through
+    provider: ``(str) -> str``, called on executors through
     ``complete_prompts``: one prompt per call, up to
     ``max_concurrent_requests`` in flight per map task — the
     reference's semaphore (llm_executor.py:132-142) — each retried on
@@ -166,7 +170,7 @@ class SparkLLMExecutor:
 
     def __init__(
         self,
-        provider: Callable[[list[str]], list[str]] | None = None,
+        provider: Callable[[str], str] | None = None,
         prompt_template: str = DEFAULT_PROMPT,
         system_prompt: str | None = None,
         retry_attempts: int = 3,

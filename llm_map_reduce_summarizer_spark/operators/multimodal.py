@@ -108,14 +108,6 @@ def frame_sample(
     )
 
 
-def resize_image(arr: "np.ndarray", width: int, height: int) -> "np.ndarray":
-    """Real pixel resize — requires PIL/opencv, absent in this container."""
-    raise NotImplementedError(
-        "image codecs not available in this environment; "
-        "use resize_batch's deterministic byte path or install pillow"
-    )
-
-
 RESIZE_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),

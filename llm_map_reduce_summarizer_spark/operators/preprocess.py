@@ -12,11 +12,16 @@ partition, so the shuffle is a single hash exchange on doc_col.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.text import clean_text, clean_text_full, format_timestamp
+from ..functions.text import (
+    clean_text,
+    clean_text_full,
+    format_timestamp,
+    ordered_join,
+)
 
 
 def _part(doc_col: str | None) -> list[str]:
@@ -26,7 +31,7 @@ def _part(doc_col: str | None) -> list[str]:
 def preprocess_segments(
     segments: DataFrame, full_fidelity: bool = False
 ) -> DataFrame:
-    """Drop empty segments, clean text, add formatted timestamps.
+    """Drop empty segments and clean their text.
 
     Mirrors preprocessor.preprocess_transcript's per-segment step
     (preprocessor.py:36-54). ``full_fidelity`` switches on the
@@ -36,19 +41,8 @@ def preprocess_segments(
     # rlike('\S'), not trim() != '': SQL trim strips only ASCII spaces,
     # but the reference drops segments that are blank under Python
     # .strip() — tabs/newlines included (preprocessor.py:36-54)
-    return (
-        segments.filter(F.col("text").rlike(r"\S"))
-        .withColumn("text", cleaner(F.col("text")))
-        .withColumn("start_fmt", format_timestamp(F.col("start")))
-        .withColumn("end_fmt", format_timestamp(F.col("end")))
-    )
-
-
-def _ordered_join(ord_col: str, text_col: Column, sep: str) -> Column:
-    """Order-stable string aggregation: collect -> sort by ord -> join."""
-    pairs = F.collect_list(F.struct(F.col(ord_col).alias("o"), text_col.alias("t")))
-    return F.array_join(
-        F.transform(F.array_sort(pairs), lambda x: x["t"]), sep
+    return segments.filter(F.col("text").rlike(r"\S")).withColumn(
+        "text", cleaner(F.col("text"))
     )
 
 
@@ -124,7 +118,7 @@ def merge_same_speaker(
             F.min("speaker").alias("speaker"),
             F.count(F.lit(1)).alias("n_segments"),
             F.min("text").alias("single_text"),
-            _ordered_join("seg_id", part_text, " ").alias("joined_text"),
+            ordered_join(part_text, " ", "seg_id").alias("joined_text"),
         )
         .withColumn(
             "text",
@@ -132,8 +126,6 @@ def merge_same_speaker(
                 F.col("joined_text")
             ),
         )
-        .withColumn("start_fmt", format_timestamp(F.col("start")))
-        .withColumn("end_fmt", format_timestamp(F.col("end")))
         .drop("island", "bucket", "single_text", "joined_text")
     )
     return merged
@@ -192,7 +184,7 @@ def aggregate_by_interval(
             F.array_join(
                 F.array_sort(F.collect_set("speaker")), ", "
             ).alias("speakers"),
-            _ordered_join("seg_id", part_text, "\n\n").alias("text"),
+            ordered_join(part_text, "\n\n", "seg_id").alias("text"),
         )
         .withColumn(
             "interval_start",

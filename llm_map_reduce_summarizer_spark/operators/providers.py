@@ -3,8 +3,8 @@
 The reference implements OpenAI and Anthropic HTTP adapters with an
 asyncio semaphore and retry loop (llm_executor.py:234-248) and falls
 back to a keyless mock provider. Here each adapter is a plain
-``list[str] -> list[str]`` callable that ``SparkLLMExecutor`` calls on
-executors with one prompt at a time, from a bounded per-task thread
+``str -> str`` callable, one request per prompt, that
+``SparkLLMExecutor`` calls on executors from a bounded per-task thread
 pool (its ``max_concurrent_requests``) that retries each prompt on its
 own. A failed request raises, so the executor sees the
 ``urllib.error.HTTPError`` and, for a 429, its ``Retry-After``. The
@@ -163,53 +163,31 @@ def _process_bucket(rate: float, burst: float) -> TokenBucket:
 
 
 def throttled(
-    call: Callable[[list[str]], list[str]],
+    call: Callable[[str], str],
     requests_per_sec: float,
     burst: float = 1.0,
     bucket_factory: Callable[[float, float], TokenBucket] = _process_bucket,
-) -> Callable[[list[str]], list[str]]:
-    """Wrap a provider so each prompt's request first takes a token
-    from the process bucket. The closure carries only floats (the
+) -> Callable[[str], str]:
+    """Wrap a provider so each request first takes a token from the
+    process bucket, immediately before it goes out, so requests are
+    spaced at the bucket rate. The closure carries only floats (the
     bucket materializes lazily inside the worker), so it ships through
-    pickle like any other provider callable.
+    pickle like any other provider callable."""
 
-    Pacing interleaves with issuance: each prompt acquires its token
-    immediately before ITS request goes out, so requests are spaced at
-    the bucket rate. (Acquiring all N tokens up front and then calling
-    ``call(prompts)`` would fire an N-request burst at the API right
-    after the paced wait — the wait would bound average rate but not
-    the instantaneous burst.)"""
-
-    def wrapped(prompts: list[str]) -> list[str]:
-        bucket = bucket_factory(requests_per_sec, burst)
-        out: list[str] = []
-        for p in prompts:
-            bucket.acquire()
-            got = call([p])
-            # one prompt in => exactly one output out: a provider
-            # returning 0 or 2 elements would silently misalign every
-            # SUBSEQUENT prompt->output pairing in the batch, so fail
-            # loudly at the offending call instead (ADVICE r8).
-            if len(got) != 1:
-                raise ValueError(
-                    f"throttled provider {getattr(call, '__name__', call)!r} "
-                    f"returned {len(got)} outputs for 1 prompt — each "
-                    "single-prompt call must return exactly one output "
-                    "or the batch's prompt->output pairing misaligns"
-                )
-            out.extend(got)
-        return out
+    def wrapped(prompt: str) -> str:
+        bucket_factory(requests_per_sec, burst).acquire()
+        return call(prompt)
 
     return wrapped
 
 
 def cluster_rate_limited(
-    call: Callable[[list[str]], list[str]],
+    call: Callable[[str], str],
     max_requests_per_sec: float,
     cluster_parallelism: int,
     burst: float = 1.0,
     bucket_factory: Callable[[float, float], TokenBucket] = _process_bucket,
-) -> Callable[[list[str]], list[str]]:
+) -> Callable[[str], str]:
     """Enforce a GLOBAL request ceiling across the cluster.
 
     ``cluster_parallelism`` is the number of provider tasks that can
@@ -245,24 +223,21 @@ def openai_provider(
     max_tokens: int = 1024,
     timeout: float = 60.0,
     url: str = OPENAI_URL,
-) -> Callable[[list[str]], list[str]]:
-    """Chat-completions adapter; one request per prompt, per batch."""
+) -> Callable[[str], str]:
+    """Chat-completions adapter; one request per prompt."""
 
-    def call(prompts: list[str]) -> list[str]:
-        out = []
-        for p in prompts:
-            body = _post_json(
-                url,
-                {"Authorization": f"Bearer {api_key}"},
-                {
-                    "model": model,
-                    "max_tokens": max_tokens,
-                    "messages": [{"role": "user", "content": p}],
-                },
-                timeout,
-            )
-            out.append(body["choices"][0]["message"]["content"])
-        return out
+    def call(prompt: str) -> str:
+        body = _post_json(
+            url,
+            {"Authorization": f"Bearer {api_key}"},
+            {
+                "model": model,
+                "max_tokens": max_tokens,
+                "messages": [{"role": "user", "content": prompt}],
+            },
+            timeout,
+        )
+        return body["choices"][0]["message"]["content"]
 
     return call
 
@@ -273,24 +248,21 @@ def anthropic_provider(
     max_tokens: int = 1024,
     timeout: float = 60.0,
     url: str = ANTHROPIC_URL,
-) -> Callable[[list[str]], list[str]]:
-    """Messages-API adapter; one request per prompt, per batch."""
+) -> Callable[[str], str]:
+    """Messages-API adapter; one request per prompt."""
 
-    def call(prompts: list[str]) -> list[str]:
-        out = []
-        for p in prompts:
-            body = _post_json(
-                url,
-                {"x-api-key": api_key, "anthropic-version": ANTHROPIC_VERSION},
-                {
-                    "model": model,
-                    "max_tokens": max_tokens,
-                    "messages": [{"role": "user", "content": p}],
-                },
-                timeout,
-            )
-            out.append("".join(b.get("text", "") for b in body["content"]))
-        return out
+    def call(prompt: str) -> str:
+        body = _post_json(
+            url,
+            {"x-api-key": api_key, "anthropic-version": ANTHROPIC_VERSION},
+            {
+                "model": model,
+                "max_tokens": max_tokens,
+                "messages": [{"role": "user", "content": prompt}],
+            },
+            timeout,
+        )
+        return "".join(b.get("text", "") for b in body["content"])
 
     return call
 
@@ -300,7 +272,7 @@ def get_provider(
     model: str | None = None,
     max_requests_per_sec: float | None = None,
     cluster_parallelism: int | None = None,
-) -> tuple[Callable[[list[str]], list[str]], str, bool]:
+) -> tuple[Callable[[str], str], str, bool]:
     """Resolve (provider_callable, model_name, is_mock).
 
     Keyless environments get the deterministic mock — the pipeline
@@ -321,7 +293,7 @@ def get_provider(
         env = os.environ.get(LLM_RPS_ENV)
         max_requests_per_sec = float(env) if env else None
 
-    def _cap(call: Callable[[list[str]], list[str]]):
+    def _cap(call: Callable[[str], str]):
         if max_requests_per_sec is None:
             return call
         from pyspark.sql import SparkSession
@@ -386,4 +358,4 @@ def get_provider(
             return _cap(anthropic_provider(model, key)), model, False
     else:
         raise ValueError(f"unknown provider: {name!r}")
-    return (lambda prompts: mock_provider(prompts, model)), model, True
+    return (lambda prompt: mock_provider(prompt, model)), model, True

@@ -21,6 +21,7 @@ from ..functions.text import (
     SQL_DEDUP_WORDS,
     SQL_FMT_TS,
     SQL_TOKEN_COUNT,
+    format_timestamp,
     quantize,
     token_count,
 )
@@ -34,6 +35,8 @@ from ..operators.chunker import (
     assign_chunks,
     assign_chunks_greedy,
     chunk_stats,
+    chunk_texts,
+    position_pct,
     split_oversized,
 )
 from ..operators.executor import extractive_summary, summarize_chunks
@@ -74,12 +77,24 @@ def _segments_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     return preprocess_segments(derive_segments(spark, sf_dir))
 
 
+def _chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return assign_chunks(_segments_clean(spark, sf_dir), MAX_TOKENS_PER_CHUNK)
+
+
+def _times_fmt() -> list:
+    """The 'MM:SS' / 'HH:MM:SS' start and end of each row."""
+    return [
+        format_timestamp(F.col("start")).alias("start_fmt"),
+        format_timestamp(F.col("end")).alias("end_fmt"),
+    ]
+
+
 # --------------------------------------------------------------- queries
 
 
 def seg_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _segments_clean(spark, sf_dir).select(
-        "seg_id", "speaker", "start_fmt", "end_fmt", "text"
+        "seg_id", "speaker", *_times_fmt(), "text"
     )
 
 
@@ -92,7 +107,7 @@ def seg_clean_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     return preprocess_segments(
         derive_segments(spark, sf_dir), full_fidelity=True
-    ).select("seg_id", "speaker", "start_fmt", "end_fmt", "text")
+    ).select("seg_id", "speaker", *_times_fmt(), "text")
 
 
 def seg_merge_speaker(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -106,8 +121,7 @@ def seg_merge_speaker(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("end").alias("end_s"),
         "n_segments",
         "text",
-        "start_fmt",
-        "end_fmt",
+        *_times_fmt(),
     )
 
 
@@ -126,17 +140,11 @@ def seg_interval_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def chunk_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    chunked = assign_chunks(
-        _segments_clean(spark, sf_dir), MAX_TOKENS_PER_CHUNK
-    )
-    return chunked.select("seg_id", "chunk_id", "n_tokens")
+    return _chunked(spark, sf_dir).select("seg_id", "chunk_id", "n_tokens")
 
 
 def chunk_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    chunked = assign_chunks(
-        _segments_clean(spark, sf_dir), MAX_TOKENS_PER_CHUNK
-    )
-    return chunk_stats(chunked).select(
+    return chunk_stats(_chunked(spark, sf_dir)).select(
         "chunk_id",
         "start_time",
         "end_time",
@@ -147,24 +155,8 @@ def chunk_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _chunk_texts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chunk rows: (chunk_id, text, token_count) — segments joined in order."""
-    chunked = assign_chunks(
-        _segments_clean(spark, sf_dir), MAX_TOKENS_PER_CHUNK
-    )
-    pairs = F.collect_list(
-        F.struct(F.col("seg_id").alias("o"), F.col("seg_text").alias("t"))
-    )
-    return chunked.groupBy("chunk_id").agg(
-        F.array_join(
-            F.transform(F.array_sort(pairs), lambda x: x["t"]), "\n\n"
-        ).alias("text"),
-        F.sum("n_tokens").alias("token_count"),
-    )
-
-
 def map_summarize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return summarize_chunks(_chunk_texts(spark, sf_dir)).select(
+    return summarize_chunks(chunk_texts(_chunked(spark, sf_dir), None)).select(
         "chunk_id", "token_count", "summary"
     )
 
@@ -197,10 +189,9 @@ AUTO_BATCH_BUDGET = 3600
 def _headered_summaries(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chunk summaries with the reference's '[Time: ...]' position
     headers (result_aggregator.py:86-88)."""
-    chunked = assign_chunks(
-        _segments_clean(spark, sf_dir), MAX_TOKENS_PER_CHUNK
+    stats = chunk_stats(_chunked(spark, sf_dir)).select(
+        "chunk_id", "start_time", "end_time"
     )
-    stats = chunk_stats(chunked).select("chunk_id", "start_time", "end_time")
     summaries = map_summarize(spark, sf_dir).join(stats, "chunk_id")
     return with_time_headers(summaries)
 
@@ -267,40 +258,15 @@ def pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     chunked = assign_chunks(merged, MAX_TOKENS_PER_CHUNK)
     t0 = _segments_clean(spark, sf_dir).agg(F.min("start").alias("t0"))
-    pairs = F.collect_list(
-        F.struct(F.col("seg_id").alias("o"), F.col("seg_text").alias("t"))
-    )
-    from ..functions.text import quantize as _q
-
-    combined = (
-        chunked.crossJoin(F.broadcast(t0))
-        .groupBy("chunk_id")
-        .agg(
-            F.min("start").alias("start_time"),
-            F.max("end").alias("end_time"),
-            F.sum("n_tokens").alias("token_count"),
-            F.count(F.lit(1)).alias("n_segments"),
-            F.array_join(F.array_sort(F.collect_set("speaker")), ", ").alias(
-                "speakers"
-            ),
-            F.min("t0").alias("t0"),
-            F.array_join(
-                F.transform(F.array_sort(pairs), lambda x: x["t"]), "\n\n"
-            ).alias("text"),
-        )
-        .withColumn(
-            "position_pct",
-            F.when(
-                F.col("end_time") > F.col("t0"),
-                _q(
-                    100.0
-                    * (F.col("start_time") - F.col("t0"))
-                    / (F.col("end_time") - F.col("t0")),
-                    4,
-                ),
-            ).otherwise(0.0),
-        )
-    )
+    combined = chunk_texts(
+        chunked.crossJoin(F.broadcast(t0)),
+        None,
+        F.count(F.lit(1)).alias("n_segments"),
+        F.array_join(F.array_sort(F.collect_set("speaker")), ", ").alias(
+            "speakers"
+        ),
+        F.min("t0").alias("t0"),
+    ).withColumn("position_pct", position_pct())
     return combined.withColumn(
         "summary",
         extractive_summary(
@@ -369,7 +335,7 @@ def map_cost_report(
     GPT-4 tier, llm_executor.py:310; the catalog default is the base
     tier, matching the reference's default gpt-3.5-turbo)."""
     prompt_rate, completion_rate = token_rates(model)
-    summaries = summarize_chunks(_chunk_texts(spark, sf_dir))
+    summaries = map_summarize(spark, sf_dir)
     prompt_toks = (F.col("token_count") + PROMPT_OVERHEAD_TOKENS).cast("long")
     completion_toks = token_count(F.col("summary")).cast("long")
     cost = (

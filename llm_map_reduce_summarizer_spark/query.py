@@ -28,8 +28,6 @@ def build_parser() -> argparse.ArgumentParser:
                    help="Max rows to print (default: %(default)s; 0 = all)")
     p.add_argument("--json", action="store_true", dest="as_json",
                    help="Print one JSON object per row instead of a table")
-    p.add_argument("--sf-cpus", type=int, default=8,
-                   help="local[N] parallelism when building the session")
     return p
 
 
@@ -60,9 +58,6 @@ def main(argv: list[str] | None = None) -> int:
               file=sys.stderr)
         return 2
 
-    import os
-
-    os.environ.setdefault("SPARK_GRAFT_CPUS", str(args.sf_cpus))
     from .session import get_spark
 
     spark = get_spark("catalog-query")

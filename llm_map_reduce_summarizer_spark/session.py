@@ -1,8 +1,9 @@
 """SparkSession factory tuned for this engine.
 
-Local test mode is ``local[$SPARK_GRAFT_CPUS]`` (default 32), with a
-driver heap of ``$SPARK_GRAFT_DRIVER_MEM`` (default: 16g, capped at a
-share of physical memory, see ``default_driver_memory``). The same
+Local test mode is ``local[$SPARK_GRAFT_CPUS]`` (default: the
+machine's CPU count, see ``default_cpus``), with a driver heap of
+``$SPARK_GRAFT_DRIVER_MEM`` (default: 16g, capped at a share of
+physical memory, see ``default_driver_memory``). The same
 settings are the right defaults on a real cluster: AQE for runtime
 re-planning and skew joins, Arrow for every Pandas-UDF exchange, and
 shuffle partitions sized to the parallelism at hand rather than the
@@ -40,8 +41,17 @@ def default_driver_memory() -> str:
     return f"{min(MAX_DEFAULT_HEAP_MB, int(total * HEAP_SHARE_OF_RAM) >> 20)}m"
 
 
+def default_cpus() -> int:
+    """Local parallelism when ``SPARK_GRAFT_CPUS`` is unset: the CPUs
+    this process may run on (what ``nproc`` prints)."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity call on this platform
+        return os.cpu_count() or 1
+
+
 def get_spark(app_name: str = "llm_map_reduce_summarizer_spark") -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or default_cpus())
     # Python workers must import this package even when the driver runs
     # from another cwd (UDF closures reference module helpers). Local
     # mode: inherit via PYTHONPATH. Real cluster: ship a wheel via

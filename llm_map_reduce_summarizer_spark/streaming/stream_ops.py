@@ -863,15 +863,6 @@ RESERVOIR_OUT_SCHEMA = StructType(
 )
 
 
-def _sample_draw(doc_id: int) -> str:
-    """Python twin of ``shuffle_sort_key(doc_id, "usample")`` — used
-    by tests to predict reservoir contents; the operator itself reads
-    the JVM-computed column."""
-    import hashlib
-
-    return hashlib.md5(f"usample|{doc_id}".encode()).hexdigest()
-
-
 def _make_reservoir_fold(k: int):
     def _fold(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState

@@ -108,10 +108,10 @@ def test_cli_request_job_budget(spark, tmp_path, monkeypatch):
     path = _write_transcript(tmp_path, n=40)
     log = tmp_path / "provider_calls.log"
 
-    def counting(prompts):
+    def counting(prompt):
         with open(log, "a", encoding="utf-8") as f:
             f.write("call\n")
-        return [f"summary of {len(p)} chars" for p in prompts]
+        return f"summary of {len(prompt)} chars"
 
     monkeypatch.setattr(
         m, "get_provider", lambda *a, **k: (counting, "counting-model", False)
@@ -156,7 +156,7 @@ def test_get_provider_keyless_falls_back_to_mock(monkeypatch):
     monkeypatch.delenv("ANTHROPIC_API_KEY", raising=False)
     fn, model, is_mock = providers.get_provider("openai")
     assert is_mock and model == providers.DEFAULT_MODELS["openai"]
-    assert "Mock response" in fn(["hello"])[0]
+    assert "Mock response" in fn("hello")
     with pytest.raises(ValueError):
         providers.get_provider("unknown")
 
@@ -175,9 +175,9 @@ def test_provider_adapters_parse_responses(monkeypatch):
 
     monkeypatch.setattr(providers, "_post_json", fake_post)
     oai = providers.openai_provider("m1", "k1")
-    assert oai(["p"]) == ["oai summary"]
+    assert oai("p") == "oai summary"
     ant = providers.anthropic_provider("m2", "k2")
-    assert ant(["p"]) == ["ant summary"]
+    assert ant("p") == "ant summary"
 
 
 def test_get_provider_env_keyed(monkeypatch):
@@ -223,12 +223,14 @@ def test_cli_warns_on_unreadable_prompt_files(spark, tmp_path, capsys):
     args = build_parser().parse_args(
         [
             "--input", path, "--quiet",
+            "--prompt-file", str(tmp_path / "missing_prompt.txt"),
             "--system-prompt-file", str(tmp_path / "missing_sys.txt"),
             "--aggregator-prompt-file", str(tmp_path / "missing_agg.txt"),
         ]
     )
     result = run(spark, args)
     err = capsys.readouterr().err
+    assert "failed to load prompt template" in err
     assert "failed to load system prompt" in err
     assert "failed to load aggregator prompt" in err
     # unreadable files fall back to defaults; the run still completes

@@ -506,9 +506,9 @@ def test_prompt_pack_loads_and_formats(spark):
     chunks = spark.createDataFrame([(0, "hello")], "chunk_id long, text string")
     seen: list[str] = []
 
-    def capture(prompts):
-        seen.extend(prompts)
-        return ["ok"] * len(prompts)
+    def capture(prompt):
+        seen.append(prompt)
+        return "ok"
 
     SparkLLMExecutor(
         provider=capture, prompt_template=tpl, system_prompt=system
@@ -528,7 +528,7 @@ def test_executor_retries_then_error_sentinel(spark):
         [(0, "alpha"), (1, "beta")], "chunk_id long, text string"
     )
 
-    def flaky(prompts):
+    def flaky(prompt):
         # fails on every call: retries exhaust -> error sentinel rows
         raise RuntimeError("provider down")
 
@@ -563,14 +563,13 @@ def test_executor_retries_only_the_failed_prompt():
     lock = threading.Lock()
     waits: list[float] = []
 
-    def flaky_once(prompts):
-        (p,) = prompts
+    def flaky_once(p):
         with lock:
             calls.append(p)
             first = calls.count(p) == 1
         if p.endswith("p2") and first:
             raise RuntimeError("transient upstream error")
-        return [f"done {p[-2:]}"]
+        return f"done {p[-2:]}"
 
     prompts = [f"p{i}" for i in range(5)]
     out = complete_prompts(flaky_once, prompts, concurrency=5, sleep=waits.append)
@@ -594,13 +593,13 @@ def test_executor_honours_retry_after_on_429():
     attempts: list[str] = []
     waits: list[float] = []
 
-    def limited(prompts):
-        attempts.append(prompts[0])
+    def limited(prompt):
+        attempts.append(prompt)
         if len(attempts) == 1:
             raise urllib.error.HTTPError(
                 "http://llm.invalid/v1", 429, "Too Many Requests", headers, None
             )
-        return ["ok"]
+        return "ok"
 
     out = complete_prompts(limited, ["p"], sleep=waits.append)
     assert out == ["ok"]

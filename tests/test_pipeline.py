@@ -1,10 +1,15 @@
-"""End-to-end pipeline on the reference's own input format
-(transcript-example.json) — mirrors the reference's integration tests
-(test_aggregator.py / test_direct_aggregation.py): structure of the
-final output, batching decisions, and budget discipline."""
+"""End-to-end pipeline on a long transcript in the reference's own
+input format (the transcript-example.json shape) — mirrors the
+reference's integration tests (test_aggregator.py /
+test_direct_aggregation.py): structure of the final output, batching
+decisions, and budget discipline."""
 
 from __future__ import annotations
 
+import json
+import random
+
+import pytest
 from pyspark.sql import functions as F
 
 from llm_map_reduce_summarizer_spark.operators.aggregator import (
@@ -13,6 +18,7 @@ from llm_map_reduce_summarizer_spark.operators.aggregator import (
 from llm_map_reduce_summarizer_spark.operators.chunker import (
     assign_chunks,
     chunk_stats,
+    chunk_texts,
 )
 from llm_map_reduce_summarizer_spark.operators.executor import summarize_chunks
 from llm_map_reduce_summarizer_spark.operators.preprocess import (
@@ -21,11 +27,36 @@ from llm_map_reduce_summarizer_spark.operators.preprocess import (
 )
 from llm_map_reduce_summarizer_spark.sources.transcript import read_transcript
 
-EXAMPLE = "/root/reference/transcript-example.json"
+N_SEGMENTS = 1500
+WORDS = "we should ship the model after review so data team can check it".split()
 
 
-def test_transcript_reader_schema(spark):
-    seg = read_transcript(spark, EXAMPLE)
+@pytest.fixture(scope="module")
+def example(tmp_path_factory):
+    """A stream-VOD-like transcript: 1500 segments of 2-14 s among 4
+    speakers, who change on about a quarter of the turns, so
+    same-speaker merging has work to do."""
+    rng = random.Random(7)
+    segs, t, speaker = [], 0.0, 0
+    for _ in range(N_SEGMENTS):
+        if rng.random() < 0.3:
+            speaker = rng.randrange(4)
+        dur = rng.uniform(2.0, 14.0)
+        words = rng.choices(WORDS, k=rng.randint(3, 30))
+        segs.append({
+            "start": round(t, 2),
+            "end": round(t + dur, 2),
+            "text": " ".join(words).capitalize() + ".",
+            "speaker": f"SPEAKER_{speaker:02d}",
+        })
+        t += dur + rng.uniform(0.0, 1.5)
+    path = tmp_path_factory.mktemp("transcript") / "transcript-example.json"
+    path.write_text(json.dumps({"segments": segs}), encoding="utf-8")
+    return str(path)
+
+
+def test_transcript_reader_schema(spark, example):
+    seg = read_transcript(spark, example)
     assert [f.name for f in seg.schema.fields] == [
         "doc_id", "seg_id", "start", "end", "speaker", "text",
     ]
@@ -36,8 +67,8 @@ def test_transcript_reader_schema(spark):
     assert bad == 0
 
 
-def test_full_pipeline_on_reference_transcript(spark):
-    seg = read_transcript(spark, EXAMPLE).drop("doc_id")
+def test_full_pipeline_on_reference_transcript(spark, example):
+    seg = read_transcript(spark, example).drop("doc_id")
     cleaned = preprocess_segments(seg)
     merged = merge_same_speaker(cleaned, max_duration=120.0).select(
         F.col("group_id").alias("seg_id"), "start", "end", "speaker", "text"
@@ -56,23 +87,7 @@ def test_full_pipeline_on_reference_transcript(spark):
     assert sp["position_pct"].iloc[0] == 0.0
     assert ((sp["position_pct"] >= 0) & (sp["position_pct"] <= 100)).all()
 
-    texts = chunked.groupBy("chunk_id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            F.col("seg_id").alias("o"),
-                            F.col("seg_text").alias("t"),
-                        )
-                    )
-                ),
-                lambda x: x["t"],
-            ),
-            "\n\n",
-        ).alias("text"),
-        F.sum("n_tokens").alias("token_count"),
-    )
+    texts = chunk_texts(chunked, None)
     summaries = summarize_chunks(texts)
     final = hierarchical_reduce(summaries, batch_size=10).toPandas()
     assert len(final) == 1

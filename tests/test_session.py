@@ -1,4 +1,5 @@
-"""The session factory sizes the driver heap to the machine."""
+"""The session factory sizes the driver heap and parallelism to the
+machine."""
 
 from __future__ import annotations
 
@@ -23,6 +24,18 @@ def test_default_heap_is_capped_by_physical_memory(monkeypatch):
     assert session_mod.default_driver_memory() == "16384m"
     monkeypatch.setattr(session_mod, "physical_memory_bytes", lambda: None)
     assert session_mod.default_driver_memory() == "16384m"
+
+
+def test_default_cpus_follows_the_machine(monkeypatch):
+    # local[N] follows the CPUs the process may use, as nproc does
+    monkeypatch.setattr(session_mod.os, "sched_getaffinity", lambda pid: {0, 2, 5})
+    assert session_mod.default_cpus() == 3
+    # no affinity call (macOS, Windows): the CPU count, else 1
+    monkeypatch.delattr(session_mod.os, "sched_getaffinity")
+    monkeypatch.setattr(session_mod.os, "cpu_count", lambda: 6)
+    assert session_mod.default_cpus() == 6
+    monkeypatch.setattr(session_mod.os, "cpu_count", lambda: None)
+    assert session_mod.default_cpus() == 1
 
 
 def test_shared_session_heap_fits_the_machine(spark):
