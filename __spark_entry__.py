@@ -1,171 +1,41 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Query-catalog interface of the package.
 
 ``entry(spark)`` runs the flagship query on sf0.001.
 ``queries()`` maps every implemented operator (SURVEY.md §2) to a
-``(spark, sf_dir) -> DataFrame`` callable. ``oracle_sql()`` gives the
-DuckDB-ANSI twin for each key (omitted only for genuinely
-non-SQL-expressible ops, which the driver checks rows-only).
-
-Catalog order follows one mechanical, round-independent rule:
-**two-pool least-recently-verified interleave** — keys sort by the
-last round in which the committed ``CORRECTNESS_r*.json`` artifacts
-record a passing driver check for them (ties broken by the
-alphabetical-module definition order), then the head of the order is
-built as ``never-checked[:40] + stalest-verified[:10]`` so the
-driver's 50-key window both drains the never-checked backlog AND
-re-verifies the ~10 keys whose last passing record is oldest (keys
-verified in early rounds would otherwise stay stale behind the queue
-for many rounds). The remainder is the two pools' tails in LRV order.
-Nothing is hand-curated: the ordering is a pure function of the
-committed artifacts, so every entry periodically rotates through a
-bounded verification window and a brand new entry is always checked in
-the round it ships. ``oracle_sql()`` mirrors ``queries()``'s key
-order.
+``(spark, sf_dir) -> DataFrame`` callable, in definition order: plan
+modules alphabetically, then each module's ``QUERIES`` order.
+``oracle_sql()`` gives the DuckDB-ANSI twin for each key, in the same
+key order as ``queries()``.
 """
 
 from __future__ import annotations
 
-import json
-import re
 from collections.abc import Callable
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-_PLAN_MODULES = []
+from llm_map_reduce_summarizer_spark.plans import (
+    documents,
+    events,
+    pipeline,
+    streams,
+    tpch,
+)
 
-from llm_map_reduce_summarizer_spark.plans import tpch
-
-_PLAN_MODULES.append(tpch)
-try:  # modules land incrementally; entry stays importable throughout
-    from llm_map_reduce_summarizer_spark.plans import streams as _streams
-
-    _PLAN_MODULES.append(_streams)
-except ImportError:
-    pass
-try:
-    from llm_map_reduce_summarizer_spark.plans import events as _events
-
-    _PLAN_MODULES.append(_events)
-except ImportError:
-    pass
-try:
-    from llm_map_reduce_summarizer_spark.plans import documents as _documents
-
-    _PLAN_MODULES.append(_documents)
-except ImportError:
-    pass
-try:
-    from llm_map_reduce_summarizer_spark.plans import pipeline as _pipeline
-
-    _PLAN_MODULES.append(_pipeline)
-except ImportError:
-    pass
-
-# Alphabetical by unqualified module name — the fixed tiebreak order.
-_PLAN_MODULES.sort(key=lambda m: m.__name__.rsplit(".", 1)[-1])
-
-
-# Keys whose plan or oracle SEMANTICS changed in round N: driver
-# records from rounds < N predate the current definition and must not
-# count as verification of it, so the key re-enters the front of the
-# queue until a fresh record lands (after which the entry is inert —
-# no removal needed).
-_SEMANTICS_CHANGED: dict[str, int] = {
-    # r6: adaptive LSH bit width + blocked-dgemm bucket scoring
-    "knn_graph": 6,
-    "emb_clusters": 6,
-    "emb_buckets": 6,
-    "knn_lsh": 6,
-    # r6: keyed shingles (60-bit md5 fold) + affine-permutation MinHash
-    "dedup_ngram_jaccard": 6,
-    "dedup_minhash_lsh": 6,
-    "dedup_clusters": 6,
-    "dedup_keep_best": 6,
-    "corpus_prep_e2e": 6,
-    # r7: the last three rows-only entries converted to invariant
-    # oracles (certificate outputs) — prior rows-only records verified
-    # a different definition
-    "emb_pca_project": 7,
-    "knn_ivf_trained": 7,
-    "multimodal_decode": 7,
-}
-
-
-def _last_verified(oracle_keys: set[str]) -> dict[str, int]:
-    """key -> last round with a passing driver record at the key's
-    CURRENT check strength, from the committed CORRECTNESS_r*.json
-    files (0 = never checked). For a key that now carries an oracle
-    only hash-verified records count — an old rows-only record must
-    not hide a never-value-checked oracle; keys without an oracle
-    accept their rows-only records. Records older than the key's
-    ``_SEMANTICS_CHANGED`` round verified a different definition and
-    do not count.
-    """
-    out: dict[str, int] = {}
-    for p in Path(__file__).resolve().parent.glob("CORRECTNESS_r*.json"):
-        m = re.search(r"r(\d+)$", p.stem)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            records = json.loads(p.read_text(encoding="utf-8"))
-        except (OSError, ValueError):
-            continue
-        for key, rec in records.items():
-            if rnd < _SEMANTICS_CHANGED.get(key, 0):
-                continue
-            if key in oracle_keys:
-                passed = rec.get("hash_match") is True
-            else:
-                passed = (
-                    rec.get("err") == "no_oracle"
-                    and rec.get("spark_rows") is not None
-                )
-            if passed:
-                out[key] = max(out.get(key, 0), rnd)
-    return out
+# Alphabetical by unqualified module name.
+_PLAN_MODULES = [documents, events, pipeline, streams, tpch]
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    for mod in _PLAN_MODULES:
-        if "pipeline_e2e" in getattr(mod, "QUERIES", {}):
-            return mod.QUERIES["pipeline_e2e"](spark, "/root/testdata/sf0.001")
-    return tpch.q1_pricing_summary(spark, "/root/testdata/sf0.001")
+    """Flagship query: ``pipeline_e2e`` on the sf0.001 test tables."""
+    return pipeline.QUERIES["pipeline_e2e"](spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     merged: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    oracle_keys: set[str] = set()
     for mod in _PLAN_MODULES:
         merged.update(mod.QUERIES)
-        oracle_keys.update(mod.ORACLE)
-    last = _last_verified(oracle_keys)
-    order = _window_order(list(merged), last)
-    return {k: merged[k] for k in order}
-
-
-# Driver window composition: of the driver's 50-key check window, this
-# many slots go to never-checked keys; the rest re-verify the stalest
-# previously-verified keys so early-round records don't go stale
-# indefinitely behind the never-checked queue.
-_NEVER_SLOTS = 40
-_STALE_SLOTS = 10
-
-
-def _window_order(keys: list[str], last: dict[str, int]) -> list[str]:
-    """Two-pool LRV interleave (see module docstring). Pure function of
-    (definition order, committed CORRECTNESS artifacts)."""
-    lrv = sorted(keys, key=lambda k: last.get(k, 0))  # stable sort
-    never = [k for k in lrv if last.get(k, 0) == 0]
-    checked = [k for k in lrv if last.get(k, 0) > 0]
-    return (
-        never[:_NEVER_SLOTS]
-        + checked[:_STALE_SLOTS]
-        + never[_NEVER_SLOTS:]
-        + checked[_STALE_SLOTS:]
-    )
+    return merged
 
 
 def oracle_sql() -> dict[str, str]:

@@ -7959,9 +7959,8 @@ def corpus_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
     and ``corpus_split`` (held-out splits).
 
     Scale: the quartile cutoffs are a 1-ROW exact-percentile
-    aggregate broadcast onto a narrow scoring map (the
-    ``customer_rfm`` idiom — no ntile window); the order key is a
-    map-side hash. Nothing shuffles.
+    aggregate broadcast onto a narrow scoring map (no ntile
+    window); the order key is a map-side hash. Nothing shuffles.
     """
     d = _docs(spark, sf_dir)
     q = d.select("doc_id", quality_score_col().alias("quality_score"))
@@ -8444,9 +8443,8 @@ def corpus_textrank_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic; the distinct edge list is vocab²-bounded and
     materialized once for the 2·ITERS consumers; each round is one
     src-keyed join + dst-keyed partial agg with per-round 1e-9
-    quantization (the `parts_pagerank` discipline, so engine
-    summation order can't drift the fixpoint); final ranking is
-    TakeOrderedAndProject.
+    quantization (so engine summation order can't drift the
+    fixpoint); final ranking is TakeOrderedAndProject.
     """
     d = _docs(spark, sf_dir)
     toks = d.select(

@@ -1,4 +1,4 @@
-"""Relational analytics core: TPC-H-style queries on the star schema.
+"""Relational analytics core: the 22 TPC-H queries on the star schema.
 
 Each query is a function ``(spark, sf_dir) -> DataFrame`` written with
 the DataFrame API so Catalyst gets a declarative plan (pushdown, join
@@ -16,10 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from ..functions.text import quantize, sql_quantize
-from ..operators.persist import materialize, materialize_all
 from ..sources.tables import load_table
 
 
@@ -273,81 +270,6 @@ def q19_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 customers by account balance per nation (window top-k).
-
-    Scale: one shuffle on c_nationkey; rank prunes inside each
-    partition before any join. Nation is broadcast for the name.
-    """
-    cust = _t(spark, sf_dir, "customer")
-    nation = F.broadcast(_t(spark, sf_dir, "nation"))
-    w = Window.partitionBy("c_nationkey").orderBy(
-        F.col("c_acctbal").desc(), F.col("c_custkey")
-    )
-    return (
-        cust.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= 3)
-        .join(nation, F.col("c_nationkey") == F.col("n_nationkey"))
-        .select(
-            "n_name",
-            "c_custkey",
-            "c_name",
-            F.round("c_acctbal", 2).alias("c_acctbal"),
-            "rk",
-        )
-    )
-
-
-def rollup_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hierarchical ROLLUP aggregate over returnflag/linestatus."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.rollup("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-        .select(
-            F.coalesce("l_returnflag", F.lit("ALL")).alias("returnflag"),
-            F.coalesce("l_linestatus", F.lit("ALL")).alias("linestatus"),
-            "revenue",
-            "n_items",
-        )
-    )
-
-
-def pivot_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot: quantity by returnflag × linestatus as columns."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy("l_returnflag")
-        .pivot("l_linestatus", ["O", "F"])
-        .agg(F.round(F.sum("l_quantity"), 2))
-        .select(
-            "l_returnflag",
-            F.coalesce("O", F.lit(0.0)).alias("qty_o"),
-            F.coalesce("F", F.lit(0.0)).alias("qty_f"),
-        )
-    )
-
-
-def agg_distinct_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct-aggregate stats per event type.
-
-    Scale: exact countDistinct expands then re-aggregates (two-stage);
-    for billions of users swap in approx_count_distinct (HLL) — same
-    plan shape, no expansion.
-    """
-    ev = _t(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.countDistinct("user_id").alias("n_users"),
-        F.count(F.lit(1)).alias("n_events"),
-        F.round(F.sum("value"), 2).alias("total_value"),
-    )
-
-
 def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Volume shipping between nation pairs by year (TPC-H Q7 shape).
 
@@ -541,74 +463,6 @@ def q16_parts_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return pairs.groupBy("p_brand", "p_type", "p_size").agg(
         F.countDistinct("l_suppkey").alias("supplier_cnt")
-    )
-
-
-def orders_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cumulative spend per customer over order time (running-total
-    window frame).
-
-    Scale: one shuffle on custkey; each customer's frame sorts inside
-    its own partition — no global ordering anywhere.
-    """
-    orders = _t(spark, sf_dir, "orders")
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return orders.select(
-        "o_custkey",
-        "o_orderkey",
-        "o_orderdate",
-        F.round(F.sum("o_totalprice").over(w), 2).alias("cum_spend"),
-        F.row_number()
-        .over(Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey"))
-        .cast("long")
-        .alias("order_seq"),
-    )
-
-
-def orders_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3-order moving average of order value per customer (sliding
-    ROWS frame)."""
-    orders = _t(spark, sf_dir, "orders")
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(-2, Window.currentRow)
-    )
-    from ..functions.text import quantize
-
-    return orders.select(
-        "o_custkey",
-        "o_orderkey",
-        # avg-of-3 lands on .xx5 boundaries constantly; quantize is the
-        # cross-engine half-up rounding (see functions/text.py)
-        quantize(F.avg("o_totalprice").over(w), 2).alias("avg3"),
-        F.count(F.lit(1)).over(w).alias("n_in_frame"),
-    )
-
-
-def cube_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE over (returnflag, linestatus): all grouping-set subtotals.
-
-    Scale: Spark expands grouping sets map-side (one shuffle carrying
-    the expanded keys) — same single-pass shape as the plain groupBy.
-    """
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.cube("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-        .select(
-            F.coalesce("l_returnflag", F.lit("ALL")).alias("returnflag"),
-            F.coalesce("l_linestatus", F.lit("ALL")).alias("linestatus"),
-            "sum_qty",
-            "n_rows",
-        )
     )
 
 
@@ -824,1933 +678,13 @@ def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-COPURCHASE_TOPK = 20
-
-
-def parts_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Market-basket pair mining: the top-20 part pairs that appear in
-    the same order (association-rule input — "bought together").
-
-    Scale: the self-join is keyed on l_orderkey, so pair volume is
-    Σ (items-per-order choose 2) — bounded by the order-size cap,
-    never |lineitem|²; pair counts partial-agg map-side and the
-    global top-k is TakeOrderedAndProject.
-    """
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    ).distinct()
-    a = li.select("l_orderkey", F.col("l_partkey").alias("pa"))
-    b = li.select("l_orderkey", F.col("l_partkey").alias("pb"))
-    pairs = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("pa") < F.col("pb"))
-        .groupBy("pa", "pb")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_orders"))
-    )
-    return pairs.orderBy(
-        F.col("n_orders").desc(), F.col("pa"), F.col("pb")
-    ).limit(COPURCHASE_TOPK)
-
-
-def orders_interpurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interpurchase-time distribution: exact p50/p90 of the gap (in
-    days) between a customer's consecutive orders, plus the one-order
-    customer share — the relational twin of `events_interarrival`
-    (reorder cadence is what replenishment and win-back campaigns are
-    timed against).
-
-    Scale: consecutive gaps are ONE customer-keyed sort-shuffle
-    (lag over the per-customer order sequence — the sessionization
-    partitioning); the distribution rollup is one row via the
-    quantile_cont parity; gaps are exact integer days.
-    """
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_custkey", "o_orderkey", "o_orderdate"
-    )
-    w = Window.partitionBy("o_custkey").orderBy(
-        "o_orderdate", "o_orderkey"
-    )
-    gaps = (
-        o.withColumn("prev_d", F.lag("o_orderdate").over(w))
-        .filter(F.col("prev_d").isNotNull())
-        .select(
-            F.datediff(F.col("o_orderdate"), F.col("prev_d"))
-            .cast("long")
-            .alias("gap_days")
-        )
-    )
-    per = o.groupBy("o_custkey").agg(
-        F.count(F.lit(1)).cast("long").alias("n_orders")
-    )
-    cust = per.agg(
-        F.count(F.lit(1)).cast("long").alias("n_customers"),
-        F.sum((F.col("n_orders") == 1).cast("int"))
-        .cast("long")
-        .alias("one_order_customers"),
-    )
-    dist = gaps.agg(
-        F.count(F.lit(1)).cast("long").alias("n_gaps"),
-        F.round(F.expr("percentile(gap_days, 0.5)"), 2).alias(
-            "p50_gap_days"
-        ),
-        F.round(F.expr("percentile(gap_days, 0.9)"), 2).alias(
-            "p90_gap_days"
-        ),
-    )
-    return cust.crossJoin(F.broadcast(dist)).select(
-        "n_customers",
-        "one_order_customers",
-        quantize(
-            F.col("one_order_customers").cast("double")
-            / F.col("n_customers"),
-            6,
-        ).alias("one_order_share"),
-        "n_gaps",
-        "p50_gap_days",
-        "p90_gap_days",
-    )
-
-
-def orders_basket_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Basket-size distribution: how many orders contain exactly k
-    distinct parts, with each size's share — the counts-of-counts
-    view behind `parts_assoc_rules` (pair volume is Σ C(k,2) over
-    THIS histogram, so it prices the market-basket join) and the
-    mirror of Q13's customer-order distribution at the order-item
-    level.
-
-    Scale: one orderkey-keyed distinct-part count (natural-key
-    partial agg), then a counts-of-counts agg bounded by the max
-    basket size; shares are exact integer ratios.
-    """
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    per = li.groupBy("l_orderkey").agg(
-        F.count(F.lit(1)).cast("long").alias("k_items")
-    )
-    hist = per.groupBy("k_items").agg(
-        F.count(F.lit(1)).cast("long").alias("n_orders")
-    )
-    tot = hist.agg(F.sum("n_orders").cast("long").alias("n_total"))
-    return hist.crossJoin(F.broadcast(tot)).select(
-        "k_items",
-        "n_orders",
-        quantize(
-            F.col("n_orders").cast("double") / F.col("n_total"), 6
-        ).alias("share"),
-        (
-            F.col("n_orders") * F.col("k_items") * (F.col("k_items") - 1)
-            / 2
-        )
-        .cast("long")
-        .alias("pair_volume"),
-    )
-
-
-def nation_trade_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Net trade balance per nation over CROSS-nation flows: export
-    revenue (this nation supplied a foreign customer) vs import
-    revenue (this nation's customers bought foreign supply) and the
-    net — the macro rollup of Q7's pair-level volume table (Q7 reads
-    one nation pair; this ranks every nation as net exporter or
-    importer).
-
-    Scale: nation dims broadcast onto the fact joins (the Q7 shape);
-    ONE (nation, direction) partial agg of exact cent integers in
-    decimal(38,0) accumulators; the pivot runs on the nations-bounded
-    table.
-    """
-    nation = F.broadcast(_t(spark, sf_dir, "nation"))
-    supp = (
-        _t(spark, sf_dir, "supplier")
-        .join(nation, F.col("s_nationkey") == F.col("n_nationkey"))
-        .select("s_suppkey", F.col("n_name").alias("supp_nation"))
-    )
-    cust = (
-        _t(spark, sf_dir, "customer")
-        .join(nation, F.col("c_nationkey") == F.col("n_nationkey"))
-        .select("c_custkey", F.col("n_name").alias("cust_nation"))
-    )
-    flows = (
-        _t(spark, sf_dir, "lineitem")
-        .select(
-            "l_orderkey",
-            "l_suppkey",
-            F.round(F.col("l_extendedprice") * 100)
-            .cast("long")
-            .alias("rev_c"),
-        )
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(
-            _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
-        .filter(F.col("supp_nation") != F.col("cust_nation"))
-    )
-    # ONE pass over the fact join: fold to nations^2-bounded exact
-    # decimal cells first (materialized), then both direction rollups
-    # regroup those cells — the exp/imp pair otherwise re-ran the
-    # lineitem x orders join twice (census: 12 parquet scans; decimal
-    # partial sums regroup exactly, so the totals are bit-identical)
-    cells = (
-        flows.groupBy("supp_nation", "cust_nation")
-        .agg(
-            F.sum(F.col("rev_c").cast("decimal(38,0)")).alias("rc")
-        )
-        .transform(materialize)
-    )
-    exp = cells.groupBy(F.col("supp_nation").alias("nation")).agg(
-        F.sum("rc").cast("double").alias("exp_c")
-    )
-    imp = cells.groupBy(F.col("cust_nation").alias("nation")).agg(
-        F.sum("rc").cast("double").alias("imp_c")
-    )
-    return (
-        exp.join(imp, "nation", "full_outer")
-        .select(
-            "nation",
-            quantize(F.coalesce(F.col("exp_c"), F.lit(0.0)) / 100.0, 2)
-            .alias("exports"),
-            quantize(F.coalesce(F.col("imp_c"), F.lit(0.0)) / 100.0, 2)
-            .alias("imports"),
-            quantize(
-                (
-                    F.coalesce(F.col("exp_c"), F.lit(0.0))
-                    - F.coalesce(F.col("imp_c"), F.lit(0.0))
-                )
-                / 100.0,
-                2,
-            ).alias("net_balance"),
-        )
-    )
-
-
-def orders_seasonal_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Classical multiplicative seasonal index of order revenue: each
-    month-of-year's average ratio to its own year's monthly mean —
-    the deseasonalization table planners divide by before comparing
-    months (the relational counterpart of `events_seasonal_decompose`
-    on the warehouse star schema).
-
-    Scale: one (year, month) partial agg off the orders scan (grid
-    bounded by the calendar), a years-bounded yearly-mean rollup
-    broadcast back, and a 12-row final agg. Monthly revenue is
-    2-quantized BEFORE any ratio so both engines derive every double
-    from the same cents-exact grid.
-    """
-    o = _t(spark, sf_dir, "orders").select(
-        F.year("o_orderdate").alias("yr"),
-        F.month("o_orderdate").alias("mth"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("rev_c"),
-    )
-    ym = o.groupBy("yr", "mth").agg(
-        F.sum("rev_c").cast("long").alias("rev")
-    )
-    yearly = ym.groupBy(F.col("yr").alias("yr_y")).agg(
-        F.sum("rev").cast("long").alias("year_rev"),
-        F.count(F.lit(1)).cast("long").alias("n_months"),
-    )
-    j = ym.join(
-        F.broadcast(yearly), F.col("yr") == F.col("yr_y")
-    ).withColumn(
-        "ratio",
-        F.col("rev").cast("double")
-        * F.col("n_months")
-        / F.col("year_rev"),
-    )
-    return (
-        j.groupBy("mth")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_years"),
-            quantize(F.avg("ratio"), 6).alias("seasonal_index"),
-            quantize(F.avg(F.col("rev") / 100.0), 2).alias(
-                "avg_revenue"
-            ),
-        )
-        .select(
-            F.col("mth").cast("long").alias("month"),
-            "n_years",
-            "seasonal_index",
-            "avg_revenue",
-        )
-    )
-
-
-def orders_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Monthly revenue with year-over-year growth: each month's order
-    revenue beside the same month one year earlier and the YoY % —
-    the first chart of every revenue review, done without a lag
-    window (the months-bounded self-join IS the lag at calendar
-    scale).
-
-    Scale: ONE month partial agg of exact cent integers off the fact
-    table; the YoY join and growth arithmetic run on the
-    months-bounded series (broadcast); growth is NULL for months
-    with no prior-year twin, never a fake 0.
-    """
-    o = load_table(spark, sf_dir, "orders").select(
-        F.date_trunc("month", F.col("o_orderdate")).alias("month"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("rev_c"),
-    )
-    m = o.groupBy("month").agg(
-        F.sum("rev_c").cast("long").alias("rev"),
-        F.count(F.lit(1)).cast("long").alias("n_orders"),
-    )
-    prior = m.select(
-        (F.col("month") + F.expr("INTERVAL 12 MONTHS")).alias("month"),
-        F.col("rev").alias("rev_prior"),
-    )
-    return m.join(F.broadcast(prior), "month", "left").select(
-        "month",
-        "n_orders",
-        quantize(F.col("rev") / 100.0, 2).alias("revenue"),
-        quantize(F.col("rev_prior") / 100.0, 2).alias("revenue_prior_year"),
-        quantize(
-            (F.col("rev") - F.col("rev_prior")).cast("double")
-            / F.col("rev_prior"),
-            6,
-        ).alias("yoy_growth"),
-    )
-
-
-ABC_A_CUT = 0.80
-ABC_B_CUT = 0.95
-
-
-def orders_abc_class(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ABC inventory classification: parts ranked by revenue, class A
-    = parts inside the first 80% of cumulative revenue, B = next 15%,
-    C = the long tail — the classic Pareto working-capital split
-    (`orders_pareto` gives the concentration curve; this assigns the
-    per-part class a planner acts on).
-
-    Scale: revenue per part is one partkey-keyed partial agg of exact
-    cent integers; the cumulative revenue in (rev DESC, key) rank
-    order runs through `operators/scan.with_prefix_sums` — the
-    two-pass distributed scan (one range exchange + per-partition
-    local sums + a #partitions-row offset broadcast), LINEAR in
-    catalog size where the naive total-order self-join is catalog²
-    (measured 6 s → sub-second at sf0.1 by the swap).
-    """
-    from ..operators.scan import with_prefix_sums
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_partkey",
-        F.round(F.col("l_extendedprice") * 100)
-        .cast("long")
-        .alias("rev_c"),
-    )
-    per = li.groupBy("l_partkey").agg(
-        F.sum("rev_c").cast("long").alias("rev")
-    )
-    tot = per.agg(F.sum("rev").cast("long").alias("total_rev"))
-    base = per.withColumn("neg_rev", -F.col("rev"))
-    scanned = with_prefix_sums(
-        base, "neg_rev", {"cum_prev": "rev"}, tie_cols=["l_partkey"]
-    )
-    j = scanned.withColumn(
-        "cum_rev", F.col("cum_prev") + F.col("rev")
-    ).crossJoin(F.broadcast(tot))
-    share = F.col("cum_rev").cast("double") / F.col("total_rev")
-    return j.select(
-        "l_partkey",
-        quantize(F.col("rev") / 100.0, 2).alias("revenue"),
-        quantize(share, 6).alias("cum_share"),
-        F.when(quantize(share, 6) <= ABC_A_CUT, "A")
-        .when(quantize(share, 6) <= ABC_B_CUT, "B")
-        .otherwise("C")
-        .alias("abc_class"),
-    )
-
-
-PVM_Y1 = 1999
-PVM_Y2 = 2000
-
-
-def orders_pvm_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Price-volume bridge per part brand between two fiscal years:
-    revenue delta decomposed into a volume effect ((q₂−q₁)·p₁) and a
-    price effect ((p₂−p₁)·q₂) that sum EXACTLY to the delta — the
-    standard finance walk ("how much of the change is selling more
-    vs charging more"), rarely seen outside BI suites as a
-    first-class operator.
-
-    Scale: lineitem joins the parts-bounded brand dim (broadcast);
-    ONE (brand, year) partial agg of exact cent/unit integer sums
-    (decimal(38,0) accumulators); the pivot and bridge arithmetic run
-    on the brands-bounded table. Revenue deltas are exact integers;
-    only the unit-price ratios touch doubles.
-    """
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_partkey",
-        F.year(F.col("l_shipdate")).alias("yr"),
-        F.round(F.col("l_extendedprice") * 100)
-        .cast("long")
-        .alias("rev_c"),
-        F.col("l_quantity").cast("long").alias("qty"),
-    )
-    pt = load_table(spark, sf_dir, "part").select(
-        F.col("p_partkey").alias("l_partkey"), "p_brand"
-    )
-    per = (
-        li.filter(F.col("yr").isin(PVM_Y1, PVM_Y2))
-        .join(F.broadcast(pt), "l_partkey")
-        .groupBy("p_brand")
-        .agg(
-            F.sum(
-                F.when(F.col("yr") == PVM_Y1, F.col("rev_c"))
-                .otherwise(0)
-                .cast("decimal(38,0)")
-            )
-            .cast("double")
-            .alias("r1"),
-            F.sum(
-                F.when(F.col("yr") == PVM_Y2, F.col("rev_c"))
-                .otherwise(0)
-                .cast("decimal(38,0)")
-            )
-            .cast("double")
-            .alias("r2"),
-            F.sum(
-                F.when(F.col("yr") == PVM_Y1, F.col("qty"))
-                .otherwise(0)
-                .cast("decimal(38,0)")
-            )
-            .cast("double")
-            .alias("q1"),
-            F.sum(
-                F.when(F.col("yr") == PVM_Y2, F.col("qty"))
-                .otherwise(0)
-                .cast("decimal(38,0)")
-            )
-            .cast("double")
-            .alias("q2"),
-        )
-        .filter((F.col("q1") > 0) & (F.col("q2") > 0))
-    )
-    p1 = F.col("r1") / F.col("q1")
-    p2 = F.col("r2") / F.col("q2")
-    return per.select(
-        "p_brand",
-        quantize(F.col("r1") / 100.0, 2).alias("rev_y1"),
-        quantize(F.col("r2") / 100.0, 2).alias("rev_y2"),
-        quantize((F.col("r2") - F.col("r1")) / 100.0, 2).alias("delta_rev"),
-        quantize(
-            (F.col("q2") - F.col("q1")) * p1 / 100.0, 2
-        ).alias("volume_effect"),
-        quantize((p2 - p1) * F.col("q2") / 100.0, 2).alias("price_effect"),
-    )
-
-
-SEG_SPLIT_YEAR = 1999  # first half < 1999 <= second half
-
-
-def customer_segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Customer value-segment migration matrix: spend-quartile segment
-    (1=low .. 4=top) in the first half of the ledger (ship years
-    < 1999) vs the second half, for customers active in both — the
-    4×4 transition table behind "are we upgrading or churning our
-    best customers", the relational analogue of the event-stream
-    Markov tier.
-
-    Scale: two customer-keyed spend partial aggs (one per half);
-    quartile cuts are 1-ROW exact-percentile aggregates broadcast
-    back (never an unpartitioned ntile window); the matrix agg is
-    bounded by 16 cells.
-    """
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_custkey",
-        F.year(F.col("o_orderdate")).alias("yr"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("spend_c"),
-    )
-
-    def half_spend(cond, name):
-        return (
-            o.filter(cond)
-            .groupBy("o_custkey")
-            .agg(F.sum("spend_c").cast("long").alias(name))
-        )
-
-    # customer-bounded per-half spend, materialized once each: seg()
-    # reads its input twice (quartile cuts + the segment assignment),
-    # so composed as plans each half re-scanned orders (census: 8
-    # parquet scans). The two halves are independent orders scans —
-    # checkpoint them as concurrent jobs, not two serialized ones
-    h1, h2 = materialize_all(
-        [
-            half_spend(F.col("yr") < SEG_SPLIT_YEAR, "s1"),
-            half_spend(F.col("yr") >= SEG_SPLIT_YEAR, "s2"),
-        ]
-    )
-
-    def seg(df, col, prefix):
-        cuts = df.agg(
-            *[
-                F.expr(f"percentile({col}, {q})").alias(f"{prefix}{i}")
-                for i, q in ((1, 0.25), (2, 0.5), (3, 0.75))
-            ]
-        )
-        return df.crossJoin(F.broadcast(cuts)).select(
-            "o_custkey",
-            F.when(F.col(col) <= F.col(f"{prefix}1"), 1)
-            .when(F.col(col) <= F.col(f"{prefix}2"), 2)
-            .when(F.col(col) <= F.col(f"{prefix}3"), 3)
-            .otherwise(4)
-            .cast("long")
-            .alias(f"seg_{prefix}"),
-        )
-    s1 = seg(h1, "s1", "a")
-    s2 = seg(h2, "s2", "b")
-    m = s1.join(s2, "o_custkey").groupBy("seg_a", "seg_b").agg(
-        F.count(F.lit(1)).cast("long").alias("n_customers")
-    )
-    tot = m.groupBy("seg_a").agg(F.sum("n_customers").alias("row_n"))
-    return m.join(F.broadcast(tot), "seg_a").select(
-        F.col("seg_a").alias("segment_first_half"),
-        F.col("seg_b").alias("segment_second_half"),
-        "n_customers",
-        quantize(
-            F.col("n_customers").cast("double") / F.col("row_n"), 6
-        ).alias("row_share"),
-    )
-
-
-def orders_repeat_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Monthly repeat-purchase cohort triangle: for each
-    first-order-month cohort and month offset, how many (and what
-    share of) the cohort's customers ordered again — the relational
-    twin of `events_cohort_retention` (growth analytics over the
-    ledger instead of the clickstream; the curve a retention team
-    reads before LTV).
-
-    Scale: first-order month = one customer-keyed partial agg; the
-    distinct (month, customer) activity joins back on the
-    co-partitioned customer key (AQE-decided); the triangle agg is
-    bounded by months², never orders; cohort sizes broadcast back.
-    """
-    o = load_table(spark, sf_dir, "orders").select(
-        F.date_trunc("month", F.col("o_orderdate")).alias("month"),
-        "o_custkey",
-    )
-    act = o.distinct()
-    first = act.groupBy("o_custkey").agg(
-        F.min("month").alias("cohort_month")
-    )
-    tri = (
-        act.join(first, "o_custkey")
-        .groupBy(
-            "cohort_month",
-            F.months_between(F.col("month"), F.col("cohort_month"))
-            .cast("long")
-            .alias("month_offset"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("n_active"))
-    )
-    sizes = first.groupBy("cohort_month").agg(
-        F.count(F.lit(1)).cast("long").alias("cohort_size")
-    )
-    return tri.join(F.broadcast(sizes), "cohort_month").select(
-        "cohort_month",
-        "month_offset",
-        "cohort_size",
-        "n_active",
-        quantize(
-            F.col("n_active").cast("double") / F.col("cohort_size"), 6
-        ).alias("repeat_rate"),
-    )
-
-
-def lineitem_discount_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Discount-elasticity screen: the OLS fit of order quantity on
-    discount points over all lineitems (slope = extra units per
-    discount point, r² = how much of quantity variance pricing
-    explains) — the one-row forensic answer to "does discounting
-    actually move volume in this ledger?".
-
-    Scale: discounts live on an exact cent grid and quantities are
-    integers, so every regression moment (n, Σx, Σy, Σxy, Σx², Σy²)
-    is an EXACT integer from ONE map-side-combined aggregate
-    (decimal(38,0) accumulators; hugeint in the DuckDB twin); the
-    closed-form slope/intercept/r² are single double expressions —
-    no iterative fitting, no regr_* float-order surface.
-    """
-    li = load_table(spark, sf_dir, "lineitem").select(
-        F.round(F.col("l_discount") * 100).cast("long").alias("x"),
-        F.col("l_quantity").cast("long").alias("y"),
-    )
-    s = li.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(F.col("x").cast("decimal(38,0)")).cast("double").alias("sx"),
-        F.sum(F.col("y").cast("decimal(38,0)")).cast("double").alias("sy"),
-        F.sum((F.col("x") * F.col("y")).cast("decimal(38,0)"))
-        .cast("double")
-        .alias("sxy"),
-        F.sum((F.col("x") * F.col("x")).cast("decimal(38,0)"))
-        .cast("double")
-        .alias("sxx"),
-        F.sum((F.col("y") * F.col("y")).cast("decimal(38,0)"))
-        .cast("double")
-        .alias("syy"),
-    )
-    cov_n = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
-    var_x = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    var_y = F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")
-    return s.select(
-        F.col("n").alias("n_rows"),
-        quantize(F.col("sy") / F.col("n"), 4).alias("mean_qty"),
-        quantize(F.col("sx") / F.col("n"), 4).alias("mean_disc_points"),
-        quantize(cov_n / var_x, 6).alias("slope_per_point"),
-        quantize(
-            (F.col("sy") * F.col("sxx") - F.col("sx") * F.col("sxy"))
-            / var_x,
-            4,
-        ).alias("intercept_qty"),
-        quantize(cov_n * cov_n / (var_x * var_y), 6).alias("r2"),
-    )
-
-
-ASSOC_MIN_PAIR = 2
-ASSOC_TOPK = 20
-
-
-def parts_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Association rules over the co-purchase baskets: top-20 part
-    pairs by LIFT (observed co-occurrence / independence expectation)
-    with support and both directional confidences — `parts_copurchase`
-    ranks by raw frequency, which surfaces popular parts; lift
-    surfaces genuinely ASSOCIATED ones (the collaborative-filtering /
-    recommendation primitive).
-
-    Scale: pair volume is the order-keyed self-join bounded by
-    Σ (items-per-order choose 2), never |lineitem|²; item supports are
-    a parts-bounded partial agg joined twice (AQE decides broadcast);
-    lift/confidence are exact integer ratios quantized on the grid;
-    the global top-k is TakeOrderedAndProject on a (lift, pa, pb)
-    total order.
-    """
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    n_orders = li.select("l_orderkey").distinct().agg(
-        F.count(F.lit(1)).cast("long").alias("n_orders")
-    )
-    item = li.groupBy("l_partkey").agg(
-        F.count(F.lit(1)).cast("long").alias("n_item")
-    )
-    a = li.select("l_orderkey", F.col("l_partkey").alias("pa"))
-    b = li.select("l_orderkey", F.col("l_partkey").alias("pb"))
-    pairs = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("pa") < F.col("pb"))
-        .groupBy("pa", "pb")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_ab"))
-        .filter(F.col("n_ab") >= ASSOC_MIN_PAIR)
-    )
-    j = (
-        pairs.join(
-            item.select(
-                F.col("l_partkey").alias("pa"),
-                F.col("n_item").alias("n_a"),
-            ),
-            "pa",
-        )
-        .join(
-            item.select(
-                F.col("l_partkey").alias("pb"),
-                F.col("n_item").alias("n_b"),
-            ),
-            "pb",
-        )
-        .crossJoin(F.broadcast(n_orders))
-    )
-    lift = quantize(
-        F.col("n_ab").cast("double")
-        * F.col("n_orders")
-        / (F.col("n_a").cast("double") * F.col("n_b")),
-        4,
-    )
-    return (
-        j.select(
-            "pa",
-            "pb",
-            "n_ab",
-            "n_a",
-            "n_b",
-            quantize(F.col("n_ab").cast("double") / F.col("n_orders"), 6)
-            .alias("support"),
-            quantize(F.col("n_ab").cast("double") / F.col("n_a"), 6)
-            .alias("conf_a_to_b"),
-            quantize(F.col("n_ab").cast("double") / F.col("n_b"), 6)
-            .alias("conf_b_to_a"),
-            lift.alias("lift"),
-        )
-        .orderBy(F.col("lift").desc(), "pa", "pb")
-        .limit(ASSOC_TOPK)
-    )
-
-
-PR_ITERS = 3
-PR_DAMP = 0.85
-
-
-def parts_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank over the co-purchase part graph (3 unrolled power
-    iterations, damping 0.85): which parts are CENTRAL to baskets,
-    not merely frequent — the graph-analytics tier over the
-    ``parts_copurchase`` edge structure, value-oracled the same way
-    ``emb_kmeans`` is (per-round quantization so engine summation
-    order can't drift the fixpoint).
-
-    Scale: the edge list is the order-bounded co-purchase self-join
-    (Σ items-per-order², never |parts|²), materialized once for the
-    2·ITERS consumers; each round is one src-keyed join + dst-keyed
-    partial agg — the textbook distributed power iteration. The
-    undirected graph has no dangling nodes (every node has an edge),
-    so no dangling-mass correction is needed.
-    """
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a = li.select("l_orderkey", F.col("l_partkey").alias("src"))
-    b = li.select("l_orderkey", F.col("l_partkey").alias("dst"))
-    edges = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-        .transform(materialize)
-    )
-    # static node/degree table, materialized once: each round references
-    # the PREVIOUS ranks exactly once and rebinds deg from this table —
-    # the oracle's own CTE shape (deg d JOIN c{i}). Binding deg through
-    # the evolving ranks frame embedded the prior round's subtree TWICE
-    # per iteration (2^ITERS plan growth; see corpus_textrank_terms).
-    nodes = (
-        edges.groupBy("src")
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .select(F.col("src").alias("part"), "deg")
-        .transform(materialize)
-    )
-    n_tot = nodes.agg(F.count(F.lit(1)).alias("n"))
-    ranks = nodes.crossJoin(F.broadcast(n_tot)).select(
-        "part", "deg", quantize(F.lit(1.0) / F.col("n"), 9).alias("r")
-    )
-    for _ in range(PR_ITERS):
-        contrib = (
-            edges.join(
-                ranks.select(
-                    F.col("part").alias("src"),
-                    (F.col("r") / F.col("deg")).alias("w"),
-                ),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("part"))
-            .agg(F.sum("w").alias("c"))
-        )
-        ranks = (
-            nodes.join(contrib, "part")
-            .crossJoin(F.broadcast(n_tot))
-            .select(
-                "part",
-                "deg",
-                quantize(
-                    (1.0 - PR_DAMP) / F.col("n") + PR_DAMP * F.col("c"),
-                    9,
-                ).alias("r"),
-            )
-        )
-    return ranks.select(
-        "part",
-        F.col("deg").cast("long").alias("degree"),
-        quantize(F.col("r"), 8).alias("rank"),
-    )
-
-
-def parts_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact triangle census of the co-purchase graph: node/edge
-    counts, wedge count, triangle count, and the global clustering
-    coefficient (3·triangles / wedges) — the one-row graph-topology
-    summary ("how clique-ish are baskets") next to the centrality
-    tier (``parts_pagerank``).
-
-    Scale: triangle enumeration uses the DEGREE-ORDERED "forward"
-    algorithm (VERDICT r10 item 4): each undirected edge is oriented
-    from its lower-(degree, key) endpoint to its higher one, wedges
-    form at the SOURCE, and each triangle x≺y≺z is enumerated exactly
-    once as the wedge (x→y, x→z) with y≺z closed by the directed edge
-    y→z. Per-node wedge volume is out-degree² where out-degree under
-    the degree order is bounded by graph arboricity (≈√m) — on a
-    skewed 100 TB basket graph hubs sit on the DESTINATION side, so
-    hub deg² never materializes (plain key orientation pays Σ deg_key²
-    which a hub dominates). The count is orientation-invariant, so
-    the oracle and output are unchanged. Every statistic is an exact
-    integer — zero float-parity surface.
-    """
-    # Per-order co-purchase pairs WITHOUT the orderkey self-join: one
-    # groupBy folds each order's distinct parts into a sorted array
-    # (basket size is bounded — TPC-H orders hold ≤7 lineitems), and
-    # the u<v pairs explode MAP-SIDE from the array, leaving the
-    # global pair-distinct as the only other exchange. The former
-    # shape (distinct → self-join → distinct) shuffled the lineitem
-    # projection twice more and sort-merged it against itself — at
-    # the 100x rung the edge build alone was 255 s, the query's
-    # single largest phase. Same edge set: within-order i<j pairs of
-    # the sorted distinct parts ARE the pa<pb pairs of the join.
-    po = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
-    )
-    edges = (
-        po.select(F.col("ps"), F.posexplode("ps").alias("i", "u"))
-        .filter(F.col("i") < F.size("ps") - 1)
-        .select(
-            "u",
-            F.explode(
-                F.slice(F.col("ps"), F.col("i") + 2, F.size("ps"))
-            ).alias("v"),
-        )
-        .distinct()
-        .transform(materialize)
-    )
-    both = edges.select("u", "v").union(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    # nodes-sized (one row per part), consumed three ways (two
-    # orientation joins + the wedge stats) — checkpoint so the 2m-row
-    # degree fold runs once
-    deg = (
-        both.groupBy("u")
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .transform(materialize)
-    )
-    wedges = deg.agg(
-        F.count(F.lit(1)).cast("long").alias("n_nodes"),
-        F.sum(F.col("deg") * (F.col("deg") - 1) / 2)
-        .cast("long")
-        .alias("n_wedges"),
-    )
-    ne = edges.agg(F.count(F.lit(1)).cast("long").alias("n_edges"))
-    # degree-ordered orientation: src = the (deg, key)-smaller
-    # endpoint (edges are already u < v canonical, so a degree tie
-    # keeps u as source). dst carries its degree so the wedge filter
-    # below can compare the ≺ order without another join.
-    e2 = edges.join(
-        deg.select(F.col("u"), F.col("deg").alias("deg_u")), "u"
-    ).join(
-        deg.select(F.col("u").alias("v"), F.col("deg").alias("deg_v")),
-        "v",
-    )
-    u_first = (F.col("deg_u") < F.col("deg_v")) | (
-        (F.col("deg_u") == F.col("deg_v")) & (F.col("u") < F.col("v"))
-    )
-    dedges = e2.select(
-        F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("src"),
-        F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
-        F.when(u_first, F.col("deg_v"))
-        .otherwise(F.col("deg_u"))
-        .alias("dst_deg"),
-    )
-    # dedges has exactly ONE consumer now (the adjacency groupBy), so
-    # the orientation folds into that shuffle's map side — no
-    # checkpoint needed (edges itself stays materialized above for
-    # the deg/wedge/edge-count branches)
-    # Adjacency-array "forward" counting (VERDICT r11 item 2): the
-    # former w1⋈w2 wedge self-join shuffled dedges TWICE by src and
-    # then shuffled + SORTED the Σ out-deg² wedge table a third time
-    # for the closing semi-join — at the 100x rung that wedge sort was
-    # the catalog's single most expensive stage. Instead, group the
-    # directed edges ONCE into per-source out-neighbor arrays sorted
-    # by the ≺ order (arrays are arboricity-bounded, ≈√m elements).
-    # A triangle x≺y≺z is counted exactly once at its edge (x, y) as
-    # |{z ∈ out(x): y ≺ z} ∩ out(y)|: the wedge pairs never
-    # materialize as rows — the ≺-tail of out(x) rides the one
-    # remaining exchange as a packed array (half the wedge volume,
-    # since each wedge ships only on its y-side slice), and the
-    # closing check is a per-row array_intersect instead of a W-row
-    # shuffle + sort-merge join.
-    # Scale-adaptive shuffle width (guide §2.5): the adjacency
-    # collect_list concentrates per-source array state in the agg
-    # buffers and the closing join sorts array payloads — at the
-    # default cpu-count partitioning a 100x rung packs >3M array
-    # elements of execution-memory state per task and dies with
-    # UNABLE_TO_ACQUIRE_MEMORY (measured). Derive the width from the
-    # MEASURED edge count (edges is already materialized, so the
-    # count is one cheap pass over cached blocks): ~1.5M directed
-    # edges per task keeps per-task state tens of MB; at gate SFs the
-    # max() leaves the default width untouched.
-    import math
-
-    n_part = max(
-        int(spark.conf.get("spark.sql.shuffle.partitions")),
-        math.ceil(edges.count() / 1_500_000),
-    )
-    adj = (
-        dedges.repartition(n_part, "src")
-        .groupBy("src")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("dst_deg", "dst"))
-            ).alias("ns")
-        )
-        .select(
-            "src",
-            F.transform(F.col("ns"), lambda s: s["dst"]).alias("nbrs"),
-        )
-        # two consumers (wedge-tail explode + the out(y) probe side)
-        # share the one groupBy exchange via runtime exchange reuse —
-        # both subtrees are identical, and skipping the eager
-        # checkpoint avoids writing the full adjacency (m elements)
-        # to block storage a second time (measured at the 100x rung:
-        # the adj checkpoint was 207 s of the 554 s total)
-    )
-    tails = (
-        adj.select(
-            F.col("nbrs"), F.posexplode("nbrs").alias("i", "y")
-        )
-        .filter(F.col("i") < F.size("nbrs") - 1)
-        .select(
-            "y",
-            F.slice(
-                F.col("nbrs"), F.col("i") + 2, F.size("nbrs")
-            ).alias("zs"),
-        )
-        .repartition(n_part, "y")
-    )
-    tri = (
-        tails.join(
-            adj.select(
-                F.col("src").alias("y"), F.col("nbrs").alias("oy")
-            ),
-            "y",
-        )
-        .select(F.size(F.array_intersect("zs", "oy")).alias("c"))
-        .agg(
-            F.coalesce(F.sum("c"), F.lit(0))
-            .cast("long")
-            .alias("n_triangles")
-        )
-    )
-    return (
-        wedges.crossJoin(F.broadcast(ne))
-        .crossJoin(F.broadcast(tri))
-        .select(
-            "n_nodes",
-            "n_edges",
-            "n_wedges",
-            "n_triangles",
-            quantize(
-                3.0
-                * F.col("n_triangles").cast("double")
-                / F.col("n_wedges"),
-                6,
-            ).alias("global_clustering"),
-        )
-    )
-
-
-def customer_ltv_triangle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Customer lifetime-value triangle: per first-order-month cohort
-    and months-since-first-order, the cohort's order count and spend
-    plus per-customer average spend in that offset month — the
-    finance view of cohort behavior (the activity view is
-    ``events_cohort_retention``).
-
-    Scale: first month = one custkey partial agg joined back on the
-    co-partitioned key (AQE-decided); the triangle agg is bounded by
-    months², never orders; cohort sizes broadcast for the
-    per-customer normalization.
-    """
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_custkey",
-        F.date_trunc("month", F.col("o_orderdate")).alias("month"),
-        "o_totalprice",
-    )
-    first = o.groupBy("o_custkey").agg(
-        F.min("month").alias("cohort_month")
-    )
-    tri = (
-        o.join(first, "o_custkey")
-        .groupBy(
-            "cohort_month",
-            (
-                (F.year("month") - F.year("cohort_month")) * 12
-                + (F.month("month") - F.month("cohort_month"))
-            )
-            .cast("long")
-            .alias("month_offset"),
-        )
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("cohort_spend"),
-        )
-    )
-    sizes = first.groupBy("cohort_month").agg(
-        F.count(F.lit(1)).cast("long").alias("cohort_size")
-    )
-    return tri.join(F.broadcast(sizes), "cohort_month").select(
-        "cohort_month",
-        "month_offset",
-        "cohort_size",
-        "n_orders",
-        "cohort_spend",
-        quantize(
-            F.col("cohort_spend") / F.col("cohort_size"), 4
-        ).alias("spend_per_customer"),
-    )
-
-
-def nation_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Supply-concentration audit: the Herfindahl-Hirschman index of
-    supplier revenue shares within each nation (10000·Σ share² in the
-    antitrust convention; 10000 = monopoly, →0 = atomized), plus the
-    top supplier's share — the risk view of the supply base.
-
-    Scale: one suppkey partial agg over a single lineitem scan, a
-    broadcast supplier→nation dim join, then a nation-bounded rollup.
-    Per-supplier revenue is quantized to the cent grid FIRST, so the
-    nation totals and shares are exact-grid arithmetic; the share²
-    sum quantizes at 1e-2 (HHI points).
-    """
-    li = load_table(spark, sf_dir, "lineitem")
-    sup = load_table(spark, sf_dir, "supplier").select(
-        F.col("s_suppkey").alias("l_suppkey"), "s_nationkey"
-    )
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    per = (
-        li.groupBy("l_suppkey")
-        .agg(quantize(F.sum(rev), 2).alias("r"))
-        .join(F.broadcast(sup), "l_suppkey")
-    )
-    tot = per.groupBy("s_nationkey").agg(
-        F.sum("r").alias("nation_rev"),
-        F.count(F.lit(1)).cast("long").alias("n_suppliers"),
-    )
-    shares = per.join(F.broadcast(tot), "s_nationkey").select(
-        "s_nationkey",
-        "n_suppliers",
-        (F.col("r") / F.col("nation_rev")).alias("share"),
-    )
-    return shares.groupBy("s_nationkey").agg(
-        F.first("n_suppliers").alias("n_suppliers"),
-        quantize(
-            10000.0 * F.sum(F.col("share") * F.col("share")), 2
-        ).alias("hhi"),
-        quantize(F.max("share"), 6).alias("top_share"),
-    )
-
-
-def parts_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Degree assortativity of the co-purchase graph: the Pearson
-    correlation of endpoint degrees over all edges (positive = hubs
-    buy with hubs, negative = hub-and-spoke baskets) — the third
-    graph statistic beside centrality (`parts_pagerank`) and
-    clustering (`parts_triangles`).
-
-    Scale: the order-bounded edge list joins the degree table on each
-    endpoint's natural key; the correlation comes from EXACT integer
-    sums over the directed edge list (both orientations — the
-    standard undirected convention) with one final expression.
-    """
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a = li.select("l_orderkey", F.col("l_partkey").alias("u"))
-    b = li.select("l_orderkey", F.col("l_partkey").alias("v"))
-    edges = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("u") != F.col("v"))
-        .select("u", "v")
-        .distinct()
-        .transform(materialize)
-    )
-    deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-    pairs = (
-        edges.join(deg.select(F.col("u"), F.col("d").alias("du")), "u")
-        .join(
-            deg.select(F.col("u").alias("v"), F.col("d").alias("dv")),
-            "v",
-        )
-        .select("du", "dv")
-    )
-    # the OUTER products run in double (r10): count * sum(du*dv) in
-    # exact longs overflows int64 at the 10x rung (the sweep's ANSI
-    # ETIC_OVERFLOW catch) — the inner sums stay exact longs, each is
-    # cast to double BEFORE the product, and the SQL twin mirrors the
-    # same cast points so both engines round identically (output is
-    # quantized at 1e-4 regardless)
-    cnt = F.count(F.lit(1)).cast("double")
-    num = (
-        cnt * F.sum(F.col("du") * F.col("dv")).cast("double")
-        - F.sum("du").cast("double") * F.sum("dv").cast("double")
-    )
-    den = F.sqrt(
-        (
-            cnt * F.sum(F.col("du") * F.col("du")).cast("double")
-            - F.sum("du").cast("double") * F.sum("du").cast("double")
-        )
-        * (
-            cnt * F.sum(F.col("dv") * F.col("dv")).cast("double")
-            - F.sum("dv").cast("double") * F.sum("dv").cast("double")
-        )
-    )
-    return pairs.agg(
-        F.count(F.lit(1)).cast("long").alias("n_directed_edges"),
-        quantize(num / den, 4).alias("assortativity"),
-    )
-
-
-def orders_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benford's-law screen on order totals: observed first-digit
-    shares vs the log10(1+1/d) law plus the chi-square statistic —
-    the classic forensic/data-quality test (fabricated or
-    unit-converted amounts flunk it long before domain checks do).
-
-    Scale: digit extraction is EXACT — prices collapse to cent
-    integers (round(x·100), grid-exact) whose decimal-string first
-    character is the first significant digit, no float log10 edge
-    cases; one 9-row digit rollup + a broadcast total; chi-square is
-    a 9-term sum of quantized shares.
-    """
-    o = load_table(spark, sf_dir, "orders")
-    digit = F.substring(
-        F.round(F.col("o_totalprice") * 100).cast("long").cast("string"),
-        1,
-        1,
-    ).cast("long")
-    per = o.groupBy(digit.alias("digit")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_orders")
-    )
-    tot = per.agg(F.sum("n_orders").alias("n_total"))
-    j = per.crossJoin(F.broadcast(tot))
-    obs = F.col("n_orders").cast("double") / F.col("n_total")
-    expd = F.log10(1 + 1 / F.col("digit").cast("double"))
-    dev = (obs - expd) * (obs - expd) / expd
-    chi2 = j.agg(
-        quantize(F.sum(dev * F.col("n_total")), 4).alias("chi2")
-    )
-    return (
-        j.crossJoin(F.broadcast(chi2))
-        .select(
-            "digit",
-            "n_orders",
-            quantize(obs, 6).alias("obs_share"),
-            quantize(expd, 6).alias("benford_share"),
-            "chi2",
-        )
-    )
-
-
-def customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFM segmentation per customer: Recency (days from last order
-    to the corpus max date), Frequency (order count), Monetary (total
-    spend), each scored 1-4 against the corpus quartiles.
-
-    Scale: one custkey partial agg builds the per-customer metrics;
-    the quartile cutoffs are a 1-ROW exact-percentile aggregate that
-    broadcasts (never an unpartitioned ntile window — the plan audit
-    bans those); scoring is then a pure narrow map.
-    """
-    o = load_table(spark, sf_dir, "orders")
-    mx = o.agg(F.max("o_orderdate").alias("maxd"))
-    per = (
-        o.crossJoin(F.broadcast(mx))
-        .groupBy("o_custkey")
-        .agg(
-            F.min(F.datediff(F.col("maxd"), F.col("o_orderdate")))
-            .cast("long")
-            .alias("recency_days"),
-            F.count(F.lit(1)).cast("long").alias("frequency"),
-            F.round(F.sum("o_totalprice"), 2).alias("monetary"),
-        )
-    )
-    # cut quantization (r11 float-boundary audit): recency/frequency
-    # cuts are dyadic-exact (integer inputs, quarter fractions), but
-    # the monetary cuts interpolate FLOAT sums and can land exactly on
-    # the cent grid the monetary values live on — the
-    # corpus_ppl_buckets 1-ulp bucket-flip class. Every cut used in a
-    # comparison is quantized at 1e-9 in both engines (a no-op for the
-    # already-exact integer cuts).
-    cuts = per.agg(
-        *[
-            quantize(F.expr(f"percentile(recency_days, {q})"), 9).alias(
-                f"r{i}"
-            )
-            for i, q in ((1, 0.25), (2, 0.5), (3, 0.75))
-        ],
-        *[
-            quantize(F.expr(f"percentile(frequency, {q})"), 9).alias(
-                f"f{i}"
-            )
-            for i, q in ((1, 0.25), (2, 0.5), (3, 0.75))
-        ],
-        *[
-            quantize(F.expr(f"percentile(monetary, {q})"), 9).alias(
-                f"m{i}"
-            )
-            for i, q in ((1, 0.25), (2, 0.5), (3, 0.75))
-        ],
-    )
-
-    def score(col, c1, c2, c3, reverse=False):
-        s = (
-            F.when(col <= F.col(c1), 1)
-            .when(col <= F.col(c2), 2)
-            .when(col <= F.col(c3), 3)
-            .otherwise(4)
-        )
-        return (5 - s) if reverse else s
-
-    return (
-        per.crossJoin(F.broadcast(cuts))
-        .select(
-            "o_custkey",
-            "recency_days",
-            "frequency",
-            "monetary",
-            # low recency = good -> reversed scale
-            score(F.col("recency_days"), "r1", "r2", "r3", reverse=True)
-            .cast("long")
-            .alias("r_score"),
-            score(F.col("frequency"), "f1", "f2", "f3")
-            .cast("long")
-            .alias("f_score"),
-            score(F.col("monetary"), "m1", "m2", "m3")
-            .cast("long")
-            .alias("m_score"),
-        )
-    )
-
-
-def parts_xyz_class(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """XYZ demand-variability classification: per part, the
-    coefficient of variation of monthly order quantity — X (CV<0.5,
-    steady: forecast and automate), Y (<1, seasonal/trending), Z
-    (erratic: buffer or make-to-order) — the other axis of the
-    ABC-XYZ inventory matrix (`orders_abc_class` gives the value
-    axis).
-
-    Months with no orders count as ZERO demand (a part selling one
-    month in twelve IS erratic), via the calendar-span month count
-    rather than a per-part dense series — so the state stays one row
-    per (part, active month) plus a 1-row calendar broadcast.
-
-    Scale: one (part, month) partial agg of exact integer quantities;
-    per-part moments fold those cells (parts-bounded); the zero-month
-    correction needs only the global month count — Σx and Σx² are
-    unchanged by zero cells — so nothing densifies.
-    """
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey",
-        "l_partkey",
-        F.round(F.col("l_quantity")).cast("long").alias("qty"),
-    )
-    o = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", F.date_trunc("month", "o_orderdate").alias("month")
-    )
-    pm = (
-        li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("l_partkey", "month")
-        .agg(F.sum("qty").cast("long").alias("q"))
-    )
-    span = pm.agg(
-        F.count_distinct("month").cast("long").alias("n_months")
-    )
-    per = pm.groupBy("l_partkey").agg(
-        F.sum("q").cast("long").alias("sq"),
-        F.sum(F.col("q") * F.col("q"))
-        .cast("decimal(38,0)")
-        .alias("sqq"),
-    )
-    j = per.crossJoin(F.broadcast(span))
-    n = F.col("n_months").cast("double")
-    mean = F.col("sq").cast("double") / n
-    # float cancellation on a constant series can leave var a tiny
-    # negative — clamp so sqrt never goes NaN (same clamp in the twin)
-    var = F.greatest(
-        (
-            F.col("sqq").cast("double")
-            - F.col("sq").cast("double") * mean
-        )
-        / (n - 1.0),
-        F.lit(0.0),
-    )
-    cv = F.sqrt(var) / mean
-    ok = (F.col("n_months") > 1) & (F.col("sq") > 0)
-    cls = (
-        F.when(cv < 0.5, "X").when(cv < 1.0, "Y").otherwise("Z")
-    )
-    return j.select(
-        "l_partkey",
-        "n_months",
-        F.col("sq").alias("total_qty"),
-        F.when(ok, quantize(cv, 4)).alias("cv"),
-        F.when(ok, cls).alias("xyz_class"),
-    )
-
-
-def orders_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ABC-XYZ inventory control matrix: part counts and revenue
-    per (value class, variability class) cell — AX (high value,
-    steady: automate replenishment) through CZ (low value, erratic:
-    order on demand), the nine-cell policy map both classification
-    operators exist to feed.
-
-    Scale: composes the two part-keyed classification tables on their
-    natural key (co-partitioned join, AQE-decided) and rolls up to ≤9
-    cells + an ALL-parts margin per class pair.
-    """
-    abc = orders_abc_class(spark, sf_dir).select(
-        F.col("l_partkey").alias("pk_a"), "abc_class", "revenue"
-    )
-    xyz = parts_xyz_class(spark, sf_dir).select(
-        F.col("l_partkey").alias("pk_x"), "xyz_class"
-    )
-    j = abc.join(xyz, F.col("pk_a") == F.col("pk_x"))
-    return (
-        j.groupBy("abc_class", "xyz_class")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_parts"),
-            quantize(F.sum("revenue"), 2).alias("cell_revenue"),
-        )
-    )
-
-
-def customer_decile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Customer value decile table: customers bucketed by total spend
-    into spend deciles (1 = lowest), with per-decile headcount, spend
-    range, and revenue share — the marketing-analytics canon view
-    ("the top decile carries X% of revenue") and the input to any
-    tiered-service design.
-
-    Scale: per-customer spend is one custkey partial agg of exact
-    cents; the nine decile cutoffs are ONE 1-row exact-percentile
-    aggregate broadcast back (the `customer_rfm`/`corpus_curriculum`
-    idiom — no global ntile window, no single-task sort); decile
-    assignment is a 9-element array filter per row and the final
-    rollup is 10 groups.
-    """
-    o = _t(spark, sf_dir, "orders").select(
-        "o_custkey",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("rev_c"),
-    )
-    per = o.groupBy("o_custkey").agg(
-        F.sum("rev_c").cast("long").alias("spend_c")
-    )
-    qs = ", ".join(str(q / 10.0) for q in range(1, 10))
-    cuts = per.agg(
-        F.expr(f"percentile(spend_c, array({qs}))").alias("cuts"),
-        F.sum("spend_c").cast("long").alias("total_c"),
-    )
-    j = per.crossJoin(F.broadcast(cuts)).withColumn(
-        "decile",
-        (
-            F.lit(1)
-            + F.size(
-                F.filter(
-                    F.col("cuts"),
-                    lambda c: F.col("spend_c").cast("double") > c,
-                )
-            )
-        ).cast("long"),
-    )
-    return (
-        j.groupBy("decile")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_customers"),
-            quantize(F.min("spend_c") / 100.0, 2).alias("min_spend"),
-            quantize(F.max("spend_c") / 100.0, 2).alias("max_spend"),
-            quantize(F.sum("spend_c") / 100.0, 2).alias("decile_revenue"),
-            quantize(
-                F.sum("spend_c").cast("double") / F.first("total_c"), 6
-            ).alias("revenue_share"),
-        )
-    )
-
-
-def warehouse_ref_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Star-schema referential-integrity audit: orphan counts along
-    every FK edge — lineitems without an order, orders without a
-    customer, customers/suppliers without a nation, nations without a
-    region, plus unreferenced parts (reverse edge: inventory nobody
-    ordered) — the first report run against a new warehouse drop
-    (relational sibling of `corpus_ref_integrity`).
-
-    Scale: each orphan count is a LEFT ANTI join onto the parent's
-    key projection — dims broadcast, the two fact-fact edges shuffle
-    on their natural keys (AQE-decided) — folded into a one-row
-    stack-transposed report.
-    """
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    su = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
-    p = _t(spark, sf_dir, "part")
-
-    def orphans(child, ck, parent, pk):
-        return (
-            child.select(F.col(ck))
-            .join(
-                parent.select(F.col(pk).alias(ck)), ck, "left_anti"
-            )
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        )
-
-    checks = [
-        ("lineitem_without_order", orphans(li, "l_orderkey", o, "o_orderkey")),
-        ("order_without_customer", orphans(o, "o_custkey", c, "c_custkey")),
-        ("customer_without_nation", orphans(c, "c_nationkey", n, "n_nationkey")),
-        ("supplier_without_nation", orphans(su, "s_nationkey", n, "n_nationkey")),
-        ("nation_without_region", orphans(n, "n_regionkey", r, "r_regionkey")),
-        ("part_never_ordered", orphans(p, "p_partkey", li, "l_partkey")),
-    ]
-    wide = None
-    for name, df in checks:
-        df = df.select(F.col("n").alias(f"n_{name}"))
-        wide = df if wide is None else wide.crossJoin(df)
-    stack_args = ", ".join(f"'{nm}', n_{nm}" for nm, _ in checks)
-    return wide.selectExpr(
-        f"stack({len(checks)}, {stack_args}) AS (fk_edge, n_orphans)"
-    ).withColumn("clean", F.col("n_orphans") == 0)
-
-
-def supplier_otif(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Supplier on-time delivery league table: per supplier, the
-    share of lines received by their commit date AND the Wilson 95%
-    LOWER bound on that share — ranking by the lower bound (not the
-    raw rate) is the classic fix for small-sample flattery, where a
-    2-for-2 supplier would otherwise outrank a 980-for-1000 one.
-
-    On-time = shipped within 30 days of the order date (this schema
-    carries ship dates, not commit/receipt pairs).
-
-    Scale: one orderkey-keyed join of the two fact scans (orders
-    projected to two columns, AQE picks the strategy), then a suppkey
-    partial agg of exact integer counts; the Wilson bound is
-    closed-form doubles from those integers, written in the same
-    order as the SQL twin.
-    """
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_shipdate"
-    )
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    j = li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-    on_time = F.expr(
-        "l_shipdate <= o_orderdate + INTERVAL 30 DAYS"
-    ).cast("long")
-    per = j.groupBy("l_suppkey").agg(
-        F.count(F.lit(1)).cast("long").alias("n_lines"),
-        F.sum(on_time).cast("long").alias("n_on_time"),
-    )
-    z = F.lit(1.96)
-    n = F.col("n_lines").cast("double")
-    p = F.col("n_on_time").cast("double") / n
-    denom = 1.0 + z * z / n
-    center = (p + z * z / (2.0 * n)) / denom
-    half = (
-        z
-        * F.sqrt(p * (1.0 - p) / n + z * z / (4.0 * n * n))
-        / denom
-    )
-    return per.select(
-        "l_suppkey",
-        "n_lines",
-        "n_on_time",
-        quantize(p, 6).alias("otif_rate"),
-        quantize(center - half, 6).alias("otif_wilson_lo"),
-    )
-
-
-def supplier_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-supplier operations scorecard: line count, revenue, return
-    rate, open-line share, and mean discount — the multi-flag rollup a
-    procurement dashboard reads (Q10's return signal + the mix
-    signals, joined into one entity view).
-
-    Scale: one suppkey partial agg over a single lineitem scan; rates
-    are exact-integer counts with a single division, and the mean
-    discount integer-sums the 1e-2-grid discounts exactly.
-    """
-    li = load_table(spark, sf_dir, "lineitem")
-    ret = (F.col("l_returnflag") == "R").cast("long")
-    open_ = (F.col("l_linestatus") == "O").cast("long")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    per = li.groupBy("l_suppkey").agg(
-        F.count(F.lit(1)).cast("long").alias("n_lines"),
-        F.round(F.sum(rev), 2).alias("revenue"),
-        F.sum(ret).cast("long").alias("n_returned"),
-        F.sum(open_).cast("long").alias("n_open"),
-        # discounts live on the 1e-2 grid: integer-sum exactly
-        F.sum(F.round(F.col("l_discount") * 100).cast("long"))
-        .cast("long")
-        .alias("disc_cents"),
-    )
-    return per.select(
-        "l_suppkey",
-        "n_lines",
-        "revenue",
-        "n_returned",
-        "n_open",
-        F.round(
-            F.col("n_returned").cast("double") / F.col("n_lines"), 4
-        ).alias("return_rate"),
-        F.round(
-            F.col("n_open").cast("double") / F.col("n_lines"), 4
-        ).alias("open_share"),
-        F.round(
-            F.col("disc_cents").cast("double")
-            / (F.col("n_lines").cast("double") * 100.0),
-            4,
-        ).alias("mean_discount"),
-    ).drop("disc_cents")
-
-
-def orders_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Revenue-concentration (Pareto / Lorenz) table: customers binned
-    into spend deciles, each decile's customer count, revenue, and
-    share of total revenue — the "do 20% of customers drive 80% of
-    revenue" read.
-
-    Scale: one custkey partial agg builds per-customer spend; the
-    decile cutoffs are a 1-ROW exact-percentile aggregate that
-    broadcasts (the same window-free idiom as ``customer_rfm`` — an
-    unpartitioned ntile window would single-task the sort); binning is
-    then a pure narrow map and the rollup re-aggregates on the 10-row
-    decile key. Total revenue is a second 1-row broadcast.
-    """
-    o = load_table(spark, sf_dir, "orders")
-    # spend quantized to the cent grid (r11 float-boundary audit): a
-    # raw double sum is ADD-ORDER dependent, so the two engines (and
-    # two partitionings) can disagree by an ulp on the very values the
-    # decile comparison cuts — the true sum lives on the cent grid and
-    # the accumulated error is far below half a cent, so the quantize
-    # restores engine-identical values
-    per = o.groupBy("o_custkey").agg(
-        quantize(F.sum("o_totalprice"), 2).alias("spend")
-    )
-    # and the interpolated cuts get the 1e-9 comparison-threshold
-    # quantize (corpus_ppl_buckets discipline)
-    cuts = per.agg(
-        *[
-            quantize(F.expr(f"percentile(spend, {i / 10.0})"), 9).alias(
-                f"c{i}"
-            )
-            for i in range(1, 10)
-        ]
-    )
-    binned = per.crossJoin(F.broadcast(cuts)).select(
-        "o_custkey",
-        "spend",
-        F.when(F.col("spend") <= F.col("c1"), 1)
-        .when(F.col("spend") <= F.col("c2"), 2)
-        .when(F.col("spend") <= F.col("c3"), 3)
-        .when(F.col("spend") <= F.col("c4"), 4)
-        .when(F.col("spend") <= F.col("c5"), 5)
-        .when(F.col("spend") <= F.col("c6"), 6)
-        .when(F.col("spend") <= F.col("c7"), 7)
-        .when(F.col("spend") <= F.col("c8"), 8)
-        .when(F.col("spend") <= F.col("c9"), 9)
-        .otherwise(10)
-        .cast("long")
-        .alias("decile"),
-    )
-    tot = per.agg(F.sum("spend").alias("total_spend"))
-    return (
-        binned.groupBy("decile")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_customers"),
-            F.sum("spend").alias("rev"),
-        )
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "decile",
-            "n_customers",
-            F.round("rev", 2).alias("decile_revenue"),
-            F.round(F.col("rev") / F.col("total_spend"), 6).alias(
-                "revenue_share"
-            ),
-        )
-    )
-
-
-def orders_backlog_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interval/temporal analytics: monthly order-backlog snapshots —
-    per month-start, how many orders are OPEN (placed, not yet fully
-    shipped), plus that month's placements and completions. The
-    "concurrent intervals" pattern (active sessions, WIP inventory,
-    connection counts) done window-free.
-
-    Scale: each order collapses to one (start, end) interval via an
-    orderkey partial agg; the month axis is a 1-row min/max broadcast
-    exploded to a tiny month list (bounded by calendar span, never
-    row count), and the snapshot join is a months-list BROADCAST
-    non-equi join — each interval emits only its open months (bounded
-    by order lifetime), then a month-keyed partial agg. No
-    unpartitioned cumsum window over the timeline.
-    """
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", F.col("o_orderdate").alias("start_date")
-    )
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(F.max("l_shipdate").alias("end_date"))
-    )
-    # orders-sized narrow (key, start, end) intervals, materialized
-    # once: the month axis, the open-snapshot join, and the placed/
-    # completed rollups all read it — composed as plans each re-ran
-    # the orders x lineitem-max join (census: 10 parquet scans)
-    iv = o.join(li, o.o_orderkey == li.l_orderkey).select(
-        "o_orderkey", "start_date", "end_date"
-    ).transform(materialize)
-    rng = iv.agg(
-        F.min("start_date").alias("lo"), F.max("end_date").alias("hi")
-    )
-    months = rng.select(
-        F.explode(
-            F.expr(
-                "sequence(date_trunc('MM', lo), date_trunc('MM', hi),"
-                " interval 1 month)"
-            )
-        ).alias("month")
-    )
-    open_ = (
-        iv.join(
-            F.broadcast(months),
-            (F.col("start_date") <= F.col("month"))
-            & (F.col("end_date") > F.col("month")),
-        )
-        .groupBy("month")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_open"))
-    )
-    started = iv.groupBy(
-        F.date_trunc("month", F.col("start_date")).alias("month")
-    ).agg(F.count(F.lit(1)).cast("long").alias("n_placed"))
-    done = iv.groupBy(
-        F.date_trunc("month", F.col("end_date")).alias("month")
-    ).agg(F.count(F.lit(1)).cast("long").alias("n_completed"))
-    return (
-        months.join(open_, "month", "left")
-        .join(started, "month", "left")
-        .join(done, "month", "left")
-        .select(
-            "month",
-            F.coalesce("n_open", F.lit(0)).cast("long").alias("n_open"),
-            F.coalesce("n_placed", F.lit(0))
-            .cast("long")
-            .alias("n_placed"),
-            F.coalesce("n_completed", F.lit(0))
-            .cast("long")
-            .alias("n_completed"),
-        )
-    )
-
-
-def lineitem_lead_time(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fulfillment lead-time distribution per return-flag class:
-    order-to-ship lag in days — count, mean, exact median/p90, max.
-    The SLA view of the orders pipeline (Q12 asks "late or not"; this
-    asks "how long, and how heavy is the tail").
-
-    Scale: one orderkey-joined scan (lineitem co-partitions with
-    orders on the join key, AQE-decided), then a ship-mode-bounded
-    agg; the mean is an exact integer sum + one division; the
-    quantiles sort per-mode partitions (approx_percentile drops in at
-    100 TB, same shape).
-    """
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_returnflag", "l_shipdate"
-    )
-    o = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("l_orderkey"), "o_orderdate"
-    )
-    lead = li.join(o, "l_orderkey").select(
-        "l_returnflag",
-        F.datediff(F.col("l_shipdate"), F.col("o_orderdate"))
-        .cast("long")
-        .alias("lead_days"),
-    )
-    return lead.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).cast("long").alias("n_lines"),
-        quantize(
-            F.sum("lead_days").cast("double") / F.count(F.lit(1)), 4
-        ).alias("mean_days"),
-        quantize(F.expr("percentile(lead_days, 0.5)"), 4).alias("p50_days"),
-        quantize(F.expr("percentile(lead_days, 0.9)"), 4).alias("p90_days"),
-        F.max("lead_days").cast("long").alias("max_days"),
-    )
-
-
-OVERLAP_TOPK = 20
-
-
-def supplier_portfolio_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Competitive-overlap mining: the top-20 supplier pairs by
-    Jaccard similarity of their traded part portfolios (who ships the
-    same catalog — substitution candidates in a supply disruption,
-    the pair view behind `parts_single_source_risk`'s exposure
-    count).
-
-    Scale: pair generation is keyed on l_partkey (compare volume =
-    Σ suppliers-per-part², bounded by sourcing breadth, never
-    |suppliers|²); portfolio sizes are a supplier-keyed partial agg
-    broadcast into the pair rollup; Jaccard from exact integers via
-    inclusion-exclusion; top-k is TakeOrderedAndProject.
-    """
-    sp = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_partkey", "l_suppkey")
-        .distinct()
-    )
-    size = sp.groupBy("l_suppkey").agg(
-        F.count(F.lit(1)).cast("long").alias("n_parts")
-    )
-    a = sp.select("l_partkey", F.col("l_suppkey").alias("sa"))
-    b = sp.select("l_partkey", F.col("l_suppkey").alias("sb"))
-    inter = (
-        a.join(b, "l_partkey")
-        .filter(F.col("sa") < F.col("sb"))
-        .groupBy("sa", "sb")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_common"))
-    )
-    sza = size.select(
-        F.col("l_suppkey").alias("sa"), F.col("n_parts").alias("na")
-    )
-    szb = size.select(
-        F.col("l_suppkey").alias("sb"), F.col("n_parts").alias("nb")
-    )
-    j = inter.join(F.broadcast(sza), "sa").join(F.broadcast(szb), "sb")
-    union = F.col("na") + F.col("nb") - F.col("n_common")
-    return (
-        j.select(
-            "sa",
-            "sb",
-            "na",
-            "nb",
-            "n_common",
-            quantize(
-                F.col("n_common").cast("double") / union.cast("double"),
-                6,
-            ).alias("jaccard"),
-        )
-        .orderBy(F.col("jaccard").desc(), F.col("sa"), F.col("sb"))
-        .limit(OVERLAP_TOPK)
-    )
-
-
-GROWTH_TOPK = 20
-
-
-def orders_top_growth_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fastest-growing accounts: top-20 customers by year-over-year
-    revenue growth between the ledger's last two full years (plus the
-    rates) — the account-management complement to `customer_rfm`'s
-    static segmentation.
-
-    Scale: per-(customer, year) revenue is one custkey partial agg
-    with cent-grid quantization; the two-year pivot is a
-    self-join on the customer natural key (co-partitioned,
-    AQE-decided); the last-two-years pair is a 1-row broadcast;
-    top-k is TakeOrderedAndProject.
-    """
-    o = load_table(spark, sf_dir, "orders")
-    per = o.groupBy(
-        "o_custkey", F.year("o_orderdate").alias("yr")
-    ).agg(quantize(F.sum("o_totalprice"), 2).alias("rev"))
-    yrs = per.select(F.col("yr").alias("y_m")).agg(
-        F.max("y_m").cast("long").alias("y1")
-    )
-    cur = per.join(
-        F.broadcast(yrs), F.col("yr") == F.col("y1")
-    ).select("o_custkey", F.col("rev").alias("rev_cur"), "y1")
-    prv = per.join(
-        F.broadcast(yrs), F.col("yr") == F.col("y1") - 1
-    ).select(F.col("o_custkey").alias("ck_p"), F.col("rev").alias("rev_prev"))
-    j = cur.join(
-        prv, F.col("o_custkey") == F.col("ck_p")
-    ).filter(F.col("rev_prev") > 0)
-    growth = (F.col("rev_cur") - F.col("rev_prev")) / F.col("rev_prev")
-    return (
-        j.select(
-            "o_custkey",
-            F.col("y1").alias("year"),
-            "rev_prev",
-            "rev_cur",
-            quantize(growth, 6).alias("growth_rate"),
-        )
-        .orderBy(F.col("growth_rate").desc(), F.col("o_custkey"))
-        .limit(GROWTH_TOPK)
-    )
-
-
-def parts_single_source_risk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single-sourcing exposure: the share of traded parts whose
-    entire observed supply came from ONE supplier, and the revenue
-    riding on them — the part-level supply-chain-risk read beside
-    `nation_supplier_hhi`'s nation-level concentration (a diversified
-    nation can still hide hundreds of single-sourced parts).
-
-    Scale: one partkey partial agg over a single lineitem scan
-    (distinct-supplier count + revenue per part) folding into a 1-row
-    summary; per-part revenue quantized to the cent grid FIRST so the
-    exposure totals are exact-grid sums.
-    """
-    li = load_table(spark, sf_dir, "lineitem")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    per = li.groupBy("l_partkey").agg(
-        F.countDistinct("l_suppkey").cast("long").alias("n_suppliers"),
-        quantize(F.sum(rev), 2).alias("r"),
-    )
-    single = F.col("n_suppliers") == 1
-    return per.agg(
-        F.count(F.lit(1)).cast("long").alias("n_parts_traded"),
-        F.sum(single.cast("int")).cast("long").alias(
-            "single_source_parts"
-        ),
-        quantize(F.sum("r"), 2).alias("total_revenue"),
-        quantize(F.sum(F.when(single, F.col("r")).otherwise(0.0)), 2)
-        .alias("revenue_exposed"),
-    ).select(
-        "n_parts_traded",
-        "single_source_parts",
-        quantize(
-            F.col("single_source_parts").cast("double")
-            / F.col("n_parts_traded"),
-            6,
-        ).alias("single_source_share"),
-        "total_revenue",
-        "revenue_exposed",
-        quantize(
-            F.col("revenue_exposed") / F.col("total_revenue"), 6
-        ).alias("revenue_share"),
-    )
-
-
-def orders_priority_mix_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Order-priority mix shift by month: each priority's share of
-    monthly order volume plus its delta versus the priority's overall
-    share — the relational twin of `events_type_share_trend` (a mix
-    drifting toward URGENT is an ops signal no total-volume chart
-    shows).
-
-    Scale: (month, priority) partial agg bounded by calendar ×
-    5 priorities; monthly totals and overall shares are
-    months-bounded broadcasts; exact integer counts, single
-    divisions.
-    """
-    o = load_table(spark, sf_dir, "orders")
-    cells = o.groupBy(
-        F.date_trunc("month", F.col("o_orderdate")).alias("month"),
-        "o_orderpriority",
-    ).agg(F.count(F.lit(1)).cast("long").alias("n"))
-    mtot = cells.groupBy("month").agg(
-        F.sum("n").cast("long").alias("m_n")
-    )
-    ptot = cells.groupBy("o_orderpriority").agg(
-        F.sum("n").cast("long").alias("p_n")
-    )
-    gtot = cells.agg(F.sum("n").cast("long").alias("g_n"))
-    share = F.col("n").cast("double") / F.col("m_n")
-    base = F.col("p_n").cast("double") / F.col("g_n")
-    return (
-        cells.join(F.broadcast(mtot), "month")
-        .join(F.broadcast(ptot), "o_orderpriority")
-        .crossJoin(F.broadcast(gtot))
-        .select(
-            "month",
-            "o_orderpriority",
-            "n",
-            quantize(share, 6).alias("share"),
-            quantize(base, 6).alias("overall_share"),
-            quantize(share - base, 6).alias("share_delta"),
-        )
-    )
-
-
-COMMUNITY_MIN_ORDERS = 3  # edge = pair co-purchased in >= this many orders
-
-
-def parts_community(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Community detection over the strong co-purchase graph: parts
-    linked whenever they appear together in ≥ 3 orders, communities =
-    connected components by min-label propagation — the
-    assortment-planning view ("which parts form a bundle ecosystem?")
-    that `parts_copurchase` (pairs) and `parts_pagerank` (centrality)
-    don't give. Emits each part's community id, the community size,
-    and the part's degree in the strong graph.
-
-    Scale: pair volume is order-size-bounded (same self-join shape as
-    `parts_copurchase`); the ≥3-support filter prunes the graph
-    before propagation; components run in O(diameter/hops) rounds of
-    label joins (`operators/dedup.connected_components` — pointer
-    halving, 1-scalar convergence reads); degree and size are
-    key-partial aggs.
-    """
-    from ..operators.dedup import connected_components
-
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a = li.select("l_orderkey", F.col("l_partkey").alias("da"))
-    b = li.select("l_orderkey", F.col("l_partkey").alias("db"))
-    edges = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("da") < F.col("db"))
-        .groupBy("da", "db")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_orders"))
-        .filter(F.col("n_orders") >= COMMUNITY_MIN_ORDERS)
-        .select("da", "db")
-    )
-    cc = connected_components(edges).select(
-        F.col("id").alias("partkey"),
-        F.col("component").cast("long").alias("community"),
-    )
-    deg = (
-        edges.select(F.col("da").alias("partkey"))
-        .unionAll(edges.select(F.col("db").alias("partkey")))
-        .groupBy("partkey")
-        .agg(F.count(F.lit(1)).cast("long").alias("degree"))
-    )
-    size = cc.groupBy("community").agg(
-        F.count(F.lit(1)).cast("long").alias("community_size")
-    )
-    return (
-        cc.join(deg, "partkey")
-        .join(F.broadcast(size), "community")
-        .select("partkey", "community", "community_size", "degree")
-    )
-
-
 QUERIES = {
-    "parts_community": parts_community,
-    "parts_single_source_risk": parts_single_source_risk,
-    "orders_priority_mix_trend": orders_priority_mix_trend,
-    "orders_top_growth_customers": orders_top_growth_customers,
-    "supplier_portfolio_overlap": supplier_portfolio_overlap,
     "q2_min_cost_supplier": q2_min_cost_supplier,
     "q8_market_share": q8_market_share,
     "q11_important_parts": q11_important_parts,
     "q12_late_shipments": q12_late_shipments,
     "q20_excess_shippers": q20_excess_shippers,
     "q21_waiting_supplier": q21_waiting_supplier,
-    "orders_running_total": orders_running_total,
-    "orders_moving_avg": orders_moving_avg,
-    "cube_sales": cube_sales,
     "q15_top_supplier": q15_top_supplier,
     "q16_parts_suppliers": q16_parts_suppliers,
     "q1_pricing_summary": q1_pricing_summary,
@@ -2767,38 +701,6 @@ QUERIES = {
     "q13_customer_distribution": q13_customer_distribution,
     "q17_small_quantity": q17_small_quantity,
     "q22_idle_customers": q22_idle_customers,
-    "topk_per_group": topk_per_group,
-    "rollup_sales": rollup_sales,
-    "pivot_flag_status": pivot_flag_status,
-    "agg_distinct_stats": agg_distinct_stats,
-    "parts_copurchase": parts_copurchase,
-    "parts_assoc_rules": parts_assoc_rules,
-    "lineitem_discount_effect": lineitem_discount_effect,
-    "orders_repeat_cohort": orders_repeat_cohort,
-    "orders_pvm_bridge": orders_pvm_bridge,
-    "customer_segment_migration": customer_segment_migration,
-    "orders_abc_class": orders_abc_class,
-    "orders_yoy_growth": orders_yoy_growth,
-    "orders_seasonal_index": orders_seasonal_index,
-    "nation_trade_balance": nation_trade_balance,
-    "orders_basket_histogram": orders_basket_histogram,
-    "orders_interpurchase": orders_interpurchase,
-    "customer_rfm": customer_rfm,
-    "supplier_scorecard": supplier_scorecard,
-    "supplier_otif": supplier_otif,
-    "warehouse_ref_integrity": warehouse_ref_integrity,
-    "customer_decile_table": customer_decile_table,
-    "orders_abc_xyz_matrix": orders_abc_xyz_matrix,
-    "parts_xyz_class": parts_xyz_class,
-    "orders_pareto": orders_pareto,
-    "orders_backlog_monthly": orders_backlog_monthly,
-    "lineitem_lead_time": lineitem_lead_time,
-    "parts_pagerank": parts_pagerank,
-    "parts_triangles": parts_triangles,
-    "customer_ltv_triangle": customer_ltv_triangle,
-    "nation_supplier_hhi": nation_supplier_hhi,
-    "parts_assortativity": parts_assortativity,
-    "orders_benford": orders_benford,
 }
 
 ORACLE = {
@@ -2904,37 +806,6 @@ ORACLE = {
         WHERE s_acctbal = (
           SELECT min(s_acctbal) FROM pairs m WHERE m.p_partkey = p.p_partkey
         )
-    """,
-    "orders_running_total": """
-        SELECT o_custkey, o_orderkey, o_orderdate,
-               round(sum(o_totalprice) OVER (
-                 PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-               ), 2) AS cum_spend,
-               row_number() OVER (
-                 PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-               ) AS order_seq
-        FROM orders
-    """,
-    "orders_moving_avg": """
-        SELECT o_custkey, o_orderkey,
-               (floor(avg(o_totalprice) OVER (
-                 PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-                 ROWS BETWEEN 2 PRECEDING AND CURRENT ROW
-               ) * 100.0 + 0.5) / 100.0) AS avg3,
-               count(*) OVER (
-                 PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-                 ROWS BETWEEN 2 PRECEDING AND CURRENT ROW
-               ) AS n_in_frame
-        FROM orders
-    """,
-    "cube_sales": """
-        SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
-               coalesce(l_linestatus, 'ALL') AS linestatus,
-               round(sum(l_quantity), 2) AS sum_qty,
-               count(*) AS n_rows
-        FROM lineitem
-        GROUP BY CUBE (l_returnflag, l_linestatus)
     """,
     "q15_top_supplier": """
         WITH revenue AS (
@@ -3133,1191 +1004,4 @@ ORACLE = {
            OR (p_brand = 'Brand#3' AND p_size BETWEEN 20 AND 50
                AND l_quantity BETWEEN 20 AND 40)
     """,
-    "topk_per_group": """
-        SELECT n_name, c_custkey, c_name,
-               round(c_acctbal, 2) AS c_acctbal, rk
-        FROM (
-          SELECT c_custkey, c_name, c_nationkey, c_acctbal,
-                 row_number() OVER (
-                   PARTITION BY c_nationkey
-                   ORDER BY c_acctbal DESC, c_custkey
-                 ) AS rk
-          FROM customer
-        ) ranked
-        JOIN nation ON c_nationkey = n_nationkey
-        WHERE rk <= 3
-    """,
-    "rollup_sales": """
-        SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
-               coalesce(l_linestatus, 'ALL') AS linestatus,
-               round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-               count(*) AS n_items
-        FROM lineitem
-        GROUP BY ROLLUP (l_returnflag, l_linestatus)
-    """,
-    "pivot_flag_status": """
-        SELECT l_returnflag,
-               coalesce(round(sum(CASE WHEN l_linestatus = 'O' THEN l_quantity END), 2), 0.0) AS qty_o,
-               coalesce(round(sum(CASE WHEN l_linestatus = 'F' THEN l_quantity END), 2), 0.0) AS qty_f
-        FROM lineitem
-        GROUP BY l_returnflag
-    """,
-    "agg_distinct_stats": """
-        SELECT event_type,
-               count(DISTINCT user_id) AS n_users,
-               count(*) AS n_events,
-               round(sum(value), 2) AS total_value
-        FROM events
-        GROUP BY event_type
-    """,
 }
-
-ORACLE["parts_copurchase"] = f"""
-    WITH li AS (
-      SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-    ),
-    pairs AS (
-      SELECT a.l_partkey AS pa, b.l_partkey AS pb,
-             CAST(count(*) AS BIGINT) AS n_orders
-      FROM li a JOIN li b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2
-    )
-    SELECT pa, pb, n_orders FROM pairs
-    ORDER BY n_orders DESC, pa, pb LIMIT 20
-"""
-
-ORACLE["customer_rfm"] = """
-    WITH mx AS (SELECT max(o_orderdate) AS maxd FROM orders),
-    per AS (
-      SELECT o_custkey,
-             CAST(min(datediff('day', o_orderdate, maxd)) AS BIGINT)
-               AS recency_days,
-             CAST(count(*) AS BIGINT) AS frequency,
-             round(sum(o_totalprice), 2) AS monetary
-      FROM orders CROSS JOIN mx
-      GROUP BY 1
-    ),
-    cuts AS (
-      -- 1e-9-quantized comparison cuts: mirrors the Spark side's r11
-      -- float-boundary fix (the monetary cuts interpolate float sums
-      -- that live on the cent grid — the ppl-buckets flip class)
-      SELECT (floor(quantile_cont(recency_days, 0.25)
-                * 1000000000.0 + 0.5) / 1000000000.0) AS r1,
-             (floor(quantile_cont(recency_days, 0.5)
-                * 1000000000.0 + 0.5) / 1000000000.0) AS r2,
-             (floor(quantile_cont(recency_days, 0.75)
-                * 1000000000.0 + 0.5) / 1000000000.0) AS r3,
-             (floor(quantile_cont(frequency, 0.25)
-                * 1000000000.0 + 0.5) / 1000000000.0) AS f1,
-             (floor(quantile_cont(frequency, 0.5)
-                * 1000000000.0 + 0.5) / 1000000000.0) AS f2,
-             (floor(quantile_cont(frequency, 0.75)
-                * 1000000000.0 + 0.5) / 1000000000.0) AS f3,
-             (floor(quantile_cont(monetary, 0.25)
-                * 1000000000.0 + 0.5) / 1000000000.0) AS m1,
-             (floor(quantile_cont(monetary, 0.5)
-                * 1000000000.0 + 0.5) / 1000000000.0) AS m2,
-             (floor(quantile_cont(monetary, 0.75)
-                * 1000000000.0 + 0.5) / 1000000000.0) AS m3
-      FROM per
-    )
-    SELECT o_custkey, recency_days, frequency, monetary,
-           CAST(5 - (CASE WHEN recency_days <= r1 THEN 1
-                          WHEN recency_days <= r2 THEN 2
-                          WHEN recency_days <= r3 THEN 3
-                          ELSE 4 END) AS BIGINT) AS r_score,
-           CAST(CASE WHEN frequency <= f1 THEN 1
-                     WHEN frequency <= f2 THEN 2
-                     WHEN frequency <= f3 THEN 3
-                     ELSE 4 END AS BIGINT) AS f_score,
-           CAST(CASE WHEN monetary <= m1 THEN 1
-                     WHEN monetary <= m2 THEN 2
-                     WHEN monetary <= m3 THEN 3
-                     ELSE 4 END AS BIGINT) AS m_score
-    FROM per CROSS JOIN cuts
-"""
-
-ORACLE["supplier_scorecard"] = """
-    WITH per AS (
-      SELECT l_suppkey,
-             CAST(count(*) AS BIGINT) AS n_lines,
-             round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-             CAST(sum(CASE WHEN l_returnflag = 'R'
-                           THEN 1 ELSE 0 END) AS BIGINT) AS n_returned,
-             CAST(sum(CASE WHEN l_linestatus = 'O'
-                           THEN 1 ELSE 0 END) AS BIGINT) AS n_open,
-             CAST(sum(CAST(round(l_discount * 100) AS BIGINT))
-               AS BIGINT) AS disc_cents
-      FROM lineitem GROUP BY 1
-    )
-    SELECT l_suppkey, n_lines, revenue, n_returned, n_open,
-           round(CAST(n_returned AS DOUBLE) / n_lines, 4) AS return_rate,
-           round(CAST(n_open AS DOUBLE) / n_lines, 4) AS open_share,
-           round(CAST(disc_cents AS DOUBLE)
-                 / (CAST(n_lines AS DOUBLE) * 100.0), 4) AS mean_discount
-    FROM per
-"""
-
-ORACLE["orders_pareto"] = """
-    WITH per AS (
-      -- spend on the cent grid + 1e-9-quantized cuts: mirrors the
-      -- Spark side's r11 float-boundary fix
-      SELECT o_custkey,
-             (floor(sum(o_totalprice) * 100.0 + 0.5) / 100.0) AS spend
-      FROM orders GROUP BY 1
-    ),
-    cuts AS (
-      SELECT (floor(quantile_cont(spend, 0.1) * 1000000000.0 + 0.5)
-                / 1000000000.0) AS c1,
-             (floor(quantile_cont(spend, 0.2) * 1000000000.0 + 0.5)
-                / 1000000000.0) AS c2,
-             (floor(quantile_cont(spend, 0.3) * 1000000000.0 + 0.5)
-                / 1000000000.0) AS c3,
-             (floor(quantile_cont(spend, 0.4) * 1000000000.0 + 0.5)
-                / 1000000000.0) AS c4,
-             (floor(quantile_cont(spend, 0.5) * 1000000000.0 + 0.5)
-                / 1000000000.0) AS c5,
-             (floor(quantile_cont(spend, 0.6) * 1000000000.0 + 0.5)
-                / 1000000000.0) AS c6,
-             (floor(quantile_cont(spend, 0.7) * 1000000000.0 + 0.5)
-                / 1000000000.0) AS c7,
-             (floor(quantile_cont(spend, 0.8) * 1000000000.0 + 0.5)
-                / 1000000000.0) AS c8,
-             (floor(quantile_cont(spend, 0.9) * 1000000000.0 + 0.5)
-                / 1000000000.0) AS c9
-      FROM per
-    ),
-    binned AS (
-      SELECT per.spend,
-             CAST(CASE
-               WHEN spend <= c1 THEN 1
-               WHEN spend <= c2 THEN 2
-               WHEN spend <= c3 THEN 3
-               WHEN spend <= c4 THEN 4
-               WHEN spend <= c5 THEN 5
-               WHEN spend <= c6 THEN 6
-               WHEN spend <= c7 THEN 7
-               WHEN spend <= c8 THEN 8
-               WHEN spend <= c9 THEN 9
-               ELSE 10 END AS BIGINT) AS decile
-      FROM per, cuts
-    ),
-    tot AS (SELECT sum(spend) AS total_spend FROM per)
-    SELECT decile,
-           CAST(count(*) AS BIGINT) AS n_customers,
-           round(sum(spend), 2) AS decile_revenue,
-           round(sum(spend) / any_value(tot.total_spend), 6)
-             AS revenue_share
-    FROM binned, tot
-    GROUP BY 1
-"""
-
-ORACLE["orders_backlog_monthly"] = """
-    WITH iv AS (
-      SELECT o_orderkey, o_orderdate AS start_date, e.end_date
-      FROM orders
-      JOIN (
-        SELECT l_orderkey, max(l_shipdate) AS end_date
-        FROM lineitem GROUP BY 1
-      ) e ON o_orderkey = e.l_orderkey
-    ),
-    rng AS (
-      SELECT date_trunc('month', min(start_date)) AS lo,
-             date_trunc('month', max(end_date)) AS hi
-      FROM iv
-    ),
-    months AS (
-      SELECT unnest(generate_series(lo, hi, INTERVAL 1 MONTH)) AS month
-      FROM rng
-    ),
-    opened AS (
-      SELECT m.month, CAST(count(*) AS BIGINT) AS n_open
-      FROM months m JOIN iv
-        ON iv.start_date <= m.month AND iv.end_date > m.month
-      GROUP BY 1
-    ),
-    started AS (
-      SELECT date_trunc('month', start_date) AS month,
-             CAST(count(*) AS BIGINT) AS n_placed
-      FROM iv GROUP BY 1
-    ),
-    done AS (
-      SELECT date_trunc('month', end_date) AS month,
-             CAST(count(*) AS BIGINT) AS n_completed
-      FROM iv GROUP BY 1
-    )
-    SELECT months.month,
-           CAST(coalesce(opened.n_open, 0) AS BIGINT) AS n_open,
-           CAST(coalesce(started.n_placed, 0) AS BIGINT) AS n_placed,
-           CAST(coalesce(done.n_completed, 0) AS BIGINT) AS n_completed
-    FROM months
-    LEFT JOIN opened ON months.month = opened.month
-    LEFT JOIN started ON months.month = started.month
-    LEFT JOIN done ON months.month = done.month
-"""
-
-ORACLE["lineitem_lead_time"] = f"""
-    WITH lead AS (
-      SELECT l_returnflag,
-             CAST(date_diff('day', o_orderdate, l_shipdate) AS BIGINT)
-               AS lead_days
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    )
-    SELECT l_returnflag,
-           CAST(count(*) AS BIGINT) AS n_lines,
-           {sql_quantize('CAST(sum(lead_days) AS DOUBLE) / count(*)', 4)}
-             AS mean_days,
-           {sql_quantize('quantile_cont(lead_days, 0.5)', 4)} AS p50_days,
-           {sql_quantize('quantile_cont(lead_days, 0.9)', 4)} AS p90_days,
-           CAST(max(lead_days) AS BIGINT) AS max_days
-    FROM lead GROUP BY 1
-"""
-
-
-def _pagerank_oracle() -> str:
-    from ..functions.text import sql_quantize as _sq
-
-    q9 = lambda e: _sq(e, 9)  # noqa: E731
-    parts = [
-        """li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)""",
-        """edges AS (
-      SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-      FROM li a JOIN li b USING (l_orderkey)
-      WHERE a.l_partkey <> b.l_partkey
-    )""",
-        """deg AS (SELECT src AS part, count(*) AS deg FROM edges GROUP BY 1)""",
-        """tot AS (SELECT count(*) AS n FROM deg)""",
-        f"""r0 AS (SELECT part, deg, {q9('1.0 / tot.n')} AS r
-      FROM deg, tot)""",
-    ]
-    prev = "r0"
-    for i in range(1, PR_ITERS + 1):
-        parts.append(
-            f"""c{i} AS (
-      SELECT e.dst AS part, sum(p.r / p.deg) AS c
-      FROM edges e JOIN {prev} p ON p.part = e.src
-      GROUP BY 1
-    )"""
-        )
-        parts.append(
-            f"""r{i} AS (
-      SELECT d.part, d.deg,
-             {q9(f'(1.0 - {PR_DAMP}) / tot.n + {PR_DAMP} * c{i}.c')} AS r
-      FROM deg d JOIN c{i} ON d.part = c{i}.part, tot
-    )"""
-        )
-        prev = f"r{i}"
-    return (
-        "WITH "
-        + ",\n    ".join(parts)
-        + f"""
-    SELECT part, CAST(deg AS BIGINT) AS degree,
-           {_sq('r', 8)} AS rank
-    FROM {prev}
-"""
-    )
-
-
-ORACLE["parts_pagerank"] = _pagerank_oracle()
-
-ORACLE["parts_triangles"] = f"""
-    WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    edges AS (
-      SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-      FROM li a JOIN li b USING (l_orderkey)
-      WHERE a.l_partkey < b.l_partkey
-    ),
-    bidir AS (
-      SELECT u, v FROM edges
-      UNION ALL SELECT v AS u, u AS v FROM edges
-    ),
-    deg AS (SELECT u, count(*) AS deg FROM bidir GROUP BY 1),
-    wedges AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_nodes,
-             CAST(sum(deg * (deg - 1) / 2) AS BIGINT) AS n_wedges
-      FROM deg
-    ),
-    ne AS (SELECT CAST(count(*) AS BIGINT) AS n_edges FROM edges),
-    tri AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_triangles
-      FROM edges ab
-      JOIN edges bc ON ab.v = bc.u
-      WHERE EXISTS (
-        SELECT 1 FROM edges ac
-        WHERE ac.u = ab.u AND ac.v = bc.v
-      )
-    )
-    SELECT wedges.n_nodes, ne.n_edges, wedges.n_wedges,
-           tri.n_triangles,
-           {sql_quantize(
-               '3.0 * CAST(tri.n_triangles AS DOUBLE) / wedges.n_wedges',
-               6)} AS global_clustering
-    FROM wedges, ne, tri
-"""
-
-ORACLE["customer_ltv_triangle"] = """
-    WITH o AS (
-      SELECT o_custkey, date_trunc('month', o_orderdate) AS month,
-             o_totalprice
-      FROM orders
-    ),
-    first AS (
-      SELECT o_custkey, min(month) AS cohort_month FROM o GROUP BY 1
-    ),
-    tri AS (
-      SELECT first.cohort_month,
-             CAST((extract(year FROM o.month)
-                   - extract(year FROM first.cohort_month)) * 12
-                  + (extract(month FROM o.month)
-                     - extract(month FROM first.cohort_month))
-                  AS BIGINT) AS month_offset,
-             CAST(count(*) AS BIGINT) AS n_orders,
-             round(sum(o.o_totalprice), 2) AS cohort_spend
-      FROM o JOIN first USING (o_custkey)
-      GROUP BY 1, 2
-    ),
-    sizes AS (
-      SELECT cohort_month, CAST(count(*) AS BIGINT) AS cohort_size
-      FROM first GROUP BY 1
-    )
-    SELECT tri.cohort_month, tri.month_offset, sizes.cohort_size,
-           tri.n_orders, tri.cohort_spend,
-           floor(tri.cohort_spend / sizes.cohort_size * 10000.0 + 0.5)
-             / 10000.0 AS spend_per_customer
-    FROM tri JOIN sizes USING (cohort_month)
-"""
-
-ORACLE["nation_supplier_hhi"] = f"""
-    WITH per AS (
-      SELECT l_suppkey,
-             floor(sum(l_extendedprice * (1 - l_discount)) * 100.0
-                   + 0.5) / 100.0 AS r
-      FROM lineitem GROUP BY 1
-    ),
-    pj AS (
-      SELECT per.r, supplier.s_nationkey
-      FROM per JOIN supplier ON per.l_suppkey = supplier.s_suppkey
-    ),
-    tot AS (
-      SELECT s_nationkey, sum(r) AS nation_rev,
-             CAST(count(*) AS BIGINT) AS n_suppliers
-      FROM pj GROUP BY 1
-    ),
-    shares AS (
-      SELECT pj.s_nationkey, tot.n_suppliers,
-             pj.r / tot.nation_rev AS share
-      FROM pj JOIN tot USING (s_nationkey)
-    )
-    SELECT s_nationkey,
-           any_value(n_suppliers) AS n_suppliers,
-           {sql_quantize('10000.0 * sum(share * share)', 2)} AS hhi,
-           {sql_quantize('max(share)', 6)} AS top_share
-    FROM shares GROUP BY 1
-"""
-
-ORACLE["parts_assortativity"] = f"""
-    WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    edges AS (
-      SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-      FROM li a JOIN li b USING (l_orderkey)
-      WHERE a.l_partkey <> b.l_partkey
-    ),
-    deg AS (SELECT u, count(*) AS d FROM edges GROUP BY 1),
-    pairs AS (
-      SELECT da.d AS du, db.d AS dv
-      FROM edges
-      JOIN deg da ON da.u = edges.u
-      JOIN deg db ON db.u = edges.v
-    )
-    SELECT CAST(count(*) AS BIGINT) AS n_directed_edges,
-           {sql_quantize(
-               '(CAST(count(*) AS DOUBLE)'
-               ' * CAST(sum(du * dv) AS DOUBLE)'
-               ' - CAST(sum(du) AS DOUBLE) * CAST(sum(dv) AS DOUBLE))'
-               ' / sqrt((CAST(count(*) AS DOUBLE)'
-               ' * CAST(sum(du * du) AS DOUBLE)'
-               ' - CAST(sum(du) AS DOUBLE) * CAST(sum(du) AS DOUBLE))'
-               ' * (CAST(count(*) AS DOUBLE)'
-               ' * CAST(sum(dv * dv) AS DOUBLE)'
-               ' - CAST(sum(dv) AS DOUBLE)'
-               ' * CAST(sum(dv) AS DOUBLE)))', 4)}
-             AS assortativity
-    FROM pairs
-"""
-
-ORACLE["orders_benford"] = f"""
-    WITH per AS (
-      SELECT CAST(substr(CAST(CAST(round(o_totalprice * 100)
-                   AS BIGINT) AS VARCHAR), 1, 1) AS BIGINT) AS digit,
-             CAST(count(*) AS BIGINT) AS n_orders
-      FROM orders GROUP BY 1
-    ),
-    tot AS (SELECT sum(n_orders) AS n_total FROM per),
-    j AS (
-      SELECT per.digit, per.n_orders,
-             CAST(per.n_orders AS DOUBLE) / tot.n_total AS obs,
-             log10(1 + 1 / CAST(per.digit AS DOUBLE)) AS expd,
-             tot.n_total
-      FROM per, tot
-    ),
-    chi AS (
-      SELECT {sql_quantize(
-          'sum((obs - expd) * (obs - expd) / expd * n_total)', 4)}
-               AS chi2
-      FROM j
-    )
-    SELECT j.digit, j.n_orders,
-           {sql_quantize('j.obs', 6)} AS obs_share,
-           {sql_quantize('j.expd', 6)} AS benford_share,
-           chi.chi2
-    FROM j, chi
-"""
-
-ORACLE["parts_assoc_rules"] = f"""
-    WITH li AS (
-      SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-    ),
-    n_orders AS (
-      SELECT CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders FROM li
-    ),
-    item AS (
-      SELECT l_partkey, CAST(count(*) AS BIGINT) AS n_item
-      FROM li GROUP BY 1
-    ),
-    pairs AS (
-      SELECT a.l_partkey AS pa, b.l_partkey AS pb,
-             CAST(count(*) AS BIGINT) AS n_ab
-      FROM li a JOIN li b USING (l_orderkey)
-      WHERE a.l_partkey < b.l_partkey
-      GROUP BY 1, 2
-      HAVING count(*) >= {ASSOC_MIN_PAIR}
-    )
-    SELECT p.pa, p.pb, p.n_ab,
-           ia.n_item AS n_a, ib.n_item AS n_b,
-           {sql_quantize('CAST(p.n_ab AS DOUBLE) / o.n_orders', 6)}
-             AS support,
-           {sql_quantize('CAST(p.n_ab AS DOUBLE) / ia.n_item', 6)}
-             AS conf_a_to_b,
-           {sql_quantize('CAST(p.n_ab AS DOUBLE) / ib.n_item', 6)}
-             AS conf_b_to_a,
-           {sql_quantize(
-               'CAST(p.n_ab AS DOUBLE) * o.n_orders'
-               ' / (CAST(ia.n_item AS DOUBLE) * ib.n_item)', 4)} AS lift
-    FROM pairs p
-    JOIN item ia ON ia.l_partkey = p.pa
-    JOIN item ib ON ib.l_partkey = p.pb
-    CROSS JOIN n_orders o
-    ORDER BY lift DESC, p.pa, p.pb
-    LIMIT {ASSOC_TOPK}
-"""
-
-ORACLE["lineitem_discount_effect"] = f"""
-    WITH g AS (
-      SELECT CAST(round(l_discount * 100) AS BIGINT) AS x,
-             CAST(l_quantity AS BIGINT) AS y
-      FROM lineitem
-    ),
-    s AS (
-      SELECT CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(x) AS DOUBLE) AS sx,
-             CAST(sum(y) AS DOUBLE) AS sy,
-             CAST(sum(x * y) AS DOUBLE) AS sxy,
-             CAST(sum(x * x) AS DOUBLE) AS sxx,
-             CAST(sum(y * y) AS DOUBLE) AS syy
-      FROM g
-    )
-    SELECT n AS n_rows,
-           {sql_quantize('sy / n', 4)} AS mean_qty,
-           {sql_quantize('sx / n', 4)} AS mean_disc_points,
-           {sql_quantize(
-               '(n * sxy - sx * sy) / (n * sxx - sx * sx)', 6)}
-             AS slope_per_point,
-           {sql_quantize(
-               '(sy * sxx - sx * sxy) / (n * sxx - sx * sx)', 4)}
-             AS intercept_qty,
-           {sql_quantize(
-               '(n * sxy - sx * sy) * (n * sxy - sx * sy)'
-               ' / ((n * sxx - sx * sx) * (n * syy - sy * sy))', 6)} AS r2
-    FROM s
-"""
-
-ORACLE["orders_repeat_cohort"] = f"""
-    WITH act AS (
-      SELECT DISTINCT date_trunc('month', o_orderdate) AS month,
-             o_custkey
-      FROM orders
-    ),
-    first AS (
-      SELECT o_custkey, min(month) AS cohort_month FROM act GROUP BY 1
-    ),
-    tri AS (
-      SELECT f.cohort_month,
-             CAST(datediff('month', f.cohort_month, a.month) AS BIGINT)
-               AS month_offset,
-             CAST(count(*) AS BIGINT) AS n_active
-      FROM act a JOIN first f USING (o_custkey)
-      GROUP BY 1, 2
-    ),
-    sizes AS (
-      SELECT cohort_month, CAST(count(*) AS BIGINT) AS cohort_size
-      FROM first GROUP BY 1
-    )
-    SELECT t.cohort_month, t.month_offset, s.cohort_size, t.n_active,
-           {sql_quantize(
-               'CAST(t.n_active AS DOUBLE) / s.cohort_size', 6)}
-             AS repeat_rate
-    FROM tri t JOIN sizes s USING (cohort_month)
-"""
-
-ORACLE["orders_pvm_bridge"] = f"""
-    WITH li AS (
-      SELECT l_partkey,
-             year(l_shipdate) AS yr,
-             CAST(round(l_extendedprice * 100) AS BIGINT) AS rev_c,
-             CAST(l_quantity AS BIGINT) AS qty
-      FROM lineitem
-      WHERE year(l_shipdate) IN ({PVM_Y1}, {PVM_Y2})
-    ),
-    per AS (
-      SELECT p.p_brand,
-             CAST(sum(CASE WHEN yr = {PVM_Y1} THEN rev_c ELSE 0 END)
-               AS DOUBLE) AS r1,
-             CAST(sum(CASE WHEN yr = {PVM_Y2} THEN rev_c ELSE 0 END)
-               AS DOUBLE) AS r2,
-             CAST(sum(CASE WHEN yr = {PVM_Y1} THEN qty ELSE 0 END)
-               AS DOUBLE) AS q1,
-             CAST(sum(CASE WHEN yr = {PVM_Y2} THEN qty ELSE 0 END)
-               AS DOUBLE) AS q2
-      FROM li JOIN part p ON p.p_partkey = li.l_partkey
-      GROUP BY 1
-      HAVING sum(CASE WHEN yr = {PVM_Y1} THEN qty ELSE 0 END) > 0
-         AND sum(CASE WHEN yr = {PVM_Y2} THEN qty ELSE 0 END) > 0
-    )
-    SELECT p_brand,
-           {sql_quantize('r1 / 100.0', 2)} AS rev_y1,
-           {sql_quantize('r2 / 100.0', 2)} AS rev_y2,
-           {sql_quantize('(r2 - r1) / 100.0', 2)} AS delta_rev,
-           {sql_quantize('(q2 - q1) * (r1 / q1) / 100.0', 2)}
-             AS volume_effect,
-           {sql_quantize('(r2 / q2 - r1 / q1) * q2 / 100.0', 2)}
-             AS price_effect
-    FROM per
-"""
-
-ORACLE["customer_segment_migration"] = f"""
-    WITH o AS (
-      SELECT o_custkey, year(o_orderdate) AS yr,
-             CAST(round(o_totalprice * 100) AS BIGINT) AS spend_c
-      FROM orders
-    ),
-    h1 AS (
-      SELECT o_custkey, CAST(sum(spend_c) AS BIGINT) AS s
-      FROM o WHERE yr < {SEG_SPLIT_YEAR} GROUP BY 1
-    ),
-    h2 AS (
-      SELECT o_custkey, CAST(sum(spend_c) AS BIGINT) AS s
-      FROM o WHERE yr >= {SEG_SPLIT_YEAR} GROUP BY 1
-    ),
-    c1 AS (
-      SELECT quantile_cont(s, 0.25) AS a1, quantile_cont(s, 0.5) AS a2,
-             quantile_cont(s, 0.75) AS a3
-      FROM h1
-    ),
-    c2 AS (
-      SELECT quantile_cont(s, 0.25) AS b1, quantile_cont(s, 0.5) AS b2,
-             quantile_cont(s, 0.75) AS b3
-      FROM h2
-    ),
-    s1 AS (
-      SELECT o_custkey,
-             CAST(CASE WHEN s <= a1 THEN 1 WHEN s <= a2 THEN 2
-                       WHEN s <= a3 THEN 3 ELSE 4 END AS BIGINT) AS seg_a
-      FROM h1, c1
-    ),
-    s2 AS (
-      SELECT o_custkey,
-             CAST(CASE WHEN s <= b1 THEN 1 WHEN s <= b2 THEN 2
-                       WHEN s <= b3 THEN 3 ELSE 4 END AS BIGINT) AS seg_b
-      FROM h2, c2
-    ),
-    m AS (
-      SELECT seg_a, seg_b, CAST(count(*) AS BIGINT) AS n_customers
-      FROM s1 JOIN s2 USING (o_custkey)
-      GROUP BY 1, 2
-    ),
-    tot AS (SELECT seg_a, sum(n_customers) AS row_n FROM m GROUP BY 1)
-    SELECT m.seg_a AS segment_first_half,
-           m.seg_b AS segment_second_half,
-           m.n_customers,
-           {sql_quantize(
-               'CAST(m.n_customers AS DOUBLE) / tot.row_n', 6)}
-             AS row_share
-    FROM m JOIN tot USING (seg_a)
-"""
-
-ORACLE["orders_abc_class"] = f"""
-    WITH per AS (
-      SELECT l_partkey,
-             CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
-               AS BIGINT) AS rev
-      FROM lineitem GROUP BY 1
-    ),
-    tot AS (SELECT CAST(sum(rev) AS BIGINT) AS total_rev FROM per),
-    cum AS (
-      SELECT a.l_partkey AS pk, a.rev AS rv,
-             CAST(sum(b.rev) AS BIGINT) AS cum_rev
-      FROM per a JOIN per b
-        ON (b.rev > a.rev)
-        OR (b.rev = a.rev AND b.l_partkey <= a.l_partkey)
-      GROUP BY 1, 2
-    )
-    SELECT cum.pk AS l_partkey,
-           {sql_quantize('cum.rv / 100.0', 2)} AS revenue,
-           {sql_quantize(
-               'CAST(cum.cum_rev AS DOUBLE) / tot.total_rev', 6)}
-             AS cum_share,
-           CASE WHEN {sql_quantize(
-                   'CAST(cum.cum_rev AS DOUBLE) / tot.total_rev', 6)}
-                  <= {ABC_A_CUT} THEN 'A'
-                WHEN {sql_quantize(
-                   'CAST(cum.cum_rev AS DOUBLE) / tot.total_rev', 6)}
-                  <= {ABC_B_CUT} THEN 'B'
-                ELSE 'C' END AS abc_class
-    FROM cum, tot
-"""
-
-ORACLE["parts_xyz_class"] = f"""
-    WITH pm AS (
-      SELECT l_partkey, date_trunc('month', o_orderdate) AS month,
-             CAST(sum(CAST(round(l_quantity) AS BIGINT)) AS BIGINT)
-               AS q
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      GROUP BY 1, 2
-    ),
-    span AS (
-      SELECT CAST(count(DISTINCT month) AS BIGINT) AS n_months FROM pm
-    ),
-    per AS (
-      SELECT l_partkey,
-             CAST(sum(q) AS BIGINT) AS sq,
-             sum(q * q) AS sqq
-      FROM pm GROUP BY 1
-    ),
-    j AS (
-      SELECT p.l_partkey, s.n_months, p.sq,
-             CAST(p.sq AS DOUBLE) / s.n_months AS mean,
-             (CAST(p.sqq AS DOUBLE)
-              - CAST(p.sq AS DOUBLE)
-                * (CAST(p.sq AS DOUBLE) / s.n_months))
-               / (s.n_months - 1.0) AS var0
-      FROM per p CROSS JOIN span s
-    ),
-    jc AS (
-      SELECT *, greatest(var0, 0.0) AS var FROM j
-    ),
-    c AS (
-      SELECT *, sqrt(var) / mean AS cv FROM jc
-    )
-    SELECT l_partkey, n_months, sq AS total_qty,
-           CASE WHEN n_months > 1 AND sq > 0
-             THEN {sql_quantize('cv', 4)} END AS cv,
-           CASE WHEN n_months > 1 AND sq > 0 THEN
-             CASE WHEN cv < 0.5 THEN 'X'
-                  WHEN cv < 1.0 THEN 'Y' ELSE 'Z' END
-           END AS xyz_class
-    FROM c
-"""
-
-ORACLE["orders_abc_xyz_matrix"] = f"""
-    WITH a AS ({ORACLE['orders_abc_class']}),
-    x AS ({ORACLE['parts_xyz_class']})
-    SELECT a.abc_class, x.xyz_class,
-           CAST(count(*) AS BIGINT) AS n_parts,
-           {sql_quantize('sum(a.revenue)', 2)} AS cell_revenue
-    FROM a JOIN x USING (l_partkey)
-    GROUP BY 1, 2
-"""
-
-ORACLE["customer_decile_table"] = f"""
-    WITH per AS (
-      SELECT o_custkey,
-             CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-               AS BIGINT) AS spend_c
-      FROM orders GROUP BY 1
-    ),
-    cuts AS (
-      SELECT quantile_cont(spend_c,
-               [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS cuts,
-             CAST(sum(spend_c) AS BIGINT) AS total_c
-      FROM per
-    ),
-    j AS (
-      SELECT p.spend_c, c.total_c,
-             1 + len(list_filter(c.cuts,
-                 x -> CAST(p.spend_c AS DOUBLE) > x)) AS decile
-      FROM per p CROSS JOIN cuts c
-    )
-    SELECT CAST(decile AS BIGINT) AS decile,
-           CAST(count(*) AS BIGINT) AS n_customers,
-           {sql_quantize('min(spend_c) / 100.0', 2)} AS min_spend,
-           {sql_quantize('max(spend_c) / 100.0', 2)} AS max_spend,
-           {sql_quantize('sum(spend_c) / 100.0', 2)} AS decile_revenue,
-           {sql_quantize(
-               'CAST(sum(spend_c) AS DOUBLE) / any_value(total_c)', 6)}
-             AS revenue_share
-    FROM j GROUP BY 1
-"""
-
-ORACLE["warehouse_ref_integrity"] = """
-    SELECT fk_edge, n_orphans, n_orphans = 0 AS clean FROM (
-    SELECT 'lineitem_without_order' AS fk_edge, CAST((SELECT count(*) FROM lineitem WHERE l_orderkey NOT IN (SELECT o_orderkey FROM orders)) AS BIGINT) AS n_orphans UNION ALL SELECT 'order_without_customer' AS fk_edge, CAST((SELECT count(*) FROM orders WHERE o_custkey NOT IN (SELECT c_custkey FROM customer)) AS BIGINT) AS n_orphans UNION ALL SELECT 'customer_without_nation' AS fk_edge, CAST((SELECT count(*) FROM customer WHERE c_nationkey NOT IN (SELECT n_nationkey FROM nation)) AS BIGINT) AS n_orphans UNION ALL SELECT 'supplier_without_nation' AS fk_edge, CAST((SELECT count(*) FROM supplier WHERE s_nationkey NOT IN (SELECT n_nationkey FROM nation)) AS BIGINT) AS n_orphans UNION ALL SELECT 'nation_without_region' AS fk_edge, CAST((SELECT count(*) FROM nation WHERE n_regionkey NOT IN (SELECT r_regionkey FROM region)) AS BIGINT) AS n_orphans UNION ALL SELECT 'part_never_ordered' AS fk_edge, CAST((SELECT count(*) FROM part WHERE p_partkey NOT IN (SELECT l_partkey FROM lineitem)) AS BIGINT) AS n_orphans
-    )
-"""
-
-ORACLE["supplier_otif"] = f"""
-    WITH per AS (
-      SELECT l_suppkey,
-             CAST(count(*) AS BIGINT) AS n_lines,
-             CAST(sum(CASE WHEN l_shipdate <=
-                        o_orderdate + INTERVAL 30 DAY
-                      THEN 1 ELSE 0 END) AS BIGINT) AS n_on_time
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      GROUP BY 1
-    ),
-    w AS (
-      SELECT *,
-             CAST(n_on_time AS DOUBLE) / n_lines AS p,
-             CAST(n_lines AS DOUBLE) AS n
-      FROM per
-    ),
-    w2 AS (
-      SELECT *,
-             (p + 1.96 * 1.96 / (2.0 * n)) / (1.0 + 1.96 * 1.96 / n)
-               AS center,
-             1.96 * sqrt(p * (1.0 - p) / n
-                 + 1.96 * 1.96 / (4.0 * n * n))
-               / (1.0 + 1.96 * 1.96 / n) AS half
-      FROM w
-    )
-    SELECT l_suppkey, n_lines, n_on_time,
-           {sql_quantize('p', 6)} AS otif_rate,
-           {sql_quantize('center - half', 6)} AS otif_wilson_lo
-    FROM w2
-"""
-
-ORACLE["orders_seasonal_index"] = f"""
-    WITH ym AS (
-      SELECT CAST(year(o_orderdate) AS BIGINT) AS yr,
-             CAST(month(o_orderdate) AS BIGINT) AS mth,
-             CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-               AS BIGINT) AS rev
-      FROM orders GROUP BY 1, 2
-    ),
-    yearly AS (
-      SELECT yr, CAST(sum(rev) AS BIGINT) AS year_rev,
-             CAST(count(*) AS BIGINT) AS n_months
-      FROM ym GROUP BY 1
-    ),
-    j AS (
-      SELECT m.mth, m.rev,
-             CAST(m.rev AS DOUBLE) * y.n_months / y.year_rev AS ratio
-      FROM ym m JOIN yearly y USING (yr)
-    )
-    SELECT mth AS month,
-           CAST(count(*) AS BIGINT) AS n_years,
-           {sql_quantize('avg(ratio)', 6)} AS seasonal_index,
-           {sql_quantize('avg(rev / 100.0)', 2)} AS avg_revenue
-    FROM j GROUP BY 1
-"""
-
-ORACLE["orders_yoy_growth"] = f"""
-    WITH m AS (
-      SELECT date_trunc('month', o_orderdate) AS month,
-             CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-               AS BIGINT) AS rev,
-             CAST(count(*) AS BIGINT) AS n_orders
-      FROM orders GROUP BY 1
-    )
-    SELECT a.month, a.n_orders,
-           {sql_quantize('a.rev / 100.0', 2)} AS revenue,
-           {sql_quantize('b.rev / 100.0', 2)} AS revenue_prior_year,
-           {sql_quantize(
-               'CAST(a.rev - b.rev AS DOUBLE) / b.rev', 6)} AS yoy_growth
-    FROM m a
-    LEFT JOIN m b ON a.month = b.month + INTERVAL 12 MONTHS
-"""
-
-ORACLE["nation_trade_balance"] = f"""
-    WITH flows AS (
-      SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
-             CAST(round(l.l_extendedprice * 100) AS BIGINT) AS rev_c
-      FROM lineitem l
-      JOIN supplier s ON s.s_suppkey = l.l_suppkey
-      JOIN nation sn ON sn.n_nationkey = s.s_nationkey
-      JOIN orders o ON o.o_orderkey = l.l_orderkey
-      JOIN customer c ON c.c_custkey = o.o_custkey
-      JOIN nation cn ON cn.n_nationkey = c.c_nationkey
-      WHERE sn.n_name <> cn.n_name
-    ),
-    exp AS (
-      SELECT supp_nation AS nation, CAST(sum(rev_c) AS DOUBLE) AS exp_c
-      FROM flows GROUP BY 1
-    ),
-    imp AS (
-      SELECT cust_nation AS nation, CAST(sum(rev_c) AS DOUBLE) AS imp_c
-      FROM flows GROUP BY 1
-    )
-    SELECT coalesce(exp.nation, imp.nation) AS nation,
-           {sql_quantize('coalesce(exp.exp_c, 0.0) / 100.0', 2)}
-             AS exports,
-           {sql_quantize('coalesce(imp.imp_c, 0.0) / 100.0', 2)}
-             AS imports,
-           {sql_quantize(
-               '(coalesce(exp.exp_c, 0.0) - coalesce(imp.imp_c, 0.0))'
-               ' / 100.0', 2)} AS net_balance
-    FROM exp FULL JOIN imp ON imp.nation = exp.nation
-"""
-
-ORACLE["orders_basket_histogram"] = f"""
-    WITH li AS (
-      SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-    ),
-    per AS (
-      SELECT l_orderkey, CAST(count(*) AS BIGINT) AS k_items
-      FROM li GROUP BY 1
-    ),
-    hist AS (
-      SELECT k_items, CAST(count(*) AS BIGINT) AS n_orders
-      FROM per GROUP BY 1
-    ),
-    tot AS (SELECT CAST(sum(n_orders) AS BIGINT) AS n_total FROM hist)
-    SELECT hist.k_items, hist.n_orders,
-           {sql_quantize(
-               'CAST(hist.n_orders AS DOUBLE) / tot.n_total', 6)}
-             AS share,
-           CAST(hist.n_orders * hist.k_items * (hist.k_items - 1) / 2
-             AS BIGINT) AS pair_volume
-    FROM hist, tot
-"""
-
-ORACLE["orders_interpurchase"] = f"""
-    WITH seq AS (
-      SELECT o_custkey, o_orderdate,
-             lag(o_orderdate) OVER (
-               PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-             ) AS prev_d
-      FROM orders
-    ),
-    gaps AS (
-      SELECT CAST(datediff('day', prev_d, o_orderdate) AS BIGINT)
-               AS gap_days
-      FROM seq WHERE prev_d IS NOT NULL
-    ),
-    per AS (
-      SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_orders
-      FROM orders GROUP BY 1
-    ),
-    cust AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_customers,
-             CAST(sum(CASE WHEN n_orders = 1 THEN 1 ELSE 0 END)
-               AS BIGINT) AS one_order_customers
-      FROM per
-    ),
-    dist AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_gaps,
-             round(CAST(quantile_cont(gap_days, 0.5) AS DOUBLE), 2)
-               AS p50_gap_days,
-             round(CAST(quantile_cont(gap_days, 0.9) AS DOUBLE), 2)
-               AS p90_gap_days
-      FROM gaps
-    )
-    SELECT cust.n_customers, cust.one_order_customers,
-           {sql_quantize(
-               'CAST(cust.one_order_customers AS DOUBLE)'
-               ' / cust.n_customers', 6)} AS one_order_share,
-           dist.n_gaps, dist.p50_gap_days, dist.p90_gap_days
-    FROM cust, dist
-"""
-
-ORACLE["parts_community"] = f"""
-    WITH RECURSIVE li AS (
-      SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-    ),
-    pairs AS (
-      SELECT a.l_partkey AS da, b.l_partkey AS db
-      FROM li a JOIN li b USING (l_orderkey)
-      WHERE a.l_partkey < b.l_partkey
-      GROUP BY 1, 2
-      HAVING count(*) >= {COMMUNITY_MIN_ORDERS}
-    ),
-    edges AS (
-      SELECT da, db FROM pairs
-      UNION
-      SELECT db AS da, da AS db FROM pairs
-    ),
-    walk(id, r) AS (
-      SELECT da, da FROM edges
-      UNION
-      SELECT w.id, e.db FROM walk w JOIN edges e ON e.da = w.r
-    ),
-    cc AS (
-      SELECT id AS partkey, CAST(min(r) AS BIGINT) AS community
-      FROM walk GROUP BY id
-    ),
-    deg AS (
-      SELECT da AS partkey, CAST(count(*) AS BIGINT) AS degree
-      FROM edges GROUP BY 1
-    ),
-    sz AS (
-      SELECT community, CAST(count(*) AS BIGINT) AS community_size
-      FROM cc GROUP BY 1
-    )
-    SELECT cc.partkey, cc.community, sz.community_size, deg.degree
-    FROM cc JOIN deg USING (partkey) JOIN sz USING (community)
-"""
-
-ORACLE["parts_single_source_risk"] = f"""
-    WITH per AS (
-      SELECT l_partkey,
-             CAST(count(DISTINCT l_suppkey) AS BIGINT) AS n_suppliers,
-             {sql_quantize(
-                 'sum(l_extendedprice * (1 - l_discount))', 2)} AS r
-      FROM lineitem GROUP BY 1
-    ),
-    s AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_parts_traded,
-             CAST(sum(CASE WHEN n_suppliers = 1 THEN 1 ELSE 0 END)
-               AS BIGINT) AS single_source_parts,
-             {sql_quantize('sum(r)', 2)} AS total_revenue,
-             {sql_quantize(
-                 'sum(CASE WHEN n_suppliers = 1 THEN r ELSE 0.0 END)',
-                 2)} AS revenue_exposed
-      FROM per
-    )
-    SELECT n_parts_traded, single_source_parts,
-           {sql_quantize(
-               'CAST(single_source_parts AS DOUBLE) / n_parts_traded',
-               6)} AS single_source_share,
-           total_revenue, revenue_exposed,
-           {sql_quantize('revenue_exposed / total_revenue', 6)}
-             AS revenue_share
-    FROM s
-"""
-
-ORACLE["orders_priority_mix_trend"] = f"""
-    WITH cells AS (
-      SELECT date_trunc('month', o_orderdate) AS month,
-             o_orderpriority,
-             CAST(count(*) AS BIGINT) AS n
-      FROM orders GROUP BY 1, 2
-    ),
-    mtot AS (
-      SELECT month, CAST(sum(n) AS BIGINT) AS m_n
-      FROM cells GROUP BY 1
-    ),
-    ptot AS (
-      SELECT o_orderpriority, CAST(sum(n) AS BIGINT) AS p_n
-      FROM cells GROUP BY 1
-    ),
-    gtot AS (SELECT CAST(sum(n) AS BIGINT) AS g_n FROM cells)
-    SELECT c.month, c.o_orderpriority, c.n,
-           {sql_quantize('CAST(c.n AS DOUBLE) / m.m_n', 6)} AS share,
-           {sql_quantize('CAST(p.p_n AS DOUBLE) / g.g_n', 6)}
-             AS overall_share,
-           {sql_quantize(
-               'CAST(c.n AS DOUBLE) / m.m_n'
-               ' - CAST(p.p_n AS DOUBLE) / g.g_n', 6)} AS share_delta
-    FROM cells c
-    JOIN mtot m USING (month)
-    JOIN ptot p USING (o_orderpriority)
-    CROSS JOIN gtot g
-"""
-
-ORACLE["orders_top_growth_customers"] = f"""
-    WITH per AS (
-      SELECT o_custkey, year(o_orderdate) AS yr,
-             {sql_quantize('sum(o_totalprice)', 2)} AS rev
-      FROM orders GROUP BY 1, 2
-    ),
-    yrs AS (SELECT CAST(max(yr) AS BIGINT) AS y1 FROM per),
-    cur AS (
-      SELECT p.o_custkey, p.rev AS rev_cur, y.y1
-      FROM per p CROSS JOIN yrs y WHERE p.yr = y.y1
-    ),
-    prv AS (
-      SELECT p.o_custkey, p.rev AS rev_prev
-      FROM per p CROSS JOIN yrs y WHERE p.yr = y.y1 - 1
-    )
-    SELECT c.o_custkey, c.y1 AS year, p.rev_prev, c.rev_cur,
-           {sql_quantize('(c.rev_cur - p.rev_prev) / p.rev_prev', 6)}
-             AS growth_rate
-    FROM cur c JOIN prv p ON c.o_custkey = p.o_custkey
-    WHERE p.rev_prev > 0
-    ORDER BY growth_rate DESC, c.o_custkey
-    LIMIT {GROWTH_TOPK}
-"""
-
-ORACLE["supplier_portfolio_overlap"] = f"""
-    WITH sp AS (
-      SELECT DISTINCT l_partkey, l_suppkey FROM lineitem
-    ),
-    sz AS (
-      SELECT l_suppkey, CAST(count(*) AS BIGINT) AS n_parts
-      FROM sp GROUP BY 1
-    ),
-    inter AS (
-      SELECT a.l_suppkey AS sa, b.l_suppkey AS sb,
-             CAST(count(*) AS BIGINT) AS n_common
-      FROM sp a JOIN sp b USING (l_partkey)
-      WHERE a.l_suppkey < b.l_suppkey
-      GROUP BY 1, 2
-    )
-    SELECT i.sa, i.sb,
-           za.n_parts AS na, zb.n_parts AS nb, i.n_common,
-           {sql_quantize(
-               'CAST(i.n_common AS DOUBLE)'
-               ' / (za.n_parts + zb.n_parts - i.n_common)', 6)}
-             AS jaccard
-    FROM inter i
-    JOIN sz za ON i.sa = za.l_suppkey
-    JOIN sz zb ON i.sb = zb.l_suppkey
-    ORDER BY jaccard DESC, i.sa, i.sb
-    LIMIT {OVERLAP_TOPK}
-"""
-
-
-def orders_salted_join_check(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The skew-salted join exercised AND value-verified: join orders
-    to customers through `operators/joins.py salted_join` (big side
-    deterministically salted over 8 sub-keys, small side replicated —
-    the hot-key fan-out a 100 TB skewed join needs when AQE's skew
-    split isn't enough) and roll up revenue per nation. The DuckDB
-    twin is the PLAIN join — identical results is exactly the salted
-    join's contract.
-
-    Scale: the salt spreads any hot customer key over 8 shuffle
-    partitions; the small side replicates 8× inside a broadcast.
-    """
-    from ..operators.joins import salted_join
-
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    joined = salted_join(
-        o.select(
-            F.col("o_custkey").alias("c_custkey"), F.col("o_totalprice")
-        ),
-        c,
-        on="c_custkey",
-    )
-    return (
-        joined.groupBy("c_nationkey")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-        )
-    )
-
-
-def lineitem_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chained monthly price indices over common parts: Laspeyres
-    (base-month basket), Paasche (current basket), and their
-    geometric mean — the Fisher ideal index, index-number theory's
-    answer to "did prices move, or did the mix?" (the inferential
-    companion to `orders_pvm_bridge`'s accounting decomposition).
-    Unit prices are part-month unit values; per-part terms are
-    quantized before the basket sums (the BM25 discipline).
-
-    Scale: one (month, part) partial agg off the scan, a self-join on
-    (part, consecutive months) — natural keys, no windows.
-    """
-    li = _t(spark, sf_dir, "lineitem")
-    pm = li.groupBy(
-        (
-            F.year("l_shipdate") * 12 + F.month("l_shipdate") - 1
-        ).alias("mix"),
-        F.col("l_partkey").alias("pk"),
-    ).agg(
-        F.sum("l_quantity").cast("double").alias("q"),
-        F.sum(F.col("l_extendedprice")).cast("double").alias("ext"),
-    )
-    cur = pm.select(
-        "mix",
-        "pk",
-        F.col("q").alias("q1"),
-        (F.col("ext") / F.col("q")).alias("p1"),
-    )
-    prev = pm.select(
-        (F.col("mix") + 1).alias("mix"),
-        "pk",
-        F.col("q").alias("q0"),
-        (F.col("ext") / F.col("q")).alias("p0"),
-    )
-    terms = cur.join(prev, ["mix", "pk"]).select(
-        "mix",
-        quantize(F.col("p1") * F.col("q0"), 4).alias("l_num"),
-        quantize(F.col("p0") * F.col("q0"), 4).alias("l_den"),
-        quantize(F.col("p1") * F.col("q1"), 4).alias("p_num"),
-        quantize(F.col("p0") * F.col("q1"), 4).alias("p_den"),
-    )
-    agg = terms.groupBy("mix").agg(
-        F.count(F.lit(1)).cast("long").alias("n_parts"),
-        F.sum("l_num").alias("ln_"),
-        F.sum("l_den").alias("ld_"),
-        F.sum("p_num").alias("pn_"),
-        F.sum("p_den").alias("pd_"),
-    )
-    lasp = F.col("ln_") / F.col("ld_")
-    paas = F.col("pn_") / F.col("pd_")
-    return agg.select(
-        F.col("mix").cast("long").alias("month_index"),
-        "n_parts",
-        quantize(lasp, 6).alias("laspeyres"),
-        quantize(paas, 6).alias("paasche"),
-        quantize(F.sqrt(lasp * paas), 6).alias("fisher"),
-    )
-
-ORACLE["orders_salted_join_check"] = """
-    SELECT c.c_nationkey,
-           CAST(count(*) AS BIGINT) AS n_orders,
-           round(sum(o.o_totalprice), 2) AS revenue
-    FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
-    GROUP BY 1
-"""
-
-ORACLE["lineitem_price_index"] = f"""
-    WITH pm AS (
-      SELECT (year(l_shipdate) * 12 + month(l_shipdate) - 1) AS mix,
-             l_partkey AS pk,
-             CAST(sum(l_quantity) AS DOUBLE) AS q,
-             CAST(sum(l_extendedprice) AS DOUBLE) AS ext
-      FROM lineitem GROUP BY 1, 2
-    ),
-    terms AS (
-      SELECT c.mix,
-             {sql_quantize('(c.ext / c.q) * p.q', 4)} AS l_num,
-             {sql_quantize('(p.ext / p.q) * p.q', 4)} AS l_den,
-             {sql_quantize('(c.ext / c.q) * c.q', 4)} AS p_num,
-             {sql_quantize('(p.ext / p.q) * c.q', 4)} AS p_den
-      FROM pm c JOIN pm p ON p.pk = c.pk AND p.mix = c.mix - 1
-    ),
-    agg AS (
-      SELECT mix, CAST(count(*) AS BIGINT) AS n_parts,
-             sum(l_num) AS ln_, sum(l_den) AS ld_,
-             sum(p_num) AS pn_, sum(p_den) AS pd_
-      FROM terms GROUP BY 1
-    )
-    SELECT CAST(mix AS BIGINT) AS month_index, n_parts,
-           {sql_quantize('ln_ / ld_', 6)} AS laspeyres,
-           {sql_quantize('pn_ / pd_', 6)} AS paasche,
-           {sql_quantize('sqrt((ln_ / ld_) * (pn_ / pd_))', 6)}
-             AS fisher
-    FROM agg
-"""
-
-QUERIES["orders_salted_join_check"] = orders_salted_join_check
-QUERIES["lineitem_price_index"] = lineitem_price_index

@@ -1,11 +1,10 @@
 """Catalog query runner — run any SURVEY §2 query from the shell.
 
 ``python -m llm_map_reduce_summarizer_spark.query <key> [--sf DIR]``
-runs one entry of the query catalog (the same callables the driver
-consumes through ``__spark_entry__.queries()``) and prints the result;
-with no key it lists every available query. Kept separate from
-``__main__`` so the reference-parity summarizer CLI surface stays an
-exact mirror of the reference's argparse.
+runs one entry of the query catalog (``__spark_entry__.queries()``)
+and prints the result; with no key it lists every available query.
+Kept separate from ``__main__`` so the reference-parity summarizer CLI
+surface stays an exact mirror of the reference's argparse.
 """
 
 from __future__ import annotations

@@ -1,10 +1,9 @@
-"""Parquet table loaders for the star schema + events/documents/embeddings.
+"""Parquet table loader for the events, documents and embeddings tables.
 
 ``spark.read.parquet`` gives Catalyst full pushdown: filters and column
 pruning reach the scan (verify with ``df.explain``: ``PushedFilters`` /
-``ReadSchema``). At 100 TB the fact tables (lineitem, orders, events,
-documents) arrive partitioned; the loaders take any directory layout
-parquet supports.
+``ReadSchema``). At 100 TB the fact tables (events, documents) arrive
+partitioned; the loader takes any directory layout parquet supports.
 """
 
 from __future__ import annotations
@@ -13,24 +12,6 @@ import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-
-TABLE_NAMES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
-
-# Dimension tables small enough to broadcast at any realistic scale
-# (region/nation are fixed-size; supplier/part grow slowly with SF).
-BROADCAST_DIMS = {"region", "nation", "supplier", "part"}
-
 
 # A parquet ROW GROUP is the unit of decode parallelism: Spark assigns
 # each row group to exactly one scan task, so a table written as one
@@ -103,6 +84,8 @@ def spread_narrow_scan(df: DataFrame, path: str) -> DataFrame:
 def load_table(
     spark: SparkSession, sf_dir: str, name: str, spread: bool = False
 ) -> DataFrame:
+    """Read ``<sf_dir>/<name>.parquet``. ``events.ts`` comes back as a
+    session-tz timestamp; ``spread`` opts into ``spread_narrow_scan``."""
     if name == "events":
         # Older testdata generations stored ts as TIMESTAMP(NANOS), which
         # vanilla Spark rejects (PARQUET_TYPE_ILLEGAL). Surface nanos as
@@ -146,15 +129,3 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     elif isinstance(ts_type, TimestampNTZType):
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register each table as a temp view so plans can use spark.sql."""
-    tables = load_tables(spark, sf_dir)
-    for name, df in tables.items():
-        df.createOrReplaceTempView(name)
-    return tables

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import json
+import re
 
 import pytest
 
@@ -268,13 +269,26 @@ def test_cli_cost_uses_model_tier(spark, tmp_path, monkeypatch):
 
 def test_query_runner_lists_and_rejects(capsys):
     """Catalog query runner: no key lists every catalog entry (no Spark
-    session involved); an unknown key exits 2 with a message."""
+    session involved), the 22 standard TPC-H queries but no retired
+    star-schema analytics entry; an unknown key exits 2 with a
+    message."""
     from llm_map_reduce_summarizer_spark.query import main
 
     assert main([]) == 0
     listed = capsys.readouterr().out.split()
-    assert "corpus_split" in listed and "q1_pricing_summary" in listed
+    assert "corpus_split" in listed and "pipeline_e2e" in listed
     assert len(listed) >= 100
+    # the 22 standard TPC-H queries stay; the derived star-schema
+    # analytics built on the same tables are retired
+    assert len([k for k in listed if re.match(r"q\d+_", k)]) == 22
+    retired = re.compile(
+        r"(orders|parts|customer|supplier|nation|lineitem)_"
+    )
+    assert not [k for k in listed if retired.match(k)]
+    assert not {
+        "agg_distinct_stats", "cube_sales", "pivot_flag_status",
+        "rollup_sales", "topk_per_group", "warehouse_ref_integrity",
+    } & set(listed)
 
     assert main(["definitely_not_a_key"]) == 2
     assert "unknown query key" in capsys.readouterr().err

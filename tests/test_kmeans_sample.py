@@ -30,7 +30,7 @@ from llm_map_reduce_summarizer_spark.plans.documents import (
     KMEANS_TRAIN_CAP,
 )
 from tests.conftest import SF_SMOKE
-from tests.oracle_utils import run_compare
+from tests.oracle_utils import TABLES, run_compare
 
 N_BIG = 6000  # > KMEANS_TRAIN_CAP so the sample filter engages
 DIM = 64  # sql_unit_cte() pins the testdata's 64-dim layout
@@ -39,15 +39,13 @@ DIM = 64  # sql_unit_cte() pins the testdata's 64-dim layout
 @pytest.fixture(scope="module")
 def big_emb_dir(tmp_path_factory):
     """An sf-dir clone whose embeddings table is larger than the
-    training cap: every other table symlinks to sf0.001 (run_compare
-    registers all ten views), embeddings is a fresh deterministic
-    6000 x 8 corpus."""
+    training cap: every other table ``run_compare`` registers symlinks
+    to sf0.001, embeddings is a fresh deterministic 6000 x 64 corpus."""
     assert N_BIG > KMEANS_TRAIN_CAP
     d = tmp_path_factory.mktemp("bigemb")
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents".split()
-    ):
+    for t in TABLES:
+        if t == "embeddings":
+            continue
         os.symlink(os.path.join(SF_SMOKE, f"{t}.parquet"), d / f"{t}.parquet")
     rng = np.random.default_rng(7)
     vecs = rng.normal(size=(N_BIG, DIM)).astype(np.float32)

@@ -6,7 +6,7 @@ now fold everything off one materialized hub. Two pins:
    corpus work happens exactly once, inside the hub materialize job
    (the plan reads only checkpointed RDDs afterwards). A regression
    re-introducing a second corpus pass re-adds a `Scan parquet` node.
-2. The unrolled power iterations (textrank / pagerank) stay LINEAR in
+2. The unrolled power iteration (textrank) stays LINEAR in
    the iteration count: binding deg through the evolving ranks frame
    made the plan 2^ITERS-sized (252 nodes for 3 rounds); the static
    node-table formulation is ~79. The bound catches the exponential
@@ -26,7 +26,6 @@ QUERIES = entrymod.queries()
 
 HUB_ZERO_SCAN = [
     "corpus_textrank_terms",
-    "parts_pagerank",
     "corpus_dsir_weights",
     "corpus_dsir_sample",
     "corpus_keyphrase_rake",
@@ -44,9 +43,6 @@ HUB_ZERO_SCAN = [
     "corpus_entropy_rate",
     "corpus_collocations",
     "corpus_quality_length_spearman",
-    "nation_trade_balance",
-    "orders_backlog_monthly",
-    "customer_segment_migration",
     "emb_cluster_quality",
     "knn_ivf_nprobe_curve",
     "knn_recall_report",
@@ -72,7 +68,7 @@ def test_final_plan_reads_only_the_materialized_hub(spark, key):
     )
 
 
-@pytest.mark.parametrize("key", ["corpus_textrank_terms", "parts_pagerank"])
+@pytest.mark.parametrize("key", ["corpus_textrank_terms"])
 def test_power_iteration_plan_is_linear_in_rounds(spark, key):
     n = len(_NODES.findall(_plan(spark, key)))
     # linear shape is ~79 nodes for 3 rounds; the doubled-lineage

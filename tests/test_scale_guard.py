@@ -223,7 +223,7 @@ def test_inplace_quantize_matches_allocating_path():
 
 # ------------------------------------------- broadcast-closure operators
 #
-# The r9 100x scale sweep (tools/run_scale_sweep.py) caught two keys
+# The r9 100x scale sweep caught two keys
 # violating the broadcast-closure operators' documented-but-unenforced
 # "closure side is broadcast-small" contract: knn_graph_recall passed
 # the whole corpus as cosine_topk_blocked's query matrix and

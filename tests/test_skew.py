@@ -1,17 +1,16 @@
-"""Skew-injection robustness (VERDICT r7 item 5).
+"""Skew-injection robustness.
 
-The driver's TPC-style generator draws near-uniform keys, so the
-classic 100×-scale killer — one entity owning a macroscopic share of a
-fact table — is never exercised by the oracle gate. These tests build
-a deliberately Zipf-headed ledger (ONE customer owning ~30% of all
-orders) and prove:
+The test data draws near-uniform keys, so the classic 100×-scale
+killer — one entity owning a macroscopic share of a fact table — is
+never exercised by the oracle gate. These tests build a deliberately
+Zipf-headed ledger (ONE customer owning ~30% of all orders) and a
+whale-user event log, and prove:
 
-1. the headline join queries still hash-match their DuckDB oracles on
-   the skewed data (correctness is key-distribution-free), and
-2. the two scale mitigations actually engage: AQE's runtime skew-split
-   marks the sort-merge join (``skew=true``) when a partition blows
-   past the threshold, and the static ``salted_join`` fallback returns
-   exactly the plain join's rows while scattering the hot key.
+1. the headline join queries and the user-keyed stateful event
+   queries still hash-match their DuckDB oracles on the skewed data
+   (correctness is key-distribution-free), and
+2. AQE's runtime skew-split engages: it marks the sort-merge join
+   (``skew=true``) when a partition blows past the threshold.
 
 At sf0.001 every catalog join rightly broadcasts the dim side, so the
 AQE test uses a synthetic fact big enough to shuffle, with the
@@ -29,7 +28,7 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
 from .conftest import SF_SMOKE
-from .oracle_utils import run_compare
+from .oracle_utils import TABLES, run_compare
 
 HOT_SHARE = 0.30  # the hot customer's share of all orders
 
@@ -55,10 +54,7 @@ def skew_dir(tmp_path_factory):
     """
     src = SF_SMOKE
     dst = tmp_path_factory.mktemp("skewdata")
-    for t in [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]:
+    for t in TABLES:
         shutil.copy(f"{src}/{t}.parquet", dst / f"{t}.parquet")
 
     orders = pd.read_parquet(dst / "orders.parquet")
@@ -87,10 +83,7 @@ def user_skew_dir(tmp_path_factory):
     design (session windows close, journeys truncate at purchase)."""
     src = SF_SMOKE
     dst = tmp_path_factory.mktemp("userskew")
-    for t in [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]:
+    for t in TABLES:
         shutil.copy(f"{src}/{t}.parquet", dst / f"{t}.parquet")
     ev = pd.read_parquet(dst / "events.parquet")
     hot = int(ev["user_id"].iloc[0])
@@ -186,36 +179,3 @@ def test_aqe_splits_skewed_sortmerge_join(spark):
         for k in confs:
             spark.conf.unset(k)
 
-
-def test_salted_join_matches_plain_join_on_skew(spark, skew_dir):
-    """The static fallback is value-transparent: salted_join over the
-    skewed customer⋈orders edge returns exactly the plain join's
-    multiset, while the join key becomes (key, salt) so the hot
-    customer fans out across n_salts shuffle partitions."""
-    from llm_map_reduce_summarizer_spark.operators.joins import (
-        salted_join,
-    )
-    from llm_map_reduce_summarizer_spark.sources.tables import (
-        load_table,
-    )
-
-    orders = load_table(spark, skew_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    cust = load_table(spark, skew_dir, "customer").select(
-        F.col("c_custkey").alias("o_custkey"), "c_name"
-    )
-    plain = (
-        orders.join(cust, "o_custkey")
-        .orderBy("o_orderkey")
-        .select("o_orderkey", "o_custkey", "c_name")
-        .toPandas()
-    )
-    salted = (
-        salted_join(orders, cust, "o_custkey", n_salts=8)
-        .orderBy("o_orderkey")
-        .select("o_orderkey", "o_custkey", "c_name")
-        .toPandas()
-    )
-    pd.testing.assert_frame_equal(plain, salted)
-    assert len(plain) > 0

@@ -143,30 +143,6 @@ def test_weighted_sample_priorities(spark):
     assert (out["weight"] >= 1).all()
 
 
-def test_discount_ols_matches_numpy(spark):
-    row = (
-        QUERIES["lineitem_discount_effect"](spark, SF_SMOKE)
-        .toPandas()
-        .iloc[0]
-    )
-    li = pd.read_parquet(f"{SF_SMOKE}/lineitem.parquet")
-    x = np.round(li["l_discount"].to_numpy() * 100)
-    y = li["l_quantity"].to_numpy(float)
-    slope, intercept = np.polyfit(x, y, 1)
-    r = np.corrcoef(x, y)[0, 1]
-    assert row["n_rows"] == len(li)
-    assert _close(row["slope_per_point"], slope, tol=1e-3)
-    assert _close(row["intercept_qty"], intercept, tol=1e-3)
-    assert _close(row["r2"], r * r, tol=1e-3)
-
-
-def test_pvm_bridge_identity(spark):
-    df = QUERIES["orders_pvm_bridge"](spark, SF_SMOKE).toPandas()
-    assert len(df) > 0
-    resid = (df.delta_rev - df.volume_effect - df.price_effect).abs()
-    assert resid.max() <= 0.02  # cents-rounding of the two effects
-
-
 def test_ewma_control_matches_numpy(spark):
     df = (
         QUERIES["events_ewma_control"](spark, SF_SMOKE)
@@ -191,28 +167,6 @@ def test_ewma_control_matches_numpy(spark):
             df.loc[df.hour == pd.Timestamp(t), "ewma_prior"].iloc[0]
         )
         assert _close(got, expect, tol=1e-3)
-
-
-def test_abc_classification_invariants(spark):
-    df = (
-        QUERIES["orders_abc_class"](spark, SF_SMOKE)
-        .toPandas()
-        .sort_values("cum_share")
-        .reset_index(drop=True)
-    )
-    # cum_share ascending == rank order (rev desc, key), so revenue
-    # must be non-increasing along the curve
-    assert (df.revenue.diff().dropna() <= 1e-9).all()
-    a = df[df.abc_class == "A"]
-    b = df[df.abc_class == "B"]
-    c = df[df.abc_class == "C"]
-    assert (a.cum_share <= 0.80).all()
-    assert ((b.cum_share > 0.80) & (b.cum_share <= 0.95)).all()
-    assert (c.cum_share > 0.95).all()
-    assert len(a) + len(b) + len(c) == len(df)
-    # top-revenue parts are never class C while tail parts are never A
-    assert df.iloc[0].abc_class == "A"
-    assert df.iloc[-1].abc_class == "C"
 
 
 def test_flat_corpus_guards(spark, tmp_path):
@@ -265,15 +219,6 @@ def test_flat_corpus_guards(spark, tmp_path):
     assert pd.isna(d["f_stat"]) and pd.isna(d["eta_squared"])
     w = con.execute(osql["events_ab_welch"]).df().iloc[0]
     assert pd.isna(w["t_stat"]) and pd.isna(w["df_welch"])
-
-
-def test_trade_balance_conservation(spark):
-    """Cross-nation flows are zero-sum: every export is someone's
-    import, so net balances must sum to 0 exactly (cents grid)."""
-    df = QUERIES["nation_trade_balance"](spark, SF_SMOKE).toPandas()
-    assert len(df) > 0
-    assert abs(df.net_balance.sum()) < 0.01
-    assert abs(df.exports.sum() - df.imports.sum()) < 0.01
 
 
 def test_levene_matches_numpy(spark):
