@@ -19,11 +19,10 @@ from llm_map_reduce_summarizer_spark.plans import (
     events,
     pipeline,
     streams,
-    tpch,
 )
 
 # Alphabetical by unqualified module name.
-_PLAN_MODULES = [documents, events, pipeline, streams, tpch]
+_PLAN_MODULES = [documents, events, pipeline, streams]
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -198,7 +198,7 @@ class SparkLLMExecutor:
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
                 prompts = [
-                    prefix + template.format(transcript=t)
+                    prefix + template.replace("{transcript}", t)
                     for t in pdf[text_col].astype(str)
                 ]
                 yield pdf.assign(summary=complete(prompts))

@@ -10,8 +10,7 @@ Scale: null counts and ranges are map-side-combined aggs; the exact
 distincts expand the scan k-fold (Spark's count-distinct expand) —
 the honest exact tier at profile cadence; at 100 TB swap
 ``approx_count_distinct`` into the same shape (one flag, same plan
-otherwise). Used by ``events_column_profile`` and
-``docs_column_profile``.
+otherwise). Used by ``docs_column_profile``.
 """
 
 from __future__ import annotations

@@ -5484,8 +5484,8 @@ def docs_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     null floods, cardinality collapse (a lang or source column
     suddenly reading one value), and length-range excursions, checked
     BEFORE any downstream curation trusts a new corpus drop. Same
-    generic single-scan wide-agg + stack transpose as
-    `events_column_profile` (`operators/profile.py`).
+    generic single-scan wide-agg + stack transpose
+    (`operators/profile.py`).
     """
     from pyspark.sql import functions as F
 

@@ -17,8 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.text import quantize, sql_quantize
-from ..operators.persist import materialize, materialize_all
-from ..operators.profile import profile_oracle_sql
+from ..operators.persist import materialize
 from ..sources.tables import load_table
 
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 minutes
@@ -203,8 +202,7 @@ def events_type_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-metric correlation matrix: Pearson r between every pair
     of event types' hourly-count series on the shared zero-filled
     calendar — which feeds move together (deploy+errors, views+
-    clicks) and which are independent; the multivariate companion to
-    `events_error_load_corr`'s single pair.
+    clicks) and which are independent.
 
     Scale: series cells are the (type, hour) partial agg; the global
     calendar is a 1-row span broadcast; the pair join is keyed on
@@ -398,81 +396,6 @@ def events_user_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.orderBy(
         F.col("n").desc(), F.col("src"), F.col("dst")
     ).limit(PATHS_TOPK)
-
-
-def events_transition_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Behavioral entropy rate: the empirical conditional entropy of
-    the event-type transition chain, H(next | prev) in bits, beside
-    the marginal type entropy H(type) and the redundancy 1 − H₂/H₁ —
-    LOW conditional entropy means behavior is scripted (bots,
-    autoplay chains); near-equal H₂ and H₁ means transitions carry no
-    memory and the Markov tier (27i) adds nothing. The behavioral
-    twin of `corpus_entropy_rate`'s text law.
-
-    Scale: transitions reuse the user-keyed sort-shuffle (the
-    sessionization partitioning); counts collapse to the types²
-    transition table; entropies are exact integer ratios 1e-9
-    quantized before the types-bounded sums.
-    """
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "ts_us", F.unix_micros("ts")
-    )
-    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    pairs = (
-        ev.withColumn("src", F.lag("event_type").over(w))
-        .filter(F.col("src").isNotNull())
-        .groupBy("src", F.col("event_type").alias("dst"))
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-    )
-    return transition_entropy_from_pairs(pairs)
-
-
-def transition_entropy_from_pairs(pairs: DataFrame) -> DataFrame:
-    """The entropy-rate scan over (src, dst, c) transition counts —
-    shared by the batch query and the streaming drain
-    (`stream_transition_entropy` counts the exactly-once step
-    emissions of `user_paths_stream`)."""
-    # keys rename on the self-lineage aggs (drained-relation rule)
-    row = pairs.select(
-        F.col("src").alias("src_r"), F.col("c").alias("c_r")
-    ).groupBy("src_r").agg(F.sum("c_r").cast("long").alias("cs"))
-    tot = pairs.select(F.col("c").alias("c_t")).agg(
-        F.sum("c_t").cast("long").alias("ct")
-    )
-    j = pairs.join(
-        F.broadcast(row), F.col("src") == F.col("src_r")
-    ).crossJoin(F.broadcast(tot))
-    p_pair = quantize(F.col("c") / F.col("ct"), 9)
-    p_cond = quantize(F.col("c") / F.col("cs"), 9)
-    h2 = -F.sum(p_pair * F.log2(p_cond))
-    # marginal entropy over next-type mass
-    marg = (
-        pairs.select(
-            F.col("dst").alias("dst_m"), F.col("c").alias("c_m")
-        )
-        .groupBy("dst_m")
-        .agg(F.sum("c_m").cast("long").alias("cd"))
-        .crossJoin(F.broadcast(tot))
-    )
-    p1 = quantize(F.col("cd") / F.col("ct"), 9)
-    h1 = marg.agg(
-        quantize(-F.sum(p1 * F.log2(p1)), 6).alias("h1_bits"),
-    )
-    h2r = j.agg(
-        F.first("ct").alias("n_transitions"),
-        F.countDistinct("src").cast("long").alias("n_states"),
-        quantize(h2, 6).alias("h2_bits"),
-    )
-    return h2r.crossJoin(F.broadcast(h1)).select(
-        "n_transitions",
-        "n_states",
-        "h1_bits",
-        "h2_bits",
-        F.when(
-            F.col("h1_bits") > 0,
-            quantize(1.0 - F.col("h2_bits") / F.col("h1_bits"), 6),
-        ).alias("redundancy"),
-    )
 
 
 def events_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -991,91 +914,6 @@ def events_rolling_actives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-MARKOV_DAMPING = 0.85
-MARKOV_TOL = 1e-12
-
-
-def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Steady-state distribution of the user-behavior Markov chain:
-    power-iterate the (damped) transition matrix built from the same
-    per-user transition counts as `events_user_paths` — "where does
-    user attention settle" as a stationary probability per event type.
-
-    Scale: the corpus-sized work is the transition-count aggregation
-    (one user_id sort-shuffle + a K² partial agg); the matrix itself
-    is K² cells — bounded by event-type cardinality, never events — so
-    collecting it is a 1-matrix driver decision (the PCA/eigh
-    pattern), and the power iteration is O(K²) per step.
-
-    Value-checked in full: per type the catalog emits the EXACT
-    outgoing-transition count (SQL twin) plus the fixed-point
-    invariants (|πP − π|∞ ≤ 1e-9, Σπ = 1 within 1e-12) the oracle
-    asserts as literal TRUE.
-    """
-    import numpy as np
-
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "ts_us", F.unix_micros("ts")
-    )
-    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    pairs = (
-        ev.withColumn("src", F.lag("event_type").over(w))
-        .filter(F.col("src").isNotNull())
-        .groupBy("src", F.col("event_type").alias("dst"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    return markov_from_pairs(pairs)
-
-
-def markov_from_pairs(pairs: DataFrame) -> DataFrame:
-    """The K²-bounded steady-state computation over (src, dst, n)
-    transition counts — shared by the batch query and the streaming
-    drain (`stream_markov_stationary` counts `user_paths_stream`'s
-    exactly-once emissions)."""
-    import numpy as np
-
-    spark = pairs.sparkSession
-    cells = pairs.collect()  # K^2 rows — bounded by type cardinality
-    types = sorted({r["src"] for r in cells} | {r["dst"] for r in cells})
-    idx = {t: i for i, t in enumerate(types)}
-    k = len(types)
-    if k == 0:
-        # no transitions at all (empty source) -> empty result, not a
-        # 1/k division crash (empty-source audit r7)
-        return spark.createDataFrame(
-            [],
-            "event_type string, n_out long, stationary_ok boolean,"
-            " sum_ok boolean",
-        )
-    counts = np.zeros((k, k))
-    for r in cells:
-        counts[idx[r["src"]], idx[r["dst"]]] = r["n"]
-    out = counts.sum(axis=1)
-    P = counts / np.where(out[:, None] > 0, out[:, None], 1.0)
-    P[out == 0] = 1.0 / k  # dangling types jump uniformly
-    G = MARKOV_DAMPING * P + (1.0 - MARKOV_DAMPING) / k
-    pi = np.full(k, 1.0 / k)
-    for _ in range(10_000):
-        nxt = pi @ G
-        if np.abs(nxt - pi).max() < MARKOV_TOL:
-            pi = nxt
-            break
-        pi = nxt
-    residual_ok = bool(np.abs(pi @ G - pi).max() <= 1e-9)
-    sum_ok = bool(abs(pi.sum() - 1.0) <= 1e-12)
-    rows = [
-        (t, int(out[idx[t]]), residual_ok, sum_ok) for t in types
-    ]
-    pdf = spark.createDataFrame(
-        rows,
-        "event_type string, n_out long, stationary_ok boolean,"
-        " sum_ok boolean",
-    )
-    return pdf
-
-
-
-
 PSI_SHIFT_GRID = (0.0, 5.0, 25.0, 100.0)  # planted shifts ($)
 
 
@@ -1391,133 +1229,6 @@ def parallel_trends_from_cells(cells: DataFrame) -> DataFrame:
                 "gap_vs_pre"
             ),
         )
-    )
-
-
-def events_experiment_readout(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """THE experiment dashboard row: every estimator in the tier on
-    one line — raw and winsorized Welch (the purchase-vs-click metric
-    comparison), and for the user-parity experiment the conversion z,
-    DiD, CUPED-adjusted t, and the bootstrap CI — plus a consensus
-    count of how many user-experiment tests reject at 95%. The
-    analyst deliverable the individual entries feed; disagreement
-    between rows IS the signal (e.g. raw-significant but
-    winsorized-not means whales drive it).
-
-    Scale: the six estimators used to be composed as independent
-    plans — NINE parquet scans of events for one dashboard row
-    (census, VERDICT r11 item 3). They all consume the same four
-    columns, so ONE materialized narrow projection now feeds every
-    component: each estimator's fold is unchanged (the shared
-    ``*_of`` / ``*_from_*`` helpers the standalone queries also use),
-    it just reads the checkpointed hub instead of re-scanning
-    parquet. The five 1-row broadcast subtrees build concurrently on
-    the driver's broadcast pool, so the components still overlap.
-    Footprint note (ADVICE r11): the hub is events-scale (narrow,
-    spillable, query-lifetime only) — the price of replacing nine
-    corpus passes with one.
-    """
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .select("user_id", "event_type", "ts", "value")
-        .transform(materialize)
-    )
-    welch = welch_from_stats(ab_welch_stats_of(ev)).select(
-        F.col("mean_a").alias("welch_mean_a"),
-        F.col("mean_b").alias("welch_mean_b"),
-        F.col("t_stat").alias("welch_t"),
-    )
-    wins = welch_from_stats(winsor_stats_of(ev)).select(
-        F.col("t_stat").alias("winsor_t")
-    )
-    conv = conversion_ztest_from_users(conv_users_of(ev)).select(
-        F.col("z_stat").alias("conv_z")
-    )
-    did = did_from_cells(did_cells(ev)).select(
-        F.col("did_estimate"), F.col("t_stat").alias("did_t")
-    )
-    cuped = cuped_from_cells(cuped_cells(ev)).select(
-        F.col("diff_adj").alias("cuped_diff"),
-        F.col("t_adj").alias("cuped_t"),
-        F.col("var_reduction"),
-    )
-    boot = bootstrap_ci_from_users(boot_users_of(ev)).select(
-        "ci_lo", "ci_hi", "covers_zero"
-    )
-    row = (
-        welch.crossJoin(F.broadcast(wins))
-        .crossJoin(F.broadcast(conv))
-        .crossJoin(F.broadcast(did))
-        .crossJoin(F.broadcast(cuped))
-        .crossJoin(F.broadcast(boot))
-    )
-    sig = (
-        F.when(F.abs(F.col("conv_z")) > 1.96, 1).otherwise(0)
-        + F.when(F.abs(F.col("did_t")) > 1.96, 1).otherwise(0)
-        + F.when(F.abs(F.col("cuped_t")) > 1.96, 1).otherwise(0)
-        + F.when(~F.col("covers_zero"), 1).otherwise(0)
-    )
-    return row.withColumn(
-        "n_user_tests_significant", sig.cast("long")
-    )
-
-
-WINSOR_Q = 0.99
-
-
-def events_winsorized_welch(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Welch test on the WINSORIZED metric (values capped at the
-    global p99): the standard robust-experimentation guard — a
-    handful of whale users otherwise dominate the variance and drown
-    real effects. Completes the robust tier with
-    `events_quantile_treatment_effect` (where the effect lives) and
-    `events_bootstrap_diff_ci` (no normality assumption).
-
-    Scale: the cap is ONE interpolated percentile (a 1-row
-    broadcast); the capped moments are the same exact cent-grid
-    decimal fold as `events_ab_welch`.
-    """
-    return welch_from_stats(
-        winsor_stats_of(load_table(spark, sf_dir, "events"))
-    )
-
-
-def winsor_stats_of(ev: DataFrame) -> DataFrame:
-    """The winsorized six-moment fold over any events relation —
-    shared by the batch query and the experiment-readout hub."""
-    ev = ev.filter(
-        F.col("event_type").isin(AB_GROUP_A, AB_GROUP_B)
-    )
-    cap = ev.agg(
-        F.expr(f"percentile(value, {WINSOR_Q!r})").alias("cap")
-    )
-    grid = ev.crossJoin(F.broadcast(cap)).select(
-        (F.col("event_type") == AB_GROUP_A).alias("is_a"),
-        F.floor(F.least(F.col("value"), F.col("cap")) * 100 + 0.5)
-        .cast("long")
-        .alias("vq"),
-    )
-    one_a = F.when(F.col("is_a"), 1).otherwise(0)
-    one_b = F.when(F.col("is_a"), 0).otherwise(1)
-    return grid.agg(
-        F.sum(one_a).cast("long").alias("n_a"),
-        F.sum(one_b).cast("long").alias("n_b"),
-        F.sum((one_a * F.col("vq")).cast("decimal(38,0)"))
-        .cast("double")
-        .alias("sv_a"),
-        F.sum((one_b * F.col("vq")).cast("decimal(38,0)"))
-        .cast("double")
-        .alias("sv_b"),
-        F.sum((one_a * F.col("vq") * F.col("vq")).cast("decimal(38,0)"))
-        .cast("double")
-        .alias("svv_a"),
-        F.sum((one_b * F.col("vq") * F.col("vq")).cast("decimal(38,0)"))
-        .cast("double")
-        .alias("svv_b"),
     )
 
 
@@ -2057,11 +1768,9 @@ def absorption_from_pairs(pairs: DataFrame) -> DataFrame:
     """Absorption probabilities of the user-behavior Markov chain:
     for each event type, the probability a walk started there
     eventually reaches the absorbing ``purchase`` state — the
-    funnel-free "which states feed conversion" readout
-    (`events_markov_stationary` answers "where does attention
-    settle", this answers "from where do you still convert").
+    funnel-free "from where do you still convert" readout.
 
-    Same K²-bounded plan as the stationary query: the corpus-sized
+    K²-bounded plan: the corpus-sized
     work is the transition-count agg; the matrix is type² cells (a
     1-matrix driver decision), and h = Qh + r iterates to the
     MINIMAL fixed point (init 0), which is the absorption
@@ -3121,45 +2830,6 @@ def events_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Traffic burstiness per event type: the Fano factor
-    (variance/mean of hourly counts — 1 ≈ Poisson, >1 bursty) plus
-    the underlying moments — the dispersion diagnostic that says
-    whether hourly anomaly thresholds can assume Poisson noise.
-
-    Scale: hourly counts = one ts-truncated partial agg bounded by
-    hours x types; the moments are EXACT integer sums (Σx, Σx²) with
-    single final divisions — no float-order drift surface.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    hourly = ev.groupBy(
-        F.date_trunc("hour", F.col("ts")).alias("hour"), "event_type"
-    ).agg(F.count(F.lit(1)).cast("long").alias("n"))
-    return burstiness_from_hourly(hourly)
-
-
-def burstiness_from_hourly(hourly: DataFrame) -> DataFrame:
-    """The Fano fold over a (hour, event_type, n) table — shared by
-    the batch query and the streaming drain (`stream_burstiness`)."""
-    per = hourly.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_hours"),
-        F.sum("n").cast("long").alias("sx"),
-        F.sum(F.col("n") * F.col("n")).cast("long").alias("sxx"),
-    )
-    mean = F.col("sx").cast("double") / F.col("n_hours")
-    var = (
-        F.col("sxx").cast("double")
-        - F.col("sx").cast("double") * F.col("sx") / F.col("n_hours")
-    ) / F.col("n_hours")
-    return per.select(
-        "event_type",
-        "n_hours",
-        quantize(mean, 4).alias("mean_hourly"),
-        quantize(var, 4).alias("var_hourly"),
-        quantize(var / mean, 4).alias("fano_factor"),
-    )
-
-
 PLAW_TOP_K = 256
 
 
@@ -3396,47 +3066,6 @@ def residual_screen_from_decomposed(dec: DataFrame) -> DataFrame:
             quantize(F.col("med_r"), 4).alias("med_residual"),
             quantize(F.col("mad_r"), 4).alias("mad_residual"),
         )
-    )
-
-
-def events_user_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Behavioral diversity per user: Shannon entropy (bits) of the
-    user's event-type distribution plus type count — single-type
-    users (entropy 0) are scripted/bot-like, high-entropy users
-    explore the product; feeds segmentation next to the volume-based
-    `events_bot_detection` tier.
-
-    Scale: one (user, type) partial agg, user totals re-agg joined
-    back on the co-partitioned user key; probabilities are
-    exact-integer ratios quantized 1e-9 before the ≤|types|-term
-    entropy sum (quantized 1e-6).
-    """
-    ev = load_table(spark, sf_dir, "events")
-    ut = ev.groupBy("user_id", "event_type").agg(
-        F.count(F.lit(1)).alias("f")
-    )
-    return user_entropy_from_cells(ut)
-
-
-def user_entropy_from_cells(ut: DataFrame) -> DataFrame:
-    """The behavioral-entropy scan over (user_id, event_type, f)
-    cells — shared by the batch query and the streaming drain
-    (`stream_user_entropy` accumulates the same users×types-bounded
-    cells at ingest)."""
-    # keys rename on the self-lineage join (drained-relation rule)
-    tot = ut.select(
-        F.col("user_id").alias("uid_t"), F.col("f").alias("f_t")
-    ).groupBy("uid_t").agg(
-        F.sum("f_t").alias("n_events"),
-        F.count(F.lit(1)).alias("n_types"),
-    )
-    j = ut.join(tot, F.col("user_id") == F.col("uid_t"))
-    p = quantize(F.col("f") / F.col("n_events"), 9)
-    term = F.when(p > 0, -p * F.log2(p)).otherwise(F.lit(0.0))
-    return j.groupBy("user_id").agg(
-        F.first("n_events").cast("long").alias("n_events"),
-        F.first("n_types").cast("long").alias("n_types"),
-        quantize(F.sum(term), 6).alias("type_entropy_bits"),
     )
 
 
@@ -3896,104 +3525,15 @@ def stickiness_from_act(act: DataFrame) -> DataFrame:
     )
 
 
-def events_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Column-level data-quality profile of the events table: per
-    column — null count/share, EXACT distinct count, and numeric
-    min/max (timestamps profiled in integer epoch-micros; string
-    columns leave the range columns null) — the generic ingest-
-    validation primitive every pipeline runs before trusting a new
-    drop (schema-drift canaries check types; this checks CONTENT:
-    cardinality collapse, null floods, range excursions).
-
-    Scale: ONE wide aggregate over a single scan — null counts and
-    ranges are plain map-side-combined aggs; the six exact distincts
-    expand the scan 6× (Spark's count-distinct expand), the honest
-    exact tier at profile cadence — at 100 TB swap
-    approx_count_distinct into the same shape. The wide 1-row result
-    reshapes to the per-column report via `stack` (a driver-side-free
-    6-row transpose, no shuffle).
-    """
-    from ..operators.profile import column_profile
-
-    ev = load_table(spark, sf_dir, "events")
-    return column_profile(
-        ev,
-        ["event_id", "ts", "user_id", "event_type", "value", "props"],
-        {
-            "event_id": F.col("event_id").cast("double"),
-            "ts": F.unix_micros(F.col("ts")).cast("double"),
-            "user_id": F.col("user_id").cast("double"),
-            "value": F.col("value").cast("double"),
-        },
-    )
-
-
 UPTIME_WINDOW_US = 3600 * 1000000  # liveness window: 1 heartbeat hour
-
-
-def events_error_load_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Load-sensitivity of errors: Pearson correlation between hourly
-    error count and hourly non-error traffic — near +1 says errors
-    are capacity-driven (fix scaling), near 0 says they are
-    load-independent defects (fix code) — the one-number triage that
-    decides which on-call plays first.
-
-    Scale: one (hour) partial agg with conditional sums (calendar-
-    bounded), then a 1-row exact-integer moment fold; r's closed form
-    is written in the same order as the twin.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    hourly = ev.groupBy(
-        F.date_trunc("hour", F.col("ts")).alias("hour")
-    ).agg(
-        F.sum(
-            F.when(F.col("event_type") == "error", 1).otherwise(0)
-        )
-        .cast("long")
-        .alias("x"),
-        F.sum(
-            F.when(F.col("event_type") == "error", 0).otherwise(1)
-        )
-        .cast("long")
-        .alias("y"),
-    )
-    return error_load_corr_from_hourly(hourly)
-
-
-def error_load_corr_from_hourly(hourly: DataFrame) -> DataFrame:
-    """The moment fold over an (hour, x, y) table — shared by the
-    batch query and the streaming drain (`stream_error_load_corr`
-    accumulates the same calendar-bounded cells at ingest)."""
-    m = hourly.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
-    )
-    n = F.col("n").cast("double")
-    cov = n * F.col("sxy") - F.col("sx").cast("double") * F.col("sy")
-    vx = n * F.col("sxx") - F.col("sx").cast("double") * F.col("sx")
-    vy = n * F.col("syy") - F.col("sy").cast("double") * F.col("sy")
-    r = cov / F.sqrt(vx * vy)
-    ok = (F.col("n") > 1) & (vx > 0) & (vy > 0)
-    return m.select(
-        "n",
-        "sx",
-        "sy",
-        F.when(ok, quantize(r, 6)).alias("pearson_r"),
-        F.when(ok, quantize(r * r, 6)).alias("r_squared"),
-    )
 
 
 def events_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Calendar-coverage completeness per event type: observed hours
     vs the type's own active span, plus the LONGEST silent streak in
-    hours — the "is this feed actually flowing?" audit
-    (`events_column_profile` checks content; this checks TIME: a feed
-    with 95% coverage and an 18-hour hole reads very differently from
-    one missing random single hours).
+    hours — the "is this feed actually flowing?" audit (it checks
+    TIME: a feed with 95% coverage and an 18-hour hole reads very
+    differently from one missing random single hours).
 
     Scale: (type, hour) partial agg (calendar-bounded), a per-type
     lag window over that bounded series (partitioned by type), and a
@@ -4033,61 +3573,6 @@ def coverage_from_hourly(hourly: DataFrame) -> DataFrame:
             / F.col("span_hours"),
             6,
         ).alias("coverage"),
-    )
-
-
-def events_json_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Schema-on-read profile of the semi-structured ``props`` JSON:
-    per key — presence count/share, exact distinct values, and the
-    share of values that parse as numbers — the inference report a
-    pipeline runs before promoting a JSON property to a typed column
-    (`events_json_props` extracts a KNOWN key; this DISCOVERS them).
-
-    Scale: one from_json map parse + key explode (narrow, fanout =
-    keys per row), then a keys-bounded partial agg; the row total is
-    a 1-row broadcast. Exact integers throughout.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    cells = json_schema_cells(ev)
-    tot = ev.agg(F.count(F.lit(1)).cast("long").alias("n_rows"))
-    return json_schema_report(cells, tot)
-
-
-def json_schema_cells(ev: DataFrame) -> DataFrame:
-    """(key, value) occurrence counts off the map parse — shared by
-    the batch query and the streaming ingest (`stream_json_schema`
-    accumulates the same key × value-domain-bounded cells)."""
-    kv = ev.select(
-        F.explode(
-            F.from_json(F.col("props"), "map<string,string>")
-        ).alias("key", "val")
-    )
-    return kv.groupBy("key", "val").agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    )
-
-
-def json_schema_report(cells: DataFrame, tot: DataFrame) -> DataFrame:
-    is_num = F.col("val").rlike(r"^-?[0-9]+(\.[0-9]+)?$")
-    per = cells.groupBy("key").agg(
-        F.sum("n").cast("long").alias("n_present"),
-        F.count(F.lit(1)).cast("long").alias("n_distinct"),
-        F.sum(F.when(is_num, F.col("n")).otherwise(0))
-        .cast("long")
-        .alias("n_numeric"),
-    )
-    j = per.crossJoin(F.broadcast(tot))
-    return j.select(
-        "key",
-        "n_rows",
-        "n_present",
-        "n_distinct",
-        quantize(
-            F.col("n_present").cast("double") / F.col("n_rows"), 6
-        ).alias("presence_share"),
-        quantize(
-            F.col("n_numeric").cast("double") / F.col("n_present"), 6
-        ).alias("numeric_share"),
     )
 
 
@@ -4183,274 +3668,6 @@ def events_time_weighted_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_hourly_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-filled hourly value series per event type (the hypertable
-    `locf` primitive): a dense calendar spine with the mean observed
-    value carried forward across silent hours, plus the observed
-    flag and the staleness of each carried value — what dashboards
-    and joins against regular grids need when the raw series has
-    holes.
-
-    Scale: the spine is a 1-row min/max broadcast exploded to the
-    calendar-bounded hour list crossed with the types dim (never
-    event-sized); the LOCF window partitions by event_type (ordered
-    within the calendar-bounded partition, no global sort); counts
-    and means ride the same (type, hour) partial agg.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    cells = ev.groupBy(
-        "event_type", F.date_trunc("hour", F.col("ts")).alias("hour")
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("n_raw"),
-        F.sum("value").alias("sv"),
-    )
-    return locf_from_cells(cells)
-
-
-def locf_from_cells(cells: DataFrame) -> DataFrame:
-    """The gap-filled LOCF series over (event_type, hour, n_raw, sv)
-    cells — shared by the batch query and the streaming drain
-    (`stream_hourly_locf` accumulates the same mergeable sum/count
-    cells at ingest; mean = sv/n is exactly Spark's avg)."""
-    hourly = cells.select(
-        "event_type",
-        "hour",
-        F.col("n_raw").alias("n_events"),
-        quantize(F.col("sv") / F.col("n_raw"), 4).alias("mean_value"),
-    )
-    # keys rename on the self-lineage aggs (drained-relation rule)
-    rng = cells.select(F.col("hour").alias("hour_r")).agg(
-        F.min("hour_r").alias("lo"), F.max("hour_r").alias("hi")
-    )
-    spine = rng.select(
-        F.explode(
-            F.expr("sequence(lo, hi, interval 1 hour)")
-        ).alias("hour")
-    )
-    types = cells.select(
-        F.col("event_type").alias("et_t")
-    ).distinct().select(F.col("et_t").alias("event_type"))
-    grid = types.crossJoin(F.broadcast(spine))
-    j = grid.join(hourly, ["event_type", "hour"], "left")
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("hour")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    filled = j.withColumn(
-        "value_locf", F.last("mean_value", ignorenulls=True).over(w)
-    ).withColumn(
-        "last_obs_hour",
-        F.last(
-            F.when(F.col("n_events").isNotNull(), F.col("hour")),
-            ignorenulls=True,
-        ).over(w),
-    )
-    return filled.select(
-        "event_type",
-        "hour",
-        F.coalesce(F.col("n_events"), F.lit(0))
-        .cast("long")
-        .alias("n_events"),
-        F.col("n_events").isNotNull().alias("observed"),
-        "value_locf",
-        (
-            (
-                F.unix_micros("hour")
-                - F.unix_micros("last_obs_hour")
-            )
-            / F.lit(3600000000)
-        )
-        .cast("long")
-        .alias("staleness_hours"),
-    )
-
-
-def events_hourly_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Linearly interpolated hourly value series per event type — the
-    other hypertable gap-fill mode (`events_hourly_locf` carries the
-    last value; this draws the line between the bracketing
-    observations, the right choice for sampled continuous signals).
-    Edge hours with no bracketing observation on one side stay NULL —
-    interpolation never extrapolates.
-
-    Scale: same calendar-bounded spine × types grid as locf; one
-    BACKWARD and one FORWARD window per type (both partitioned by
-    event_type, ordered within the bounded partition); the blend is
-    exact integer hour arithmetic until the final lerp.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    cells = ev.groupBy(
-        "event_type", F.date_trunc("hour", F.col("ts")).alias("hour")
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("n_raw"),
-        F.sum("value").alias("sv"),
-    )
-    return interp_from_cells(cells)
-
-
-def interp_from_cells(cells: DataFrame) -> DataFrame:
-    """The linear-interpolation series over (event_type, hour, n_raw,
-    sv) cells — shared by the batch query and the streaming drain
-    (`stream_hourly_interp` accumulates the same mergeable sum/count
-    cells at ingest)."""
-    hourly = cells.select(
-        "event_type",
-        "hour",
-        quantize(F.col("sv") / F.col("n_raw"), 4).alias("mean_value"),
-    )
-    # keys rename on the self-lineage aggs (drained-relation rule)
-    rng = cells.select(F.col("hour").alias("hour_r")).agg(
-        F.min("hour_r").alias("lo"), F.max("hour_r").alias("hi")
-    )
-    spine = rng.select(
-        F.explode(
-            F.expr("sequence(lo, hi, interval 1 hour)")
-        ).alias("hour")
-    )
-    types = cells.select(
-        F.col("event_type").alias("et_t")
-    ).distinct().select(F.col("et_t").alias("event_type"))
-    grid = types.crossJoin(F.broadcast(spine))
-    j = grid.join(hourly, ["event_type", "hour"], "left").withColumn(
-        "t", (F.unix_micros("hour") / F.lit(3600000000)).cast("long")
-    )
-    wb = (
-        Window.partitionBy("event_type")
-        .orderBy("hour")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wf = (
-        Window.partitionBy("event_type")
-        .orderBy("hour")
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
-    obs_t = F.when(F.col("mean_value").isNotNull(), F.col("t"))
-    x = (
-        j.withColumn(
-            "pv", F.last("mean_value", ignorenulls=True).over(wb)
-        )
-        .withColumn("pt", F.last(obs_t, ignorenulls=True).over(wb))
-        .withColumn(
-            "nv", F.first("mean_value", ignorenulls=True).over(wf)
-        )
-        .withColumn("nt", F.first(obs_t, ignorenulls=True).over(wf))
-    )
-    frac = (F.col("t") - F.col("pt")).cast("double") / (
-        F.col("nt") - F.col("pt")
-    ).cast("double")
-    lerp = F.col("pv") + (F.col("nv") - F.col("pv")) * frac
-    value = F.when(F.col("mean_value").isNotNull(), F.col("mean_value")).when(
-        F.col("pv").isNotNull() & F.col("nv").isNotNull(),
-        quantize(lerp, 4),
-    )
-    return x.select(
-        "event_type",
-        "hour",
-        F.col("mean_value").isNotNull().alias("observed"),
-        value.alias("value_interp"),
-    )
-
-
-def events_value_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OHLC candle downsampling of event value per (type, hour):
-    open/high/low/close + volume — the time-bucketed first/last/
-    extremes primitive every financial and telemetry store exposes,
-    done with struct-max argmax (no ranking window, no sort: first =
-    min over (ts, event_id, value) structs, last = max) so the candle
-    rides the same single partial agg as the count.
-
-    Scale: ONE (type, hour) partial agg; argmax via struct ordering
-    is map-side combinable; ties broken by event_id so both engines
-    pick the identical row.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    return ohlc_report(ohlc_cells(ev))
-
-
-def ohlc_cells(ev: DataFrame) -> DataFrame:
-    """The (type, hour) candle aggregation — shared by the batch
-    query and the streaming ingest (`stream_value_ohlc` accumulates
-    the same struct-min/max state per cell)."""
-    e = ev.select(
-        "event_type",
-        F.date_trunc("hour", F.col("ts")).alias("hour"),
-        F.unix_micros("ts").alias("ts_us"),
-        "event_id",
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("vq"),
-    )
-    return e.groupBy("event_type", "hour").agg(
-        F.count(F.lit(1)).cast("long").alias("volume"),
-        F.min(F.struct("ts_us", "event_id", "vq")).alias("f"),
-        F.max(F.struct("ts_us", "event_id", "vq")).alias("l"),
-        F.min("vq").alias("lo_q"),
-        F.max("vq").alias("hi_q"),
-    )
-
-
-def ohlc_report(per: DataFrame) -> DataFrame:
-    return per.select(
-        "event_type",
-        "hour",
-        "volume",
-        quantize(F.col("f.vq") / 100.0, 2).alias("open"),
-        quantize(F.col("hi_q") / 100.0, 2).alias("high"),
-        quantize(F.col("lo_q") / 100.0, 2).alias("low"),
-        quantize(F.col("l.vq") / 100.0, 2).alias("close"),
-    )
-
-
-def events_dow_hour_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The weekly traffic heatmap: event count and share per
-    (day-of-week, hour-of-day) cell, plus each cell's ratio to its
-    hour-of-day mean (the hourly profile with the WEEKLY structure
-    `events_hourly_profile` averages away — weekday mornings vs
-    weekend nights).
-
-    Scale: one ≤168-cell partial agg off the scan; the hour-of-day
-    margin and grand total are broadcasts of that bounded table —
-    exact integers, two divisions.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    cells = ev.groupBy(
-        F.dayofweek("ts").cast("long").alias("dow"),
-        F.hour("ts").cast("long").alias("hod"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("n_events"))
-    return heatmap_from_cells(cells)
-
-
-def heatmap_from_cells(cells: DataFrame) -> DataFrame:
-    """The weekly-heatmap scan over ≤168 (dow, hod, n_events) cells —
-    shared by the batch query and the streaming drain
-    (`stream_dow_hour_heatmap` accumulates the same bounded cells at
-    ingest)."""
-    # keys rename on the self-lineage joins (drained-relation rule)
-    hod_m = cells.select(
-        F.col("hod").alias("hod_m"), F.col("n_events").alias("ne_m")
-    ).groupBy("hod_m").agg(
-        F.sum("ne_m").cast("long").alias("hod_events"),
-        F.count(F.lit(1)).cast("long").alias("hod_days"),
-    )
-    tot = cells.select(F.col("n_events").alias("ne_g")).agg(
-        F.sum("ne_g").cast("long").alias("total")
-    )
-    j = cells.join(
-        F.broadcast(hod_m), F.col("hod") == F.col("hod_m")
-    ).crossJoin(F.broadcast(tot))
-    hod_mean = F.col("hod_events").cast("double") / F.col("hod_days")
-    return j.select(
-        "dow",
-        "hod",
-        "n_events",
-        quantize(
-            F.col("n_events").cast("double") / F.col("total"), 6
-        ).alias("share"),
-        quantize(
-            F.col("n_events").cast("double") / hod_mean, 4
-        ).alias("vs_hour_mean"),
-    )
-
-
 def events_value_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population stability index of event value between the first
     and second half of the observation window (split at the median
@@ -4513,36 +3730,12 @@ def events_value_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-K_ANON = 5
-
-
-def events_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-anonymity audit over the quasi-identifier tuple
-    (event_type, hour-of-day, value rounded to the tens bucket): how
-    many rows sit in QI groups smaller than k=5 — the re-identification
-    risk screen run before sharing an event extract (a row alone in
-    its QI cell is linkable even with user_id dropped; the governance
-    sibling of `doc_pii_scrub`, which handles direct identifiers).
-
-    Scale: one QI-keyed partial agg (cells bounded by the QI domain,
-    never rows) folding into a 1-row risk summary — exact integers
-    with single divisions.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    cells = ev.groupBy(
-        "event_type",
-        F.hour("ts").alias("hod"),
-        F.floor(F.col("value") / 10.0).cast("long").alias("vb"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("g"))
-    return k_anonymity_from_cells(cells)
-
-
 L_DIVERSITY = 3
 
 
 def events_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """l-diversity audit over the same quasi-identifier cells as
-    `events_k_anonymity`, with user_id as the sensitive attribute:
+    """l-diversity audit over the (event_type, hour-of-day, value-bin)
+    quasi-identifier cells, with user_id as the sensitive attribute:
     a QI cell can be k-anonymous yet still leak if every row in it
     belongs to the SAME user — this reports cells whose distinct-user
     diversity falls below l=3 and the row mass exposed by them (the
@@ -4588,109 +3781,6 @@ def l_diversity_from_cells(cells: DataFrame) -> DataFrame:
         quantize(
             F.col("rows_at_risk").cast("double") / F.col("n_rows"), 6
         ).alias("risk_share"),
-    )
-
-
-def k_anonymity_from_cells(cells: DataFrame) -> DataFrame:
-    """The risk summary over a (QI..., g) cell table — shared by the
-    batch query and the streaming drain (`stream_k_anonymity`
-    accumulates the same QI-domain-bounded cells at ingest)."""
-    return cells.agg(
-        F.sum("g").cast("long").alias("n_rows"),
-        F.count(F.lit(1)).cast("long").alias("n_groups"),
-        F.min("g").cast("long").alias("min_group_size"),
-        F.sum(F.when(F.col("g") < K_ANON, 1).otherwise(0))
-        .cast("long")
-        .alias("n_small_groups"),
-        F.sum(F.when(F.col("g") < K_ANON, F.col("g")).otherwise(0))
-        .cast("long")
-        .alias("rows_at_risk"),
-    ).select(
-        "n_rows",
-        "n_groups",
-        "min_group_size",
-        "n_small_groups",
-        "rows_at_risk",
-        quantize(
-            F.col("rows_at_risk").cast("double") / F.col("n_rows"), 6
-        ).alias("risk_share"),
-    )
-
-
-def events_daily_health(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The daily ops dashboard as ONE query: per day — events, DAU,
-    stickiness (DAU/WAU), error share, cumulative SLO burn, and the
-    count of consensus-anomalous hours (≥2 detector votes) — the
-    composite a reliability/growth review opens with, stitched from
-    four driver-checked tiers instead of re-deriving any of them.
-
-    Scale: ONE events scan (VERDICT r11 item 7; the composed form
-    paid five). Everything the three tiers need folds exactly out of
-    one (hour, user_id) cell hub: the distinct (day, user) activity
-    set (date_trunc(day, hour) == date_trunc(day, ts)), the daily
-    event/error counts (integer sums regroup exactly), and the hourly
-    series (ditto) — each fed to the same factored helper its
-    standalone query uses (`stickiness_from_act`,
-    `error_budget_from_daily`, `ensemble_from_hourly`), so outputs
-    are unchanged. The three derived series are hours/days/user-day
-    bounded and checkpoint as CONCURRENT jobs off the hub; the stitch
-    below is unchanged.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    cells = (
-        ev.groupBy(
-            F.date_trunc("hour", F.col("ts")).alias("hour"), "user_id"
-        )
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.sum((F.col("event_type") == "error").cast("int"))
-            .cast("long")
-            .alias("n_errors"),
-        )
-        .transform(materialize)
-    )
-    act, daily, hourly = materialize_all(
-        [
-            cells.select(
-                F.date_trunc("day", F.col("hour")).alias("day"),
-                "user_id",
-            ).distinct(),
-            cells.groupBy(
-                F.date_trunc("day", F.col("hour")).alias("day")
-            ).agg(
-                F.sum("n_events").cast("long").alias("n_events"),
-                F.sum("n_errors").cast("long").alias("n_errors"),
-            ),
-            cells.groupBy("hour").agg(
-                F.sum("n_events").cast("long").alias("n")
-            ),
-        ]
-    )
-    st = stickiness_from_act(act)
-    eb = error_budget_from_daily(daily).select(
-        "day", "n_events", "n_errors", "error_share", "budget_burn"
-    )
-    an = (
-        ensemble_from_hourly(hourly)
-        .filter(F.col("votes") >= 2)
-        .groupBy(F.date_trunc("day", F.col("hour")).alias("day"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_anomaly_hours"))
-    )
-    return (
-        eb.join(F.broadcast(st), "day")
-        .join(F.broadcast(an), "day", "left")
-        .select(
-            "day",
-            "n_events",
-            "dau",
-            "stickiness",
-            "n_errors",
-            "error_share",
-            "budget_burn",
-            F.coalesce("n_anomaly_hours", F.lit(0))
-            .cast("long")
-            .alias("n_anomaly_hours"),
-        )
     )
 
 
@@ -4897,81 +3987,6 @@ def funnel_latency_from_times(times: DataFrame) -> DataFrame:
     return n_view.crossJoin(
         F.broadcast(lat(vc, "view_to_click"))
     ).crossJoin(F.broadcast(lat(cp, "click_to_purchase")))
-
-
-def events_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audience overlap between event types: Jaccard similarity of
-    each type pair's user sets — which behaviors share an audience
-    (near-1 overlap between error and purchase users means errors hit
-    buyers, a different fire than errors hitting lurkers; the
-    behavioral cousin of `corpus_source_overlap`'s vocabulary
-    Jaccard).
-
-    Scale: (type, user) distinct pairs are one natural-key shuffle;
-    the pair join is keyed on user_id, so compare volume is Σ
-    types-per-user² (types-bounded per user, never users²); set sizes
-    broadcast back; Jaccard is an exact integer ratio.
-    """
-    tu = (
-        load_table(spark, sf_dir, "events")
-        .select("event_type", "user_id")
-        .distinct()
-    )
-    return audience_overlap_from_pairs(tu)
-
-
-def audience_overlap_from_pairs(tu: DataFrame) -> DataFrame:
-    """The Jaccard-overlap scan over distinct (event_type, user_id)
-    pairs — shared by the batch query and the streaming drain
-    (`stream_audience_overlap` dedups to the same pairs at
-    ingest)."""
-    # keys rename on the self-lineage joins (drained-relation rule)
-    sizes = tu.select(
-        F.col("event_type").alias("et_s"),
-        F.col("user_id").alias("uid_s"),
-    ).groupBy(F.col("et_s").alias("event_type")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_users")
-    )
-    a = tu.select("user_id", F.col("event_type").alias("ta"))
-    b = tu.select(
-        F.col("user_id").alias("uid_b"), F.col("event_type").alias("tb")
-    )
-    inter = (
-        a.join(b, F.col("user_id") == F.col("uid_b"))
-        .filter(F.col("ta") < F.col("tb"))
-        .groupBy("ta", "tb")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_common"))
-    )
-    return (
-        inter.join(
-            F.broadcast(
-                sizes.select(
-                    F.col("event_type").alias("ta"),
-                    F.col("n_users").alias("na"),
-                )
-            ),
-            "ta",
-        )
-        .join(
-            F.broadcast(
-                sizes.select(
-                    F.col("event_type").alias("tb"),
-                    F.col("n_users").alias("nb"),
-                )
-            ),
-            "tb",
-        )
-        .select(
-            F.col("ta").alias("type_a"),
-            F.col("tb").alias("type_b"),
-            "n_common",
-            quantize(
-                F.col("n_common").cast("double")
-                / (F.col("na") + F.col("nb") - F.col("n_common")),
-                6,
-            ).alias("jaccard"),
-        )
-    )
 
 
 def events_churn_half_life(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5933,9 +4948,7 @@ def events_hour_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     hour (ties broken toward the earliest hour — deterministic), its
     traffic share, and the Shannon entropy (bits) of the 24-bin
     distribution.  Flat 24/7 feeds → entropy ≈ log2(24) ≈ 4.585;
-    batch-job feeds that fire at one fixed hour → ≈ 0
-    (`events_dow_hour_heatmap` is the full grid; this is its
-    per-type decision summary).
+    batch-job feeds that fire at one fixed hour → ≈ 0.
 
     Scale: (type, hod) partial agg — ≤ 24·|types| rows — then a
     types-bounded final agg.  The argmax is the integer-packed
@@ -6326,8 +5339,7 @@ def model_compare_from_cells(cells: DataFrame) -> DataFrame:
             ) * s[t - m]
             wl = new
         # theta: OLS decompose on exact integer moments + SES(1/2)
-        # on the theta=2 line (the standalone `theta_from_cells`
-        # recurrence, restricted to the train prefix)
+        # on the theta=2 line, over the train prefix
         ti = train.astype(np.int64)
         sx = T * (T + 1) // 2
         sxx = T * (T + 1) * (2 * T + 1) // 6
@@ -6508,89 +5520,6 @@ def mttr_from_hourly(hourly: DataFrame) -> DataFrame:
 THETA_ALPHA = 0.5  # SES smoothing on the theta=2 line (binary-exact)
 
 
-def theta_from_cells(cells: DataFrame) -> DataFrame:
-    """Theta-method forecast (Assimakopoulos & Nikolopoulos — the
-    M3-competition winner) per event type over the zero-filled
-    hourly series: decompose into the theta=0 line (the OLS linear
-    trend) and the theta=2 line (2y − trend, double local
-    curvature), SES the theta=2 line with α=1/2, and forecast the
-    mean of the SES level and the trend extrapolation. Slots
-    between seasonal-naive / Holt / Holt–Winters in the forecasting
-    ladder — the damped-trend-like estimator that wins when the
-    trend is real but unreliable.
-
-    Exactness: the OLS a, b come from exact integer moment sums via
-    one double division each; α=1/2 makes every SES step IEEE-exact;
-    the SQL twin replays the identical recurrence in a recursive CTE
-    bit-for-bit. Scale: sequential only within a type's
-    calendar-bounded series, one Arrow group per type."""
-    import numpy as np
-    import pandas as pd
-
-    bounds = cells.agg(
-        F.min("hour_us").alias("mn"), F.max("hour_us").alias("mx")
-    )
-    g = cells.crossJoin(F.broadcast(bounds))
-
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        mn, mx = int(pdf["mn"].iloc[0]), int(pdf["mx"].iloc[0])
-        hours = np.arange(mn, mx + HOUR_US, HOUR_US, dtype=np.int64)
-        y = np.zeros(len(hours), dtype=np.int64)
-        idx = ((pdf["hour_us"].to_numpy() - mn) // HOUR_US).astype(int)
-        y[idx] = pdf["cnt"].to_numpy().astype(np.int64)
-        n = len(y)
-        # exact integer moment sums (python ints — no overflow), one
-        # double division each: bit-identical to the SQL twin
-        sx = n * (n + 1) // 2
-        sxx = n * (n + 1) * (2 * n + 1) // 6
-        sy = int(y.sum())
-        sxy = int((np.arange(1, n + 1, dtype=np.int64) * y).sum())
-        den = n * sxx - sx * sx
-        b = float(n * sxy - sx * sy) / float(den) if den else 0.0
-        a = (float(sy) - b * float(sx)) / float(n)
-        s = 2.0 * float(y[0]) - (a + b * 1.0)
-        for t in range(2, n + 1):
-            x = 2.0 * float(y[t - 1]) - (a + b * float(t))
-            s = THETA_ALPHA * x + (1.0 - THETA_ALPHA) * s
-        fc = 0.5 * s + 0.5 * (a + b * float(n + 1))
-        return pd.DataFrame(
-            {
-                "event_type": [pdf["event_type"].iloc[0]],
-                "n_hours": [n],
-                "intercept": [a],
-                "slope": [b],
-                "ses_theta2": [s],
-                "forecast_next": [fc],
-            }
-        )
-
-    fitted = g.groupBy("event_type").applyInPandas(
-        fit,
-        schema=(
-            "event_type string, n_hours long, intercept double,"
-            " slope double, ses_theta2 double, forecast_next double"
-        ),
-    )
-    return fitted.select(
-        "event_type",
-        "n_hours",
-        quantize(F.col("intercept"), 4).alias("intercept"),
-        quantize(F.col("slope"), 6).alias("slope"),
-        quantize(F.col("ses_theta2"), 4).alias("ses_theta2"),
-        quantize(F.col("forecast_next"), 4).alias("forecast_next"),
-    )
-
-
-def events_theta_forecast(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Theta-method hourly forecast per event type — see
-    :func:`theta_from_cells`."""
-    return theta_from_cells(
-        holt_cells(load_table(spark, sf_dir, "events"))
-    )
-
-
 DP_EPSILON = 1.0
 # inverse-CDF Laplace from a 32-bit md5-derived uniform: |noise| <=
 # (1/eps) * ln(2^32) ~ 22 at eps=1 — the release's worst-case shift
@@ -6642,12 +5571,12 @@ def dp_release_from_cells(cells: DataFrame) -> DataFrame:
 def events_dp_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Differentially-private hourly event counts: the Laplace(1/eps)
     count release over the (hour, event_type) contingency table —
-    closing the privacy tier (`events_k_anonymity` redacts small
-    cells, `events_l_diversity` audits attribute diversity, this one
-    PUBLISHES a table with a formal epsilon guarantee). Noise is a
-    deterministic inverse-CDF draw keyed on the cell (md5-derived
-    uniform), rounded to the integer grid and clamped at zero — so
-    the release is reproducible and fully SQL-oracled.
+    closing the privacy tier (`events_l_diversity` audits attribute
+    diversity, this one PUBLISHES a table with a formal epsilon
+    guarantee). Noise is a deterministic inverse-CDF draw keyed on
+    the cell (md5-derived uniform), rounded to the integer grid and
+    clamped at zero — so the release is reproducible and fully
+    SQL-oracled.
 
     Scale: one map-side-combined count per cell, then a narrow
     per-cell expression — no second shuffle, cells bounded by
@@ -7317,7 +6246,6 @@ QUERIES = {
     "events_t_closeness": events_t_closeness,
     "events_iv_wald": events_iv_wald,
     "events_interrupted_ts": events_interrupted_ts,
-    "events_theta_forecast": events_theta_forecast,
     "events_mttr": events_mttr,
     "events_attribution_markov": events_attribution_markov,
     "events_cuped": events_cuped,
@@ -7328,8 +6256,6 @@ QUERIES = {
     "events_anomaly_injection_eval": events_anomaly_injection_eval,
     "events_psi_injection_eval": events_psi_injection_eval,
     "events_quantile_treatment_effect": events_quantile_treatment_effect,
-    "events_winsorized_welch": events_winsorized_welch,
-    "events_experiment_readout": events_experiment_readout,
     "events_bootstrap_diff_ci": events_bootstrap_diff_ci,
     "events_absorption": events_absorption,
     "events_dp_user_total": events_dp_user_total,
@@ -7350,18 +6276,10 @@ QUERIES = {
     "events_l_diversity": events_l_diversity,
     "events_cusum": events_cusum,
     "events_sen_slope": events_sen_slope,
-    "events_column_profile": events_column_profile,
-    "events_k_anonymity": events_k_anonymity,
     "events_value_psi": events_value_psi,
-    "events_dow_hour_heatmap": events_dow_hour_heatmap,
     "events_time_weighted_value": events_time_weighted_value,
     "events_uptime": events_uptime,
-    "events_json_schema": events_json_schema,
     "events_coverage": events_coverage,
-    "events_error_load_corr": events_error_load_corr,
-    "events_hourly_locf": events_hourly_locf,
-    "events_value_ohlc": events_value_ohlc,
-    "events_hourly_interp": events_hourly_interp,
     "events_value_levene": events_value_levene,
     "events_funnel_latency": events_funnel_latency,
     "events_ewma_control": events_ewma_control,
@@ -7370,7 +6288,6 @@ QUERIES = {
     "events_error_budget": events_error_budget,
     "events_session_stats": events_session_stats,
     "events_forecast_scorecard": events_forecast_scorecard,
-    "events_daily_health": events_daily_health,
     "events_mann_kendall": events_mann_kendall,
     "events_ab_welch": events_ab_welch,
     "events_conversion_ztest": events_conversion_ztest,
@@ -7379,9 +6296,7 @@ QUERIES = {
     "events_ab_srm": events_ab_srm,
     "events_value_kruskal": events_value_kruskal,
     "events_periodogram": events_periodogram,
-    "events_transition_entropy": events_transition_entropy,
     "events_churn_half_life": events_churn_half_life,
-    "events_audience_overlap": events_audience_overlap,
     "events_retention_hourly": events_retention_hourly,
     "events_dau": events_dau,
     "events_dau_approx": events_dau_approx,
@@ -7399,7 +6314,6 @@ QUERIES = {
     "events_hourly_anomaly": events_hourly_anomaly,
     "events_wau_merge": events_wau_merge,
     "events_rolling_actives": events_rolling_actives,
-    "events_markov_stationary": events_markov_stationary,
     "events_attribution": events_attribution,
     "events_bot_detection": events_bot_detection,
     "events_new_vs_returning": events_new_vs_returning,
@@ -7411,12 +6325,10 @@ QUERIES = {
     "events_forecast_hourly": events_forecast_hourly,
     "events_changepoint": events_changepoint,
     "events_cohort_retention": events_cohort_retention,
-    "events_burstiness": events_burstiness,
     "events_power_law_fit": events_power_law_fit,
     "events_seasonal_decompose": events_seasonal_decompose,
     "events_autocorr": events_autocorr,
     "events_anomaly_residual": events_anomaly_residual,
-    "events_user_entropy": events_user_entropy,
     "events_survival": events_survival,
     "events_gini": events_gini,
     "events_session_funnel": events_session_funnel,
@@ -7677,21 +6589,6 @@ ORACLE["events_rolling_actives"] = """
     GROUP BY 1
 """
 
-# exact out-degree counts carry the SQL check; the stationary vector
-# itself is an iterative fixpoint, certified by the TRUE invariants
-ORACLE["events_markov_stationary"] = """
-    SELECT src AS event_type,
-           CAST(count(*) AS BIGINT) AS n_out,
-           TRUE AS stationary_ok,
-           TRUE AS sum_ok
-    FROM (
-      SELECT event_type, lag(event_type) OVER (
-               PARTITION BY user_id ORDER BY epoch_us(ts), event_id
-             ) AS src
-      FROM events
-    ) WHERE src IS NOT NULL
-    GROUP BY 1
-"""
 
 ORACLE["events_attribution"] = f"""
     WITH buys AS (
@@ -7962,33 +6859,6 @@ ORACLE["events_cohort_retention"] = f"""
     FROM tri JOIN sizes USING (cohort_day)
 """
 
-ORACLE["events_burstiness"] = f"""
-    WITH hourly AS (
-      SELECT date_trunc('hour', ts) AS hour, event_type,
-             CAST(count(*) AS BIGINT) AS n
-      FROM events GROUP BY 1, 2
-    ),
-    per AS (
-      SELECT event_type,
-             CAST(count(*) AS BIGINT) AS n_hours,
-             CAST(sum(n) AS BIGINT) AS sx,
-             CAST(sum(n * n) AS BIGINT) AS sxx
-      FROM hourly GROUP BY 1
-    )
-    SELECT event_type, n_hours,
-           {sql_quantize('CAST(sx AS DOUBLE) / n_hours', 4)}
-             AS mean_hourly,
-           {sql_quantize(
-               '(CAST(sxx AS DOUBLE)'
-               ' - CAST(sx AS DOUBLE) * sx / n_hours) / n_hours', 4)}
-             AS var_hourly,
-           {sql_quantize(
-               '((CAST(sxx AS DOUBLE)'
-               ' - CAST(sx AS DOUBLE) * sx / n_hours) / n_hours)'
-               ' / (CAST(sx AS DOUBLE) / n_hours)', 4)}
-             AS fano_factor
-    FROM per
-"""
 
 ORACLE["events_power_law_fit"] = f"""
     WITH per AS (
@@ -8135,29 +7005,6 @@ ORACLE["events_anomaly_residual"] = f"""
     WHERE mad.mad_r > 0 AND dev.adev > 3 * mad.mad_r
 """
 
-ORACLE["events_user_entropy"] = f"""
-    WITH ut AS (
-      SELECT user_id, event_type, count(*) AS f
-      FROM events GROUP BY 1, 2
-    ),
-    tot AS (
-      SELECT user_id, sum(f) AS n_events, count(*) AS n_types
-      FROM ut GROUP BY 1
-    ),
-    j AS (
-      SELECT ut.user_id, tot.n_events, tot.n_types,
-             floor(ut.f / tot.n_events * 1000000000.0 + 0.5)
-               / 1000000000.0 AS p
-      FROM ut JOIN tot USING (user_id)
-    )
-    SELECT user_id,
-           CAST(any_value(n_events) AS BIGINT) AS n_events,
-           CAST(any_value(n_types) AS BIGINT) AS n_types,
-           {sql_quantize(
-               'sum(CASE WHEN p > 0 THEN -p * log2(p)'
-               ' ELSE 0.0 END)', 6)} AS type_entropy_bits
-    FROM j GROUP BY 1
-"""
 
 ORACLE["events_survival"] = f"""
     WITH ev AS (
@@ -8284,6 +7131,7 @@ ORACLE["events_session_funnel"] = f"""
     FROM tot, nv, nc, np
 """
 
+
 ORACLE["events_mann_kendall"] = f"""
     WITH hourly AS (
       SELECT date_trunc('hour', ts) AS hour,
@@ -8358,172 +7206,6 @@ ORACLE["events_sen_slope"] = f"""
     FROM resid GROUP BY sen_slope, n_pairs
 """
 
-ORACLE["events_hourly_interp"] = f"""
-    WITH hourly AS (
-      SELECT event_type, date_trunc('hour', ts) AS hour,
-             {sql_quantize('avg(value)', 4)} AS mean_value
-      FROM events GROUP BY 1, 2
-    ),
-    rng AS (
-      SELECT date_trunc('hour', min(ts)) AS lo,
-             date_trunc('hour', max(ts)) AS hi
-      FROM events
-    ),
-    spine AS (
-      SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS hour
-      FROM rng
-    ),
-    grid AS (
-      SELECT t.event_type, s.hour
-      FROM (SELECT DISTINCT event_type FROM events) t
-      CROSS JOIN spine s
-    ),
-    j AS (
-      SELECT g.event_type, g.hour, h.mean_value,
-             CAST(epoch_us(g.hour) / 3600000000 AS BIGINT) AS t
-      FROM grid g LEFT JOIN hourly h
-        ON g.event_type = h.event_type AND g.hour = h.hour
-    ),
-    x AS (
-      SELECT *,
-             last_value(mean_value IGNORE NULLS) OVER (
-               PARTITION BY event_type ORDER BY hour
-               ROWS UNBOUNDED PRECEDING) AS pv,
-             last_value(CASE WHEN mean_value IS NOT NULL THEN t END
-                 IGNORE NULLS) OVER (
-               PARTITION BY event_type ORDER BY hour
-               ROWS UNBOUNDED PRECEDING) AS pt,
-             first_value(mean_value IGNORE NULLS) OVER (
-               PARTITION BY event_type ORDER BY hour
-               ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
-               AS nv,
-             first_value(CASE WHEN mean_value IS NOT NULL THEN t END
-                 IGNORE NULLS) OVER (
-               PARTITION BY event_type ORDER BY hour
-               ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
-               AS nt
-      FROM j
-    )
-    SELECT event_type, hour,
-           mean_value IS NOT NULL AS observed,
-           CASE WHEN mean_value IS NOT NULL THEN mean_value
-                WHEN pv IS NOT NULL AND nv IS NOT NULL THEN
-                  {sql_quantize(
-                      'pv + (nv - pv) * (CAST(t - pt AS DOUBLE)'
-                      ' / (nt - pt))', 4)}
-           END AS value_interp
-    FROM x
-"""
-
-ORACLE["events_value_ohlc"] = f"""
-    WITH ev AS (
-      SELECT event_type, date_trunc('hour', ts) AS hour,
-             epoch_us(ts) AS ts_us, event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS vq
-      FROM events
-    ),
-    per AS (
-      SELECT event_type, hour,
-             CAST(count(*) AS BIGINT) AS volume,
-             min_by(vq, CAST(ts_us AS HUGEINT) * 1000000000000
-                        + event_id) AS open_q,
-             max_by(vq, CAST(ts_us AS HUGEINT) * 1000000000000
-                        + event_id) AS close_q,
-             CAST(min(vq) AS BIGINT) AS lo_q,
-             CAST(max(vq) AS BIGINT) AS hi_q
-      FROM ev GROUP BY 1, 2
-    )
-    SELECT event_type, hour, volume,
-           {sql_quantize('open_q / 100.0', 2)} AS open,
-           {sql_quantize('hi_q / 100.0', 2)} AS high,
-           {sql_quantize('lo_q / 100.0', 2)} AS low,
-           {sql_quantize('close_q / 100.0', 2)} AS close
-    FROM per
-"""
-
-ORACLE["events_hourly_locf"] = f"""
-    WITH hourly AS (
-      SELECT event_type, date_trunc('hour', ts) AS hour,
-             CAST(count(*) AS BIGINT) AS n_events,
-             {sql_quantize('avg(value)', 4)} AS mean_value
-      FROM events GROUP BY 1, 2
-    ),
-    rng AS (
-      SELECT date_trunc('hour', min(ts)) AS lo,
-             date_trunc('hour', max(ts)) AS hi
-      FROM events
-    ),
-    spine AS (
-      SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS hour
-      FROM rng
-    ),
-    grid AS (
-      SELECT t.event_type, s.hour
-      FROM (SELECT DISTINCT event_type FROM events) t
-      CROSS JOIN spine s
-    ),
-    j AS (
-      SELECT g.event_type, g.hour, h.n_events, h.mean_value
-      FROM grid g LEFT JOIN hourly h
-        ON g.event_type = h.event_type AND g.hour = h.hour
-    ),
-    filled AS (
-      SELECT *,
-             last_value(mean_value IGNORE NULLS) OVER (
-               PARTITION BY event_type ORDER BY hour
-               ROWS UNBOUNDED PRECEDING
-             ) AS value_locf,
-             last_value(CASE WHEN n_events IS NOT NULL THEN hour END
-                 IGNORE NULLS) OVER (
-               PARTITION BY event_type ORDER BY hour
-               ROWS UNBOUNDED PRECEDING
-             ) AS last_obs_hour
-      FROM j
-    )
-    SELECT event_type, hour,
-           CAST(coalesce(n_events, 0) AS BIGINT) AS n_events,
-           n_events IS NOT NULL AS observed,
-           value_locf,
-           CAST((epoch_us(hour) - epoch_us(last_obs_hour))
-                / 3600000000 AS BIGINT) AS staleness_hours
-    FROM filled
-"""
-
-ORACLE["events_error_load_corr"] = f"""
-    WITH hourly AS (
-      SELECT date_trunc('hour', ts) AS hour,
-             CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
-               AS BIGINT) AS x,
-             CAST(sum(CASE WHEN event_type = 'error' THEN 0 ELSE 1 END)
-               AS BIGINT) AS y
-      FROM events GROUP BY 1
-    ),
-    m AS (
-      SELECT CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(x) AS BIGINT) AS sx,
-             CAST(sum(y) AS BIGINT) AS sy,
-             CAST(sum(x * y) AS BIGINT) AS sxy,
-             CAST(sum(x * x) AS BIGINT) AS sxx,
-             CAST(sum(y * y) AS BIGINT) AS syy
-      FROM hourly
-    ),
-    c AS (
-      SELECT *,
-             CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy AS cov,
-             CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx AS vx,
-             CAST(n AS DOUBLE) * syy - CAST(sy AS DOUBLE) * sy AS vy
-      FROM m
-    )
-    SELECT n, sx, sy,
-           CASE WHEN n > 1 AND vx > 0 AND vy > 0 THEN
-             {sql_quantize('cov / sqrt(vx * vy)', 6)}
-           END AS pearson_r,
-           CASE WHEN n > 1 AND vx > 0 AND vy > 0 THEN
-             {sql_quantize(
-                 '(cov / sqrt(vx * vy)) * (cov / sqrt(vx * vy))', 6)}
-           END AS r_squared
-    FROM c
-"""
 
 ORACLE["events_coverage"] = f"""
     WITH hourly AS (
@@ -8555,30 +7237,6 @@ ORACLE["events_coverage"] = f"""
     FROM per
 """
 
-ORACLE["events_json_schema"] = f"""
-    WITH kv AS (
-      SELECT unnest(json_keys(props)) AS key,
-             json_extract_string(props,
-               '$.' || unnest(json_keys(props))) AS val
-      FROM events
-    ),
-    per AS (
-      SELECT key,
-             CAST(count(*) AS BIGINT) AS n_present,
-             CAST(count(DISTINCT val) AS BIGINT) AS n_distinct,
-             CAST(sum(CASE WHEN regexp_full_match(val,
-                 '-?[0-9]+(\\.[0-9]+)?') THEN 1 ELSE 0 END)
-               AS BIGINT) AS n_numeric
-      FROM kv GROUP BY 1
-    ),
-    tot AS (SELECT CAST(count(*) AS BIGINT) AS n_rows FROM events)
-    SELECT key, n_rows, n_present, n_distinct,
-           {sql_quantize('CAST(n_present AS DOUBLE) / n_rows', 6)}
-             AS presence_share,
-           {sql_quantize('CAST(n_numeric AS DOUBLE) / n_present', 6)}
-             AS numeric_share
-    FROM per CROSS JOIN tot
-"""
 
 ORACLE["events_uptime"] = f"""
     WITH ev AS (
@@ -8643,29 +7301,6 @@ ORACLE["events_time_weighted_value"] = f"""
     FROM per
 """
 
-ORACLE["events_dow_hour_heatmap"] = f"""
-    WITH cells AS (
-      SELECT CAST(dayofweek(ts) + 1 AS BIGINT) AS dow,
-             CAST(hour(ts) AS BIGINT) AS hod,
-             CAST(count(*) AS BIGINT) AS n_events
-      FROM events GROUP BY 1, 2
-    ),
-    hm AS (
-      SELECT hod AS hod_m,
-             CAST(sum(n_events) AS BIGINT) AS hod_events,
-             CAST(count(*) AS BIGINT) AS hod_days
-      FROM cells GROUP BY 1
-    ),
-    tot AS (SELECT CAST(sum(n_events) AS BIGINT) AS total FROM cells)
-    SELECT c.dow, c.hod, c.n_events,
-           {sql_quantize('CAST(c.n_events AS DOUBLE) / t.total', 6)}
-             AS share,
-           {sql_quantize(
-               'CAST(c.n_events AS DOUBLE)'
-               ' / (CAST(h.hod_events AS DOUBLE) / h.hod_days)', 4)}
-             AS vs_hour_mean
-    FROM cells c JOIN hm h ON c.hod = h.hod_m CROSS JOIN tot t
-"""
 
 ORACLE["events_value_psi"] = f"""
     WITH ev AS (
@@ -8703,37 +7338,6 @@ ORACLE["events_value_psi"] = f"""
     FROM rows_ CROSS JOIN s
 """
 
-ORACLE["events_k_anonymity"] = f"""
-    WITH cells AS (
-      SELECT event_type, hour(ts) AS hod,
-             CAST(floor(value / 10.0) AS BIGINT) AS vb,
-             CAST(count(*) AS BIGINT) AS g
-      FROM events GROUP BY 1, 2, 3
-    )
-    SELECT CAST(sum(g) AS BIGINT) AS n_rows,
-           CAST(count(*) AS BIGINT) AS n_groups,
-           CAST(min(g) AS BIGINT) AS min_group_size,
-           CAST(sum(CASE WHEN g < {K_ANON} THEN 1 ELSE 0 END)
-             AS BIGINT) AS n_small_groups,
-           CAST(sum(CASE WHEN g < {K_ANON} THEN g ELSE 0 END)
-             AS BIGINT) AS rows_at_risk,
-           {sql_quantize(
-               'CAST(sum(CASE WHEN g < ' + str(K_ANON)
-               + ' THEN g ELSE 0 END) AS DOUBLE) / sum(g)', 6)}
-             AS risk_share
-    FROM cells
-"""
-
-ORACLE["events_column_profile"] = profile_oracle_sql(
-    "events",
-    ["event_id", "ts", "user_id", "event_type", "value", "props"],
-    {
-        "event_id": "event_id",
-        "ts": "epoch_us(ts)",
-        "user_id": "user_id",
-        "value": "value",
-    },
-)
 
 ORACLE["events_ab_srm"] = f"""
     WITH arms AS (
@@ -9175,24 +7779,6 @@ ORACLE["events_forecast_scorecard"] = f"""
     FROM fc
 """
 
-ORACLE["events_daily_health"] = f"""
-    WITH st AS ({ORACLE['events_stickiness']}),
-    eb AS ({ORACLE['events_error_budget']}),
-    ens AS ({ORACLE['events_anomaly_ensemble']}),
-    an AS (
-      SELECT date_trunc('day', hour) AS day,
-             CAST(count(*) AS BIGINT) AS n_anomaly_hours
-      FROM ens WHERE votes >= 2
-      GROUP BY 1
-    )
-    SELECT eb.day, eb.n_events, st.dau, st.stickiness,
-           eb.n_errors, eb.error_share, eb.budget_burn,
-           CAST(coalesce(an.n_anomaly_hours, 0) AS BIGINT)
-             AS n_anomaly_hours
-    FROM eb
-    JOIN st ON st.day = eb.day
-    LEFT JOIN an ON an.day = eb.day
-"""
 
 ORACLE["events_value_kruskal"] = f"""
     WITH ev AS (
@@ -9315,46 +7901,6 @@ ORACLE["events_periodogram"] = f"""
     FROM comps
 """
 
-ORACLE["events_transition_entropy"] = f"""
-    WITH seq AS (
-      SELECT user_id, event_type,
-             lag(event_type) OVER (
-               PARTITION BY user_id ORDER BY epoch_us(ts), event_id
-             ) AS src
-      FROM events
-    ),
-    pairs AS (
-      SELECT src, event_type AS dst, CAST(count(*) AS BIGINT) AS c
-      FROM seq WHERE src IS NOT NULL
-      GROUP BY 1, 2
-    ),
-    rw AS (SELECT src, CAST(sum(c) AS BIGINT) AS cs FROM pairs GROUP BY 1),
-    tot AS (SELECT CAST(sum(c) AS BIGINT) AS ct FROM pairs),
-    h2 AS (
-      SELECT any_value(tot.ct) AS n_transitions,
-             CAST(count(DISTINCT pairs.src) AS BIGINT) AS n_states,
-             {sql_quantize(
-                 '-sum(' + sql_quantize('pairs.c / tot.ct', 9)
-                 + ' * log2(' + sql_quantize('pairs.c / rw.cs', 9)
-                 + '))', 6)} AS h2_bits
-      FROM pairs JOIN rw USING (src) CROSS JOIN tot
-    ),
-    marg AS (
-      SELECT dst, CAST(sum(c) AS BIGINT) AS cd FROM pairs GROUP BY 1
-    ),
-    h1 AS (
-      SELECT {sql_quantize(
-                 '-sum(' + sql_quantize('marg.cd / tot.ct', 9)
-                 + ' * log2(' + sql_quantize('marg.cd / tot.ct', 9)
-                 + '))', 6)} AS h1_bits
-      FROM marg CROSS JOIN tot
-    )
-    SELECT h2.n_transitions, h2.n_states, h1.h1_bits, h2.h2_bits,
-           CASE WHEN h1.h1_bits > 0
-                THEN {sql_quantize('1.0 - h2.h2_bits / h1.h1_bits', 6)}
-           END AS redundancy
-    FROM h2, h1
-"""
 
 ORACLE["events_churn_half_life"] = f"""
     WITH sv AS ({ORACLE['events_survival']})
@@ -9367,30 +7913,6 @@ ORACLE["events_churn_half_life"] = f"""
     FROM sv
 """
 
-ORACLE["events_audience_overlap"] = f"""
-    WITH tu AS (
-      SELECT DISTINCT event_type, user_id FROM events
-    ),
-    sizes AS (
-      SELECT event_type, CAST(count(*) AS BIGINT) AS n_users
-      FROM tu GROUP BY 1
-    ),
-    inter AS (
-      SELECT a.event_type AS type_a, b.event_type AS type_b,
-             CAST(count(*) AS BIGINT) AS n_common
-      FROM tu a JOIN tu b
-        ON a.user_id = b.user_id AND a.event_type < b.event_type
-      GROUP BY 1, 2
-    )
-    SELECT i.type_a, i.type_b, i.n_common,
-           {sql_quantize(
-               'CAST(i.n_common AS DOUBLE)'
-               ' / (sa.n_users + sb.n_users - i.n_common)', 6)}
-             AS jaccard
-    FROM inter i
-    JOIN sizes sa ON sa.event_type = i.type_a
-    JOIN sizes sb ON sb.event_type = i.type_b
-"""
 
 ORACLE["events_value_levene"] = f"""
     WITH vq AS (
@@ -9757,6 +8279,7 @@ ORACLE["events_type_correlation"] = f"""
            END AS pearson_r
     FROM m
 """
+
 
 ORACLE["events_window_funnel"] = f"""
     WITH ev AS (
@@ -10398,86 +8921,6 @@ ORACLE["events_holt_winters"] = f"""
     FROM last l CROSS JOIN ks
 """
 
-ORACLE["events_winsorized_welch"] = f"""
-    WITH pool AS (
-      SELECT event_type, value FROM events
-      WHERE event_type IN ('purchase', 'click')
-    ),
-    cap AS (SELECT quantile_cont(value, {WINSOR_Q!r}) AS cap FROM pool),
-    grid AS (
-      SELECT (event_type = 'purchase') AS is_a,
-             CAST(floor(least(value, cap) * 100 + 0.5) AS BIGINT) AS vq
-      FROM pool CROSS JOIN cap
-    ),
-    agg AS (
-      SELECT CAST(sum(CASE WHEN is_a THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-             CAST(sum(CASE WHEN is_a THEN 0 ELSE 1 END) AS BIGINT) AS n_b,
-             CAST(sum(CASE WHEN is_a THEN vq ELSE 0 END) AS DOUBLE) AS sv_a,
-             CAST(sum(CASE WHEN is_a THEN 0 ELSE vq END) AS DOUBLE) AS sv_b,
-             CAST(sum(CASE WHEN is_a THEN vq * vq ELSE 0 END) AS DOUBLE)
-               AS svv_a,
-             CAST(sum(CASE WHEN is_a THEN 0 ELSE vq * vq END) AS DOUBLE)
-               AS svv_b
-      FROM grid
-    ),
-    m AS (
-      SELECT n_a, n_b,
-             sv_a / n_a AS m_a, sv_b / n_b AS m_b,
-             ((svv_a - sv_a * sv_a / n_a) / (n_a - 1)) / n_a AS se2_a,
-             ((svv_b - sv_b * sv_b / n_b) / (n_b - 1)) / n_b AS se2_b
-      FROM agg
-    )
-    SELECT 'purchase' AS group_a,
-           'click' AS group_b,
-           n_a, n_b,
-           CASE WHEN n_a > 0
-                THEN {sql_quantize('m_a / 100.0', 4)} END AS mean_a,
-           CASE WHEN n_b > 0
-                THEN {sql_quantize('m_b / 100.0', 4)} END AS mean_b,
-           CASE WHEN n_a > 1 AND n_b > 1 AND se2_a + se2_b > 0
-                THEN {sql_quantize(
-                    '(m_a - m_b) / sqrt(se2_a + se2_b)', 4)}
-           END AS t_stat,
-           CASE WHEN n_a > 1 AND n_b > 1 AND se2_a + se2_b > 0
-                THEN {sql_quantize(
-                    '((se2_a + se2_b) * (se2_a + se2_b))'
-                    ' / (se2_a * se2_a / (n_a - 1)'
-                    ' + se2_b * se2_b / (n_b - 1))', 2)}
-           END AS df_welch,
-           CASE WHEN n_a > 1 AND n_b > 1 AND se2_a + se2_b > 0
-                THEN (abs({sql_quantize(
-                    '(m_a - m_b) / sqrt(se2_a + se2_b)', 4)}) > 1.96)
-           END AS significant_95
-    FROM m
-"""
-
-ORACLE["events_experiment_readout"] = f"""
-    SELECT w.welch_mean_a, w.welch_mean_b, w.welch_t,
-           x.winsor_t, c.conv_z,
-           d.did_estimate, d.did_t,
-           u.cuped_diff, u.cuped_t, u.var_reduction,
-           b.ci_lo, b.ci_hi, b.covers_zero,
-           CAST(
-             (CASE WHEN abs(c.conv_z) > 1.96 THEN 1 ELSE 0 END)
-             + (CASE WHEN abs(d.did_t) > 1.96 THEN 1 ELSE 0 END)
-             + (CASE WHEN abs(u.cuped_t) > 1.96 THEN 1 ELSE 0 END)
-             + (CASE WHEN NOT b.covers_zero THEN 1 ELSE 0 END)
-           AS BIGINT) AS n_user_tests_significant
-    FROM (SELECT mean_a AS welch_mean_a, mean_b AS welch_mean_b,
-                 t_stat AS welch_t
-          FROM ({ORACLE['events_ab_welch']})) w
-    CROSS JOIN (SELECT t_stat AS winsor_t
-                FROM ({ORACLE['events_winsorized_welch']})) x
-    CROSS JOIN (SELECT z_stat AS conv_z
-                FROM ({ORACLE['events_conversion_ztest']})) c
-    CROSS JOIN (SELECT did_estimate, t_stat AS did_t
-                FROM ({ORACLE['events_diff_in_diff']})) d
-    CROSS JOIN (SELECT diff_adj AS cuped_diff, t_adj AS cuped_t,
-                       var_reduction
-                FROM ({ORACLE['events_cuped']})) u
-    CROSS JOIN (SELECT ci_lo, ci_hi, covers_zero
-                FROM ({ORACLE['events_bootstrap_diff_ci']})) b
-"""
 
 _WM_SELECTS = " UNION ALL ".join(
     f"""SELECT CAST({h} AS BIGINT) AS watermark_hours, n_events,
@@ -11091,85 +9534,6 @@ ORACLE["events_interrupted_ts"] = f"""
            {sql_quantize('level_post', 4)} AS level_post_at_cut,
            {sql_quantize('level_post - level_pre', 4)} AS level_jump
     FROM f
-"""
-
-
-ORACLE["events_theta_forecast"] = f"""
-    WITH RECURSIVE cells AS (
-      SELECT event_type,
-             epoch_us(date_trunc('hour', ts)) AS hour_us,
-             CAST(count(*) AS BIGINT) AS cnt
-      FROM events GROUP BY 1, 2
-    ),
-    b AS (SELECT min(hour_us) AS mn, max(hour_us) AS mx FROM cells),
-    cal AS (
-      SELECT t.event_type,
-             unnest(generate_series(b.mn, b.mx, {HOUR_US})) AS hour_us
-      FROM (SELECT DISTINCT event_type FROM cells) t CROSS JOIN b
-    ),
-    series AS (
-      SELECT cal.event_type, cal.hour_us,
-             CAST(coalesce(c.cnt, 0) AS BIGINT) AS yi,
-             row_number() OVER (
-               PARTITION BY cal.event_type ORDER BY cal.hour_us
-             ) AS rn
-      FROM cal LEFT JOIN cells c
-        ON c.event_type = cal.event_type AND c.hour_us = cal.hour_us
-    ),
-    mom AS (
-      SELECT event_type,
-             CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(rn) AS BIGINT) AS sx,
-             CAST(sum(rn * rn) AS BIGINT) AS sxx,
-             CAST(sum(yi) AS BIGINT) AS sy,
-             CAST(sum(rn * yi) AS BIGINT) AS sxy
-      FROM series GROUP BY 1
-    ),
-    slope AS (
-      SELECT event_type, n, sx, sy,
-             CASE WHEN n * sxx - sx * sx <> 0
-               THEN CAST(n * sxy - sx * sy AS DOUBLE)
-                    / CAST(n * sxx - sx * sx AS DOUBLE)
-               ELSE 0.0 END AS bb
-      FROM mom
-    ),
-    ab AS (
-      SELECT event_type, n, bb,
-             (CAST(sy AS DOUBLE) - bb * CAST(sx AS DOUBLE))
-               / CAST(n AS DOUBLE) AS aa
-      FROM slope
-    ),
-    s2 AS (
-      SELECT s.event_type, s.rn, s.yi, ab.aa, ab.bb, ab.n
-      FROM series s JOIN ab USING (event_type)
-    ),
-    walk AS (
-      SELECT event_type, rn,
-             2.0 * CAST(yi AS DOUBLE) - (aa + bb * rn) AS s
-      FROM s2 WHERE rn = 1
-      UNION ALL
-      SELECT s.event_type, s.rn,
-             {THETA_ALPHA!r} * (2.0 * CAST(s.yi AS DOUBLE)
-               - (s.aa + s.bb * s.rn))
-               + {1.0 - THETA_ALPHA!r} * w.s
-      FROM walk w JOIN s2 s
-        ON s.event_type = w.event_type AND s.rn = w.rn + 1
-    ),
-    last AS (
-      SELECT event_type, rn, s,
-             row_number() OVER (
-               PARTITION BY event_type ORDER BY rn DESC
-             ) AS rev
-      FROM walk
-    )
-    SELECT l.event_type, ab.n AS n_hours,
-           {sql_quantize('ab.aa', 4)} AS intercept,
-           {sql_quantize('ab.bb', 6)} AS slope,
-           {sql_quantize('l.s', 4)} AS ses_theta2,
-           {sql_quantize(
-               '0.5 * l.s + 0.5 * (ab.aa + ab.bb * (ab.n + 1))', 4)}
-             AS forecast_next
-    FROM last l JOIN ab USING (event_type) WHERE l.rev = 1
 """
 
 

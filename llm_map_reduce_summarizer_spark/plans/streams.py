@@ -1223,49 +1223,6 @@ def stream_forecast_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     return forecast_from_cells(snap)
 
 
-def stream_hourly_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming LOCF gap-fill: (type, hour) count+sum cells
-    accumulate AT INGEST (both mergeable ⇒ split-invariant; mean =
-    sv/n is exactly the batch avg) and the spine/carry-forward scan
-    runs post-drain (`events.locf_from_cells`). Drain == batch
-    `events_hourly_locf`, whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from .events import locf_from_cells
-
-    ev = read_events_stream(spark, sf_dir)
-    cells = ev.groupBy(
-        "event_type", F.date_trunc("hour", F.col("ts")).alias("hour")
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("n_raw"),
-        F.sum("value").alias("sv"),
-    )
-    snap = run_available_now(cells, output_mode="complete")
-    return locf_from_cells(snap)
-
-
-def stream_hourly_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming linear-interpolation gap-fill: the same mergeable
-    (type, hour) count+sum state, with the bracketing-window lerp
-    post-drain (`events.interp_from_cells`). Drain == batch
-    `events_hourly_interp`, whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from .events import interp_from_cells
-
-    ev = read_events_stream(spark, sf_dir)
-    cells = ev.groupBy(
-        "event_type", F.date_trunc("hour", F.col("ts")).alias("hour")
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("n_raw"),
-        F.sum("value").alias("sv"),
-    )
-    snap = run_available_now(cells, output_mode="complete")
-    return interp_from_cells(snap)
-
-
 def stream_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming semi-structured rollup: the per-type min/max/avg/
     count aggregates over the extracted JSON prop accumulate AT
@@ -1326,26 +1283,6 @@ def stream_user_activity_quantiles(
     return activity_quantiles_from_counts(snap)
 
 
-def stream_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming audience-overlap monitor: (type, user) pairs dedup
-    AT INGEST (entity×types-bounded mergeable state) and the
-    user-keyed Jaccard scan runs post-drain. Drain == batch
-    `events_audience_overlap`, whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from .events import audience_overlap_from_pairs
-
-    ev = read_events_stream(spark, sf_dir)
-    tu = ev.groupBy("event_type", "user_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    )
-    snap = run_available_now(tu, output_mode="complete")
-    return audience_overlap_from_pairs(
-        snap.select("event_type", "user_id")
-    )
-
-
 def stream_churn_half_life(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming churn half-life: distilled post-drain from the
     streaming Kaplan-Meier curve (`stream_survival`'s 2-long
@@ -1374,31 +1311,9 @@ def stream_churn_half_life(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def stream_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming behavior-chain steady state: transitions emit
-    exactly-once AT INGEST (`user_paths_stream`'s 3-scalar state) and
-    the K²-bounded damped power iteration runs post-drain
-    (`events.markov_from_pairs`). Drain == batch
-    `events_markov_stationary`, whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from ..streaming.stream_ops import user_paths_stream
-    from .events import markov_from_pairs
-
-    ev = read_events_stream(spark, sf_dir)
-    steps = run_available_now(
-        user_paths_stream(ev), output_mode="update"
-    )
-    pairs = steps.groupBy("src", "dst").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    return markov_from_pairs(pairs)
-
-
 def stream_absorption(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming absorption probabilities: same exactly-once
-    transition emissions as `stream_markov_stationary`, with the
+    transition emissions as `stream_user_paths`, with the
     K²-bounded minimal-fixed-point solve post-drain
     (`events.absorption_from_pairs`). Drain == batch
     `events_absorption`, whose oracle it shares.
@@ -1548,28 +1463,6 @@ def stream_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.count(F.lit(1)).cast("long").alias("n"))
     snap = run_available_now(daily, output_mode="complete")
     return changepoint_from_daily(snap)
-
-
-def stream_transition_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming behavioral entropy rate: transitions emit
-    exactly-once AT INGEST off the 3-scalar per-user state
-    (`stream_ops.user_paths_stream`) and the types²-bounded entropy
-    scan runs post-drain on the counted pair sink. Drain == batch
-    `events_transition_entropy`, whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from ..streaming.stream_ops import user_paths_stream
-    from .events import transition_entropy_from_pairs
-
-    ev = read_events_stream(spark, sf_dir)
-    steps = run_available_now(
-        user_paths_stream(ev), output_mode="update"
-    )
-    pairs = steps.groupBy("src", "dst").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    return transition_entropy_from_pairs(pairs)
 
 
 def stream_attribution_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1732,44 +1625,6 @@ def stream_type_share_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     return type_share_from_cells(snap)
 
 
-def stream_user_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming behavioral-diversity monitor: (user, type) counts
-    accumulate AT INGEST (state = active users × their types —
-    entity-bounded, the `stream_dau` class) and the entropy scan
-    runs post-drain. Drain == batch `events_user_entropy`, whose
-    oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from .events import user_entropy_from_cells
-
-    ev = read_events_stream(spark, sf_dir)
-    ut = ev.groupBy("user_id", "event_type").agg(
-        F.count(F.lit(1)).alias("f")
-    )
-    snap = run_available_now(ut, output_mode="complete")
-    return user_entropy_from_cells(snap)
-
-
-def stream_dow_hour_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming weekly-heatmap monitor: the ≤168 (dow, hod) cells
-    accumulate AT INGEST (fixed-size state regardless of volume) and
-    the margin/ratio scan runs post-drain. Drain == batch
-    `events_dow_hour_heatmap`, whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from .events import heatmap_from_cells
-
-    ev = read_events_stream(spark, sf_dir)
-    cells = ev.groupBy(
-        F.dayofweek("ts").cast("long").alias("dow"),
-        F.hour("ts").cast("long").alias("hod"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("n_events"))
-    snap = run_available_now(cells, output_mode="complete")
-    return heatmap_from_cells(snap)
-
-
 def stream_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming robust anomaly profile: the hourly count series
     accumulates AT INGEST (the same calendar-bounded tumbling-window
@@ -1812,28 +1667,6 @@ def stream_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_events").cast("long").alias("n")
     )
     return sen_from_hourly(hourly)
-
-
-def stream_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming k-anonymity monitor: the QI-cell counts accumulate
-    AT INGEST (state = quasi-identifier domain — types × 24 hours ×
-    value buckets — never stream length) and the 1-row risk summary
-    evaluates post-drain, so an extract pipeline can gate release on
-    the live risk share. Drain == batch `events_k_anonymity`, whose
-    oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    ev = read_events_stream(spark, sf_dir)
-    cells = ev.groupBy(
-        "event_type",
-        F.hour("ts").alias("hod"),
-        F.floor(F.col("value") / 10.0).cast("long").alias("vb"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("g"))
-    snap = run_available_now(cells, output_mode="complete")
-    from .events import k_anonymity_from_cells
-
-    return k_anonymity_from_cells(snap)
 
 
 def stream_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1924,22 +1757,6 @@ def stream_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
         t_closeness_cells(ev), output_mode="complete"
     )
     return t_closeness_from_cells(snap)
-
-
-def stream_value_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming OHLC candles: the per-(type, hour) struct-min/max
-    state accumulates AT INGEST (state = calendar-bounded cells of
-    five scalars — open/close ride min/max over (ts, id, value)
-    structs, which are mergeable, so candles are exact under ANY
-    micro-batch split) and the report projects post-drain. Drain ==
-    batch `events_value_ohlc`, whose oracle it shares.
-    """
-    from ..streaming.stream_ops import read_events_stream
-    from .events import ohlc_cells, ohlc_report
-
-    ev = read_events_stream(spark, sf_dir)
-    snap = run_available_now(ohlc_cells(ev), output_mode="complete")
-    return ohlc_report(snap)
 
 
 def stream_uptime(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2041,61 +1858,6 @@ def stream_time_weighted_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def stream_json_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming schema-on-read monitor for the props JSON: (key,
-    value) occurrence cells accumulate AT INGEST (state bounded by
-    the key × value DOMAIN, the content-bounded class) alongside a
-    1-scalar row count, and the inference report evaluates post-drain
-    via the batch helper (`events.json_schema_report`). Drain ==
-    batch `events_json_schema`, whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from .events import json_schema_cells, json_schema_report
-
-    ev = read_events_stream(spark, sf_dir)
-    cells = run_available_now(
-        json_schema_cells(ev), output_mode="complete"
-    )
-    totals = run_available_now(
-        read_events_stream(spark, sf_dir).agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows")
-        ),
-        output_mode="complete",
-    )
-    return json_schema_report(cells, totals)
-
-
-def stream_error_load_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming load-sensitivity triage: the (hour, errors,
-    non-errors) cells accumulate AT INGEST (calendar-bounded tumbling
-    state) and the exact-integer Pearson fold runs post-drain
-    (`events.error_load_corr_from_hourly`). Drain == batch
-    `events_error_load_corr`, whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from .events import error_load_corr_from_hourly
-
-    ev = read_events_stream(spark, sf_dir)
-    hourly = ev.groupBy(
-        F.date_trunc("hour", F.col("ts")).alias("hour")
-    ).agg(
-        F.sum(
-            F.when(F.col("event_type") == "error", 1).otherwise(0)
-        )
-        .cast("long")
-        .alias("x"),
-        F.sum(
-            F.when(F.col("event_type") == "error", 0).otherwise(1)
-        )
-        .cast("long")
-        .alias("y"),
-    )
-    snap = run_available_now(hourly, output_mode="complete")
-    return error_load_corr_from_hourly(snap)
-
-
 def stream_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Mann-Kendall trend monitor over the drained
     hours-bounded tumbling state (type cells summed to the overall
@@ -2113,24 +1875,6 @@ def stream_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_events").cast("long").alias("n")
     )
     return mk_from_hourly(hourly)
-
-
-def stream_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming Fano-factor dispersion monitor per type over the
-    same (type, hour) ingest state as `stream_hourly`. Drain ==
-    batch `events_burstiness`, whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from ..streaming.stream_ops import hourly_counts
-    from .events import burstiness_from_hourly
-
-    ev = read_events_stream(spark, sf_dir)
-    snap = run_available_now(hourly_counts(ev), output_mode="complete")
-    hourly = snap.select(
-        "hour", "event_type", F.col("n_events").cast("long").alias("n")
-    )
-    return burstiness_from_hourly(hourly)
 
 
 def stream_error_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2698,19 +2442,6 @@ def stream_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     return holt_from_cells(snap)
 
 
-def stream_theta_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming Theta-method forecast: the (event_type, hour) count
-    cells accumulate at ingest (calendar-bounded mergeable state) and
-    the trend-decompose + SES recurrence runs post-drain via the
-    exact batch computation (`events.theta_from_cells`). Drain ==
-    batch `events_theta_forecast`, whose oracle it shares."""
-    from .events import holt_cells, theta_from_cells
-
-    ev = read_events_stream(spark, sf_dir)
-    snap = run_available_now(holt_cells(ev), output_mode="complete")
-    return theta_from_cells(snap)
-
-
 def stream_mttr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming MTTR/MTBF rollup: tumbling hourly cells accumulate
     at ingest (the `stream_incident_table` state) and the incident
@@ -3150,7 +2881,6 @@ QUERIES = {
     "stream_diff_in_diff": stream_diff_in_diff,
     "stream_cmh": stream_cmh,
     "stream_holt_linear": stream_holt_linear,
-    "stream_theta_forecast": stream_theta_forecast,
     "stream_mttr": stream_mttr,
     "stream_holt_winters": stream_holt_winters,
     "stream_forecast_model_compare": stream_forecast_model_compare,
@@ -3195,22 +2925,17 @@ QUERIES = {
     "stream_hourly_anomaly": stream_hourly_anomaly,
     "stream_anomaly_residual": stream_anomaly_residual,
     "stream_forecast_hourly": stream_forecast_hourly,
-    "stream_hourly_locf": stream_hourly_locf,
-    "stream_hourly_interp": stream_hourly_interp,
     "stream_json_props": stream_json_props,
     "stream_retention_hourly": stream_retention_hourly,
     "stream_user_activity_quantiles":
         stream_user_activity_quantiles,
-    "stream_audience_overlap": stream_audience_overlap,
     "stream_churn_half_life": stream_churn_half_life,
-    "stream_markov_stationary": stream_markov_stationary,
     "stream_periodogram": stream_periodogram,
     "stream_gini": stream_gini,
     "stream_new_vs_returning": stream_new_vs_returning,
     "stream_hourly_profile": stream_hourly_profile,
     "stream_autocorr": stream_autocorr,
     "stream_changepoint": stream_changepoint,
-    "stream_transition_entropy": stream_transition_entropy,
     "stream_attribution_markov": stream_attribution_markov,
     "stream_concurrency_curve": stream_concurrency_curve,
     "stream_adoption_curve": stream_adoption_curve,
@@ -3218,8 +2943,6 @@ QUERIES = {
     "stream_growth_accounting": stream_growth_accounting,
     "stream_user_paths": stream_user_paths,
     "stream_type_share_trend": stream_type_share_trend,
-    "stream_user_entropy": stream_user_entropy,
-    "stream_dow_hour_heatmap": stream_dow_hour_heatmap,
     "stream_l_diversity": stream_l_diversity,
     "stream_t_closeness": stream_t_closeness,
     "stream_iv_wald": stream_iv_wald,
@@ -3230,15 +2953,10 @@ QUERIES = {
     "stream_hour_concentration": stream_hour_concentration,
     "stream_cusum": stream_cusum,
     "stream_anomaly_mad": stream_anomaly_mad,
-    "stream_k_anonymity": stream_k_anonymity,
     "stream_sen_slope": stream_sen_slope,
-    "stream_value_ohlc": stream_value_ohlc,
     "stream_uptime": stream_uptime,
     "stream_time_weighted_value": stream_time_weighted_value,
-    "stream_json_schema": stream_json_schema,
-    "stream_error_load_corr": stream_error_load_corr,
     "stream_mann_kendall": stream_mann_kendall,
-    "stream_burstiness": stream_burstiness,
     "stream_hourly": stream_hourly,
     "stream_sessionize": stream_sessionize,
     "stream_view_click_join": stream_view_click_join,
@@ -3273,7 +2991,6 @@ ORACLE = {
     "stream_diff_in_diff": _EVENTS_ORACLE["events_diff_in_diff"],
     "stream_cmh": _EVENTS_ORACLE["events_cmh"],
     "stream_holt_linear": _EVENTS_ORACLE["events_holt_linear"],
-    "stream_theta_forecast": _EVENTS_ORACLE["events_theta_forecast"],
     "stream_mttr": _EVENTS_ORACLE["events_mttr"],
     "stream_holt_winters": _EVENTS_ORACLE["events_holt_winters"],
     "stream_forecast_model_compare":
@@ -3313,22 +3030,14 @@ ORACLE = {
         _EVENTS_ORACLE["events_anomaly_residual"],
     "stream_forecast_hourly":
         _EVENTS_ORACLE["events_forecast_hourly"],
-    "stream_hourly_locf":
-        _EVENTS_ORACLE["events_hourly_locf"],
-    "stream_hourly_interp":
-        _EVENTS_ORACLE["events_hourly_interp"],
     "stream_json_props":
         _EVENTS_ORACLE["events_json_props"],
     "stream_retention_hourly":
         _EVENTS_ORACLE["events_retention_hourly"],
     "stream_user_activity_quantiles":
         _EVENTS_ORACLE["events_user_activity_quantiles"],
-    "stream_audience_overlap":
-        _EVENTS_ORACLE["events_audience_overlap"],
     "stream_churn_half_life":
         _EVENTS_ORACLE["events_churn_half_life"],
-    "stream_markov_stationary":
-        _EVENTS_ORACLE["events_markov_stationary"],
     "stream_periodogram":
         _EVENTS_ORACLE["events_periodogram"],
     "stream_gini": _EVENTS_ORACLE["events_gini"],
@@ -3338,8 +3047,6 @@ ORACLE = {
         _EVENTS_ORACLE["events_hourly_profile"],
     "stream_autocorr": _EVENTS_ORACLE["events_autocorr"],
     "stream_changepoint": _EVENTS_ORACLE["events_changepoint"],
-    "stream_transition_entropy":
-        _EVENTS_ORACLE["events_transition_entropy"],
     "stream_attribution_markov":
         _EVENTS_ORACLE["events_attribution_markov"],
     "stream_concurrency_curve":
@@ -3353,9 +3060,6 @@ ORACLE = {
     "stream_user_paths": _EVENTS_ORACLE["events_user_paths"],
     "stream_type_share_trend":
         _EVENTS_ORACLE["events_type_share_trend"],
-    "stream_user_entropy": _EVENTS_ORACLE["events_user_entropy"],
-    "stream_dow_hour_heatmap":
-        _EVENTS_ORACLE["events_dow_hour_heatmap"],
     "stream_l_diversity": _EVENTS_ORACLE["events_l_diversity"],
     "stream_t_closeness": _EVENTS_ORACLE["events_t_closeness"],
     "stream_iv_wald": _EVENTS_ORACLE["events_iv_wald"],
@@ -3367,15 +3071,10 @@ ORACLE = {
         _EVENTS_ORACLE["events_hour_concentration"],
     "stream_cusum": _EVENTS_ORACLE["events_cusum"],
     "stream_anomaly_mad": _EVENTS_ORACLE["events_anomaly_mad"],
-    "stream_k_anonymity": _EVENTS_ORACLE["events_k_anonymity"],
     "stream_sen_slope": _EVENTS_ORACLE["events_sen_slope"],
-    "stream_value_ohlc": _EVENTS_ORACLE["events_value_ohlc"],
     "stream_uptime": _EVENTS_ORACLE["events_uptime"],
     "stream_time_weighted_value": _EVENTS_ORACLE["events_time_weighted_value"],
-    "stream_json_schema": _EVENTS_ORACLE["events_json_schema"],
-    "stream_error_load_corr": _EVENTS_ORACLE["events_error_load_corr"],
     "stream_mann_kendall": _EVENTS_ORACLE["events_mann_kendall"],
-    "stream_burstiness": _EVENTS_ORACLE["events_burstiness"],
     "stream_error_budget": _EVENTS_ORACLE["events_error_budget"],
     "stream_session_stats": _EVENTS_ORACLE["events_session_stats"],
     "stream_stickiness": _EVENTS_ORACLE["events_stickiness"],

@@ -14,18 +14,7 @@ import os
 import duckdb
 import pandas as pd
 
-TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
+TABLES = ["events", "documents", "embeddings"]
 
 
 def duckdb_con(sf_dir: str) -> duckdb.DuckDBPyConnection:

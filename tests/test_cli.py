@@ -269,18 +269,17 @@ def test_cli_cost_uses_model_tier(spark, tmp_path, monkeypatch):
 
 def test_query_runner_lists_and_rejects(capsys):
     """Catalog query runner: no key lists every catalog entry (no Spark
-    session involved), the 22 standard TPC-H queries but no retired
-    star-schema analytics entry; an unknown key exits 2 with a
-    message."""
+    session involved), with no star-schema entry and none of the
+    retired event analytics or their stream twins; an unknown key
+    exits 2 with a message."""
     from llm_map_reduce_summarizer_spark.query import main
 
     assert main([]) == 0
     listed = capsys.readouterr().out.split()
     assert "corpus_split" in listed and "pipeline_e2e" in listed
     assert len(listed) >= 100
-    # the 22 standard TPC-H queries stay; the derived star-schema
-    # analytics built on the same tables are retired
-    assert len([k for k in listed if re.match(r"q\d+_", k)]) == 22
+    # no TPC-H query, standard or derived, is left in the catalog
+    assert len([k for k in listed if re.match(r"q\d+_", k)]) == 0
     retired = re.compile(
         r"(orders|parts|customer|supplier|nation|lineitem)_"
     )
@@ -289,6 +288,20 @@ def test_query_runner_lists_and_rejects(capsys):
         "agg_distinct_stats", "cube_sales", "pivot_flag_status",
         "rollup_sales", "topk_per_group", "warehouse_ref_integrity",
     } & set(listed)
+    retired_events = {
+        "events_winsorized_welch", "events_experiment_readout",
+        "events_column_profile", "events_daily_health",
+    }
+    with_stream_twin = {
+        "theta_forecast", "k_anonymity", "dow_hour_heatmap",
+        "json_schema", "value_ohlc", "error_load_corr", "hourly_locf",
+        "hourly_interp", "transition_entropy", "audience_overlap",
+        "markov_stationary", "user_entropy", "burstiness",
+    }
+    for name in with_stream_twin:
+        retired_events |= {f"events_{name}", f"stream_{name}"}
+    assert len(retired_events) == 30
+    assert not retired_events & set(listed)
 
     assert main(["definitely_not_a_key"]) == 2
     assert "unknown query key" in capsys.readouterr().err

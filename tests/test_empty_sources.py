@@ -77,7 +77,7 @@ def _graceful_one(spark, sf0_dir: str, key: str) -> list[str]:
 @pytest.fixture(scope="module")
 def graceful_futures(request, spark, sf0_dir):
     """Same pooled pattern as the oracle gate (tests/test_oracle.py):
-    the ~370 graceful keys are independent, so submit one future per
+    the graceful keys are independent, so submit one future per
     SELECTED key and let each parametrized test await its own."""
     keys = sorted(
         {

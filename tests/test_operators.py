@@ -514,8 +514,8 @@ def test_prompt_pack_loads_and_formats(spark):
         provider=capture, prompt_template=tpl, system_prompt=system
     ).process_chunks(chunks).collect()
     # provider runs on executors; capture only observes locally when
-    # Spark runs in-process, so assert via the deterministic format
-    formatted = (system + "\n\n") + tpl.format(transcript="hello")
+    # Spark runs in-process, so assert via the deterministic slot fill
+    formatted = (system + "\n\n") + tpl.replace("{transcript}", "hello")
     assert "{transcript}" not in formatted and "hello" in formatted
 
 
@@ -547,6 +547,24 @@ def test_executor_retries_then_error_sentinel(spark):
         .toPandas()
     )
     assert all(s.startswith("[Mock response") for s in ok["summary"])
+
+
+def test_executor_fills_only_the_transcript_slot(spark):
+    """A prompt template may hold other braces, such as a JSON
+    example: only ``{transcript}`` is filled and the rest stays as
+    written."""
+    from llm_map_reduce_summarizer_spark.operators.executor import (
+        SparkLLMExecutor,
+    )
+
+    tpl = 'Reply as {"topics": []}\n\n{transcript}'
+    chunks = spark.createDataFrame([(0, "hello")], "chunk_id long, text string")
+    out = (
+        SparkLLMExecutor(provider=lambda p: p, prompt_template=tpl)
+        .process_chunks(chunks)
+        .collect()
+    )
+    assert [r["summary"] for r in out] == ['Reply as {"topics": []}\n\nhello']
 
 
 def test_executor_retries_only_the_failed_prompt():

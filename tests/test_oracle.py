@@ -9,7 +9,7 @@ submits one run_compare per SELECTED key — Spark schedules concurrent
 jobs from threads natively, run_compare opens a DuckDB connection per
 call, the catalog registers no fixed-name temp views, and streaming
 twins drain into uuid-named memory sinks, so keys are independent.
-Each parametrized test just awaits ITS future: same 480 tests, same
+Each parametrized test just awaits ITS future: one test per key, same
 per-key failure reporting, ~1/6 the wall time. Targeted `-k key` runs
 submit only the selected keys, so the dev loop is unchanged.
 """
