@@ -36,16 +36,21 @@ def reduce_level(
     df: DataFrame,
     ord_col: str = "chunk_id",
     text_col: str = "summary",
-    batch_size: int = 10,
+    batch_size: int | None = 10,
     header: str = "# Intermediate Summary",
     template: str | None = None,
 ) -> DataFrame:
     """One tree level: group ord//batch_size, join summaries in order.
 
-    ``template`` (final level only in practice) replaces the default
-    ``header N\\njoined`` format with the custom aggregator prompt.
+    ``batch_size=None`` puts every row in one batch with id 0, whatever
+    the ids. ``template`` (final level only in practice) replaces the
+    default ``header N\\njoined`` format with the custom aggregator
+    prompt.
     """
-    batch = F.floor(F.col(ord_col) / F.lit(batch_size)).alias("batch_id")
+    if batch_size is None:
+        batch = F.lit(0).cast("long").alias("batch_id")
+    else:
+        batch = F.floor(F.col(ord_col) / F.lit(batch_size)).alias("batch_id")
     grouped = df.groupBy(batch).agg(
         ordered_join(text_col, "\n\n", ord_col).alias("joined"),
         F.count(F.lit(1)).alias("n_parts"),
@@ -188,11 +193,10 @@ def reduce_direct(
     header: str = "# Transcript Summary",
     template: str | None = None,
 ) -> DataFrame:
-    """Single-pass combine of ALL summaries (the reference's direct /
-    simple-aggregator mode: result_aggregator.py:111-118)."""
-    return reduce_level(
-        df, ord_col, text_col, 1_000_000_000, header, template=template
-    )
+    """Single-pass combine of ALL summaries into one row (the
+    reference's direct / simple-aggregator mode:
+    result_aggregator.py:111-118), in ``ord_col`` order."""
+    return reduce_level(df, ord_col, text_col, None, header, template=template)
 
 
 def reduce_auto(
@@ -219,7 +223,5 @@ def reduce_auto(
     level1 = reduce_level(
         df, ord_col, text_col, batch_size, "# Intermediate Summary"
     )
-    level2 = reduce_level(
-        level1, ord_col, text_col, 1_000_000_000, "# Transcript Summary"
-    )
+    level2 = reduce_direct(level1, ord_col, text_col)
     return level2.select(text_col, "n_parts", F.lit("hierarchical").alias("mode"))

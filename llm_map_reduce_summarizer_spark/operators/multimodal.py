@@ -181,8 +181,8 @@ def payload_byte_features(
     """Feature extraction over binary payloads: normalized high-nibble
     byte histogram (``n_bins=16``) per payload — a REAL feature (no
     codec needed) usable for near-dup detection or clustering of
-    binary columns via the embedding operators (cosine_topk /
-    embedding_neardup take any fixed-width vector column).
+    binary columns via the embedding operators (cosine_topk takes any
+    fixed-width vector column).
 
     Scale: one Arrow-batched scan, numpy bincount per payload, output
     is one (id, k-vector) row per doc — narrow map, no shuffle.

@@ -10,8 +10,6 @@ normalized corpus can be written back and reused across queries.
   the per-query top-k is a window over query_id partitions.
 * ``cosine_topk_lsh`` — scale path: sign-bit LSH bucket join prunes
   the compare set to bucket-local candidates before ranking.
-* ``embedding_neardup`` — near-duplicate pairs by cosine threshold;
-  bucket-join variant for corpus × corpus at scale.
 """
 
 from __future__ import annotations
@@ -129,24 +127,6 @@ def cosine_topk_lsh(
         cand.withColumn("rk", F.row_number().over(w).cast("long"))
         .filter(F.col("rk") <= k)
         .select("query_id", "neighbor_id", "cos", "rk")
-    )
-
-
-def embedding_neardup(
-    corpus: DataFrame,
-    threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """All pairs with cosine >= threshold (exact; bucket for scale)."""
-    a = _unit(corpus, id_col, vec_col, "da")
-    b = _unit(corpus, id_col, vec_col, "db")
-    return (
-        a.crossJoin(b)
-        .filter(F.col("da") < F.col("db"))
-        .withColumn("cos", quantize(dot(F.col("u_da"), F.col("u_db")), 6))
-        .filter(F.col("cos") >= threshold)
-        .select("da", "db", "cos")
     )
 
 

@@ -844,7 +844,6 @@ def doc_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # C4 cleaning rules (Raffel et al. 2020, public).
 C4_MIN_SENTENCES = 3
-C4_BANNED = ("lorem ipsum", "javascript", "{")
 
 
 def doc_c4_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7185,7 +7184,7 @@ def chi2_from_obs(obs: DataFrame) -> DataFrame:
     tot = obs.agg(F.sum("n").alias("nn"))
     # keys rename at the self-lineage join so a drained streaming
     # relation (which cannot re-alias duplicate attribute ids)
-    # resolves cleanly — the kruskal_from_cells discipline
+    # resolves cleanly
     obs2 = obs.select(
         F.col("lang").alias("lg2"),
         F.col("source").alias("sc2"),
@@ -9314,8 +9313,6 @@ def _jaccard_ctes(src: str = "sh") -> str:
   JOIN sizes sb ON common.db = sb.doc_id
 )"""
 
-
-_JACCARD_CTES = _jaccard_ctes("sh")
 
 # Stop-shingle document-frequency cap for the LSH scale path: shingles in
 # more than this many docs are boilerplate and are dropped before banding

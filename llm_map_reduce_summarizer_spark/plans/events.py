@@ -121,148 +121,6 @@ def concurrency_from_sessions(sess: DataFrame) -> DataFrame:
     )
 
 
-WINDOW_FUNNEL_US = 6 * 3600 * 1_000_000  # chain must fit in 6 hours
-
-
-def events_window_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Windowed funnel (the ClickHouse ``windowFunnel`` shape,
-    anchor-bounded): a user reaches level 2/3 only if the whole
-    view → click → purchase chain fits inside a 6-hour window
-    anchored at the view — the campaign-attribution funnel, where
-    `events_funnel`'s unconstrained ordering counts a purchase weeks
-    later as a conversion.
-
-    Per anchor view the EARLIEST in-window click is provably
-    sufficient (any valid chain through a later click stays valid
-    through the earliest), so level 3 needs no triple enumeration.
-
-    Scale: every join is keyed on user_id (the sessionization
-    partitioning — AQE reuses the exchange); pair volume is bounded
-    by per-user stage counts, never corpus-wide; the rollup is one
-    row of exact integers.
-    """
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "ts_us", F.unix_micros("ts")
-    )
-    v = ev.filter(F.col("event_type") == "view").select(
-        "user_id", F.col("ts_us").alias("t_v")
-    )
-    c = ev.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("uid_c"), F.col("ts_us").alias("t_c")
-    )
-    p = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("uid_p"), F.col("ts_us").alias("t_p")
-    )
-    # earliest in-window click per anchor view
-    vc = (
-        v.join(c, F.col("user_id") == F.col("uid_c"))
-        .filter(
-            (F.col("t_c") > F.col("t_v"))
-            & (F.col("t_c") <= F.col("t_v") + WINDOW_FUNNEL_US)
-        )
-        .groupBy("user_id", "t_v")
-        .agg(F.min("t_c").alias("t_c"))
-    )
-    vcp = (
-        vc.join(p, F.col("user_id") == F.col("uid_p"))
-        .filter(
-            (F.col("t_p") > F.col("t_c"))
-            & (F.col("t_p") <= F.col("t_v") + WINDOW_FUNNEL_US)
-        )
-        .select("user_id")
-        .distinct()
-    )
-    l1 = v.select("user_id").distinct().agg(
-        F.count(F.lit(1)).cast("long").alias("n_level1")
-    )
-    l2 = vc.select("user_id").distinct().agg(
-        F.count(F.lit(1)).cast("long").alias("n_level2")
-    )
-    l3 = vcp.agg(F.count(F.lit(1)).cast("long").alias("n_level3"))
-    return (
-        l1.crossJoin(F.broadcast(l2))
-        .crossJoin(F.broadcast(l3))
-        .select(
-            "n_level1",
-            "n_level2",
-            "n_level3",
-            quantize(
-                F.col("n_level2").cast("double") / F.col("n_level1"),
-                6,
-            ).alias("l2_rate"),
-            quantize(
-                F.col("n_level3").cast("double") / F.col("n_level1"),
-                6,
-            ).alias("l3_rate"),
-        )
-    )
-
-
-def events_type_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-metric correlation matrix: Pearson r between every pair
-    of event types' hourly-count series on the shared zero-filled
-    calendar — which feeds move together (deploy+errors, views+
-    clicks) and which are independent.
-
-    Scale: series cells are the (type, hour) partial agg; the global
-    calendar is a 1-row span broadcast; the pair join is keyed on
-    hour over the types-bounded cell table (compare volume =
-    types² × hours, never events²); every moment is an exact integer
-    sum — one final sqrt/division.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    hourly = (
-        ev.withColumn("hour", F.date_trunc("hour", F.col("ts")))
-        .groupBy("event_type", "hour")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-    span = hourly.select(F.col("hour").alias("h_s")).agg(
-        F.min("h_s").alias("h0"), F.max("h_s").alias("h1")
-    )
-    types = hourly.select("event_type").distinct()
-    cal = types.crossJoin(F.broadcast(span)).select(
-        "event_type",
-        F.explode(
-            F.sequence(
-                F.col("h0"), F.col("h1"), F.expr("INTERVAL 1 HOUR")
-            )
-        ).alias("hour"),
-    )
-    filled = cal.join(hourly, ["event_type", "hour"], "left").select(
-        "event_type",
-        "hour",
-        F.coalesce(F.col("n"), F.lit(0)).cast("long").alias("n"),
-    )
-    a = filled.select(
-        F.col("event_type").alias("ta"), "hour", F.col("n").alias("x")
-    )
-    b = filled.select(
-        F.col("event_type").alias("tb"), "hour", F.col("n").alias("y")
-    )
-    pairs = a.join(b, "hour").filter(F.col("ta") < F.col("tb"))
-    m = pairs.groupBy("ta", "tb").agg(
-        F.count(F.lit(1)).cast("long").alias("n_hours"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-    )
-    nh = F.col("n_hours").cast("double")
-    cov = nh * F.col("sxy") - F.col("sx").cast("double") * F.col("sy")
-    vx = nh * F.col("sxx") - F.col("sx").cast("double") * F.col("sx")
-    vy = nh * F.col("syy") - F.col("sy").cast("double") * F.col("sy")
-    return m.select(
-        F.col("ta").alias("type_a"),
-        F.col("tb").alias("type_b"),
-        "n_hours",
-        F.when(
-            (vx > 0) & (vy > 0),
-            quantize(cov / F.sqrt(vx * vy), 6),
-        ).alias("pearson_r"),
-    )
-
-
 def events_topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 users by total value within each event type."""
     ev = load_table(spark, sf_dir, "events")
@@ -667,8 +525,6 @@ def events_hourly_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_type, so no global sort and the expensive input was already
     reduced by the partial agg.
     """
-    from pyspark.sql.window import Window
-
     ev = load_table(spark, sf_dir, "events")
     hourly = (
         ev.withColumn("hour", F.date_trunc("hour", F.col("ts")))
@@ -710,8 +566,6 @@ def events_retention_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: distinct (hour, user) pairs shuffle once on user — the
     self-join key — and the per-hour counts are tiny partial aggs.
     """
-    from ..functions.text import quantize, sql_quantize
-
     ev = load_table(spark, sf_dir, "events")
     hu = ev.select(
         F.date_trunc("hour", F.col("ts")).alias("hour"), "user_id"
@@ -807,113 +661,6 @@ def events_dau_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Datasketches HLL, lgK=12 -> rsd ~ 1.04/sqrt(4096) ~ 1.63%
-WAU_RSD = 0.0163
-
-
-def events_wau_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weekly active users by MERGING stored daily sketches
-    (Datasketches HLL via ``hll_sketch_agg``/``hll_union_agg``) — the
-    mergeability payoff: at 100 TB the pipeline stores one fixed-size
-    sketch per (day, dimension) and answers ANY coarser window (week,
-    month, rolling 28d) by sketch union, never rescanning events.
-
-    VALUE-checked like the DAU tier: the catalog emits exact WAU plus
-    the ``sketch_within_3rsd`` bound invariant the oracle asserts as
-    literal TRUE — a hash match certifies the merged estimate landed
-    inside the sketch's advertised error on every week.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.date_trunc("day", F.col("ts")).alias("day")
-    ).agg(
-        F.hll_sketch_agg("user_id").alias("sk"),
-        F.count(F.lit(1)).alias("n_events"),
-    )
-    weekly_sk = daily.groupBy(
-        F.date_trunc("week", F.col("day")).alias("week")
-    ).agg(
-        F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("wau_approx"),
-        F.sum("n_events").cast("long").alias("n_events"),
-    )
-    exact = ev.groupBy(
-        F.date_trunc("week", F.col("ts")).alias("week")
-    ).agg(F.count_distinct("user_id").alias("wau"))
-    return (
-        weekly_sk.join(exact, "week")
-        .select(
-            "week",
-            "wau",
-            "n_events",
-            (
-                F.abs(F.col("wau_approx") - F.col("wau"))
-                <= 3 * WAU_RSD * F.col("wau")
-            ).alias("sketch_within_3rsd"),
-        )
-    )
-
-
-ROLLING_DAYS = 7
-
-
-def events_rolling_actives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling 7-day active users per day, computed from the SAME
-    stored daily HLL sketches as `events_wau_merge`: each day's sketch
-    is exploded to the 7 rolling windows it contributes to (a map-side
-    7x fanout of day-count rows, not events), then one union-estimate
-    per window — the sliding-window composition that makes stored
-    sketches a dashboard primitive at 100 TB.
-
-    VALUE-checked via the 3·rsd bound invariant vs the exact rolling
-    distinct (computed from the distinct (day,user) table, bounded by
-    actives — the certification side, not the production path).
-    """
-    ev = load_table(spark, sf_dir, "events")
-    day = F.date_trunc("day", F.col("ts")).alias("day")
-    days = ev.select(day).distinct()
-    offsets = F.array(*[F.lit(i) for i in range(ROLLING_DAYS)])
-    daily_sk = ev.groupBy(day).agg(
-        F.hll_sketch_agg("user_id").alias("sk")
-    )
-    fan = daily_sk.select(
-        "sk",
-        F.explode(offsets).alias("off"),
-        F.date_add(F.col("day").cast("date"), F.col("off")).alias("wend"),
-    ).join(
-        F.broadcast(days.select(F.col("day").cast("date").alias("wend"))),
-        "wend",
-    )
-    est = fan.groupBy("wend").agg(
-        F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("approx")
-    )
-    du = ev.select(day, "user_id").distinct()
-    exact = (
-        du.select(
-            "user_id",
-            F.explode(offsets).alias("off"),
-            F.date_add(F.col("day").cast("date"), F.col("off")).alias(
-                "wend"
-            ),
-        )
-        .join(
-            F.broadcast(
-                days.select(F.col("day").cast("date").alias("wend"))
-            ),
-            "wend",
-        )
-        .groupBy("wend")
-        .agg(F.count_distinct("user_id").alias("actives_7d"))
-    )
-    return est.join(exact, "wend").select(
-        F.col("wend").cast("timestamp").alias("window_end"),
-        "actives_7d",
-        (
-            F.abs(F.col("approx") - F.col("actives_7d"))
-            <= 3 * WAU_RSD * F.col("actives_7d")
-        ).alias("sketch_within_3rsd"),
-    )
-
-
 PSI_SHIFT_GRID = (0.0, 5.0, 25.0, 100.0)  # planted shifts ($)
 
 
@@ -981,92 +728,6 @@ def events_psi_injection_eval(
             j.agg(
                 F.lit(shift).alias("shift_dollars"),
                 quantize(F.sum(contrib), 6).alias("psi"),
-            )
-        )
-    out = per[0]
-    for frame in per[1:]:
-        out = out.unionByName(frame)
-    return out
-
-
-INJECT_EVERY = 12  # spike every 12th hour index (deterministic)
-INJECT_MULT = 4
-INJECT_ADD = 10
-
-
-def events_anomaly_injection_eval(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Ground-truth evaluation of the anomaly ENSEMBLE: inject known
-    spikes into the hourly series (every 12th hour index, ×4 + 10 —
-    deterministic, so both engines plant identical truth), run the
-    exact production detector (`ensemble_from_hourly`), and score
-    precision/recall/F1 at each consensus level (votes ≥ 1/2/3) —
-    the missing piece of the anomaly tier: every detector emitted
-    flags, none had a measured detection quality.
-
-    Scale: the injection is a narrow map on the hours-bounded cell
-    table; the detector is the existing one-scan composition; the
-    scoring join touches only hours.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    # hours-bounded hub, materialized once (see events_anomaly_ensemble)
-    hourly = ev.groupBy(
-        F.date_trunc("hour", F.col("ts")).alias("hour")
-    ).agg(F.count(F.lit(1)).cast("long").alias("n")).transform(materialize)
-    hidx = (F.unix_micros("hour") / 3_600_000_000).cast("long")
-    inj = (hidx % INJECT_EVERY) == 0
-    injected = hourly.select(
-        "hour",
-        F.when(inj, F.col("n") * INJECT_MULT + INJECT_ADD)
-        .otherwise(F.col("n"))
-        .cast("long")
-        .alias("n"),
-        inj.alias("inj"),
-    )
-    flags = ensemble_from_hourly(injected.select("hour", "n")).select(
-        "hour", "votes"
-    )
-    # hours-bounded, materialized once: the three consensus-level
-    # aggregates below each re-ran the ENTIRE injected ensemble
-    # without the cut (census: 72 parquet scans / 866 plan nodes;
-    # after: the detector runs once)
-    m = injected.select("hour", "inj").join(
-        flags, "hour", "left"
-    ).transform(materialize)
-    votes = F.coalesce(F.col("votes"), F.lit(0))
-    per = []
-    for k in (1, 2, 3):
-        det = votes >= k
-        agg = m.agg(
-            F.lit(k).cast("long").alias("min_votes"),
-            F.sum(F.when(F.col("inj"), 1).otherwise(0))
-            .cast("long")
-            .alias("n_injected"),
-            F.sum(F.when(F.col("inj") & det, 1).otherwise(0))
-            .cast("long")
-            .alias("tp"),
-            F.sum(F.when(~F.col("inj") & det, 1).otherwise(0))
-            .cast("long")
-            .alias("fp"),
-        )
-        tp = F.col("tp").cast("double")
-        prec = F.try_divide(tp, F.col("tp") + F.col("fp"))
-        rec = F.try_divide(tp, F.col("n_injected"))
-        per.append(
-            agg.select(
-                "min_votes",
-                "n_injected",
-                "tp",
-                "fp",
-                (F.col("n_injected") - F.col("tp"))
-                .cast("long")
-                .alias("fn"),
-                quantize(prec, 6).alias("precision"),
-                quantize(rec, 6).alias("recall"),
-                quantize(
-                    F.try_divide(2.0 * prec * rec, prec + rec), 6
-                ).alias("f1"),
             )
         )
     out = per[0]
@@ -1157,81 +818,6 @@ def events_watermark_audit(
     return out
 
 
-def events_parallel_trends(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Event-study diagnostic for `events_diff_in_diff`: the per-day
-    treated-vs-control mean gap, centered on the pre-period average
-    gap — flat pre-period residuals are the parallel-trends
-    assumption MADE VISIBLE (the standard picture reviewers ask for
-    before trusting any DiD estimate).
-
-    Scale: the same calendar-bounded (treat, day) moment cells as the
-    sequential tier, one 1-row pre-period broadcast, narrow math per
-    day row.
-    """
-    return parallel_trends_from_cells(
-        msprt_cells(load_table(spark, sf_dir, "events"))
-    )
-
-
-def parallel_trends_from_cells(cells: DataFrame) -> DataFrame:
-    """The event-study fold over (treat, day_us, n, sv) cells —
-    shared by the batch query and the streaming drain."""
-    per_day = cells.groupBy("day_us").agg(
-        F.sum(F.when(F.col("treat"), F.col("n")).otherwise(0))
-        .cast("long")
-        .alias("n_t"),
-        F.sum(F.when(~F.col("treat"), F.col("n")).otherwise(0))
-        .cast("long")
-        .alias("n_c"),
-        F.sum(F.when(F.col("treat"), F.col("sv")).otherwise(0))
-        .cast("double")
-        .alias("sv_t"),
-        F.sum(F.when(~F.col("treat"), F.col("sv")).otherwise(0))
-        .cast("double")
-        .alias("sv_c"),
-    )
-    gap = (
-        F.try_divide(F.col("sv_t"), F.col("n_t"))
-        - F.try_divide(F.col("sv_c"), F.col("n_c"))
-    ) / 100.0
-    gapped = per_day.withColumn("gap_raw", gap)
-    bounds = gapped.agg(
-        (
-            (
-                F.min("day_us").cast("double")
-                + F.max("day_us").cast("double")
-            )
-            / 2.0
-        ).alias("mid")
-    )
-    g = gapped.crossJoin(F.broadcast(bounds)).withColumn(
-        "is_pre", F.col("day_us").cast("double") < F.col("mid")
-    )
-    pre = g.filter(F.col("is_pre")).agg(
-        F.avg("gap_raw").alias("pre_gap")
-    )
-    day0 = 86_400_000_000
-    return (
-        g.crossJoin(F.broadcast(pre))
-        .select(
-            "day_us",
-            F.floor(
-                (F.col("day_us").cast("double") - F.col("mid")) / day0
-            )
-            .cast("long")
-            .alias("rel_day"),
-            "n_t",
-            "n_c",
-            quantize(F.col("gap_raw"), 4).alias("gap"),
-            quantize(F.col("gap_raw") - F.col("pre_gap"), 4).alias(
-                "gap_vs_pre"
-            ),
-        )
-    )
-
-
 QTE_QS = (0.25, 0.5, 0.75, 0.9)
 
 
@@ -1241,8 +827,8 @@ def events_quantile_treatment_effect(
     """Quantile treatment effects: the treated-vs-control difference
     at several quantiles of the value distribution — where in the
     distribution the effect lives (a mean shift, a tail effect, or a
-    median move), the distributional readout `events_ab_welch`'s
-    single mean can't give.
+    median move), the distributional readout a single mean can't
+    give.
 
     Scale: interpolated percentiles are a fixed-size sketch-style
     aggregate per arm (one pass, no global sort shipped to one task);
@@ -1279,148 +865,6 @@ def events_quantile_treatment_effect(
     for frame in per_q[1:]:
         out = out.unionByName(frame)
     return out
-
-
-MSPRT_TAU_SQ = 25.0  # mixture variance (dollars^2)
-
-
-def msprt_cells(ev: DataFrame) -> DataFrame:
-    """(treat, day_us) moment cells — the calendar-bounded mergeable
-    state shared by the batch op and the streaming twin."""
-    grid = ev.select(
-        (F.col("user_id") % 2 == 0).alias("treat"),
-        F.unix_micros(F.date_trunc("day", F.col("ts"))).alias("day_us"),
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("vq"),
-    )
-    return grid.groupBy("treat", "day_us").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(F.col("vq").cast("decimal(38,0)")).alias("sv"),
-        F.sum((F.col("vq") * F.col("vq")).cast("decimal(38,0)")).alias(
-            "svv"
-        ),
-    )
-
-
-def msprt_from_cells(cells: DataFrame) -> DataFrame:
-    """Always-valid sequential A/B test (mSPRT with a normal mixture,
-    τ² fixed): for every day, the mixture likelihood ratio Λ over the
-    CUMULATIVE evidence so far and the monotone always-valid p-value
-    p_d = min(1, min_{d'≤d} 1/Λ_{d'}) — the "peek whenever you want"
-    readout fixed-horizon tests (`events_ab_welch`) forbid. Emits the
-    full decision trajectory.
-
-    Scale: day-level moment cells (calendar-bounded), cumulative and
-    running-min folds as broadcast theta-joins over the ≤days table —
-    no global window, nothing corpus-sized past the first agg."""
-    per_day = cells.groupBy("day_us").agg(
-        F.sum(F.when(F.col("treat"), F.col("n")).otherwise(0))
-        .cast("long")
-        .alias("n_t"),
-        F.sum(F.when(~F.col("treat"), F.col("n")).otherwise(0))
-        .cast("long")
-        .alias("n_c"),
-        F.sum(F.when(F.col("treat"), F.col("sv")).otherwise(0))
-        .cast("double")
-        .alias("sv_t"),
-        F.sum(F.when(~F.col("treat"), F.col("sv")).otherwise(0))
-        .cast("double")
-        .alias("sv_c"),
-        F.sum(F.when(F.col("treat"), F.col("svv")).otherwise(0))
-        .cast("double")
-        .alias("svv_t"),
-        F.sum(F.when(~F.col("treat"), F.col("svv")).otherwise(0))
-        .cast("double")
-        .alias("svv_c"),
-    )
-    other = per_day.select(
-        F.col("day_us").alias("d2"),
-        F.col("n_t").alias("n_t2"),
-        F.col("n_c").alias("n_c2"),
-        F.col("sv_t").alias("sv_t2"),
-        F.col("sv_c").alias("sv_c2"),
-        F.col("svv_t").alias("svv_t2"),
-        F.col("svv_c").alias("svv_c2"),
-    )
-    cum = (
-        per_day.select("day_us")
-        .join(F.broadcast(other), F.col("d2") <= F.col("day_us"))
-        .groupBy("day_us")
-        .agg(
-            F.sum("n_t2").cast("long").alias("n_t"),
-            F.sum("n_c2").cast("long").alias("n_c"),
-            F.sum("sv_t2").alias("sv_t"),
-            F.sum("sv_c2").alias("sv_c"),
-            F.sum("svv_t2").alias("svv_t"),
-            F.sum("svv_c2").alias("svv_c"),
-        )
-    )
-    m_t = F.try_divide(F.col("sv_t"), F.col("n_t")) / 100.0
-    m_c = F.try_divide(F.col("sv_c"), F.col("n_c")) / 100.0
-    var_t = (
-        F.try_divide(
-            F.col("svv_t")
-            - F.try_divide(
-                F.col("sv_t") * F.col("sv_t"), F.col("n_t")
-            ),
-            F.col("n_t") - 1,
-        )
-        / 10000.0
-    )
-    var_c = (
-        F.try_divide(
-            F.col("svv_c")
-            - F.try_divide(
-                F.col("sv_c") * F.col("sv_c"), F.col("n_c")
-            ),
-            F.col("n_c") - 1,
-        )
-        / 10000.0
-    )
-    v = F.try_divide(var_t, F.col("n_t")) + F.try_divide(
-        var_c, F.col("n_c")
-    )
-    delta = m_t - m_c
-    lam = F.sqrt(v / (v + MSPRT_TAU_SQ)) * F.exp(
-        F.try_divide(
-            delta * delta * MSPRT_TAU_SQ,
-            2.0 * v * (v + MSPRT_TAU_SQ),
-        )
-    )
-    ok = (F.col("n_t") > 1) & (F.col("n_c") > 1)
-    scored = cum.select(
-        "day_us",
-        "n_t",
-        "n_c",
-        F.when(ok, quantize(lam, 6)).alias("lambda_mixture"),
-    )
-    o2 = scored.select(
-        F.col("day_us").alias("d2"), F.col("lambda_mixture").alias("l2")
-    )
-    with_p = (
-        scored.join(F.broadcast(o2), F.col("d2") <= F.col("day_us"))
-        .groupBy("day_us", "n_t", "n_c", "lambda_mixture")
-        .agg(F.max("l2").alias("max_lam"))
-    )
-    p = F.least(F.lit(1.0), 1.0 / F.col("max_lam"))
-    return with_p.select(
-        "day_us",
-        "n_t",
-        "n_c",
-        "lambda_mixture",
-        F.when(F.col("max_lam") > 0, quantize(p, 6)).alias(
-            "always_valid_p"
-        ),
-    )
-
-
-def events_sequential_msprt(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Always-valid sequential test trajectory (mSPRT). See
-    `msprt_from_cells`."""
-    return msprt_from_cells(
-        msprt_cells(load_table(spark, sf_dir, "events"))
-    )
 
 
 DP_MEDIAN_EPS = 1.0
@@ -1477,256 +921,6 @@ def events_dp_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("dp_median_bin"),
         F.lit(DP_MEDIAN_EPS).alias("epsilon"),
-    )
-
-
-BOOT_REPS = 200
-# Poisson(1) inverse-CDF thresholds (cumulative P(X <= k), k = 0..8);
-# a draw u lands on the first k with u < cum[k], else 9 — injected as
-# identical double literals into both engines
-_POISSON_CUM = [
-    0.36787944117144233,
-    0.7357588823428847,
-    0.9196986029286058,
-    0.9810118431238462,
-    0.9963401531726563,
-    0.9994058151824183,
-    0.999916758850712,
-    0.9999897508033253,
-    0.9999988805827461,
-]
-
-
-def events_bootstrap_diff_ci(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Poisson-bootstrap confidence interval for the A/B difference in
-    per-user total value: every user carries an md5-keyed Poisson(1)
-    weight per replicate, each replicate re-estimates the
-    treated-vs-control mean difference, and the 2.5%/97.5% replicate
-    quantiles give the nonparametric CI — the parametric-free
-    companion to `events_ab_welch`, in the one bootstrap formulation
-    that streams (weights are a map-side expression; no resampling
-    shuffle ever materializes).
-
-    Scale: per-user totals are one natural-key agg; the replicate
-    fan-out partial-aggregates to R × 4 cells map-side, so the
-    shuffle is R rows regardless of corpus size; the quantile sort
-    touches R rows.
-    """
-    return bootstrap_ci_from_users(
-        boot_users_of(load_table(spark, sf_dir, "events"))
-    )
-
-
-def boot_users_of(ev: DataFrame) -> DataFrame:
-    """Per-user cent-grid value totals over any events relation —
-    shared by the batch query and the experiment-readout hub."""
-    return ev.groupBy("user_id").agg(
-        F.sum(F.floor(F.col("value") * 100 + 0.5).cast("decimal(38,0)"))
-        .cast("double")
-        .alias("y")
-    )
-
-
-def bootstrap_ci_from_users(per_user: DataFrame) -> DataFrame:
-    """The replicate fan-out + CI fold over a (user_id, y) table —
-    shared by the batch query and the streaming drain (weights are a
-    pure function of (user, replicate), so the state a stream needs
-    is just the per-user totals)."""
-    reps = per_user.select(
-        "user_id",
-        (F.col("user_id") % 2 == 0).alias("treat"),
-        "y",
-        F.explode(F.sequence(F.lit(0), F.lit(BOOT_REPS - 1))).alias("r"),
-    )
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.lit("bs|"),
-                    F.col("user_id").cast("string"),
-                    F.lit("|"),
-                    F.col("r").cast("string"),
-                )
-            ),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("double")
-    u = (h + F.lit(0.5)) / F.lit(DP_U_SCALE)
-    wexpr = F.lit(9)
-    for k in range(len(_POISSON_CUM) - 1, -1, -1):
-        wexpr = F.when(u < F.lit(_POISSON_CUM[k]), F.lit(k)).otherwise(
-            wexpr
-        )
-    weighted = reps.withColumn("w", wexpr.cast("long"))
-    cells = weighted.groupBy("r").agg(
-        F.sum(F.when(F.col("treat"), F.col("w"))).alias("n_t"),
-        F.sum(F.when(F.col("treat"), F.col("w") * F.col("y"))).alias(
-            "sy_t"
-        ),
-        F.sum(F.when(~F.col("treat"), F.col("w"))).alias("n_c"),
-        F.sum(F.when(~F.col("treat"), F.col("w") * F.col("y"))).alias(
-            "sy_c"
-        ),
-    )
-    diff = (
-        (F.col("sy_t") / F.col("n_t") - F.col("sy_c") / F.col("n_c"))
-        / 100.0
-    )
-    diffs = cells.select(quantize(diff, 6).alias("d"))
-    # exact interpolated percentiles over the R-row replicate table —
-    # no global window, identical definition in the DuckDB twin
-    lo = F.expr("percentile(d, 0.025)")
-    hi = F.expr("percentile(d, 0.975)")
-    return diffs.agg(
-        F.count(F.lit(1)).cast("long").alias("n_reps"),
-        quantize(F.avg("d"), 4).alias("diff_mean"),
-        quantize(lo, 4).alias("ci_lo"),
-        quantize(hi, 4).alias("ci_hi"),
-        ((lo <= 0.0) & (hi >= 0.0)).alias("covers_zero"),
-    )
-
-
-def cuped_cells(ev: DataFrame) -> DataFrame:
-    """Per-(user, day) value-sum cells on the cent grid — the
-    mergeable state shared by the batch op and the streaming twin
-    (the `stream_growth_accounting` user-day bound)."""
-    return ev.groupBy(
-        (F.col("user_id") % 2 == 0).alias("treat"),
-        F.col("user_id"),
-        F.unix_micros(F.date_trunc("day", F.col("ts"))).alias("day_us"),
-    ).agg(
-        F.sum(
-            F.floor(F.col("value") * 100 + 0.5).cast("decimal(38,0)")
-        ).alias("sv")
-    )
-
-
-def cuped_from_cells(cells: DataFrame) -> DataFrame:
-    """CUPED variance-reduced experiment readout over (treat, user,
-    day, Σv) cells: covariate x = each user's PRE-period value, metric
-    y = POST-period value (period split at the midpoint of the
-    observed day range, the DiD rule), θ = pooled cov(x,y)/var(x),
-    adjusted metric y′ = y − θ·x — the industry-standard variance
-    reduction that tightens the same comparison `events_ab_welch`
-    makes on the raw metric. Emits θ, raw and adjusted treatment
-    effects, the adjusted t, and the realized variance-reduction
-    ratio.
-
-    Scale: one user-day partial agg (exact decimal cents), a per-user
-    fold into (x, y), then a SIX-MOMENT conditional fold per arm —
-    single row out, the ab_welch algebra throughout."""
-    bounds = cells.agg(
-        (
-            (
-                F.min("day_us").cast("double")
-                + F.max("day_us").cast("double")
-            )
-            / 2.0
-        ).alias("mid")
-    )
-    per_user = (
-        cells.crossJoin(F.broadcast(bounds))
-        .groupBy("treat", "user_id")
-        .agg(
-            F.sum(
-                F.when(
-                    F.col("day_us").cast("double") < F.col("mid"),
-                    F.col("sv"),
-                ).otherwise(F.lit(0))
-            )
-            .cast("double")
-            .alias("x"),
-            F.sum(
-                F.when(
-                    F.col("day_us").cast("double") >= F.col("mid"),
-                    F.col("sv"),
-                ).otherwise(F.lit(0))
-            )
-            .cast("double")
-            .alias("y"),
-        )
-    )
-
-    def arm(flag: bool, col: Column) -> Column:
-        return F.sum(F.when(F.col("treat") == flag, col).otherwise(0.0))
-
-    moments = per_user.agg(
-        *[
-            e.alias(f"{n}_{s}")
-            for flag, s in ((True, "t"), (False, "c"))
-            for n, e in (
-                ("n", F.sum(F.when(F.col("treat") == flag, 1).otherwise(0)).cast("double")),
-                ("sx", arm(flag, F.col("x"))),
-                ("sy", arm(flag, F.col("y"))),
-                ("sxx", arm(flag, F.col("x") * F.col("x"))),
-                ("syy", arm(flag, F.col("y") * F.col("y"))),
-                ("sxy", arm(flag, F.col("x") * F.col("y"))),
-            )
-        ]
-    )
-    n = F.col("n_t") + F.col("n_c")
-    sx = F.col("sx_t") + F.col("sx_c")
-    sy = F.col("sy_t") + F.col("sy_c")
-    sxx = F.col("sxx_t") + F.col("sxx_c")
-    sxy = F.col("sxy_t") + F.col("sxy_c")
-    # try_divide: degenerate corpora (one arm, zero covariate
-    # variance) must yield NULLs, not ANSI divide-by-zero
-    var_x = F.try_divide(sxx, n) - F.try_divide(sx, n) * F.try_divide(
-        sx, n
-    )
-    cov_xy = F.try_divide(sxy, n) - F.try_divide(sx, n) * F.try_divide(
-        sy, n
-    )
-    theta = F.try_divide(cov_xy, var_x)
-
-    def mean(p: str, s: str) -> Column:
-        return F.try_divide(F.col(f"{p}_{s}"), F.col(f"n_{s}"))
-
-    def var_adj(s: str) -> Column:
-        vy = mean("syy", s) - mean("sy", s) * mean("sy", s)
-        vx = mean("sxx", s) - mean("sx", s) * mean("sx", s)
-        cxy = mean("sxy", s) - mean("sx", s) * mean("sy", s)
-        return vy - 2.0 * theta * cxy + theta * theta * vx
-
-    diff_raw = mean("sy", "t") - mean("sy", "c")
-    diff_adj = (mean("sy", "t") - theta * mean("sx", "t")) - (
-        mean("sy", "c") - theta * mean("sx", "c")
-    )
-    se2 = F.try_divide(var_adj("t"), F.col("n_t")) + F.try_divide(
-        var_adj("c"), F.col("n_c")
-    )
-    vy_t = mean("syy", "t") - mean("sy", "t") * mean("sy", "t")
-    vy_c = mean("syy", "c") - mean("sy", "c") * mean("sy", "c")
-    se2_raw = F.try_divide(vy_t, F.col("n_t")) + F.try_divide(
-        vy_c, F.col("n_c")
-    )
-    ok = (F.col("n_t") > 1) & (F.col("n_c") > 1) & (var_x > 0)
-    return moments.select(
-        F.col("n_t").cast("long").alias("n_treat"),
-        F.col("n_c").cast("long").alias("n_ctrl"),
-        F.when(ok, quantize(theta, 6)).alias("theta"),
-        quantize(diff_raw / 100.0, 4).alias("diff_raw"),
-        F.when(ok, quantize(diff_adj / 100.0, 4)).alias("diff_adj"),
-        F.when(
-            ok & (se2 > 0),
-            quantize(F.try_divide(diff_adj, F.sqrt(se2)), 4),
-        ).alias("t_adj"),
-        F.when(
-            ok & (se2_raw > 0), quantize(1.0 - se2 / se2_raw, 6)
-        ).alias("var_reduction"),
-    )
-
-
-def events_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUPED-adjusted treatment-effect readout (pre-period value as
-    the control covariate). See `cuped_from_cells`."""
-    return cuped_from_cells(
-        cuped_cells(load_table(spark, sf_dir, "events"))
     )
 
 
@@ -1925,7 +1119,7 @@ def attribution_markov_from_pairs(pairs: DataFrame) -> DataFrame:
     the channel are lost to END instead (transitions redirected, NOT
     renormalized — the standard node-removal semantics); attribution
     share = normalized removal effects. The principled multi-touch
-    answer `events_attribution`'s first/last-touch table cannot give.
+    answer a first/last-touch table cannot give.
 
     Same discipline as `events_absorption`: the corpus-sized work is
     the transition agg; the matrix is (types+2)² cells (a 1-matrix
@@ -2057,60 +1251,6 @@ def events_dp_user_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dp_user_release_from_counts(per_user)
 
 
-ATTR_WINDOW_US = 7 * 24 * 3600 * 1_000_000
-
-
-def events_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Marketing attribution per purchase: the FIRST and LAST view by
-    the same user within the 7-day lookback window, plus the touch
-    count — first-touch / last-touch / linear attribution all read off
-    this one table.
-
-    Scale: one natural-key (user_id) join between the purchase and
-    view slices with an event-time interval predicate — the
-    stream_view_click_join shape; pair volume is bounded by per-user
-    activity inside the window, never the cross product. Purchases
-    with no prior view keep NULL touches (left join).
-    """
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "ts_us", F.unix_micros("ts")
-    )
-    views = ev.filter(F.col("event_type") == "view").select(
-        F.col("user_id").alias("v_user"), F.col("ts_us").alias("v_ts")
-    )
-    buys = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts_us", "value"
-    )
-    touched = (
-        buys.join(
-            views,
-            (F.col("user_id") == F.col("v_user"))
-            & (F.col("v_ts") <= F.col("ts_us"))
-            & (F.col("v_ts") >= F.col("ts_us") - F.lit(ATTR_WINDOW_US)),
-        )
-        .groupBy("event_id")
-        .agg(
-            F.min("v_ts").alias("first_view_ts_us"),
-            F.max("v_ts").alias("last_view_ts_us"),
-            F.count(F.lit(1)).cast("long").alias("n_touches"),
-        )
-    )
-    return (
-        buys.join(touched, "event_id", "left")
-        .select(
-            "event_id",
-            "user_id",
-            "ts_us",
-            "value",
-            "first_view_ts_us",
-            "last_view_ts_us",
-            F.coalesce("n_touches", F.lit(0)).cast("long").alias(
-                "n_touches"
-            ),
-        )
-    )
-
-
 BOT_MIN_EVENTS = 30
 BOT_RATE_PER_MIN = 2.0
 
@@ -2205,92 +1345,11 @@ def new_vs_returning_from_pairs(du: DataFrame) -> DataFrame:
     )
 
 
-def events_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full daily growth accounting: DAU decomposed into NEW (first
-    activity), RETAINED (also active the previous day), RESURRECTED
-    (returning after a gap), plus the day's CHURN (users active
-    yesterday who went silent today — censored at the corpus edge,
-    so the last day never fabricates churn) and the quick ratio
-    (new+resurrected)/churned — the standard growth-team ledger that
-    `events_new_vs_returning`'s two-way split only sketches.
-
-    Scale: ONE user-keyed sort-shuffle over the (user, day) distinct
-    activity (lag/lead share the window), a 1-row max-day broadcast,
-    then two day-bounded aggs full-outer-joined on the calendar —
-    exact integers, one guarded division.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    day = F.date_trunc("day", F.col("ts")).alias("day")
-    du = ev.select(day, "user_id").distinct()
-    return growth_from_pairs(du)
-
-
-def growth_from_pairs(du: DataFrame) -> DataFrame:
-    """The growth ledger over distinct (day, user_id) activity pairs —
-    shared by the batch query and the streaming drain
-    (`stream_growth_accounting` dedups to the same pairs at ingest)."""
-    # keys rename on the self-lineage agg (drained-relation rule)
-    mx = du.select(F.col("day").alias("day_m")).agg(
-        F.max("day_m").alias("max_day")
-    )
-    w = Window.partitionBy("user_id").orderBy("day")
-    x = du.select(
-        "user_id",
-        "day",
-        F.lag("day").over(w).alias("prev_day"),
-        F.lead("day").over(w).alias("next_day"),
-    ).crossJoin(F.broadcast(mx))
-    one_day = F.expr("INTERVAL 1 DAY")
-    act = x.groupBy("day").agg(
-        F.count(F.lit(1)).cast("long").alias("dau"),
-        F.sum(F.col("prev_day").isNull().cast("long"))
-        .cast("long")
-        .alias("n_new"),
-        F.sum((F.col("prev_day") == F.col("day") - one_day).cast("long"))
-        .cast("long")
-        .alias("n_retained"),
-        F.sum(
-            (
-                F.col("prev_day").isNotNull()
-                & (F.col("prev_day") < F.col("day") - one_day)
-            ).cast("long")
-        )
-        .cast("long")
-        .alias("n_resurrected"),
-    )
-    churn = (
-        x.where(
-            (F.col("next_day").isNull() & (F.col("day") < F.col("max_day")))
-            | (F.col("next_day") > F.col("day") + one_day)
-        )
-        .select((F.col("day") + one_day).alias("day"))
-        .groupBy("day")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_churned"))
-    )
-    j = act.join(churn, "day", "full_outer")
-    nz = lambda c: F.coalesce(F.col(c), F.lit(0)).cast("long")
-    churned = nz("n_churned")
-    gained = nz("n_new") + nz("n_resurrected")
-    return j.select(
-        "day",
-        nz("dau").alias("dau"),
-        nz("n_new").alias("n_new"),
-        nz("n_retained").alias("n_retained"),
-        nz("n_resurrected").alias("n_resurrected"),
-        churned.alias("n_churned"),
-        F.when(
-            churned > 0,
-            quantize(gained.cast("double") / churned, 6),
-        ).alias("quick_ratio"),
-    )
-
-
 def events_adoption_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """User-adoption (penetration) curve: per day, how many users had
     their FIRST-ever activity that day, the cumulative user base, and
     its share of the final population — the S-curve read a launch
-    review runs (`events_growth_accounting` is the daily ledger; this
-    is its cumulative integral).
+    review runs.
 
     Scale: first-seen day is one user-keyed partial agg collapsing to
     a days-bounded table; the cumulative sum runs over the
@@ -2830,62 +1889,6 @@ def events_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PLAW_TOP_K = 256
-
-
-def events_power_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Power-law fit of the user-activity distribution: least-squares
-    slope/R² of log(events-per-user) vs log(rank) over the top-256
-    users — the one-row heavy-tail summary behind capacity and
-    abuse-threshold decisions (the quantile view is
-    `events_user_activity_quantiles`; this fits the tail's exponent).
-
-    Scale: per-user counts = one user-keyed partial agg; top-K =
-    `TakeOrderedAndProject`; ranks assigned window-free by the
-    pack-and-posexplode idiom on the K-row result; `regr_*` built-in
-    aggregates over K rows.
-    """
-    per = (
-        load_table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    top = per.orderBy(F.col("n").desc(), F.col("user_id")).limit(
-        PLAW_TOP_K
-    )
-    packed = top.agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct((-F.col("n")).alias("neg_n"), F.col("user_id"))
-            )
-        ).alias("arr")
-    )
-    ranked = packed.select(F.posexplode("arr").alias("pos", "e")).select(
-        (-F.col("e.neg_n")).cast("double").alias("n"),
-        (F.col("pos") + 1).cast("double").alias("rk"),
-    )
-    # constant-y guard (all top-K users equally active): Syy = 0 makes
-    # engine regr_r2 a nondeterministic 0/0 — answer the flat case in
-    # closed form via an EXACT integer min=max comparison
-    raw = ranked.agg(
-        F.count(F.lit(1)).cast("long").alias("n_users"),
-        F.min("n").alias("mn_n"),
-        F.max("n").alias("mx_n"),
-        F.regr_slope(F.log("n"), F.log("rk")).alias("sl"),
-        F.regr_r2(F.log("n"), F.log("rk")).alias("rr"),
-    )
-    y_flat = F.col("mn_n") == F.col("mx_n")
-    return raw.select(
-        "n_users",
-        F.when(y_flat, F.lit(0.0))
-        .otherwise(quantize(F.col("sl"), 4))
-        .alias("tail_slope"),
-        F.when(y_flat, F.lit(1.0))
-        .otherwise(quantize(F.col("rr"), 4))
-        .alias("r2"),
-    )
-
-
 def events_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-way additive decomposition of the hourly count series:
     observed = day effect + hour-of-day effect − grand mean +
@@ -3158,7 +2161,7 @@ def events_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gini coefficient of user activity — the inequality summary of
     the engagement distribution (0 = everyone equally active, →1 = a
     few users generate everything); the scalar companion to the
-    power-law fit and activity quantiles.
+    activity quantiles.
 
     Scale: computed EXACTLY from the counts-of-counts histogram — the
     mean-absolute-difference double sum runs over the V² pairs of
@@ -3213,77 +2216,6 @@ def gini_from_user_counts(per: DataFrame) -> DataFrame:
                 6,
             ).alias("gini"),
         )
-    )
-
-
-def events_session_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """In-session conversion funnel: sessions (30-min gap rule) that
-    contain a view, a click strictly after their first view, and a
-    purchase strictly after that click — funnels that complete WITHIN
-    one visit, vs `events_funnel`'s lifetime cascade. Emits the
-    session counts and stage conversion rates.
-
-    Scale: reuses the sessionized frame (one user-keyed sort-shuffle);
-    the stage logic is three conditional-min aggregates per (user,
-    session) key; the rollup is one row.
-    """
-    sz = sessionized(spark, sf_dir).select(
-        "user_id", "session_id", "event_type", "ts_us"
-    )
-    key = ["user_id", "session_id"]
-    v = (
-        sz.filter(F.col("event_type") == "view")
-        .groupBy(*key)
-        .agg(F.min("ts_us").alias("t_view"))
-    )
-    c = (
-        sz.filter(F.col("event_type") == "click")
-        .join(v, key)
-        .filter(F.col("ts_us") > F.col("t_view"))
-        .groupBy(*key)
-        .agg(F.min("ts_us").alias("t_click"))
-    )
-    p = (
-        sz.filter(F.col("event_type") == "purchase")
-        .join(c, key)
-        .filter(F.col("ts_us") > F.col("t_click"))
-        .groupBy(*key)
-        .agg(F.min("ts_us").alias("t_purchase"))
-    )
-    tot = (
-        sz.select(*key)
-        .distinct()
-        .agg(F.count(F.lit(1)).alias("n_sessions"))
-    )
-    counts = (
-        v.agg(F.count(F.lit(1)).alias("n_view_sessions"))
-        .crossJoin(
-            F.broadcast(c.agg(F.count(F.lit(1)).alias("n_click_sessions")))
-        )
-        .crossJoin(
-            F.broadcast(
-                p.agg(F.count(F.lit(1)).alias("n_purchase_sessions"))
-            )
-        )
-        .crossJoin(F.broadcast(tot))
-    )
-    return counts.select(
-        F.col("n_sessions").cast("long").alias("n_sessions"),
-        F.col("n_view_sessions").cast("long").alias("n_view_sessions"),
-        F.col("n_click_sessions").cast("long").alias("n_click_sessions"),
-        F.col("n_purchase_sessions")
-        .cast("long")
-        .alias("n_purchase_sessions"),
-        quantize(
-            F.col("n_click_sessions").cast("double")
-            / F.col("n_view_sessions"),
-            6,
-        ).alias("view_to_click"),
-        quantize(
-            F.col("n_purchase_sessions").cast("double")
-            / F.col("n_click_sessions"),
-            6,
-        ).alias("click_to_purchase"),
     )
 
 
@@ -3627,47 +2559,6 @@ def events_uptime(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_time_weighted_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-weighted average event value per user (the hypertable
-    `time_weight` primitive): each event's value is held until the
-    user's next event, so the average weights by HOLD DURATION, not
-    by event count — the correct aggregate for sampled state series
-    (a price observed twice a day and once a month must not average
-    per-observation). The last (open) interval is excluded; users
-    with one event report NULL.
-
-    Scale: one user-partitioned lag window (sort-shuffle on the
-    natural key, shared with the sessionization family), then a
-    user-keyed partial agg of exact integer micros × cent products in
-    decimal accumulators — no float until the final division.
-    """
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id",
-        F.unix_micros("ts").alias("ts_us"),
-        "event_id",
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("vq"),
-    )
-    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    holds = ev.withColumn("next_us", F.lead("ts_us").over(w)).filter(
-        F.col("next_us").isNotNull()
-    )
-    dur = (F.col("next_us") - F.col("ts_us")).cast("long")
-    per = holds.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_intervals"),
-        F.sum(dur).cast("long").alias("total_us"),
-        F.sum((dur * F.col("vq")).cast("decimal(38,0)")).alias("wsum"),
-    )
-    tw = F.col("wsum").cast("double") / F.col("total_us") / 100.0
-    return per.select(
-        "user_id",
-        "n_intervals",
-        "total_us",
-        F.when(F.col("total_us") > 0, quantize(tw, 4)).alias(
-            "tw_avg_value"
-        ),
-    )
-
-
 def events_value_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population stability index of event value between the first
     and second half of the observation window (split at the median
@@ -3911,84 +2802,6 @@ def ensemble_from_hourly(hourly: DataFrame) -> DataFrame:
     )
 
 
-def events_funnel_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conversion latency through the lifetime funnel: exact p50/p90
-    of the view→click and click→purchase gaps among converting users
-    — `events_funnel` counts WHO converts, this measures HOW LONG
-    conversion takes (the SLA companion every funnel dashboard pairs
-    with counts).
-
-    Scale: the same three user-keyed conditional-min aggregates as
-    `events_funnel` (AQE reuses the user_id exchange); deltas are
-    exact integer microseconds; each percentile runs over the
-    converting-users-bounded delta column (shared linear-interpolation
-    definition with DuckDB's quantile_cont — the `events_value_
-    quantiles` parity); the result is one row.
-    """
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "ts_us", F.unix_micros("ts")
-    )
-    # v and c are users-bounded and each read twice (the next funnel
-    # stage AND the final times join); materialized once so the
-    # sequential-stage chain doesn't re-run the upstream events scans
-    # per reference (census: 10 parquet scans for this query)
-    v = (
-        ev.filter(F.col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(F.min("ts_us").alias("t_view"))
-        .transform(materialize)
-    )
-    c = (
-        ev.filter(F.col("event_type") == "click")
-        .join(v, "user_id")
-        .filter(F.col("ts_us") > F.col("t_view"))
-        .groupBy("user_id")
-        .agg(F.min("ts_us").alias("t_click"))
-        .transform(materialize)
-    )
-    p = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(c, "user_id")
-        .filter(F.col("ts_us") > F.col("t_click"))
-        .groupBy("user_id")
-        .agg(F.min("ts_us").alias("t_purchase"))
-    )
-    times = v.join(c, "user_id", "left").join(p, "user_id", "left")
-    return funnel_latency_from_times(times)
-
-
-def funnel_latency_from_times(times: DataFrame) -> DataFrame:
-    """The stage-latency scan over per-user (t_view, t_click,
-    t_purchase) progression times — shared by the batch query and
-    the streaming drain (`stream_funnel_latency` reads the SAME
-    min-progression times out of the funnel stage machine's
-    3-scalar state)."""
-    vc = times.filter(F.col("t_click").isNotNull()).select(
-        (F.col("t_click") - F.col("t_view")).alias("d_us")
-    )
-    cp = times.filter(F.col("t_purchase").isNotNull()).select(
-        (F.col("t_purchase") - F.col("t_click")).alias("d_us")
-    )
-
-    def lat(df: DataFrame, name: str) -> DataFrame:
-        return df.agg(
-            F.count(F.lit(1)).cast("long").alias(f"n_{name}"),
-            F.round(
-                F.expr("percentile(d_us, 0.5)") / 1000000.0, 3
-            ).alias(f"p50_{name}_s"),
-            F.round(
-                F.expr("percentile(d_us, 0.9)") / 1000000.0, 3
-            ).alias(f"p90_{name}_s"),
-        )
-
-    n_view = times.filter(F.col("t_view").isNotNull()).agg(
-        F.count(F.lit(1)).cast("long").alias("n_view_users")
-    )
-    return n_view.crossJoin(
-        F.broadcast(lat(vc, "view_to_click"))
-    ).crossJoin(F.broadcast(lat(cp, "click_to_purchase")))
-
-
 def events_churn_half_life(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Churn half-life: the first lifetime day-offset where the
     Kaplan-Meier survival estimate drops to ≤ 0.5 — the one-number
@@ -4015,95 +2828,6 @@ def events_churn_half_life(spark: SparkSession, sf_dir: str) -> DataFrame:
         "half_life_days",
         "terminal_survival",
         F.col("half_life_days").isNotNull().alias("median_reached"),
-    )
-
-
-PERIODOGRAM_PERIODS_H = (6, 12, 24, 84, 168)  # quarter/half/day, half-week, week
-
-
-def events_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frequency-domain seasonality scan: the periodogram power of
-    the hourly count series at candidate periods (6 h, 12 h, 24 h,
-    half-week, week) — `events_autocorr` asks "does lag 24 correlate?",
-    this asks "WHICH cycle carries the variance" (the spectral answer
-    a seasonal model should be built around). Power is normalized to
-    share-of-variance so periods compare directly.
-
-    Scale: the series is the calendar-bounded hourly partial agg; the
-    Fourier sums run over hours × K candidate periods (one small
-    cross join, never events); the trig arguments are exact-integer
-    hour indices scaled by 2π/T, all sums quantized before the K-row
-    normalization.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    hourly = ev.groupBy(
-        F.date_trunc("hour", F.col("ts")).alias("hour")
-    ).agg(F.count(F.lit(1)).cast("long").alias("n"))
-    return periodogram_from_hourly(hourly)
-
-
-def periodogram_from_hourly(hourly: DataFrame) -> DataFrame:
-    """The spectral scan over an (hour, n) series — shared by the
-    batch query and the streaming drain (`stream_periodogram` sums
-    its tumbling per-type state to the same overall series)."""
-    spark = hourly.sparkSession
-    # keys rename on the self-lineage agg (drained-relation rule)
-    mn = hourly.select(
-        F.col("hour").alias("hour_m"), F.col("n").alias("n_m")
-    ).agg(
-        F.min("hour_m").alias("h0"),
-        F.count(F.lit(1)).cast("long").alias("cnt"),
-        F.sum("n_m").cast("long").alias("sx"),
-        F.sum(F.col("n_m") * F.col("n_m")).cast("long").alias("sxx"),
-    )
-    idx = (
-        hourly.crossJoin(F.broadcast(mn))
-        .select(
-            (
-                (F.unix_micros(F.col("hour")) - F.unix_micros(F.col("h0")))
-                / F.lit(3_600_000_000.0)
-            ).alias("t"),
-            (
-                F.col("n").cast("double")
-                - F.col("sx").cast("double") / F.col("cnt")
-            ).alias("x"),
-            "cnt",
-            "sx",
-            "sxx",
-        )
-    )
-    periods = spark.createDataFrame(
-        [(p,) for p in PERIODOGRAM_PERIODS_H], "period_h long"
-    )
-    two_pi = 2.0 * 3.141592653589793
-    arg = F.lit(two_pi) * F.col("t") / F.col("period_h")
-    comps = (
-        idx.crossJoin(F.broadcast(periods))
-        .groupBy("period_h")
-        .agg(
-            quantize(F.sum(F.col("x") * F.cos(arg)), 6).alias("c"),
-            quantize(F.sum(F.col("x") * F.sin(arg)), 6).alias("s"),
-            F.first("cnt").alias("cnt"),
-            F.first("sx").alias("sx"),
-            F.first("sxx").alias("sxx"),
-        )
-    )
-    var_n = (
-        F.col("sxx").cast("double")
-        - F.col("sx").cast("double") * F.col("sx") / F.col("cnt")
-    )
-    power = (
-        (F.col("c") * F.col("c") + F.col("s") * F.col("s"))
-        * 2.0
-        / F.col("cnt")
-    )
-    return comps.select(
-        "period_h",
-        F.col("cnt").alias("n_hours"),
-        quantize(power, 4).alias("power"),
-        F.when(var_n > 0, quantize(power / var_n, 6)).alias(
-            "variance_share"
-        ),
     )
 
 
@@ -4249,220 +2973,13 @@ def mk_from_hourly(hourly: DataFrame) -> DataFrame:
     )
 
 
-def events_value_kruskal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kruskal-Wallis rank test of event value across ALL event
-    types: the nonparametric k-sample location test (Welch compares
-    two means assuming roughly-normal; this compares k distributions
-    by rank, robust to the heavy tails transaction values actually
-    have). Tie-corrected H with the chi²(k−1) normal-approximation
-    verdict at 95%.
-
-    Scale: values live on the cent grid, so midranks are EXACT
-    integers (2·midrank = 2·cum_before + m + 1) computed from the
-    VALUE-bounded distinct-value histogram (V² broadcast self-join —
-    the KS/Gini idiom, never events²); per-group rank sums accumulate
-    in decimal(38,0); H and the tie factor are one final double
-    expression each.
-    """
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_type",
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("vq"),
-    )
-    cell = ev.groupBy("vq", "event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("ng")
-    )
-    return kruskal_from_cells(cell)
-
-
-def kruskal_from_cells(cell: DataFrame) -> DataFrame:
-    """The Kruskal-Wallis computation over a (vq, event_type, ng)
-    cell table — shared by the batch query and the streaming drain
-    (`stream_value_kruskal` accumulates the same value-grid-bounded
-    cells at ingest)."""
-    from ..operators.scan import with_prefix_sums
-
-    hist = cell.groupBy("vq").agg(F.sum("ng").cast("long").alias("m"))
-    # exclusive prefix count in vq order via the two-pass distributed
-    # scan — LINEAR in distinct values, where the old V² broadcast
-    # cum self-join ran ~2.5e9 compares once the cent grid saturates
-    # (the 2·midrank = 2·cum + m + 1 exact-integer idiom unchanged)
-    base = with_prefix_sums(hist, "vq", {"c": "m"}).select(
-        F.col("vq").alias("vqb"),
-        (2 * F.col("c") + F.col("m") + 1).alias("r2"),
-    )
-    grp = (
-        cell.join(F.broadcast(base), F.col("vq") == F.col("vqb"))
-        .groupBy("event_type")
-        .agg(
-            F.sum("ng").cast("long").alias("n_g"),
-            F.sum((F.col("ng") * F.col("r2")).cast("decimal(38,0)"))
-            .cast("double")
-            .alias("r2_g"),
-        )
-    )
-    ties = hist.agg(
-        F.sum(
-            (F.col("m") * F.col("m") * F.col("m") - F.col("m")).cast(
-                "decimal(38,0)"
-            )
-        )
-        .cast("double")
-        .alias("tie_sum"),
-        F.sum("m").cast("long").alias("n"),
-        F.count(F.lit(1)).cast("long").alias("n_values"),
-    )
-    roll = grp.agg(
-        F.count(F.lit(1)).cast("long").alias("k_groups"),
-        F.sum(
-            F.col("r2_g") * F.col("r2_g") / (4.0 * F.col("n_g"))
-        ).alias("srr"),
-    ).crossJoin(F.broadcast(ties))
-    h_raw = (
-        12.0 * F.col("srr") / (F.col("n") * (F.col("n") + 1.0))
-        - 3.0 * (F.col("n") + 1.0)
-    )
-    tie_corr = 1.0 - F.col("tie_sum") / (
-        F.col("n").cast("double") * F.col("n") * F.col("n") - F.col("n")
-    )
-    h = h_raw / tie_corr
-    # chi-square 95% critical values for k-1 = 1..9 dof
-    crit = F.when(F.col("k_groups") == 2, 3.8415).when(
-        F.col("k_groups") == 3, 5.9915
-    ).when(F.col("k_groups") == 4, 7.8147).when(
-        F.col("k_groups") == 5, 9.4877
-    ).when(F.col("k_groups") == 6, 11.0705).otherwise(F.lit(None))
-    # flat-case guards: n<2 breaks the rank normalizer, and an
-    # all-tied value column drives the tie correction to 0 (H a 0/0)
-    # — NULL in both engines, never an ANSI divide error
-    ok = (F.col("n") > 1) & (tie_corr > 0)
-    return roll.select(
-        F.col("n").alias("n_events"),
-        "k_groups",
-        "n_values",
-        F.when(ok, quantize(h, 4)).alias("h_stat"),
-        F.when(F.col("n") > 1, quantize(tie_corr, 6)).alias(
-            "tie_correction"
-        ),
-        F.when(ok, quantize(h, 4) > crit).alias("significant_95"),
-    )
-
-
-AB_GROUP_A = "purchase"
-AB_GROUP_B = "click"
-
-
-def events_ab_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Welch two-sample t-test on event value between two event types
-    (purchase vs click): the unequal-variance difference-in-means
-    test with the Welch–Satterthwaite degrees of freedom — the A/B
-    comparison primitive the KS-drift / Mann-Kendall statistics tier
-    was missing (KS asks "same distribution?", this asks "same mean,
-    and how sure?").
-
-    Scale: values live on an exact cent grid, so Σv and Σv² are
-    EXACT integer sums (decimal(38,0) accumulators — no long
-    overflow at 100 TB, DuckDB twin accumulates in hugeint); the
-    whole test is ONE map-side-combined aggregate producing a single
-    row, then one final double expression per statistic. t and df
-    are scale-invariant so the cent grid cancels.
-    """
-    return welch_from_stats(
-        ab_welch_stats_of(load_table(spark, sf_dir, "events"))
-    )
-
-
-def ab_welch_stats_of(ev: DataFrame) -> DataFrame:
-    """The 1-row six-moment fold over any events relation — shared by
-    the batch query and the experiment-readout hub."""
-    grid = ev.filter(
-        F.col("event_type").isin(AB_GROUP_A, AB_GROUP_B)
-    ).select(
-        (F.col("event_type") == AB_GROUP_A).alias("is_a"),
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("vq"),
-    )
-    one_a = F.when(F.col("is_a"), 1).otherwise(0)
-    one_b = F.when(F.col("is_a"), 0).otherwise(1)
-    return grid.agg(
-        F.sum(one_a).cast("long").alias("n_a"),
-        F.sum(one_b).cast("long").alias("n_b"),
-        F.sum((one_a * F.col("vq")).cast("decimal(38,0)"))
-        .cast("double")
-        .alias("sv_a"),
-        F.sum((one_b * F.col("vq")).cast("decimal(38,0)"))
-        .cast("double")
-        .alias("sv_b"),
-        F.sum(
-            (one_a * F.col("vq") * F.col("vq")).cast("decimal(38,0)")
-        )
-        .cast("double")
-        .alias("svv_a"),
-        F.sum(
-            (one_b * F.col("vq") * F.col("vq")).cast("decimal(38,0)")
-        )
-        .cast("double")
-        .alias("svv_b"),
-    )
-
-
-def welch_from_stats(stats: DataFrame) -> DataFrame:
-    """The Welch computation over a 1-row moments table (n_a, n_b,
-    sv_a, sv_b, svv_a, svv_b) — shared by the batch query and the
-    streaming drain (`stream_ab_welch` accumulates the SAME six
-    mergeable moments at ingest: O(1) state, the textbook streaming
-    statistic)."""
-    m_a = F.col("sv_a") / F.col("n_a")
-    m_b = F.col("sv_b") / F.col("n_b")
-    var_a = (F.col("svv_a") - F.col("sv_a") * F.col("sv_a") / F.col("n_a")) / (
-        F.col("n_a") - 1
-    )
-    var_b = (F.col("svv_b") - F.col("sv_b") * F.col("sv_b") / F.col("n_b")) / (
-        F.col("n_b") - 1
-    )
-    se2_a = var_a / F.col("n_a")
-    se2_b = var_b / F.col("n_b")
-    t = (m_a - m_b) / F.sqrt(se2_a + se2_b)
-    df = ((se2_a + se2_b) * (se2_a + se2_b)) / (
-        se2_a * se2_a / (F.col("n_a") - 1)
-        + se2_b * se2_b / (F.col("n_b") - 1)
-    )
-    # flat-case guards, NESTED so no guarded branch ever evaluates a
-    # zero-divisor expression (ANSI mode errors even on double /0):
-    # outer CASE gates the group sizes, inner CASE gates the pooled
-    # variance — NULL in both engines, never Inf/NaN/ANSI error
-    sizes_ok = (F.col("n_a") > 1) & (F.col("n_b") > 1)
-
-    def guarded(col: Column) -> Column:
-        return F.when(
-            sizes_ok, F.when(se2_a + se2_b > 0, col)
-        )
-
-    return stats.select(
-        F.lit(AB_GROUP_A).alias("group_a"),
-        F.lit(AB_GROUP_B).alias("group_b"),
-        "n_a",
-        "n_b",
-        F.when(F.col("n_a") > 0, quantize(m_a / 100.0, 4)).alias(
-            "mean_a"
-        ),
-        F.when(F.col("n_b") > 0, quantize(m_b / 100.0, 4)).alias(
-            "mean_b"
-        ),
-        guarded(quantize(t, 4)).alias("t_stat"),
-        guarded(quantize(df, 2)).alias("df_welch"),
-        guarded(F.abs(quantize(t, 4)) > MK_CRIT_95).alias(
-            "significant_95"
-        ),
-    )
-
-
 def events_conversion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-proportion z-test on user-level FAST ACTIVATION between
     the two deterministic experiment arms (user_id parity split — the
     same hash-style assignment an A/B platform uses): did arm A's
     share of users who purchase within 24 h of their first event
-    differ from arm B's?  The proportions counterpart of
-    `events_ab_welch` (means) — conversion RATES are Bernoulli, where
-    the pooled-variance z-test, not the t-test, is the textbook
+    differ from arm B's?  Conversion RATES are Bernoulli, where the
+    pooled-variance z-test, not the t-test, is the textbook
     primitive. (Lifetime "ever purchased" saturates at 100% on this
     corpus — se² = 0, no test — hence the windowed activation metric.)
 
@@ -4523,7 +3040,7 @@ def conversion_ztest_from_users(per_user: DataFrame) -> DataFrame:
         * (1.0 / F.col("n_a") + 1.0 / F.col("n_b"))
     )
     z = (p_a - p_b) / F.sqrt(se2)
-    # nested guards (the welch_from_stats ANSI discipline): outer
+    # nested guards keep ANSI mode from dividing by zero: outer
     # gates the arm sizes, inner the pooled variance
     sizes_ok = (F.col("n_a") > 0) & (F.col("n_b") > 0)
 
@@ -4623,141 +3140,6 @@ def srm_from_users(users: DataFrame) -> DataFrame:
         "n_b",
         F.when(ok, quantize(chi2, 4)).alias("srm_chi2"),
         F.when(ok, quantize(chi2, 4) > 3.841).alias("srm_detected"),
-    )
-
-
-def events_value_levene(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brown-Forsythe (median-centered Levene) test of variance
-    equality of event value across ALL event types — the spread
-    counterpart of the tier's location tests (Welch/ANOVA ask "same
-    mean?", Kruskal "same distribution by rank?"; this asks "same
-    VARIANCE?", the homoscedasticity precondition classic ANOVA
-    assumes and the canary for one segment's values fanning out).
-    Median-centered per Brown-Forsythe, so heavy tails don't inflate
-    the statistic the way mean-centered Levene does.
-
-    Scale: values live on the cent grid, so per-type medians come
-    EXACTLY off the value-bounded cell histogram (2·median = v_lo +
-    v_hi, both integers — the `events_value_kruskal` cells reused
-    verbatim, grid-bounded windows, never an events² anything);
-    |2v−2m| deviations are exact integers accumulated in
-    decimal(38,0); F is one final double expression over k rows.
-    """
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_type",
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("vq"),
-    )
-    cell = ev.groupBy("vq", "event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("ng")
-    )
-    return levene_from_cells(cell)
-
-
-def levene_from_cells(cell: DataFrame) -> DataFrame:
-    """The Brown-Forsythe computation over a (vq, event_type, ng)
-    cell table — shared by the batch query and the streaming drain
-    (`stream_value_levene` accumulates the same value-grid-bounded
-    cells at ingest, the `kruskal_from_cells` state class)."""
-    # keys rename at every self-lineage join so a drained streaming
-    # relation (which cannot re-alias duplicate attribute ids)
-    # resolves cleanly — the chi2_from_obs discipline
-    tot = cell.select(
-        F.col("event_type").alias("et_t"), F.col("ng").alias("ng_t")
-    ).groupBy("et_t").agg(F.sum("ng_t").cast("long").alias("n_g"))
-    w = Window.partitionBy("event_type").orderBy("vq")
-    cum = (
-        cell.withColumn("cumi", F.sum("ng").over(w))
-        .withColumn("cb", F.col("cumi") - F.col("ng"))
-        .join(
-            F.broadcast(tot), F.col("event_type") == F.col("et_t")
-        )
-    )
-    # 2·median = value at floor((n−1)/2) + value at floor(n/2)
-    # (0-indexed) — the quantile_cont(0.5) linear interpolation,
-    # doubled so it stays an exact integer
-    lo = F.floor((F.col("n_g") - 1) / 2)
-    hi = F.floor(F.col("n_g") / 2)
-    v_lo = (
-        cum.filter((F.col("cb") <= lo) & (lo < F.col("cumi")))
-        .groupBy("event_type")
-        .agg(F.min("vq").alias("v_lo"))
-    )
-    v_hi = (
-        cum.filter((F.col("cb") <= hi) & (hi < F.col("cumi")))
-        .select(
-            F.col("event_type").alias("et_h"),
-            F.col("vq").alias("vq_h"),
-        )
-        .groupBy("et_h")
-        .agg(F.min("vq_h").alias("v_hi"))
-    )
-    med = v_lo.join(
-        v_hi, F.col("event_type") == F.col("et_h")
-    ).select(
-        F.col("event_type").alias("et2"),
-        (F.col("v_lo") + F.col("v_hi")).alias("med2"),
-    )
-    z2 = F.abs(2 * F.col("vq") - F.col("med2"))
-    g = (
-        cell.join(
-            F.broadcast(med), F.col("event_type") == F.col("et2")
-        )
-        .groupBy("event_type")
-        .agg(
-            F.sum("ng").cast("long").alias("n_g"),
-            F.sum((F.col("ng") * z2).cast("decimal(38,0)"))
-            .cast("double")
-            .alias("s1"),
-            F.sum((F.col("ng") * z2 * z2).cast("decimal(38,0)"))
-            .cast("double")
-            .alias("s2"),
-        )
-    )
-    roll = g.agg(
-        F.count(F.lit(1)).cast("long").alias("k_groups"),
-        F.sum("n_g").cast("long").alias("n_events"),
-        F.sum("s1").alias("s1_tot"),
-        F.sum(F.col("s1") * F.col("s1") / F.col("n_g")).alias(
-            "sq_over_n"
-        ),
-        F.sum(
-            F.col("s2") - F.col("s1") * F.col("s1") / F.col("n_g")
-        ).alias("within"),
-    )
-    between = F.col("sq_over_n") - F.col("s1_tot") * F.col(
-        "s1_tot"
-    ) / F.col("n_events")
-    f_stat = (
-        (F.col("n_events") - F.col("k_groups"))
-        / (F.col("k_groups") - 1.0)
-    ) * (between / F.col("within"))
-    # (k−1)·F ~ chi²(k−1) for large N — same 95% table as Kruskal
-    crit = (
-        F.when(F.col("k_groups") == 2, 3.8415)
-        .when(F.col("k_groups") == 3, 5.9915)
-        .when(F.col("k_groups") == 4, 7.8147)
-        .when(F.col("k_groups") == 5, 9.4877)
-        .when(F.col("k_groups") == 6, 11.0705)
-        .otherwise(F.lit(None))
-    )
-    # flat-case guards, NESTED so no guarded branch evaluates a zero
-    # divisor (ANSI): k<2 breaks the between normalizer, N<=k the
-    # scale factor, and an all-tied corpus drives within to 0
-    sizes_ok = (F.col("k_groups") > 1) & (
-        F.col("n_events") > F.col("k_groups")
-    )
-
-    def guarded(col: Column) -> Column:
-        return F.when(sizes_ok, F.when(F.col("within") > 0, col))
-
-    fq = guarded(quantize(f_stat, 4))
-    return roll.select(
-        "n_events",
-        "k_groups",
-        fq.alias("f_stat"),
-        ((F.col("k_groups") - 1.0) * fq > crit).alias(
-            "significant_95"
-        ),
     )
 
 
@@ -4871,77 +3253,6 @@ def cusum_from_hourly(hourly: DataFrame) -> DataFrame:
     )
 
 
-def events_peak_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Traffic-peak detection per event type: interior hours that are a
-    STRICT local maximum of the hourly series (greater than both
-    neighbours) AND at least 2 sample standard deviations above the
-    type's mean hourly volume — the "when do spikes actually land?"
-    report feeding capacity planning (`events_hourly_anomaly` flags
-    residual outliers against a seasonal profile; this finds the raw
-    prominent peaks themselves).
-
-    Scale: windows run over the (type, hour) partial agg —
-    calendar-bounded, never events-sized — lag/lead and the moment
-    aggregates share the event_type partitioning, so one shuffle.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    hourly = (
-        ev.withColumn("hour", F.date_trunc("hour", F.col("ts")))
-        .groupBy("event_type", "hour")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
-    )
-    return peaks_from_hourly(hourly)
-
-
-def peaks_from_hourly(hourly: DataFrame) -> DataFrame:
-    """The peak scan over a (event_type, hour, n_events) series —
-    shared by the batch query and the streaming drain
-    (`stream_peak_hours` accumulates the same tumbling hourly state
-    at ingest, the `cusum_from_hourly` discipline)."""
-    wo = Window.partitionBy("event_type").orderBy("hour")
-    ws = Window.partitionBy("event_type")
-    x = hourly.select(
-        "event_type",
-        "hour",
-        "n_events",
-        F.lag("n_events").over(wo).alias("prev_n"),
-        F.lead("n_events").over(wo).alias("next_n"),
-        F.count(F.lit(1)).over(ws).cast("long").alias("n_hours"),
-        F.sum("n_events").over(ws).cast("long").alias("sn"),
-        F.sum(F.col("n_events") * F.col("n_events"))
-        .over(ws)
-        .cast("long")
-        .alias("sq"),
-    )
-    nh = F.col("n_hours").cast("double")
-    var_num = nh * F.col("sq").cast("double") - F.col("sn").cast(
-        "double"
-    ) * F.col("sn").cast("double")
-    # z against the sample sd, in the exact-sums form both engines share
-    z = (nh * F.col("n_events").cast("double") - F.col("sn")) / F.sqrt(
-        var_num * nh / (nh - 1.0)
-    )
-    return (
-        x.where(
-            F.col("prev_n").isNotNull()
-            & F.col("next_n").isNotNull()
-            & (F.col("n_events") > F.col("prev_n"))
-            & (F.col("n_events") > F.col("next_n"))
-            & (F.col("n_hours") > 1)
-            & (var_num > 0)
-        )
-        .where(z >= 2.0)
-        .select(
-            "event_type",
-            "hour",
-            "n_events",
-            "prev_n",
-            "next_n",
-            quantize(z, 4).alias("zscore"),
-        )
-    )
-
-
 def events_hour_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hour-of-day concentration per event type: how lumpy is the
     diurnal profile?  Emits the active hour-of-day count, the peak
@@ -4990,101 +3301,7 @@ def hour_concentration_from_hist(hist: DataFrame) -> DataFrame:
     )
 
 
-CMH_CHI2_95 = 3.8415  # chi-square 0.95 quantile, 1 dof
-
-
-CMH_CONV_WINDOW_US = 24 * 3600 * 1_000_000  # fast activation, as in
 # events_conversion_ztest: "a purchase within 24 h of the first event"
-
-
-def cmh_users(ev: DataFrame) -> DataFrame:
-    """Per-user experiment facts for the stratified test — the
-    mergeable state the streaming twin accumulates at ingest (two
-    minima per user, the `stream_conversion_ztest` bound): arm =
-    even user_id, conversion = fast activation (earliest purchase
-    within 24 h of the first event), stratum assignment by the
-    FIRST event's six-hour diurnal bin."""
-    return ev.groupBy("user_id").agg(
-        F.min("ts").alias("first_ts"),
-        F.min(
-            F.when(F.col("event_type") == "purchase", F.col("ts"))
-        ).alias("first_purchase"),
-    )
-
-
-def cmh_from_users(users: DataFrame) -> DataFrame:
-    """The Cochran–Mantel–Haenszel fold over per-user facts: one 2×2
-    table (arm × conversion) per diurnal stratum, then the
-    classic Σ(a − E)² / ΣVar statistic and the Mantel–Haenszel
-    common odds ratio — the stratified-experiment primitive that
-    `events_conversion_ztest` (one pooled 2×2) confounds whenever
-    traffic mix shifts across strata (Simpson's paradox guard).
-
-    Scale: a ≤7-row stratum fold off the bounded per-user table;
-    every cell is an exact integer, the statistic is a handful of
-    double divisions over that 7-row table."""
-    conv = (
-        F.col("first_purchase").isNotNull()
-        & (
-            F.unix_micros("first_purchase") - F.unix_micros("first_ts")
-            <= CMH_CONV_WINDOW_US
-        )
-    ).cast("int")
-    strat = (
-        users.select(
-            F.floor(F.hour("first_ts") / 6).cast("long").alias("stratum"),
-            (F.col("user_id") % 2 == 0).alias("treat"),
-            conv.alias("conv"),
-        )
-        .groupBy("stratum")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("t_n"),
-            F.sum(F.when(F.col("treat"), 1).otherwise(0))
-            .cast("long")
-            .alias("n1"),
-            F.sum("conv").cast("long").alias("m1"),
-            F.sum(F.when(F.col("treat"), F.col("conv")).otherwise(0))
-            .cast("long")
-            .alias("a"),
-        )
-        .filter(F.col("t_n") > 1)
-    )
-    t = F.col("t_n").cast("double")
-    a = F.col("a").cast("double")
-    n1 = F.col("n1").cast("double")
-    m1 = F.col("m1").cast("double")
-    n0 = t - n1
-    m0 = t - m1
-    b = n1 - a  # treated, not converted
-    c = m1 - a  # control, converted
-    d = n0 - c  # control, not converted
-    fold = strat.agg(
-        F.count(F.lit(1)).cast("long").alias("n_strata"),
-        F.sum("t_n").cast("long").alias("n_users"),
-        F.sum(a - n1 * m1 / t).alias("dev"),
-        F.sum(n1 * n0 * m1 * m0 / (t * t * (t - 1.0))).alias("var"),
-        F.sum(a * d / t).alias("ad"),
-        F.sum(b * c / t).alias("bc"),
-    )
-    chi2 = quantize(
-        F.col("dev") * F.col("dev") / F.col("var"), 4
-    )
-    ok = F.col("var") > 0
-    return fold.select(
-        "n_strata",
-        "n_users",
-        F.when(ok, chi2).alias("chi2_cmh"),
-        F.when(
-            F.col("bc") > 0, quantize(F.col("ad") / F.col("bc"), 4)
-        ).alias("or_mh"),
-        F.when(ok, chi2 > CMH_CHI2_95).alias("significant_95"),
-    )
-
-
-def events_cmh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cochran–Mantel–Haenszel stratified conversion test (strata =
-    day-of-week of each user's first event). See `cmh_from_users`."""
-    return cmh_from_users(cmh_users(load_table(spark, sf_dir, "events")))
 
 
 HOLT_ALPHA = 0.5  # exact binary fractions: the recurrence is
@@ -5259,169 +3476,6 @@ def hw_from_cells(cells: DataFrame) -> DataFrame:
     )
 
 
-def events_forecast_model_compare(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Forecast MODEL SELECTION by held-out backtest: train
-    seasonal-naive, Holt linear, additive Holt–Winters, and the
-    Theta method on all but the last 24 hours of each type's series,
-    forecast the held-out day, and rank the four models by MAE —
-    the comparison that decides which forecaster the capacity plan
-    actually uses (`events_forecast_scorecard` grades one model;
-    this one picks).
-
-    Scale: per-type fits over calendar-bounded train series (one
-    Arrow group each); the scoring join and the 4-row ranking fold
-    are trivial. Same IEEE-exact recurrences as the individual
-    models, so the SQL twin (recursive CTEs over the train prefix)
-    replays every prediction bit-for-bit.
-    """
-    return model_compare_from_cells(
-        holt_cells(load_table(spark, sf_dir, "events"))
-    )
-
-
-def model_compare_from_cells(cells: DataFrame) -> DataFrame:
-    """The four-model backtest over (event_type, hour_us, cnt)
-    cells — shared by the batch query and the streaming drain."""
-    import numpy as np
-    import pandas as pd
-
-    bounds = cells.agg(
-        F.min("hour_us").alias("mn"), F.max("hour_us").alias("mx")
-    )
-    g = cells.crossJoin(F.broadcast(bounds))
-    m = HW_PERIOD
-
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        mn, mx = int(pdf["mn"].iloc[0]), int(pdf["mx"].iloc[0])
-        hours = np.arange(mn, mx + HOUR_US, HOUR_US, dtype=np.int64)
-        n = len(hours)
-        if n < 2 * m:
-            return pd.DataFrame(
-                columns=["event_type", "model", "h", "pred", "actual"]
-            )
-        y = np.zeros(n, dtype=np.float64)
-        idx = ((pdf["hour_us"].to_numpy() - mn) // HOUR_US).astype(int)
-        y[idx] = pdf["cnt"].to_numpy().astype(np.float64)
-        T = n - m
-        train = y[:T]
-        # seasonal-naive: slot means over the train prefix
-        slot_sum = np.zeros(m)
-        slot_cnt = np.zeros(m)
-        for t in range(T):
-            slot_sum[t % m] += train[t]
-            slot_cnt[t % m] += 1.0
-        # holt linear
-        lev, tr = float(train[0]), 0.0
-        for t in range(1, T):
-            new = HOLT_ALPHA * float(train[t]) + (1.0 - HOLT_ALPHA) * (
-                lev + tr
-            )
-            tr = HOLT_BETA * (new - lev) + (1.0 - HOLT_BETA) * tr
-            lev = new
-        # holt-winters
-        tot = 0.0
-        for v in train[:m]:
-            tot += float(v)
-        wl = tot / float(m)
-        wt = 0.0
-        s = np.zeros(T, dtype=np.float64)
-        for i in range(m):
-            s[i] = float(train[i]) - wl
-        for t in range(m, T):
-            new = HOLT_ALPHA * (float(train[t]) - s[t - m]) + (
-                1.0 - HOLT_ALPHA
-            ) * (wl + wt)
-            wt = HOLT_BETA * (new - wl) + (1.0 - HOLT_BETA) * wt
-            s[t] = HW_GAMMA * (float(train[t]) - new) + (
-                1.0 - HW_GAMMA
-            ) * s[t - m]
-            wl = new
-        # theta: OLS decompose on exact integer moments + SES(1/2)
-        # on the theta=2 line, over the train prefix
-        ti = train.astype(np.int64)
-        sx = T * (T + 1) // 2
-        sxx = T * (T + 1) * (2 * T + 1) // 6
-        syv = int(ti.sum())
-        sxy = int(
-            (np.arange(1, T + 1, dtype=np.int64) * ti).sum()
-        )
-        den = T * sxx - sx * sx
-        tb = float(T * sxy - sx * syv) / float(den) if den else 0.0
-        ta = (float(syv) - tb * float(sx)) / float(T)
-        sth = 2.0 * float(ti[0]) - (ta + tb * 1.0)
-        for t in range(2, T + 1):
-            x = 2.0 * float(ti[t - 1]) - (ta + tb * float(t))
-            sth = THETA_ALPHA * x + (1.0 - THETA_ALPHA) * sth
-        rows = []
-        etype = pdf["event_type"].iloc[0]
-        for h in range(m):
-            actual = float(y[T + h])
-            slot = (T + h) % m
-            naive = (
-                slot_sum[slot] / slot_cnt[slot]
-                if slot_cnt[slot] > 0
-                else 0.0
-            )
-            rows.append((etype, "seasonal_naive", h, naive, actual))
-            rows.append(
-                (etype, "holt_linear", h, lev + (h + 1) * tr, actual)
-            )
-            rows.append(
-                (
-                    etype,
-                    "holt_winters",
-                    h,
-                    wl + (h + 1) * wt + s[T - m + h],
-                    actual,
-                )
-            )
-            rows.append(
-                (
-                    etype,
-                    "theta",
-                    h,
-                    0.5 * sth + 0.5 * (ta + tb * float(T + h + 1)),
-                    actual,
-                )
-            )
-        return pd.DataFrame(
-            rows, columns=["event_type", "model", "h", "pred", "actual"]
-        )
-
-    preds = g.groupBy("event_type").applyInPandas(
-        fit,
-        schema=(
-            "event_type string, model string, h long,"
-            " pred double, actual double"
-        ),
-    )
-    err = preds.select(
-        "model", quantize(F.abs(F.col("pred") - F.col("actual")), 6).alias("e")
-    )
-    mae = err.groupBy("model").agg(
-        F.count(F.lit(1)).cast("long").alias("n_forecasts"),
-        quantize(F.avg("e"), 4).alias("mae"),
-    )
-    other = mae.select(
-        F.col("model").alias("m2"), F.col("mae").alias("mae2")
-    )
-    return (
-        mae.join(
-            F.broadcast(other),
-            (F.col("mae2") < F.col("mae"))
-            | (
-                (F.col("mae2") == F.col("mae"))
-                & (F.col("m2") < F.col("model"))
-            ),
-            "left",
-        )
-        .groupBy("model", "n_forecasts", "mae")
-        .agg((F.count("m2") + 1).cast("long").alias("rank"))
-    )
-
-
 def events_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Additive Holt–Winters with daily seasonality per event type.
     See `hw_from_cells`."""
@@ -5517,9 +3571,6 @@ def mttr_from_hourly(hourly: DataFrame) -> DataFrame:
     )
 
 
-THETA_ALPHA = 0.5  # SES smoothing on the theta=2 line (binary-exact)
-
-
 DP_EPSILON = 1.0
 # inverse-CDF Laplace from a 32-bit md5-derived uniform: |noise| <=
 # (1/eps) * ln(2^32) ~ 22 at eps=1 — the release's worst-case shift
@@ -5589,347 +3640,6 @@ def events_dp_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
     return dp_release_from_cells(cells)
-
-
-def did_cells(ev: DataFrame) -> DataFrame:
-    """(treat, hour_us) moment cells for the diff-in-diffs estimator —
-    the mergeable state both the batch op and the streaming twin
-    accumulate: exact integer n / Σv / Σv² per cell on the cent grid
-    (decimal(38,0) — no overflow at 100 TB), cells bounded by
-    calendar-hours × 2 arms, never by stream length."""
-    grid = ev.select(
-        (F.col("user_id") % 2 == 0).alias("treat"),
-        F.unix_micros(F.date_trunc("hour", F.col("ts"))).alias("hour_us"),
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("vq"),
-    )
-    return grid.groupBy("treat", "hour_us").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(F.col("vq").cast("decimal(38,0)")).alias("sv"),
-        F.sum((F.col("vq") * F.col("vq")).cast("decimal(38,0)")).alias(
-            "svv"
-        ),
-    )
-
-
-def did_from_cells(cells: DataFrame) -> DataFrame:
-    """The 2×2 difference-in-differences computation over drained
-    (treat, hour_us, n, sv, svv) cells: period split at the midpoint
-    of the observed hour range (a 1-row broadcast, the plan-decision
-    idiom), then one conditional fold into the four-arm moment row,
-    DiD estimate = (post_T - pre_T) - (post_C - pre_C) with the
-    four-variance standard error. Integer micros stay < 2^53 so the
-    midpoint double is exact; everything after is the ab_welch
-    moment algebra."""
-    spark_funcs = F  # alias for clarity in the fold below
-    bounds = cells.agg(
-        (
-            (
-                F.min("hour_us").cast("double")
-                + F.max("hour_us").cast("double")
-            )
-            / 2.0
-        ).alias("mid")
-    )
-    g = (
-        cells.crossJoin(F.broadcast(bounds))
-        .withColumn("post", F.col("hour_us").cast("double") >= F.col("mid"))
-    )
-
-    def arm(t: bool, p: bool, col: str) -> Column:
-        cond = (F.col("treat") == t) & (F.col("post") == p)
-        return spark_funcs.sum(
-            F.when(cond, F.col(col)).otherwise(F.lit(0))
-        )
-
-    row = g.agg(
-        *[
-            arm(t, p, "n").cast("long").alias(f"n_{a}")
-            for t, p, a in _DID_ARMS
-        ],
-        *[
-            arm(t, p, "sv").cast("double").alias(f"sv_{a}")
-            for t, p, a in _DID_ARMS
-        ],
-        *[
-            arm(t, p, "svv").cast("double").alias(f"svv_{a}")
-            for t, p, a in _DID_ARMS
-        ],
-    )
-
-    # try_divide: a degenerate period split (an empty arm) must yield
-    # NULL readouts, not an ANSI divide-by-zero crash
-    def mean(a: str) -> Column:
-        return F.try_divide(F.col(f"sv_{a}"), F.col(f"n_{a}"))
-
-    def var_over_n(a: str) -> Column:
-        v = F.try_divide(
-            F.col(f"svv_{a}")
-            - F.try_divide(
-                F.col(f"sv_{a}") * F.col(f"sv_{a}"), F.col(f"n_{a}")
-            ),
-            F.col(f"n_{a}") - 1,
-        )
-        return F.try_divide(v, F.col(f"n_{a}"))
-
-    did_cents = (mean("tp") - mean("tc")) - (mean("cp") - mean("cc"))
-    se2 = sum(var_over_n(a) for _, _, a in _DID_ARMS)
-    ok = (
-        (F.col("n_tp") > 1)
-        & (F.col("n_tc") > 1)
-        & (F.col("n_cp") > 1)
-        & (F.col("n_cc") > 1)
-    )
-    t_stat = quantize(did_cents / F.sqrt(se2), 4)
-    return row.select(
-        F.col("n_tc").alias("n_treat_pre"),
-        F.col("n_tp").alias("n_treat_post"),
-        F.col("n_cc").alias("n_ctrl_pre"),
-        F.col("n_cp").alias("n_ctrl_post"),
-        quantize(mean("tc") / 100.0, 4).alias("mean_treat_pre"),
-        quantize(mean("tp") / 100.0, 4).alias("mean_treat_post"),
-        quantize(mean("cc") / 100.0, 4).alias("mean_ctrl_pre"),
-        quantize(mean("cp") / 100.0, 4).alias("mean_ctrl_post"),
-        quantize(did_cents / 100.0, 4).alias("did_estimate"),
-        F.when(ok, t_stat).alias("t_stat"),
-        F.when(ok, F.abs(t_stat) > 1.96).alias("significant_95"),
-    )
-
-
-# (treat, post, arm-suffix): tp = treated-post, tc = treated-pre, ...
-_DID_ARMS = (
-    (True, True, "tp"),
-    (True, False, "tc"),
-    (False, True, "cp"),
-    (False, False, "cc"),
-)
-
-
-def events_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Difference-in-differences causal estimator over event values:
-    treatment arm = even user_id (the experiment convention shared
-    with `events_conversion_ztest`), periods split at the midpoint of
-    the observed hour range — DiD = (post - pre)|treat minus
-    (post - pre)|control, with the four-group Welch-style standard
-    error. Completes the experimentation tier: ab_welch compares
-    means, conversion_ztest compares rates, this one removes the
-    common time trend both of those confound.
-
-    Scale: ONE map-side-combined (treat, hour) moment agg (cells
-    bounded by calendar, exact decimal sums), a 1-row broadcast for
-    the period split, then a conditional fold to a single row.
-    """
-    return did_from_cells(did_cells(load_table(spark, sf_dir, "events")))
-
-
-IV_TREAT_MIN = 14  # signups defining the endogenous treatment (median-ish)
-IV_FS_MIN = 0.01  # weak-instrument fence on the first stage
-
-
-def iv_user_cells(ev: DataFrame) -> DataFrame:
-    """(user_id, z, signups, y) per-user fold — the user-bounded
-    mergeable state shared by the batch Wald estimator and its
-    streaming twin (counts and cent-grid sums only)."""
-    return ev.groupBy("user_id").agg(
-        F.sum(
-            F.when(F.col("event_type") == "signup", 1).otherwise(0)
-        )
-        .cast("long")
-        .alias("signups"),
-        F.sum(
-            F.when(
-                F.col("event_type") == "purchase",
-                F.floor(F.col("value") * 100 + 0.5).cast("long"),
-            )
-            .otherwise(0)
-            .cast("decimal(38,0)")
-        ).alias("y"),
-    )
-
-
-def iv_wald_from_users(users: DataFrame) -> DataFrame:
-    """The Wald IV estimator over drained per-user cells: instrument
-    z = even user_id (the experiment convention — an encouragement
-    arm), endogenous treatment d = heavy signup activity
-    (≥ ``IV_TREAT_MIN``), outcome y = purchase value. Wald =
-    ITT / first-stage — the ratio that recovers the treatment effect
-    when d itself is self-selected — published ONLY when the first
-    stage clears the ``IV_FS_MIN`` weak-instrument fence (the honest
-    failure mode of IV, reported as a boolean instead of a wild
-    ratio). The fence compares the QUANTIZED first stage so both
-    engines decide identically.
-
-    Scale: one user-keyed partial agg upstream, then a single
-    conditional fold to one row — exact integers until the final
-    divisions."""
-    g = users.select(
-        (F.col("user_id") % 2 == 0).alias("z"),
-        (F.col("signups") >= IV_TREAT_MIN).alias("d"),
-        "y",
-    )
-    row = g.agg(
-        F.sum(F.when(F.col("z"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_z1"),
-        F.sum(F.when(~F.col("z"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_z0"),
-        F.sum(F.when(F.col("z") & F.col("d"), 1).otherwise(0))
-        .cast("long")
-        .alias("d_z1"),
-        F.sum(F.when((~F.col("z")) & F.col("d"), 1).otherwise(0))
-        .cast("long")
-        .alias("d_z0"),
-        F.sum(
-            F.when(F.col("z"), F.col("y")).otherwise(
-                F.lit(0).cast("decimal(38,0)")
-            )
-        ).alias("sy_z1"),
-        F.sum(
-            F.when(~F.col("z"), F.col("y")).otherwise(
-                F.lit(0).cast("decimal(38,0)")
-            )
-        ).alias("sy_z0"),
-    )
-    itt = (
-        F.col("sy_z1").cast("double") / F.col("n_z1")
-        - F.col("sy_z0").cast("double") / F.col("n_z0")
-    ) / 100.0
-    fs = (
-        F.col("d_z1").cast("double") / F.col("n_z1")
-        - F.col("d_z0").cast("double") / F.col("n_z0")
-    )
-    fsq = quantize(fs, 6)
-    weak = F.abs(fsq) < IV_FS_MIN
-    return row.select(
-        "n_z1",
-        "n_z0",
-        quantize(F.col("d_z1").cast("double") / F.col("n_z1"), 6).alias(
-            "d_rate_z1"
-        ),
-        quantize(F.col("d_z0").cast("double") / F.col("n_z0"), 6).alias(
-            "d_rate_z0"
-        ),
-        quantize(itt, 4).alias("itt"),
-        fsq.alias("first_stage"),
-        weak.alias("weak_instrument"),
-        F.when(~weak, quantize(itt / fs, 4)).alias("wald_late"),
-    )
-
-
-def events_iv_wald(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Instrumental-variable (Wald) estimator — see
-    :func:`iv_wald_from_users` for semantics, exactness, and the
-    weak-instrument guard."""
-    return iv_wald_from_users(
-        iv_user_cells(load_table(spark, sf_dir, "events"))
-    )
-
-
-def its_cells(ev: DataFrame) -> DataFrame:
-    """(hour_us, y) hourly event counts — the calendar-bounded state
-    the segmented regression reads (shared with a streaming drain)."""
-    return ev.groupBy(
-        F.unix_micros(F.date_trunc("hour", F.col("ts"))).alias(
-            "hour_us"
-        )
-    ).agg(F.count(F.lit(1)).cast("long").alias("y"))
-
-
-def its_from_cells(cells: DataFrame) -> DataFrame:
-    """Interrupted-time-series (segmented regression) over drained
-    hourly counts: the observed hour range splits at its midpoint
-    index, a separate OLS line fits each side in closed form from
-    exact integer moment sums (x = hours since the cut), and the
-    report is the level jump and slope change AT the cut — the
-    regression-discontinuity-in-time complement to DiD (which needs
-    a control arm; this needs only the series).
-
-    Exactness: x and y are exact integers (hour index, counts);
-    every OLS term is a rational of exact decimal(38,0) sums, so
-    both engines derive identical doubles. Scale: cells are
-    calendar-bounded; the fold is one conditional agg + a 1-row
-    broadcast for the cut."""
-    bounds = cells.agg(
-        F.min("hour_us").alias("mn"), F.max("hour_us").alias("mx")
-    )
-    g = cells.crossJoin(F.broadcast(bounds)).select(
-        "y",
-        (
-            (F.col("hour_us") - F.col("mn")) / F.lit(3600000000)
-        )
-        .cast("long")
-        .alias("k"),
-        (
-            F.floor(
-                ((F.col("mx") - F.col("mn")) / F.lit(3600000000))
-                .cast("long")
-                / 2
-            )
-        )
-        .cast("long")
-        .alias("kc"),
-    )
-    x = (F.col("k") - F.col("kc")).cast("long")
-    post = F.col("k") >= F.col("kc")
-    d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-
-    def side(p, expr, name):
-        cond = F.col("post") if p else ~F.col("post")
-        return F.sum(
-            F.when(cond, d(expr)).otherwise(F.lit(0).cast("decimal(38,0)"))
-        ).alias(name)
-
-    row = g.select(
-        x.alias("x"), "y", post.alias("post")
-    ).agg(
-        *[
-            side(p, e, f"{n}_{s}")
-            for p, s in ((False, "pre"), (True, "post"))
-            for n, e in (
-                ("n", F.lit(1)),
-                ("sx", F.col("x")),
-                ("sy", F.col("y")),
-                ("sxx", F.col("x") * F.col("x")),
-                ("sxy", F.col("x") * F.col("y")),
-            )
-        ]
-    )
-
-    def fit(s):
-        n = F.col(f"n_{s}").cast("double")
-        sx = F.col(f"sx_{s}").cast("double")
-        sy = F.col(f"sy_{s}").cast("double")
-        sxx = F.col(f"sxx_{s}").cast("double")
-        sxy = F.col(f"sxy_{s}").cast("double")
-        den = n * sxx - sx * sx
-        slope = F.when(den > 0, (n * sxy - sx * sy) / den)
-        level = F.when(
-            den > 0, (sy - ((n * sxy - sx * sy) / den) * sx) / n
-        )
-        return slope, level
-
-    slope_pre, level_pre = fit("pre")
-    slope_post, level_post = fit("post")
-    return row.select(
-        F.col("n_pre").cast("long").alias("n_pre_hours"),
-        F.col("n_post").cast("long").alias("n_post_hours"),
-        quantize(slope_pre, 4).alias("slope_pre"),
-        quantize(slope_post, 4).alias("slope_post"),
-        quantize(slope_post - slope_pre, 4).alias("slope_change"),
-        quantize(level_pre, 4).alias("level_pre_at_cut"),
-        quantize(level_post, 4).alias("level_post_at_cut"),
-        quantize(level_post - level_pre, 4).alias("level_jump"),
-    )
-
-
-def events_interrupted_ts(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Interrupted-time-series segmented regression — see
-    :func:`its_from_cells`."""
-    return its_from_cells(
-        its_cells(load_table(spark, sf_dir, "events"))
-    )
 
 
 T_CLOSENESS = 0.2  # EMD fence for the t-closeness audit
@@ -6065,223 +3775,29 @@ def events_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CEM_ACT_BIN = 8  # pre-period activity bin width (events per bin)
-CEM_ERR_BIN = 4  # pre-period error-count bin width
-CEM_ACT_CAP = 7  # top bin (open-ended) for both covariates
-CEM_TREAT_MIN = 7  # pre-period signups defining the treated arm
-
-
-def events_cem_att(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Coarsened Exact Matching ATT (Iacus–King–Porro): treatment =
-    heavy signup activity in the PRE period (≥ ``CEM_TREAT_MIN``
-    signups — self-selected, so naive comparison confounds with
-    overall activity), outcome = post-period purchase value. Users
-    match on coarsened pre-period covariates — total-activity bin
-    (width ``CEM_ACT_BIN``) × error-count bin (width
-    ``CEM_ERR_BIN``), both capped at ``CEM_ACT_CAP`` — and the ATT
-    reweights matched control strata to the treated strata mix, so
-    the common-support pruning is explicit in the output. Completes
-    the causal tier: DiD removes the time trend, CUPED the variance,
-    this one the selection-on-observables bias.
-
-    Scale: one (user)-keyed partial agg over a single scan (the
-    per-user state class), a ≤ (CAP+1)×|types| strata fold, and two
-    scalar rollups. The midpoint split is the 1-row-broadcast plan
-    decision shared with `events_diff_in_diff`.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    grid = ev.select(
-        "user_id",
-        F.unix_micros(F.date_trunc("hour", F.col("ts"))).alias(
-            "hour_us"
-        ),
-        "event_type",
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("vq"),
-    )
-    bounds = grid.agg(
-        (
-            (
-                F.min("hour_us").cast("double")
-                + F.max("hour_us").cast("double")
-            )
-            / 2.0
-        ).alias("mid")
-    )
-    g = grid.crossJoin(F.broadcast(bounds))
-    pre = F.col("hour_us").cast("double") < F.col("mid")
-    per_user = (
-        g.groupBy("user_id")
-        .agg(
-            F.sum(F.when(pre, 1).otherwise(0))
-            .cast("long")
-            .alias("n_pre"),
-            F.sum(
-                F.when(
-                    pre & (F.col("event_type") == "error"), 1
-                ).otherwise(0)
-            )
-            .cast("long")
-            .alias("errors_pre"),
-            F.sum(
-                F.when(
-                    pre & (F.col("event_type") == "signup"), 1
-                ).otherwise(0)
-            )
-            .cast("long")
-            .alias("signups_pre"),
-            F.sum(
-                F.when(
-                    (~pre) & (F.col("event_type") == "purchase"),
-                    F.col("vq"),
-                )
-                .otherwise(0)
-                .cast("decimal(38,0)")
-            ).alias("y"),
-        )
-        .filter(F.col("n_pre") > 0)
-    )
-    coarse = per_user.select(
-        (F.col("signups_pre") >= CEM_TREAT_MIN).alias("treat"),
-        F.least(
-            F.floor(F.col("n_pre") / CEM_ACT_BIN), F.lit(CEM_ACT_CAP)
-        )
-        .cast("long")
-        .alias("a_bin"),
-        F.least(
-            F.floor(F.col("errors_pre") / CEM_ERR_BIN),
-            F.lit(CEM_ACT_CAP),
-        )
-        .cast("long")
-        .alias("t_bin"),
-        "y",
-    )
-    strata = coarse.groupBy("a_bin", "t_bin").agg(
-        F.sum(F.when(F.col("treat"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_treat"),
-        F.sum(F.when(~F.col("treat"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_ctrl"),
-        F.sum(
-            F.when(F.col("treat"), F.col("y")).otherwise(
-                F.lit(0).cast("decimal(38,0)")
-            )
-        ).alias("sy_t"),
-        F.sum(
-            F.when(~F.col("treat"), F.col("y")).otherwise(
-                F.lit(0).cast("decimal(38,0)")
-            )
-        ).alias("sy_c"),
-    )
-    matched = strata.filter(
-        (F.col("n_treat") > 0) & (F.col("n_ctrl") > 0)
-    )
-    m_t = (
-        F.col("sy_t").cast("double") / F.col("n_treat") / 100.0
-    )
-    m_c = F.col("sy_c").cast("double") / F.col("n_ctrl") / 100.0
-    stratum_rows = matched.select(
-        F.lit("stratum").alias("scope"),
-        "a_bin",
-        "t_bin",
-        "n_treat",
-        "n_ctrl",
-        quantize(m_t, 4).alias("mean_treat"),
-        quantize(m_c, 4).alias("mean_ctrl"),
-        quantize(m_t - m_c, 4).alias("diff"),
-        F.lit(None).cast("long").alias("n_strata"),
-        F.lit(None).cast("long").alias("pruned_treat"),
-        F.lit(None).cast("long").alias("pruned_ctrl"),
-    )
-    totals = strata.agg(
-        F.sum("n_treat").cast("long").alias("tot_treat"),
-        F.sum("n_ctrl").cast("long").alias("tot_ctrl"),
-    )
-    # each stratum's control mean quantizes to exact integer
-    # micro-cents BEFORE the fold, so the counterfactual sum is
-    # order-insensitive on any engine (the exact-integer-fold
-    # discipline of the sibling estimators)
-    mc_micro = F.floor(
-        (F.col("sy_c").cast("double") / F.col("n_ctrl")) * 1e6 + 0.5
-    ).cast("long")
-    att = (
-        matched.agg(
-            F.count(F.lit(1)).cast("long").alias("n_strata"),
-            F.sum("n_treat").cast("long").alias("t_m"),
-            F.sum("n_ctrl").cast("long").alias("c_m"),
-            F.sum("sy_t").alias("syt"),
-            F.sum(
-                F.col("n_treat").cast("decimal(38,0)")
-                * mc_micro.cast("decimal(38,0)")
-            ).alias("cf_micro"),
-        )
-        .crossJoin(F.broadcast(totals))
-    )
-    mt_all = F.col("syt").cast("double") / F.col("t_m") / 100.0
-    cf = (
-        F.col("cf_micro").cast("double") / 1e6
-    ) / F.col("t_m") / 100.0
-    att_row = att.select(
-        F.lit("att").alias("scope"),
-        F.lit(None).cast("long").alias("a_bin"),
-        F.lit(None).cast("long").alias("t_bin"),
-        F.col("t_m").alias("n_treat"),
-        F.col("c_m").alias("n_ctrl"),
-        quantize(mt_all, 4).alias("mean_treat"),
-        quantize(cf, 4).alias("mean_ctrl"),
-        quantize(mt_all - cf, 4).alias("diff"),
-        "n_strata",
-        (F.col("tot_treat") - F.col("t_m"))
-        .cast("long")
-        .alias("pruned_treat"),
-        (F.col("tot_ctrl") - F.col("c_m"))
-        .cast("long")
-        .alias("pruned_ctrl"),
-    )
-    return stratum_rows.unionByName(att_row)
-
-
 QUERIES = {
-    "events_cem_att": events_cem_att,
     "events_t_closeness": events_t_closeness,
-    "events_iv_wald": events_iv_wald,
-    "events_interrupted_ts": events_interrupted_ts,
     "events_mttr": events_mttr,
     "events_attribution_markov": events_attribution_markov,
-    "events_cuped": events_cuped,
     "events_dp_median": events_dp_median,
-    "events_sequential_msprt": events_sequential_msprt,
-    "events_parallel_trends": events_parallel_trends,
     "events_watermark_audit": events_watermark_audit,
-    "events_anomaly_injection_eval": events_anomaly_injection_eval,
     "events_psi_injection_eval": events_psi_injection_eval,
     "events_quantile_treatment_effect": events_quantile_treatment_effect,
-    "events_bootstrap_diff_ci": events_bootstrap_diff_ci,
     "events_absorption": events_absorption,
     "events_dp_user_total": events_dp_user_total,
-    "events_cmh": events_cmh,
     "events_holt_linear": events_holt_linear,
     "events_holt_winters": events_holt_winters,
-    "events_forecast_model_compare": events_forecast_model_compare,
     "events_dp_hourly": events_dp_hourly,
-    "events_diff_in_diff": events_diff_in_diff,
-    "events_peak_hours": events_peak_hours,
     "events_hour_concentration": events_hour_concentration,
-    "events_growth_accounting": events_growth_accounting,
     "events_incident_table": events_incident_table,
     "events_adoption_curve": events_adoption_curve,
     "events_concurrency_curve": events_concurrency_curve,
-    "events_type_correlation": events_type_correlation,
-    "events_window_funnel": events_window_funnel,
     "events_l_diversity": events_l_diversity,
     "events_cusum": events_cusum,
     "events_sen_slope": events_sen_slope,
     "events_value_psi": events_value_psi,
-    "events_time_weighted_value": events_time_weighted_value,
     "events_uptime": events_uptime,
     "events_coverage": events_coverage,
-    "events_value_levene": events_value_levene,
-    "events_funnel_latency": events_funnel_latency,
     "events_ewma_control": events_ewma_control,
     "events_anomaly_ensemble": events_anomaly_ensemble,
     "events_stickiness": events_stickiness,
@@ -6289,13 +3805,10 @@ QUERIES = {
     "events_session_stats": events_session_stats,
     "events_forecast_scorecard": events_forecast_scorecard,
     "events_mann_kendall": events_mann_kendall,
-    "events_ab_welch": events_ab_welch,
     "events_conversion_ztest": events_conversion_ztest,
     "events_funnel_ci": events_funnel_ci,
     "events_ab_design": events_ab_design,
     "events_ab_srm": events_ab_srm,
-    "events_value_kruskal": events_value_kruskal,
-    "events_periodogram": events_periodogram,
     "events_churn_half_life": events_churn_half_life,
     "events_retention_hourly": events_retention_hourly,
     "events_dau": events_dau,
@@ -6312,9 +3825,6 @@ QUERIES = {
     "events_funnel": events_funnel,
     "events_value_histogram": events_value_histogram,
     "events_hourly_anomaly": events_hourly_anomaly,
-    "events_wau_merge": events_wau_merge,
-    "events_rolling_actives": events_rolling_actives,
-    "events_attribution": events_attribution,
     "events_bot_detection": events_bot_detection,
     "events_new_vs_returning": events_new_vs_returning,
     "events_user_activity_quantiles": events_user_activity_quantiles,
@@ -6325,13 +3835,11 @@ QUERIES = {
     "events_forecast_hourly": events_forecast_hourly,
     "events_changepoint": events_changepoint,
     "events_cohort_retention": events_cohort_retention,
-    "events_power_law_fit": events_power_law_fit,
     "events_seasonal_decompose": events_seasonal_decompose,
     "events_autocorr": events_autocorr,
     "events_anomaly_residual": events_anomaly_residual,
     "events_survival": events_survival,
     "events_gini": events_gini,
-    "events_session_funnel": events_session_funnel,
 }
 
 ORACLE = {
@@ -6563,59 +4071,6 @@ ORACLE = {
     """,
 }
 
-# merged-sketch bound is an invariant like the DAU tier: the oracle
-# asserts literal TRUE per week (the estimate itself has no SQL twin)
-ORACLE["events_wau_merge"] = """
-    SELECT date_trunc('week', ts) AS week,
-           count(DISTINCT user_id) AS wau,
-           count(*) AS n_events,
-           TRUE AS sketch_within_3rsd
-    FROM events
-    GROUP BY 1
-"""
-
-ORACLE["events_rolling_actives"] = """
-    WITH days AS (
-      SELECT DISTINCT CAST(date_trunc('day', ts) AS DATE) AS wend
-      FROM events
-    )
-    SELECT CAST(d.wend AS TIMESTAMP) AS window_end,
-           count(DISTINCT e.user_id) AS actives_7d,
-           TRUE AS sketch_within_3rsd
-    FROM days d
-    JOIN events e
-      ON CAST(date_trunc('day', e.ts) AS DATE)
-         BETWEEN d.wend - INTERVAL 6 DAY AND d.wend
-    GROUP BY 1
-"""
-
-
-ORACLE["events_attribution"] = f"""
-    WITH buys AS (
-      SELECT event_id, user_id, epoch_us(ts) AS ts_us, value
-      FROM events WHERE event_type = 'purchase'
-    ),
-    views AS (
-      SELECT user_id AS v_user, epoch_us(ts) AS v_ts
-      FROM events WHERE event_type = 'view'
-    ),
-    touched AS (
-      SELECT b.event_id,
-             min(v.v_ts) AS first_view_ts_us,
-             max(v.v_ts) AS last_view_ts_us,
-             CAST(count(*) AS BIGINT) AS n_touches
-      FROM buys b
-      JOIN views v
-        ON b.user_id = v.v_user
-       AND v.v_ts <= b.ts_us
-       AND v.v_ts >= b.ts_us - {ATTR_WINDOW_US}
-      GROUP BY 1
-    )
-    SELECT b.event_id, b.user_id, b.ts_us, b.value,
-           t.first_view_ts_us, t.last_view_ts_us,
-           CAST(coalesce(t.n_touches, 0) AS BIGINT) AS n_touches
-    FROM buys b LEFT JOIN touched t ON b.event_id = t.event_id
-"""
 
 ORACLE["events_bot_detection"] = f"""
     WITH g AS (
@@ -6860,26 +4315,6 @@ ORACLE["events_cohort_retention"] = f"""
 """
 
 
-ORACLE["events_power_law_fit"] = f"""
-    WITH per AS (
-      SELECT user_id, count(*) AS n FROM events GROUP BY 1
-    ),
-    top AS (
-      SELECT CAST(n AS DOUBLE) AS n,
-             CAST(row_number()
-                  OVER (ORDER BY n DESC, user_id) AS DOUBLE) AS rk
-      FROM per ORDER BY n DESC, user_id LIMIT 256
-    )
-    SELECT CAST(count(*) AS BIGINT) AS n_users,
-           CASE WHEN min(n) = max(n) THEN 0.0
-                ELSE {sql_quantize('regr_slope(ln(n), ln(rk))', 4)}
-           END AS tail_slope,
-           CASE WHEN min(n) = max(n) THEN 1.0
-                ELSE {sql_quantize('regr_r2(ln(n), ln(rk))', 4)}
-           END AS r2
-    FROM top
-"""
-
 ORACLE["events_seasonal_decompose"] = f"""
     WITH hourly AS (
       SELECT date_trunc('hour', ts) AS hour,
@@ -7078,59 +4513,6 @@ ORACLE["events_gini"] = f"""
     FROM s, tot
 """
 
-ORACLE["events_session_funnel"] = f"""
-    WITH base AS (
-      SELECT user_id, event_type, epoch_us(ts) AS ts_us,
-             sum(CASE WHEN prev_us IS NULL
-                       OR ts_us0 - prev_us > 1800000000
-                      THEN 1 ELSE 0 END)
-               OVER (PARTITION BY user_id
-                     ORDER BY ts_us0, event_id) AS session_id
-      FROM (
-        SELECT user_id, event_type, event_id, ts,
-               epoch_us(ts) AS ts_us0,
-               lag(epoch_us(ts)) OVER (
-                 PARTITION BY user_id ORDER BY epoch_us(ts), event_id
-               ) AS prev_us
-        FROM events
-      )
-    ),
-    v AS (
-      SELECT user_id, session_id, min(ts_us) AS t_view
-      FROM base WHERE event_type = 'view' GROUP BY 1, 2
-    ),
-    c AS (
-      SELECT b.user_id, b.session_id, min(b.ts_us) AS t_click
-      FROM base b JOIN v USING (user_id, session_id)
-      WHERE b.event_type = 'click' AND b.ts_us > v.t_view
-      GROUP BY 1, 2
-    ),
-    p AS (
-      SELECT b.user_id, b.session_id, min(b.ts_us) AS t_purchase
-      FROM base b JOIN c USING (user_id, session_id)
-      WHERE b.event_type = 'purchase' AND b.ts_us > c.t_click
-      GROUP BY 1, 2
-    ),
-    tot AS (
-      SELECT count(*) AS n_sessions
-      FROM (SELECT DISTINCT user_id, session_id FROM base)
-    ),
-    nv AS (SELECT count(*) AS n_view_sessions FROM v),
-    nc AS (SELECT count(*) AS n_click_sessions FROM c),
-    np AS (SELECT count(*) AS n_purchase_sessions FROM p)
-    SELECT CAST(tot.n_sessions AS BIGINT) AS n_sessions,
-           CAST(nv.n_view_sessions AS BIGINT) AS n_view_sessions,
-           CAST(nc.n_click_sessions AS BIGINT) AS n_click_sessions,
-           CAST(np.n_purchase_sessions AS BIGINT) AS n_purchase_sessions,
-           {sql_quantize(
-               'CAST(nc.n_click_sessions AS DOUBLE)'
-               ' / nv.n_view_sessions', 6)} AS view_to_click,
-           {sql_quantize(
-               'CAST(np.n_purchase_sessions AS DOUBLE)'
-               ' / nc.n_click_sessions', 6)} AS click_to_purchase
-    FROM tot, nv, nc, np
-"""
-
 
 ORACLE["events_mann_kendall"] = f"""
     WITH hourly AS (
@@ -7270,34 +4652,6 @@ ORACLE["events_uptime"] = f"""
                'CAST(covered_us AS DOUBLE)'
                ' / (last_us - first_us + ' + str(UPTIME_WINDOW_US)
                + ')', 6)} AS uptime_share
-    FROM per
-"""
-
-ORACLE["events_time_weighted_value"] = f"""
-    WITH ev AS (
-      SELECT user_id, epoch_us(ts) AS ts_us, event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS vq
-      FROM events
-    ),
-    holds AS (
-      SELECT user_id, ts_us, vq,
-             lead(ts_us) OVER (
-               PARTITION BY user_id ORDER BY ts_us, event_id
-             ) AS next_us
-      FROM ev
-    ),
-    per AS (
-      SELECT user_id,
-             CAST(count(*) AS BIGINT) AS n_intervals,
-             CAST(sum(next_us - ts_us) AS BIGINT) AS total_us,
-             sum((next_us - ts_us) * vq) AS wsum
-      FROM holds WHERE next_us IS NOT NULL GROUP BY 1
-    )
-    SELECT user_id, n_intervals, total_us,
-           CASE WHEN total_us > 0 THEN
-             {sql_quantize(
-                 'CAST(wsum AS DOUBLE) / total_us / 100.0', 4)}
-           END AS tw_avg_value
     FROM per
 """
 
@@ -7508,105 +4862,6 @@ ORACLE["events_conversion_ztest"] = f"""
     FROM z
 """
 
-ORACLE["events_ab_welch"] = f"""
-    WITH grid AS (
-      SELECT (event_type = 'purchase') AS is_a,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS vq
-      FROM events
-      WHERE event_type IN ('purchase', 'click')
-    ),
-    agg AS (
-      SELECT CAST(sum(CASE WHEN is_a THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-             CAST(sum(CASE WHEN is_a THEN 0 ELSE 1 END) AS BIGINT) AS n_b,
-             CAST(sum(CASE WHEN is_a THEN vq ELSE 0 END) AS DOUBLE) AS sv_a,
-             CAST(sum(CASE WHEN is_a THEN 0 ELSE vq END) AS DOUBLE) AS sv_b,
-             CAST(sum(CASE WHEN is_a THEN vq * vq ELSE 0 END) AS DOUBLE)
-               AS svv_a,
-             CAST(sum(CASE WHEN is_a THEN 0 ELSE vq * vq END) AS DOUBLE)
-               AS svv_b
-      FROM grid
-    ),
-    m AS (
-      SELECT n_a, n_b,
-             sv_a / n_a AS m_a, sv_b / n_b AS m_b,
-             ((svv_a - sv_a * sv_a / n_a) / (n_a - 1)) / n_a AS se2_a,
-             ((svv_b - sv_b * sv_b / n_b) / (n_b - 1)) / n_b AS se2_b
-      FROM agg
-    )
-    SELECT 'purchase' AS group_a,
-           'click' AS group_b,
-           n_a, n_b,
-           CASE WHEN n_a > 0
-                THEN {sql_quantize('m_a / 100.0', 4)} END AS mean_a,
-           CASE WHEN n_b > 0
-                THEN {sql_quantize('m_b / 100.0', 4)} END AS mean_b,
-           CASE WHEN n_a > 1 AND n_b > 1 AND se2_a + se2_b > 0
-                THEN {sql_quantize(
-                    '(m_a - m_b) / sqrt(se2_a + se2_b)', 4)}
-           END AS t_stat,
-           CASE WHEN n_a > 1 AND n_b > 1 AND se2_a + se2_b > 0
-                THEN {sql_quantize(
-                    '((se2_a + se2_b) * (se2_a + se2_b))'
-                    ' / (se2_a * se2_a / (n_a - 1)'
-                    ' + se2_b * se2_b / (n_b - 1))', 2)}
-           END AS df_welch,
-           CASE WHEN n_a > 1 AND n_b > 1 AND se2_a + se2_b > 0
-                THEN (abs({sql_quantize(
-                    '(m_a - m_b) / sqrt(se2_a + se2_b)', 4)}) > 1.96)
-           END AS significant_95
-    FROM m
-"""
-
-ORACLE["events_funnel_latency"] = """
-    WITH ev AS (
-      SELECT user_id, event_type, epoch_us(ts) AS ts_us FROM events
-    ),
-    v AS (
-      SELECT user_id, min(ts_us) AS t_view
-      FROM ev WHERE event_type = 'view' GROUP BY 1
-    ),
-    c AS (
-      SELECT ev.user_id, min(ev.ts_us) AS t_click
-      FROM ev JOIN v USING (user_id)
-      WHERE ev.event_type = 'click' AND ev.ts_us > v.t_view
-      GROUP BY 1
-    ),
-    p AS (
-      SELECT ev.user_id, min(ev.ts_us) AS t_purchase
-      FROM ev JOIN c USING (user_id)
-      WHERE ev.event_type = 'purchase' AND ev.ts_us > c.t_click
-      GROUP BY 1
-    ),
-    vc AS (
-      SELECT c.t_click - v.t_view AS d_us FROM c JOIN v USING (user_id)
-    ),
-    cp AS (
-      SELECT p.t_purchase - c.t_click AS d_us FROM p JOIN c USING (user_id)
-    ),
-    nv AS (SELECT CAST(count(*) AS BIGINT) AS n_view_users FROM v),
-    l1 AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_view_to_click,
-             round(CAST(quantile_cont(d_us, 0.5) AS DOUBLE) / 1000000.0, 3)
-               AS p50_view_to_click_s,
-             round(CAST(quantile_cont(d_us, 0.9) AS DOUBLE) / 1000000.0, 3)
-               AS p90_view_to_click_s
-      FROM vc
-    ),
-    l2 AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_click_to_purchase,
-             round(CAST(quantile_cont(d_us, 0.5) AS DOUBLE) / 1000000.0, 3)
-               AS p50_click_to_purchase_s,
-             round(CAST(quantile_cont(d_us, 0.9) AS DOUBLE) / 1000000.0, 3)
-               AS p90_click_to_purchase_s
-      FROM cp
-    )
-    SELECT nv.n_view_users,
-           l1.n_view_to_click, l1.p50_view_to_click_s,
-           l1.p90_view_to_click_s,
-           l2.n_click_to_purchase, l2.p50_click_to_purchase_s,
-           l2.p90_click_to_purchase_s
-    FROM nv, l1, l2
-"""
 
 ORACLE["events_ewma_control"] = f"""
     WITH hourly AS (
@@ -7780,128 +5035,6 @@ ORACLE["events_forecast_scorecard"] = f"""
 """
 
 
-ORACLE["events_value_kruskal"] = f"""
-    WITH ev AS (
-      SELECT event_type,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS vq
-      FROM events
-    ),
-    cell AS (
-      SELECT vq, event_type, CAST(count(*) AS BIGINT) AS ng
-      FROM ev GROUP BY 1, 2
-    ),
-    hist AS (
-      SELECT vq, CAST(sum(ng) AS BIGINT) AS m FROM cell GROUP BY 1
-    ),
-    cum AS (
-      SELECT a.vq, CAST(2 * sum(b.m) + a.m + 1 AS BIGINT) AS r2
-      FROM hist a JOIN hist b ON b.vq < a.vq
-      GROUP BY a.vq, a.m
-    ),
-    base AS (
-      SELECT hist.vq,
-             CAST(coalesce(cum.r2, hist.m + 1) AS BIGINT) AS r2
-      FROM hist LEFT JOIN cum USING (vq)
-    ),
-    grp AS (
-      SELECT cell.event_type,
-             CAST(sum(cell.ng) AS BIGINT) AS n_g,
-             CAST(sum(cell.ng * base.r2) AS DOUBLE) AS r2_g
-      FROM cell JOIN base USING (vq)
-      GROUP BY 1
-    ),
-    ties AS (
-      SELECT CAST(sum(m * m * m - m) AS DOUBLE) AS tie_sum,
-             CAST(sum(m) AS BIGINT) AS n,
-             CAST(count(*) AS BIGINT) AS n_values
-      FROM hist
-    ),
-    roll AS (
-      SELECT CAST(count(*) AS BIGINT) AS k_groups,
-             sum(r2_g * r2_g / (4.0 * n_g)) AS srr
-      FROM grp
-    )
-    SELECT ties.n AS n_events,
-           roll.k_groups,
-           ties.n_values,
-           CASE WHEN ties.n > 1 AND 1.0 - ties.tie_sum / (CAST(ties.n AS DOUBLE) * ties.n * ties.n - ties.n) > 0
-                THEN {sql_quantize(
-                    '(12.0 * roll.srr / (ties.n * (ties.n + 1.0))'
-               ' - 3.0 * (ties.n + 1.0))'
-               ' / (1.0 - ties.tie_sum / (CAST(ties.n AS DOUBLE)'
-               ' * ties.n * ties.n - ties.n))', 4)}
-           END AS h_stat,
-           CASE WHEN ties.n > 1
-                THEN {sql_quantize(
-                    '1.0 - ties.tie_sum / (CAST(ties.n AS DOUBLE)'
-                    ' * ties.n * ties.n - ties.n)', 6)}
-           END AS tie_correction,
-           CASE WHEN ties.n > 1 AND 1.0 - ties.tie_sum / (CAST(ties.n AS DOUBLE) * ties.n * ties.n - ties.n) > 0
-                THEN ({sql_quantize(
-                    '(12.0 * roll.srr / (ties.n * (ties.n + 1.0))'
-               ' - 3.0 * (ties.n + 1.0))'
-               ' / (1.0 - ties.tie_sum / (CAST(ties.n AS DOUBLE)'
-               ' * ties.n * ties.n - ties.n))', 4)}
-            > CASE roll.k_groups WHEN 2 THEN 3.8415 WHEN 3 THEN 5.9915
-                WHEN 4 THEN 7.8147 WHEN 5 THEN 9.4877
-                WHEN 6 THEN 11.0705 END)
-           END AS significant_95
-    FROM roll, ties
-"""
-
-ORACLE["events_periodogram"] = f"""
-    WITH hourly AS (
-      SELECT date_trunc('hour', ts) AS hour,
-             CAST(count(*) AS BIGINT) AS n
-      FROM events GROUP BY 1
-    ),
-    mn AS (
-      SELECT min(hour) AS h0,
-             CAST(count(*) AS BIGINT) AS cnt,
-             CAST(sum(n) AS BIGINT) AS sx,
-             CAST(sum(n * n) AS BIGINT) AS sxx
-      FROM hourly
-    ),
-    idx AS (
-      SELECT (epoch_us(hourly.hour) - epoch_us(mn.h0)) / 3600000000.0
-               AS t,
-             CAST(hourly.n AS DOUBLE)
-               - CAST(mn.sx AS DOUBLE) / mn.cnt AS x,
-             mn.cnt, mn.sx, mn.sxx
-      FROM hourly, mn
-    ),
-    periods AS (
-      SELECT unnest([{", ".join(str(p) for p in PERIODOGRAM_PERIODS_H)}])
-        AS period_h
-    ),
-    comps AS (
-      SELECT CAST(periods.period_h AS BIGINT) AS period_h,
-             {sql_quantize(
-                 'sum(idx.x * cos(2.0 * 3.141592653589793 * idx.t'
-                 ' / periods.period_h))', 6)} AS c,
-             {sql_quantize(
-                 'sum(idx.x * sin(2.0 * 3.141592653589793 * idx.t'
-                 ' / periods.period_h))', 6)} AS s,
-             any_value(idx.cnt) AS cnt,
-             any_value(idx.sx) AS sx,
-             any_value(idx.sxx) AS sxx
-      FROM idx CROSS JOIN periods
-      GROUP BY 1
-    )
-    SELECT period_h,
-           cnt AS n_hours,
-           {sql_quantize('(c * c + s * s) * 2.0 / cnt', 4)} AS power,
-           CASE WHEN CAST(sxx AS DOUBLE)
-                     - CAST(sx AS DOUBLE) * sx / cnt > 0
-                THEN {sql_quantize(
-                    '((c * c + s * s) * 2.0 / cnt)'
-                    ' / (CAST(sxx AS DOUBLE)'
-                    ' - CAST(sx AS DOUBLE) * sx / cnt)', 6)}
-           END AS variance_share
-    FROM comps
-"""
-
-
 ORACLE["events_churn_half_life"] = f"""
     WITH sv AS ({ORACLE['events_survival']})
     SELECT CAST(count(*) AS BIGINT) AS n_offsets,
@@ -7913,57 +5046,6 @@ ORACLE["events_churn_half_life"] = f"""
     FROM sv
 """
 
-
-ORACLE["events_value_levene"] = f"""
-    WITH vq AS (
-      SELECT event_type,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
-      FROM events
-    ),
-    med AS (
-      SELECT event_type, 2.0 * quantile_cont(v, 0.5) AS med2
-      FROM vq GROUP BY 1
-    ),
-    z AS (
-      SELECT vq.event_type,
-             CAST(abs(2 * vq.v - med.med2) AS HUGEINT) AS z2
-      FROM vq JOIN med USING (event_type)
-    ),
-    g AS (
-      SELECT event_type,
-             CAST(count(*) AS BIGINT) AS n_g,
-             CAST(sum(z2) AS DOUBLE) AS s1,
-             CAST(sum(z2 * z2) AS DOUBLE) AS s2
-      FROM z GROUP BY 1
-    ),
-    roll AS (
-      SELECT CAST(count(*) AS BIGINT) AS k_groups,
-             CAST(sum(n_g) AS BIGINT) AS n_events,
-             sum(s1) AS s1_tot,
-             sum(s1 * s1 / n_g) AS sq_over_n,
-             sum(s2 - s1 * s1 / n_g) AS within
-      FROM g
-    )
-    SELECT n_events, k_groups,
-           CASE WHEN k_groups > 1 AND n_events > k_groups
-                 AND within > 0 THEN
-             {sql_quantize(
-                 '((n_events - k_groups) / (k_groups - 1.0))'
-                 ' * ((sq_over_n - s1_tot * s1_tot / n_events)'
-                 ' / within)', 4)}
-           END AS f_stat,
-           (k_groups - 1.0) * (CASE WHEN k_groups > 1
-                 AND n_events > k_groups AND within > 0 THEN
-             {sql_quantize(
-                 '((n_events - k_groups) / (k_groups - 1.0))'
-                 ' * ((sq_over_n - s1_tot * s1_tot / n_events)'
-                 ' / within)', 4)}
-           END)
-             > (CASE k_groups WHEN 2 THEN 3.8415 WHEN 3 THEN 5.9915
-                WHEN 4 THEN 7.8147 WHEN 5 THEN 9.4877
-                WHEN 6 THEN 11.0705 END) AS significant_95
-    FROM roll
-"""
 
 ORACLE["events_cusum"] = f"""
     WITH hourly AS (
@@ -8018,43 +5100,6 @@ ORACLE["events_cusum"] = f"""
     FROM sc
 """
 
-ORACLE["events_peak_hours"] = f"""
-    WITH hourly AS (
-      SELECT event_type, date_trunc('hour', ts) AS hour,
-             CAST(count(*) AS BIGINT) AS n_events
-      FROM events GROUP BY 1, 2
-    ),
-    x AS (
-      SELECT event_type, hour, n_events,
-             lag(n_events) OVER
-               (PARTITION BY event_type ORDER BY hour) AS prev_n,
-             lead(n_events) OVER
-               (PARTITION BY event_type ORDER BY hour) AS next_n,
-             CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT)
-               AS n_hours,
-             CAST(sum(n_events) OVER (PARTITION BY event_type)
-               AS BIGINT) AS sn,
-             CAST(sum(n_events * n_events) OVER
-               (PARTITION BY event_type) AS BIGINT) AS sq
-      FROM hourly
-    ),
-    z AS (
-      SELECT *,
-             CAST(n_hours AS DOUBLE) * sq
-               - CAST(sn AS DOUBLE) * sn AS var_num,
-             (CAST(n_hours AS DOUBLE) * n_events - sn)
-               / sqrt((CAST(n_hours AS DOUBLE) * sq
-                        - CAST(sn AS DOUBLE) * sn)
-                      * n_hours / (n_hours - 1.0)) AS zs
-      FROM x
-    )
-    SELECT event_type, hour, n_events, prev_n, next_n,
-           {sql_quantize('zs', 4)} AS zscore
-    FROM z
-    WHERE prev_n IS NOT NULL AND next_n IS NOT NULL
-      AND n_events > prev_n AND n_events > next_n
-      AND n_hours > 1 AND var_num > 0 AND zs >= 2.0
-"""
 
 ORACLE["events_hour_concentration"] = f"""
     WITH hist AS (
@@ -8105,55 +5150,6 @@ ORACLE["events_l_diversity"] = f"""
     FROM cells
 """
 
-ORACLE["events_growth_accounting"] = f"""
-    WITH du AS (
-      SELECT DISTINCT date_trunc('day', ts) AS day, user_id
-      FROM events
-    ),
-    mx AS (SELECT max(day) AS max_day FROM du),
-    x AS (
-      SELECT user_id, day,
-             lag(day) OVER (PARTITION BY user_id ORDER BY day)
-               AS prev_day,
-             lead(day) OVER (PARTITION BY user_id ORDER BY day)
-               AS next_day
-      FROM du
-    ),
-    act AS (
-      SELECT day,
-             CAST(count(*) AS BIGINT) AS dau,
-             CAST(sum(CASE WHEN prev_day IS NULL THEN 1 ELSE 0 END)
-               AS BIGINT) AS n_new,
-             CAST(sum(CASE WHEN prev_day = day - INTERVAL 1 DAY
-               THEN 1 ELSE 0 END) AS BIGINT) AS n_retained,
-             CAST(sum(CASE WHEN prev_day IS NOT NULL
-               AND prev_day < day - INTERVAL 1 DAY
-               THEN 1 ELSE 0 END) AS BIGINT) AS n_resurrected
-      FROM x GROUP BY 1
-    ),
-    churn AS (
-      SELECT day + INTERVAL 1 DAY AS day,
-             CAST(count(*) AS BIGINT) AS n_churned
-      FROM x CROSS JOIN mx
-      WHERE (next_day IS NULL AND day < max_day)
-         OR next_day > day + INTERVAL 1 DAY
-      GROUP BY 1
-    )
-    SELECT coalesce(a.day, c.day) AS day,
-           CAST(coalesce(a.dau, 0) AS BIGINT) AS dau,
-           CAST(coalesce(a.n_new, 0) AS BIGINT) AS n_new,
-           CAST(coalesce(a.n_retained, 0) AS BIGINT) AS n_retained,
-           CAST(coalesce(a.n_resurrected, 0) AS BIGINT)
-             AS n_resurrected,
-           CAST(coalesce(c.n_churned, 0) AS BIGINT) AS n_churned,
-           CASE WHEN coalesce(c.n_churned, 0) > 0 THEN
-             {sql_quantize(
-                 'CAST(coalesce(a.n_new, 0)'
-                 ' + coalesce(a.n_resurrected, 0) AS DOUBLE)'
-                 ' / c.n_churned', 6)}
-           END AS quick_ratio
-    FROM act a FULL OUTER JOIN churn c ON a.day = c.day
-"""
 
 ORACLE["events_incident_table"] = f"""
     WITH hourly AS (
@@ -8232,90 +5228,6 @@ ORACLE["events_concurrency_curve"] = f"""
     FROM hrs GROUP BY 1
 """
 
-ORACLE["events_type_correlation"] = f"""
-    WITH hourly AS (
-      SELECT event_type, date_trunc('hour', ts) AS hour,
-             CAST(count(*) AS BIGINT) AS n
-      FROM events GROUP BY 1, 2
-    ),
-    span AS (SELECT min(hour) AS h0, max(hour) AS h1 FROM hourly),
-    cal AS (
-      SELECT t.event_type,
-             unnest(generate_series(s.h0, s.h1, INTERVAL 1 HOUR))
-               AS hour
-      FROM (SELECT DISTINCT event_type FROM hourly) t
-      CROSS JOIN span s
-    ),
-    filled AS (
-      SELECT c.event_type, c.hour,
-             CAST(coalesce(h.n, 0) AS BIGINT) AS n
-      FROM cal c LEFT JOIN hourly h
-        ON c.event_type = h.event_type AND c.hour = h.hour
-    ),
-    m AS (
-      SELECT a.event_type AS type_a, b.event_type AS type_b,
-             CAST(count(*) AS BIGINT) AS n_hours,
-             CAST(sum(a.n) AS BIGINT) AS sx,
-             CAST(sum(b.n) AS BIGINT) AS sy,
-             CAST(sum(a.n * a.n) AS BIGINT) AS sxx,
-             CAST(sum(b.n * b.n) AS BIGINT) AS syy,
-             CAST(sum(a.n * b.n) AS BIGINT) AS sxy
-      FROM filled a JOIN filled b
-        ON a.hour = b.hour AND a.event_type < b.event_type
-      GROUP BY 1, 2
-    )
-    SELECT type_a, type_b, n_hours,
-           CASE WHEN CAST(n_hours AS DOUBLE) * sxx
-                     - CAST(sx AS DOUBLE) * sx > 0
-                 AND CAST(n_hours AS DOUBLE) * syy
-                     - CAST(sy AS DOUBLE) * sy > 0 THEN
-             {sql_quantize(
-                 '(CAST(n_hours AS DOUBLE) * sxy'
-                 ' - CAST(sx AS DOUBLE) * sy)'
-                 ' / sqrt((CAST(n_hours AS DOUBLE) * sxx'
-                 ' - CAST(sx AS DOUBLE) * sx)'
-                 ' * (CAST(n_hours AS DOUBLE) * syy'
-                 ' - CAST(sy AS DOUBLE) * sy))', 6)}
-           END AS pearson_r
-    FROM m
-"""
-
-
-ORACLE["events_window_funnel"] = f"""
-    WITH ev AS (
-      SELECT user_id, event_type, epoch_us(ts) AS ts_us FROM events
-    ),
-    v AS (SELECT user_id, ts_us AS t_v FROM ev
-          WHERE event_type = 'view'),
-    c AS (SELECT user_id, ts_us AS t_c FROM ev
-          WHERE event_type = 'click'),
-    p AS (SELECT user_id, ts_us AS t_p FROM ev
-          WHERE event_type = 'purchase'),
-    vc AS (
-      SELECT v.user_id, v.t_v, min(c.t_c) AS t_c
-      FROM v JOIN c ON v.user_id = c.user_id
-      WHERE c.t_c > v.t_v
-        AND c.t_c <= v.t_v + {WINDOW_FUNNEL_US}
-      GROUP BY 1, 2
-    ),
-    vcp AS (
-      SELECT DISTINCT vc.user_id
-      FROM vc JOIN p ON vc.user_id = p.user_id
-      WHERE p.t_p > vc.t_c
-        AND p.t_p <= vc.t_v + {WINDOW_FUNNEL_US}
-    ),
-    l1 AS (SELECT CAST(count(DISTINCT user_id) AS BIGINT)
-             AS n_level1 FROM v),
-    l2 AS (SELECT CAST(count(DISTINCT user_id) AS BIGINT)
-             AS n_level2 FROM vc),
-    l3 AS (SELECT CAST(count(*) AS BIGINT) AS n_level3 FROM vcp)
-    SELECT n_level1, n_level2, n_level3,
-           {sql_quantize('CAST(n_level2 AS DOUBLE) / n_level1', 6)}
-             AS l2_rate,
-           {sql_quantize('CAST(n_level3 AS DOUBLE) / n_level1', 6)}
-             AS l3_rate
-    FROM l1 CROSS JOIN l2 CROSS JOIN l3
-"""
 
 ORACLE["events_dp_hourly"] = f"""
     WITH cells AS (
@@ -8343,136 +5255,6 @@ ORACLE["events_dp_hourly"] = f"""
     FROM drawn
 """
 
-ORACLE["events_diff_in_diff"] = f"""
-    WITH grid AS (
-      SELECT (user_id % 2 = 0) AS treat,
-             epoch_us(date_trunc('hour', ts)) AS hour_us,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS vq
-      FROM events
-    ),
-    cells AS (
-      SELECT treat, hour_us, CAST(count(*) AS BIGINT) AS n,
-             sum(vq) AS sv, sum(vq * vq) AS svv
-      FROM grid GROUP BY 1, 2
-    ),
-    b AS (
-      SELECT (CAST(min(hour_us) AS DOUBLE)
-              + CAST(max(hour_us) AS DOUBLE)) / 2.0 AS mid
-      FROM cells
-    ),
-    folded AS (
-      SELECT
-        CAST(sum(CASE WHEN treat AND CAST(hour_us AS DOUBLE) >= mid
-                 THEN n ELSE 0 END) AS BIGINT) AS n_tp,
-        CAST(sum(CASE WHEN treat AND CAST(hour_us AS DOUBLE) < mid
-                 THEN n ELSE 0 END) AS BIGINT) AS n_tc,
-        CAST(sum(CASE WHEN NOT treat AND CAST(hour_us AS DOUBLE) >= mid
-                 THEN n ELSE 0 END) AS BIGINT) AS n_cp,
-        CAST(sum(CASE WHEN NOT treat AND CAST(hour_us AS DOUBLE) < mid
-                 THEN n ELSE 0 END) AS BIGINT) AS n_cc,
-        CAST(sum(CASE WHEN treat AND CAST(hour_us AS DOUBLE) >= mid
-                 THEN sv ELSE 0 END) AS DOUBLE) AS sv_tp,
-        CAST(sum(CASE WHEN treat AND CAST(hour_us AS DOUBLE) < mid
-                 THEN sv ELSE 0 END) AS DOUBLE) AS sv_tc,
-        CAST(sum(CASE WHEN NOT treat AND CAST(hour_us AS DOUBLE) >= mid
-                 THEN sv ELSE 0 END) AS DOUBLE) AS sv_cp,
-        CAST(sum(CASE WHEN NOT treat AND CAST(hour_us AS DOUBLE) < mid
-                 THEN sv ELSE 0 END) AS DOUBLE) AS sv_cc,
-        CAST(sum(CASE WHEN treat AND CAST(hour_us AS DOUBLE) >= mid
-                 THEN svv ELSE 0 END) AS DOUBLE) AS svv_tp,
-        CAST(sum(CASE WHEN treat AND CAST(hour_us AS DOUBLE) < mid
-                 THEN svv ELSE 0 END) AS DOUBLE) AS svv_tc,
-        CAST(sum(CASE WHEN NOT treat AND CAST(hour_us AS DOUBLE) >= mid
-                 THEN svv ELSE 0 END) AS DOUBLE) AS svv_cp,
-        CAST(sum(CASE WHEN NOT treat AND CAST(hour_us AS DOUBLE) < mid
-                 THEN svv ELSE 0 END) AS DOUBLE) AS svv_cc
-      FROM cells CROSS JOIN b
-    ),
-    m AS (
-      SELECT *,
-             sv_tp / n_tp AS m_tp, sv_tc / n_tc AS m_tc,
-             sv_cp / n_cp AS m_cp, sv_cc / n_cc AS m_cc,
-             ((svv_tp - sv_tp * sv_tp / n_tp) / (n_tp - 1)) / n_tp
-               + ((svv_tc - sv_tc * sv_tc / n_tc) / (n_tc - 1)) / n_tc
-               + ((svv_cp - sv_cp * sv_cp / n_cp) / (n_cp - 1)) / n_cp
-               + ((svv_cc - sv_cc * sv_cc / n_cc) / (n_cc - 1)) / n_cc
-               AS se2
-      FROM folded
-    ),
-    d AS (
-      SELECT *, (m_tp - m_tc) - (m_cp - m_cc) AS did_cents,
-             (n_tp > 1 AND n_tc > 1 AND n_cp > 1 AND n_cc > 1) AS ok
-      FROM m
-    )
-    SELECT n_tc AS n_treat_pre, n_tp AS n_treat_post,
-           n_cc AS n_ctrl_pre, n_cp AS n_ctrl_post,
-           {sql_quantize('m_tc / 100.0', 4)} AS mean_treat_pre,
-           {sql_quantize('m_tp / 100.0', 4)} AS mean_treat_post,
-           {sql_quantize('m_cc / 100.0', 4)} AS mean_ctrl_pre,
-           {sql_quantize('m_cp / 100.0', 4)} AS mean_ctrl_post,
-           {sql_quantize('did_cents / 100.0', 4)} AS did_estimate,
-           CASE WHEN ok THEN
-             {sql_quantize('did_cents / sqrt(se2)', 4)}
-           END AS t_stat,
-           CASE WHEN ok THEN
-             abs({sql_quantize('did_cents / sqrt(se2)', 4)}) > 1.96
-           END AS significant_95
-    FROM d
-"""
-
-ORACLE["events_cmh"] = f"""
-    WITH users AS (
-      SELECT user_id, min(ts) AS first_ts,
-             min(CASE WHEN event_type = 'purchase' THEN ts END)
-               AS first_purchase
-      FROM events GROUP BY 1
-    ),
-    uconv AS (
-      SELECT user_id, first_ts,
-             CASE WHEN first_purchase IS NOT NULL
-                   AND epoch_us(first_purchase) - epoch_us(first_ts)
-                       <= 86400000000
-                  THEN 1 ELSE 0 END AS conv
-      FROM users
-    ),
-    strat AS (
-      SELECT CAST(floor(hour(first_ts) / 6) AS BIGINT) AS stratum,
-             CAST(count(*) AS BIGINT) AS t_n,
-             CAST(sum(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n1,
-             CAST(sum(conv) AS BIGINT) AS m1,
-             CAST(sum(CASE WHEN user_id % 2 = 0 THEN conv ELSE 0 END)
-                  AS BIGINT) AS a
-      FROM uconv GROUP BY 1 HAVING count(*) > 1
-    ),
-    terms AS (
-      SELECT CAST(t_n AS DOUBLE) AS t, CAST(a AS DOUBLE) AS a,
-             CAST(n1 AS DOUBLE) AS n1, CAST(m1 AS DOUBLE) AS m1,
-             t_n AS t_int
-      FROM strat
-    ),
-    fold AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_strata,
-             CAST(sum(t_int) AS BIGINT) AS n_users,
-             sum(a - n1 * m1 / t) AS dev,
-             sum(n1 * (t - n1) * m1 * (t - m1)
-                 / (t * t * (t - 1.0))) AS var,
-             sum(a * ((t - n1) - (m1 - a)) / t) AS ad,
-             sum((n1 - a) * (m1 - a) / t) AS bc
-      FROM terms
-    )
-    SELECT n_strata, n_users,
-           CASE WHEN var > 0 THEN
-             {sql_quantize('dev * dev / var', 4)}
-           END AS chi2_cmh,
-           CASE WHEN bc > 0 THEN
-             {sql_quantize('ad / bc', 4)}
-           END AS or_mh,
-           CASE WHEN var > 0 THEN
-             {sql_quantize('dev * dev / var', 4)} > {CMH_CHI2_95}
-           END AS significant_95
-    FROM fold
-"""
 
 ORACLE["events_holt_linear"] = f"""
     WITH RECURSIVE cells AS (
@@ -8564,89 +5346,6 @@ ORACLE["events_dp_user_total"] = f"""
     FROM drawn
 """
 
-ORACLE["events_cuped"] = f"""
-    WITH cells AS (
-      SELECT (user_id % 2 = 0) AS treat, user_id,
-             epoch_us(date_trunc('day', ts)) AS day_us,
-             sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS sv
-      FROM events GROUP BY 1, 2, 3
-    ),
-    b AS (
-      SELECT (CAST(min(day_us) AS DOUBLE)
-              + CAST(max(day_us) AS DOUBLE)) / 2.0 AS mid
-      FROM cells
-    ),
-    per_user AS (
-      SELECT treat, user_id,
-             CAST(sum(CASE WHEN CAST(day_us AS DOUBLE) < mid
-                      THEN sv ELSE 0 END) AS DOUBLE) AS x,
-             CAST(sum(CASE WHEN CAST(day_us AS DOUBLE) >= mid
-                      THEN sv ELSE 0 END) AS DOUBLE) AS y
-      FROM cells CROSS JOIN b GROUP BY 1, 2
-    ),
-    m AS (
-      SELECT
-        CAST(sum(CASE WHEN treat THEN 1 ELSE 0 END) AS DOUBLE) AS n_t,
-        CAST(sum(CASE WHEN treat THEN 0 ELSE 1 END) AS DOUBLE) AS n_c,
-        sum(CASE WHEN treat THEN x ELSE 0 END) AS sx_t,
-        sum(CASE WHEN treat THEN 0 ELSE x END) AS sx_c,
-        sum(CASE WHEN treat THEN y ELSE 0 END) AS sy_t,
-        sum(CASE WHEN treat THEN 0 ELSE y END) AS sy_c,
-        sum(CASE WHEN treat THEN x * x ELSE 0 END) AS sxx_t,
-        sum(CASE WHEN treat THEN 0 ELSE x * x END) AS sxx_c,
-        sum(CASE WHEN treat THEN y * y ELSE 0 END) AS syy_t,
-        sum(CASE WHEN treat THEN 0 ELSE y * y END) AS syy_c,
-        sum(CASE WHEN treat THEN x * y ELSE 0 END) AS sxy_t,
-        sum(CASE WHEN treat THEN 0 ELSE x * y END) AS sxy_c
-      FROM per_user
-    ),
-    pool AS (
-      SELECT *,
-             (sxx_t + sxx_c) / (n_t + n_c)
-               - ((sx_t + sx_c) / (n_t + n_c))
-               * ((sx_t + sx_c) / (n_t + n_c)) AS var_x,
-             (sxy_t + sxy_c) / (n_t + n_c)
-               - ((sx_t + sx_c) / (n_t + n_c))
-               * ((sy_t + sy_c) / (n_t + n_c)) AS cov_xy
-      FROM m
-    ),
-    th AS (SELECT *, cov_xy / var_x AS theta FROM pool),
-    adj AS (
-      SELECT *,
-             (sy_t / n_t - sy_c / n_c) AS diff_raw,
-             ((sy_t / n_t - theta * (sx_t / n_t))
-              - (sy_c / n_c - theta * (sx_c / n_c))) AS diff_adj,
-             ((syy_t / n_t - (sy_t / n_t) * (sy_t / n_t))
-               - 2.0 * theta * (sxy_t / n_t
-                 - (sx_t / n_t) * (sy_t / n_t))
-               + theta * theta * (sxx_t / n_t
-                 - (sx_t / n_t) * (sx_t / n_t))) / n_t
-             + ((syy_c / n_c - (sy_c / n_c) * (sy_c / n_c))
-               - 2.0 * theta * (sxy_c / n_c
-                 - (sx_c / n_c) * (sy_c / n_c))
-               + theta * theta * (sxx_c / n_c
-                 - (sx_c / n_c) * (sx_c / n_c))) / n_c AS se2,
-             (syy_t / n_t - (sy_t / n_t) * (sy_t / n_t)) / n_t
-             + (syy_c / n_c - (sy_c / n_c) * (sy_c / n_c)) / n_c
-               AS se2_raw,
-             (n_t > 1 AND n_c > 1 AND var_x > 0) AS ok
-      FROM th
-    )
-    SELECT CAST(n_t AS BIGINT) AS n_treat,
-           CAST(n_c AS BIGINT) AS n_ctrl,
-           CASE WHEN ok THEN {sql_quantize('theta', 6)} END AS theta,
-           {sql_quantize('diff_raw / 100.0', 4)} AS diff_raw,
-           CASE WHEN ok THEN
-             {sql_quantize('diff_adj / 100.0', 4)}
-           END AS diff_adj,
-           CASE WHEN ok AND se2 > 0 THEN
-             {sql_quantize('diff_adj / sqrt(se2)', 4)}
-           END AS t_adj,
-           CASE WHEN ok AND se2_raw > 0 THEN
-             {sql_quantize('1.0 - se2 / se2_raw', 6)}
-           END AS var_reduction
-    FROM adj
-"""
 
 ORACLE["events_dp_median"] = f"""
     WITH bins AS (
@@ -8675,163 +5374,6 @@ ORACLE["events_dp_median"] = f"""
     FROM scored ORDER BY score DESC, bin LIMIT 1
 """
 
-_POISSON_CASE = " ".join(
-    f"WHEN u < {c!r} THEN {k}" for k, c in enumerate(_POISSON_CUM)
-)
-
-ORACLE["events_bootstrap_diff_ci"] = f"""
-    WITH per_user AS (
-      SELECT user_id, (user_id % 2 = 0) AS treat,
-             CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-                  AS DOUBLE) AS y
-      FROM events GROUP BY 1, 2
-    ),
-    reps AS (
-      SELECT user_id, treat, y,
-             unnest(generate_series(0, {BOOT_REPS - 1})) AS r
-      FROM per_user
-    ),
-    drawn AS (
-      SELECT treat, y, r,
-             (CAST(CAST(('0x' || substr(md5(
-                'bs|' || CAST(user_id AS VARCHAR) || '|'
-                      || CAST(r AS VARCHAR)), 1, 8))
-                AS BIGINT) AS DOUBLE) + 0.5) / {DP_U_SCALE!r} AS u
-      FROM reps
-    ),
-    weighted AS (
-      SELECT treat, y, r,
-             CAST(CASE {_POISSON_CASE} ELSE 9 END AS BIGINT) AS w
-      FROM drawn
-    ),
-    cells AS (
-      SELECT r,
-             sum(CASE WHEN treat THEN w END) AS n_t,
-             sum(CASE WHEN treat THEN w * y END) AS sy_t,
-             sum(CASE WHEN NOT treat THEN w END) AS n_c,
-             sum(CASE WHEN NOT treat THEN w * y END) AS sy_c
-      FROM weighted GROUP BY 1
-    ),
-    diffs AS (
-      SELECT {sql_quantize(
-          '(sy_t / n_t - sy_c / n_c) / 100.0', 6)} AS d
-      FROM cells
-    )
-    SELECT CAST(count(*) AS BIGINT) AS n_reps,
-           {sql_quantize('avg(d)', 4)} AS diff_mean,
-           {sql_quantize('quantile_cont(d, 0.025)', 4)} AS ci_lo,
-           {sql_quantize('quantile_cont(d, 0.975)', 4)} AS ci_hi,
-           (quantile_cont(d, 0.025) <= 0.0
-            AND quantile_cont(d, 0.975) >= 0.0) AS covers_zero
-    FROM diffs
-"""
-
-ORACLE["events_sequential_msprt"] = f"""
-    WITH grid AS (
-      SELECT (user_id % 2 = 0) AS treat,
-             epoch_us(date_trunc('day', ts)) AS day_us,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS vq
-      FROM events
-    ),
-    cells AS (
-      SELECT treat, day_us, CAST(count(*) AS BIGINT) AS n,
-             sum(vq) AS sv, sum(vq * vq) AS svv
-      FROM grid GROUP BY 1, 2
-    ),
-    per_day AS (
-      SELECT day_us,
-             CAST(sum(CASE WHEN treat THEN n ELSE 0 END) AS BIGINT)
-               AS n_t,
-             CAST(sum(CASE WHEN NOT treat THEN n ELSE 0 END) AS BIGINT)
-               AS n_c,
-             CAST(sum(CASE WHEN treat THEN sv ELSE 0 END) AS DOUBLE)
-               AS sv_t,
-             CAST(sum(CASE WHEN NOT treat THEN sv ELSE 0 END) AS DOUBLE)
-               AS sv_c,
-             CAST(sum(CASE WHEN treat THEN svv ELSE 0 END) AS DOUBLE)
-               AS svv_t,
-             CAST(sum(CASE WHEN NOT treat THEN svv ELSE 0 END) AS DOUBLE)
-               AS svv_c
-      FROM cells GROUP BY 1
-    ),
-    cum AS (
-      SELECT a.day_us,
-             CAST(sum(b.n_t) AS BIGINT) AS n_t,
-             CAST(sum(b.n_c) AS BIGINT) AS n_c,
-             sum(b.sv_t) AS sv_t, sum(b.sv_c) AS sv_c,
-             sum(b.svv_t) AS svv_t, sum(b.svv_c) AS svv_c
-      FROM per_day a JOIN per_day b ON b.day_us <= a.day_us
-      GROUP BY 1
-    ),
-    s AS (
-      SELECT day_us, n_t, n_c,
-             (sv_t / n_t / 100.0 - sv_c / n_c / 100.0) AS delta,
-             ((svv_t - sv_t * sv_t / n_t) / (n_t - 1) / 10000.0) / n_t
-               + ((svv_c - sv_c * sv_c / n_c) / (n_c - 1) / 10000.0)
-                 / n_c AS v,
-             (n_t > 1 AND n_c > 1) AS ok
-      FROM cum
-    ),
-    scored AS (
-      SELECT day_us, n_t, n_c,
-             CASE WHEN ok THEN {sql_quantize(
-                 f'sqrt(v / (v + {MSPRT_TAU_SQ!r}))'
-                 f' * exp(delta * delta * {MSPRT_TAU_SQ!r}'
-                 f' / (2.0 * v * (v + {MSPRT_TAU_SQ!r})))', 6)}
-             END AS lambda_mixture
-      FROM s
-    )
-    SELECT a.day_us, a.n_t, a.n_c, a.lambda_mixture,
-           CASE WHEN max(b.lambda_mixture) > 0 THEN
-             {sql_quantize(
-                 'least(1.0, 1.0 / max(b.lambda_mixture))', 6)}
-           END AS always_valid_p
-    FROM scored a JOIN scored b ON b.day_us <= a.day_us
-    GROUP BY 1, 2, 3, 4
-"""
-
-ORACLE["events_parallel_trends"] = f"""
-    WITH grid AS (
-      SELECT (user_id % 2 = 0) AS treat,
-             epoch_us(date_trunc('day', ts)) AS day_us,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS vq
-      FROM events
-    ),
-    per_day AS (
-      SELECT day_us,
-             CAST(sum(CASE WHEN treat THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_t,
-             CAST(sum(CASE WHEN NOT treat THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_c,
-             CAST(sum(CASE WHEN treat THEN vq ELSE 0 END) AS DOUBLE)
-               AS sv_t,
-             CAST(sum(CASE WHEN NOT treat THEN vq ELSE 0 END) AS DOUBLE)
-               AS sv_c
-      FROM grid GROUP BY 1
-    ),
-    gapped AS (
-      SELECT day_us, n_t, n_c,
-             (sv_t / n_t - sv_c / n_c) / 100.0 AS gap_raw
-      FROM per_day
-    ),
-    b AS (
-      SELECT (CAST(min(day_us) AS DOUBLE)
-              + CAST(max(day_us) AS DOUBLE)) / 2.0 AS mid
-      FROM gapped
-    ),
-    pre AS (
-      SELECT avg(gap_raw) AS pre_gap
-      FROM gapped CROSS JOIN b
-      WHERE CAST(day_us AS DOUBLE) < mid
-    )
-    SELECT g.day_us,
-           CAST(floor((CAST(g.day_us AS DOUBLE) - b.mid)
-                / 86400000000.0) AS BIGINT) AS rel_day,
-           g.n_t, g.n_c,
-           {sql_quantize('g.gap_raw', 4)} AS gap,
-           {sql_quantize('g.gap_raw - p.pre_gap', 4)} AS gap_vs_pre
-    FROM gapped g CROSS JOIN b CROSS JOIN pre p
-"""
 
 _QTE_SELECTS = " UNION ALL ".join(
     f"""SELECT {q!r} AS q,
@@ -8968,69 +5510,9 @@ _HOURLY_SCAN_SQL = (
     "             CAST(count(*) AS BIGINT) AS n\n"
     "      FROM events GROUP BY 1"
 )
-_INJECTED_SCAN_SQL = f"""SELECT hour,
-             CAST(CASE WHEN (epoch_us(hour) // 3600000000)
-                            % {INJECT_EVERY} = 0
-                  THEN n * {INJECT_MULT} + {INJECT_ADD}
-                  ELSE n END AS BIGINT) AS n
-      FROM ({_HOURLY_SCAN_SQL})"""
 
 assert ORACLE["events_anomaly_ensemble"].count(_HOURLY_SCAN_SQL) == 3
-_INJECTED_ENSEMBLE = ORACLE["events_anomaly_ensemble"].replace(
-    _HOURLY_SCAN_SQL, _INJECTED_SCAN_SQL
-)
 
-_INJ_EVAL_ROWS = " UNION ALL ".join(
-    f"""SELECT CAST({k} AS BIGINT) AS min_votes, n_injected, tp_{k} AS tp,
-        fp_{k} AS fp,
-        CAST(n_injected - tp_{k} AS BIGINT) AS fn,
-        CASE WHEN tp_{k} + fp_{k} > 0 THEN {sql_quantize(
-            f'CAST(tp_{k} AS DOUBLE) / (tp_{k} + fp_{k})', 6)}
-        END AS precision,
-        CASE WHEN n_injected > 0 THEN {sql_quantize(
-            f'CAST(tp_{k} AS DOUBLE) / n_injected', 6)}
-        END AS recall,
-        CASE WHEN tp_{k} + fp_{k} > 0 AND n_injected > 0
-              AND (CAST(tp_{k} AS DOUBLE) / (tp_{k} + fp_{k}))
-                  + (CAST(tp_{k} AS DOUBLE) / n_injected) > 0
-        THEN {sql_quantize(
-            f'2.0 * (CAST(tp_{k} AS DOUBLE) / (tp_{k} + fp_{k}))'
-            f' * (CAST(tp_{k} AS DOUBLE) / n_injected)'
-            f' / ((CAST(tp_{k} AS DOUBLE) / (tp_{k} + fp_{k}))'
-            f' + (CAST(tp_{k} AS DOUBLE) / n_injected))', 6)}
-        END AS f1
-     FROM folded"""
-    for k in (1, 2, 3)
-)
-
-ORACLE["events_anomaly_injection_eval"] = f"""
-    WITH truth AS (
-      SELECT hour,
-             ((epoch_us(hour) // 3600000000) % {INJECT_EVERY} = 0)
-               AS inj
-      FROM ({_HOURLY_SCAN_SQL})
-    ),
-    fl AS (
-      SELECT hour, votes FROM ({_INJECTED_ENSEMBLE})
-    ),
-    m AS (
-      SELECT t.inj, coalesce(fl.votes, 0) AS votes
-      FROM truth t LEFT JOIN fl ON fl.hour = t.hour
-    ),
-    folded AS (
-      SELECT CAST(sum(CASE WHEN inj THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_injected,
-             {", ".join(
-                 f'''CAST(sum(CASE WHEN inj AND votes >= {k}
-                      THEN 1 ELSE 0 END) AS BIGINT) AS tp_{k},
-                 CAST(sum(CASE WHEN NOT inj AND votes >= {k}
-                      THEN 1 ELSE 0 END) AS BIGINT) AS fp_{k}'''
-                 for k in (1, 2, 3)
-             )}
-      FROM m
-    )
-    {_INJ_EVAL_ROWS}
-"""
 
 _PSI_SHIFT_SELECTS = " UNION ALL ".join(
     f"""SELECT {shift!r} AS shift_dollars,
@@ -9074,283 +5556,6 @@ _PSI_SHIFT_SELECTS = " UNION ALL ".join(
 
 ORACLE["events_psi_injection_eval"] = f"""
     {_PSI_SHIFT_SELECTS}
-"""
-
-ORACLE["events_forecast_model_compare"] = f"""
-    WITH RECURSIVE cells AS (
-      SELECT event_type,
-             epoch_us(date_trunc('hour', ts)) AS hour_us,
-             CAST(count(*) AS BIGINT) AS cnt
-      FROM events GROUP BY 1, 2
-    ),
-    b AS (SELECT min(hour_us) AS mn, max(hour_us) AS mx FROM cells),
-    cal AS (
-      SELECT t.event_type,
-             unnest(generate_series(b.mn, b.mx, {HOUR_US})) AS hour_us
-      FROM (SELECT DISTINCT event_type FROM cells) t CROSS JOIN b
-    ),
-    series AS (
-      SELECT cal.event_type, cal.hour_us,
-             CAST(coalesce(c.cnt, 0) AS DOUBLE) AS y,
-             row_number() OVER (
-               PARTITION BY cal.event_type ORDER BY cal.hour_us
-             ) AS rn
-      FROM cal LEFT JOIN cells c
-        ON c.event_type = cal.event_type AND c.hour_us = cal.hour_us
-    ),
-    nmax AS (SELECT event_type, max(rn) AS n FROM series GROUP BY 1),
-    train AS (
-      SELECT s.event_type, s.rn, s.y
-      FROM series s JOIN nmax x ON x.event_type = s.event_type
-      WHERE s.rn <= x.n - {HW_PERIOD}
-    ),
-    tmax AS (SELECT event_type, max(rn) AS t FROM train GROUP BY 1),
-    naive AS (
-      SELECT event_type, (rn - 1) % {HW_PERIOD} AS slot,
-             sum(y) / count(*) AS p
-      FROM train GROUP BY 1, 2
-    ),
-    hwalk(event_type, rn, lev, tr) AS (
-      SELECT event_type, CAST(1 AS BIGINT), y, CAST(0.0 AS DOUBLE)
-      FROM train WHERE rn = 1
-      UNION ALL
-      SELECT w.event_type, w.rn + 1,
-             {HOLT_ALPHA!r} * sr.y
-               + {1.0 - HOLT_ALPHA!r} * (w.lev + w.tr),
-             {HOLT_BETA!r} * (({HOLT_ALPHA!r} * sr.y
-               + {1.0 - HOLT_ALPHA!r} * (w.lev + w.tr)) - w.lev)
-               + {1.0 - HOLT_BETA!r} * w.tr
-      FROM hwalk w JOIN train sr
-        ON sr.event_type = w.event_type AND sr.rn = w.rn + 1
-    ),
-    hlast AS (
-      SELECT w.event_type, w.lev, w.tr
-      FROM hwalk w JOIN tmax x
-        ON x.event_type = w.event_type AND w.rn = x.t
-    ),
-    winit AS (
-      SELECT event_type,
-             sum(CASE WHEN rn <= {HW_PERIOD} THEN y ELSE 0 END)
-               / {float(HW_PERIOD)!r} AS lev0,
-             list(y ORDER BY rn)
-               FILTER (WHERE rn <= {HW_PERIOD}) AS y0
-      FROM train GROUP BY 1
-    ),
-    wwalk(event_type, rn, lev, tr, s) AS (
-      SELECT event_type, CAST({HW_PERIOD} AS BIGINT), lev0,
-             CAST(0.0 AS DOUBLE),
-             list_transform(y0, v -> v - lev0)
-      FROM winit
-      UNION ALL
-      SELECT w.event_type, w.rn + 1,
-             {HOLT_ALPHA!r} * (sr.y - w.s[1])
-               + {1.0 - HOLT_ALPHA!r} * (w.lev + w.tr),
-             {HOLT_BETA!r} * (({HOLT_ALPHA!r} * (sr.y - w.s[1])
-               + {1.0 - HOLT_ALPHA!r} * (w.lev + w.tr)) - w.lev)
-               + {1.0 - HOLT_BETA!r} * w.tr,
-             list_append(w.s[2:{HW_PERIOD}],
-               {HW_GAMMA!r} * (sr.y - ({HOLT_ALPHA!r} * (sr.y - w.s[1])
-                 + {1.0 - HOLT_ALPHA!r} * (w.lev + w.tr)))
-               + {1.0 - HW_GAMMA!r} * w.s[1])
-      FROM wwalk w JOIN train sr
-        ON sr.event_type = w.event_type AND sr.rn = w.rn + 1
-    ),
-    wlast AS (
-      SELECT w.event_type, w.lev, w.tr, w.s
-      FROM wwalk w JOIN tmax x
-        ON x.event_type = w.event_type AND w.rn = x.t
-    ),
-    tmom AS (
-      SELECT event_type,
-             CAST(count(*) AS BIGINT) AS tn,
-             CAST(sum(rn) AS BIGINT) AS tsx,
-             CAST(sum(rn * rn) AS BIGINT) AS tsxx,
-             CAST(sum(y) AS BIGINT) AS tsy,
-             CAST(sum(rn * y) AS BIGINT) AS tsxy
-      FROM train GROUP BY 1
-    ),
-    tslope AS (
-      SELECT event_type, tn, tsx, tsy,
-             CASE WHEN tn * tsxx - tsx * tsx <> 0
-               THEN CAST(tn * tsxy - tsx * tsy AS DOUBLE)
-                    / CAST(tn * tsxx - tsx * tsx AS DOUBLE)
-               ELSE 0.0 END AS bb
-      FROM tmom
-    ),
-    tab AS (
-      SELECT event_type, tn, bb,
-             (CAST(tsy AS DOUBLE) - bb * CAST(tsx AS DOUBLE))
-               / CAST(tn AS DOUBLE) AS aa
-      FROM tslope
-    ),
-    t2 AS (
-      SELECT tr.event_type, tr.rn, tr.y, tab.aa, tab.bb
-      FROM train tr JOIN tab USING (event_type)
-    ),
-    twalk(event_type, rn, s) AS (
-      SELECT event_type, CAST(1 AS BIGINT),
-             2.0 * y - (aa + bb * rn)
-      FROM t2 WHERE rn = 1
-      UNION ALL
-      SELECT w.event_type, w.rn + 1,
-             {THETA_ALPHA!r} * (2.0 * s2.y - (s2.aa + s2.bb * s2.rn))
-               + {1.0 - THETA_ALPHA!r} * w.s
-      FROM twalk w JOIN t2 s2
-        ON s2.event_type = w.event_type AND s2.rn = w.rn + 1
-    ),
-    tlast AS (
-      SELECT w.event_type, w.s
-      FROM twalk w JOIN tmax x
-        ON x.event_type = w.event_type AND w.rn = x.t
-    ),
-    targets AS (
-      SELECT s.event_type, s.rn - t.t - 1 AS h, s.y AS actual
-      FROM series s JOIN tmax t ON t.event_type = s.event_type
-      WHERE s.rn > t.t
-    ),
-    preds AS (
-      SELECT g.event_type, 'seasonal_naive' AS model, g.h,
-             nv.p AS pred, g.actual
-      FROM targets g
-      JOIN tmax t ON t.event_type = g.event_type
-      JOIN naive nv ON nv.event_type = g.event_type
-                   AND nv.slot = (t.t + g.h) % {HW_PERIOD}
-      UNION ALL
-      SELECT g.event_type, 'holt_linear', g.h,
-             hl.lev + (g.h + 1) * hl.tr, g.actual
-      FROM targets g JOIN hlast hl ON hl.event_type = g.event_type
-      UNION ALL
-      SELECT g.event_type, 'holt_winters', g.h,
-             wl.lev + (g.h + 1) * wl.tr
-               + wl.s[CAST(g.h + 1 AS INT)], g.actual
-      FROM targets g JOIN wlast wl ON wl.event_type = g.event_type
-      UNION ALL
-      SELECT g.event_type, 'theta', g.h,
-             0.5 * tl.s
-               + 0.5 * (tab.aa + tab.bb * (t.t + g.h + 1)),
-             g.actual
-      FROM targets g
-      JOIN tlast tl ON tl.event_type = g.event_type
-      JOIN tab ON tab.event_type = g.event_type
-      JOIN tmax t ON t.event_type = g.event_type
-    ),
-    err AS (
-      SELECT model,
-             {sql_quantize('abs(pred - actual)', 6)} AS e
-      FROM preds
-    ),
-    mae AS (
-      SELECT model, CAST(count(*) AS BIGINT) AS n_forecasts,
-             {sql_quantize('avg(e)', 4)} AS mae
-      FROM err GROUP BY 1
-    )
-    SELECT a.model, a.n_forecasts, a.mae,
-           CAST(1 + sum(CASE WHEN (o.mae < a.mae)
-                 OR (o.mae = a.mae AND o.model < a.model)
-                THEN 1 ELSE 0 END) AS BIGINT) AS rank
-    FROM mae a CROSS JOIN mae o
-    GROUP BY 1, 2, 3
-"""
-
-
-ORACLE["events_cem_att"] = f"""
-    WITH grid AS (
-      SELECT user_id, epoch_us(date_trunc('hour', ts)) AS hour_us,
-             event_type,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS vq
-      FROM events
-    ),
-    b AS (
-      SELECT (CAST(min(hour_us) AS DOUBLE)
-              + CAST(max(hour_us) AS DOUBLE)) / 2.0 AS mid
-      FROM grid
-    ),
-    per_user AS (
-      SELECT user_id,
-             CAST(sum(CASE WHEN CAST(hour_us AS DOUBLE) < mid
-                  THEN 1 ELSE 0 END) AS BIGINT) AS n_pre,
-             CAST(sum(CASE WHEN CAST(hour_us AS DOUBLE) < mid
-                  AND event_type = 'error'
-                  THEN 1 ELSE 0 END) AS BIGINT) AS errors_pre,
-             CAST(sum(CASE WHEN CAST(hour_us AS DOUBLE) < mid
-                  AND event_type = 'signup'
-                  THEN 1 ELSE 0 END) AS BIGINT) AS signups_pre,
-             sum(CASE WHEN NOT (CAST(hour_us AS DOUBLE) < mid)
-                 AND event_type = 'purchase'
-                 THEN vq ELSE 0 END) AS y
-      FROM grid CROSS JOIN b
-      GROUP BY 1
-    ),
-    coarse AS (
-      SELECT (signups_pre >= {CEM_TREAT_MIN}) AS treat,
-             CAST(least(floor(n_pre / {float(CEM_ACT_BIN)}),
-                        {CEM_ACT_CAP}) AS BIGINT) AS a_bin,
-             CAST(least(floor(errors_pre / {float(CEM_ERR_BIN)}),
-                        {CEM_ACT_CAP}) AS BIGINT) AS t_bin,
-             y
-      FROM per_user WHERE n_pre > 0
-    ),
-    strata AS (
-      SELECT a_bin, t_bin,
-             CAST(sum(CASE WHEN treat THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_treat,
-             CAST(sum(CASE WHEN NOT treat THEN 1 ELSE 0 END)
-               AS BIGINT) AS n_ctrl,
-             sum(CASE WHEN treat THEN y ELSE 0 END) AS sy_t,
-             sum(CASE WHEN NOT treat THEN y ELSE 0 END) AS sy_c
-      FROM coarse GROUP BY 1, 2
-    ),
-    matched AS (
-      SELECT * FROM strata WHERE n_treat > 0 AND n_ctrl > 0
-    ),
-    totals AS (
-      SELECT CAST(sum(n_treat) AS BIGINT) AS tot_treat,
-             CAST(sum(n_ctrl) AS BIGINT) AS tot_ctrl
-      FROM strata
-    ),
-    att AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_strata,
-             CAST(sum(n_treat) AS BIGINT) AS t_m,
-             CAST(sum(n_ctrl) AS BIGINT) AS c_m,
-             sum(sy_t) AS syt,
-             sum(n_treat * CAST(floor(
-               (CAST(sy_c AS DOUBLE) / n_ctrl) * 1e6 + 0.5)
-               AS BIGINT)) AS cf_micro
-      FROM matched
-    )
-    SELECT 'stratum' AS scope, a_bin, t_bin, n_treat, n_ctrl,
-           {sql_quantize(
-               'CAST(sy_t AS DOUBLE) / n_treat / 100.0', 4)}
-             AS mean_treat,
-           {sql_quantize(
-               'CAST(sy_c AS DOUBLE) / n_ctrl / 100.0', 4)}
-             AS mean_ctrl,
-           {sql_quantize(
-               'CAST(sy_t AS DOUBLE) / n_treat / 100.0'
-               ' - CAST(sy_c AS DOUBLE) / n_ctrl / 100.0', 4)}
-             AS diff,
-           CAST(NULL AS BIGINT) AS n_strata,
-           CAST(NULL AS BIGINT) AS pruned_treat,
-           CAST(NULL AS BIGINT) AS pruned_ctrl
-    FROM matched
-    UNION ALL
-    SELECT 'att' AS scope,
-           CAST(NULL AS BIGINT) AS a_bin,
-           CAST(NULL AS BIGINT) AS t_bin,
-           t_m AS n_treat, c_m AS n_ctrl,
-           {sql_quantize('CAST(syt AS DOUBLE) / t_m / 100.0', 4)}
-             AS mean_treat,
-           {sql_quantize(
-               '(CAST(cf_micro AS DOUBLE) / 1e6) / t_m / 100.0',
-               4)} AS mean_ctrl,
-           {sql_quantize(
-               'CAST(syt AS DOUBLE) / t_m / 100.0'
-               ' - (CAST(cf_micro AS DOUBLE) / 1e6) / t_m / 100.0',
-               4)} AS diff,
-           n_strata,
-           tot_treat - t_m AS pruned_treat,
-           tot_ctrl - c_m AS pruned_ctrl
-    FROM att CROSS JOIN totals
 """
 
 
@@ -9413,127 +5618,6 @@ ORACLE["events_t_closeness"] = f"""
                ' * CAST(n_bins - 1 AS DOUBLE)) ELSE 0.0 END', 6)}
              > {T_CLOSENESS} AS breach
     FROM per
-"""
-
-
-ORACLE["events_iv_wald"] = f"""
-    WITH u AS (
-      SELECT user_id,
-             CAST(sum(CASE WHEN event_type = 'signup'
-                  THEN 1 ELSE 0 END) AS BIGINT) AS signups,
-             sum(CASE WHEN event_type = 'purchase'
-                 THEN CAST(floor(value * 100 + 0.5) AS BIGINT)
-                 ELSE 0 END) AS y
-      FROM events GROUP BY 1
-    ),
-    g AS (
-      SELECT (user_id % 2 = 0) AS z,
-             (signups >= {IV_TREAT_MIN}) AS d, y
-      FROM u
-    ),
-    r AS (
-      SELECT
-        CAST(sum(CASE WHEN z THEN 1 ELSE 0 END) AS BIGINT) AS n_z1,
-        CAST(sum(CASE WHEN NOT z THEN 1 ELSE 0 END) AS BIGINT)
-          AS n_z0,
-        CAST(sum(CASE WHEN z AND d THEN 1 ELSE 0 END) AS BIGINT)
-          AS d_z1,
-        CAST(sum(CASE WHEN NOT z AND d THEN 1 ELSE 0 END) AS BIGINT)
-          AS d_z0,
-        sum(CASE WHEN z THEN y ELSE 0 END) AS sy_z1,
-        sum(CASE WHEN NOT z THEN y ELSE 0 END) AS sy_z0
-      FROM g
-    ),
-    e AS (
-      SELECT *,
-             (CAST(sy_z1 AS DOUBLE) / n_z1
-              - CAST(sy_z0 AS DOUBLE) / n_z0) / 100.0 AS itt,
-             CAST(d_z1 AS DOUBLE) / n_z1
-              - CAST(d_z0 AS DOUBLE) / n_z0 AS fs
-      FROM r
-    ),
-    q AS (
-      SELECT *, {sql_quantize('fs', 6)} AS fsq FROM e
-    )
-    SELECT n_z1, n_z0,
-           {sql_quantize('CAST(d_z1 AS DOUBLE) / n_z1', 6)}
-             AS d_rate_z1,
-           {sql_quantize('CAST(d_z0 AS DOUBLE) / n_z0', 6)}
-             AS d_rate_z0,
-           {sql_quantize('itt', 4)} AS itt,
-           fsq AS first_stage,
-           abs(fsq) < {IV_FS_MIN} AS weak_instrument,
-           CASE WHEN NOT (abs(fsq) < {IV_FS_MIN})
-             THEN {sql_quantize('itt / fs', 4)} END AS wald_late
-    FROM q
-"""
-
-_ITS_SIDE = """
-        CAST(sum(CASE WHEN {c} THEN 1 ELSE 0 END) AS BIGINT)
-          AS n_{s},
-        sum(CASE WHEN {c} THEN x ELSE 0 END) AS sx_{s},
-        sum(CASE WHEN {c} THEN y ELSE 0 END) AS sy_{s},
-        sum(CASE WHEN {c} THEN x * x ELSE 0 END) AS sxx_{s},
-        sum(CASE WHEN {c} THEN x * y ELSE 0 END) AS sxy_{s}"""
-
-_ITS_FIT = (
-    "(CAST(n_{s} AS DOUBLE) * CAST(sxy_{s} AS DOUBLE)"
-    " - CAST(sx_{s} AS DOUBLE) * CAST(sy_{s} AS DOUBLE))"
-    " / (CAST(n_{s} AS DOUBLE) * CAST(sxx_{s} AS DOUBLE)"
-    " - CAST(sx_{s} AS DOUBLE) * CAST(sx_{s} AS DOUBLE))"
-)
-_ITS_DEN = (
-    "(CAST(n_{s} AS DOUBLE) * CAST(sxx_{s} AS DOUBLE)"
-    " - CAST(sx_{s} AS DOUBLE) * CAST(sx_{s} AS DOUBLE))"
-)
-_ITS_LVL = (
-    "(CAST(sy_{s} AS DOUBLE) - (" + _ITS_FIT + ")"
-    " * CAST(sx_{s} AS DOUBLE)) / CAST(n_{s} AS DOUBLE)"
-)
-
-ORACLE["events_interrupted_ts"] = f"""
-    WITH cells AS (
-      SELECT epoch_us(date_trunc('hour', ts)) AS hour_us,
-             CAST(count(*) AS BIGINT) AS y
-      FROM events GROUP BY 1
-    ),
-    b AS (SELECT min(hour_us) AS mn, max(hour_us) AS mx FROM cells),
-    g AS (
-      SELECT y,
-             CAST((hour_us - mn) / 3600000000 AS BIGINT) AS k,
-             CAST(floor(CAST((mx - mn) / 3600000000 AS BIGINT)
-               / 2.0) AS BIGINT) AS kc
-      FROM cells CROSS JOIN b
-    ),
-    gx AS (
-      SELECT y, (k - kc) AS x, (k >= kc) AS post FROM g
-    ),
-    m AS (
-      SELECT{_ITS_SIDE.format(c='NOT post', s='pre')},
-      {_ITS_SIDE.format(c='post', s='post')}
-      FROM gx
-    ),
-    f AS (
-      SELECT n_pre, n_post,
-        CASE WHEN {_ITS_DEN.format(s='pre')} > 0
-          THEN {_ITS_FIT.format(s='pre')} END AS slope_pre,
-        CASE WHEN {_ITS_DEN.format(s='post')} > 0
-          THEN {_ITS_FIT.format(s='post')} END AS slope_post,
-        CASE WHEN {_ITS_DEN.format(s='pre')} > 0
-          THEN {_ITS_LVL.format(s='pre')} END AS level_pre,
-        CASE WHEN {_ITS_DEN.format(s='post')} > 0
-          THEN {_ITS_LVL.format(s='post')} END AS level_post
-      FROM m
-    )
-    SELECT n_pre AS n_pre_hours, n_post AS n_post_hours,
-           {sql_quantize('slope_pre', 4)} AS slope_pre,
-           {sql_quantize('slope_post', 4)} AS slope_post,
-           {sql_quantize('slope_post - slope_pre', 4)}
-             AS slope_change,
-           {sql_quantize('level_pre', 4)} AS level_pre_at_cut,
-           {sql_quantize('level_post', 4)} AS level_post_at_cut,
-           {sql_quantize('level_post - level_pre', 4)} AS level_jump
-    FROM f
 """
 
 

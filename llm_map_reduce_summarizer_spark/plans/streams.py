@@ -578,7 +578,6 @@ def stream_topk_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cms_topk_probe(hashed, cells)
 
 
-
 def stream_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming per-source admission cap — crawl governance AT INGEST
     (the arrival-order twin of batch ``corpus_domain_cap``'s
@@ -596,7 +595,6 @@ def stream_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(
         domain_cap_stream(docs, DOMAIN_CAP), output_mode="update"
     )
-
 
 
 def stream_sample_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -634,7 +632,6 @@ def stream_sample_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
 def stream_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming latest-event-per-entity snapshot — the SCD/upsert
     collapse running AT INGEST: complete-mode struct-max per user, so
@@ -668,60 +665,6 @@ def stream_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("st.event_type").alias("event_type"),
         F.col("st.value").alias("value"),
     )
-
-
-
-def stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming marketing attribution: the purchase×prior-view
-    interval join runs AT INGEST (watermark-evicted state — the
-    lookback window of views per user, never the stream), and the
-    first/last/count collapse per purchase is a batch aggregation
-    over the drained pair sink. Drain == batch `events_attribution`,
-    whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from ..streaming.stream_ops import attribution_pairs_stream
-    from ..sources.tables import load_table
-
-    ev = read_events_stream(spark, sf_dir)
-    pairs = run_available_now(
-        attribution_pairs_stream(ev), output_mode="append"
-    )
-    touched = pairs.groupBy("purchase_id").agg(
-        F.min(F.unix_micros("view_ts")).alias("first_view_ts_us"),
-        F.max(F.unix_micros("view_ts")).alias("last_view_ts_us"),
-        F.count(F.lit(1)).cast("long").alias("n_touches"),
-    )
-    buys = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id"),
-            "user_id",
-            F.unix_micros("ts").alias("ts_us"),
-            "value",
-        )
-    )
-    return (
-        buys.join(
-            touched.withColumnRenamed("purchase_id", "event_id"),
-            "event_id",
-            "left",
-        )
-        .select(
-            "event_id",
-            "user_id",
-            "ts_us",
-            "value",
-            "first_view_ts_us",
-            "last_view_ts_us",
-            F.coalesce("n_touches", F.lit(0)).cast("long").alias(
-                "n_touches"
-            ),
-        )
-    )
-
 
 
 def stream_bot_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -978,29 +921,6 @@ def stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cusum_from_hourly(hourly)
 
 
-def stream_peak_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming traffic-peak detection: the per-type hourly series
-    accumulates AT INGEST (the `stream_hourly` calendar-bounded
-    tumbling-window state — state = hours × types, never stream
-    length) and the strict-local-max + 2σ scan runs post-drain on
-    the hours-bounded snapshot (`events.peaks_from_hourly`).
-    Drain == batch `events_peak_hours`, whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from ..streaming.stream_ops import hourly_counts
-    from .events import peaks_from_hourly
-
-    ev = read_events_stream(spark, sf_dir)
-    snap = run_available_now(hourly_counts(ev), output_mode="complete")
-    hourly = snap.select(
-        "event_type",
-        "hour",
-        F.col("n_events").cast("long").alias("n_events"),
-    )
-    return peaks_from_hourly(hourly)
-
-
 def stream_hour_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming hour-of-day concentration: the same ingest-time
     hourly state, re-binned post-drain to the 24-hour clock (hourly
@@ -1115,30 +1035,6 @@ def stream_funnel_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     return funnel_ci_from_counts(stream_funnel(spark, sf_dir))
 
 
-def stream_funnel_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming stage-latency profile: the funnel stage machine's
-    per-user min-progression times (3 scalars of state) drain to the
-    SAME times table as the batch conditional-min chain, and the
-    shared percentile scan runs post-drain. Drain == batch
-    `events_funnel_latency`, whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from ..streaming.stream_ops import funnel_stages_stream
-    from .events import funnel_latency_from_times
-
-    ev = read_events_stream(spark, sf_dir)
-    drained = run_available_now(
-        funnel_stages_stream(ev), output_mode="update"
-    )
-    times = drained.groupBy("user_id").agg(
-        F.max("t_view").alias("t_view"),
-        F.max("t_click").alias("t_click"),
-        F.max("t_purchase").alias("t_purchase"),
-    ).filter(F.col("t_view").isNotNull())
-    return funnel_latency_from_times(times)
-
-
 def stream_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming two-way decomposition: the hourly tumbling state
     accumulates AT INGEST (type cells sum to the overall series
@@ -1166,8 +1062,6 @@ def stream_hourly_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     z-score runs post-drain on the bounded snapshot. Drain == batch
     `events_hourly_anomaly`, whose oracle it shares.
     """
-    from pyspark.sql import functions as F
-
     from ..streaming.stream_ops import hourly_counts
     from .events import trailing_anomaly_from_hourly
 
@@ -1352,26 +1246,6 @@ def stream_dp_user_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dp_user_release_from_counts(snap)
 
 
-def stream_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming spectral seasonality scan: the hourly tumbling state
-    accumulates AT INGEST (type cells sum to the overall series
-    post-drain — exact) and the Fourier sums run on the
-    hours-bounded snapshot (`events.periodogram_from_hourly`).
-    Drain == batch `events_periodogram`, whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from ..streaming.stream_ops import hourly_counts
-    from .events import periodogram_from_hourly
-
-    ev = read_events_stream(spark, sf_dir)
-    snap = run_available_now(hourly_counts(ev), output_mode="complete")
-    hourly = snap.groupBy("hour").agg(
-        F.sum("n_events").cast("long").alias("n")
-    )
-    return periodogram_from_hourly(hourly)
-
-
 def stream_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming activity-inequality monitor: per-user event counts
     accumulate AT INGEST (one counter per active user — the
@@ -1392,9 +1266,9 @@ def stream_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def stream_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming acquisition split: activity dedups to (day, user)
-    pair state AT INGEST (the `stream_growth_accounting` state) and
-    the new-vs-returning scan runs post-drain. Drain == batch
-    `events_new_vs_returning`, whose oracle it shares.
+    pair state AT INGEST and the new-vs-returning scan runs
+    post-drain. Drain == batch `events_new_vs_returning`, whose oracle
+    it shares.
     """
     from pyspark.sql import functions as F
 
@@ -1560,26 +1434,6 @@ def stream_incident_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     return incidents_from_hourly(hourly)
 
 
-def stream_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming growth ledger: activity dedups to (day, user) pairs
-    AT INGEST (state = active user-days — entity×calendar-bounded,
-    mergeable counts so any micro-batch split drains identically);
-    the new/retained/resurrected/churned scan runs post-drain on the
-    bounded pair snapshot. Drain == batch `events_growth_accounting`,
-    whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from .events import growth_from_pairs
-
-    ev = read_events_stream(spark, sf_dir)
-    pairs = ev.groupBy(
-        F.date_trunc("day", F.col("ts")).alias("day"), "user_id"
-    ).agg(F.count(F.lit(1)).cast("long").alias("n"))
-    snap = run_available_now(pairs, output_mode="complete")
-    return growth_from_pairs(snap.select("day", "user_id"))
-
-
 def stream_user_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming behavioral-transition mining: per-user last-event
     state (3 scalars per active user — never the history) emits each
@@ -1715,34 +1569,6 @@ def stream_emb_norm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return emb_norm_audit_from_cells(snap)
 
 
-def stream_iv_wald(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming Wald IV estimator: per-user (signups, purchase
-    cents) fold AT INGEST (the user-bounded mergeable state class)
-    and the two-arm ratio evaluates post-drain via the exact batch
-    computation (`events.iv_wald_from_users`). Drain == batch
-    `events_iv_wald`, whose oracle it shares."""
-    from .events import iv_user_cells, iv_wald_from_users
-
-    ev = read_events_stream(spark, sf_dir)
-    snap = run_available_now(
-        iv_user_cells(ev), output_mode="complete"
-    )
-    return iv_wald_from_users(snap)
-
-
-def stream_interrupted_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming interrupted-time-series: hourly counts accumulate
-    AT INGEST (the calendar-bounded `stream_hourly` state class) and
-    the segmented regression evaluates post-drain via the exact
-    batch computation (`events.its_from_cells`). Drain == batch
-    `events_interrupted_ts`, whose oracle it shares."""
-    from .events import its_cells, its_from_cells
-
-    ev = read_events_stream(spark, sf_dir)
-    snap = run_available_now(its_cells(ev), output_mode="complete")
-    return its_from_cells(snap)
-
-
 def stream_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming t-closeness monitor: the QI × value-bin cells
     accumulate AT INGEST (state = the QI domain × the value grid —
@@ -1813,48 +1639,6 @@ def stream_uptime(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("covered_us").cast("double") / span.cast("double"),
             6,
         ).alias("uptime_share"),
-    )
-
-
-def stream_time_weighted_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming time-weighted value: the custom stateful fold
-    (`streaming.stream_ops.time_weighted_stream`) closes each hold
-    interval as its successor arrives — exact integer μs × cents —
-    and the drain's latest row per user feeds the same final division
-    as the batch query. Drain == batch `events_time_weighted_value`,
-    whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from ..functions.text import quantize
-    from ..streaming.stream_ops import time_weighted_stream
-
-    ev = read_events_stream(spark, sf_dir)
-    updates = run_available_now(
-        time_weighted_stream(ev), output_mode="update"
-    )
-    latest = (
-        updates.groupBy("user_id")
-        .agg(
-            F.max(
-                F.struct("n_intervals", "total_us", "wsum")
-            ).alias("s")
-        )
-        .select(
-            "user_id",
-            F.col("s.n_intervals").alias("n_intervals"),
-            F.col("s.total_us").alias("total_us"),
-            F.col("s.wsum").alias("wsum"),
-        )
-    )
-    tw = F.col("wsum").cast("double") / F.col("total_us") / 100.0
-    return latest.select(
-        "user_id",
-        "n_intervals",
-        "total_us",
-        F.when(F.col("total_us") > 0, quantize(tw, 4)).alias(
-            "tw_avg_value"
-        ),
     )
 
 
@@ -1951,89 +1735,6 @@ def stream_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stickiness_from_act(act)
 
 
-def stream_value_kruskal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming Kruskal-Wallis: the (value-grid-cell, type) counts
-    accumulate AT INGEST — a NEW bounded-state class: state is
-    bounded by the VALUE GRID × types (the domain of the measure),
-    not by stream length or user count — and the rank test runs
-    post-drain on that bounded snapshot via the exact batch
-    computation (`events.kruskal_from_cells`). Drain == batch
-    `events_value_kruskal`, whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from .events import kruskal_from_cells
-
-    ev = read_events_stream(spark, sf_dir)
-    agg = (
-        ev.withWatermark("ts", "1 day")
-        .groupBy(
-            F.floor(F.col("value") * 100 + 0.5)
-            .cast("long")
-            .alias("vq"),
-            "event_type",
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("ng"))
-    )
-    cell = run_available_now(agg, output_mode="complete")
-    return kruskal_from_cells(cell)
-
-
-def stream_value_levene(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming Brown-Forsythe: the identical value-grid-bounded
-    (cell, type) ingest state as `stream_value_kruskal` — one
-    bounded-state accumulation serves BOTH rank and variance tests —
-    drained into the exact batch computation
-    (`events.levene_from_cells`). Drain == batch
-    `events_value_levene`, whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from .events import levene_from_cells
-
-    ev = read_events_stream(spark, sf_dir)
-    agg = (
-        ev.withWatermark("ts", "1 day")
-        .groupBy(
-            F.floor(F.col("value") * 100 + 0.5)
-            .cast("long")
-            .alias("vq"),
-            "event_type",
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("ng"))
-    )
-    cell = run_available_now(agg, output_mode="complete")
-    return levene_from_cells(cell)
-
-
-def stream_parallel_trends(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming event-study: the same calendar-bounded (treat, day)
-    moment cells as `stream_sequential_msprt` accumulate at ingest,
-    and the pre-period-centered gap trajectory evaluates post-drain
-    (`events.parallel_trends_from_cells`). Drain == batch
-    `events_parallel_trends`, whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from .events import parallel_trends_from_cells
-
-    ev = read_events_stream(spark, sf_dir)
-    grid = ev.select(
-        (F.col("user_id") % 2 == 0).alias("treat"),
-        F.unix_micros(F.date_trunc("day", F.col("ts"))).alias("day_us"),
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("vq"),
-    )
-    cells = grid.groupBy("treat", "day_us").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(F.col("vq").cast("decimal(38,0)")).alias("sv"),
-        F.sum((F.col("vq") * F.col("vq")).cast("decimal(38,0)")).alias(
-            "svv"
-        ),
-    )
-    snap = run_available_now(cells, output_mode="complete")
-    return parallel_trends_from_cells(snap)
-
-
 def stream_shard_rendezvous(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming HRW shard routing: the assignment is a pure function
     of doc_id (S+1 md5 draws + one array argmax), so the streaming
@@ -2063,89 +1764,6 @@ def stream_shard_rendezvous(spark: SparkSession, sf_dir: str) -> DataFrame:
         (keys[HRW_SHARDS] > best["k"]).alias("moves_on_scale_out"),
     )
     return run_available_now(routed, output_mode="append")
-
-
-def stream_anomaly_injection_eval(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Streaming twin of the detector ground-truth eval: the hourly
-    count cells accumulate at ingest (the `stream_hourly` bound) and
-    the deterministic injection + production ensemble + scoring all
-    run post-drain — rerunning the eval on every drain is exactly how
-    a monitoring stack keeps its detector SLA current. Drain == batch
-    `events_anomaly_injection_eval`, whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from .events import (
-        INJECT_ADD,
-        INJECT_EVERY,
-        INJECT_MULT,
-        ensemble_from_hourly,
-    )
-    from ..functions.text import quantize
-
-    ev = read_events_stream(spark, sf_dir)
-    hourly = ev.groupBy(
-        F.date_trunc("hour", F.col("ts")).alias("hour")
-    ).agg(F.count(F.lit(1)).cast("long").alias("n"))
-    snap = run_available_now(hourly, output_mode="complete")
-    hidx = (F.unix_micros("hour") / 3_600_000_000).cast("long")
-    inj = (hidx % INJECT_EVERY) == 0
-    injected = snap.select(
-        "hour",
-        F.when(inj, F.col("n") * INJECT_MULT + INJECT_ADD)
-        .otherwise(F.col("n"))
-        .cast("long")
-        .alias("n"),
-        inj.alias("inj"),
-    )
-    # drained-relation rule: rename the self-lineage join key
-    flags = ensemble_from_hourly(injected.select("hour", "n")).select(
-        F.col("hour").alias("f_hour"), "votes"
-    )
-    m = injected.select("hour", "inj").join(
-        flags, F.col("f_hour") == F.col("hour"), "left"
-    )
-    votes = F.coalesce(F.col("votes"), F.lit(0))
-    per = []
-    for k in (1, 2, 3):
-        det = votes >= k
-        agg = m.agg(
-            F.lit(k).cast("long").alias("min_votes"),
-            F.sum(F.when(F.col("inj"), 1).otherwise(0))
-            .cast("long")
-            .alias("n_injected"),
-            F.sum(F.when(F.col("inj") & det, 1).otherwise(0))
-            .cast("long")
-            .alias("tp"),
-            F.sum(F.when(~F.col("inj") & det, 1).otherwise(0))
-            .cast("long")
-            .alias("fp"),
-        )
-        tp = F.col("tp").cast("double")
-        prec = F.try_divide(tp, F.col("tp") + F.col("fp"))
-        rec = F.try_divide(tp, F.col("n_injected"))
-        per.append(
-            agg.select(
-                "min_votes",
-                "n_injected",
-                "tp",
-                "fp",
-                (F.col("n_injected") - F.col("tp"))
-                .cast("long")
-                .alias("fn"),
-                quantize(prec, 6).alias("precision"),
-                quantize(rec, 6).alias("recall"),
-                quantize(
-                    F.try_divide(2.0 * prec * rec, prec + rec), 6
-                ).alias("f1"),
-            )
-        )
-    out = per[0]
-    for frame in per[1:]:
-        out = out.unionByName(frame)
-    return out
 
 
 def stream_psi_injection_eval(
@@ -2208,36 +1826,6 @@ def stream_psi_injection_eval(
     return out
 
 
-def stream_sequential_msprt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming always-valid sequential test: the (treat, day)
-    moment cells accumulate at ingest (calendar-bounded) and the
-    cumulative mSPRT trajectory evaluates post-drain via the exact
-    batch computation (`events.msprt_from_cells`) — the natural home
-    for an ALWAYS-VALID test is precisely a stream you peek at on
-    every drain. Drain == batch `events_sequential_msprt`, whose
-    oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from .events import msprt_from_cells
-
-    ev = read_events_stream(spark, sf_dir)
-    grid = ev.select(
-        (F.col("user_id") % 2 == 0).alias("treat"),
-        F.unix_micros(F.date_trunc("day", F.col("ts"))).alias("day_us"),
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("vq"),
-    )
-    cells = grid.groupBy("treat", "day_us").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(F.col("vq").cast("decimal(38,0)")).alias("sv"),
-        F.sum((F.col("vq") * F.col("vq")).cast("decimal(38,0)")).alias(
-            "svv"
-        ),
-    )
-    snap = run_available_now(cells, output_mode="complete")
-    return msprt_from_cells(snap)
-
-
 def stream_dp_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming DP median: the dollar-bin count state is bounded by
     the value range, and the exponential-mechanism release (keyed
@@ -2288,57 +1876,6 @@ def stream_dp_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def stream_bootstrap_diff_ci(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Streaming Poisson-bootstrap CI: the per-user value total is the
-    only state (the `stream_dau` entity bound) — replicate weights are
-    a pure function of (user, replicate), so the whole bootstrap
-    evaluates post-drain via the exact batch fan-out
-    (`events.bootstrap_ci_from_users`). Drain == batch
-    `events_bootstrap_diff_ci`, whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from .events import bootstrap_ci_from_users
-
-    ev = read_events_stream(spark, sf_dir)
-    per_user = ev.groupBy("user_id").agg(
-        F.sum(F.floor(F.col("value") * 100 + 0.5).cast("decimal(38,0)"))
-        .alias("yd")
-    )
-    snap = run_available_now(per_user, output_mode="complete")
-    return bootstrap_ci_from_users(
-        snap.select("user_id", F.col("yd").cast("double").alias("y"))
-    )
-
-
-def stream_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming CUPED: the per-(user, day) value cells accumulate at
-    ingest (exact decimal cents — the `stream_growth_accounting`
-    user-day state bound) and the pre/post split + six-moment fold
-    run post-drain via the exact batch computation
-    (`events.cuped_from_cells`). Drain == batch `events_cuped`,
-    whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from .events import cuped_from_cells
-
-    ev = read_events_stream(spark, sf_dir)
-    cells = ev.groupBy(
-        (F.col("user_id") % 2 == 0).alias("treat"),
-        F.col("user_id"),
-        F.unix_micros(F.date_trunc("day", F.col("ts"))).alias("day_us"),
-    ).agg(
-        F.sum(
-            F.floor(F.col("value") * 100 + 0.5).cast("decimal(38,0)")
-        ).alias("sv")
-    )
-    snap = run_available_now(cells, output_mode="complete")
-    return cuped_from_cells(snap)
-
-
 def stream_dp_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming DP vocabulary release: each arriving doc's top-k term
     votes are a STATELESS per-row extraction (docs arrive whole), the
@@ -2349,7 +1886,6 @@ def stream_dp_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
-    from ..functions.hashing import words as _words
     from .documents import DP_VOCAB_CLIP, DP_VOCAB_EPS, DP_VOCAB_THRESHOLD
     from .events import dp_noise_col
 
@@ -2397,29 +1933,6 @@ def stream_dp_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("dp_df") >= DP_VOCAB_THRESHOLD)
     )
-
-
-def stream_cmh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming Cochran–Mantel–Haenszel: the per-user state is TWO
-    mergeable minima accumulated at ingest — first event ts and first
-    PURCHASE ts (the `stream_conversion_ztest` state, reused verbatim)
-    — and the stratified 2×2 fold evaluates post-drain via the exact
-    batch computation (`events.cmh_from_users`). Drain == batch
-    `events_cmh`, whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from .events import cmh_from_users
-
-    ev = read_events_stream(spark, sf_dir)
-    per_user = ev.groupBy("user_id").agg(
-        F.min("ts").alias("first_ts"),
-        F.min(
-            F.when(F.col("event_type") == "purchase", F.col("ts"))
-        ).alias("first_purchase"),
-    )
-    snap = run_available_now(per_user, output_mode="complete")
-    return cmh_from_users(snap)
 
 
 def stream_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2476,29 +1989,6 @@ def stream_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hw_from_cells(snap)
 
 
-def stream_forecast_model_compare(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Streaming model selection: the (event_type, hour) count cells
-    accumulate at ingest and the four-model held-out backtest runs
-    post-drain (`events.model_compare_from_cells`) — re-ranking the
-    forecasters on every drain is how a capacity plan keeps its model
-    choice current. Drain == batch `events_forecast_model_compare`,
-    whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from .events import model_compare_from_cells
-
-    ev = read_events_stream(spark, sf_dir)
-    cells = ev.groupBy(
-        "event_type",
-        F.unix_micros(F.date_trunc("hour", F.col("ts"))).alias("hour_us"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    snap = run_available_now(cells, output_mode="complete")
-    return model_compare_from_cells(snap)
-
-
 def stream_dp_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming differentially-private hourly release: the count
     state is the plain (hour, event_type) cell table — bounded by
@@ -2520,63 +2010,6 @@ def stream_dp_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     snap = run_available_now(cells, output_mode="complete")
     return dp_release_from_cells(snap)
-
-
-def stream_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming diff-in-diffs: the (treat, hour) moment cells
-    (exact decimal n/Σv/Σv² on the cent grid) accumulate AT INGEST —
-    state bounded by calendar-hours × 2 arms — and the 2×2 estimator
-    (period split at the drained hour-range midpoint) evaluates
-    post-drain via the exact batch computation
-    (`events.did_from_cells`). Drain == batch
-    `events_diff_in_diff`, whose oracle it shares.
-    """
-    from .events import did_cells, did_from_cells
-
-    ev = read_events_stream(spark, sf_dir)
-    snap = run_available_now(did_cells(ev), output_mode="complete")
-    return did_from_cells(snap)
-
-
-def stream_ab_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming Welch t-test: the six regression moments (n, Σv,
-    Σv² per group) accumulate AT INGEST in ONE global streaming
-    aggregate — O(1) state regardless of stream length, the textbook
-    mergeable-statistic shape — and the test evaluates post-drain via
-    the exact batch computation (`events.welch_from_stats`). Drain ==
-    batch `events_ab_welch`, whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from .events import welch_from_stats
-
-    ev = read_events_stream(spark, sf_dir)
-    grid = ev.filter(
-        F.col("event_type").isin("purchase", "click")
-    ).select(
-        (F.col("event_type") == "purchase").alias("is_a"),
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("vq"),
-    )
-    one_a = F.when(F.col("is_a"), 1).otherwise(0)
-    one_b = F.when(F.col("is_a"), 0).otherwise(1)
-    agg = grid.agg(
-        F.sum(one_a).cast("long").alias("n_a"),
-        F.sum(one_b).cast("long").alias("n_b"),
-        F.sum((one_a * F.col("vq")).cast("decimal(38,0)"))
-        .cast("double")
-        .alias("sv_a"),
-        F.sum((one_b * F.col("vq")).cast("decimal(38,0)"))
-        .cast("double")
-        .alias("sv_b"),
-        F.sum((one_a * F.col("vq") * F.col("vq")).cast("decimal(38,0)"))
-        .cast("double")
-        .alias("svv_a"),
-        F.sum((one_b * F.col("vq") * F.col("vq")).cast("decimal(38,0)"))
-        .cast("double")
-        .alias("svv_b"),
-    )
-    stats = run_available_now(agg, output_mode="complete")
-    return welch_from_stats(stats)
 
 
 def stream_conversion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2878,23 +2311,15 @@ def stream_token_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES = {
     "stream_dp_hourly": stream_dp_hourly,
-    "stream_diff_in_diff": stream_diff_in_diff,
-    "stream_cmh": stream_cmh,
     "stream_holt_linear": stream_holt_linear,
     "stream_mttr": stream_mttr,
     "stream_holt_winters": stream_holt_winters,
-    "stream_forecast_model_compare": stream_forecast_model_compare,
     "stream_absorption": stream_absorption,
     "stream_dp_user_total": stream_dp_user_total,
-    "stream_cuped": stream_cuped,
     "stream_dp_vocab": stream_dp_vocab,
-    "stream_sequential_msprt": stream_sequential_msprt,
-    "stream_anomaly_injection_eval": stream_anomaly_injection_eval,
     "stream_psi_injection_eval": stream_psi_injection_eval,
     "stream_shard_rendezvous": stream_shard_rendezvous,
-    "stream_parallel_trends": stream_parallel_trends,
     "stream_dp_median": stream_dp_median,
-    "stream_bootstrap_diff_ci": stream_bootstrap_diff_ci,
     "stream_token_histogram": stream_token_histogram,
     "stream_ngrams_topk": stream_ngrams_topk,
     "stream_yule_k": stream_yule_k,
@@ -2907,10 +2332,7 @@ QUERIES = {
     "stream_kn_bigram_lm": stream_kn_bigram_lm,
     "stream_bpe_pair_census": stream_bpe_pair_census,
     "stream_charclass_mix": stream_charclass_mix,
-    "stream_ab_welch": stream_ab_welch,
     "stream_conversion_ztest": stream_conversion_ztest,
-    "stream_value_kruskal": stream_value_kruskal,
-    "stream_value_levene": stream_value_levene,
     "stream_stickiness": stream_stickiness,
     "stream_session_stats": stream_session_stats,
     "stream_error_budget": stream_error_budget,
@@ -2920,7 +2342,6 @@ QUERIES = {
     "stream_ab_design": stream_ab_design,
     "stream_ab_srm": stream_ab_srm,
     "stream_funnel_ci": stream_funnel_ci,
-    "stream_funnel_latency": stream_funnel_latency,
     "stream_seasonal_decompose": stream_seasonal_decompose,
     "stream_hourly_anomaly": stream_hourly_anomaly,
     "stream_anomaly_residual": stream_anomaly_residual,
@@ -2930,7 +2351,6 @@ QUERIES = {
     "stream_user_activity_quantiles":
         stream_user_activity_quantiles,
     "stream_churn_half_life": stream_churn_half_life,
-    "stream_periodogram": stream_periodogram,
     "stream_gini": stream_gini,
     "stream_new_vs_returning": stream_new_vs_returning,
     "stream_hourly_profile": stream_hourly_profile,
@@ -2940,22 +2360,17 @@ QUERIES = {
     "stream_concurrency_curve": stream_concurrency_curve,
     "stream_adoption_curve": stream_adoption_curve,
     "stream_incident_table": stream_incident_table,
-    "stream_growth_accounting": stream_growth_accounting,
     "stream_user_paths": stream_user_paths,
     "stream_type_share_trend": stream_type_share_trend,
     "stream_l_diversity": stream_l_diversity,
     "stream_t_closeness": stream_t_closeness,
-    "stream_iv_wald": stream_iv_wald,
     "stream_emb_norm_audit": stream_emb_norm_audit,
-    "stream_interrupted_ts": stream_interrupted_ts,
     "stream_coverage": stream_coverage,
-    "stream_peak_hours": stream_peak_hours,
     "stream_hour_concentration": stream_hour_concentration,
     "stream_cusum": stream_cusum,
     "stream_anomaly_mad": stream_anomaly_mad,
     "stream_sen_slope": stream_sen_slope,
     "stream_uptime": stream_uptime,
-    "stream_time_weighted_value": stream_time_weighted_value,
     "stream_mann_kendall": stream_mann_kendall,
     "stream_hourly": stream_hourly,
     "stream_sessionize": stream_sessionize,
@@ -2976,7 +2391,6 @@ QUERIES = {
     "stream_domain_cap": stream_domain_cap,
     "stream_sample_fixed": stream_sample_fixed,
     "stream_latest_state": stream_latest_state,
-    "stream_attribution": stream_attribution,
     "stream_bot_gate": stream_bot_gate,
     "stream_pack": stream_pack,
     "stream_topk_cms": stream_topk_cms,
@@ -2988,30 +2402,17 @@ QUERIES = {
 
 ORACLE = {
     "stream_dp_hourly": _EVENTS_ORACLE["events_dp_hourly"],
-    "stream_diff_in_diff": _EVENTS_ORACLE["events_diff_in_diff"],
-    "stream_cmh": _EVENTS_ORACLE["events_cmh"],
     "stream_holt_linear": _EVENTS_ORACLE["events_holt_linear"],
     "stream_mttr": _EVENTS_ORACLE["events_mttr"],
     "stream_holt_winters": _EVENTS_ORACLE["events_holt_winters"],
-    "stream_forecast_model_compare":
-        _EVENTS_ORACLE["events_forecast_model_compare"],
     "stream_absorption": _EVENTS_ORACLE["events_absorption"],
     "stream_dp_user_total": _EVENTS_ORACLE["events_dp_user_total"],
-    "stream_cuped": _EVENTS_ORACLE["events_cuped"],
     "stream_dp_vocab": _DOCS_ORACLE["corpus_dp_vocab"],
-    "stream_sequential_msprt":
-        _EVENTS_ORACLE["events_sequential_msprt"],
-    "stream_anomaly_injection_eval":
-        _EVENTS_ORACLE["events_anomaly_injection_eval"],
     "stream_psi_injection_eval":
         _EVENTS_ORACLE["events_psi_injection_eval"],
     "stream_shard_rendezvous":
         _DOCS_ORACLE["corpus_shard_rendezvous"],
-    "stream_parallel_trends":
-        _EVENTS_ORACLE["events_parallel_trends"],
     "stream_dp_median": _EVENTS_ORACLE["events_dp_median"],
-    "stream_bootstrap_diff_ci":
-        _EVENTS_ORACLE["events_bootstrap_diff_ci"],
     "stream_ewma_control": _EVENTS_ORACLE["events_ewma_control"],
     "stream_anomaly_ensemble":
         _EVENTS_ORACLE["events_anomaly_ensemble"],
@@ -3020,8 +2421,6 @@ ORACLE = {
     "stream_ab_design": _EVENTS_ORACLE["events_ab_design"],
     "stream_ab_srm": _EVENTS_ORACLE["events_ab_srm"],
     "stream_funnel_ci": _EVENTS_ORACLE["events_funnel_ci"],
-    "stream_funnel_latency":
-        _EVENTS_ORACLE["events_funnel_latency"],
     "stream_seasonal_decompose":
         _EVENTS_ORACLE["events_seasonal_decompose"],
     "stream_hourly_anomaly":
@@ -3038,8 +2437,6 @@ ORACLE = {
         _EVENTS_ORACLE["events_user_activity_quantiles"],
     "stream_churn_half_life":
         _EVENTS_ORACLE["events_churn_half_life"],
-    "stream_periodogram":
-        _EVENTS_ORACLE["events_periodogram"],
     "stream_gini": _EVENTS_ORACLE["events_gini"],
     "stream_new_vs_returning":
         _EVENTS_ORACLE["events_new_vs_returning"],
@@ -3055,32 +2452,23 @@ ORACLE = {
         _EVENTS_ORACLE["events_adoption_curve"],
     "stream_incident_table":
         _EVENTS_ORACLE["events_incident_table"],
-    "stream_growth_accounting":
-        _EVENTS_ORACLE["events_growth_accounting"],
     "stream_user_paths": _EVENTS_ORACLE["events_user_paths"],
     "stream_type_share_trend":
         _EVENTS_ORACLE["events_type_share_trend"],
     "stream_l_diversity": _EVENTS_ORACLE["events_l_diversity"],
     "stream_t_closeness": _EVENTS_ORACLE["events_t_closeness"],
-    "stream_iv_wald": _EVENTS_ORACLE["events_iv_wald"],
     "stream_emb_norm_audit": _DOCS_ORACLE["emb_norm_audit"],
-    "stream_interrupted_ts": _EVENTS_ORACLE["events_interrupted_ts"],
     "stream_coverage": _EVENTS_ORACLE["events_coverage"],
-    "stream_peak_hours": _EVENTS_ORACLE["events_peak_hours"],
     "stream_hour_concentration":
         _EVENTS_ORACLE["events_hour_concentration"],
     "stream_cusum": _EVENTS_ORACLE["events_cusum"],
     "stream_anomaly_mad": _EVENTS_ORACLE["events_anomaly_mad"],
     "stream_sen_slope": _EVENTS_ORACLE["events_sen_slope"],
     "stream_uptime": _EVENTS_ORACLE["events_uptime"],
-    "stream_time_weighted_value": _EVENTS_ORACLE["events_time_weighted_value"],
     "stream_mann_kendall": _EVENTS_ORACLE["events_mann_kendall"],
     "stream_error_budget": _EVENTS_ORACLE["events_error_budget"],
     "stream_session_stats": _EVENTS_ORACLE["events_session_stats"],
     "stream_stickiness": _EVENTS_ORACLE["events_stickiness"],
-    "stream_value_kruskal": _EVENTS_ORACLE["events_value_kruskal"],
-    "stream_value_levene": _EVENTS_ORACLE["events_value_levene"],
-    "stream_ab_welch": _EVENTS_ORACLE["events_ab_welch"],
     "stream_conversion_ztest": _EVENTS_ORACLE["events_conversion_ztest"],
     "stream_quality_length_corr": _DOCS_ORACLE["corpus_quality_length_corr"],
     "stream_cross_perplexity": _DOCS_ORACLE["corpus_cross_perplexity"],
@@ -3116,7 +2504,6 @@ ORACLE = {
     "stream_dedup_incremental": incr_dedup_oracle_sql("existing"),
     "stream_sample_fixed": _DOCS_ORACLE["corpus_sample_fixed"],
     "stream_latest_state": _DOCS_ORACLE["events_latest_state"],
-    "stream_attribution": _EVENTS_ORACLE["events_attribution"],
     "stream_bot_gate": _EVENTS_ORACLE["events_bot_detection"],
     # static drain of the stage machine == the batch conditional-min
     # cascade, so the streaming funnel shares its full oracle

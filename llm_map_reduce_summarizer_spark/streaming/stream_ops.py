@@ -323,80 +323,6 @@ def uptime_stream(events: DataFrame, window_us: int) -> DataFrame:
     )
 
 
-TW_STATE_SCHEMA = StructType(
-    [
-        StructField("last_ts_us", LongType()),
-        StructField("last_vq", LongType()),
-        StructField("n_intervals", LongType()),
-        StructField("total_us", LongType()),
-        StructField("wsum", LongType()),
-    ]
-)
-
-TW_OUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("n_intervals", LongType()),
-        StructField("total_us", LongType()),
-        StructField("wsum", LongType()),
-    ]
-)
-
-
-def time_weighted_stream(events: DataFrame) -> DataFrame:
-    """Incremental time-weight fold keyed by user: each arriving beat
-    closes the previous hold interval (dur × held cent value
-    accumulates in exact integers), so the update drain's latest row
-    carries the same Σ the batch lead-window computes. wsum lives in
-    a long — exact to ~10¹⁸ μs·cents per user (≫ any real series);
-    the batch twin's decimal(38,0) is the unbounded-scale shape.
-    Same per-user event-time-order contract as `sessionize_stream`.
-    """
-
-    def _fn(key, pdfs, state: GroupState) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.exists:
-            last_ts, last_vq, n_iv, total, wsum = state.get
-        else:
-            last_ts, last_vq, n_iv, total, wsum = None, 0, 0, 0, 0
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts_us", "event_id"])
-            for ts_us, vq in zip(pdf["ts_us"], pdf["vq"]):
-                ts_us, vq = int(ts_us), int(vq)
-                if last_ts is not None:
-                    dur = ts_us - last_ts
-                    n_iv += 1
-                    total += dur
-                    wsum += dur * last_vq
-                last_ts, last_vq = ts_us, vq
-        state.update((last_ts, last_vq, n_iv, total, wsum))
-        if n_iv:
-            yield pd.DataFrame(
-                [
-                    {
-                        "user_id": user_id,
-                        "n_intervals": n_iv,
-                        "total_us": total,
-                        "wsum": wsum,
-                    }
-                ]
-            )
-
-    with_us = events.select(
-        "user_id",
-        "event_id",
-        F.unix_micros("ts").alias("ts_us"),
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("vq"),
-    )
-    return with_us.groupBy("user_id").applyInPandasWithState(
-        _fn,
-        outputStructType=TW_OUT_SCHEMA,
-        stateStructType=TW_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 DOCS_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
@@ -942,48 +868,6 @@ def sample_stream(docs: DataFrame, k: int, n_shards: int = 8) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def attribution_pairs_stream(
-    events: DataFrame,
-    window_days: int = 7,
-    watermark: str = "8 days",
-) -> DataFrame:
-    """Stream-stream interval join for attribution: each purchase
-    matched with every view by the same user in the preceding
-    ``window_days`` — the ingest-time form of `events_attribution`'s
-    touch pairs.
-
-    Watermarks on both sides + the event-time bound let Spark evict
-    view state once the watermark passes ``purchase_ts − window`` —
-    per-key state holds the lookback window of views, never the
-    stream. Inner matches emit on arrival (append mode), so an
-    ``availableNow`` drain equals the batch interval join; the
-    first/last/count collapse per purchase is a plain BATCH
-    aggregation over the drained pair sink (the sink is a stored
-    table — aggregating it is a normal batch job, not driver-side
-    state).
-    """
-    views = events.filter(F.col("event_type") == "view").select(
-        F.col("user_id").alias("v_user_id"),
-        F.col("ts").alias("view_ts"),
-    ).withWatermark("view_ts", watermark)
-    buys = events.filter(F.col("event_type") == "purchase").select(
-        "user_id",
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-        "value",
-    ).withWatermark("purchase_ts", watermark)
-    return buys.join(
-        views,
-        (F.col("user_id") == F.col("v_user_id"))
-        & (F.col("view_ts") <= F.col("purchase_ts"))
-        & (
-            F.col("view_ts")
-            >= F.col("purchase_ts")
-            - F.expr(f"INTERVAL {window_days} DAYS")
-        ),
-    ).select("purchase_id", "user_id", "purchase_ts", "value", "view_ts")
 
 
 BOT_STATE_SCHEMA = StructType(

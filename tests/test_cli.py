@@ -10,14 +10,14 @@ import pytest
 from llm_map_reduce_summarizer_spark.__main__ import build_parser, run
 
 
-def _write_transcript(tmp_path, name="t.json", n=12):
+def _write_transcript(tmp_path, name="t.json", n=12, topic="topic"):
     segs = []
     for i in range(n):
         segs.append(
             {
                 "start": i * 10.0,
                 "end": i * 10.0 + 8.0,
-                "text": f"sentence number {i} about topic {i % 3}. " * 6,
+                "text": f"sentence number {i} about {topic} {i % 3}. " * 6,
                 "speaker": f"SPEAKER_{i % 2}",
             }
         )
@@ -99,6 +99,35 @@ def test_cli_four_or_more_files_sum_counts(spark, tmp_path):
     assert result["chunks"] == 4 * one["chunks"]
     assert result["summary"].startswith("# Transcript Summary")
     assert result["summary"].count("[Mock response using") == result["chunks"]
+
+
+def test_cli_direct_mode_keeps_every_file(spark, tmp_path, monkeypatch):
+    """--no-hierarchical over several files joins every chunk summary
+    into the one final summary, the files' text in path order."""
+    from llm_map_reduce_summarizer_spark import __main__ as m
+
+    monkeypatch.setattr(
+        m, "get_provider", lambda *a, **k: (lambda p: p, "echo", False)
+    )
+    topics = ["alphatopic", "bravotopic", "charlietopic"]
+    for name, topic in zip(("a.json", "b.json", "c.json"), topics):
+        _write_transcript(tmp_path, name, n=6, topic=topic)
+    result = run(
+        spark,
+        build_parser().parse_args(
+            [
+                "--input", str(tmp_path / "*.json"), "--quiet",
+                "--max-tokens-per-chunk", "300", "--no-hierarchical",
+            ]
+        ),
+    )
+    summary = result["summary"]
+    assert result["segments"] == 18 and result["chunks"] >= 3
+    assert summary.count("[Time:") == result["chunks"]
+    firsts = [summary.find(t) for t in topics]
+    lasts = [summary.rfind(t) for t in topics]
+    assert -1 not in firsts
+    assert lasts[0] < firsts[1] and lasts[1] < firsts[2]
 
 
 def test_cli_request_job_budget(spark, tmp_path, monkeypatch):
@@ -291,16 +320,25 @@ def test_query_runner_lists_and_rejects(capsys):
     retired_events = {
         "events_winsorized_welch", "events_experiment_readout",
         "events_column_profile", "events_daily_health",
+        "events_type_correlation", "events_wau_merge",
+        "events_rolling_actives", "events_power_law_fit",
+        "events_session_funnel", "events_cem_att", "events_window_funnel",
     }
     with_stream_twin = {
         "theta_forecast", "k_anonymity", "dow_hour_heatmap",
         "json_schema", "value_ohlc", "error_load_corr", "hourly_locf",
         "hourly_interp", "transition_entropy", "audience_overlap",
         "markov_stationary", "user_entropy", "burstiness",
+        "forecast_model_compare", "cuped", "diff_in_diff",
+        "time_weighted_value", "sequential_msprt", "value_levene",
+        "anomaly_injection_eval", "value_kruskal", "ab_welch",
+        "interrupted_ts", "funnel_latency", "growth_accounting",
+        "bootstrap_diff_ci", "attribution", "iv_wald", "cmh",
+        "parallel_trends", "periodogram", "peak_hours",
     }
     for name in with_stream_twin:
         retired_events |= {f"events_{name}", f"stream_{name}"}
-    assert len(retired_events) == 30
+    assert len(retired_events) == 75
     assert not retired_events & set(listed)
 
     assert main(["definitely_not_a_key"]) == 2

@@ -31,7 +31,6 @@ HUB_ZERO_SCAN = [
     "corpus_keyphrase_rake",
     "search_map",
     "search_mrr",
-    "events_anomaly_injection_eval",
     "events_anomaly_ensemble",
     "events_survival",
     "events_psi_injection_eval",

@@ -271,7 +271,6 @@ def test_cms_sketch_merges_and_overestimates(spark):
 
     from llm_map_reduce_summarizer_spark.plans.events import (
         CMS_D,
-        CMS_W,
         _cms_col,
     )
 
@@ -435,8 +434,6 @@ def test_anomaly_mad_and_interarrival_semantics(spark):
     """MAD profile: a planted extreme hour is flagged while the
     baseline hours stay quiet; interarrival gaps are nonnegative and
     the quantiles are ordered."""
-    import pyspark.sql.functions as F
-
     from llm_map_reduce_summarizer_spark.plans.events import (
         events_anomaly_mad,
         events_interarrival,

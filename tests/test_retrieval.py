@@ -9,7 +9,6 @@ fixed-sample invariants.
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from llm_map_reduce_summarizer_spark.plans.documents import (
@@ -315,47 +314,6 @@ def test_new_ops_handle_degenerate_inputs(spark, tmp_path):
     assert h["n_docs"].sum() == 2  # the empty doc lands in bucket 0
 
 
-def test_attribution_window_and_touch_semantics(spark, tmp_path):
-    """Views outside the 7-day lookback or after the purchase must not
-    attribute; first/last collapse to the same view when only one
-    qualifies; purchases with no views keep NULL touches."""
-    import pandas as pd
-
-    from llm_map_reduce_summarizer_spark.plans.events import (
-        ATTR_WINDOW_US,
-        events_attribution,
-    )
-
-    base = 1_700_000_000_000_000  # us
-    rows = [
-        # user 1: one view inside the window, one too old, one after
-        dict(event_id=1, ts=base - ATTR_WINDOW_US - 10, user_id=1,
-             event_type="view", value=0.0, props="{}"),
-        dict(event_id=2, ts=base - 1000, user_id=1,
-             event_type="view", value=0.0, props="{}"),
-        dict(event_id=3, ts=base + 1000, user_id=1,
-             event_type="view", value=0.0, props="{}"),
-        dict(event_id=4, ts=base, user_id=1,
-             event_type="purchase", value=9.0, props="{}"),
-        # user 2: purchase with no views at all
-        dict(event_id=5, ts=base, user_id=2,
-             event_type="purchase", value=1.0, props="{}"),
-    ]
-    pdf = pd.DataFrame(rows)
-    pdf["ts"] = pd.to_datetime(pdf["ts"], unit="us")
-    pdf.to_parquet(tmp_path / "events.parquet")
-    out = (
-        events_attribution(spark, str(tmp_path))
-        .toPandas()
-        .set_index("event_id")
-    )
-    assert out.loc[4, "n_touches"] == 1
-    assert out.loc[4, "first_view_ts_us"] == base - 1000
-    assert out.loc[4, "last_view_ts_us"] == base - 1000
-    assert out.loc[5, "n_touches"] == 0
-    assert pd.isna(out.loc[5, "first_view_ts_us"])
-
-
 def test_lm_export_consistent_with_surprisal_scorer(spark):
     """Scoring a doc against the EXPORTED bigram table must reproduce
     doc_bigram_surprisal's mean (same smoothing, same corpus stats) —
@@ -398,7 +356,6 @@ def test_winnowing_guarantee_on_shared_run(spark, tmp_path):
     import pandas as pd
 
     from llm_map_reduce_summarizer_spark.plans.documents import (
-        WINNOW_W,
         doc_winnowing,
     )
 
@@ -424,8 +381,6 @@ def test_winnowing_guarantee_on_shared_run(spark, tmp_path):
 def test_bm25_index_consistent_with_query_scorer(spark):
     """The exported postings must reproduce _bm25_scored's per-doc
     scores when summed over a query's terms."""
-    import pandas as pd
-
     import __spark_entry__ as entrymod
     from llm_map_reduce_summarizer_spark.plans.documents import (
         BM25_QUERIES,

@@ -83,23 +83,6 @@ def test_events_stats_random(spark, tmp_path_factory, seed):
         tmp = tmp_path_factory.mktemp("evp")
         sf = _write_events(tmp, ev)
 
-        # --- Welch ---
-        row = QUERIES["events_ab_welch"](spark, sf).toPandas().iloc[0]
-        a = ev.loc[ev.event_type == "purchase", "value"].to_numpy()
-        b = ev.loc[ev.event_type == "click", "value"].to_numpy()
-        na, nb = len(a), len(b)
-        assert row["n_a"] == na and row["n_b"] == nb
-        if na > 1 and nb > 1:
-            va, vb = a.var(ddof=1), b.var(ddof=1)
-            se2 = va / na + vb / nb
-            if se2 > 0:
-                t = (a.mean() - b.mean()) / math.sqrt(se2)
-                assert _close(row["t_stat"], t)
-            else:
-                assert pd.isna(row["t_stat"])
-        else:
-            assert pd.isna(row["t_stat"])
-
         # --- Mann-Kendall ---
         row = (
             QUERIES["events_mann_kendall"](spark, sf)
@@ -118,28 +101,6 @@ def test_events_stats_random(spark, tmp_path_factory, seed):
         )
         assert row["n_hours"] == h
         assert row["s_stat"] == s
-
-        # --- Kruskal-Wallis ---
-        row = (
-            QUERIES["events_value_kruskal"](spark, sf)
-            .toPandas()
-            .iloc[0]
-        )
-        v = np.floor(ev["value"].to_numpy() * 100 + 0.5)
-        r = pd.Series(v).rank(method="average").to_numpy()
-        nn = len(v)
-        srr = sum(
-            r[ev.event_type.to_numpy() == g].sum() ** 2
-            / (ev.event_type == g).sum()
-            for g in ev.event_type.unique()
-        )
-        _, counts = np.unique(v, return_counts=True)
-        corr = 1 - (counts**3 - counts).sum() / (nn**3 - nn)
-        assert row["n_events"] == nn
-        assert row["k_groups"] == ev.event_type.nunique()
-        if corr > 0:
-            hstat = (12.0 / (nn * (nn + 1)) * srr - 3 * (nn + 1)) / corr
-            assert _close(row["h_stat"], hstat)
 
         # --- CUSUM (Page recursion, integer allowance) ---
         df = QUERIES["events_cusum"](spark, sf).toPandas()
@@ -286,9 +247,9 @@ def test_documents_stats_random(spark, tmp_path_factory, seed):
 
 @pytest.mark.parametrize("seed", [0])
 def test_events_profile_random(spark, tmp_path_factory, seed):
-    """Random micro-corpora through the traffic-shape tier: peak
-    detection, hour-of-day concentration, and the l-diversity screen —
-    pandas/numpy mirrors, heavy ties and single-hour types included."""
+    """Random micro-corpora through the traffic-shape tier: hour-of-day
+    concentration and the l-diversity screen — pandas/numpy mirrors,
+    heavy ties and single-hour types included."""
 
     @settings(**_SETTINGS)
     @given(data=st.data())
@@ -322,37 +283,6 @@ def test_events_profile_random(spark, tmp_path_factory, seed):
         )
         tmp = tmp_path_factory.mktemp("evs")
         sf = _write_events(tmp, ev)
-
-        # --- peak hours: strict local max over OBSERVED hours + 2σ ---
-        df = QUERIES["events_peak_hours"](spark, sf).toPandas()
-        expect = set()
-        for et in set(tlist):
-            hr = (
-                ev[ev.event_type == et]
-                .set_index("ts")
-                .resample("1h")["event_id"]
-                .count()
-            )
-            hr = hr[hr > 0]
-            xs = hr.to_numpy(float)
-            h = len(xs)
-            if h < 2:
-                continue
-            mu, sd = xs.mean(), xs.std(ddof=1)
-            if sd == 0:
-                continue
-            for i in range(1, h - 1):
-                z = (xs[i] - mu) / sd
-                if xs[i] > xs[i - 1] and xs[i] > xs[i + 1] and z >= 2.0:
-                    expect.add((et, hr.index[i]))
-                    got = df[
-                        (df.event_type == et) & (df.hour == hr.index[i])
-                    ]
-                    assert len(got) == 1
-                    assert _close(got["zscore"].iloc[0], z, tol=1e-3)
-        assert (
-            set(zip(df.event_type, df.hour)) == expect
-        )
 
         # --- hour concentration: entropy + deterministic argmax ---
         df = (
@@ -393,123 +323,9 @@ def test_events_profile_random(spark, tmp_path_factory, seed):
 
 
 @pytest.mark.parametrize("seed", [0])
-def test_growth_and_funnel_random(spark, tmp_path_factory, seed):
-    """Random micro-corpora through the growth ledger and the windowed
-    funnel — pandas mirrors of the day-classification and the
-    chain-in-window existence semantics."""
-
-    @settings(**_SETTINGS)
-    @given(data=st.data())
-    def run(data):
-        n = data.draw(st.integers(20, 80))
-        days = data.draw(
-            st.lists(st.integers(0, 9), min_size=n, max_size=n)
-        )
-        secs = data.draw(
-            st.lists(st.integers(0, 86399), min_size=n, max_size=n)
-        )
-        types = data.draw(
-            st.lists(
-                st.sampled_from(["view", "click", "purchase"]),
-                min_size=n,
-                max_size=n,
-            )
-        )
-        ev = pd.DataFrame(
-            {
-                "event_id": range(n),
-                "ts": pd.Timestamp("2024-03-01")
-                + pd.to_timedelta(days, unit="D")
-                + pd.to_timedelta(secs, unit="s"),
-                "user_id": [i % 5 for i in range(n)],
-                "event_type": types,
-                "value": [0.0] * n,
-                "props": ["{}"] * n,
-            }
-        )
-        tmp = tmp_path_factory.mktemp("gf")
-        sf = _write_events(tmp, ev)
-
-        # --- growth accounting ---
-        df = (
-            QUERIES["events_growth_accounting"](spark, sf)
-            .toPandas()
-            .set_index("day")
-            .sort_index()
-        )
-        act = ev.assign(day=ev["ts"].dt.normalize())
-        user_days = {
-            u: sorted(set(g["day"])) for u, g in act.groupby("user_id")
-        }
-        max_day = act["day"].max()
-        one = pd.Timedelta(days=1)
-        exp = {}
-        for u, ds in user_days.items():
-            for i, d in enumerate(ds):
-                e = exp.setdefault(
-                    d, dict(dau=0, new=0, ret=0, res=0, churn=0)
-                )
-                e["dau"] += 1
-                if i == 0:
-                    e["new"] += 1
-                elif ds[i - 1] == d - one:
-                    e["ret"] += 1
-                else:
-                    e["res"] += 1
-                nxt = ds[i + 1] if i + 1 < len(ds) else None
-                if (nxt is None and d < max_day) or (
-                    nxt is not None and nxt > d + one
-                ):
-                    exp.setdefault(
-                        d + one, dict(dau=0, new=0, ret=0, res=0, churn=0)
-                    )["churn"] += 1
-        assert set(df.index) == set(exp)
-        for d, e in exp.items():
-            row = df.loc[d]
-            assert row["dau"] == e["dau"]
-            assert row["n_new"] == e["new"]
-            assert row["n_retained"] == e["ret"]
-            assert row["n_resurrected"] == e["res"]
-            assert row["n_churned"] == e["churn"]
-
-        # --- windowed funnel ---
-        row = (
-            QUERIES["events_window_funnel"](spark, sf).toPandas().iloc[0]
-        )
-        W = pd.Timedelta(hours=6)
-        l1 = l2 = l3 = 0
-        for u, g in ev.groupby("user_id"):
-            vs = g.loc[g.event_type == "view", "ts"]
-            cs = g.loc[g.event_type == "click", "ts"]
-            ps = g.loc[g.event_type == "purchase", "ts"]
-            if len(vs) == 0:
-                continue
-            l1 += 1
-            got2 = any(
-                ((cs > v) & (cs <= v + W)).any() for v in vs
-            )
-            if got2:
-                l2 += 1
-            got3 = any(
-                ((cs > v) & (cs <= v + W) & (cs < p)).any()
-                and (p <= v + W)
-                for v in vs
-                for p in ps
-            )
-            if got3:
-                l3 += 1
-        assert row["n_level1"] == l1
-        assert row["n_level2"] == l2
-        assert row["n_level3"] == l3
-
-    run()
-
-
-@pytest.mark.parametrize("seed", [0])
 def test_causal_tier_random(spark, tmp_path_factory, seed):
-    """Random micro-corpora through the causal/robust tier: DiD and
-    CUPED against independent pandas formulas, QTE against numpy
-    quantiles — degenerate arms and tiny periods included."""
+    """Random micro-corpora through the causal/robust tier: QTE against
+    numpy quantiles — degenerate arms and tiny periods included."""
 
     @settings(**_SETTINGS)
     @given(data=st.data())
@@ -539,56 +355,7 @@ def test_causal_tier_random(spark, tmp_path_factory, seed):
         tmp = tmp_path_factory.mktemp("evc")
         sf = _write_events(tmp, ev)
 
-        vq = np.floor(ev["value"].to_numpy() * 100 + 0.5)
         treat = (ev["user_id"] % 2 == 0).to_numpy()
-
-        # --- DiD ---
-        row = QUERIES["events_diff_in_diff"](spark, sf).toPandas().iloc[0]
-        hour = (
-            ev["ts"].dt.floor("h").astype("int64") // 1000
-        ).to_numpy()
-        mid = (hour.min() + hour.max()) / 2.0
-        post = hour >= mid
-        arms = {
-            "tp": vq[treat & post],
-            "tc": vq[treat & ~post],
-            "cp": vq[~treat & post],
-            "cc": vq[~treat & ~post],
-        }
-        assert row["n_treat_post"] == len(arms["tp"])
-        if all(len(a) > 1 for a in arms.values()):
-            did = (arms["tp"].mean() - arms["tc"].mean()) - (
-                arms["cp"].mean() - arms["cc"].mean()
-            )
-            assert _close(row["did_estimate"], did / 100.0)
-            se2 = sum(a.var(ddof=1) / len(a) for a in arms.values())
-            if se2 > 0:
-                assert _close(row["t_stat"], did / math.sqrt(se2))
-        else:
-            assert pd.isna(row["t_stat"])
-
-        # --- CUPED ---
-        row = QUERIES["events_cuped"](spark, sf).toPandas().iloc[0]
-        day = (ev["ts"].dt.floor("D").astype("int64") // 1000).to_numpy()
-        dmid = (day.min() + day.max()) / 2.0
-        per = pd.DataFrame(
-            {
-                "u": ev["user_id"],
-                "x": np.where(day < dmid, vq, 0.0),
-                "y": np.where(day >= dmid, vq, 0.0),
-            }
-        ).groupby("u").sum()
-        x, y = per["x"].to_numpy(), per["y"].to_numpy()
-        tmask = np.asarray(per.index % 2 == 0)
-        assert row["n_treat"] == int(tmask.sum())
-        if x.var() > 0 and tmask.sum() > 1 and (~tmask).sum() > 1:
-            theta = np.cov(x, y, bias=True)[0, 1] / x.var()
-            adj = y - theta * x
-            diff = adj[tmask].mean() - adj[~tmask].mean()
-            assert _close(row["theta"], theta)
-            assert _close(row["diff_adj"], diff / 100.0)
-        else:
-            assert pd.isna(row["theta"])
 
         # --- QTE ---
         rel = (

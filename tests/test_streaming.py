@@ -94,8 +94,6 @@ def test_stream_asof_state_carries_across_batches(spark, tmp_path):
     """Feed events as two files/micro-batches split on time: a view in
     batch 1 must enrich a click arriving in batch 2 purely from carried
     state (the incremental property the single-file drain can't show)."""
-    import os
-
     import pandas as pd
 
     from llm_map_reduce_summarizer_spark.streaming.stream_ops import (
@@ -161,7 +159,6 @@ def test_stream_dedup_matches_batch_and_carries_state(spark, tmp_path):
         run_available_now,
     )
     import pandas as pd
-    from pyspark.sql import functions as F  # noqa: F401
 
     # drain of the static corpus == batch keep-min-id dedup
     stream = stream_dedup(spark, SF).toPandas()
