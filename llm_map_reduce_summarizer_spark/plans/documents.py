@@ -94,13 +94,15 @@ def _docs(
 ) -> DataFrame:
     # spread is per-CALLER, by measurement: queries whose serial
     # narrow compute above the scan dominates (shingle explode + md5,
-    # regex scoring) pass spread=True and win 20-35% on a coarse
-    # one-row-group layout; queries dominated by many small downstream
+    # regex scoring) pass spread=True and win 20-35% on a layout the
+    # scan reads as one task (one row group, or any file under the
+    # 4 MB open-cost floor); queries dominated by many small downstream
     # stages LOSE from 32 near-empty partitions propagating through
     # every stage (per-task fixed costs exceed the per-partition
     # work — the stage-level profile showed total executor time
-    # inflating ~20x on dedup_minhash_lsh at sf0.1). On an at-scale
-    # layout (row groups >= cores) the helper is a no-op either way.
+    # inflating ~20x on dedup_minhash_lsh at sf0.1). On a layout whose
+    # scan already plans a task per core (see `spread_narrow_scan`)
+    # the helper is a no-op either way.
     return load_table(spark, sf_dir, "documents", spread=spread)
 
 
@@ -260,7 +262,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread=True: the shingle explode + md5 keying above the scan is
     # this query's dominant cost and the downstream is broadcast-only
     # (one eager materialize, then broadcast joins) — measured −31%
-    # at sf0.1; a multi-row-group layout makes it a no-op
+    # at sf0.1; a layout whose scan plans a task per core makes it a
+    # no-op
     sh = doc_shingles(_docs(spark, sf_dir, spread=True), keyed=True)
     return jaccard_pairs(
         sh,
@@ -3056,32 +3059,36 @@ def corpus_prep_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate -> exact dedup -> MinHash near-dup removal, in one pipeline.
 
     Scale shape:
-    - quality score and language ID are COLUMNS on a single scan (no
-      self-joins of the corpus with its own derived tables);
+    - the documents table is read by ONE scan, spread over every core
+      (`_docs(spread=True)`), and each document is scored ONCE: quality
+      score, per-language stopword counts and language ID are columns
+      of that scan, checkpointed (`materialize`) before any filter.
+      The gate, exact dedup and MinHash all read the checkpoint. The
+      checkpoint must come before the gate filter: a filter above the
+      score projection is pushed below it (and below the round-robin
+      exchange), so each consumer would run the regexes again inside
+      the scan;
     - exact dedup keeps min doc_id per content digest — the semi-join
       key is the 32-byte digest, documents never shuffle;
     - near-dup removal runs MinHash+LSH (stop-shingle df-capped) on the
       already-gated corpus and anti-joins the higher id of each
       verified pair, so every pairwise stage sees only surviving docs.
     """
-    d = _docs(spark, sf_dir)
     scores = lang_score_cols()
-    gated = (
-        d.withColumn("quality_score", quality_score_col())
-        .withColumns({k: v for k, v in scores.items()})
+    scored = (
+        _docs(spark, sf_dir, spread=True)
+        .withColumn("quality_score", quality_score_col())
+        .withColumns(scores)
         .withColumn("pred_lang", pred_lang_col())
-        .filter(
-            (F.col("quality_score") >= PREP_QUALITY_MIN)
-            & F.col("pred_lang").isin(*PREP_LANGS)
-        )
         .drop(*scores.keys())
+        .transform(materialize)
+    )
+    gated = scored.filter(
+        (F.col("quality_score") >= PREP_QUALITY_MIN)
+        & F.col("pred_lang").isin(*PREP_LANGS)
     )
     keep = exact_dedup(gated).select(F.col("keep_id").alias("doc_id"))
-    # materialize the gated+deduped corpus once: the LSH stage consumes
-    # it repeatedly (shingle explode for signatures, verify sides,
-    # sizes), and each consumption would otherwise recompute the regex
-    # quality/langid gate expressions over the full text column
-    corpus = gated.join(keep, "doc_id", "left_semi").transform(materialize)
+    corpus = gated.join(keep, "doc_id", "left_semi")
     drops = (
         minhash_lsh_pairs(
             corpus, threshold=MINHASH_THRESHOLD, df_cap=MINHASH_DF_CAP

@@ -13,31 +13,45 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-# A parquet ROW GROUP is the unit of decode parallelism: Spark assigns
-# each row group to exactly one scan task, so a table written as one
-# file with one row group (the local testdata layout) decodes — and
-# runs every narrow operator above the scan (regex cleaning, shingle
-# explode + md5, embedding dgemm batches) — on ONE core, however many
-# byte-range splits the scheduler makes. The optimization guide's
-# input-skew rule ("one huge unsplittable file: repartition immediately
-# after the read") applies; `spread_narrow_scan` does it ADAPTIVELY:
-# only when the source's decode-unit count (Σ row groups across files,
-# a footer-metadata read) is below the session's default parallelism.
-# On any real at-scale layout (row groups ≥ cores) it is a no-op, so
-# no extra exchange is paid where the scan already parallelizes;
-# filters/column pruning still push through the Repartition node
+# A scan task decodes whole parquet ROW GROUPS, and Spark plans at most
+# one task per file SPLIT (``FilePartition.maxSplitBytes``: the split
+# is ``min(maxPartitionBytes, max(openCostInBytes, total / leaf
+# parallelism))``, where total counts every file plus its open cost).
+# A file smaller than the 4 MB open-cost floor is therefore ONE task
+# however many row groups it has, and a file with one row group is one
+# task however many splits it gets. Either way the scan — and every
+# narrow operator above it (regex scoring, shingle explode + md5,
+# embedding dgemm batches) — runs on fewer cores than the session has.
+# The optimization guide's input-skew rule ("one huge unsplittable
+# file: repartition immediately after the read") applies;
+# `spread_narrow_scan` does it ADAPTIVELY: only when the source's
+# decode units (Σ over files of min(row groups, planned splits), from
+# footer metadata and file sizes, no Spark job) are below the
+# session's default parallelism. On a layout that already gives every
+# core a task it is a no-op, so no extra exchange is paid; filters and
+# column pruning still push through the Repartition node
 # (PushPredicateThroughNonJoin handles Repartition), so PushedFilters
 # reach the scan either way. Disable per session via SPREAD_CONF.
 SPREAD_CONF = "spark.llm_map_reduce_summarizer.spreadNarrowScans"
 
 
 @functools.lru_cache(maxsize=256)
-def _decode_units_cached(path: str, mtime_ns: int, size: int) -> int:
-    """Σ parquet row groups under ``path`` — footer metadata only (no
-    data pages read). Cached on (path, mtime, size) so repeated
-    query-plan builds don't re-open footers; the mtime/size key means a
-    rewritten table invalidates itself (this caches file LAYOUT, never
-    query results)."""
+def _decode_units_cached(
+    path: str,
+    mtime_ns: int,
+    size: int,
+    max_partition_bytes: int,
+    open_cost: int,
+    min_partitions: int,
+) -> int:
+    """Σ over the parquet files under ``path`` of min(row groups,
+    planned splits) — footer metadata and file sizes only (no data
+    pages read). Cached on (path, mtime, size) and the scan confs, so
+    repeated query-plan builds don't re-open footers; a rewritten table
+    or a changed conf invalidates itself (this caches file LAYOUT,
+    never query results). Spark may pack several small splits into one
+    task, but only down to about the leaf parallelism, so the packing
+    is left out."""
     import pyarrow.parquet as pq
 
     if os.path.isdir(path):
@@ -49,21 +63,37 @@ def _decode_units_cached(path: str, mtime_ns: int, size: int) -> int:
         ]
     else:
         files = [path]
+    sizes = [os.path.getsize(f) for f in files]
+    total = sum(n + open_cost for n in sizes)
+    split = min(max_partition_bytes, max(open_cost, total // min_partitions))
     units = 0
-    for f in files:
+    for f, n in zip(files, sizes):
         try:
-            units += pq.ParquetFile(f).metadata.num_row_groups
+            groups = pq.ParquetFile(f).metadata.num_row_groups
         except Exception:
-            units += 1  # unreadable footer: assume one unit
+            groups = 1  # unreadable footer: assume one unit
+        units += min(groups, -(-n // split))
     return units
 
 
-def _decode_units(path: str) -> int:
+def _decode_units(spark: SparkSession, path: str) -> int:
     try:
         st = os.stat(path)
     except OSError:
         return 1
-    return _decode_units_cached(path, st.st_mtime_ns, st.st_size)
+    js = spark._jsparkSession
+    conf = js.sessionState().conf()
+    min_partitions = conf.filesMinPartitionNum()
+    return _decode_units_cached(
+        path,
+        st.st_mtime_ns,
+        st.st_size,
+        conf.filesMaxPartitionBytes(),
+        conf.filesOpenCostInBytes(),
+        min_partitions.get()
+        if min_partitions.isDefined()
+        else js.leafNodeDefaultParallelism(),
+    )
 
 
 def spread_narrow_scan(df: DataFrame, path: str) -> DataFrame:
@@ -76,7 +106,7 @@ def spread_narrow_scan(df: DataFrame, path: str) -> DataFrame:
     if str(spark.conf.get(SPREAD_CONF, "true")).lower() != "true":
         return df
     par = spark.sparkContext.defaultParallelism
-    if _decode_units(path) >= par:
+    if _decode_units(spark, path) >= par:
         return df
     return df.repartition(par)
 

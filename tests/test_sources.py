@@ -264,11 +264,16 @@ def test_stream_shard_intake_retry_is_exactly_once(spark, tmp_path):
 
 
 def test_spread_narrow_scan_adapts_to_decode_units(spark, tmp_path):
-    """spread_narrow_scan repartitions ONLY when the parquet layout has
-    fewer row groups than the session parallelism (the local testdata
-    shape: one file, one row group -> serial decode AND serial narrow
-    compute above the scan), never changes results, and stays a no-op
-    when the layout already parallelizes or the conf disables it."""
+    """spread_narrow_scan repartitions ONLY when the scan would plan
+    fewer decode units (min of row groups and file splits) than the
+    session parallelism, never changes results, and stays a no-op when
+    the layout already parallelizes or the conf disables it. Three
+    layouts: (i) one file, one row group (the local testdata shape);
+    (ii) one file under the 4 MB open-cost floor with ``par`` row
+    groups — Spark plans it as ONE split, so one task decodes every
+    row group; (iii) ``par`` files, one task each."""
+    import pyarrow.parquet as pq
+
     from llm_map_reduce_summarizer_spark.sources.tables import (
         SPREAD_CONF,
         _decode_units,
@@ -279,8 +284,8 @@ def test_spread_narrow_scan_adapts_to_decode_units(spark, tmp_path):
     docs = load_table(spark, SF, "documents")
     path = os.path.join(SF, "documents.parquet")
 
-    # the local testdata layout is one row group per table
-    assert _decode_units(path) < par
+    # (i) the local testdata layout is one row group per table
+    assert _decode_units(spark, path) < par
 
     spread = spread_narrow_scan(docs, path)
     assert spread.rdd.getNumPartitions() == par
@@ -289,11 +294,24 @@ def test_spread_narrow_scan_adapts_to_decode_units(spark, tmp_path):
         r["doc_id"] for r in docs.collect()
     )
 
-    # a layout with >= par row groups must NOT pay the extra exchange
+    # (ii) many row groups in one small file still scan as one task
+    table = pq.read_table(path)
+    small = os.path.join(str(tmp_path), "docs_small_many_rowgroups.parquet")
+    pq.write_table(table, small, row_group_size=-(-table.num_rows // par))
+    assert pq.ParquetFile(small).metadata.num_row_groups >= par
+    assert os.path.getsize(small) < 4 << 20
+    one_split = spark.read.parquet(small)
+    assert one_split.rdd.getNumPartitions() == 1
+    assert _decode_units(spark, small) == 1
+    spread_small = spread_narrow_scan(one_split, small)
+    assert spread_small.rdd.getNumPartitions() == par
+    assert spread_small.count() == table.num_rows
+
+    # (iii) a layout with >= par decode units must NOT pay the exchange
     out = os.path.join(str(tmp_path), "docs_many_rowgroups")
     docs.repartition(par).write.mode("overwrite").parquet(out)
     many = spark.read.parquet(out)
-    assert _decode_units(out) >= par
+    assert _decode_units(spark, out) >= par
     assert spread_narrow_scan(many, out) is many
 
     # conf off -> no-op regardless of layout
