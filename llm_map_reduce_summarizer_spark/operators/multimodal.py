@@ -7,9 +7,9 @@ columns with a typed metadata struct next to them. Heavy per-item work
 once — never a row-at-a-time UDF.
 
 The actual codecs (PIL / ffmpeg / soundfile) are NOT in this
-environment, so ``decode_image`` raises ``NotImplementedError`` and the
-default pipeline uses ``fake_decode`` — a deterministic stand-in that
-derives width/height/channel stats from the payload bytes. Everything
+environment, so the default pipeline uses ``fake_decode`` — a
+deterministic stand-in that derives width/height/channel stats from
+the payload bytes. Everything
 Spark-side (schema, batching, partition behavior) is real and tested;
 swapping the fake for a real codec is a one-function change.
 
@@ -47,14 +47,6 @@ DECODED_SCHEMA = StructType(
         StructField("n_frames", LongType()),
     ]
 )
-
-
-def decode_image(payload: bytes) -> "np.ndarray":
-    """Real image decode — requires PIL, absent in this container."""
-    raise NotImplementedError(
-        "image codecs not available in this environment; "
-        "use fake_decode or install pillow"
-    )
 
 
 def fake_decode(payload: bytes) -> dict:

@@ -8361,7 +8361,7 @@ def corpus_budget_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per-source availability is one source-keyed partial agg;
     the water level λ comes from the sources²-bounded D² self-join
-    prefix sums (the `events_changepoint` pattern — NO unpartitioned
+    prefix sums (the `events_adoption_curve` pattern — NO unpartitioned
     window) and collapses to a 1-row broadcast; allocation is a
     narrow map over the sources-bounded table. Exact integer token
     sums; λ is one double division.

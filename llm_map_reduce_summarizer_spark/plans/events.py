@@ -272,131 +272,6 @@ def events_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Strict view -> click -> purchase funnel (per-user ordered stages).
-
-    Scale: three conditional min-aggregations per user (single shuffle
-    each, all on user_id so AQE can reuse the exchange), then a global
-    count — no self-join of the raw events.
-    """
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "ts_us", F.unix_micros("ts")
-    )
-    v = (
-        ev.filter(F.col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(F.min("ts_us").alias("t_view"))
-    )
-    c = (
-        ev.filter(F.col("event_type") == "click")
-        .join(v, "user_id")
-        .filter(F.col("ts_us") > F.col("t_view"))
-        .groupBy("user_id")
-        .agg(F.min("ts_us").alias("t_click"))
-    )
-    p = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(c, "user_id")
-        .filter(F.col("ts_us") > F.col("t_click"))
-        .groupBy("user_id")
-        .agg(F.min("ts_us").alias("t_purchase"))
-    )
-    return (
-        v.agg(F.count(F.lit(1)).alias("n_view"))
-        .crossJoin(c.agg(F.count(F.lit(1)).alias("n_click_after_view")))
-        .crossJoin(p.agg(F.count(F.lit(1)).alias("n_purchase_after_click")))
-    )
-
-
-def events_funnel_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Funnel conversion rates with Wilson 95% intervals: per stage
-    transition (view→click, click→purchase), the conversion
-    proportion and its Wilson score bounds — the uncertainty the bare
-    `events_funnel` counts don't carry (Wilson, not normal/Wald,
-    because funnel tails are exactly where p is small and n shrinks —
-    the regime Wald intervals are famously wrong in).
-
-    Scale: reuses the funnel's three user-keyed conditional minima
-    (single exchange family); everything after is a 1-row → 2-row
-    stack transpose and closed-form double arithmetic from exact
-    integer counts — written in the same order in both engines.
-    """
-    base = events_funnel(spark, sf_dir)
-    return funnel_ci_from_counts(base)
-
-
-def funnel_ci_from_counts(base: DataFrame) -> DataFrame:
-    """The Wilson-bound scan over the 1-row funnel count table —
-    shared by the batch query and the streaming drain
-    (`stream_funnel_ci` composes `stream_funnel`'s drained
-    counts)."""
-    stages = base.selectExpr(
-        "stack(2,"
-        " 'view->click', n_view, n_click_after_view,"
-        " 'click->purchase', n_click_after_view,"
-        " n_purchase_after_click"
-        ") AS (stage, n_base, n_conv)"
-    ).select(
-        "stage",
-        F.col("n_base").cast("long").alias("n_base"),
-        F.col("n_conv").cast("long").alias("n_conv"),
-    )
-    z = F.lit(1.96)
-    n = F.col("n_base").cast("double")
-    p = F.col("n_conv").cast("double") / n
-    denom = 1.0 + z * z / n
-    center = (p + z * z / (2.0 * n)) / denom
-    half = (
-        z
-        * F.sqrt(p * (1.0 - p) / n + z * z / (4.0 * n * n))
-        / denom
-    )
-    ok = F.col("n_base") > 0
-    return stages.select(
-        "stage",
-        "n_base",
-        "n_conv",
-        F.when(ok, quantize(p, 6)).alias("conv_rate"),
-        F.when(ok, quantize(center - half, 6)).alias("wilson_lo"),
-        F.when(ok, quantize(center + half, 6)).alias("wilson_hi"),
-    )
-
-
-def events_asof_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of enrich: each click gets the user's most recent
-    prior-or-equal view's value and time (operators/asof.py; oracle is
-    DuckDB's native ASOF LEFT JOIN — an independent implementation).
-    """
-    from ..operators.asof import asof_join_backward
-
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "ts_us", F.unix_micros("ts")
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "event_id",
-        "user_id",
-        "ts_us",
-        F.round("value", 2).alias("click_value"),
-    )
-    views = ev.filter(F.col("event_type") == "view").select(
-        "user_id", "ts_us", "value"
-    )
-    return asof_join_backward(
-        clicks,
-        views,
-        on="user_id",
-        ts_col="ts_us",
-        pick={"view_value": "value", "view_ts_us": "ts_us"},
-    ).select(
-        "event_id",
-        "user_id",
-        "ts_us",
-        "click_value",
-        F.round("view_value", 2).alias("view_value"),
-        "view_ts_us",
-    )
-
-
 _QUANTILES = [0.25, 0.5, 0.9, 0.99]
 
 
@@ -661,163 +536,6 @@ def events_dau_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PSI_SHIFT_GRID = (0.0, 5.0, 25.0, 100.0)  # planted shifts ($)
-
-
-def events_psi_injection_eval(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Drift-detector RESPONSE CURVE: plant a known mean shift into a
-    copy of the value distribution at several magnitudes and report
-    the PSI the monitor would read for each — turning "PSI > 0.25
-    means shifted" from folklore into a measured sensitivity curve
-    for THIS distribution (shift 0 must read ≈ 0; the curve shows
-    the smallest dollar shift the monitor can see).
-
-    Scale: one bucket-count partial agg per shift over the bounded
-    value grid (shifting by a constant only relabels buckets — the
-    counts fold map-side); everything after is per-bucket doubles.
-    """
-    ev = load_table(spark, sf_dir, "events").select(F.col("value"))
-    # ONE scan for every shift: explode the (tiny, literal) shift grid
-    # against the value column and fold all shifted histograms in a
-    # single map-side partial agg, materialized (shifts x buckets
-    # rows). Composed per shift the query re-scanned events 16x
-    # (base + shifted per grid point, each referenced twice); bucket
-    # arithmetic is unchanged (value + 0.0 is bit-identical to value,
-    # the grid holds doubles as before).
-    grid = F.array(*[F.lit(s) for s in PSI_SHIFT_GRID])
-    allc = (
-        ev.select(F.explode(grid).alias("shift"), "value")
-        .groupBy(
-            "shift",
-            F.floor((F.col("value") + F.col("shift")) / 10.0)
-            .cast("long")
-            .alias("bucket"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .transform(materialize)
-    )
-    base = allc.filter(F.col("shift") == 0.0).select(
-        "bucket", F.col("n").alias("n1")
-    )
-    per = []
-    for shift in PSI_SHIFT_GRID:
-        shifted = allc.filter(F.col("shift") == F.lit(shift)).select(
-            "bucket", F.col("n").alias("n2")
-        )
-        cells = base.join(shifted, "bucket", "full_outer").select(
-            "bucket",
-            F.coalesce(F.col("n1"), F.lit(0)).alias("n1"),
-            F.coalesce(F.col("n2"), F.lit(0)).alias("n2"),
-        )
-        tot = cells.agg(
-            F.sum("n1").cast("long").alias("t1"),
-            F.sum("n2").cast("long").alias("t2"),
-            F.count(F.lit(1)).cast("long").alias("b"),
-        )
-        j = cells.crossJoin(F.broadcast(tot))
-        p1 = (F.col("n1") + 1).cast("double") / (
-            F.col("t1") + F.col("b")
-        )
-        p2 = (F.col("n2") + 1).cast("double") / (
-            F.col("t2") + F.col("b")
-        )
-        contrib = (p2 - p1) * F.log(p2 / p1)
-        per.append(
-            j.agg(
-                F.lit(shift).alias("shift_dollars"),
-                quantize(F.sum(contrib), 6).alias("psi"),
-            )
-        )
-    out = per[0]
-    for frame in per[1:]:
-        out = out.unionByName(frame)
-    return out
-
-
-WM_ARRIVAL_BATCH = 1000  # event_id is the arrival sequence here
-WM_CANDIDATE_HOURS = (0, 1, 6, 24)
-
-
-def events_watermark_audit(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Watermark DESIGN from data: treat event_id as the arrival
-    sequence (micro-batches of 1000), track the high watermark each
-    batch inherits from all earlier batches, measure every event's
-    lateness against it, and report how many events each candidate
-    watermark delay (0/1/6/24 h) would DROP — the number you need
-    BEFORE setting `withWatermark`, instead of discovering silent
-    drops in production.
-
-    Scale: batch maxima are one partial agg (batches = rows/1000,
-    bounded); the inherited-watermark fold is a broadcast theta-join
-    over that bounded table; per-event lateness is a broadcast join
-    back onto the scan; candidates are 4 literal rows.
-
-    On THIS corpus arrival order equals event time, so the honest
-    report is all-zero drops ("any watermark is safe") — the
-    out-of-order measurement path is pinned by a synthetic shuffled
-    corpus in tests/test_stats.py.
-    """
-    ev = load_table(spark, sf_dir, "events").select(
-        (F.col("event_id") / WM_ARRIVAL_BATCH)
-        .cast("long")
-        .alias("ab"),
-        F.unix_micros("ts").alias("ts_us"),
-    )
-    batches = ev.groupBy("ab").agg(
-        F.max("ts_us").alias("mx")
-    )
-    earlier = batches.select(
-        F.col("ab").alias("ab2"), F.col("mx").alias("mx2")
-    )
-    hw = (
-        batches.join(F.broadcast(earlier), F.col("ab2") < F.col("ab"), "left")
-        .groupBy("ab")
-        .agg(F.max("mx2").alias("hw_before"))
-    )
-    late = ev.join(F.broadcast(hw), "ab").select(
-        F.greatest(
-            F.lit(0),
-            F.coalesce(F.col("hw_before") - F.col("ts_us"), F.lit(0)),
-        ).alias("late_us")
-    )
-    # ONE row, materialized: each of the 4 candidate-watermark output
-    # rows selects from this aggregate, and composed as plans each
-    # selection re-ran both events scans (census: 12 parquet scans)
-    tot = late.agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        *[
-            F.sum(
-                F.when(
-                    F.col("late_us") > h * 3_600_000_000, 1
-                ).otherwise(0)
-            )
-            .cast("long")
-            .alias(f"drop_{h}")
-            for h in WM_CANDIDATE_HOURS
-        ],
-    ).transform(materialize)
-    per = [
-        tot.select(
-            F.lit(h).cast("long").alias("watermark_hours"),
-            "n_events",
-            F.col(f"drop_{h}").alias("n_dropped"),
-            quantize(
-                F.col(f"drop_{h}").cast("double") / F.col("n_events"),
-                6,
-            ).alias("drop_share"),
-        )
-        for h in WM_CANDIDATE_HOURS
-    ]
-    out = per[0]
-    for frame in per[1:]:
-        out = out.unionByName(frame)
-    return out
-
-
 QTE_QS = (0.25, 0.5, 0.75, 0.9)
 
 
@@ -1012,200 +730,6 @@ def events_absorption(spark: SparkSession, sf_dir: str) -> DataFrame:
     return absorption_from_pairs(pairs)
 
 
-MK_START, MK_END = "START", "END"
-
-
-def attribution_journey_pairs(ev: DataFrame) -> DataFrame:
-    """(src, dst, n) transition counts over per-user journeys
-    truncated at the FIRST purchase — START fronts every journey,
-    non-converting journeys close with END — the mergeable
-    (types+2)²-bounded state the Markov attribution solver reads
-    (shared with its streaming twin)."""
-    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    wa = Window.partitionBy("user_id")
-    s = ev.select("user_id", "event_id", "ts_us", "event_type")
-    s = s.withColumn(
-        "buy_key",
-        F.min(
-            F.when(
-                F.col("event_type") == ABSORB_TARGET,
-                F.struct("ts_us", "event_id"),
-            )
-        ).over(wa),
-    )
-    kept = s.filter(
-        F.col("buy_key").isNull()
-        | (F.struct("ts_us", "event_id") <= F.col("buy_key"))
-    )
-    trans = kept.withColumn(
-        "src", F.lag("event_type").over(w)
-    ).select(
-        F.coalesce("src", F.lit(MK_START)).alias("src"),
-        F.col("event_type").alias("dst"),
-    )
-    last_nc = (
-        kept.filter(F.col("buy_key").isNull())
-        .groupBy("user_id")
-        .agg(
-            F.max(F.struct("ts_us", "event_id", "event_type")).alias(
-                "m"
-            )
-        )
-        .select(
-            F.col("m.event_type").alias("src"),
-            F.lit(MK_END).alias("dst"),
-        )
-    )
-    return trans.unionByName(last_nc).groupBy("src", "dst").agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    )
-
-
-def markov_removal_effects(cells):
-    """Pure solver over (src, dst, n) transition triples: base
-    conversion probability from START, per-channel removal effects
-    (walks entering the channel lost to END — redirected, NOT
-    renormalized), and the normalized attribution shares. Returns
-    (channels, base, effects, shares, n_in, n_out, converged) —
-    numpy-pinned against analytic chains in unit tests."""
-    import numpy as np
-
-    # END is ALWAYS part of the state space: without it, removing a
-    # channel would renormalize the remaining transitions instead of
-    # losing the redirected walks (silently zeroing every removal
-    # effect on fully-converting chains)
-    types = sorted(
-        {s for s, _, _ in cells}
-        | {d for _, d, _ in cells}
-        | {MK_END}
-    )
-    idx = {t: i for i, t in enumerate(types)}
-    k = len(types)
-    counts = np.zeros((k, k))
-    for s, d, n in cells:
-        counts[idx[s], idx[d]] = n
-    tgt = idx.get(ABSORB_TARGET)
-    start = idx.get(MK_START)
-    base_h, ok_all = absorb_probs(counts, tgt)
-    base = float(base_h[start]) if start is not None else 0.0
-    channels = [
-        t for t in types if t not in (MK_START, MK_END, ABSORB_TARGET)
-    ]
-    res = {}
-    for c in channels:
-        ci = idx[c]
-        mod = counts.copy()
-        mod[:, idx[MK_END]] += mod[:, ci]
-        mod[:, ci] = 0.0
-        mod[ci, :] = 0.0
-        h, ok = absorb_probs(mod, tgt)
-        ok_all = ok_all and ok
-        conv = float(h[start]) if start is not None else 0.0
-        res[c] = max(0.0, 1.0 - (conv / base)) if base > 0 else 0.0
-    tot_re = sum(res.values())
-    shares = {
-        c: (res[c] / tot_re if tot_re > 0 else 0.0) for c in channels
-    }
-    n_in = {c: int(counts[:, idx[c]].sum()) for c in channels}
-    n_out = {c: int(counts[idx[c], :].sum()) for c in channels}
-    return channels, base, res, shares, n_in, n_out, ok_all
-
-
-def attribution_markov_from_pairs(pairs: DataFrame) -> DataFrame:
-    """Markov REMOVAL-EFFECT attribution (Anderl et al.) over drained
-    journey transition counts: base conversion probability =
-    absorption from START into purchase; each channel's removal
-    effect = how much of that probability dies when walks entering
-    the channel are lost to END instead (transitions redirected, NOT
-    renormalized — the standard node-removal semantics); attribution
-    share = normalized removal effects. The principled multi-touch
-    answer a first/last-touch table cannot give.
-
-    Same discipline as `events_absorption`: the corpus-sized work is
-    the transition agg; the matrix is (types+2)² cells (a 1-matrix
-    driver decision); the catalog emits the exact transition counts
-    (SQL-twinned) plus the solver's invariants as literal booleans —
-    the shares themselves are numpy-pinned in unit tests."""
-    spark = pairs.sparkSession
-    cells = [
-        (r["src"], r["dst"], r["n"]) for r in pairs.collect()
-    ]  # (K+2)^2 rows — bounded by types
-    (
-        channels,
-        base,
-        res,
-        shares,
-        n_in_d,
-        n_out_d,
-        ok_all,
-    ) = markov_removal_effects(cells)
-    shares_ok = (
-        abs(sum(shares.values()) - 1.0) < 1e-9
-        if sum(res.values()) > 0
-        else True
-    )
-    in_unit = all(0.0 <= v <= 1.0 + 1e-12 for v in res.values())
-    # solver_converged now has a COMPUTED oracle twin (recursive-CTE
-    # reachability, VERDICT r7 item 7): every channel must reach an
-    # absorbing state (purchase or END) through the transition graph.
-    # Mirror the exact same structural condition here so both engines
-    # scream on the same data; the remaining two booleans stay
-    # invariants-as-literals (they need the numpy solve) and raise
-    # with the diagnosis instead of an opaque hash mismatch (r6).
-    adj: dict[str, set[str]] = {}
-    for s, d, _n in cells:
-        adj.setdefault(d, set()).add(s)
-    reach = {MK_END, ABSORB_TARGET}
-    frontier = list(reach)
-    while frontier:
-        nxt = frontier.pop()
-        for src in adj.get(nxt, ()):
-            if src not in reach:
-                reach.add(src)
-                frontier.append(src)
-    reaches_absorbing = all(c in reach for c in channels)
-    ok_all = ok_all and reaches_absorbing
-    if not (ok_all and in_unit and shares_ok):
-        raise ValueError(
-            "markov removal-effect solver invariants violated: "
-            f"converged={ok_all} (reaches_absorbing="
-            f"{reaches_absorbing}) removal_effect_in_unit={in_unit} "
-            f"shares_sum_to_one={shares_ok} (base={base!r}); the "
-            "transition counts are inconsistent with an absorbing "
-            "chain — inspect the journey pair extraction"
-        )
-    rows = [
-        (
-            c,
-            int(n_in_d[c]),
-            int(n_out_d[c]),
-            bool(ok_all),
-            bool(in_unit),
-            bool(shares_ok),
-        )
-        for c in channels
-    ]
-    return spark.createDataFrame(
-        rows,
-        "event_type string, n_in long, n_out long,"
-        " solver_converged boolean, removal_effect_in_unit boolean,"
-        " shares_sum_to_one boolean",
-    )
-
-
-def events_attribution_markov(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Markov removal-effect attribution over first-purchase-truncated
-    user journeys — see :func:`attribution_markov_from_pairs`."""
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "ts_us", F.unix_micros("ts")
-    )
-    return attribution_markov_from_pairs(
-        attribution_journey_pairs(ev)
-    )
-
-
 DP_USER_CLIP = 20  # max events any one user contributes per type
 DP_USER_EPS = 1.0
 
@@ -1353,8 +877,8 @@ def events_adoption_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: first-seen day is one user-keyed partial agg collapsing to
     a days-bounded table; the cumulative sum runs over the
-    calendar-bounded D² self-join (the `events_changepoint` pattern —
-    NO unpartitioned window); total users is a 1-row broadcast.
+    calendar-bounded D² self-join (NO unpartitioned window); total
+    users is a 1-row broadcast.
     Exact integers, one division.
     """
     ev = load_table(spark, sf_dir, "events")
@@ -1397,89 +921,6 @@ def adoption_from_first_seen(first: DataFrame) -> DataFrame:
         quantize(
             F.col("cum_users").cast("double") / F.col("n_total"), 6
         ).alias("penetration"),
-    )
-
-
-INCIDENT_LOW_FACTOR = 0.5  # incident = volume below this × median
-
-
-def events_incident_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incident detection: contiguous runs of LOW-volume hours per
-    event type — hours (INCLUDING fully silent ones, the worst
-    outages, materialized from the calendar) whose volume falls below
-    half the type's median observed hour — reported as an incident
-    table with start/end/duration and depth. `events_coverage` says
-    how much silence exists; this says WHEN each incident started and
-    ended, the page-the-oncall view.
-
-    Scale: per-type span + exact median are a types-bounded agg; the
-    calendar materializes via sequence-explode bounded by span hours
-    (never events-sized); islands are the gaps-and-islands cumsum on
-    the type-partitioned calendar — one shuffle; exact integers plus
-    one interpolated median.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    hourly = (
-        ev.withColumn("hour", F.date_trunc("hour", F.col("ts")))
-        .groupBy("event_type", "hour")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-    return incidents_from_hourly(hourly)
-
-
-def incidents_from_hourly(hourly: DataFrame) -> DataFrame:
-    """The incident scan over a (event_type, hour, n) series — shared
-    by the batch query and the streaming drain (`stream_incident_table`
-    accumulates the same tumbling hourly state at ingest)."""
-    # keys rename on the self-lineage agg (drained-relation rule)
-    span = hourly.select(
-        F.col("event_type").alias("et_s"),
-        F.col("hour").alias("hour_s"),
-        F.col("n").alias("n_s"),
-    ).groupBy("et_s").agg(
-        F.min("hour_s").alias("h0"),
-        F.max("hour_s").alias("h1"),
-        F.round(F.expr("percentile(n_s, 0.5)"), 2).alias("med"),
-    )
-    cal = span.select(
-        F.col("et_s").alias("event_type"),
-        "med",
-        F.explode(
-            F.sequence(
-                F.col("h0"), F.col("h1"), F.expr("INTERVAL 1 HOUR")
-            )
-        ).alias("hour"),
-    )
-    full = cal.join(hourly, ["event_type", "hour"], "left").select(
-        "event_type",
-        "hour",
-        "med",
-        F.coalesce(F.col("n"), F.lit(0)).cast("long").alias("n"),
-    )
-    low = F.col("n").cast("double") < INCIDENT_LOW_FACTOR * F.col("med")
-    w = Window.partitionBy("event_type").orderBy("hour")
-    flagged = full.withColumn("is_low", low).withColumn(
-        "grp",
-        F.sum((~F.col("is_low")).cast("long")).over(w),
-    )
-    return (
-        flagged.filter(F.col("is_low"))
-        .groupBy("event_type", "grp")
-        .agg(
-            F.min("hour").alias("start_hour"),
-            F.max("hour").alias("end_hour"),
-            F.count(F.lit(1)).cast("long").alias("n_hours"),
-            F.min("n").cast("long").alias("min_volume"),
-            F.first("med").alias("median_volume"),
-        )
-        .select(
-            "event_type",
-            "start_hour",
-            "end_hour",
-            "n_hours",
-            "min_volume",
-            "median_volume",
-        )
     )
 
 
@@ -1752,143 +1193,6 @@ def forecast_from_cells(cells: DataFrame) -> DataFrame:
     )
 
 
-def events_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUSUM changepoint detection on the daily event-count series:
-    the day where the cumulative deviation from the overall mean
-    peaks (the classic single-changepoint estimate), with the mean
-    level before/after and the shift — the drift monitor that says
-    WHEN traffic changed, complementing `events_anomaly_mad` (which
-    says WHERE it's abnormal).
-
-    Scale: the series is a day-keyed partial agg (bounded by
-    calendar days, never events); the cumulative sums come from a
-    calendar-bounded self-join of that tiny table (D² pairs, D =
-    days) — no unpartitioned cumsum window — and every statistic is
-    an exact integer sum with ONE final multiply/divide, so there is
-    no float-summation-order drift to quantize away.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    # days-bounded, materialized once: the CUSUM fold references this
-    # series 5 ways and composed as plans each re-scanned events
-    # (census: 8 parquet scans; the streaming drain passes an
-    # already-bounded state table, so the shared helper is unchanged)
-    daily = ev.groupBy(
-        F.date_trunc("day", F.col("ts")).alias("day")
-    ).agg(F.count(F.lit(1)).cast("long").alias("n")).transform(materialize)
-    return changepoint_from_daily(daily)
-
-
-def changepoint_from_daily(daily: DataFrame) -> DataFrame:
-    """The CUSUM-changepoint scan over a (day, n) series — shared by
-    the batch query and the streaming drain (`stream_changepoint`
-    accumulates the same calendar-bounded state at ingest)."""
-    # keys rename on the self-lineage agg (drained-relation rule)
-    tot = daily.select(F.col("n").alias("n_t")).agg(
-        F.sum("n_t").alias("total_n"),
-        F.count(F.lit(1)).alias("n_days"),
-        (F.sum("n_t").cast("double") / F.count(F.lit(1))).alias(
-            "mean_d"
-        ),
-    )
-    a = daily.select(F.col("day").alias("d"), F.col("n").alias("na"))
-    b = daily.select(F.col("day").alias("db"), F.col("n").alias("nb"))
-    cus = (
-        # explicit broadcast: days-bounded theta join — see
-        # adoption_from_first_seen's note on stats-less inputs
-        a.join(F.broadcast(b), F.col("db") <= F.col("d"))
-        .groupBy("d")
-        .agg(
-            F.sum("nb").alias("cum_n"),
-            F.count(F.lit(1)).alias("k"),
-        )
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "d",
-            quantize(
-                F.abs(
-                    F.col("cum_n").cast("double")
-                    - F.col("k") * F.col("mean_d")
-                ),
-                6,
-            ).alias("abs_s"),
-        )
-    )
-    mx = cus.agg(F.max("abs_s").alias("mx"))
-    cp = (
-        cus.crossJoin(F.broadcast(mx))
-        .filter(F.col("abs_s") == F.col("mx"))
-        .agg(F.min("d").alias("cp_day"), F.first("mx").alias("max_cusum"))
-    )
-    return (
-        daily.crossJoin(F.broadcast(cp))
-        .crossJoin(F.broadcast(tot))
-        .agg(
-            F.first("n_days").cast("long").alias("n_days"),
-            quantize(F.first("mean_d"), 4).alias("mean_daily"),
-            F.first("cp_day").alias("cp_day"),
-            quantize(F.first("max_cusum"), 4).alias("max_cusum"),
-            quantize(
-                F.sum(F.when(F.col("day") <= F.col("cp_day"), F.col("n")))
-                .cast("double")
-                / F.count(
-                    F.when(F.col("day") <= F.col("cp_day"), F.lit(1))
-                ),
-                4,
-            ).alias("mean_before"),
-            quantize(
-                F.sum(F.when(F.col("day") > F.col("cp_day"), F.col("n")))
-                .cast("double")
-                / F.count(
-                    F.when(F.col("day") > F.col("cp_day"), F.lit(1))
-                ),
-                4,
-            ).alias("mean_after"),
-        )
-    )
-
-
-def events_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily cohort-retention triangle: for each first-active-day
-    cohort and day offset, how many (and what share of) the cohort's
-    users were active again — THE canonical growth-analytics
-    artifact, complementing the hour-over-hour tier
-    (`events_retention_hourly`) and the daily split
-    (`events_new_vs_returning`).
-
-    Scale: first-active day = one user-keyed partial agg; the (day,
-    user) distinct activity joins back on the co-partitioned user key
-    (AQE-decided); the triangle agg is bounded by days², never by
-    events; cohort sizes broadcast back for the rate.
-    """
-    ev = load_table(spark, sf_dir, "events").select(
-        F.date_trunc("day", F.col("ts")).alias("day"), "user_id"
-    )
-    act = ev.distinct()
-    first = act.groupBy("user_id").agg(F.min("day").alias("cohort_day"))
-    tri = (
-        act.join(first, "user_id")
-        .groupBy(
-            "cohort_day",
-            F.datediff(F.col("day"), F.col("cohort_day"))
-            .cast("long")
-            .alias("day_offset"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("n_active"))
-    )
-    sizes = first.groupBy("cohort_day").agg(
-        F.count(F.lit(1)).cast("long").alias("cohort_size")
-    )
-    return tri.join(F.broadcast(sizes), "cohort_day").select(
-        "cohort_day",
-        "day_offset",
-        "cohort_size",
-        "n_active",
-        quantize(
-            F.col("n_active").cast("double") / F.col("cohort_size"), 6
-        ).alias("retention"),
-    )
-
-
 def events_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-way additive decomposition of the hourly count series:
     observed = day effect + hour-of-day effect − grand mean +
@@ -2068,91 +1372,6 @@ def residual_screen_from_decomposed(dec: DataFrame) -> DataFrame:
             "residual",
             quantize(F.col("med_r"), 4).alias("med_residual"),
             quantize(F.col("mad_r"), 4).alias("mad_residual"),
-        )
-    )
-
-
-def events_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kaplan-Meier survival of user lifetimes (days from first to
-    last activity; users still active on the corpus' final day are
-    right-censored): per day-offset, the at-risk count, churn and
-    censor counts, the hazard, and the cumulative survival estimate —
-    the churn-curve tier above the retention triangle (27w gives
-    per-cohort shares; this gives the corpus-level lifetime law with
-    censoring handled correctly).
-
-    Scale: lifetimes are one user-keyed partial agg; at-risk and
-    prefix-product terms come from the calendar-bounded D² self-join
-    of the per-offset table (never the user table); hazards quantize
-    1e-9 and the survival product runs as exp(Σ ln) with an exact
-    zero-factor guard — identical branch logic in both engines.
-    """
-    ev = load_table(spark, sf_dir, "events").select(
-        F.date_trunc("day", F.col("ts")).alias("day"), "user_id"
-    )
-    mx = ev.agg(F.max("day").alias("maxd"))
-    per = (
-        ev.groupBy("user_id")
-        .agg(F.min("day").alias("fd"), F.max("day").alias("ld"))
-        .crossJoin(F.broadcast(mx))
-        .select(
-            F.datediff(F.col("ld"), F.col("fd"))
-            .cast("long")
-            .alias("t"),
-            (F.col("ld") == F.col("maxd")).cast("long").alias("cens"),
-        )
-    )
-    # day-offsets-bounded, materialized once: at-risk, base, and the
-    # prefix-product branches all re-join this table, and composed as
-    # plans each branch re-ran the user-keyed lifetime agg over the
-    # events scan (census: 18 parquet scans for this query)
-    offs = per.groupBy("t").agg(
-        F.count(F.lit(1)).alias("n_ending"),
-        F.sum("cens").alias("n_censored"),
-        (F.count(F.lit(1)) - F.sum("cens")).alias("n_churned"),
-    ).transform(materialize)
-    a = offs.select(F.col("t").alias("tt"))
-    # at-risk at t = users whose lifetime >= t (calendar-bounded join)
-    risk = (
-        a.join(F.broadcast(offs), F.col("t") >= F.col("tt"))
-        .groupBy("tt")
-        .agg(F.sum("n_ending").alias("n_at_risk"))
-    )
-    base = offs.join(risk, offs.t == risk.tt).select(
-        "t",
-        "n_at_risk",
-        "n_churned",
-        "n_censored",
-        quantize(
-            F.col("n_churned").cast("double") / F.col("n_at_risk"), 9
-        ).alias("hazard"),
-    )
-    f = 1 - F.col("hazard")
-    terms = base.select(
-        "t",
-        f.alias("f"),
-        F.when(f > 0, F.log(f)).otherwise(F.lit(0.0)).alias("lnf"),
-    )
-    prefix = (
-        base.select(F.col("t").alias("pt"))
-        .join(F.broadcast(terms), F.col("t") <= F.col("pt"))
-        .groupBy("pt")
-        .agg(
-            F.min("f").alias("min_f"),
-            F.sum("lnf").alias("sum_lnf"),
-        )
-    )
-    return (
-        base.join(prefix, base.t == prefix.pt)
-        .select(
-            "t",
-            F.col("n_at_risk").cast("long").alias("n_at_risk"),
-            F.col("n_churned").cast("long").alias("n_churned"),
-            F.col("n_censored").cast("long").alias("n_censored"),
-            quantize(F.col("hazard"), 6).alias("hazard"),
-            F.when(F.col("min_f") <= 0, F.lit(0.0))
-            .otherwise(quantize(F.exp(F.col("sum_lnf")), 6))
-            .alias("survival"),
         )
     )
 
@@ -2346,120 +1565,6 @@ def session_stats_from_per(per: DataFrame) -> DataFrame:
     )
 
 
-SLO_ERROR_TARGET = 0.05  # error events may be at most 5% of traffic
-
-
-def events_error_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SLO error-budget burn-down per day: daily error share vs the
-    5% target, plus the CUMULATIVE budget consumed since the start of
-    the window (burn > 1 means the error budget is spent and releases
-    should freeze) — the SRE reliability report over the event
-    stream's `error` type.
-
-    Scale: one (day) partial agg with conditional error counts; the
-    cumulative sums run over the days-bounded series via the
-    calendar-bounded broadcast self-join (days², never events) — no
-    unpartitioned running window; every ratio is an exact integer
-    fraction.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.date_trunc("day", F.col("ts")).alias("day")
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.sum((F.col("event_type") == "error").cast("int"))
-        .cast("long")
-        .alias("n_errors"),
-    )
-    return error_budget_from_daily(daily)
-
-
-def error_budget_from_daily(daily: DataFrame) -> DataFrame:
-    """The burn-down computation over a (day, n_events, n_errors)
-    series — shared by the batch query and the streaming drain
-    (`stream_error_budget` accumulates the same days-bounded series
-    at ingest)."""
-    a = daily.select(F.col("day").alias("d"))
-    cum = (
-        a.join(F.broadcast(daily), F.col("day") <= F.col("d"))
-        .groupBy("d")
-        .agg(
-            F.sum("n_events").cast("long").alias("cum_events"),
-            F.sum("n_errors").cast("long").alias("cum_errors"),
-        )
-    )
-    j = daily.join(cum, daily.day == cum.d)
-    return j.select(
-        "day",
-        "n_events",
-        "n_errors",
-        quantize(
-            F.col("n_errors").cast("double") / F.col("n_events"), 6
-        ).alias("error_share"),
-        quantize(
-            F.col("cum_errors").cast("double")
-            / (F.lit(SLO_ERROR_TARGET) * F.col("cum_events")),
-            6,
-        ).alias("budget_burn"),
-        (
-            F.col("cum_errors").cast("double")
-            > F.lit(SLO_ERROR_TARGET) * F.col("cum_events")
-        ).alias("budget_exhausted"),
-    )
-
-
-def events_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DAU/WAU stickiness per day: what share of the ISO week's active
-    users showed up on each given day — THE product-engagement ratio
-    (a rising DAU with flat stickiness means acquisition, not habit).
-    Complements the distinct tiers (27f exact/HLL) and the rolling
-    window (27j) with the canonical ratio form.
-
-    Scale: one distinct (day, user) projection feeds BOTH counts —
-    daily partial agg and weekly re-agg of the same distinct table —
-    then a days-bounded broadcast join; ratios are exact integer
-    fractions.
-    """
-    act = (
-        load_table(spark, sf_dir, "events")
-        .select(
-            F.date_trunc("day", F.col("ts")).alias("day"), "user_id"
-        )
-        .distinct()
-    )
-    return stickiness_from_act(act)
-
-
-def stickiness_from_act(act: DataFrame) -> DataFrame:
-    """The DAU/WAU rollup over a distinct (day, user_id) activity
-    table — shared by the batch query and the streaming drain
-    (`stream_stickiness` gets the same distinct pairs from the
-    cohort-day ingest fold)."""
-    dau = act.groupBy("day").agg(
-        F.count(F.lit(1)).cast("long").alias("dau")
-    )
-    wk = act.select(
-        F.date_trunc("week", F.col("day")).alias("week"), "user_id"
-    ).distinct()
-    wau = wk.groupBy("week").agg(
-        F.count(F.lit(1)).cast("long").alias("wau")
-    )
-    return (
-        dau.withColumn("week", F.date_trunc("week", F.col("day")))
-        .join(F.broadcast(wau), "week")
-        .select(
-            "day",
-            "dau",
-            "wau",
-            quantize(F.col("dau").cast("double") / F.col("wau"), 6)
-            .alias("stickiness"),
-        )
-    )
-
-
-UPTIME_WINDOW_US = 3600 * 1000000  # liveness window: 1 heartbeat hour
-
-
 def events_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Calendar-coverage completeness per event type: observed hours
     vs the type's own active span, plus the LONGEST silent streak in
@@ -2505,57 +1610,6 @@ def coverage_from_hourly(hourly: DataFrame) -> DataFrame:
             / F.col("span_hours"),
             6,
         ).alias("coverage"),
-    )
-
-
-def events_uptime(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heartbeat uptime per user (the hypertable `heartbeat_agg`
-    primitive): treating each event as a liveness beat that keeps the
-    user 'up' for the next hour, the covered time is the union of
-    those intervals — computed WITHOUT interval merging as
-    Σ min(next_beat − beat, W) + W per user (exact for a union of
-    equal-length right-open intervals), plus the share of the user's
-    active span and the count of gaps (downtimes).
-
-    Scale: one user-partitioned lead window (the sessionization
-    sort-shuffle) folding into a user-keyed partial agg — all exact
-    integer microseconds.
-    """
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id",
-        F.unix_micros("ts").alias("ts_us"),
-        "event_id",
-    )
-    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    x = ev.withColumn("next_us", F.lead("ts_us").over(w))
-    d = F.col("next_us") - F.col("ts_us")
-    cov = F.when(
-        F.col("next_us").isNotNull(),
-        F.least(d, F.lit(UPTIME_WINDOW_US)),
-    ).otherwise(F.lit(UPTIME_WINDOW_US))
-    gap = F.when(
-        F.col("next_us").isNotNull() & (d > UPTIME_WINDOW_US), 1
-    ).otherwise(0)
-    per = x.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_beats"),
-        F.sum(cov).cast("long").alias("covered_us"),
-        F.sum(gap).cast("long").alias("n_gaps"),
-        F.min("ts_us").alias("first_us"),
-        F.max("ts_us").alias("last_us"),
-    )
-    span = F.col("last_us") - F.col("first_us") + F.lit(
-        UPTIME_WINDOW_US
-    )
-    return per.select(
-        "user_id",
-        "n_beats",
-        "n_gaps",
-        "covered_us",
-        span.cast("long").alias("span_us"),
-        quantize(
-            F.col("covered_us").cast("double") / span.cast("double"),
-            6,
-        ).alias("uptime_share"),
     )
 
 
@@ -2710,124 +1764,6 @@ def scorecard_from_backtest(fc: DataFrame) -> DataFrame:
             F.avg(F.col("forecast") - F.col("actual")), 4
         ).alias("bias"),
         quantize(F.max("abs_err"), 4).alias("worst_abs_err"),
-    )
-
-
-def events_anomaly_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Consensus anomaly screen: every hour flagged by at least one of
-    the three hour-level detectors — global 3σ band (exact-moment
-    z), seasonal median/MAD residual band (`events_anomaly_residual`),
-    EWMA control breach (`events_ewma_control`) — with per-method
-    votes. Hours flagged by 2+ independent methods are the page-worthy
-    ones; single-method flags are each detector's known blind spots
-    (the reason ensembles exist).
-
-    Scale: three hours-bounded flag sets union (no outer-join
-    ladder), one hour-keyed vote agg, one join back to the tiny
-    hourly series; the global band uses EXACT integer moments, not
-    engine stddev (whose online accumulation is float-order
-    sensitive). Composed as independent plans each detector re-scans
-    events; at 100 TB materialize the hourly series once and feed
-    `ewma_from_hourly` + the residual/global bands from it — one
-    scan, same outputs.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    # hours-bounded, materialized once: the ensemble references this
-    # series 5+ ways (global stats, seasonal decompose, EWMA, base
-    # join) and composed-as-plans each way re-scanned events (the
-    # census counted 23 parquet scans); this is the docstring's own
-    # "materialize the hourly series once" prescription, applied
-    hourly = ev.groupBy(
-        F.date_trunc("hour", F.col("ts")).alias("hour")
-    ).agg(F.count(F.lit(1)).cast("long").alias("n")).transform(materialize)
-    return ensemble_from_hourly(hourly)
-
-
-def ensemble_from_hourly(hourly: DataFrame) -> DataFrame:
-    """The three-detector consensus over an (hour, n) series — the
-    one-scan composition the batch docstring prescribes for 100 TB,
-    shared by the batch query and the streaming drain
-    (`stream_anomaly_ensemble`): global 3σ band inline, seasonal
-    band via the shared decomposition scan, EWMA via
-    `ewma_from_hourly`."""
-    # keys rename on the self-lineage aggs/joins (drained rule)
-    st = hourly.select(F.col("n").alias("n_s")).agg(
-        F.count(F.lit(1)).cast("long").alias("cnt"),
-        F.sum("n_s").cast("long").alias("sx"),
-        F.sum(F.col("n_s") * F.col("n_s")).cast("long").alias("sxx"),
-    )
-    mean = F.col("sx").cast("double") / F.col("cnt")
-    var = (
-        F.col("cnt") * F.col("sxx") - F.col("sx") * F.col("sx")
-    ).cast("double") / (F.col("cnt") * (F.col("cnt") - 1)).cast("double")
-    g = (
-        hourly.crossJoin(F.broadcast(st))
-        .filter(F.abs(F.col("n") - mean) > 3 * F.sqrt(var))
-        .select("hour", F.lit("global").alias("method"))
-    )
-    r = residual_screen_from_decomposed(
-        decompose_from_hourly(hourly)
-    ).select("hour", F.lit("seasonal").alias("method"))
-    e = (
-        ewma_from_hourly(hourly)
-        .filter(F.col("breach"))
-        .select("hour", F.lit("ewma").alias("method"))
-    )
-    votes = (
-        g.unionByName(r)
-        .unionByName(e)
-        .groupBy("hour")
-        .agg(
-            (F.sum((F.col("method") == "global").cast("int")) > 0)
-            .alias("by_global"),
-            (F.sum((F.col("method") == "seasonal").cast("int")) > 0)
-            .alias("by_seasonal"),
-            (F.sum((F.col("method") == "ewma").cast("int")) > 0)
-            .alias("by_ewma"),
-            F.count(F.lit(1)).cast("long").alias("votes"),
-        )
-    )
-    base = hourly.select(
-        F.col("hour").alias("hour_b"), F.col("n").alias("n_b")
-    )
-    return votes.join(
-        base, F.col("hour") == F.col("hour_b")
-    ).select(
-        "hour",
-        F.col("n_b").alias("n_events"),
-        "by_global",
-        "by_seasonal",
-        "by_ewma",
-        "votes",
-    )
-
-
-def events_churn_half_life(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Churn half-life: the first lifetime day-offset where the
-    Kaplan-Meier survival estimate drops to ≤ 0.5 — the one-number
-    retention summary an exec review actually quotes ("half our users
-    are gone after N days"), distilled from the full censored curve
-    (`events_survival`). Also reports the terminal survival level and
-    whether the median was even reached inside the observation window.
-
-    Scale: composes the offsets-bounded survival table; the summary
-    is one tiny conditional-min aggregate.
-    """
-    sv = events_survival(spark, sf_dir)
-    agg = sv.agg(
-        F.count(F.lit(1)).cast("long").alias("n_offsets"),
-        F.min(
-            F.when(F.col("survival") <= 0.5, F.col("t"))
-        ).alias("half_life_days"),
-        quantize(F.max_by("survival", "t"), 6).alias(
-            "terminal_survival"
-        ),
-    )
-    return agg.select(
-        "n_offsets",
-        "half_life_days",
-        "terminal_survival",
-        F.col("half_life_days").isNotNull().alias("median_reached"),
     )
 
 
@@ -3143,116 +2079,6 @@ def srm_from_users(users: DataFrame) -> DataFrame:
     )
 
 
-def events_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUSUM control chart on the per-type hourly count series: the
-    one-sided cumulative-sum statistic S_i = max(0, S_{i-1} + (x_i −
-    μ)) flags sustained upward drift that per-hour z-scores
-    (`events_hourly_anomaly`) and EWMA level tracking
-    (`events_ewma_control`) both smear out — CUSUM is the classic
-    fastest detector of a small persistent shift (Page 1954).
-
-    The recursion is NOT computed recursively: it has the closed form
-    S_i = P_i − min(0, min_{j≤i} P_j) with P the prefix sum of
-    centered counts, so two stacked running windows (sum, then min)
-    over the hours-bounded per-type series express it exactly.
-
-    Exactness: centering multiplies through by the per-type hour
-    count — Z_i = N·x_i − Σx − N·k is an exact integer because the
-    allowance k = ceil(σ/2) is rounded UP TO AN INTEGER (both engines
-    derive σ from the same exact integer moments N, Σx, Σx², so their
-    ceil agrees bit-for-bit); P, the running min, and S never touch a
-    float until the final display division. A k=0 variant is NOT
-    sound: the drift-free reflected walk's max grows as σ·√n, so any
-    fixed fence eventually false-alarms on a long quiet series —
-    Page's allowance gives the walk negative drift and a stationary
-    quiet distribution, fenced at the classic h = 5σ.
-
-    Scale: windows run over the (type, hour) partial agg — calendar-
-    bounded, never events-sized — partitioned by event_type; the
-    moment table is a types-bounded broadcast.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    hourly = (
-        ev.withColumn("hour", F.date_trunc("hour", F.col("ts")))
-        .groupBy("event_type", "hour")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
-    )
-    return cusum_from_hourly(hourly)
-
-
-def cusum_from_hourly(hourly: DataFrame) -> DataFrame:
-    """The CUSUM computation over a (event_type, hour, n_events)
-    series — shared by the batch query and the streaming drain
-    (`stream_cusum` accumulates the same hours × types tumbling state
-    at ingest, the `ewma_from_hourly` discipline)."""
-    # keys rename on the self-lineage join so a drained streaming
-    # relation (which cannot re-alias duplicate attribute ids)
-    # resolves cleanly
-    stats = hourly.select(
-        F.col("event_type").alias("et_s"),
-        F.col("n_events").alias("n_s"),
-    ).groupBy("et_s").agg(
-        F.count(F.lit(1)).cast("long").alias("n_hours"),
-        F.sum("n_s").cast("long").alias("sn"),
-        F.sum(F.col("n_s") * F.col("n_s"))
-        .cast("decimal(38,0)")
-        .alias("sq"),
-    )
-    nh0 = F.col("n_hours").cast("double")
-    vn0 = nh0 * F.col("sq").cast("double") - F.col("sn").cast(
-        "double"
-    ) * F.col("sn").cast("double")
-    stats = stats.withColumn(
-        "k",
-        F.when(
-            (F.col("n_hours") > 1) & (vn0 > 0),
-            F.ceil(F.sqrt(vn0 / (nh0 * (nh0 - 1.0))) / 2.0),
-        )
-        .otherwise(F.lit(0))
-        .cast("long"),
-    )
-    j = hourly.join(
-        F.broadcast(stats), F.col("event_type") == F.col("et_s")
-    )
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("hour")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    z = (
-        F.col("n_hours") * (F.col("n_events") - F.col("k"))
-        - F.col("sn")
-    ).cast("long")
-    cur = j.select(
-        "event_type",
-        "hour",
-        "n_events",
-        "n_hours",
-        "sn",
-        "sq",
-        F.sum(z).over(w).alias("p"),
-    )
-    # same window spec → Spark folds both passes into one WindowExec
-    scored = cur.withColumn(
-        "s", F.col("p") - F.least(F.min("p").over(w), F.lit(0))
-    )
-    nh = F.col("n_hours").cast("double")
-    var_num = nh * F.col("sq").cast("double") - F.col("sn").cast(
-        "double"
-    ) * F.col("sn").cast("double")
-    sigma5 = 5.0 * F.sqrt(var_num / (nh * (nh - 1.0)))
-    cusum = F.col("s").cast("double") / F.col("n_hours")
-    return scored.select(
-        "event_type",
-        "hour",
-        "n_events",
-        quantize(cusum, 4).alias("cusum"),
-        F.when(
-            (F.col("n_hours") > 1), F.when(var_num > 0, cusum > sigma5)
-        ).alias("alarm"),
-    )
-
-
 def events_hour_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hour-of-day concentration per event type: how lumpy is the
     diurnal profile?  Emits the active hour-of-day count, the peak
@@ -3490,87 +2316,6 @@ def events_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_mttr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MTTR / MTBF reliability rollup per event type over the
-    incident table: mean incident duration (time-to-recover), mean
-    hours between incident starts (time-between-failures, via the
-    exact telescoping identity (last−first)/(k−1) — no window
-    needed), and availability = 1 − incident-hours/span-hours. The
-    SRE one-pager `events_incident_table` (when) and
-    `events_error_budget` (how much is left) bracket; this is the
-    trend input to both.
-
-    Scale: rides the incident scan (calendar-bounded), then one
-    types-bounded fold + a types-keyed join against the span table.
-    Exact integers until three divisions."""
-    return mttr_from_hourly(
-        hourly_type_counts(load_table(spark, sf_dir, "events"))
-    )
-
-
-def hourly_type_counts(ev: DataFrame) -> DataFrame:
-    """(event_type, hour, n) tumbling counts — the calendar-bounded
-    mergeable state shared by the reliability ops and their
-    streaming twins."""
-    return (
-        ev.withColumn("hour", F.date_trunc("hour", F.col("ts")))
-        .groupBy("event_type", "hour")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-
-
-def mttr_from_hourly(hourly: DataFrame) -> DataFrame:
-    """The reliability fold over a (event_type, hour, n) series —
-    shared by the batch query and the streaming drain (`stream_mttr`
-    accumulates the same tumbling hourly state at ingest)."""
-    inc = incidents_from_hourly(hourly)
-    per = inc.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_incidents"),
-        F.sum("n_hours").cast("long").alias("incident_hours"),
-        F.min(F.unix_micros("start_hour")).alias("s0"),
-        F.max(F.unix_micros("start_hour")).alias("s1"),
-    )
-    span = hourly.groupBy(
-        F.col("event_type").alias("et_sp")
-    ).agg(
-        (
-            (
-                F.max(F.unix_micros("hour"))
-                - F.min(F.unix_micros("hour"))
-            )
-            / F.lit(3600000000)
-            + 1
-        )
-        .cast("long")
-        .alias("span_hours")
-    )
-    j = per.join(
-        F.broadcast(span), F.col("event_type") == F.col("et_sp")
-    )
-    k = F.col("n_incidents")
-    mtbf = F.when(
-        k > 1,
-        ((F.col("s1") - F.col("s0")) / F.lit(3600000000.0))
-        / (k - 1),
-    )
-    return j.select(
-        "event_type",
-        "n_incidents",
-        "incident_hours",
-        "span_hours",
-        quantize(
-            F.col("incident_hours").cast("double") / k, 4
-        ).alias("mttr_hours"),
-        quantize(mtbf, 4).alias("mtbf_hours"),
-        quantize(
-            1.0
-            - F.col("incident_hours").cast("double")
-            / F.col("span_hours"),
-            6,
-        ).alias("availability"),
-    )
-
-
 DP_EPSILON = 1.0
 # inverse-CDF Laplace from a 32-bit md5-derived uniform: |noise| <=
 # (1/eps) * ln(2^32) ~ 22 at eps=1 — the release's worst-case shift
@@ -3642,146 +2387,8 @@ def events_dp_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dp_release_from_cells(cells)
 
 
-T_CLOSENESS = 0.2  # EMD fence for the t-closeness audit
-
-
-def t_closeness_cells(ev: DataFrame) -> DataFrame:
-    """(event_type, hod, vb, n) cells — QI domain × value-bin grid,
-    the bounded mergeable state shared by the batch audit and the
-    streaming twin."""
-    return ev.groupBy(
-        "event_type",
-        F.hour("ts").alias("hod"),
-        F.floor(F.col("value") / 10.0).cast("long").alias("vb"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("n"))
-
-
-def t_closeness_from_cells(cells: DataFrame) -> DataFrame:
-    """The t-closeness audit over drained QI × value-bin cells
-    (Li–Li–Venkatasubramanian): per QI group, the ordered-EMD
-    between the group's sensitive-value distribution and the global
-    one, t = Σ_bins |CumP_group − CumP_global| / (B − 1). A group
-    can pass k-anonymity AND l-diversity yet still reveal that e.g.
-    "errors at 3am are always cheap" — this is the gate that
-    catches distribution skew, completing the privacy triple.
-
-    Exactness: the cumulative-share differences fold with the common
-    denominator g·N as |cum_g·N − cum_all·g| in decimal(38,0), so t
-    is one integer→double division per group — engine-identical.
-    Scale: grid = QI groups × global bins (both domain-bounded,
-    broadcast nested-loop), one key-partitioned cumulative window,
-    one group fold. Nothing scales with the event count except the
-    cell agg upstream."""
-    groups = cells.groupBy("event_type", "hod").agg(
-        F.sum("n").cast("long").alias("g")
-    )
-    bins = cells.groupBy("vb").agg(
-        F.sum("n").cast("long").alias("nb")
-    )
-    tot = bins.agg(
-        F.sum("nb").cast("long").alias("n_tot"),
-        F.count(F.lit(1)).cast("long").alias("n_bins"),
-    )
-    # global cumulative by broadcast theta-join over the value-
-    # domain-bounded bin table (the `events_dp_median` idiom — no
-    # window, D²-bounded compare volume)
-    a = bins.select(F.col("vb"))
-    b = bins.select(
-        F.col("vb").alias("vb2"), F.col("nb").alias("nb2")
-    )
-    cum_bins = (
-        a.join(F.broadcast(b), F.col("vb2") <= F.col("vb"))
-        .groupBy("vb")
-        .agg(F.sum("nb2").cast("long").alias("cum_all"))
-    )
-    grid = groups.crossJoin(
-        F.broadcast(cum_bins.crossJoin(F.broadcast(tot)))
-    )
-    # keys rename on the self-lineage join (drained-relation rule)
-    cr = cells.select(
-        F.col("event_type").alias("et_c"),
-        F.col("hod").alias("hod_c"),
-        F.col("vb").alias("vb_c"),
-        F.col("n").alias("n_c"),
-    )
-    cellj = grid.join(
-        cr,
-        (F.col("event_type") == F.col("et_c"))
-        & (F.col("hod") == F.col("hod_c"))
-        & (F.col("vb") == F.col("vb_c")),
-        "left",
-    ).select(
-        "event_type",
-        "hod",
-        "g",
-        "vb",
-        "cum_all",
-        "n_tot",
-        "n_bins",
-        F.coalesce(F.col("n_c"), F.lit(0)).cast("long").alias("cn"),
-    )
-    wg = (
-        Window.partitionBy("event_type", "hod")
-        .orderBy("vb")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = cellj.select(
-        "event_type",
-        "hod",
-        "g",
-        "cum_all",
-        "n_tot",
-        "n_bins",
-        F.sum("cn").over(wg).cast("long").alias("cum_g"),
-    )
-    term = F.abs(
-        F.col("cum_g").cast("decimal(38,0)") * F.col("n_tot")
-        - F.col("cum_all").cast("decimal(38,0)") * F.col("g")
-    )
-    per = cum.groupBy("event_type", "hod", "g", "n_tot", "n_bins").agg(
-        F.sum(term).alias("s")
-    )
-    # n_bins == 1: the whole value grid is one bin, every group's
-    # distribution trivially equals the global one — t is 0 by
-    # definition, not NULL (the raw formula divides by n_bins - 1;
-    # advisor r6 flagged the silent null verdict on degenerate input)
-    t = F.when(
-        F.col("n_bins") > 1,
-        F.col("s").cast("double")
-        / (
-            F.col("g").cast("double")
-            * F.col("n_tot").cast("double")
-            * (F.col("n_bins") - 1).cast("double")
-        ),
-    ).otherwise(F.lit(0.0))
-    tq = quantize(t, 6)
-    return per.select(
-        "event_type",
-        "hod",
-        F.col("g").alias("n_rows"),
-        F.col("n_bins").alias("n_bins_global"),
-        tq.alias("t_emd"),
-        (tq > T_CLOSENESS).alias("breach"),
-    )
-
-
-def events_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """t-closeness audit per (event_type, hour-of-day) QI group with
-    `value` as the sensitive attribute — see
-    :func:`t_closeness_from_cells` for semantics and the exactness
-    contract."""
-    return t_closeness_from_cells(
-        t_closeness_cells(load_table(spark, sf_dir, "events"))
-    )
-
-
 QUERIES = {
-    "events_t_closeness": events_t_closeness,
-    "events_mttr": events_mttr,
-    "events_attribution_markov": events_attribution_markov,
     "events_dp_median": events_dp_median,
-    "events_watermark_audit": events_watermark_audit,
-    "events_psi_injection_eval": events_psi_injection_eval,
     "events_quantile_treatment_effect": events_quantile_treatment_effect,
     "events_absorption": events_absorption,
     "events_dp_user_total": events_dp_user_total,
@@ -3789,40 +2396,30 @@ QUERIES = {
     "events_holt_winters": events_holt_winters,
     "events_dp_hourly": events_dp_hourly,
     "events_hour_concentration": events_hour_concentration,
-    "events_incident_table": events_incident_table,
     "events_adoption_curve": events_adoption_curve,
     "events_concurrency_curve": events_concurrency_curve,
     "events_l_diversity": events_l_diversity,
-    "events_cusum": events_cusum,
     "events_sen_slope": events_sen_slope,
     "events_value_psi": events_value_psi,
-    "events_uptime": events_uptime,
     "events_coverage": events_coverage,
     "events_ewma_control": events_ewma_control,
-    "events_anomaly_ensemble": events_anomaly_ensemble,
-    "events_stickiness": events_stickiness,
-    "events_error_budget": events_error_budget,
     "events_session_stats": events_session_stats,
     "events_forecast_scorecard": events_forecast_scorecard,
     "events_mann_kendall": events_mann_kendall,
     "events_conversion_ztest": events_conversion_ztest,
-    "events_funnel_ci": events_funnel_ci,
     "events_ab_design": events_ab_design,
     "events_ab_srm": events_ab_srm,
-    "events_churn_half_life": events_churn_half_life,
     "events_retention_hourly": events_retention_hourly,
     "events_dau": events_dau,
     "events_dau_approx": events_dau_approx,
     "events_value_quantiles": events_value_quantiles,
     "events_value_quantiles_approx": events_value_quantiles_approx,
-    "events_asof_view": events_asof_view,
     "events_hourly": events_hourly,
     "events_sessionize": events_sessionize,
     "events_topk_users": events_topk_users,
     "events_topk_cms": events_topk_cms,
     "events_user_paths": events_user_paths,
     "events_json_props": events_json_props,
-    "events_funnel": events_funnel,
     "events_value_histogram": events_value_histogram,
     "events_hourly_anomaly": events_hourly_anomaly,
     "events_bot_detection": events_bot_detection,
@@ -3833,12 +2430,9 @@ QUERIES = {
     "events_anomaly_mad": events_anomaly_mad,
     "events_interarrival": events_interarrival,
     "events_forecast_hourly": events_forecast_hourly,
-    "events_changepoint": events_changepoint,
-    "events_cohort_retention": events_cohort_retention,
     "events_seasonal_decompose": events_seasonal_decompose,
     "events_autocorr": events_autocorr,
     "events_anomaly_residual": events_anomaly_residual,
-    "events_survival": events_survival,
     "events_gini": events_gini,
 }
 
@@ -3900,15 +2494,6 @@ ORACLE = {
                TRUE AS sketch_within_rank_tol
         FROM events
         GROUP BY event_type
-    """,
-    "events_asof_view": """
-        SELECT c.event_id, c.user_id, epoch_us(c.ts) AS ts_us,
-               round(c.value, 2) AS click_value,
-               round(v.value, 2) AS view_value,
-               epoch_us(v.ts) AS view_ts_us
-        FROM (SELECT * FROM events WHERE event_type = 'click') c
-        ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'view') v
-          ON c.user_id = v.user_id AND epoch_us(c.ts) >= epoch_us(v.ts)
     """,
     "events_hourly": """
         SELECT date_trunc('hour', ts) AS hour, event_type,
@@ -4049,25 +2634,6 @@ ORACLE = {
                           * 10000.0 + 0.5) / 10000.0)
                END AS z_score
         FROM scored
-    """,
-    "events_funnel": """
-        WITH v AS (
-          SELECT user_id, min(epoch_us(ts)) AS t_view
-          FROM events WHERE event_type = 'view' GROUP BY user_id
-        ), c AS (
-          SELECT e.user_id, min(epoch_us(e.ts)) AS t_click
-          FROM events e JOIN v ON e.user_id = v.user_id
-          WHERE e.event_type = 'click' AND epoch_us(e.ts) > v.t_view
-          GROUP BY e.user_id
-        ), p AS (
-          SELECT e.user_id, min(epoch_us(e.ts)) AS t_purchase
-          FROM events e JOIN c ON e.user_id = c.user_id
-          WHERE e.event_type = 'purchase' AND epoch_us(e.ts) > c.t_click
-          GROUP BY e.user_id
-        )
-        SELECT (SELECT count(*) FROM v) AS n_view,
-               (SELECT count(*) FROM c) AS n_click_after_view,
-               (SELECT count(*) FROM p) AS n_purchase_after_click
     """,
 }
 
@@ -4245,75 +2811,6 @@ ORACLE["events_forecast_hourly"] = f"""
     FROM t1 FULL OUTER JOIN a1 USING (hour_of_day), nd
 """
 
-ORACLE["events_changepoint"] = f"""
-    WITH daily AS (
-      SELECT date_trunc('day', ts) AS day,
-             CAST(count(*) AS BIGINT) AS n
-      FROM events GROUP BY 1
-    ),
-    tot AS (
-      SELECT sum(n) AS total_n, count(*) AS n_days,
-             CAST(sum(n) AS DOUBLE) / count(*) AS mean_d
-      FROM daily
-    ),
-    cus AS (
-      SELECT a.day AS d,
-             {sql_quantize(
-                 'abs(CAST(sum(b.n) AS DOUBLE)'
-                 ' - count(*) * any_value(tot.mean_d))', 6)} AS abs_s
-      FROM daily a JOIN daily b ON b.day <= a.day, tot
-      GROUP BY 1
-    ),
-    mx AS (SELECT max(abs_s) AS mx FROM cus),
-    cp AS (
-      SELECT min(cus.d) AS cp_day, any_value(mx.mx) AS max_cusum
-      FROM cus, mx WHERE cus.abs_s = mx.mx
-    )
-    SELECT CAST(any_value(tot.n_days) AS BIGINT) AS n_days,
-           {sql_quantize('any_value(tot.mean_d)', 4)} AS mean_daily,
-           any_value(cp.cp_day) AS cp_day,
-           {sql_quantize('any_value(cp.max_cusum)', 4)} AS max_cusum,
-           {sql_quantize(
-               'CAST(sum(CASE WHEN daily.day <= cp.cp_day'
-               ' THEN daily.n END) AS DOUBLE)'
-               ' / count(CASE WHEN daily.day <= cp.cp_day'
-               ' THEN 1 END)', 4)} AS mean_before,
-           {sql_quantize(
-               'CAST(sum(CASE WHEN daily.day > cp.cp_day'
-               ' THEN daily.n END) AS DOUBLE)'
-               ' / count(CASE WHEN daily.day > cp.cp_day'
-               ' THEN 1 END)', 4)} AS mean_after
-    FROM daily, cp, tot
-"""
-
-ORACLE["events_cohort_retention"] = f"""
-    WITH act AS (
-      SELECT DISTINCT date_trunc('day', ts) AS day, user_id
-      FROM events
-    ),
-    first AS (
-      SELECT user_id, min(day) AS cohort_day FROM act GROUP BY 1
-    ),
-    tri AS (
-      SELECT first.cohort_day,
-             CAST(date_diff('day', first.cohort_day, act.day) AS BIGINT)
-               AS day_offset,
-             CAST(count(*) AS BIGINT) AS n_active
-      FROM act JOIN first USING (user_id)
-      GROUP BY 1, 2
-    ),
-    sizes AS (
-      SELECT cohort_day, CAST(count(*) AS BIGINT) AS cohort_size
-      FROM first GROUP BY 1
-    )
-    SELECT tri.cohort_day, tri.day_offset, sizes.cohort_size,
-           tri.n_active,
-           {sql_quantize(
-               'CAST(tri.n_active AS DOUBLE) / sizes.cohort_size', 6)}
-             AS retention
-    FROM tri JOIN sizes USING (cohort_day)
-"""
-
 
 ORACLE["events_seasonal_decompose"] = f"""
     WITH hourly AS (
@@ -4438,56 +2935,6 @@ ORACLE["events_anomaly_residual"] = f"""
            {sql_quantize('mad.mad_r', 4)} AS mad_residual
     FROM dev, mad
     WHERE mad.mad_r > 0 AND dev.adev > 3 * mad.mad_r
-"""
-
-
-ORACLE["events_survival"] = f"""
-    WITH ev AS (
-      SELECT date_trunc('day', ts) AS day, user_id FROM events
-    ),
-    mx AS (SELECT max(day) AS maxd FROM ev),
-    per AS (
-      SELECT CAST(date_diff('day', min(day), max(day)) AS BIGINT) AS t,
-             CASE WHEN max(day) = any_value(mx.maxd) THEN 1 ELSE 0 END
-               AS cens
-      FROM ev, mx GROUP BY user_id
-    ),
-    offs AS (
-      SELECT t, count(*) AS n_ending, sum(cens) AS n_censored,
-             count(*) - sum(cens) AS n_churned
-      FROM per GROUP BY 1
-    ),
-    risk AS (
-      SELECT a.t AS tt, sum(b.n_ending) AS n_at_risk
-      FROM offs a JOIN offs b ON b.t >= a.t
-      GROUP BY 1
-    ),
-    base AS (
-      SELECT offs.t, risk.n_at_risk, offs.n_churned, offs.n_censored,
-             floor(CAST(offs.n_churned AS DOUBLE) / risk.n_at_risk
-                   * 1000000000.0 + 0.5) / 1000000000.0 AS hazard
-      FROM offs JOIN risk ON offs.t = risk.tt
-    ),
-    terms AS (
-      SELECT t, 1 - hazard AS f,
-             CASE WHEN 1 - hazard > 0 THEN ln(1 - hazard)
-                  ELSE 0.0 END AS lnf
-      FROM base
-    ),
-    prefix AS (
-      SELECT a.t AS pt, min(b.f) AS min_f, sum(b.lnf) AS sum_lnf
-      FROM base a JOIN terms b ON b.t <= a.t
-      GROUP BY 1
-    )
-    SELECT base.t,
-           CAST(base.n_at_risk AS BIGINT) AS n_at_risk,
-           CAST(base.n_churned AS BIGINT) AS n_churned,
-           CAST(base.n_censored AS BIGINT) AS n_censored,
-           {sql_quantize('base.hazard', 6)} AS hazard,
-           CASE WHEN prefix.min_f <= 0 THEN 0.0
-                ELSE {sql_quantize('exp(prefix.sum_lnf)', 6)}
-           END AS survival
-    FROM base JOIN prefix ON base.t = prefix.pt
 """
 
 ORACLE["events_gini"] = f"""
@@ -4620,42 +3067,6 @@ ORACLE["events_coverage"] = f"""
 """
 
 
-ORACLE["events_uptime"] = f"""
-    WITH ev AS (
-      SELECT user_id, epoch_us(ts) AS ts_us, event_id FROM events
-    ),
-    x AS (
-      SELECT user_id, ts_us,
-             lead(ts_us) OVER (
-               PARTITION BY user_id ORDER BY ts_us, event_id
-             ) AS next_us
-      FROM ev
-    ),
-    per AS (
-      SELECT user_id,
-             CAST(count(*) AS BIGINT) AS n_beats,
-             CAST(sum(CASE WHEN next_us IS NOT NULL
-                        AND next_us - ts_us > {UPTIME_WINDOW_US}
-                      THEN 1 ELSE 0 END) AS BIGINT) AS n_gaps,
-             CAST(sum(CASE WHEN next_us IS NOT NULL
-                      THEN least(next_us - ts_us, {UPTIME_WINDOW_US})
-                      ELSE {UPTIME_WINDOW_US} END) AS BIGINT)
-               AS covered_us,
-             min(ts_us) AS first_us,
-             max(ts_us) AS last_us
-      FROM x GROUP BY 1
-    )
-    SELECT user_id, n_beats, n_gaps, covered_us,
-           CAST(last_us - first_us + {UPTIME_WINDOW_US} AS BIGINT)
-             AS span_us,
-           {sql_quantize(
-               'CAST(covered_us AS DOUBLE)'
-               ' / (last_us - first_us + ' + str(UPTIME_WINDOW_US)
-               + ')', 6)} AS uptime_share
-    FROM per
-"""
-
-
 ORACLE["events_value_psi"] = f"""
     WITH ev AS (
       SELECT epoch_us(ts) AS ts_us,
@@ -4761,57 +3172,6 @@ ORACLE["events_ab_design"] = f"""
     FROM m
 """
 
-ORACLE["events_funnel_ci"] = f"""
-    WITH v AS (
-      SELECT user_id, min(epoch_us(ts)) AS t_view
-      FROM events WHERE event_type = 'view' GROUP BY user_id
-    ), c AS (
-      SELECT e.user_id, min(epoch_us(e.ts)) AS t_click
-      FROM events e JOIN v ON e.user_id = v.user_id
-      WHERE e.event_type = 'click' AND epoch_us(e.ts) > v.t_view
-      GROUP BY e.user_id
-    ), p AS (
-      SELECT e.user_id, min(epoch_us(e.ts)) AS t_purchase
-      FROM events e JOIN c ON e.user_id = c.user_id
-      WHERE e.event_type = 'purchase' AND epoch_us(e.ts) > c.t_click
-      GROUP BY e.user_id
-    ),
-    counts AS (
-      SELECT (SELECT CAST(count(*) AS BIGINT) FROM v) AS n_view,
-             (SELECT CAST(count(*) AS BIGINT) FROM c) AS n_click,
-             (SELECT CAST(count(*) AS BIGINT) FROM p) AS n_purchase
-    ),
-    stages AS (
-      SELECT 'view->click' AS stage, n_view AS n_base,
-             n_click AS n_conv FROM counts
-      UNION ALL
-      SELECT 'click->purchase', n_click, n_purchase FROM counts
-    ),
-    w AS (
-      SELECT stage, n_base, n_conv,
-             CAST(n_conv AS DOUBLE) / n_base AS p,
-             CAST(n_base AS DOUBLE) AS n
-      FROM stages
-    ),
-    w2 AS (
-      SELECT *,
-             (p + 1.96 * 1.96 / (2.0 * n)) / (1.0 + 1.96 * 1.96 / n)
-               AS center,
-             1.96 * sqrt(p * (1.0 - p) / n
-                 + 1.96 * 1.96 / (4.0 * n * n))
-               / (1.0 + 1.96 * 1.96 / n) AS half
-      FROM w
-    )
-    SELECT stage, n_base, n_conv,
-           CASE WHEN n_base > 0 THEN {sql_quantize('p', 6)} END
-             AS conv_rate,
-           CASE WHEN n_base > 0
-             THEN {sql_quantize('center - half', 6)} END AS wilson_lo,
-           CASE WHEN n_base > 0
-             THEN {sql_quantize('center + half', 6)} END AS wilson_hi
-    FROM w2
-"""
-
 ORACLE["events_conversion_ztest"] = f"""
     WITH firsts AS (
       SELECT user_id, min(ts) AS first_ts FROM events GROUP BY 1
@@ -4896,94 +3256,6 @@ ORACLE["events_ewma_control"] = f"""
     FROM scored, sig
 """
 
-ORACLE["events_anomaly_ensemble"] = f"""
-    WITH res AS ({ORACLE['events_anomaly_residual']}),
-    ew AS ({ORACLE['events_ewma_control']}),
-    hourly AS (
-      SELECT date_trunc('hour', ts) AS hour,
-             CAST(count(*) AS BIGINT) AS n
-      FROM events GROUP BY 1
-    ),
-    st AS (
-      SELECT CAST(count(*) AS BIGINT) AS cnt,
-             CAST(sum(n) AS BIGINT) AS sx,
-             CAST(sum(n * n) AS BIGINT) AS sxx
-      FROM hourly
-    ),
-    flags AS (
-      SELECT hourly.hour, 'global' AS method
-      FROM hourly, st
-      WHERE abs(hourly.n - CAST(st.sx AS DOUBLE) / st.cnt)
-            > 3 * sqrt(CAST(st.cnt * st.sxx - st.sx * st.sx AS DOUBLE)
-                       / CAST(st.cnt * (st.cnt - 1) AS DOUBLE))
-      UNION ALL
-      SELECT hour, 'seasonal' AS method FROM res
-      UNION ALL
-      SELECT hour, 'ewma' AS method FROM ew WHERE breach
-    ),
-    votes AS (
-      SELECT hour,
-             (sum(CASE WHEN method = 'global' THEN 1 ELSE 0 END) > 0)
-               AS by_global,
-             (sum(CASE WHEN method = 'seasonal' THEN 1 ELSE 0 END) > 0)
-               AS by_seasonal,
-             (sum(CASE WHEN method = 'ewma' THEN 1 ELSE 0 END) > 0)
-               AS by_ewma,
-             CAST(count(*) AS BIGINT) AS votes
-      FROM flags GROUP BY 1
-    )
-    SELECT v.hour, h.n AS n_events,
-           v.by_global, v.by_seasonal, v.by_ewma, v.votes
-    FROM votes v JOIN hourly h USING (hour)
-"""
-
-ORACLE["events_stickiness"] = f"""
-    WITH act AS (
-      SELECT DISTINCT date_trunc('day', ts) AS day, user_id FROM events
-    ),
-    dau AS (
-      SELECT day, CAST(count(*) AS BIGINT) AS dau FROM act GROUP BY 1
-    ),
-    wk AS (
-      SELECT DISTINCT date_trunc('week', day) AS week, user_id FROM act
-    ),
-    wau AS (
-      SELECT week, CAST(count(*) AS BIGINT) AS wau FROM wk GROUP BY 1
-    )
-    SELECT dau.day, dau.dau, wau.wau,
-           {sql_quantize('CAST(dau.dau AS DOUBLE) / wau.wau', 6)}
-             AS stickiness
-    FROM dau JOIN wau ON wau.week = date_trunc('week', dau.day)
-"""
-
-ORACLE["events_error_budget"] = f"""
-    WITH daily AS (
-      SELECT date_trunc('day', ts) AS day,
-             CAST(count(*) AS BIGINT) AS n_events,
-             CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
-               AS BIGINT) AS n_errors
-      FROM events GROUP BY 1
-    ),
-    cum AS (
-      SELECT a.day AS d,
-             CAST(sum(b.n_events) AS BIGINT) AS cum_events,
-             CAST(sum(b.n_errors) AS BIGINT) AS cum_errors
-      FROM daily a JOIN daily b ON b.day <= a.day
-      GROUP BY 1
-    )
-    SELECT daily.day, daily.n_events, daily.n_errors,
-           {sql_quantize(
-               'CAST(daily.n_errors AS DOUBLE) / daily.n_events', 6)}
-             AS error_share,
-           {sql_quantize(
-               'CAST(cum.cum_errors AS DOUBLE)'
-               f' / ({SLO_ERROR_TARGET} * cum.cum_events)', 6)}
-             AS budget_burn,
-           (CAST(cum.cum_errors AS DOUBLE)
-            > {SLO_ERROR_TARGET} * cum.cum_events) AS budget_exhausted
-    FROM daily JOIN cum ON cum.d = daily.day
-"""
-
 ORACLE["events_session_stats"] = """
     WITH base AS (
       SELECT user_id, epoch_us(ts) AS ts_us,
@@ -5035,72 +3307,6 @@ ORACLE["events_forecast_scorecard"] = f"""
 """
 
 
-ORACLE["events_churn_half_life"] = f"""
-    WITH sv AS ({ORACLE['events_survival']})
-    SELECT CAST(count(*) AS BIGINT) AS n_offsets,
-           min(CASE WHEN survival <= 0.5 THEN t END) AS half_life_days,
-           {sql_quantize('arg_max(survival, t)', 6)}
-             AS terminal_survival,
-           (min(CASE WHEN survival <= 0.5 THEN t END) IS NOT NULL)
-             AS median_reached
-    FROM sv
-"""
-
-
-ORACLE["events_cusum"] = f"""
-    WITH hourly AS (
-      SELECT event_type, date_trunc('hour', ts) AS hour,
-             CAST(count(*) AS BIGINT) AS n_events
-      FROM events GROUP BY 1, 2
-    ),
-    stats0 AS (
-      SELECT event_type,
-             CAST(count(*) AS BIGINT) AS n_hours,
-             CAST(sum(n_events) AS BIGINT) AS sn,
-             sum(n_events * n_events) AS sq
-      FROM hourly GROUP BY 1
-    ),
-    stats AS (
-      SELECT *,
-             CASE WHEN n_hours > 1 AND
-                    (CAST(n_hours AS DOUBLE) * CAST(sq AS DOUBLE)
-                     - CAST(sn AS DOUBLE) * CAST(sn AS DOUBLE)) > 0
-               THEN CAST(ceil(sqrt(
-                      (CAST(n_hours AS DOUBLE) * CAST(sq AS DOUBLE)
-                       - CAST(sn AS DOUBLE) * CAST(sn AS DOUBLE))
-                      / (CAST(n_hours AS DOUBLE) * (n_hours - 1.0))
-                    ) / 2.0) AS BIGINT)
-               ELSE 0 END AS k
-      FROM stats0
-    ),
-    pre AS (
-      SELECT h.event_type, h.hour, h.n_events,
-             s.n_hours, s.sn, s.sq,
-             sum(CAST(s.n_hours * (h.n_events - s.k) - s.sn AS BIGINT))
-               OVER (PARTITION BY h.event_type ORDER BY h.hour
-                     ROWS UNBOUNDED PRECEDING) AS p
-      FROM hourly h JOIN stats s USING (event_type)
-    ),
-    sc AS (
-      SELECT *,
-             p - least(min(p) OVER (PARTITION BY event_type
-                   ORDER BY hour ROWS UNBOUNDED PRECEDING), 0) AS s
-      FROM pre
-    )
-    SELECT event_type, hour, n_events,
-           {sql_quantize('CAST(s AS DOUBLE) / n_hours', 4)} AS cusum,
-           CASE WHEN n_hours > 1 AND
-                  (CAST(n_hours AS DOUBLE) * CAST(sq AS DOUBLE)
-                   - CAST(sn AS DOUBLE) * CAST(sn AS DOUBLE)) > 0
-             THEN CAST(s AS DOUBLE) / n_hours >
-               5.0 * sqrt((CAST(n_hours AS DOUBLE) * CAST(sq AS DOUBLE)
-                   - CAST(sn AS DOUBLE) * CAST(sn AS DOUBLE))
-                   / (CAST(n_hours AS DOUBLE) * (n_hours - 1.0)))
-           END AS alarm
-    FROM sc
-"""
-
-
 ORACLE["events_hour_concentration"] = f"""
     WITH hist AS (
       SELECT event_type,
@@ -5148,47 +3354,6 @@ ORACLE["events_l_diversity"] = f"""
                ' THEN g ELSE 0 END) AS DOUBLE) / sum(g)', 6)}
              AS risk_share
     FROM cells
-"""
-
-
-ORACLE["events_incident_table"] = f"""
-    WITH hourly AS (
-      SELECT event_type, date_trunc('hour', ts) AS hour,
-             CAST(count(*) AS BIGINT) AS n
-      FROM events GROUP BY 1, 2
-    ),
-    span AS (
-      SELECT event_type, min(hour) AS h0, max(hour) AS h1,
-             round(quantile_cont(n, 0.5), 2) AS med
-      FROM hourly GROUP BY 1
-    ),
-    cal AS (
-      SELECT event_type, med,
-             unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS hour
-      FROM span
-    ),
-    full_cal AS (
-      SELECT c.event_type, c.hour, c.med,
-             CAST(coalesce(h.n, 0) AS BIGINT) AS n
-      FROM cal c LEFT JOIN hourly h
-        ON c.event_type = h.event_type AND c.hour = h.hour
-    ),
-    flagged AS (
-      SELECT *,
-             CAST(n AS DOUBLE) < {INCIDENT_LOW_FACTOR} * med AS is_low,
-             sum(CASE WHEN CAST(n AS DOUBLE) < {INCIDENT_LOW_FACTOR} * med
-                      THEN 0 ELSE 1 END)
-               OVER (PARTITION BY event_type ORDER BY hour) AS grp
-      FROM full_cal
-    )
-    SELECT event_type,
-           min(hour) AS start_hour,
-           max(hour) AS end_hour,
-           CAST(count(*) AS BIGINT) AS n_hours,
-           CAST(min(n) AS BIGINT) AS min_volume,
-           first(med) AS median_volume
-    FROM flagged WHERE is_low
-    GROUP BY event_type, grp
 """
 
 ORACLE["events_adoption_curve"] = f"""
@@ -5461,280 +3626,4 @@ ORACLE["events_holt_winters"] = f"""
            {sql_quantize('l.tr', 4)} AS trend,
            {sql_quantize('l.lev + l.tr + l.s[1]', 4)} AS forecast_next
     FROM last l CROSS JOIN ks
-"""
-
-
-_WM_SELECTS = " UNION ALL ".join(
-    f"""SELECT CAST({h} AS BIGINT) AS watermark_hours, n_events,
-        drop_{h} AS n_dropped,
-        {sql_quantize(f'CAST(drop_{h} AS DOUBLE) / n_events', 6)}
-          AS drop_share
-     FROM tot"""
-    for h in WM_CANDIDATE_HOURS
-)
-
-_WM_DROPS = ", ".join(
-    f"""CAST(sum(CASE WHEN late_us > {h} * 3600000000
-         THEN 1 ELSE 0 END) AS BIGINT) AS drop_{h}"""
-    for h in WM_CANDIDATE_HOURS
-)
-
-ORACLE["events_watermark_audit"] = f"""
-    WITH ev AS (
-      SELECT CAST(event_id // {WM_ARRIVAL_BATCH} AS BIGINT) AS ab,
-             epoch_us(ts) AS ts_us
-      FROM events
-    ),
-    batches AS (SELECT ab, max(ts_us) AS mx FROM ev GROUP BY 1),
-    hw AS (
-      SELECT a.ab, max(b.mx) AS hw_before
-      FROM batches a LEFT JOIN batches b ON b.ab < a.ab
-      GROUP BY 1
-    ),
-    late AS (
-      SELECT greatest(0, coalesce(h.hw_before - e.ts_us, 0)) AS late_us
-      FROM ev e JOIN hw h ON h.ab = e.ab
-    ),
-    tot AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_events, {_WM_DROPS}
-      FROM late
-    )
-    {_WM_SELECTS}
-"""
-
-# the injection-eval oracle REUSES the production ensemble oracle,
-# with its (three identical) hourly scans swapped for the injected
-# series — same detector text, planted truth
-_HOURLY_SCAN_SQL = (
-    "SELECT date_trunc('hour', ts) AS hour,\n"
-    "             CAST(count(*) AS BIGINT) AS n\n"
-    "      FROM events GROUP BY 1"
-)
-
-assert ORACLE["events_anomaly_ensemble"].count(_HOURLY_SCAN_SQL) == 3
-
-
-_PSI_SHIFT_SELECTS = " UNION ALL ".join(
-    f"""SELECT {shift!r} AS shift_dollars,
-        (SELECT {sql_quantize('sum((p2 - p1) * ln(p2 / p1))', 6)}
-         FROM (
-           SELECT (coalesce(b.n1, 0) + 1)
-                    / CAST((SELECT count(*) FROM events)
-                           + t.b AS DOUBLE) AS p1,
-                  (coalesce(s.n2, 0) + 1)
-                    / CAST((SELECT count(*) FROM events)
-                           + t.b AS DOUBLE) AS p2
-           FROM (
-             SELECT CAST(floor(value / 10.0) AS BIGINT) AS bucket,
-                    CAST(count(*) AS BIGINT) AS n1
-             FROM events GROUP BY 1
-           ) b
-           FULL JOIN (
-             SELECT CAST(floor((value + {shift!r}) / 10.0) AS BIGINT)
-                      AS bucket,
-                    CAST(count(*) AS BIGINT) AS n2
-             FROM events GROUP BY 1
-           ) s ON s.bucket = b.bucket
-           CROSS JOIN (
-             SELECT CAST(count(*) AS BIGINT) AS b FROM (
-               SELECT coalesce(b2.bucket, s2.bucket) AS bucket
-               FROM (
-                 SELECT CAST(floor(value / 10.0) AS BIGINT) AS bucket
-                 FROM events GROUP BY 1
-               ) b2
-               FULL JOIN (
-                 SELECT CAST(floor((value + {shift!r}) / 10.0)
-                             AS BIGINT) AS bucket
-                 FROM events GROUP BY 1
-               ) s2 ON s2.bucket = b2.bucket
-             )
-           ) t
-         )
-        ) AS psi"""
-    for shift in PSI_SHIFT_GRID
-)
-
-ORACLE["events_psi_injection_eval"] = f"""
-    {_PSI_SHIFT_SELECTS}
-"""
-
-
-ORACLE["events_t_closeness"] = f"""
-    WITH cells AS (
-      SELECT event_type, hour(ts) AS hod,
-             CAST(floor(value / 10.0) AS BIGINT) AS vb,
-             CAST(count(*) AS BIGINT) AS n
-      FROM events GROUP BY 1, 2, 3
-    ),
-    groups AS (
-      SELECT event_type, hod, CAST(sum(n) AS BIGINT) AS g
-      FROM cells GROUP BY 1, 2
-    ),
-    bins AS (
-      SELECT vb, CAST(sum(n) AS BIGINT) AS nb FROM cells GROUP BY 1
-    ),
-    tot AS (
-      SELECT CAST(sum(nb) AS BIGINT) AS n_tot,
-             CAST(count(*) AS BIGINT) AS n_bins
-      FROM bins
-    ),
-    cum_bins AS (
-      SELECT a.vb, CAST(sum(b.nb) AS BIGINT) AS cum_all
-      FROM bins a JOIN bins b ON b.vb <= a.vb GROUP BY 1
-    ),
-    grid AS (
-      SELECT * FROM groups CROSS JOIN cum_bins CROSS JOIN tot
-    ),
-    cellj AS (
-      SELECT gr.event_type, gr.hod, gr.g, gr.vb, gr.cum_all,
-             gr.n_tot, gr.n_bins,
-             CAST(coalesce(c.n, 0) AS BIGINT) AS cn
-      FROM grid gr LEFT JOIN cells c
-        ON c.event_type = gr.event_type AND c.hod = gr.hod
-       AND c.vb = gr.vb
-    ),
-    cum AS (
-      SELECT event_type, hod, g, cum_all, n_tot, n_bins,
-             CAST(sum(cn) OVER (PARTITION BY event_type, hod
-                                ORDER BY vb) AS BIGINT) AS cum_g
-      FROM cellj
-    ),
-    per AS (
-      SELECT event_type, hod, g, n_tot, n_bins,
-             sum(abs(cum_g * n_tot - cum_all * g)) AS s
-      FROM cum GROUP BY 1, 2, 3, 4, 5
-    )
-    SELECT event_type, hod, g AS n_rows, n_bins AS n_bins_global,
-           {sql_quantize(
-               'CASE WHEN n_bins > 1 THEN'
-               ' CAST(s AS DOUBLE) / (CAST(g AS DOUBLE)'
-               ' * CAST(n_tot AS DOUBLE)'
-               ' * CAST(n_bins - 1 AS DOUBLE)) ELSE 0.0 END', 6)}
-             AS t_emd,
-           {sql_quantize(
-               'CASE WHEN n_bins > 1 THEN'
-               ' CAST(s AS DOUBLE) / (CAST(g AS DOUBLE)'
-               ' * CAST(n_tot AS DOUBLE)'
-               ' * CAST(n_bins - 1 AS DOUBLE)) ELSE 0.0 END', 6)}
-             > {T_CLOSENESS} AS breach
-    FROM per
-"""
-
-
-ORACLE["events_mttr"] = f"""
-    WITH inc AS ({ORACLE['events_incident_table']}),
-    hourly AS (
-      SELECT event_type, date_trunc('hour', ts) AS hour,
-             CAST(count(*) AS BIGINT) AS n
-      FROM events GROUP BY 1, 2
-    ),
-    span AS (
-      SELECT event_type,
-             CAST((epoch_us(max(hour)) - epoch_us(min(hour)))
-               / 3600000000 + 1 AS BIGINT) AS span_hours
-      FROM hourly GROUP BY 1
-    ),
-    per AS (
-      SELECT event_type,
-             CAST(count(*) AS BIGINT) AS n_incidents,
-             CAST(sum(n_hours) AS BIGINT) AS incident_hours,
-             min(epoch_us(start_hour)) AS s0,
-             max(epoch_us(start_hour)) AS s1
-      FROM inc GROUP BY 1
-    )
-    SELECT p.event_type, p.n_incidents, p.incident_hours,
-           s.span_hours,
-           {sql_quantize(
-               'CAST(p.incident_hours AS DOUBLE) / p.n_incidents',
-               4)} AS mttr_hours,
-           CASE WHEN p.n_incidents > 1 THEN {sql_quantize(
-               '((p.s1 - p.s0) / 3600000000.0)'
-               ' / (p.n_incidents - 1)', 4)} END AS mtbf_hours,
-           {sql_quantize(
-               '1.0 - CAST(p.incident_hours AS DOUBLE)'
-               ' / s.span_hours', 6)} AS availability
-    FROM per p JOIN span s USING (event_type)
-"""
-
-
-ORACLE["events_attribution_markov"] = f"""
-    WITH RECURSIVE s AS (
-      SELECT user_id, event_id, epoch_us(ts) AS ts_us, event_type
-      FROM events
-    ),
-    fb AS (
-      SELECT user_id, ts_us, event_id FROM s
-      WHERE event_type = '{ABSORB_TARGET}'
-      QUALIFY row_number() OVER (
-        PARTITION BY user_id ORDER BY ts_us, event_id) = 1
-    ),
-    kept AS (
-      SELECT s.* FROM s LEFT JOIN fb ON s.user_id = fb.user_id
-      WHERE fb.user_id IS NULL
-         OR (s.ts_us, s.event_id) <= (fb.ts_us, fb.event_id)
-    ),
-    trans AS (
-      SELECT coalesce(lag(event_type) OVER (
-               PARTITION BY user_id ORDER BY ts_us, event_id),
-             '{MK_START}') AS src,
-             event_type AS dst
-      FROM kept
-    ),
-    last_nc AS (
-      SELECT k.event_type AS src, '{MK_END}' AS dst
-      FROM kept k LEFT JOIN fb ON k.user_id = fb.user_id
-      WHERE fb.user_id IS NULL
-      QUALIFY row_number() OVER (
-        PARTITION BY k.user_id
-        ORDER BY k.ts_us DESC, k.event_id DESC) = 1
-    ),
-    pairs AS (
-      SELECT src, dst, CAST(count(*) AS BIGINT) AS n FROM (
-        SELECT src, dst FROM trans
-        UNION ALL SELECT src, dst FROM last_nc
-      ) GROUP BY 1, 2
-    ),
-    tlist AS (
-      SELECT DISTINCT t FROM (
-        SELECT src AS t FROM pairs UNION SELECT dst FROM pairs
-      )
-    ),
-    chan AS (
-      SELECT t FROM tlist
-      WHERE t NOT IN ('{MK_START}', '{MK_END}', '{ABSORB_TARGET}')
-    ),
-    agg_in AS (
-      SELECT dst AS t, CAST(sum(n) AS BIGINT) AS n_in
-      FROM pairs GROUP BY 1
-    ),
-    agg_out AS (
-      SELECT src AS t, CAST(sum(n) AS BIGINT) AS n_out
-      FROM pairs GROUP BY 1
-    ),
-    -- solver_converged is COMPUTED, not pinned (VERDICT r7 item 7):
-    -- the absorbing solve is well-posed iff every channel state
-    -- reaches an absorbing state (purchase or END) through the
-    -- transition graph — transitive closure over the bounded
-    -- (K+2)^2 pair list. The Spark side raises on the same condition.
-    reach AS (
-      SELECT t FROM tlist
-      WHERE t IN ('{MK_END}', '{ABSORB_TARGET}')
-      UNION
-      SELECT p.src AS t
-      FROM pairs p JOIN reach ON p.dst = reach.t
-    ),
-    conv AS (
-      SELECT coalesce(bool_and(r.t IS NOT NULL), TRUE) AS ok
-      FROM chan c LEFT JOIN reach r ON r.t = c.t
-    )
-    SELECT c.t AS event_type,
-           CAST(coalesce(i.n_in, 0) AS BIGINT) AS n_in,
-           CAST(coalesce(o.n_out, 0) AS BIGINT) AS n_out,
-           v.ok AS solver_converged,
-           TRUE AS removal_effect_in_unit,
-           TRUE AS shares_sum_to_one
-    FROM chan c
-    LEFT JOIN agg_in i ON i.t = c.t
-    LEFT JOIN agg_out o ON o.t = c.t
-    CROSS JOIN conv v
 """

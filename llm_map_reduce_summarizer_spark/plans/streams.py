@@ -16,7 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..streaming.stream_ops import (
-    asof_enrich_stream,
     dedup_stream,
     hourly_counts,
     latest_sessions,
@@ -52,13 +51,6 @@ def stream_view_click_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(
         view_click_interval_join(ev), output_mode="append"
     )
-
-
-def stream_asof_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stateful streaming as-of enrichment; on the drained static input
-    it equals batch ``events_asof_view``, so it shares that oracle."""
-    ev = read_events_stream(spark, sf_dir)
-    return run_available_now(asof_enrich_stream(ev), output_mode="update")
 
 
 def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -710,76 +702,6 @@ def stream_bot_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming strict view -> click -> purchase funnel: the per-user
-    stage machine runs AT INGEST (three nullable longs of state per
-    user — bounded by entities, never stream length); the post-drain
-    collapse keeps each user's final stage times (emissions are
-    monotone: fields only ever fill in) and counts stage survivors.
-    Drain == batch `events_funnel`, whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from ..streaming.stream_ops import funnel_stages_stream
-
-    ev = read_events_stream(spark, sf_dir)
-    drained = run_available_now(
-        funnel_stages_stream(ev), output_mode="update"
-    )
-    final = drained.groupBy("user_id").agg(
-        F.max("t_view").alias("t_view"),
-        F.max("t_click").alias("t_click"),
-        F.max("t_purchase").alias("t_purchase"),
-    )
-    return final.agg(
-        F.count("t_view").alias("n_view"),
-        F.count("t_click").alias("n_click_after_view"),
-        F.count("t_purchase").alias("n_purchase_after_click"),
-    )
-
-
-def stream_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming cohort-retention triangle: per-user first-seen /
-    new-active-day tracking runs AT INGEST (TWO longs of state per
-    user; each new active day emits exactly once, append mode); the
-    triangle rollup is a batch agg over the drained (user, day,
-    cohort) pair sink. Drain == batch `events_cohort_retention`,
-    whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from ..functions.text import quantize
-    from ..streaming.stream_ops import cohort_days_stream
-
-    DAY_US = 86_400_000_000
-    ev = read_events_stream(spark, sf_dir)
-    pairs = run_available_now(
-        cohort_days_stream(ev), output_mode="append"
-    )
-    tri = pairs.groupBy(
-        F.timestamp_micros(F.col("cohort_day_us")).alias("cohort_day"),
-        ((F.col("day_us") - F.col("cohort_day_us")) / F.lit(DAY_US))
-        .cast("long")
-        .alias("day_offset"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("n_active"))
-    sizes = (
-        pairs.filter(F.col("day_us") == F.col("cohort_day_us"))
-        .groupBy(
-            F.timestamp_micros(F.col("cohort_day_us")).alias("cohort_day")
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("cohort_size"))
-    )
-    return tri.join(F.broadcast(sizes), "cohort_day").select(
-        "cohort_day",
-        "day_offset",
-        "cohort_size",
-        "n_active",
-        quantize(
-            F.col("n_active").cast("double") / F.col("cohort_size"), 6
-        ).alias("retention"),
-    )
-
-
 def stream_interarrival(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming per-user cadence profile: inter-event gaps computed
     AT INGEST (ONE long of state per user — the last event time; the
@@ -799,79 +721,6 @@ def stream_interarrival(spark: SparkSession, sf_dir: str) -> DataFrame:
         quantize(F.expr("percentile(gap_us, 0.5)"), 4).alias("med_gap_us"),
         quantize(F.expr("percentile(gap_us, 0.9)"), 4).alias("p90_gap_us"),
         F.max("gap_us").cast("long").alias("max_gap_us"),
-    )
-
-
-def stream_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming Kaplan-Meier churn curve: per-user first/last active
-    days accumulate AT INGEST (the cohort-day fold's TWO longs of
-    state; its appended pairs carry exactly the (first, new day)
-    observations), and the survival estimator runs post-drain on the
-    per-user snapshot — a users-bounded table, never the stream.
-    Drain == batch `events_survival`, whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from ..functions.text import quantize
-    from ..streaming.stream_ops import cohort_days_stream
-
-    ev = read_events_stream(spark, sf_dir)
-    pairs = run_available_now(
-        cohort_days_stream(ev), output_mode="append"
-    )
-    per_user = pairs.groupBy("user_id").agg(
-        F.min("cohort_day_us").alias("fd_us"),
-        F.max("day_us").alias("ld_us"),
-    )
-    DAY_US = 86_400_000_000
-    mx = per_user.agg(F.max("ld_us").alias("maxd_us"))
-    per = per_user.crossJoin(F.broadcast(mx)).select(
-        ((F.col("ld_us") - F.col("fd_us")) / F.lit(DAY_US))
-        .cast("long")
-        .alias("t"),
-        (F.col("ld_us") == F.col("maxd_us")).cast("long").alias("cens"),
-    )
-    offs = per.groupBy("t").agg(
-        F.count(F.lit(1)).alias("n_ending"),
-        F.sum("cens").alias("n_censored"),
-        (F.count(F.lit(1)) - F.sum("cens")).alias("n_churned"),
-    )
-    a = offs.select(F.col("t").alias("tt"))
-    risk = (
-        a.join(F.broadcast(offs), F.col("t") >= F.col("tt"))
-        .groupBy("tt")
-        .agg(F.sum("n_ending").alias("n_at_risk"))
-    )
-    base = offs.join(risk, offs.t == risk.tt).select(
-        "t",
-        "n_at_risk",
-        "n_churned",
-        "n_censored",
-        quantize(
-            F.col("n_churned").cast("double") / F.col("n_at_risk"), 9
-        ).alias("hazard"),
-    )
-    f = 1 - F.col("hazard")
-    terms = base.select(
-        "t",
-        f.alias("f"),
-        F.when(f > 0, F.log(f)).otherwise(F.lit(0.0)).alias("lnf"),
-    )
-    prefix = (
-        base.select(F.col("t").alias("pt"))
-        .join(F.broadcast(terms), F.col("t") <= F.col("pt"))
-        .groupBy("pt")
-        .agg(F.min("f").alias("min_f"), F.sum("lnf").alias("sum_lnf"))
-    )
-    return base.join(prefix, base.t == prefix.pt).select(
-        "t",
-        F.col("n_at_risk").cast("long").alias("n_at_risk"),
-        F.col("n_churned").cast("long").alias("n_churned"),
-        F.col("n_censored").cast("long").alias("n_censored"),
-        quantize(F.col("hazard"), 6).alias("hazard"),
-        F.when(F.col("min_f") <= 0, F.lit(0.0))
-        .otherwise(quantize(F.exp(F.col("sum_lnf")), 6))
-        .alias("survival"),
     )
 
 
@@ -895,30 +744,6 @@ def stream_ewma_control(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_events").cast("long").alias("n")
     )
     return ewma_from_hourly(hourly)
-
-
-def stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming CUSUM drift monitor: the per-type hourly count series
-    accumulates AT INGEST (the same calendar-bounded tumbling-window
-    state as `stream_hourly` — state = hours × types, never stream
-    length), and the exact-integer closed-form CUSUM scan runs
-    post-drain on the hours-bounded snapshot
-    (`events.cusum_from_hourly`). Drain == batch `events_cusum`,
-    whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from ..streaming.stream_ops import hourly_counts
-    from .events import cusum_from_hourly
-
-    ev = read_events_stream(spark, sf_dir)
-    snap = run_available_now(hourly_counts(ev), output_mode="complete")
-    hourly = snap.select(
-        "event_type",
-        "hour",
-        F.col("n_events").cast("long").alias("n_events"),
-    )
-    return cusum_from_hourly(hourly)
 
 
 def stream_hour_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -965,26 +790,6 @@ def stream_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     return coverage_from_hourly(hourly)
 
 
-def stream_anomaly_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming consensus anomaly screen: ONE hourly tumbling state
-    feeds all three detectors post-drain (global 3σ, seasonal
-    median/MAD, EWMA breach — `events.ensemble_from_hourly`, the
-    one-scan composition the batch docstring prescribes for 100 TB).
-    Drain == batch `events_anomaly_ensemble`, whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from ..streaming.stream_ops import hourly_counts
-    from .events import ensemble_from_hourly
-
-    ev = read_events_stream(spark, sf_dir)
-    snap = run_available_now(hourly_counts(ev), output_mode="complete")
-    hourly = snap.groupBy("hour").agg(
-        F.sum("n_events").cast("long").alias("n")
-    )
-    return ensemble_from_hourly(hourly)
-
-
 def stream_forecast_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming forecast scorecard: the one-row MAE/MAPE/bias
     rollup over `stream_forecast_hourly`'s drained backtest. Drain ==
@@ -1022,17 +827,6 @@ def stream_ab_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     snap = run_available_now(users, output_mode="complete")
     return srm_from_users(snap.select("user_id"))
-
-
-def stream_funnel_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming funnel confidence bounds: the Wilson scan over
-    `stream_funnel`'s drained stage counts (per-user 3-scalar stage
-    machine). Drain == batch `events_funnel_ci`, whose oracle it
-    shares.
-    """
-    from .events import funnel_ci_from_counts
-
-    return funnel_ci_from_counts(stream_funnel(spark, sf_dir))
 
 
 def stream_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1177,34 +971,6 @@ def stream_user_activity_quantiles(
     return activity_quantiles_from_counts(snap)
 
 
-def stream_churn_half_life(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming churn half-life: distilled post-drain from the
-    streaming Kaplan-Meier curve (`stream_survival`'s 2-long
-    first/last state) with the same conditional-min summary. Drain ==
-    batch `events_churn_half_life`, whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from ..functions.text import quantize
-
-    sv = stream_survival(spark, sf_dir)
-    agg = sv.agg(
-        F.count(F.lit(1)).cast("long").alias("n_offsets"),
-        F.min(
-            F.when(F.col("survival") <= 0.5, F.col("t"))
-        ).alias("half_life_days"),
-        quantize(F.max_by("survival", "t"), 6).alias(
-            "terminal_survival"
-        ),
-    )
-    return agg.select(
-        "n_offsets",
-        "half_life_days",
-        "terminal_survival",
-        F.col("half_life_days").isNotNull().alias("median_reached"),
-    )
-
-
 def stream_absorption(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming absorption probabilities: same exactly-once
     transition emissions as `stream_user_paths`, with the
@@ -1320,65 +1086,6 @@ def stream_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     return autocorr_from_hourly(hourly)
 
 
-def stream_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming CUSUM changepoint: daily counts accumulate AT INGEST
-    (state = calendar days) and the peak-cumulative-deviation scan
-    runs post-drain on the days-bounded snapshot
-    (`events.changepoint_from_daily`). Drain == batch
-    `events_changepoint`, whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from .events import changepoint_from_daily
-
-    ev = read_events_stream(spark, sf_dir)
-    daily = ev.groupBy(
-        F.date_trunc("day", F.col("ts")).alias("day")
-    ).agg(F.count(F.lit(1)).cast("long").alias("n"))
-    snap = run_available_now(daily, output_mode="complete")
-    return changepoint_from_daily(snap)
-
-
-def stream_attribution_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming Markov removal-effect attribution: journey
-    transitions emit exactly-once AT INGEST off a 4-scalar per-user
-    state (`stream_ops.journey_pairs_stream` — last pre-conversion
-    event + converted flag; post-purchase events are skipped), and
-    the drain closes NON-converting journeys with END from each
-    user's latest 'last' row (the one fact only stream end decides)
-    before the (types+2)²-bounded solver runs. Drain == batch
-    `events_attribution_markov`, whose oracle it shares."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from ..streaming.stream_ops import journey_pairs_stream
-    from .events import MK_END, attribution_markov_from_pairs
-
-    ev = read_events_stream(spark, sf_dir)
-    drained = run_available_now(
-        journey_pairs_stream(ev), output_mode="update"
-    )
-    pairs_part = drained.filter(F.col("kind") == "pair").select(
-        "src", "dst"
-    )
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts_us").desc(), F.col("event_id").desc()
-    )
-    lasts = (
-        drained.filter(F.col("kind") == "last")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .filter(F.col("dst") == "N")
-        .select("src", F.lit(MK_END).alias("dst"))
-    )
-    pairs = (
-        pairs_part.unionByName(lasts)
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-    return attribution_markov_from_pairs(pairs)
-
-
 def stream_concurrency_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming concurrency gauge: sessions form AT INGEST (the
     `stream_sessionize` per-user state) and the interval→hour overlap
@@ -1409,29 +1116,6 @@ def stream_adoption_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     snap = run_available_now(first, output_mode="complete")
     return adoption_from_first_seen(snap)
-
-
-def stream_incident_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming incident detection: the per-type hourly series
-    accumulates AT INGEST (the `stream_hourly` calendar-bounded
-    tumbling state) and the below-half-median island scan — silent
-    hours materialized from the calendar included — runs post-drain
-    on the hours-bounded snapshot (`events.incidents_from_hourly`).
-    Drain == batch `events_incident_table`, whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from ..streaming.stream_ops import hourly_counts
-    from .events import incidents_from_hourly
-
-    ev = read_events_stream(spark, sf_dir)
-    snap = run_available_now(hourly_counts(ev), output_mode="complete")
-    hourly = snap.select(
-        "event_type",
-        "hour",
-        F.col("n_events").cast("long").alias("n"),
-    )
-    return incidents_from_hourly(hourly)
 
 
 def stream_user_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1569,79 +1253,6 @@ def stream_emb_norm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return emb_norm_audit_from_cells(snap)
 
 
-def stream_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming t-closeness monitor: the QI × value-bin cells
-    accumulate AT INGEST (state = the QI domain × the value grid —
-    a dimension product, never stream length) and the ordered-EMD
-    audit evaluates post-drain via the exact batch computation
-    (`events.t_closeness_from_cells`). Drain == batch
-    `events_t_closeness`, whose oracle it shares."""
-    from .events import t_closeness_cells, t_closeness_from_cells
-
-    ev = read_events_stream(spark, sf_dir)
-    snap = run_available_now(
-        t_closeness_cells(ev), output_mode="complete"
-    )
-    return t_closeness_from_cells(snap)
-
-
-def stream_uptime(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming heartbeat uptime: a CUSTOM stateful fold
-    (`applyInPandasWithState`, the sessionize tier — five integers
-    per user) accumulates covered time incrementally; each emission
-    carries the running totals with the open interval's +W, so the
-    update-mode drain's latest row per user equals the batch
-    integers exactly, and the share projects post-drain. Drain ==
-    batch `events_uptime`, whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from ..functions.text import quantize
-    from ..streaming.stream_ops import uptime_stream
-    from .events import UPTIME_WINDOW_US
-
-    ev = read_events_stream(spark, sf_dir)
-    updates = run_available_now(
-        uptime_stream(ev, UPTIME_WINDOW_US), output_mode="update"
-    )
-    latest = (
-        updates.groupBy("user_id")
-        .agg(
-            F.max(
-                F.struct(
-                    "n_beats",
-                    "n_gaps",
-                    "covered_us",
-                    "first_us",
-                    "last_us",
-                )
-            ).alias("s")
-        )
-        .select(
-            "user_id",
-            F.col("s.n_beats").alias("n_beats"),
-            F.col("s.n_gaps").alias("n_gaps"),
-            F.col("s.covered_us").alias("covered_us"),
-            F.col("s.first_us").alias("first_us"),
-            F.col("s.last_us").alias("last_us"),
-        )
-    )
-    span = F.col("last_us") - F.col("first_us") + F.lit(
-        UPTIME_WINDOW_US
-    )
-    return latest.select(
-        "user_id",
-        "n_beats",
-        "n_gaps",
-        "covered_us",
-        span.cast("long").alias("span_us"),
-        quantize(
-            F.col("covered_us").cast("double") / span.cast("double"),
-            6,
-        ).alias("uptime_share"),
-    )
-
-
 def stream_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Mann-Kendall trend monitor over the drained
     hours-bounded tumbling state (type cells summed to the overall
@@ -1659,37 +1270,6 @@ def stream_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_events").cast("long").alias("n")
     )
     return mk_from_hourly(hourly)
-
-
-def stream_error_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming SLO burn-down: the daily (events, errors) series
-    accumulates AT INGEST (one tumbling-day window agg — state =
-    days × 2 longs, calendar-bounded, never stream length), and the
-    cumulative burn computation runs post-drain on the days-bounded
-    snapshot via the exact batch computation
-    (`events.error_budget_from_daily`). Drain == batch
-    `events_error_budget`, whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from .events import error_budget_from_daily
-
-    ev = read_events_stream(spark, sf_dir)
-    agg = (
-        ev.withWatermark("ts", "1 day")
-        .groupBy(F.window("ts", "1 day"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.sum((F.col("event_type") == "error").cast("int"))
-            .cast("long")
-            .alias("n_errors"),
-        )
-        .select(
-            F.col("window.start").alias("day"), "n_events", "n_errors"
-        )
-    )
-    daily = run_available_now(agg, output_mode="complete")
-    return error_budget_from_daily(daily)
 
 
 def stream_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1711,28 +1291,6 @@ def stream_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_events", F.col("duration_us").alias("dur_us")
     )
     return session_stats_from_per(per)
-
-
-def stream_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming DAU/WAU stickiness: the cohort-day ingest fold's
-    appended pairs ARE the distinct (day, user) activity (each new
-    active day emits exactly once), so the drain feeds the exact
-    batch rollup (`events.stickiness_from_act`) with no extra state
-    op. Drain == batch `events_stickiness`, whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from ..streaming.stream_ops import cohort_days_stream
-    from .events import stickiness_from_act
-
-    ev = read_events_stream(spark, sf_dir)
-    pairs = run_available_now(
-        cohort_days_stream(ev), output_mode="append"
-    )
-    act = pairs.select(
-        F.timestamp_micros(F.col("day_us")).alias("day"), "user_id"
-    ).distinct()
-    return stickiness_from_act(act)
 
 
 def stream_shard_rendezvous(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1764,66 +1322,6 @@ def stream_shard_rendezvous(spark: SparkSession, sf_dir: str) -> DataFrame:
         (keys[HRW_SHARDS] > best["k"]).alias("moves_on_scale_out"),
     )
     return run_available_now(routed, output_mode="append")
-
-
-def stream_psi_injection_eval(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Streaming drift response curve: state is the per-distinct-value
-    count table (bounded by the cent grid, the `stream_value_histogram`
-    bound), and the planted-shift PSI curve recomputes post-drain from
-    those counts with the IDENTICAL double expressions as batch.
-    Drain == batch `events_psi_injection_eval`, whose oracle it
-    shares.
-    """
-    from pyspark.sql import functions as F
-
-    from .events import PSI_SHIFT_GRID
-    from ..functions.text import quantize
-
-    ev = read_events_stream(spark, sf_dir)
-    vals = ev.groupBy("value").agg(
-        F.count(F.lit(1)).cast("long").alias("cnt")
-    )
-    snap = run_available_now(vals, output_mode="complete")
-    base = snap.groupBy(
-        F.floor(F.col("value") / 10.0).cast("long").alias("bucket")
-    ).agg(F.sum("cnt").cast("long").alias("n1"))
-    per = []
-    for shift in PSI_SHIFT_GRID:
-        shifted = snap.groupBy(
-            F.floor((F.col("value") + F.lit(shift)) / 10.0)
-            .cast("long")
-            .alias("bucket")
-        ).agg(F.sum("cnt").cast("long").alias("n2"))
-        cells = base.join(shifted, "bucket", "full_outer").select(
-            "bucket",
-            F.coalesce(F.col("n1"), F.lit(0)).alias("n1"),
-            F.coalesce(F.col("n2"), F.lit(0)).alias("n2"),
-        )
-        tot = cells.agg(
-            F.sum("n1").cast("long").alias("t1"),
-            F.sum("n2").cast("long").alias("t2"),
-            F.count(F.lit(1)).cast("long").alias("b"),
-        )
-        j = cells.crossJoin(F.broadcast(tot))
-        p1 = (F.col("n1") + 1).cast("double") / (
-            F.col("t1") + F.col("b")
-        )
-        p2 = (F.col("n2") + 1).cast("double") / (
-            F.col("t2") + F.col("b")
-        )
-        contrib = (p2 - p1) * F.log(p2 / p1)
-        per.append(
-            j.agg(
-                F.lit(shift).alias("shift_dollars"),
-                quantize(F.sum(contrib), 6).alias("psi"),
-            )
-        )
-    out = per[0]
-    for frame in per[1:]:
-        out = out.unionByName(frame)
-    return out
 
 
 def stream_dp_median(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1953,21 +1451,6 @@ def stream_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     snap = run_available_now(cells, output_mode="complete")
     return holt_from_cells(snap)
-
-
-def stream_mttr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming MTTR/MTBF rollup: tumbling hourly cells accumulate
-    at ingest (the `stream_incident_table` state) and the incident
-    scan + reliability fold run post-drain via the exact batch
-    computations. Drain == batch `events_mttr`, whose oracle it
-    shares."""
-    from .events import hourly_type_counts, mttr_from_hourly
-
-    ev = read_events_stream(spark, sf_dir)
-    snap = run_available_now(
-        hourly_type_counts(ev), output_mode="complete"
-    )
-    return mttr_from_hourly(snap)
 
 
 def stream_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2312,12 +1795,10 @@ def stream_token_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUERIES = {
     "stream_dp_hourly": stream_dp_hourly,
     "stream_holt_linear": stream_holt_linear,
-    "stream_mttr": stream_mttr,
     "stream_holt_winters": stream_holt_winters,
     "stream_absorption": stream_absorption,
     "stream_dp_user_total": stream_dp_user_total,
     "stream_dp_vocab": stream_dp_vocab,
-    "stream_psi_injection_eval": stream_psi_injection_eval,
     "stream_shard_rendezvous": stream_shard_rendezvous,
     "stream_dp_median": stream_dp_median,
     "stream_token_histogram": stream_token_histogram,
@@ -2333,15 +1814,11 @@ QUERIES = {
     "stream_bpe_pair_census": stream_bpe_pair_census,
     "stream_charclass_mix": stream_charclass_mix,
     "stream_conversion_ztest": stream_conversion_ztest,
-    "stream_stickiness": stream_stickiness,
     "stream_session_stats": stream_session_stats,
-    "stream_error_budget": stream_error_budget,
     "stream_ewma_control": stream_ewma_control,
-    "stream_anomaly_ensemble": stream_anomaly_ensemble,
     "stream_forecast_scorecard": stream_forecast_scorecard,
     "stream_ab_design": stream_ab_design,
     "stream_ab_srm": stream_ab_srm,
-    "stream_funnel_ci": stream_funnel_ci,
     "stream_seasonal_decompose": stream_seasonal_decompose,
     "stream_hourly_anomaly": stream_hourly_anomaly,
     "stream_anomaly_residual": stream_anomaly_residual,
@@ -2350,32 +1827,24 @@ QUERIES = {
     "stream_retention_hourly": stream_retention_hourly,
     "stream_user_activity_quantiles":
         stream_user_activity_quantiles,
-    "stream_churn_half_life": stream_churn_half_life,
     "stream_gini": stream_gini,
     "stream_new_vs_returning": stream_new_vs_returning,
     "stream_hourly_profile": stream_hourly_profile,
     "stream_autocorr": stream_autocorr,
-    "stream_changepoint": stream_changepoint,
-    "stream_attribution_markov": stream_attribution_markov,
     "stream_concurrency_curve": stream_concurrency_curve,
     "stream_adoption_curve": stream_adoption_curve,
-    "stream_incident_table": stream_incident_table,
     "stream_user_paths": stream_user_paths,
     "stream_type_share_trend": stream_type_share_trend,
     "stream_l_diversity": stream_l_diversity,
-    "stream_t_closeness": stream_t_closeness,
     "stream_emb_norm_audit": stream_emb_norm_audit,
     "stream_coverage": stream_coverage,
     "stream_hour_concentration": stream_hour_concentration,
-    "stream_cusum": stream_cusum,
     "stream_anomaly_mad": stream_anomaly_mad,
     "stream_sen_slope": stream_sen_slope,
-    "stream_uptime": stream_uptime,
     "stream_mann_kendall": stream_mann_kendall,
     "stream_hourly": stream_hourly,
     "stream_sessionize": stream_sessionize,
     "stream_view_click_join": stream_view_click_join,
-    "stream_asof_view": stream_asof_view,
     "stream_dedup": stream_dedup,
     "stream_quality_gate": stream_quality_gate,
     "stream_pii_scrub": stream_pii_scrub,
@@ -2394,33 +1863,24 @@ QUERIES = {
     "stream_bot_gate": stream_bot_gate,
     "stream_pack": stream_pack,
     "stream_topk_cms": stream_topk_cms,
-    "stream_funnel": stream_funnel,
-    "stream_cohort_retention": stream_cohort_retention,
     "stream_interarrival": stream_interarrival,
-    "stream_survival": stream_survival,
 }
 
 ORACLE = {
     "stream_dp_hourly": _EVENTS_ORACLE["events_dp_hourly"],
     "stream_holt_linear": _EVENTS_ORACLE["events_holt_linear"],
-    "stream_mttr": _EVENTS_ORACLE["events_mttr"],
     "stream_holt_winters": _EVENTS_ORACLE["events_holt_winters"],
     "stream_absorption": _EVENTS_ORACLE["events_absorption"],
     "stream_dp_user_total": _EVENTS_ORACLE["events_dp_user_total"],
     "stream_dp_vocab": _DOCS_ORACLE["corpus_dp_vocab"],
-    "stream_psi_injection_eval":
-        _EVENTS_ORACLE["events_psi_injection_eval"],
     "stream_shard_rendezvous":
         _DOCS_ORACLE["corpus_shard_rendezvous"],
     "stream_dp_median": _EVENTS_ORACLE["events_dp_median"],
     "stream_ewma_control": _EVENTS_ORACLE["events_ewma_control"],
-    "stream_anomaly_ensemble":
-        _EVENTS_ORACLE["events_anomaly_ensemble"],
     "stream_forecast_scorecard":
         _EVENTS_ORACLE["events_forecast_scorecard"],
     "stream_ab_design": _EVENTS_ORACLE["events_ab_design"],
     "stream_ab_srm": _EVENTS_ORACLE["events_ab_srm"],
-    "stream_funnel_ci": _EVENTS_ORACLE["events_funnel_ci"],
     "stream_seasonal_decompose":
         _EVENTS_ORACLE["events_seasonal_decompose"],
     "stream_hourly_anomaly":
@@ -2435,40 +1895,28 @@ ORACLE = {
         _EVENTS_ORACLE["events_retention_hourly"],
     "stream_user_activity_quantiles":
         _EVENTS_ORACLE["events_user_activity_quantiles"],
-    "stream_churn_half_life":
-        _EVENTS_ORACLE["events_churn_half_life"],
     "stream_gini": _EVENTS_ORACLE["events_gini"],
     "stream_new_vs_returning":
         _EVENTS_ORACLE["events_new_vs_returning"],
     "stream_hourly_profile":
         _EVENTS_ORACLE["events_hourly_profile"],
     "stream_autocorr": _EVENTS_ORACLE["events_autocorr"],
-    "stream_changepoint": _EVENTS_ORACLE["events_changepoint"],
-    "stream_attribution_markov":
-        _EVENTS_ORACLE["events_attribution_markov"],
     "stream_concurrency_curve":
         _EVENTS_ORACLE["events_concurrency_curve"],
     "stream_adoption_curve":
         _EVENTS_ORACLE["events_adoption_curve"],
-    "stream_incident_table":
-        _EVENTS_ORACLE["events_incident_table"],
     "stream_user_paths": _EVENTS_ORACLE["events_user_paths"],
     "stream_type_share_trend":
         _EVENTS_ORACLE["events_type_share_trend"],
     "stream_l_diversity": _EVENTS_ORACLE["events_l_diversity"],
-    "stream_t_closeness": _EVENTS_ORACLE["events_t_closeness"],
     "stream_emb_norm_audit": _DOCS_ORACLE["emb_norm_audit"],
     "stream_coverage": _EVENTS_ORACLE["events_coverage"],
     "stream_hour_concentration":
         _EVENTS_ORACLE["events_hour_concentration"],
-    "stream_cusum": _EVENTS_ORACLE["events_cusum"],
     "stream_anomaly_mad": _EVENTS_ORACLE["events_anomaly_mad"],
     "stream_sen_slope": _EVENTS_ORACLE["events_sen_slope"],
-    "stream_uptime": _EVENTS_ORACLE["events_uptime"],
     "stream_mann_kendall": _EVENTS_ORACLE["events_mann_kendall"],
-    "stream_error_budget": _EVENTS_ORACLE["events_error_budget"],
     "stream_session_stats": _EVENTS_ORACLE["events_session_stats"],
-    "stream_stickiness": _EVENTS_ORACLE["events_stickiness"],
     "stream_conversion_ztest": _EVENTS_ORACLE["events_conversion_ztest"],
     "stream_quality_length_corr": _DOCS_ORACLE["corpus_quality_length_corr"],
     "stream_cross_perplexity": _DOCS_ORACLE["corpus_cross_perplexity"],
@@ -2485,7 +1933,6 @@ ORACLE = {
     "stream_token_gini": _DOCS_ORACLE["corpus_token_gini"],
     "stream_hourly": _EVENTS_ORACLE["events_hourly"],
     "stream_sessionize": _EVENTS_ORACLE["events_sessionize"],
-    "stream_asof_view": _EVENTS_ORACLE["events_asof_view"],
     "stream_dedup": _DOCS_ORACLE["dedup_apply"],
     "stream_quality_gate": quality_gate_sql(PREP_QUALITY_MIN),
     "stream_pii_scrub": _DOCS_ORACLE["doc_pii_scrub"],
@@ -2505,17 +1952,8 @@ ORACLE = {
     "stream_sample_fixed": _DOCS_ORACLE["corpus_sample_fixed"],
     "stream_latest_state": _DOCS_ORACLE["events_latest_state"],
     "stream_bot_gate": _EVENTS_ORACLE["events_bot_detection"],
-    # static drain of the stage machine == the batch conditional-min
-    # cascade, so the streaming funnel shares its full oracle
-    "stream_funnel": _EVENTS_ORACLE["events_funnel"],
-    # each new (user, active day) emits exactly once at ingest, so the
-    # drained pair sink rebuilds the batch triangle bit-for-bit
-    "stream_cohort_retention": _EVENTS_ORACLE["events_cohort_retention"],
     # each gap emits exactly once at ingest; drained set == batch lag
     "stream_interarrival": _EVENTS_ORACLE["events_interarrival"],
-    # per-user first/last from the drained cohort pairs == batch
-    # lifetimes, so the post-drain KM shares the batch oracle
-    "stream_survival": _EVENTS_ORACLE["events_survival"],
     "stream_domain_cap": f"""
         SELECT doc_id, source, rk, (rk <= {DOMAIN_CAP}) AS kept FROM (
           SELECT doc_id, source,

@@ -241,88 +241,6 @@ def sessionize_stream(events: DataFrame, evict_state: bool = False) -> DataFrame
     )
 
 
-UPTIME_STATE_SCHEMA = StructType(
-    [
-        StructField("last_ts_us", LongType()),
-        StructField("first_ts_us", LongType()),
-        StructField("n_beats", LongType()),
-        StructField("n_gaps", LongType()),
-        StructField("acc_us", LongType()),
-    ]
-)
-
-UPTIME_OUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("n_beats", LongType()),
-        StructField("n_gaps", LongType()),
-        StructField("covered_us", LongType()),
-        StructField("first_us", LongType()),
-        StructField("last_us", LongType()),
-    ]
-)
-
-
-def uptime_stream(events: DataFrame, window_us: int) -> DataFrame:
-    """Incremental heartbeat-uptime fold keyed by user: state = five
-    integers (last/first beat, counts, accumulated covered time
-    EXCLUDING the open interval); each emission reports the running
-    totals with the open interval's +W added, so update semantics
-    keep exactly the batch `events_uptime` integers at drain. Same
-    per-user event-time-order contract as `sessionize_stream`."""
-
-    def _fn(key, pdfs, state: GroupState) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.exists:
-            last_ts, first_ts, n_beats, n_gaps, acc = state.get
-        else:
-            last_ts, first_ts, n_beats, n_gaps, acc = (
-                None,
-                None,
-                0,
-                0,
-                0,
-            )
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts_us", "event_id"])
-            for ts_us in pdf["ts_us"]:
-                ts_us = int(ts_us)
-                if last_ts is None:
-                    first_ts = ts_us
-                else:
-                    d = ts_us - last_ts
-                    acc += min(d, window_us)
-                    if d > window_us:
-                        n_gaps += 1
-                n_beats += 1
-                last_ts = ts_us
-        state.update((last_ts, first_ts, n_beats, n_gaps, acc))
-        if n_beats:
-            yield pd.DataFrame(
-                [
-                    {
-                        "user_id": user_id,
-                        "n_beats": n_beats,
-                        "n_gaps": n_gaps,
-                        "covered_us": acc + window_us,
-                        "first_us": first_ts,
-                        "last_us": last_ts,
-                    }
-                ]
-            )
-
-    with_us = events.select(
-        "user_id", "event_id", F.unix_micros("ts").alias("ts_us")
-    )
-    return with_us.groupBy("user_id").applyInPandasWithState(
-        _fn,
-        outputStructType=UPTIME_OUT_SCHEMA,
-        stateStructType=UPTIME_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 DOCS_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
@@ -500,123 +418,6 @@ def pack_stream(docs: DataFrame, budget: int) -> DataFrame:
         stateStructType=PACK_STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-ASOF_STATE_SCHEMA = StructType(
-    [
-        StructField("view_ts_us", LongType()),
-        StructField("view_value", DoubleType()),
-    ]
-)
-
-ASOF_OUT_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("user_id", LongType()),
-        StructField("ts_us", LongType()),
-        StructField("click_value", DoubleType()),
-        StructField("view_value", DoubleType()),
-        StructField("view_ts_us", LongType()),
-    ]
-)
-
-
-def _make_asof_fn(evict: bool):
-    """Per-user fold: views update the carried (ts, value) state, clicks
-    emit enriched with the latest prior-or-equal view."""
-
-    def _fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:
-            state.remove()
-            return
-
-        view_ts, view_val = (state.get if state.exists else (None, None))
-
-        rows = []
-        for pdf in pdfs:
-            # equal timestamps: view before click (ASOF left.ts >=
-            # right.ts — same tiebreak as the batch window's
-            # (ts, _is_left) order), event_id stabilizes the rest
-            pdf = pdf.assign(_c=(pdf["event_type"] == "click")).sort_values(
-                ["ts_us", "_c", "event_id"]
-            )
-            for ev_id, ts_us, etype, value in zip(
-                pdf["event_id"], pdf["ts_us"], pdf["event_type"], pdf["value"]
-            ):
-                ts_us = int(ts_us)
-                if etype == "view":
-                    view_ts, view_val = ts_us, float(value)
-                else:
-                    rows.append(
-                        {
-                            "event_id": int(ev_id),
-                            "user_id": user_id,
-                            "ts_us": ts_us,
-                            "click_value": _round2(value),
-                            "view_value": (
-                                None if view_ts is None else _round2(view_val)
-                            ),
-                            "view_ts_us": view_ts,
-                        }
-                    )
-
-        if view_ts is not None:
-            state.update((view_ts, view_val))
-        if evict and state.exists:
-            state.setTimeoutDuration(24 * 3600 * 1000)  # ms
-
-        if rows:
-            out = pd.DataFrame(rows)
-            # None view_ts_us must stay a NULL long, not become NaN
-            out["view_ts_us"] = pd.array(out["view_ts_us"], dtype="Int64")
-            yield out
-
-    return _fn
-
-
-def asof_enrich_stream(
-    events: DataFrame, evict_state: bool = False
-) -> DataFrame:
-    """Streaming as-of enrichment: each click gets the user's most
-    recent prior-or-equal view's (value, ts) — the incremental twin of
-    the batch ``events_asof_view`` (operators/asof.py).
-
-    State is ONE row per user (latest view seen), hash-partitioned by
-    user_id — constant per key, unlike a stream-stream join's
-    watermark-length buffer, because backward as-of only ever needs the
-    latest right row. Within each micro-batch rows fold in event-time
-    order; across batches the carried state enriches later clicks, so
-    on an ``availableNow`` drain of static input the result equals the
-    batch as-of join exactly. In a continuous run the enrichment is
-    exact for per-user event-time-ordered arrival (the usual log-stream
-    contract); an out-of-order view beyond that enriches only
-    subsequent clicks — the standard update-mode trade, bounded by the
-    source's disorder, while ``evict_state=True`` arms a
-    processing-time timeout that drops idle users' state.
-    """
-    vc = events.filter(
-        F.col("event_type").isin("view", "click")
-    ).select(
-        "event_id",
-        "user_id",
-        F.unix_micros("ts").alias("ts_us"),
-        "event_type",
-        "value",
-    )
-    return vc.groupBy("user_id").applyInPandasWithState(
-        _make_asof_fn(evict_state),
-        outputStructType=ASOF_OUT_SCHEMA,
-        stateStructType=ASOF_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if evict_state
-            else GroupStateTimeout.NoTimeout
-        ),
     )
 
 
@@ -945,160 +746,6 @@ def bot_counters_stream(events: DataFrame) -> DataFrame:
     )
 
 
-FUNNEL_STATE_SCHEMA = StructType(
-    [
-        StructField("t_view", LongType()),
-        StructField("t_click", LongType()),
-        StructField("t_purchase", LongType()),
-    ]
-)
-
-FUNNEL_OUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("t_view", LongType()),
-        StructField("t_click", LongType()),
-        StructField("t_purchase", LongType()),
-    ]
-)
-
-
-def _funnel_fold(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Per-user strict view -> click -> purchase stage machine: THREE
-    nullable longs of state (the stage entry times), bounded by the
-    entity count. Each stage time is set exactly once — the first
-    qualifying event in per-user ts order — so for ts-ordered arrival
-    the fold equals the batch conditional-min cascade
-    (plans/events.events_funnel): first view = min view ts; first
-    click strictly after it = min qualifying click; likewise
-    purchase. Emissions are monotone (fields only ever fill in), so
-    the post-drain max per user is the final state."""
-    if state.hasTimedOut:
-        state.remove()
-        return
-    user_id = key[0]
-    t_view, t_click, t_purchase = (
-        state.get if state.exists else (None, None, None)
-    )
-    for pdf in pdfs:
-        pdf = pdf.sort_values(["ts_us", "event_id"])
-        for ts, et in zip(pdf["ts_us"], pdf["event_type"]):
-            ts = int(ts)
-            if et == "view":
-                if t_view is None:
-                    t_view = ts
-            elif et == "click":
-                if t_view is not None and ts > t_view and t_click is None:
-                    t_click = ts
-            elif et == "purchase":
-                if (
-                    t_click is not None
-                    and ts > t_click
-                    and t_purchase is None
-                ):
-                    t_purchase = ts
-    state.update((t_view, t_click, t_purchase))
-    yield pd.DataFrame(
-        [
-            {
-                "user_id": user_id,
-                "t_view": t_view,
-                "t_click": t_click,
-                "t_purchase": t_purchase,
-            }
-        ]
-    )
-
-
-def funnel_stages_stream(events: DataFrame) -> DataFrame:
-    """Streaming per-user funnel stages — update mode emits each
-    user's (t_view, t_click, t_purchase) after every micro-batch; the
-    latest emission per user equals the batch cascade on the drained
-    input."""
-    base = events.select(
-        "user_id",
-        F.unix_micros("ts").alias("ts_us"),
-        "event_id",
-        "event_type",
-    )
-    return base.groupBy("user_id").applyInPandasWithState(
-        _funnel_fold,
-        outputStructType=FUNNEL_OUT_SCHEMA,
-        stateStructType=FUNNEL_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-COHORT_STATE_SCHEMA = StructType(
-    [
-        StructField("first_day_us", LongType()),
-        StructField("last_day_us", LongType()),
-    ]
-)
-
-COHORT_OUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("day_us", LongType()),
-        StructField("cohort_day_us", LongType()),
-    ]
-)
-
-
-def _cohort_fold(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Per-user activity-day tracker: TWO longs of state (first-seen
-    day, last emitted day). Per-user ts-ordered arrival makes the day
-    sequence nondecreasing, so a batch emits exactly the user's NEW
-    active days — each tagged with the cohort (first) day — and the
-    drained pair set equals the batch distinct-(day, user) activity
-    joined to first-seen, whatever the micro-batching."""
-    if state.hasTimedOut:
-        state.remove()
-        return
-    user_id = key[0]
-    first_day, last_day = state.get if state.exists else (None, None)
-    out = []
-    DAY_US = 86_400_000_000
-    for pdf in pdfs:
-        pdf = pdf.sort_values(["ts_us", "event_id"])
-        for ts in pdf["ts_us"]:
-            day = (int(ts) // DAY_US) * DAY_US
-            if first_day is None:
-                first_day = day
-            if last_day is None or day > last_day:
-                out.append(
-                    {
-                        "user_id": user_id,
-                        "day_us": day,
-                        "cohort_day_us": first_day,
-                    }
-                )
-                last_day = day
-    state.update((first_day, last_day))
-    if out:
-        yield pd.DataFrame(out)
-
-
-def cohort_days_stream(events: DataFrame) -> DataFrame:
-    """Streaming (user, active day, cohort day) emission — append mode
-    (each new active day emits exactly once)."""
-    base = events.select(
-        "user_id", F.unix_micros("ts").alias("ts_us"), "event_id"
-    )
-    return base.groupBy("user_id").applyInPandasWithState(
-        _cohort_fold,
-        outputStructType=COHORT_OUT_SCHEMA,
-        stateStructType=COHORT_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 GAP_STATE_SCHEMA = StructType([StructField("last_us", LongType())])
 
 GAP_OUT_SCHEMA = StructType(
@@ -1203,84 +850,6 @@ def user_paths_stream(events: DataFrame) -> DataFrame:
         _fn,
         outputStructType=PATHS_OUT_SCHEMA,
         stateStructType=PATHS_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-JOURNEY_STATE_SCHEMA = StructType(
-    [
-        StructField("last_ts_us", LongType()),
-        StructField("last_event_id", LongType()),
-        StructField("last_type", StringType()),
-        StructField("converted", BooleanType()),
-    ]
-)
-
-JOURNEY_OUT_SCHEMA = StructType(
-    [
-        StructField("kind", StringType()),
-        StructField("src", StringType()),
-        StructField("dst", StringType()),
-        StructField("user_id", LongType()),
-        StructField("ts_us", LongType()),
-        StructField("event_id", LongType()),
-    ]
-)
-
-
-def journey_pairs_stream(events: DataFrame) -> DataFrame:
-    """Incremental attribution-journey transitions keyed by user:
-    state = the user's last pre-conversion event + a converted flag
-    (4 scalars — never the history). 'pair' rows emit each journey
-    transition exactly once (START fronts the first event; events
-    after the first purchase are skipped — the journey is over);
-    one 'last' row per user per batch carries the latest journey
-    tail, so the drain can close NON-converting journeys with END
-    (the one fact only the end of the stream can decide). Same
-    per-user event-time-order contract as ``sessionize_stream``."""
-
-    def _fn(key, pdfs, state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            ts, eid, last, conv = state.get
-        else:
-            ts, eid, last, conv = None, None, None, False
-        uid = int(key[0])
-        rows: list = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts_us", "event_id"])
-            for t, e, et in zip(
-                pdf["ts_us"], pdf["event_id"], pdf["event_type"]
-            ):
-                if conv:
-                    continue
-                src = last if last is not None else "START"
-                rows.append(
-                    ("pair", src, et, uid, int(t), int(e))
-                )
-                ts, eid, last = int(t), int(e), et
-                if et == "purchase":
-                    conv = True
-        state.update((ts, eid, last, bool(conv)))
-        if last is not None:
-            rows.append(
-                ("last", last, "C" if conv else "N", uid, ts, eid)
-            )
-        if rows:
-            yield pd.DataFrame(
-                rows, columns=list(JOURNEY_OUT_SCHEMA.names)
-            )
-
-    with_us = events.select(
-        "user_id",
-        "event_id",
-        "event_type",
-        F.unix_micros("ts").alias("ts_us"),
-    )
-    return with_us.groupBy("user_id").applyInPandasWithState(
-        _fn,
-        outputStructType=JOURNEY_OUT_SCHEMA,
-        stateStructType=JOURNEY_STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )

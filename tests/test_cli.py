@@ -335,10 +335,15 @@ def test_query_runner_lists_and_rejects(capsys):
         "interrupted_ts", "funnel_latency", "growth_accounting",
         "bootstrap_diff_ci", "attribution", "iv_wald", "cmh",
         "parallel_trends", "periodogram", "peak_hours",
+        "attribution_markov", "uptime", "psi_injection_eval", "asof_view",
+        "t_closeness", "churn_half_life", "survival", "cohort_retention",
+        "stickiness", "incident_table", "mttr", "cusum", "funnel",
+        "funnel_ci", "changepoint", "anomaly_ensemble", "error_budget",
     }
+    retired_events.add("events_watermark_audit")
     for name in with_stream_twin:
         retired_events |= {f"events_{name}", f"stream_{name}"}
-    assert len(retired_events) == 75
+    assert len(retired_events) == 110
     assert not retired_events & set(listed)
 
     assert main(["definitely_not_a_key"]) == 2

@@ -20,7 +20,6 @@ from llm_map_reduce_summarizer_spark.operators.chunker import (
 )
 from llm_map_reduce_summarizer_spark.operators.multimodal import (
     decode_batch,
-    decode_image,
     fake_decode,
     frame_sample,
 )
@@ -369,31 +368,6 @@ def test_pq_encode_deterministic_and_bounded(spark):
     assert (one["adc"] >= 0).all() and (one["adc"] <= 4.0 + 1e-9).all()
 
 
-def test_asof_join_backward_semantics(spark):
-    from llm_map_reduce_summarizer_spark.operators.asof import (
-        asof_join_backward,
-    )
-
-    left = spark.createDataFrame(
-        [(1, 10, "l1"), (1, 20, "l2"), (2, 5, "l3")],
-        "k long, ts long, lval string",
-    )
-    right = spark.createDataFrame(
-        [(1, 8, 0.8), (1, 20, 2.0), (2, 9, 9.0)],
-        "k long, ts long, rval double",
-    )
-    out = (
-        asof_join_backward(left, right, on="k", ts_col="ts", pick={"rv": "rval"})
-        .orderBy("k", "ts")
-        .toPandas()
-    )
-    # l1@10 sees r@8; l2@20 sees the EQUAL-ts r@20 (asof convention
-    # left.ts >= right.ts); l3@5 has no prior right row -> NULL
-    assert list(out["lval"]) == ["l1", "l2", "l3"]
-    assert out["rv"][0] == 0.8 and out["rv"][1] == 2.0
-    assert out["rv"].isna()[2]
-
-
 def test_distributed_prefix_scan_matches_window(spark):
     from pyspark.sql.window import Window
 
@@ -635,11 +609,6 @@ def test_fake_decode_deterministic():
         "mean_byte": pytest.approx(101.4545, abs=1e-4),
         "n_frames": 1 + 11 % 7,
     }
-
-
-def test_real_decode_is_stubbed():
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\xff\xd8\xff")
 
 
 def test_decode_batch_and_frame_sample(spark):

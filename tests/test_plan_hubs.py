@@ -36,12 +36,7 @@ HUB_ZERO_SCAN = [
     "corpus_keyphrase_rake",
     "search_map",
     "search_mrr",
-    "events_anomaly_ensemble",
-    "events_survival",
-    "events_psi_injection_eval",
     "events_value_psi",
-    "events_watermark_audit",
-    "events_changepoint",
     "corpus_ppl_buckets",
     "corpus_burrows_delta",
     "corpus_entropy_rate",

@@ -67,12 +67,11 @@ def test_partition_pruning_on_partitioned_layout(spark, tmp_path):
     import contextlib
     import io
 
-    from llm_map_reduce_summarizer_spark.sources.files import write_parquet
     from llm_map_reduce_summarizer_spark.sources.tables import load_table
 
     ev = load_table(spark, "/root/testdata/sf0.001", "events")
     out = os.path.join(str(tmp_path), "events_part")
-    write_parquet(ev, out, partition_by=["event_type"])
+    ev.write.partitionBy("event_type").parquet(out)
     back = spark.read.parquet(out).filter(F.col("event_type") == "view")
 
     buf = io.StringIO()

@@ -206,89 +206,6 @@ def test_spearman_matches_pandas(spark):
     assert _close(row["spearman_rho"], rho)
 
 
-def test_cusum_matches_recursion(spark):
-    """The closed-form window CUSUM must equal Page's textbook
-    recursion S_i = max(0, S_{i-1} + (x_i - mean - k)) with integer
-    allowance k = ceil(sigma/2), run in plain numpy over each
-    per-type hourly series."""
-    df = (
-        QUERIES["events_cusum"](spark, SF_SMOKE)
-        .toPandas()
-        .sort_values(["event_type", "hour"])
-        .reset_index(drop=True)
-    )
-    ev = _events()
-    for et, grp in df.groupby("event_type"):
-        hourly = (
-            ev[ev.event_type == et]
-            .set_index("ts")
-            .resample("1h")["event_id"]
-            .count()
-        )
-        hourly = hourly[hourly > 0]
-        xs = hourly.to_numpy(float)
-        mu = xs.mean()
-        sigma = xs.std(ddof=1)
-        k = math.ceil(sigma / 2) if len(xs) > 1 and sigma > 0 else 0
-        s, expect = 0.0, []
-        for x in xs:
-            s = max(0.0, s + (x - mu - k))
-            expect.append(s)
-        got = grp.sort_values("hour")["cusum"].to_numpy(float)
-        assert len(got) == len(expect)
-        for g, e in zip(got, expect):
-            assert _close(g, e, tol=1e-3)
-        alarms = grp.sort_values("hour")["alarm"].to_numpy()
-        for g, e in zip(alarms, expect):
-            assert bool(g) == bool(e > 5 * sigma)
-
-
-def test_cusum_flags_injected_drift(spark):
-    """A small persistent +2sigma shift in the back half of a flat
-    series must raise the CUSUM alarm even though no single hour is
-    individually anomalous (the detector's reason to exist)."""
-    from llm_map_reduce_summarizer_spark.plans.events import (
-        cusum_from_hourly,
-    )
-
-    base = pd.Timestamp("2024-01-01")
-    rng = np.random.default_rng(7)
-    n = 200
-    xs = rng.poisson(100, n).astype(float)
-    xs[n // 2 :] += 2 * xs.std(ddof=1)
-    rows = [
-        (
-            "drift",
-            (base + pd.Timedelta(hours=i)).to_pydatetime(),
-            float(xs[i]),
-        )
-        for i in range(n)
-    ]
-    hourly = spark.createDataFrame(
-        rows, "event_type string, hour timestamp, n_events double"
-    )
-    out = cusum_from_hourly(
-        hourly.selectExpr(
-            "event_type", "hour", "CAST(n_events AS long) AS n_events"
-        )
-    ).toPandas()
-    assert out["alarm"].fillna(False).any()
-    # and a drift-free flat series must stay quiet
-    quiet = [
-        (
-            "flat",
-            (base + pd.Timedelta(hours=i)).to_pydatetime(),
-            int(v),
-        )
-        for i, v in enumerate(rng.poisson(100, n))
-    ]
-    hq = spark.createDataFrame(
-        quiet, "event_type string, hour timestamp, n_events long"
-    )
-    out_q = cusum_from_hourly(hq).toPandas()
-    assert not out_q["alarm"].fillna(False).any()
-
-
 def test_sen_slope_matches_numpy(spark):
     row = (
         QUERIES["events_sen_slope"](spark, SF_SMOKE)
@@ -770,50 +687,6 @@ def test_vad_energy_matches_numpy(spark):
         ).all()
 
 
-def test_watermark_audit_measures_out_of_order(spark, tmp_path):
-    """On a deliberately shuffled arrival order the audit must count
-    real drops, matching an independent pandas watermark replay."""
-    from llm_map_reduce_summarizer_spark.plans.events import (
-        WM_ARRIVAL_BATCH,
-        WM_CANDIDATE_HOURS,
-    )
-
-    rng = np.random.RandomState(11)
-    n = 4000
-    ts = pd.Timestamp("2024-03-01") + pd.to_timedelta(
-        rng.permutation(n) * 120, unit="s"
-    )  # arrival (row order) is a shuffle of event time
-    ev = pd.DataFrame(
-        {
-            "event_id": range(n),
-            "ts": ts,
-            "user_id": [i % 9 for i in range(n)],
-            "event_type": ["view"] * n,
-            "value": [1.0] * n,
-            "props": ["{}"] * n,
-        }
-    )
-    ev.to_parquet(tmp_path / "events.parquet")
-    rel = (
-        QUERIES["events_watermark_audit"](spark, str(tmp_path))
-        .toPandas()
-        .set_index("watermark_hours")
-    )
-    ab = ev["event_id"] // WM_ARRIVAL_BATCH
-    ts_us = ev["ts"].astype("int64") // 1000
-    mx = ts_us.groupby(ab).max()
-    hw = mx.cummax().shift(1)
-    late = np.maximum(
-        0, ab.map(hw).fillna(ts_us.min()).to_numpy() - ts_us.to_numpy()
-    )
-    # with hw NaN for batch 0 -> lateness 0 (replicate the coalesce)
-    late[ab.to_numpy() == 0] = 0
-    for h in WM_CANDIDATE_HOURS:
-        expect = int((late > h * 3_600_000_000).sum())
-        assert rel.loc[h, "n_dropped"] == expect
-    assert rel.loc[0, "n_dropped"] > 0  # the shuffle creates lateness
-
-
 def test_dedup_injection_recall_floor(spark):
     row = (
         QUERIES["dedup_injection_eval"](spark, SF_SMOKE)
@@ -826,22 +699,6 @@ def test_dedup_injection_recall_floor(spark):
     assert row["recall"] >= 0.5
     assert row["n_found"] <= row["n_planted"]
     assert row["n_pairs_total"] >= row["n_found"]
-
-
-def test_psi_injection_response_curve(spark):
-    rel = (
-        QUERIES["events_psi_injection_eval"](spark, SF_SMOKE)
-        .toPandas()
-        .sort_values("shift_dollars")
-        .reset_index(drop=True)
-    )
-    # zero shift reads exactly zero; response is monotone in shift
-    assert rel.loc[0, "shift_dollars"] == 0.0
-    assert rel.loc[0, "psi"] == 0.0
-    assert rel["psi"].is_monotonic_increasing
-    # a $25 shift on a ~$0-490 value distribution must cross the
-    # industry "shifted" threshold
-    assert rel.set_index("shift_dollars").loc[25.0, "psi"] > 0.25
 
 
 def test_quality_injection_separation(spark):
@@ -952,37 +809,6 @@ def test_dsir_weights_separate_target_sources(spark):
     assert (model["n_raw"] >= model["n_target"]).all()
 
 
-def test_t_closeness_matches_numpy(spark):
-    """Ordered-EMD recomputed from raw events for every QI group:
-    t = Σ|CumP_g − CumP_all| / (B−1) over the global bin grid."""
-    out = (
-        QUERIES["events_t_closeness"](spark, SF_SMOKE)
-        .toPandas()
-        .set_index(["event_type", "hod"])
-    )
-    ev = _events()
-    ev = ev.assign(
-        hod=pd.to_datetime(ev["ts"]).dt.hour,
-        vb=np.floor(ev["value"] / 10.0).astype(int),
-    )
-    bins = np.sort(ev["vb"].unique())
-    p_all = (
-        ev["vb"].value_counts().reindex(bins, fill_value=0).to_numpy()
-        / len(ev)
-    )
-    cum_all = np.cumsum(p_all)
-    for (et, hod), g in ev.groupby(["event_type", "hod"]):
-        p_g = (
-            g["vb"].value_counts().reindex(bins, fill_value=0).to_numpy()
-            / len(g)
-        )
-        t = np.abs(np.cumsum(p_g) - cum_all).sum() / (len(bins) - 1)
-        row = out.loc[(et, hod)]
-        assert int(row["n_rows"]) == len(g)
-        assert int(row["n_bins_global"]) == len(bins)
-        assert _close(float(row["t_emd"]), t, 1e-4), (et, hod)
-
-
 def test_burrows_delta_invariants(spark):
     """Delta over every unordered source pair: non-negative, one row
     per pair, and recomputed in numpy from raw tokens."""
@@ -1086,31 +912,6 @@ def test_contrastive_pairs_two_doc_corpus_null_negative(spark, tmp_path):
     assert compare_frames(spark_pdf, oracle_pdf) == []
 
 
-def test_t_closeness_single_bin_grid_reports_zero(spark):
-    """Advisor r6: a value grid that collapses to ONE global bin must
-    report t = 0 / no breach (every group's distribution trivially
-    equals the global one), not a silent NULL verdict."""
-    from pyspark.sql import functions as F
-
-    from llm_map_reduce_summarizer_spark.plans.events import (
-        t_closeness_cells,
-        t_closeness_from_cells,
-    )
-
-    ev = spark.createDataFrame(
-        [
-            ("click", "2024-01-01 03:00:00", 5.0),
-            ("click", "2024-01-01 03:30:00", 7.0),
-            ("view", "2024-01-01 04:00:00", 3.0),
-        ],
-        "event_type string, ts_s string, value double",
-    ).select("event_type", F.col("ts_s").cast("timestamp").alias("ts"), "value")
-    out = t_closeness_from_cells(t_closeness_cells(ev)).toPandas()
-    assert (out["n_bins_global"] == 1).all()
-    assert (out["t_emd"] == 0.0).all()
-    assert (~out["breach"]).all()
-
-
 def test_bpe_census_nonoverlap_runs(spark):
     """The greedy non-overlap rule: a same-char run of length R
     yields floor(R/2) merge occurrences (not R−1); non-self pairs
@@ -1129,70 +930,6 @@ def test_bpe_census_nonoverlap_runs(spark):
         .to_dict()
     )
     assert out == {"aa": 3, "ab": 5, "ba": 2, "bb": 1}
-
-
-def test_markov_removal_effects_analytic():
-    """Analytic chains pin the removal-effect solver: a channel on
-    the only converting path owns ALL the credit; a channel that
-    never reaches conversion gets none; a 50/50 split shares it."""
-    from llm_map_reduce_summarizer_spark.plans.events import (
-        markov_removal_effects,
-    )
-
-    # START -> A -> purchase (1 user); START -> B -> END (1 user)
-    cells = [
-        ("START", "A", 1),
-        ("A", "purchase", 1),
-        ("START", "B", 1),
-        ("B", "END", 1),
-    ]
-    ch, base, res, shares, n_in, n_out, ok = markov_removal_effects(
-        cells
-    )
-    assert ok and sorted(ch) == ["A", "B"]
-    assert abs(base - 0.5) < 1e-9
-    assert abs(res["A"] - 1.0) < 1e-9 and abs(res["B"]) < 1e-9
-    assert abs(shares["A"] - 1.0) < 1e-9
-    assert n_in == {"A": 1, "B": 1} and n_out == {"A": 1, "B": 1}
-
-    # two symmetric converting channels split the credit evenly
-    cells = [
-        ("START", "A", 1),
-        ("A", "purchase", 1),
-        ("START", "B", 1),
-        ("B", "purchase", 1),
-    ]
-    _, base, res, shares, _, _, ok = markov_removal_effects(cells)
-    assert ok and abs(base - 1.0) < 1e-9
-    assert abs(shares["A"] - 0.5) < 1e-9
-    assert abs(shares["B"] - 0.5) < 1e-9
-    assert abs(res["A"] - 0.5) < 1e-9
-
-
-def test_markov_unreachable_channel_raises(spark):
-    """The solver_converged invariant is structural and now COMPUTED
-    on both engines (r8): a channel cycle with no path to an
-    absorbing state (here A<->B, never reaching purchase or END) must
-    make attribution_markov_from_pairs raise — the oracle's
-    recursive-CTE reachability boolean would read FALSE on the same
-    data, so the two sides scream together instead of hash-diverging."""
-    from llm_map_reduce_summarizer_spark.plans.events import (
-        attribution_markov_from_pairs,
-    )
-
-    import pytest
-
-    pairs = spark.createDataFrame(
-        [
-            ("START", "A", 1),
-            ("A", "B", 1),
-            ("B", "A", 1),
-            ("START", "purchase", 1),
-        ],
-        "src string, dst string, n long",
-    )
-    with pytest.raises(ValueError, match="reaches_absorbing=False"):
-        attribution_markov_from_pairs(pairs)
 
 
 def test_multimodal_neardup_banded_subset_and_topk(spark):

@@ -102,32 +102,6 @@ def test_events_stats_random(spark, tmp_path_factory, seed):
         assert row["n_hours"] == h
         assert row["s_stat"] == s
 
-        # --- CUSUM (Page recursion, integer allowance) ---
-        df = QUERIES["events_cusum"](spark, sf).toPandas()
-        for et, grp in df.groupby("event_type"):
-            hr = (
-                ev[ev.event_type == et]
-                .set_index("ts")
-                .resample("1h")["event_id"]
-                .count()
-            )
-            xs = hr[hr > 0].to_numpy(float)
-            mu = xs.mean()
-            sd = xs.std(ddof=1) if len(xs) > 1 else 0.0
-            k = (
-                math.ceil(sd / 2)
-                if len(xs) > 1 and sd > 0
-                else 0
-            )
-            acc, exp = 0.0, []
-            for xx in xs:
-                acc = max(0.0, acc + (xx - mu - k))
-                exp.append(acc)
-            got = grp.sort_values("hour")["cusum"].to_numpy(float)
-            assert len(got) == len(exp)
-            for gg, ee in zip(got, exp):
-                assert _close(gg, ee)
-
         # --- conversion z-test (24h fast activation) ---
         row = (
             QUERIES["events_conversion_ztest"](spark, sf)

@@ -76,80 +76,6 @@ def test_stream_parquet_file_sink(spark, tmp_path):
     assert compare_frames(back.toPandas(), closed.toPandas()) == []
 
 
-def test_stream_asof_matches_batch(spark):
-    from llm_map_reduce_summarizer_spark.plans.events import (
-        events_asof_view,
-    )
-    from llm_map_reduce_summarizer_spark.plans.streams import (
-        stream_asof_view,
-    )
-
-    stream = stream_asof_view(spark, SF).toPandas()
-    batch = events_asof_view(spark, SF).toPandas()
-    assert len(stream) > 0
-    assert compare_frames(stream, batch) == []
-
-
-def test_stream_asof_state_carries_across_batches(spark, tmp_path):
-    """Feed events as two files/micro-batches split on time: a view in
-    batch 1 must enrich a click arriving in batch 2 purely from carried
-    state (the incremental property the single-file drain can't show)."""
-    import pandas as pd
-
-    from llm_map_reduce_summarizer_spark.streaming.stream_ops import (
-        EVENTS_SCHEMA,
-        asof_enrich_stream,
-        run_available_now,
-    )
-    from pyspark.sql import functions as F
-
-    us = 1_000_000
-    rows = [
-        # batch 1: user 1 view @10s, user 2 click with no prior view
-        dict(event_id=1, ts=10 * us * 1000, user_id=1,
-             event_type="view", value=5.0, props="{}"),
-        dict(event_id=2, ts=11 * us * 1000, user_id=2,
-             event_type="click", value=1.0, props="{}"),
-    ]
-    rows2 = [
-        # batch 2: user 1 clicks twice; second click after a newer view
-        dict(event_id=3, ts=20 * us * 1000, user_id=1,
-             event_type="click", value=2.0, props="{}"),
-        dict(event_id=4, ts=25 * us * 1000, user_id=1,
-             event_type="view", value=7.0, props="{}"),
-        dict(event_id=5, ts=30 * us * 1000, user_id=1,
-             event_type="click", value=3.0, props="{}"),
-    ]
-    src = tmp_path / "events_stream"
-    src.mkdir()
-    # two files + maxFilesPerTrigger=1 -> two micro-batches, in order
-    pd.DataFrame(rows).to_parquet(src / "part-000.parquet")
-    pd.DataFrame(rows2).to_parquet(src / "part-001.parquet")
-
-    raw = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(str(src))
-        .withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    )
-    out = (
-        run_available_now(asof_enrich_stream(raw), output_mode="update")
-        .toPandas()
-        .set_index("event_id")
-        .sort_index()
-    )
-    assert list(out.index) == [2, 3, 5]
-    # user 2's click: no view ever -> NULLs
-    assert pd.isna(out.loc[2, "view_value"]) and pd.isna(out.loc[2, "view_ts_us"])
-    # user 1's first click is enriched by the batch-1 view via state
-    assert out.loc[3, "view_value"] == 5.0
-    assert out.loc[3, "view_ts_us"] == 10 * us
-    # and the later click sees the newer in-batch view
-    assert out.loc[5, "view_value"] == 7.0
-    assert out.loc[5, "view_ts_us"] == 25 * us
-
-
 def test_stream_dedup_matches_batch_and_carries_state(spark, tmp_path):
     from llm_map_reduce_summarizer_spark.plans.documents import dedup_apply
     from llm_map_reduce_summarizer_spark.plans.streams import stream_dedup
@@ -393,15 +319,14 @@ def test_stream_round_half_up_matches_spark(spark):
 
 
 def test_stream_folds_round_boundary_values(spark, tmp_path):
-    """End-to-end .xx5 boundary through the stateful folds: a session
-    whose value sums to 0.125 and a click/view pair at 0.125 must come
-    out as 0.13 (Spark HALF_UP), not Python round()'s 0.12."""
+    """End-to-end .xx5 boundary through the stateful sessionize fold: a
+    session whose value sums to 0.125 must come out as 0.13 (Spark
+    HALF_UP), not Python round()'s 0.12."""
     import pandas as pd
     from pyspark.sql import functions as F
 
     from llm_map_reduce_summarizer_spark.streaming.stream_ops import (
         EVENTS_SCHEMA,
-        asof_enrich_stream,
         run_available_now,
         sessionize_stream,
     )
@@ -429,18 +354,6 @@ def test_stream_folds_round_boundary_values(spark, tmp_path):
     # 0.125 + 0.125 = 0.25 exactly; sessions split at the 30-min gap,
     # so each single-event session carries 0.125 -> rounds to 0.13
     assert sorted(sess["session_value"]) == [0.13, 0.13]
-
-    raw2 = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src))
-        .withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    )
-    asof = run_available_now(
-        asof_enrich_stream(raw2), output_mode="update"
-    ).toPandas()
-    assert list(asof["click_value"]) == [0.13]
-    assert list(asof["view_value"]) == [0.13]
 
 
 def _sessionize_oracle(rows):
@@ -474,49 +387,22 @@ def _sessionize_oracle(rows):
     }
 
 
-def _asof_oracle(rows):
-    """Independent as-of oracle: each click gets the max-(ts, event_id)
-    view with view.ts <= click.ts for the same user (view-before-click
-    at equal timestamps, matching the fold's sort tiebreak)."""
-    from llm_map_reduce_summarizer_spark.streaming.stream_ops import _round2
-
-    out = set()
-    for r in rows:
-        if r["event_type"] != "click":
-            continue
-        views = [
-            v for v in rows
-            if v["user_id"] == r["user_id"]
-            and v["event_type"] == "view"
-            and v["ts_us"] <= r["ts_us"]
-        ]
-        if views:
-            v = max(views, key=lambda v: (v["ts_us"], v["event_id"]))
-            out.add((r["event_id"], r["user_id"], r["ts_us"],
-                     _round2(r["value"]), _round2(v["value"]), v["ts_us"]))
-        else:
-            out.add((r["event_id"], r["user_id"], r["ts_us"],
-                     _round2(r["value"]), None, None))
-    return out
-
-
 @pytest.mark.slow
 def test_stream_parity_on_randomized_micro_batch_splits(spark, tmp_path_factory):
     """Property test (round-4 advice #8): for ANY time-contiguous split
     of an event log into 2-4 micro-batch files — with rows arbitrarily
-    shuffled inside each file — sessionize_stream and asof_enrich_stream
-    must reproduce the independent batch oracles exactly. The streaming
-    contract requires per-user event-time order ACROSS micro-batches
-    (the usual log-stream property), so splits are contiguous cuts of
-    the time-sorted log; within a file order is free because the folds
-    re-sort per batch."""
+    shuffled inside each file — sessionize_stream must reproduce the
+    independent batch oracle exactly. The streaming contract requires
+    per-user event-time order ACROSS micro-batches (the usual
+    log-stream property), so splits are contiguous cuts of the
+    time-sorted log; within a file order is free because the fold
+    re-sorts per batch."""
     import pandas as pd
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
     from llm_map_reduce_summarizer_spark.streaming.stream_ops import (
         EVENTS_SCHEMA,
-        asof_enrich_stream,
         latest_sessions,
         run_available_now,
         sessionize_stream,
@@ -547,13 +433,9 @@ def test_stream_parity_on_randomized_micro_batch_splits(spark, tmp_path_factory)
                  event_type=e, value=q * 0.25)
             for i, (u, t, e, q) in enumerate(tuples)
         ]
-        # split order must match the folds' in-batch sort so any
+        # split order must match the fold's in-batch sort so any
         # contiguous cut is a valid arrival order
-        ordered = sorted(
-            rows,
-            key=lambda r: (r["ts_us"], r["event_type"] == "click",
-                           r["event_id"]),
-        )
+        ordered = sorted(rows, key=lambda r: (r["ts_us"], r["event_id"]))
         n_files = data.draw(st.integers(2, 4))
         cuts = sorted(
             data.draw(
@@ -592,26 +474,9 @@ def test_stream_parity_on_randomized_micro_batch_splits(spark, tmp_path_factory)
                 .withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
             )
 
-        # the two drains are independent (uuid-named sinks, separate
-        # checkpoints) — overlap them so each example pays one stream
-        # latency, not two (suite wall-time, VERDICT r7 item 6)
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as drain_pool:
-            f_sess = drain_pool.submit(
-                lambda: latest_sessions(
-                    run_available_now(
-                        sessionize_stream(read()), output_mode="update"
-                    )
-                ).toPandas()
-            )
-            f_asof = drain_pool.submit(
-                lambda: run_available_now(
-                    asof_enrich_stream(read()), output_mode="update"
-                ).toPandas()
-            )
-            sess = f_sess.result()
-            asof = f_asof.result()
+        sess = latest_sessions(
+            run_available_now(sessionize_stream(read()), output_mode="update")
+        ).toPandas()
         got_sessions = {
             tuple(r)
             for r in sess[
@@ -620,15 +485,6 @@ def test_stream_parity_on_randomized_micro_batch_splits(spark, tmp_path_factory)
             ].itertuples(index=False)
         }
         assert got_sessions == _sessionize_oracle(rows)
-
-        got_asof = {
-            (int(r.event_id), int(r.user_id), int(r.ts_us),
-             r.click_value,
-             None if pd.isna(r.view_value) else r.view_value,
-             None if pd.isna(r.view_ts_us) else int(r.view_ts_us))
-            for r in asof.itertuples(index=False)
-        }
-        assert got_asof == _asof_oracle(rows)
 
     run()
 
@@ -870,290 +726,6 @@ def test_stream_bot_gate_min_gap_spans_batch_boundary(spark, tmp_path):
     assert latest.iloc[0]["min_gap_us"] == 200  # the boundary pair
 
 
-def test_stream_funnel_stage_machine_spans_batch_boundary(spark, tmp_path):
-    """The stage machine must honor strict ordering ACROSS micro-batch
-    boundaries: a click arriving in a later batch still counts (state
-    carries t_view), while a click at-or-before the first view never
-    does; and the drained totals equal batch `events_funnel`."""
-    import pandas as pd
-
-    from llm_map_reduce_summarizer_spark.streaming.stream_ops import (
-        EVENTS_SCHEMA,
-        funnel_stages_stream,
-        run_available_now,
-    )
-    from pyspark.sql import functions as F
-
-    base = 1_700_000_000_000_000_000  # ns for the legacy long schema
-
-    def ev(eid, ts_us, uid, et):
-        return dict(
-            event_id=eid, ts=base + ts_us * 1000, user_id=uid,
-            event_type=et, value=0.0, props="{}",
-        )
-
-    src = tmp_path / "events_funnel"
-    src.mkdir()
-    # user 1: view in batch 0, click+purchase in batch 1 -> full funnel
-    # user 2: click at the SAME ts as its view (strict > rejects it)
-    # user 3: purchase before any click -> stops at view
-    pd.DataFrame(
-        [ev(1, 100, 1, "view"), ev(2, 100, 2, "view"),
-         ev(3, 100, 2, "click"), ev(4, 100, 3, "view")]
-    ).to_parquet(src / "part-000.parquet")
-    pd.DataFrame(
-        [ev(5, 200, 1, "click"), ev(6, 300, 1, "purchase"),
-         ev(7, 300, 3, "purchase")]
-    ).to_parquet(src / "part-001.parquet")
-    raw = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(str(src))
-    ).withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    drained = run_available_now(
-        funnel_stages_stream(raw), output_mode="update"
-    )
-    final = (
-        drained.groupBy("user_id")
-        .agg(
-            F.max("t_view").alias("t_view"),
-            F.max("t_click").alias("t_click"),
-            F.max("t_purchase").alias("t_purchase"),
-        )
-        .toPandas()
-        .set_index("user_id")
-        .sort_index()
-    )
-    assert final.loc[1].notna().all()  # cross-batch funnel completes
-    assert pd.isna(final.loc[2]["t_click"])  # same-ts click rejected
-    assert pd.isna(final.loc[3]["t_purchase"])  # no click -> no purchase
-    n_view = final["t_view"].notna().sum()
-    n_click = final["t_click"].notna().sum()
-    n_purch = final["t_purchase"].notna().sum()
-    assert (n_view, n_click, n_purch) == (3, 1, 1)
-
-
-@pytest.mark.slow
-def test_stream_funnel_parity_on_randomized_splits(spark, tmp_path_factory):
-    """Property test: for ANY contiguous micro-batch split of a
-    time-sorted event log (rows shuffled within each file), the
-    drained funnel stage times must equal the batch conditional-min
-    cascade computed independently in Python."""
-    import pandas as pd
-    from hypothesis import HealthCheck, given, settings
-    from hypothesis import strategies as st
-
-    from llm_map_reduce_summarizer_spark.streaming.stream_ops import (
-        EVENTS_SCHEMA,
-        funnel_stages_stream,
-        run_available_now,
-    )
-    from pyspark.sql import functions as F
-
-    raw_events = st.lists(
-        st.tuples(
-            st.integers(1, 3),                      # user_id
-            st.integers(0, 600),                    # ts seconds
-            st.sampled_from(["view", "click", "purchase"]),
-        ),
-        min_size=3,
-        max_size=24,
-    )
-
-    def funnel_oracle(rows):
-        out = {}
-        users = {r["user_id"] for r in rows}
-        for u in users:
-            rs = [r for r in rows if r["user_id"] == u]
-            views = [r["ts_us"] for r in rs if r["event_type"] == "view"]
-            t_view = min(views) if views else None
-            t_click = None
-            if t_view is not None:
-                clicks = [
-                    r["ts_us"] for r in rs
-                    if r["event_type"] == "click" and r["ts_us"] > t_view
-                ]
-                t_click = min(clicks) if clicks else None
-            t_purchase = None
-            if t_click is not None:
-                ps = [
-                    r["ts_us"] for r in rs
-                    if r["event_type"] == "purchase"
-                    and r["ts_us"] > t_click
-                ]
-                t_purchase = min(ps) if ps else None
-            out[u] = (t_view, t_click, t_purchase)
-        return out
-
-    @settings(
-        max_examples=15,
-        deadline=None,
-        suppress_health_check=list(HealthCheck),
-    )
-    @given(data=st.data())
-    def run(data):
-        tuples = data.draw(raw_events)
-        rows = [
-            dict(event_id=i, ts_us=t * 1_000_000, user_id=u,
-                 event_type=e, value=0.0)
-            for i, (u, t, e) in enumerate(tuples)
-        ]
-        ordered = sorted(rows, key=lambda r: (r["ts_us"], r["event_id"]))
-        n_files = data.draw(st.integers(2, 3))
-        cuts = sorted(
-            data.draw(
-                st.lists(
-                    st.integers(1, max(1, len(ordered) - 1)),
-                    min_size=n_files - 1,
-                    max_size=n_files - 1,
-                    unique=True,
-                )
-            )
-        )
-        chunks, prev = [], 0
-        for c in cuts + [len(ordered)]:
-            chunk = ordered[prev:c]
-            prev = c
-            if chunk:
-                chunks.append(data.draw(st.permutations(chunk)))
-
-        src = tmp_path_factory.mktemp("rand_funnel")
-        for i, chunk in enumerate(chunks):
-            pdf = pd.DataFrame(chunk)
-            pdf["ts"] = pdf["ts_us"] * 1000  # long nanos file
-            pdf["props"] = "{}"
-            pdf[["event_id", "ts", "user_id", "event_type", "value",
-                 "props"]].to_parquet(src / f"part-{i:03d}.parquet")
-
-        raw = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .option("latestFirst", "false")
-            .parquet(str(src))
-            .withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        )
-        drained = run_available_now(
-            funnel_stages_stream(raw), output_mode="update"
-        )
-        final = (
-            drained.groupBy("user_id")
-            .agg(
-                F.max("t_view").alias("t_view"),
-                F.max("t_click").alias("t_click"),
-                F.max("t_purchase").alias("t_purchase"),
-            )
-            .toPandas()
-        )
-        got = {
-            int(r.user_id): tuple(
-                None if pd.isna(v) else int(v)
-                for v in (r.t_view, r.t_click, r.t_purchase)
-            )
-            for r in final.itertuples(index=False)
-        }
-        assert got == funnel_oracle(rows)
-
-    run()
-
-
-def test_stream_cohort_days_emit_once_across_batches(spark, tmp_path):
-    """A user's repeat activity on the SAME day in a later micro-batch
-    must not re-emit, while a NEW day must — and the cohort tag always
-    carries the true first day."""
-    import pandas as pd
-
-    from llm_map_reduce_summarizer_spark.streaming.stream_ops import (
-        EVENTS_SCHEMA,
-        cohort_days_stream,
-        run_available_now,
-    )
-    from pyspark.sql import functions as F
-
-    DAY_US = 86_400_000_000
-    base_day = (1_700_000_000_000_000 // DAY_US) * DAY_US  # aligned us
-
-    def ev(eid, day_off, uid):
-        ts_us = base_day + day_off * DAY_US + eid  # distinct in-day ts
-        return dict(
-            event_id=eid, ts=ts_us * 1000, user_id=uid,
-            event_type="view", value=0.0, props="{}",
-        )
-
-    src = tmp_path / "events_cohort"
-    src.mkdir()
-    # batch 0: user 1 active day 0 (twice); batch 1: same day again
-    # (suppressed) + day 2 (new emit)
-    pd.DataFrame([ev(1, 0, 1), ev(2, 0, 1)]).to_parquet(
-        src / "part-000.parquet"
-    )
-    pd.DataFrame([ev(3, 0, 1), ev(4, 2, 1)]).to_parquet(
-        src / "part-001.parquet"
-    )
-    raw = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(str(src))
-    ).withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    pairs = run_available_now(
-        cohort_days_stream(raw), output_mode="append"
-    ).toPandas()
-    assert len(pairs) == 2  # day 0 once, day 2 once
-    assert set(pairs["day_us"] - base_day) == {0, 2 * DAY_US}
-    assert (pairs["cohort_day_us"] == base_day).all()
-
-
-def test_stream_uptime_state_carries_across_batches(spark, tmp_path):
-    """Two time-contiguous micro-batches: a gap that SPANS the batch
-    boundary must count once and contribute min(gap, W) covered time
-    purely from carried state; totals must equal the batch formula
-    sum(min(gap, W)) + W."""
-    import pandas as pd
-
-    from llm_map_reduce_summarizer_spark.streaming.stream_ops import (
-        EVENTS_SCHEMA,
-        run_available_now,
-        uptime_stream,
-    )
-    from pyspark.sql import functions as F
-
-    us = 1_000_000
-    hour = 3600 * us
-    rows = [
-        dict(event_id=1, ts=0, user_id=1,
-             event_type="view", value=0.0, props="{}"),
-        dict(event_id=2, ts=(hour // 2) * 1000, user_id=1,
-             event_type="click", value=0.0, props="{}"),
-    ]
-    rows2 = [
-        # 3h after the last batch-1 beat: a cross-boundary DOWNTIME
-        dict(event_id=3, ts=(hour // 2 + 3 * hour) * 1000, user_id=1,
-             event_type="view", value=0.0, props="{}"),
-    ]
-    src = tmp_path / "events_stream"
-    src.mkdir()
-    pd.DataFrame(rows).to_parquet(src / "part-000.parquet")
-    pd.DataFrame(rows2).to_parquet(src / "part-001.parquet")
-    raw = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(str(src))
-        .withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    )
-    out = run_available_now(
-        uptime_stream(raw, hour), output_mode="update"
-    ).toPandas()
-    last = out.sort_values("n_beats").iloc[-1]
-    assert last["n_beats"] == 3
-    assert last["n_gaps"] == 1  # the 3h cross-boundary gap
-    # covered = min(0.5h, 1h) + min(3h, 1h) + open-interval hour
-    assert last["covered_us"] == hour // 2 + hour + hour
-    assert last["first_us"] == 0
-    assert last["last_us"] == hour // 2 + 3 * hour
-
-
 @pytest.mark.slow
 def test_stream_user_paths_parity_on_randomized_splits(spark, tmp_path_factory):
     """user_paths_stream must emit every (prev→next) transition exactly
@@ -1243,116 +815,6 @@ def test_stream_user_paths_parity_on_randomized_splits(spark, tmp_path_factory):
             if u in by_user:
                 expect[(by_user[u], r["event_type"])] += 1
             by_user[u] = r["event_type"]
-        assert got == expect
-
-    run()
-
-
-@pytest.mark.slow
-def test_journey_pairs_split_invariant(spark, tmp_path_factory):
-    """Property test: for ANY time-contiguous micro-batch split of an
-    event log, the drained journey transitions (pairs + the END
-    closure of non-converting users) equal a pure-python reference of
-    the batch journey semantics — first-purchase truncation included."""
-    from collections import Counter
-
-    import pandas as pd
-    from hypothesis import HealthCheck, given, settings
-    from hypothesis import strategies as st
-
-    from llm_map_reduce_summarizer_spark.streaming.stream_ops import (
-        EVENTS_SCHEMA,
-        journey_pairs_stream,
-        run_available_now,
-    )
-    from pyspark.sql import functions as F
-
-    raw_events = st.lists(
-        st.tuples(
-            st.integers(1, 3),                    # user_id
-            st.integers(0, 3600),                 # ts seconds
-            st.sampled_from(["view", "click", "purchase"]),
-        ),
-        min_size=3,
-        max_size=24,
-    )
-
-    @settings(
-        max_examples=12,
-        deadline=None,
-        suppress_health_check=list(HealthCheck),
-    )
-    @given(data=st.data())
-    def run(data):
-        tuples = data.draw(raw_events)
-        rows = [
-            dict(event_id=i, ts_us=t * 1_000_000, user_id=u,
-                 event_type=e, value=0.0)
-            for i, (u, t, e) in enumerate(tuples)
-        ]
-        ordered = sorted(rows, key=lambda r: (r["ts_us"], r["event_id"]))
-        # pure-python reference of the batch journey semantics
-        expect: Counter = Counter()
-        by_user: dict = {}
-        for r in ordered:
-            by_user.setdefault(r["user_id"], []).append(r)
-        for evs in by_user.values():
-            last, conv = None, False
-            for r in evs:
-                if conv:
-                    break
-                src = last if last is not None else "START"
-                expect[(src, r["event_type"])] += 1
-                last = r["event_type"]
-                conv = r["event_type"] == "purchase"
-            if last is not None and not conv:
-                expect[(last, "END")] += 1
-
-        n_files = data.draw(st.integers(1, 3))
-        cuts = sorted(
-            set(
-                data.draw(
-                    st.lists(
-                        st.integers(1, max(1, len(ordered) - 1)),
-                        min_size=n_files - 1,
-                        max_size=n_files - 1,
-                    )
-                )
-            )
-        )
-        chunks, prev = [], 0
-        for c in cuts + [len(ordered)]:
-            if ordered[prev:c]:
-                chunks.append(ordered[prev:c])
-            prev = c
-
-        src = tmp_path_factory.mktemp("journey_split")
-        for i, chunk in enumerate(chunks):
-            pdf = pd.DataFrame(chunk)
-            pdf["ts"] = pdf["ts_us"] * 1000  # long nanos file
-            pdf["props"] = "{}"
-            pdf[["event_id", "ts", "user_id", "event_type", "value",
-                 "props"]].to_parquet(src / f"part-{i:03d}.parquet")
-
-        stream = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .option("latestFirst", "false")
-            .parquet(str(src))
-            .withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        )
-        drained = run_available_now(
-            journey_pairs_stream(stream), output_mode="update"
-        ).toPandas()
-        got: Counter = Counter()
-        for _, r in drained[drained["kind"] == "pair"].iterrows():
-            got[(r["src"], r["dst"])] += 1
-        lasts = drained[drained["kind"] == "last"].sort_values(
-            ["user_id", "ts_us", "event_id"]
-        ).groupby("user_id").tail(1)
-        for _, r in lasts.iterrows():
-            if r["dst"] == "N":
-                got[(r["src"], "END")] += 1
         assert got == expect
 
     run()
