@@ -436,103 +436,6 @@ def incremental_dedup_verdicts(
     )
 
 
-def dedup_reference_index(
-    existing: DataFrame,
-    id_col: str = "doc_id",
-    df_cap: int | None = 100,
-) -> dict:
-    """Precomputed existing-corpus dedup index — the tables a
-    production pipeline maintains alongside the corpus so ingest
-    deltas can be screened without re-deriving anything:
-
-    * ``stop``  — stop-shingle list (df > cap over the EXISTING corpus
-      — the boilerplate list is corpus-maintained, so an arriving
-      doc's verdict never depends on which micro-batch it shares),
-    * ``sh``    — capped keyed shingle table of the existing docs,
-    * ``bands`` — their MinHash LSH band buckets (the probe target),
-    * ``fps``   — distinct normalized digests (the exact-tier probe).
-
-    All four are materialized once (localCheckpoint) and reused across
-    every screened batch/micro-batch.
-    """
-    sh_raw = doc_shingles(existing, id_col, keyed=True).transform(materialize)
-    if df_cap is not None:
-        stop = stop_shingle_set(sh_raw, df_cap)
-        sh = sh_raw.join(F.broadcast(stop), "s", "left_anti")
-    else:
-        stop = sh_raw.select("s").filter(F.lit(False))
-        sh = sh_raw
-    sh = sh.transform(materialize)
-    return {
-        "stop": stop,
-        "sh": sh,
-        "bands": band_bucket_rows(sh, id_col).transform(materialize),
-        "fps": fingerprint(existing)
-        .select("fp")
-        .distinct()
-        .transform(materialize),
-    }
-
-
-def incremental_verdicts_against_index(
-    batch: DataFrame,
-    index: dict,
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Screen a batch against a precomputed :func:`dedup_reference_index`
-    — verdict ``dup_exact`` / ``dup_near`` / ``keep`` per batch doc.
-    A doc's verdict depends only on (doc, index), so the result is
-    invariant to how the batch is split into micro-batches.
-
-    Scale: per screened batch the work is |batch| digest probes +
-    |batch| band probes x bucket occupancy + Jaccard verify on the
-    candidates — never proportional to the existing corpus.
-    """
-    exact_hit = (
-        fingerprint(batch)
-        .join(index["fps"], "fp", "left_semi")
-        .select(id_col)
-        .withColumn("is_exact", F.lit(True))
-    )
-    sh_b = doc_shingles(batch, id_col, keyed=True).join(
-        F.broadcast(index["stop"]), "s", "left_anti"
-    )
-    candidates = (
-        band_bucket_rows(sh_b, id_col)
-        .select(F.col(id_col).alias("da"), "bk", "bv")
-        .join(
-            index["bands"].select(
-                F.col(id_col).alias("db"), "bk", "bv"
-            ),
-            ["bk", "bv"],
-        )
-        .select("da", "db")
-        .distinct()
-    )
-    near_hit = (
-        jaccard_verify(
-            sh_b.unionByName(index["sh"]), candidates, id_col, threshold
-        )
-        .select(F.col("da").alias(id_col))
-        .distinct()
-        .withColumn("is_near", F.lit(True))
-    )
-    return (
-        batch.select(id_col, "lang")
-        .join(exact_hit, id_col, "left")
-        .join(near_hit, id_col, "left")
-        .select(
-            id_col,
-            "lang",
-            F.when(F.col("is_exact"), F.lit("dup_exact"))
-            .when(F.col("is_near"), F.lit("dup_near"))
-            .otherwise(F.lit("keep"))
-            .alias("verdict"),
-        )
-    )
-
-
 # Edge-count bound for the driver-side union-find fast path in
 # `connected_components`. 1M (src, dst) longs is ~16 MB on the driver
 # and a few hundred ms of union-find — far below the broadcast-side

@@ -1319,8 +1319,8 @@ def corpus_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def dedup_index_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The stored near-dup index table: per-doc MinHash LSH band keys
-    — the existing-corpus side that ``corpus_dedup_incremental`` /
-    ``stream_dedup_incremental`` probe; maintaining it alongside the
+    — the existing-corpus side that ``corpus_dedup_incremental``
+    probes; maintaining it alongside the
     corpus is what makes delta screening O(delta), not O(corpus)."""
     from ..functions.hashing import band_hashes
     from ..operators.dedup import drop_stop_shingles, minhash_signatures
@@ -6489,8 +6489,7 @@ def corpus_token_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-mass inequality across documents: the Gini coefficient
     of per-doc token counts — the packing/budget read ("do a few huge
     docs dominate the token mass?") that decides whether shard
-    packing needs the oversized-split path at all; the corpus-side
-    twin of `events_gini`'s user-activity inequality.
+    packing needs the oversized-split path at all.
 
     Scale: computed EXACTLY via the counts-of-counts histogram — the
     mean-absolute-difference double sum runs over V² DISTINCT token
@@ -8361,10 +8360,9 @@ def corpus_budget_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per-source availability is one source-keyed partial agg;
     the water level λ comes from the sources²-bounded D² self-join
-    prefix sums (the `events_adoption_curve` pattern — NO unpartitioned
-    window) and collapses to a 1-row broadcast; allocation is a
-    narrow map over the sources-bounded table. Exact integer token
-    sums; λ is one double division.
+    prefix sums (NO unpartitioned window) and collapses to a 1-row
+    broadcast; allocation is a narrow map over the sources-bounded
+    table. Exact integer token sums; λ is one double division.
     """
     d = _docs(spark, sf_dir)
     per = d.groupBy("source").agg(
@@ -9603,35 +9601,6 @@ def incr_dedup_oracle_sql(stop_scope: str) -> str:
 _SAMPLE_CASE = "CASE lang " + " ".join(
     f"WHEN '{lang}' THEN '{hexthr}'" for lang, hexthr in _SAMPLE_HEX.items()
 ) + " END"
-
-def quality_gate_sql(min_score: float) -> str:
-    """Oracle SQL for a quality-gated corpus scan (shared with the
-    streaming quality gate, whose drain equals this batch filter)."""
-    from ..functions.text import sql_quantize as _sq
-
-    score = _sq(
-        "0.4 * least(n_words_d / 100.0, 1.0)"
-        " + 0.3 * (1.0 - stop_hits / n_words_d)"
-        " + 0.3 * least((alpha / n_words_d) / 8.0, 1.0)",
-        4,
-    )
-    return f"""
-        WITH base AS (
-          SELECT doc_id, lang, source, n_chars, {score} AS quality_score
-          FROM (
-            SELECT doc_id, lang, source, n_chars,
-                   CAST(len(regexp_split_to_array(trim(text), '\\s+'))
-                     AS DOUBLE) AS n_words_d,
-                   CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g'))
-                     AS DOUBLE) AS alpha,
-                   CAST(len(list_filter({_W}, t ->
-                     list_contains({_Q_STOPS}, t))) AS DOUBLE) AS stop_hits
-            FROM documents
-          )
-        )
-        SELECT doc_id, lang, source, n_chars, quality_score
-        FROM base WHERE quality_score >= {min_score}
-    """
 
 
 # doc_id -> quality_score (+ passthrough columns), shared by the

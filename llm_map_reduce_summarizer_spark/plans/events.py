@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.text import quantize, sql_quantize
-from ..operators.persist import materialize
 from ..sources.tables import load_table
 
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 minutes
@@ -585,63 +584,6 @@ def events_quantile_treatment_effect(
     return out
 
 
-DP_MEDIAN_EPS = 1.0
-
-
-def events_dp_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Differentially-private median of event value via the
-    EXPONENTIAL MECHANISM over dollar bins: utility of bin b is
-    −|2·rank(b) − n| (how far b sits from the true median), each bin
-    gets a deterministic md5-keyed Gumbel draw, and the release is
-    argmax(ε·u/2 + Gumbel) — the Gumbel-max trick makes the
-    exponential mechanism a one-pass argmax, and the keyed draw makes
-    it replayable in the SQL twin. Third member of the DP suite:
-    Laplace counts (`events_dp_hourly`), clipped sums
-    (`events_dp_user_total`), and now a non-additive statistic.
-
-    Scale: one bin-count partial agg (bins bounded by the value
-    range), a cumulative window over ≤bins rows, one argmax.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    bins = ev.groupBy(
-        F.floor(F.col("value")).cast("long").alias("bin")
-    ).agg(F.count(F.lit(1)).cast("long").alias("n_bin"))
-    # cumulative rank via a broadcast theta-join over the BOUNDED bin
-    # table (≤ value-range rows) — no global window, no single-task
-    # sort of anything corpus-sized
-    tot = bins.agg(F.sum("n_bin").cast("long").alias("n"))
-    lower = bins.select(
-        F.col("bin").alias("b2"), F.col("n_bin").alias("nb2")
-    )
-    ranked = (
-        bins.join(F.broadcast(lower), F.col("b2") <= F.col("bin"))
-        .groupBy("bin", "n_bin")
-        .agg(F.sum("nb2").cast("long").alias("cum"))
-        .crossJoin(F.broadcast(tot))
-    )
-    # utility in integer half-units: -|2*cum - n| (exact)
-    util = -F.abs(2 * F.col("cum") - F.col("n"))
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("dpm|"), F.col("bin").cast("string"))),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("double")
-    u = (h + F.lit(0.5)) / F.lit(DP_U_SCALE)
-    gumbel = -F.log(-F.log(u))
-    score = F.lit(DP_MEDIAN_EPS / 4.0) * util + gumbel
-    # Gumbel-argmax as ONE aggregate (ties to the smaller bin)
-    return ranked.withColumn("score", score).agg(
-        F.expr("max_by(bin, struct(score, -bin))")
-        .cast("long")
-        .alias("dp_median_bin"),
-        F.lit(DP_MEDIAN_EPS).alias("epsilon"),
-    )
-
-
 ABSORB_TARGET = "purchase"
 ABSORB_TOL = 1e-12
 
@@ -775,62 +717,6 @@ def events_dp_user_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dp_user_release_from_counts(per_user)
 
 
-BOT_MIN_EVENTS = 30
-BOT_RATE_PER_MIN = 2.0
-
-
-def events_bot_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heuristic bot screen per user: event count, active span,
-    sustained events-per-minute rate, and the minimum inter-event gap
-    — users above the rate threshold with enough volume get flagged
-    (the traffic-hygiene gate that runs before any behavioral
-    analytics at 100 TB).
-
-    Scale: ONE sort-shuffle on user_id (the lag for min-gap shares
-    sessionization's partitioning) folding straight into a per-user
-    partial agg; thresholds compare exact integers / single-division
-    doubles, so both engines agree.
-    """
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "ts_us", F.unix_micros("ts")
-    )
-    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    gapped = ev.withColumn(
-        "gap_us", F.col("ts_us") - F.lag("ts_us").over(w)
-    )
-    per = gapped.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        (F.max("ts_us") - F.min("ts_us")).cast("long").alias("span_us"),
-        F.min("gap_us").cast("long").alias("min_gap_us"),
-    )
-    rate = (
-        F.col("n_events").cast("double")
-        / (F.col("span_us").cast("double") / 60_000_000.0)
-    )
-    return per.select(
-        "user_id",
-        "n_events",
-        "span_us",
-        "min_gap_us",
-        quantize(
-            F.when(F.col("span_us") > 0, rate).otherwise(F.lit(0.0)), 4
-        ).alias("events_per_min"),
-        (
-            (F.col("n_events") >= BOT_MIN_EVENTS)
-            & (F.col("span_us") > 0)
-            & (
-                quantize(
-                    F.when(F.col("span_us") > 0, rate).otherwise(
-                        F.lit(0.0)
-                    ),
-                    4,
-                )
-                >= BOT_RATE_PER_MIN
-            )
-        ).alias("bot_suspect"),
-    )
-
-
 def events_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily growth accounting: per day, how many active users are NEW
     (first-ever activity) vs returning — the companion to the DAU
@@ -866,61 +752,6 @@ def new_vs_returning_from_pairs(du: DataFrame) -> DataFrame:
             .cast("long")
             .alias("n_returning"),
         )
-    )
-
-
-def events_adoption_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """User-adoption (penetration) curve: per day, how many users had
-    their FIRST-ever activity that day, the cumulative user base, and
-    its share of the final population — the S-curve read a launch
-    review runs.
-
-    Scale: first-seen day is one user-keyed partial agg collapsing to
-    a days-bounded table; the cumulative sum runs over the
-    calendar-bounded D² self-join (NO unpartitioned window); total
-    users is a 1-row broadcast.
-    Exact integers, one division.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    day = F.date_trunc("day", F.col("ts")).alias("day")
-    first = (
-        ev.select(day, "user_id")
-        .groupBy("user_id")
-        .agg(F.min("day").alias("first_day"))
-    )
-    return adoption_from_first_seen(first)
-
-
-def adoption_from_first_seen(first: DataFrame) -> DataFrame:
-    """The S-curve scan over (user_id, first_day) rows — shared by the
-    batch query and the streaming drain (`stream_adoption_curve`
-    min-folds the same first-seen state at ingest)."""
-    daily = first.groupBy(F.col("first_day").alias("day")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_first_seen")
-    )
-    b = daily.select(
-        F.col("day").alias("day_b"),
-        F.col("n_first_seen").alias("n_b"),
-    )
-    cum = (
-        # explicit broadcast: the theta join is days-bounded, but
-        # without the hint its plan DEPENDS on source size stats — a
-        # stats-less input (drained sink, RDD-backed relation) would
-        # degrade to CartesianProduct (caught by the r7 stream audit)
-        daily.join(F.broadcast(b), F.col("day_b") <= F.col("day"))
-        .groupBy("day", "n_first_seen")
-        .agg(F.sum("n_b").cast("long").alias("cum_users"))
-    )
-    tot = first.select(
-        F.col("user_id").alias("uid_t")
-    ).agg(F.count(F.lit(1)).cast("long").alias("n_total"))
-    return cum.crossJoin(F.broadcast(tot)).select(
-        "day",
-        "n_first_seen",
-        "cum_users",
-        quantize(
-            F.col("cum_users").cast("double") / F.col("n_total"), 6
-        ).alias("penetration"),
     )
 
 
@@ -1038,97 +869,6 @@ def type_share_from_cells(per: DataFrame) -> DataFrame:
     )
 
 
-def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust per-hour-of-day anomaly profile: for each hour-of-day,
-    the median hourly event count, the median absolute deviation
-    (MAD), and how many observed hours fall outside the 3-MAD band —
-    the outlier screen that, unlike ``events_hourly_anomaly``'s
-    mean/stddev z-score, is not itself skewed by the outliers it
-    hunts (reference parity: the same hourly rollup family,
-    preprocessor.py's interval aggregation).
-
-    Scale: hourly counts are one ts-truncated partial agg (bounded by
-    hours x types, not events); medians run per hour-of-day group
-    (<=24 partitions of ~hours/24 values — at 100 TB switch the inner
-    percentile to approx_percentile, same shape); the per-hod
-    median/MAD tables are <=24 rows and broadcast back. No
-    unpartitioned window anywhere.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    hourly = ev.groupBy(
-        F.date_trunc("hour", F.col("ts")).alias("hour")
-    ).agg(F.count(F.lit(1)).alias("n"))
-    return mad_from_hourly(hourly)
-
-
-def mad_from_hourly(hourly: DataFrame) -> DataFrame:
-    """The MAD-profile computation over an (hour, n) table — shared
-    by the batch query and the streaming drain (`stream_anomaly_mad`
-    accumulates the same hours-bounded tumbling counts at ingest)."""
-    hourly = hourly.select(
-        F.hour("hour").cast("bigint").alias("hour_of_day"),
-        F.col("n").cast("double").alias("n"),
-    )
-    med = hourly.groupBy("hour_of_day").agg(
-        F.expr("percentile(n, 0.5)").alias("med")
-    )
-    dev = hourly.join(F.broadcast(med), "hour_of_day").withColumn(
-        "adev", F.abs(F.col("n") - F.col("med"))
-    )
-    mad = dev.groupBy("hour_of_day").agg(
-        F.expr("percentile(adev, 0.5)").alias("mad")
-    )
-    return (
-        dev.join(F.broadcast(mad), "hour_of_day")
-        .groupBy("hour_of_day")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_hours"),
-            quantize(F.first("med"), 4).alias("med_n"),
-            quantize(F.first("mad"), 4).alias("mad_n"),
-            F.sum(
-                F.when(
-                    (F.col("mad") > 0)
-                    & (F.col("adev") > 3 * F.col("mad")),
-                    1,
-                ).otherwise(0)
-            )
-            .cast("long")
-            .alias("n_anomalies"),
-        )
-    )
-
-
-def events_interarrival(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user inter-event gap distribution: count, median / p90
-    (exact interpolated), and max gap in integer microseconds — the
-    cadence profile bot-detection thresholds and session-gap tuning
-    are derived from.
-
-    Scale: the lag window is PARTITIONED by user_id (ordered by
-    (ts_us, event_id) for a total order under timestamp ties), so
-    gaps are one sort-shuffle on the natural key; the per-user agg
-    reuses the same partitioning. Gap arithmetic stays in integer
-    microseconds — no float epoch drift between engines.
-    """
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "ts_us", F.unix_micros("ts")
-    )
-    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    gaps = (
-        ev.withColumn("prev_us", F.lag("ts_us").over(w))
-        .filter(F.col("prev_us").isNotNull())
-        .select(
-            "user_id", (F.col("ts_us") - F.col("prev_us")).alias("gap_us")
-        )
-    )
-    return gaps.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_gaps"),
-        quantize(F.expr("percentile(gap_us, 0.5)"), 4).alias("med_gap_us"),
-        quantize(F.expr("percentile(gap_us, 0.9)"), 4).alias("p90_gap_us"),
-        F.max("gap_us").cast("long").alias("max_gap_us"),
-    )
-
-
 def events_forecast_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seasonal-naive forecasting backtest: forecast the LAST observed
     day's hourly event counts from the hour-of-day means of all prior
@@ -1193,330 +933,6 @@ def forecast_from_cells(cells: DataFrame) -> DataFrame:
     )
 
 
-def events_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-way additive decomposition of the hourly count series:
-    observed = day effect + hour-of-day effect − grand mean +
-    residual — the classic seasonality split whose residual is what
-    anomaly detectors SHOULD score (raw counts conflate weekday and
-    clock-hour effects; `events_hourly_anomaly` scores raw z).
-
-    Scale: the hourly series is a ts-truncated partial agg bounded by
-    hours; day means, hour-of-day means, and the grand mean are three
-    tiny aggs OF THAT AGGREGATE (days + 24 + 1 rows) broadcast back
-    onto it; every mean is an exact integer sum over counts with one
-    division.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    hourly = ev.groupBy(
-        F.date_trunc("hour", F.col("ts")).alias("hour")
-    ).agg(F.count(F.lit(1)).cast("long").alias("n"))
-    return decompose_from_hourly(hourly)
-
-
-def decompose_from_hourly(hourly: DataFrame) -> DataFrame:
-    """The two-way additive decomposition over an (hour, n) series —
-    shared by the batch query and the streaming drain
-    (`stream_seasonal_decompose` sums its tumbling per-type state to
-    the same overall series)."""
-    hourly = hourly.select(
-        "hour",
-        F.date_trunc("day", F.col("hour")).alias("day"),
-        F.hour("hour").cast("bigint").alias("hour_of_day"),
-        "n",
-    )
-    # keys rename on the self-lineage joins (drained-relation rule)
-    day_m = hourly.select(
-        F.col("day").alias("day_d"), F.col("n").alias("n_d")
-    ).groupBy("day_d").agg(
-        (F.sum("n_d").cast("double") / F.count(F.lit(1))).alias(
-            "day_mean"
-        )
-    )
-    hod_m = hourly.select(
-        F.col("hour_of_day").alias("hod_h"), F.col("n").alias("n_h")
-    ).groupBy("hod_h").agg(
-        (F.sum("n_h").cast("double") / F.count(F.lit(1))).alias(
-            "hod_mean"
-        )
-    )
-    grand = hourly.select(F.col("n").alias("n_g")).agg(
-        (F.sum("n_g").cast("double") / F.count(F.lit(1))).alias(
-            "grand_mean"
-        )
-    )
-    fitted = (
-        F.col("day_mean") + F.col("hod_mean") - F.col("grand_mean")
-    )
-    return (
-        hourly.join(
-            F.broadcast(day_m), F.col("day") == F.col("day_d")
-        )
-        .join(
-            F.broadcast(hod_m),
-            F.col("hour_of_day") == F.col("hod_h"),
-        )
-        .crossJoin(F.broadcast(grand))
-        .select(
-            "hour",
-            "n",
-            quantize(F.col("day_mean"), 4).alias("day_effect"),
-            quantize(F.col("hod_mean"), 4).alias("hod_effect"),
-            quantize(fitted, 4).alias("fitted"),
-            quantize(F.col("n") - fitted, 4).alias("residual"),
-        )
-    )
-
-
-def events_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temporal dependence of the hourly count series: Pearson
-    autocorrelation at lag 1 hour and lag 24 hours — near-zero lag-24
-    means no daily seasonality to exploit, high lag-1 means bursty
-    persistence (feeds the forecast/decompose tier's validity).
-
-    Scale: the series is an hours-bounded partial agg; each lag is a
-    self-join of that tiny table on exact timestamp arithmetic; the
-    correlation is computed from EXACT integer sums (Σx, Σy, Σxy,
-    Σx², Σy²) with one final expression — no float-order surface.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    hourly = ev.groupBy(
-        F.date_trunc("hour", F.col("ts")).alias("hour")
-    ).agg(F.count(F.lit(1)).cast("long").alias("n"))
-    return autocorr_from_hourly(hourly)
-
-
-def autocorr_from_hourly(hourly: DataFrame) -> DataFrame:
-    """The lag-1/lag-24 ACF scan over an (hour, n) series — shared by
-    the batch query and the streaming drain (`stream_autocorr` sums
-    its tumbling per-type state to the same overall series)."""
-
-    def corr_at(lag_hours: int, name: str) -> DataFrame:
-        lag = hourly.select(
-            (F.col("hour") + F.expr(f"INTERVAL {lag_hours} HOURS")).alias(
-                "hour"
-            ),
-            F.col("n").alias("m"),
-        )
-        j = hourly.join(lag, "hour")
-        return j.agg(
-            F.count(F.lit(1)).cast("long").alias(f"n_pairs_{name}"),
-            quantize(
-                (
-                    F.count(F.lit(1)) * F.sum(F.col("n") * F.col("m"))
-                    - F.sum("n") * F.sum("m")
-                ).cast("double")
-                / F.sqrt(
-                    (
-                        F.count(F.lit(1)) * F.sum(F.col("n") * F.col("n"))
-                        - F.sum("n") * F.sum("n")
-                    ).cast("double")
-                    * (
-                        F.count(F.lit(1)) * F.sum(F.col("m") * F.col("m"))
-                        - F.sum("m") * F.sum("m")
-                    ).cast("double")
-                ),
-                4,
-            ).alias(f"acf_{name}"),
-        )
-
-    return corr_at(1, "lag1").crossJoin(
-        F.broadcast(corr_at(24, "lag24"))
-    )
-
-
-def events_anomaly_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The composed anomaly screen done right: deseasonalize first
-    (`events_seasonal_decompose`'s two-way fit), THEN apply the robust
-    median/MAD band to the residuals — flagged hours are deviations
-    from their own day's level AND clock-hour profile, not from a
-    seasonality-blind global mean. Emits only the flagged hours with
-    their residual and the band.
-
-    Scale: stacks two hours-bounded aggregates; the residual
-    median/MAD is ONE more tiny agg broadcast back. Flag logic is
-    exact comparisons on quantized residuals.
-    """
-    # hours-bounded, materialized once: the screen reads the
-    # decomposition three ways (median stats, MAD stats, the flag
-    # filter) and composed as plans each way re-ran the decompose's
-    # events scans (census: 16 parquet scans for this query)
-    dec = events_seasonal_decompose(spark, sf_dir).transform(materialize)
-    return residual_screen_from_decomposed(dec)
-
-
-def residual_screen_from_decomposed(dec: DataFrame) -> DataFrame:
-    """The median/MAD screen over a decomposed (hour, n, fitted,
-    residual) table — shared by the batch query and the streaming
-    drain (`stream_anomaly_residual` decomposes its drained hourly
-    state with the same shared scan)."""
-    # keys rename on the self-lineage agg (drained-relation rule)
-    stats = dec.select(F.col("residual").alias("r_s")).agg(
-        F.expr("percentile(r_s, 0.5)").alias("med_r")
-    )
-    dev = dec.crossJoin(F.broadcast(stats)).withColumn(
-        "adev", F.abs(F.col("residual") - F.col("med_r"))
-    )
-    mad = dev.select(F.col("adev").alias("adev_m")).agg(
-        F.expr("percentile(adev_m, 0.5)").alias("mad_r")
-    )
-    return (
-        dev.crossJoin(F.broadcast(mad))
-        .filter(
-            (F.col("mad_r") > 0)
-            & (F.col("adev") > 3 * F.col("mad_r"))
-        )
-        .select(
-            "hour",
-            "n",
-            "fitted",
-            "residual",
-            quantize(F.col("med_r"), 4).alias("med_residual"),
-            quantize(F.col("mad_r"), 4).alias("mad_residual"),
-        )
-    )
-
-
-def events_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gini coefficient of user activity — the inequality summary of
-    the engagement distribution (0 = everyone equally active, →1 = a
-    few users generate everything); the scalar companion to the
-    activity quantiles.
-
-    Scale: computed EXACTLY from the counts-of-counts histogram — the
-    mean-absolute-difference double sum runs over the V² pairs of
-    DISTINCT activity values (bounded by max activity, not user
-    count), via a broadcast self-join of the tiny histogram; every
-    term is integer arithmetic with one final division.
-    """
-    per = (
-        load_table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("v"))
-    )
-    return gini_from_user_counts(per)
-
-
-def gini_from_user_counts(per: DataFrame) -> DataFrame:
-    """The exact-Gini scan over (user_id, v) activity counts — shared
-    by the batch query and the streaming drain (`stream_gini`
-    accumulates the same entity-bounded counts at ingest)."""
-    hist = per.groupBy("v").agg(F.count(F.lit(1)).alias("m"))
-    a = hist.select(F.col("v").alias("va"), F.col("m").alias("ma"))
-    b = hist.select(F.col("v").alias("vb"), F.col("m").alias("mb"))
-    mad_sum = (
-        a.crossJoin(F.broadcast(b))
-        .agg(
-            F.sum(
-                F.col("ma")
-                * F.col("mb")
-                * F.abs(F.col("va") - F.col("vb"))
-            ).alias("s")
-        )
-    )
-    tot = hist.agg(
-        F.sum("m").alias("n_users"),
-        F.sum(F.col("m") * F.col("v")).alias("total_events"),
-    )
-    return (
-        mad_sum.crossJoin(F.broadcast(tot))
-        .select(
-            F.col("n_users").cast("long").alias("n_users"),
-            quantize(
-                F.col("total_events").cast("double") / F.col("n_users"),
-                4,
-            ).alias("mean_activity"),
-            quantize(
-                F.col("s").cast("double")
-                / (
-                    2.0
-                    * F.col("n_users").cast("double")
-                    * F.col("total_events").cast("double")
-                ),
-                6,
-            ).alias("gini"),
-        )
-    )
-
-
-EWMA_LAMBDA = 0.3
-
-
-def events_ewma_control(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EWMA control chart on the hourly count series: each hour is
-    scored against the exponentially-weighted mean of all PRIOR hours
-    (one-step-ahead kernel forecast, decay (1−λ)^Δh over the REAL
-    time gap so missing hours decay naturally), and breaches beyond
-    3σ of the residual distribution are flagged — the memoryful
-    monitor between `events_hourly_anomaly` (global band) and
-    `events_anomaly_residual` (seasonal band): it tracks slow level
-    shifts the global band misses without needing a seasonal model.
-
-    Scale: the series is the calendar-bounded hourly partial agg; the
-    prior-hours kernel sum is a broadcast self-join of that tiny
-    table (hours², never events²); residuals quantize 1e-6 before
-    the one global σ agg; every output value is grid-quantized.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    hourly = ev.groupBy(
-        F.date_trunc("hour", F.col("ts")).alias("hour")
-    ).agg(F.count(F.lit(1)).cast("long").alias("n"))
-    return ewma_from_hourly(hourly)
-
-
-def ewma_from_hourly(hourly: DataFrame) -> DataFrame:
-    """The EWMA control computation over an (hour, n) series — shared
-    by the batch query and the streaming drain (`stream_ewma_control`
-    accumulates the same hours-bounded series at ingest)."""
-    cur = hourly.select(
-        F.col("hour").alias("ht"), F.col("n").alias("xt")
-    )
-    prior = hourly.select(
-        F.col("hour").alias("hi"), F.col("n").alias("xi")
-    )
-    decay = F.pow(
-        F.lit(1.0 - EWMA_LAMBDA),
-        (
-            (F.unix_micros(F.col("ht")) - F.unix_micros(F.col("hi")))
-            / F.lit(3_600_000_000.0)
-        ),
-    )
-    sm = (
-        cur.join(F.broadcast(prior), F.col("hi") < F.col("ht"))
-        .groupBy("ht", "xt")
-        .agg(
-            (
-                F.sum(decay * F.col("xi")) / F.sum(decay)
-            ).alias("ewma_prior")
-        )
-    )
-    scored = sm.select(
-        "ht",
-        "xt",
-        quantize(F.col("ewma_prior"), 4).alias("ewma_prior"),
-        quantize(F.col("xt") - F.col("ewma_prior"), 6).alias("resid"),
-    )
-    sig = scored.agg(
-        quantize(
-            F.sqrt(
-                F.sum(F.col("resid") * F.col("resid"))
-                / F.count(F.lit(1))
-            ),
-            4,
-        ).alias("sigma")
-    )
-    return (
-        scored.crossJoin(F.broadcast(sig))
-        .select(
-            F.col("ht").alias("hour"),
-            F.col("xt").alias("n_events"),
-            "ewma_prior",
-            quantize(F.col("resid"), 4).alias("residual"),
-            "sigma",
-            (F.abs(F.col("resid")) > 3 * F.col("sigma")).alias("breach"),
-        )
-    )
-
-
 def events_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-shape distribution: sessions counted and their
     length (events) and duration (seconds) summarized at exact
@@ -1565,170 +981,6 @@ def session_stats_from_per(per: DataFrame) -> DataFrame:
     )
 
 
-def events_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Calendar-coverage completeness per event type: observed hours
-    vs the type's own active span, plus the LONGEST silent streak in
-    hours — the "is this feed actually flowing?" audit (it checks
-    TIME: a feed with 95% coverage and an 18-hour hole reads very
-    differently from one missing random single hours).
-
-    Scale: (type, hour) partial agg (calendar-bounded), a per-type
-    lag window over that bounded series (partitioned by type), and a
-    types-bounded rollup — exact integer hours.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    hourly = ev.groupBy(
-        "event_type",
-        F.date_trunc("hour", F.col("ts")).alias("hour"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("n"))
-    return coverage_from_hourly(hourly)
-
-
-def coverage_from_hourly(hourly: DataFrame) -> DataFrame:
-    """The coverage scan over a (event_type, hour, n) series — shared
-    by the batch query and the streaming drain (`stream_coverage`
-    accumulates the same tumbling hourly state at ingest)."""
-    t = (F.unix_micros("hour") / F.lit(3600000000)).cast("long")
-    w = Window.partitionBy("event_type").orderBy("t")
-    x = hourly.select("event_type", t.alias("t")).withColumn(
-        "gap", F.col("t") - F.lag("t").over(w) - 1
-    )
-    per = x.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("observed_hours"),
-        (F.max("t") - F.min("t") + 1).cast("long").alias("span_hours"),
-        F.coalesce(F.max("gap"), F.lit(0))
-        .cast("long")
-        .alias("longest_silence_hours"),
-    )
-    return per.select(
-        "event_type",
-        "observed_hours",
-        "span_hours",
-        "longest_silence_hours",
-        quantize(
-            F.col("observed_hours").cast("double")
-            / F.col("span_hours"),
-            6,
-        ).alias("coverage"),
-    )
-
-
-def events_value_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Population stability index of event value between the first
-    and second half of the observation window (split at the median
-    event time): PSI = Σ (p₂−p₁)·ln(p₂/p₁) over value buckets, the
-    industry-standard model-monitoring drift metric (rule of thumb:
-    <0.1 stable, 0.1–0.25 watch, >0.25 shifted) — the scalar
-    companion to `corpus_ks_drift`'s distribution test, with
-    per-bucket contributions so the drift is attributable.
-
-    Scale: the split point is a 1-row exact-percentile broadcast;
-    bucket counts are one (bucket, half) partial agg (bounded by the
-    value grid); Laplace smoothing (+1 per bucket) keeps ln finite
-    on one-sided buckets and both engines derive identical doubles
-    from identical integer counts.
-    """
-    ev = load_table(spark, sf_dir, "events").select(
-        F.unix_micros("ts").alias("ts_us"),
-        F.floor(F.col("value") / 10.0).cast("long").alias("bucket"),
-    )
-    med = ev.agg(
-        F.expr("percentile(ts_us, 0.5)").alias("med_us")
-    )
-    halves = ev.crossJoin(F.broadcast(med)).select(
-        "bucket", (F.col("ts_us") <= F.col("med_us")).alias("first_half")
-    )
-    # buckets-bounded, materialized once: totals, the smoothed fold,
-    # and the PSI-sum branch each re-read this table, and composed as
-    # plans the 2x2x2 reference chain re-scanned events 8 times
-    cells = halves.groupBy("bucket").agg(
-        F.sum(F.when(F.col("first_half"), 1).otherwise(0))
-        .cast("long")
-        .alias("n1"),
-        F.sum(F.when(F.col("first_half"), 0).otherwise(1))
-        .cast("long")
-        .alias("n2"),
-    ).transform(materialize)
-    tot = cells.agg(
-        F.sum("n1").cast("long").alias("t1"),
-        F.sum("n2").cast("long").alias("t2"),
-        F.count(F.lit(1)).cast("long").alias("b"),
-    )
-    j = cells.crossJoin(F.broadcast(tot))
-    p1 = (F.col("n1") + 1).cast("double") / (
-        F.col("t1") + F.col("b")
-    ).cast("double")
-    p2 = (F.col("n2") + 1).cast("double") / (
-        F.col("t2") + F.col("b")
-    ).cast("double")
-    contrib = (p2 - p1) * F.log(p2 / p1)
-    rows = j.select(
-        "bucket", "n1", "n2", contrib.alias("contrib")
-    )
-    tot_psi = rows.agg(F.sum("contrib").alias("psi_sum"))
-    return rows.crossJoin(F.broadcast(tot_psi)).select(
-        "bucket",
-        "n1",
-        "n2",
-        quantize(F.col("contrib"), 6).alias("psi_contrib"),
-        quantize(F.col("psi_sum"), 6).alias("psi_total"),
-    )
-
-
-L_DIVERSITY = 3
-
-
-def events_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """l-diversity audit over the (event_type, hour-of-day, value-bin)
-    quasi-identifier cells, with user_id as the sensitive attribute:
-    a QI cell can be k-anonymous yet still leak if every row in it
-    belongs to the SAME user — this reports cells whose distinct-user
-    diversity falls below l=3 and the row mass exposed by them (the
-    second privacy gate run before sharing an event extract).
-
-    Scale: one QI-keyed agg with a two-phase exact distinct (cells
-    bounded by the QI domain, distinct state by users-per-cell),
-    folding into a 1-row summary — exact integers, one division.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    cells = ev.groupBy(
-        "event_type",
-        F.hour("ts").alias("hod"),
-        F.floor(F.col("value") / 10.0).cast("long").alias("vb"),
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("g"),
-        F.countDistinct("user_id").cast("long").alias("l"),
-    )
-    return l_diversity_from_cells(cells)
-
-
-def l_diversity_from_cells(cells: DataFrame) -> DataFrame:
-    """The diversity summary over (QI..., g, l) cells — shared by the
-    batch query and the streaming drain (`stream_l_diversity`
-    accumulates (QI, user) pair counts at ingest and collapses them
-    to the same cells post-drain)."""
-    return cells.agg(
-        F.sum("g").cast("long").alias("n_rows"),
-        F.count(F.lit(1)).cast("long").alias("n_groups"),
-        F.min("l").cast("long").alias("min_diversity"),
-        F.sum(F.when(F.col("l") < L_DIVERSITY, 1).otherwise(0))
-        .cast("long")
-        .alias("n_low_diversity_groups"),
-        F.sum(F.when(F.col("l") < L_DIVERSITY, F.col("g")).otherwise(0))
-        .cast("long")
-        .alias("rows_at_risk"),
-    ).select(
-        "n_rows",
-        "n_groups",
-        "min_diversity",
-        "n_low_diversity_groups",
-        "rows_at_risk",
-        quantize(
-            F.col("rows_at_risk").cast("double") / F.col("n_rows"), 6
-        ).alias("risk_share"),
-    )
-
-
 def events_forecast_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Forecast model scorecard: the one-row evaluation of the
     seasonal-naive backtest (`events_forecast_hourly`) — MAE, MAPE
@@ -1773,13 +1025,11 @@ MK_CRIT_95 = 1.96  # two-sided normal 95% critical value
 def events_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theil–Sen slope of the hourly event-count series: the median
     of all pairwise slopes (events/hour per hour), with the median-
-    based intercept — the robust trend MAGNITUDE that accompanies
-    `events_mann_kendall`'s trend DIRECTION test (MK says "is there a
-    monotone trend?", Sen says "how steep?", immune to the outliers
-    that wreck an OLS fit).
+    based intercept — the robust trend MAGNITUDE ("how steep?"),
+    immune to the outliers that wreck an OLS fit.
 
     Scale: the series is calendar-bounded (hours, not events), so the
-    pair set is hours² — the same broadcast self-join as MK; slopes
+    pair set is hours² — one broadcast self-join; slopes
     are exact-integer ratios (count delta over integer hour delta),
     so both engines derive identical doubles, and the median is one
     exact percentile over the bounded pair set. At decade-long grids
@@ -1832,80 +1082,6 @@ def sen_from_hourly(hourly: DataFrame) -> DataFrame:
         "n_pairs",
         quantize(F.col("sen_slope"), 6).alias("sen_slope"),
         quantize(F.col("icept_raw"), 4).alias("sen_intercept"),
-    )
-
-
-def events_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mann-Kendall trend test on the hourly event-count series: the
-    nonparametric monotone-trend screen (S = Σ sign(n_j − n_i) over
-    ordered hour pairs, tie-corrected variance, normal-approximation
-    Z) — catches slow traffic creep/decay that the seasonal and
-    anomaly tiers normalize away, without assuming linearity.
-
-    Scale: the series is an hours-bounded partial agg (calendar-
-    bounded — it does NOT grow with event volume); the pair sum is a
-    broadcast self-join of that tiny table (hours², never events²);
-    every term is exact integer arithmetic and only the final Z
-    touches a sqrt.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    hourly = ev.groupBy(
-        F.date_trunc("hour", F.col("ts")).alias("hour")
-    ).agg(F.count(F.lit(1)).cast("long").alias("n"))
-    return mk_from_hourly(hourly)
-
-
-def mk_from_hourly(hourly: DataFrame) -> DataFrame:
-    """The Mann-Kendall computation over an (hour, n) series — shared
-    by the batch query and the streaming drain (`stream_mann_kendall`
-    accumulates the same hours-bounded tumbling state at ingest)."""
-    a = hourly.select(F.col("hour").alias("ha"), F.col("n").alias("na"))
-    b = hourly.select(F.col("hour").alias("hb"), F.col("n").alias("nb"))
-    # single-hour series: the pair join is empty and SUM yields NULL —
-    # coalesce to the vacuous S = 0 (trend 'none') in both engines
-    s_stat = (
-        a.join(F.broadcast(b), F.col("ha") < F.col("hb"))
-        .agg(
-            F.coalesce(
-                F.sum(
-                    F.signum(
-                        (F.col("nb") - F.col("na")).cast("double")
-                    ).cast("long")
-                ),
-                F.lit(0),
-            ).alias("s")
-        )
-    )
-    # tie correction: groups of equal count values
-    ties = hourly.groupBy("n").agg(F.count(F.lit(1)).alias("t"))
-    tie_term = ties.agg(
-        F.sum(
-            F.col("t") * (F.col("t") - 1) * (2 * F.col("t") + 5)
-        ).alias("tie_sum"),
-        F.sum("t").cast("long").alias("n_hours"),
-    )
-    j = s_stat.crossJoin(F.broadcast(tie_term))
-    var_s = (
-        (
-            F.col("n_hours")
-            * (F.col("n_hours") - 1)
-            * (2 * F.col("n_hours") + 5)
-            - F.col("tie_sum")
-        ).cast("double")
-        / 18.0
-    )
-    z = F.when(F.col("s") > 0, (F.col("s") - 1) / F.sqrt(var_s)).when(
-        F.col("s") < 0, (F.col("s") + 1) / F.sqrt(var_s)
-    ).otherwise(F.lit(0.0))
-    return j.select(
-        F.col("n_hours"),
-        F.col("s").cast("long").alias("s_stat"),
-        quantize(var_s, 4).alias("var_s"),
-        quantize(z, 4).alias("z_stat"),
-        F.when(quantize(z, 4) > MK_CRIT_95, F.lit("increasing"))
-        .when(quantize(z, 4) < -MK_CRIT_95, F.lit("decreasing"))
-        .otherwise(F.lit("none"))
-        .alias("trend"),
     )
 
 
@@ -2127,195 +1303,6 @@ def hour_concentration_from_hist(hist: DataFrame) -> DataFrame:
     )
 
 
-# events_conversion_ztest: "a purchase within 24 h of the first event"
-
-
-HOLT_ALPHA = 0.5  # exact binary fractions: the recurrence is
-HOLT_BETA = 0.25  # bit-identical across engines, no ulp drift
-
-
-def holt_cells(ev: DataFrame) -> DataFrame:
-    """(event_type, hour_us) count cells — the calendar-bounded
-    mergeable state shared by the batch op and the streaming twin."""
-    return ev.groupBy(
-        "event_type",
-        F.unix_micros(F.date_trunc("hour", F.col("ts"))).alias("hour_us"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-
-
-HOUR_US = 3_600_000_000
-
-
-def holt_from_cells(cells: DataFrame) -> DataFrame:
-    """Holt's linear (double) exponential smoothing per event type
-    over the zero-filled hourly series: level/trend recurrence with
-    α=1/2, β=1/4 (exact binary fractions — every step is IEEE-exact
-    and replays bit-for-bit in the SQL twin's recursive CTE),
-    initialized l₁=y₁, b₁=0. Emits the final state and the one-step
-    forecast — the trend-aware counterpart of the seasonal-naive
-    `events_forecast_hourly` backtest.
-
-    Scale: the recurrence is sequential only WITHIN a type's series
-    (series length = calendar hours, bounded), one Arrow group per
-    type; the zero-fill rides a 1-row global bounds broadcast."""
-    import numpy as np
-    import pandas as pd
-
-    bounds = cells.agg(
-        F.min("hour_us").alias("mn"), F.max("hour_us").alias("mx")
-    )
-    g = cells.crossJoin(F.broadcast(bounds))
-
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        mn, mx = int(pdf["mn"].iloc[0]), int(pdf["mx"].iloc[0])
-        hours = np.arange(mn, mx + HOUR_US, HOUR_US, dtype=np.int64)
-        y = np.zeros(len(hours), dtype=np.float64)
-        idx = ((pdf["hour_us"].to_numpy() - mn) // HOUR_US).astype(int)
-        y[idx] = pdf["cnt"].to_numpy().astype(np.float64)
-        lev, tr = float(y[0]), 0.0
-        for t in range(1, len(y)):
-            new = HOLT_ALPHA * float(y[t]) + (1.0 - HOLT_ALPHA) * (
-                lev + tr
-            )
-            tr = HOLT_BETA * (new - lev) + (1.0 - HOLT_BETA) * tr
-            lev = new
-        return pd.DataFrame(
-            {
-                "event_type": [pdf["event_type"].iloc[0]],
-                "n_hours": [len(y)],
-                "level": [lev],
-                "trend": [tr],
-                "forecast_next": [lev + tr],
-            }
-        )
-
-    fitted = g.groupBy("event_type").applyInPandas(
-        fit,
-        schema=(
-            "event_type string, n_hours long, level double,"
-            " trend double, forecast_next double"
-        ),
-    )
-    return fitted.select(
-        "event_type",
-        "n_hours",
-        quantize(F.col("level"), 4).alias("level"),
-        quantize(F.col("trend"), 4).alias("trend"),
-        quantize(F.col("forecast_next"), 4).alias("forecast_next"),
-    )
-
-
-HW_PERIOD = 24
-HW_GAMMA = 0.25  # seasonal smoothing — binary-exact like alpha/beta
-
-
-def hw_from_cells(cells: DataFrame) -> DataFrame:
-    """Additive Holt–Winters (level + trend + 24-hour seasonality)
-    per event type over the zero-filled hourly series — the top of
-    the forecasting ladder (`events_forecast_hourly` seasonal-naive →
-    `events_holt_linear` trend → this). α=1/2, β=γ=1/4 are exact
-    binary fractions and the level init is an exact-integer sum / 24,
-    so EVERY step is IEEE-exact and the SQL twin's recursive CTE
-    (carrying the 24-slot seasonal vector as list state) replays the
-    fit bit-for-bit. Emits the final seasonal cycle (one row per
-    slot) with the fitted level/trend and one-step forecast.
-
-    Scale: sequential only within a type's calendar-bounded series,
-    one Arrow group per type; the zero-fill rides a 1-row bounds
-    broadcast.
-    """
-    import numpy as np
-    import pandas as pd
-
-    bounds = cells.agg(
-        F.min("hour_us").alias("mn"), F.max("hour_us").alias("mx")
-    )
-    g = cells.crossJoin(F.broadcast(bounds))
-    m = HW_PERIOD
-
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        mn, mx = int(pdf["mn"].iloc[0]), int(pdf["mx"].iloc[0])
-        hours = np.arange(mn, mx + HOUR_US, HOUR_US, dtype=np.int64)
-        n = len(hours)
-        if n < m + 1:
-            return pd.DataFrame(
-                columns=[
-                    "event_type",
-                    "season_slot",
-                    "seasonal",
-                    "level",
-                    "trend",
-                    "forecast_next",
-                ]
-            )
-        y = np.zeros(n, dtype=np.float64)
-        idx = ((pdf["hour_us"].to_numpy() - mn) // HOUR_US).astype(int)
-        y[idx] = pdf["cnt"].to_numpy().astype(np.float64)
-        tot = 0.0  # integer-valued doubles: exact in any order
-        for v in y[:m]:
-            tot += float(v)
-        lev = tot / float(m)
-        tr = 0.0
-        s = np.zeros(n, dtype=np.float64)
-        for i in range(m):
-            s[i] = float(y[i]) - lev
-        for t in range(m, n):
-            new_l = HOLT_ALPHA * (float(y[t]) - s[t - m]) + (
-                1.0 - HOLT_ALPHA
-            ) * (lev + tr)
-            tr = HOLT_BETA * (new_l - lev) + (1.0 - HOLT_BETA) * tr
-            s[t] = HW_GAMMA * (float(y[t]) - new_l) + (
-                1.0 - HW_GAMMA
-            ) * s[t - m]
-            lev = new_l
-        rows = []
-        etype = pdf["event_type"].iloc[0]
-        fc = lev + tr + s[n - m]
-        for k in range(m):
-            t_k = n - m + k
-            rows.append(
-                {
-                    "event_type": etype,
-                    "season_slot": t_k % m,
-                    "seasonal": s[t_k],
-                    "level": lev,
-                    "trend": tr,
-                    "forecast_next": fc,
-                }
-            )
-        return pd.DataFrame(rows)
-
-    fitted = g.groupBy("event_type").applyInPandas(
-        fit,
-        schema=(
-            "event_type string, season_slot long, seasonal double,"
-            " level double, trend double, forecast_next double"
-        ),
-    )
-    return fitted.select(
-        "event_type",
-        "season_slot",
-        quantize(F.col("seasonal"), 4).alias("seasonal"),
-        quantize(F.col("level"), 4).alias("level"),
-        quantize(F.col("trend"), 4).alias("trend"),
-        quantize(F.col("forecast_next"), 4).alias("forecast_next"),
-    )
-
-
-def events_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Additive Holt–Winters with daily seasonality per event type.
-    See `hw_from_cells`."""
-    return hw_from_cells(holt_cells(load_table(spark, sf_dir, "events")))
-
-
-def events_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Holt linear-trend smoothing of the hourly count series per
-    event type. See `holt_from_cells`."""
-    return holt_from_cells(
-        holt_cells(load_table(spark, sf_dir, "events"))
-    )
-
-
 DP_EPSILON = 1.0
 # inverse-CDF Laplace from a 32-bit md5-derived uniform: |noise| <=
 # (1/eps) * ln(2^32) ~ 22 at eps=1 — the release's worst-case shift
@@ -2366,10 +1353,8 @@ def dp_release_from_cells(cells: DataFrame) -> DataFrame:
 
 def events_dp_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Differentially-private hourly event counts: the Laplace(1/eps)
-    count release over the (hour, event_type) contingency table —
-    closing the privacy tier (`events_l_diversity` audits attribute
-    diversity, this one PUBLISHES a table with a formal epsilon
-    guarantee). Noise is a deterministic inverse-CDF draw keyed on
+    count release over the (hour, event_type) contingency table — it
+    PUBLISHES a table with a formal epsilon guarantee. Noise is a deterministic inverse-CDF draw keyed on
     the cell (md5-derived uniform), rounded to the integer grid and
     clamped at zero — so the release is reproducible and fully
     SQL-oracled.
@@ -2388,24 +1373,15 @@ def events_dp_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 QUERIES = {
-    "events_dp_median": events_dp_median,
     "events_quantile_treatment_effect": events_quantile_treatment_effect,
     "events_absorption": events_absorption,
     "events_dp_user_total": events_dp_user_total,
-    "events_holt_linear": events_holt_linear,
-    "events_holt_winters": events_holt_winters,
     "events_dp_hourly": events_dp_hourly,
     "events_hour_concentration": events_hour_concentration,
-    "events_adoption_curve": events_adoption_curve,
     "events_concurrency_curve": events_concurrency_curve,
-    "events_l_diversity": events_l_diversity,
     "events_sen_slope": events_sen_slope,
-    "events_value_psi": events_value_psi,
-    "events_coverage": events_coverage,
-    "events_ewma_control": events_ewma_control,
     "events_session_stats": events_session_stats,
     "events_forecast_scorecard": events_forecast_scorecard,
-    "events_mann_kendall": events_mann_kendall,
     "events_conversion_ztest": events_conversion_ztest,
     "events_ab_design": events_ab_design,
     "events_ab_srm": events_ab_srm,
@@ -2422,18 +1398,11 @@ QUERIES = {
     "events_json_props": events_json_props,
     "events_value_histogram": events_value_histogram,
     "events_hourly_anomaly": events_hourly_anomaly,
-    "events_bot_detection": events_bot_detection,
     "events_new_vs_returning": events_new_vs_returning,
     "events_user_activity_quantiles": events_user_activity_quantiles,
     "events_hourly_profile": events_hourly_profile,
     "events_type_share_trend": events_type_share_trend,
-    "events_anomaly_mad": events_anomaly_mad,
-    "events_interarrival": events_interarrival,
     "events_forecast_hourly": events_forecast_hourly,
-    "events_seasonal_decompose": events_seasonal_decompose,
-    "events_autocorr": events_autocorr,
-    "events_anomaly_residual": events_anomaly_residual,
-    "events_gini": events_gini,
 }
 
 ORACLE = {
@@ -2638,35 +1607,6 @@ ORACLE = {
 }
 
 
-ORACLE["events_bot_detection"] = f"""
-    WITH g AS (
-      SELECT user_id, epoch_us(ts) AS ts_us,
-             epoch_us(ts) - lag(epoch_us(ts)) OVER (
-               PARTITION BY user_id ORDER BY epoch_us(ts), event_id
-             ) AS gap_us
-      FROM events
-    ),
-    per AS (
-      SELECT user_id,
-             CAST(count(*) AS BIGINT) AS n_events,
-             CAST(max(ts_us) - min(ts_us) AS BIGINT) AS span_us,
-             CAST(min(gap_us) AS BIGINT) AS min_gap_us
-      FROM g GROUP BY 1
-    )
-    SELECT user_id, n_events, span_us, min_gap_us,
-           {sql_quantize(
-               'CASE WHEN span_us > 0 THEN CAST(n_events AS DOUBLE)'
-               ' / (CAST(span_us AS DOUBLE) / 60000000.0)'
-               ' ELSE 0.0 END', 4)} AS events_per_min,
-           (n_events >= {BOT_MIN_EVENTS} AND span_us > 0
-            AND {sql_quantize(
-                'CASE WHEN span_us > 0 THEN CAST(n_events AS DOUBLE)'
-                ' / (CAST(span_us AS DOUBLE) / 60000000.0)'
-                ' ELSE 0.0 END', 4)} >= {BOT_RATE_PER_MIN})
-             AS bot_suspect
-    FROM per
-"""
-
 ORACLE["events_new_vs_returning"] = """
     WITH du AS (
       SELECT DISTINCT date_trunc('day', ts) AS day, user_id FROM events
@@ -2724,57 +1664,6 @@ ORACLE["events_type_share_trend"] = f"""
     FROM per JOIN tot ON per.day = tot.day
 """
 
-ORACLE["events_anomaly_mad"] = f"""
-    WITH hourly AS (
-      SELECT date_trunc('hour', ts) AS hour, count(*) AS n
-      FROM events GROUP BY 1
-    ),
-    hod AS (
-      SELECT CAST(extract(hour FROM hour) AS BIGINT) AS hour_of_day,
-             CAST(n AS DOUBLE) AS n
-      FROM hourly
-    ),
-    med AS (
-      SELECT hour_of_day, quantile_cont(n, 0.5) AS med
-      FROM hod GROUP BY 1
-    ),
-    dev AS (
-      SELECT hod.hour_of_day, hod.n, med.med,
-             abs(hod.n - med.med) AS adev
-      FROM hod JOIN med USING (hour_of_day)
-    ),
-    mad AS (
-      SELECT hour_of_day, quantile_cont(adev, 0.5) AS mad
-      FROM dev GROUP BY 1
-    )
-    SELECT d.hour_of_day,
-           CAST(count(*) AS BIGINT) AS n_hours,
-           {sql_quantize('any_value(d.med)', 4)} AS med_n,
-           {sql_quantize('any_value(m.mad)', 4)} AS mad_n,
-           CAST(sum(CASE WHEN m.mad > 0 AND d.adev > 3 * m.mad
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_anomalies
-    FROM dev d JOIN mad m USING (hour_of_day)
-    GROUP BY 1
-"""
-
-ORACLE["events_interarrival"] = f"""
-    WITH gaps AS (
-      SELECT user_id,
-             epoch_us(ts)
-               - lag(epoch_us(ts)) OVER (PARTITION BY user_id
-                                         ORDER BY epoch_us(ts), event_id)
-               AS gap_us
-      FROM events
-    )
-    SELECT user_id,
-           CAST(count(*) AS BIGINT) AS n_gaps,
-           {sql_quantize('quantile_cont(gap_us, 0.5)', 4)} AS med_gap_us,
-           {sql_quantize('quantile_cont(gap_us, 0.9)', 4)} AS p90_gap_us,
-           CAST(max(gap_us) AS BIGINT) AS max_gap_us
-    FROM gaps
-    WHERE gap_us IS NOT NULL
-    GROUP BY 1
-"""
 
 ORACLE["events_forecast_hourly"] = f"""
     WITH ev AS (
@@ -2812,201 +1701,6 @@ ORACLE["events_forecast_hourly"] = f"""
 """
 
 
-ORACLE["events_seasonal_decompose"] = f"""
-    WITH hourly AS (
-      SELECT date_trunc('hour', ts) AS hour,
-             CAST(count(*) AS BIGINT) AS n
-      FROM events GROUP BY 1
-    ),
-    h2 AS (
-      SELECT hour, date_trunc('day', hour) AS day,
-             CAST(extract(hour FROM hour) AS BIGINT) AS hour_of_day, n
-      FROM hourly
-    ),
-    day_m AS (
-      SELECT day, CAST(sum(n) AS DOUBLE) / count(*) AS day_mean
-      FROM h2 GROUP BY 1
-    ),
-    hod_m AS (
-      SELECT hour_of_day, CAST(sum(n) AS DOUBLE) / count(*) AS hod_mean
-      FROM h2 GROUP BY 1
-    ),
-    grand AS (
-      SELECT CAST(sum(n) AS DOUBLE) / count(*) AS grand_mean FROM h2
-    )
-    SELECT h2.hour, h2.n,
-           {sql_quantize('day_m.day_mean', 4)} AS day_effect,
-           {sql_quantize('hod_m.hod_mean', 4)} AS hod_effect,
-           {sql_quantize(
-               'day_m.day_mean + hod_m.hod_mean - grand.grand_mean', 4)}
-             AS fitted,
-           {sql_quantize(
-               'h2.n - (day_m.day_mean + hod_m.hod_mean'
-               ' - grand.grand_mean)', 4)} AS residual
-    FROM h2
-    JOIN day_m USING (day)
-    JOIN hod_m USING (hour_of_day), grand
-"""
-
-ORACLE["events_autocorr"] = f"""
-    WITH hourly AS (
-      SELECT date_trunc('hour', ts) AS hour,
-             CAST(count(*) AS BIGINT) AS n
-      FROM events GROUP BY 1
-    ),
-    l1 AS (
-      SELECT a.n, b.n AS m
-      FROM hourly a
-      JOIN hourly b ON a.hour = b.hour + INTERVAL 1 HOUR
-    ),
-    l24 AS (
-      SELECT a.n, b.n AS m
-      FROM hourly a
-      JOIN hourly b ON a.hour = b.hour + INTERVAL 24 HOURS
-    ),
-    c1 AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_pairs_lag1,
-             {sql_quantize(
-                 'CAST(count(*) * sum(n * m) - sum(n) * sum(m) AS DOUBLE)'
-                 ' / sqrt(CAST(count(*) * sum(n * n)'
-                 ' - sum(n) * sum(n) AS DOUBLE)'
-                 ' * CAST(count(*) * sum(m * m)'
-                 ' - sum(m) * sum(m) AS DOUBLE))', 4)} AS acf_lag1
-      FROM l1
-    ),
-    c24 AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_pairs_lag24,
-             {sql_quantize(
-                 'CAST(count(*) * sum(n * m) - sum(n) * sum(m) AS DOUBLE)'
-                 ' / sqrt(CAST(count(*) * sum(n * n)'
-                 ' - sum(n) * sum(n) AS DOUBLE)'
-                 ' * CAST(count(*) * sum(m * m)'
-                 ' - sum(m) * sum(m) AS DOUBLE))', 4)} AS acf_lag24
-      FROM l24
-    )
-    SELECT c1.n_pairs_lag1, c1.acf_lag1,
-           c24.n_pairs_lag24, c24.acf_lag24
-    FROM c1, c24
-"""
-
-ORACLE["events_anomaly_residual"] = f"""
-    WITH hourly AS (
-      SELECT date_trunc('hour', ts) AS hour,
-             CAST(count(*) AS BIGINT) AS n
-      FROM events GROUP BY 1
-    ),
-    h2 AS (
-      SELECT hour, date_trunc('day', hour) AS day,
-             CAST(extract(hour FROM hour) AS BIGINT) AS hour_of_day, n
-      FROM hourly
-    ),
-    day_m AS (
-      SELECT day, CAST(sum(n) AS DOUBLE) / count(*) AS day_mean
-      FROM h2 GROUP BY 1
-    ),
-    hod_m AS (
-      SELECT hour_of_day, CAST(sum(n) AS DOUBLE) / count(*) AS hod_mean
-      FROM h2 GROUP BY 1
-    ),
-    grand AS (
-      SELECT CAST(sum(n) AS DOUBLE) / count(*) AS grand_mean FROM h2
-    ),
-    dec AS (
-      SELECT h2.hour, h2.n,
-             {sql_quantize(
-                 'day_m.day_mean + hod_m.hod_mean - grand.grand_mean',
-                 4)} AS fitted,
-             {sql_quantize(
-                 'h2.n - (day_m.day_mean + hod_m.hod_mean'
-                 ' - grand.grand_mean)', 4)} AS residual
-      FROM h2
-      JOIN day_m USING (day)
-      JOIN hod_m USING (hour_of_day), grand
-    ),
-    med AS (SELECT quantile_cont(residual, 0.5) AS med_r FROM dec),
-    dev AS (
-      SELECT dec.*, med.med_r,
-             abs(dec.residual - med.med_r) AS adev
-      FROM dec, med
-    ),
-    mad AS (SELECT quantile_cont(adev, 0.5) AS mad_r FROM dev)
-    SELECT dev.hour, dev.n, dev.fitted, dev.residual,
-           {sql_quantize('dev.med_r', 4)} AS med_residual,
-           {sql_quantize('mad.mad_r', 4)} AS mad_residual
-    FROM dev, mad
-    WHERE mad.mad_r > 0 AND dev.adev > 3 * mad.mad_r
-"""
-
-ORACLE["events_gini"] = f"""
-    WITH per AS (
-      SELECT user_id, count(*) AS v FROM events GROUP BY 1
-    ),
-    hist AS (SELECT v, count(*) AS m FROM per GROUP BY 1),
-    s AS (
-      SELECT sum(a.m * b.m * abs(a.v - b.v)) AS s
-      FROM hist a, hist b
-    ),
-    tot AS (
-      SELECT sum(m) AS n_users, sum(m * v) AS total_events FROM hist
-    )
-    SELECT CAST(tot.n_users AS BIGINT) AS n_users,
-           {sql_quantize(
-               'CAST(tot.total_events AS DOUBLE) / tot.n_users', 4)}
-             AS mean_activity,
-           {sql_quantize(
-               'CAST(s.s AS DOUBLE) / (2.0'
-               ' * CAST(tot.n_users AS DOUBLE)'
-               ' * CAST(tot.total_events AS DOUBLE))', 6)} AS gini
-    FROM s, tot
-"""
-
-
-ORACLE["events_mann_kendall"] = f"""
-    WITH hourly AS (
-      SELECT date_trunc('hour', ts) AS hour,
-             CAST(count(*) AS BIGINT) AS n
-      FROM events GROUP BY 1
-    ),
-    s AS (
-      SELECT CAST(coalesce(sum(CAST(sign(b.n - a.n) AS BIGINT)), 0)
-        AS BIGINT) AS s
-      FROM hourly a JOIN hourly b ON a.hour < b.hour
-    ),
-    ties AS (
-      SELECT CAST(count(*) AS BIGINT) AS t FROM hourly GROUP BY n
-    ),
-    tt AS (
-      SELECT sum(t * (t - 1) * (2 * t + 5)) AS tie_sum,
-             CAST(sum(t) AS BIGINT) AS n_hours
-      FROM ties
-    ),
-    v AS (
-      SELECT s.s, tt.n_hours,
-             CAST(tt.n_hours * (tt.n_hours - 1) * (2 * tt.n_hours + 5)
-                  - tt.tie_sum AS DOUBLE) / 18.0 AS var_s
-      FROM s, tt
-    )
-    SELECT n_hours,
-           s AS s_stat,
-           {sql_quantize('var_s', 4)} AS var_s,
-           {sql_quantize(
-               'CASE WHEN s > 0 THEN (s - 1) / sqrt(var_s)'
-               ' WHEN s < 0 THEN (s + 1) / sqrt(var_s)'
-               ' ELSE 0.0 END', 4)} AS z_stat,
-           CASE
-             WHEN {sql_quantize(
-                 'CASE WHEN s > 0 THEN (s - 1) / sqrt(var_s)'
-                 ' WHEN s < 0 THEN (s + 1) / sqrt(var_s)'
-                 ' ELSE 0.0 END', 4)} > 1.96 THEN 'increasing'
-             WHEN {sql_quantize(
-                 'CASE WHEN s > 0 THEN (s - 1) / sqrt(var_s)'
-                 ' WHEN s < 0 THEN (s + 1) / sqrt(var_s)'
-                 ' ELSE 0.0 END', 4)} < -1.96 THEN 'decreasing'
-             ELSE 'none'
-           END AS trend
-    FROM v
-"""
-
 ORACLE["events_sen_slope"] = f"""
     WITH hourly AS (
       SELECT CAST(epoch_us(date_trunc('hour', ts)) / 3600000000
@@ -3033,74 +1727,6 @@ ORACLE["events_sen_slope"] = f"""
            {sql_quantize('sen_slope', 6)} AS sen_slope,
            {sql_quantize('quantile_cont(r, 0.5)', 4)} AS sen_intercept
     FROM resid GROUP BY sen_slope, n_pairs
-"""
-
-
-ORACLE["events_coverage"] = f"""
-    WITH hourly AS (
-      SELECT event_type, date_trunc('hour', ts) AS hour
-      FROM events GROUP BY 1, 2
-    ),
-    x AS (
-      SELECT event_type,
-             CAST(epoch_us(hour) / 3600000000 AS BIGINT) AS t,
-             CAST(epoch_us(hour) / 3600000000 AS BIGINT)
-               - lag(CAST(epoch_us(hour) / 3600000000 AS BIGINT))
-                 OVER (PARTITION BY event_type ORDER BY hour) - 1
-               AS gap
-      FROM hourly
-    ),
-    per AS (
-      SELECT event_type,
-             CAST(count(*) AS BIGINT) AS observed_hours,
-             CAST(max(t) - min(t) + 1 AS BIGINT) AS span_hours,
-             CAST(coalesce(max(gap), 0) AS BIGINT)
-               AS longest_silence_hours
-      FROM x GROUP BY 1
-    )
-    SELECT event_type, observed_hours, span_hours,
-           longest_silence_hours,
-           {sql_quantize(
-               'CAST(observed_hours AS DOUBLE) / span_hours', 6)}
-             AS coverage
-    FROM per
-"""
-
-
-ORACLE["events_value_psi"] = f"""
-    WITH ev AS (
-      SELECT epoch_us(ts) AS ts_us,
-             CAST(floor(value / 10.0) AS BIGINT) AS bucket
-      FROM events
-    ),
-    med AS (SELECT quantile_cont(ts_us, 0.5) AS med_us FROM ev),
-    cells AS (
-      SELECT bucket,
-             CAST(sum(CASE WHEN ts_us <= med_us THEN 1 ELSE 0 END)
-               AS BIGINT) AS n1,
-             CAST(sum(CASE WHEN ts_us <= med_us THEN 0 ELSE 1 END)
-               AS BIGINT) AS n2
-      FROM ev CROSS JOIN med GROUP BY 1
-    ),
-    tot AS (
-      SELECT CAST(sum(n1) AS BIGINT) AS t1,
-             CAST(sum(n2) AS BIGINT) AS t2,
-             CAST(count(*) AS BIGINT) AS b
-      FROM cells
-    ),
-    rows_ AS (
-      SELECT bucket, n1, n2,
-             (CAST(n2 + 1 AS DOUBLE) / (t2 + b)
-              - CAST(n1 + 1 AS DOUBLE) / (t1 + b))
-             * ln((CAST(n2 + 1 AS DOUBLE) / (t2 + b))
-                  / (CAST(n1 + 1 AS DOUBLE) / (t1 + b))) AS contrib
-      FROM cells CROSS JOIN tot
-    ),
-    s AS (SELECT sum(contrib) AS psi_sum FROM rows_)
-    SELECT bucket, n1, n2,
-           {sql_quantize('contrib', 6)} AS psi_contrib,
-           {sql_quantize('psi_sum', 6)} AS psi_total
-    FROM rows_ CROSS JOIN s
 """
 
 
@@ -3223,39 +1849,6 @@ ORACLE["events_conversion_ztest"] = f"""
 """
 
 
-ORACLE["events_ewma_control"] = f"""
-    WITH hourly AS (
-      SELECT date_trunc('hour', ts) AS hour,
-             CAST(count(*) AS BIGINT) AS n
-      FROM events GROUP BY 1
-    ),
-    sm AS (
-      SELECT a.hour AS ht, a.n AS xt,
-             sum(pow(0.7, (epoch_us(a.hour) - epoch_us(b.hour))
-                          / 3600000000.0) * b.n)
-               / sum(pow(0.7, (epoch_us(a.hour) - epoch_us(b.hour))
-                             / 3600000000.0)) AS ewma_prior
-      FROM hourly a JOIN hourly b ON b.hour < a.hour
-      GROUP BY 1, 2
-    ),
-    scored AS (
-      SELECT ht, xt,
-             {sql_quantize('ewma_prior', 4)} AS ewma_prior,
-             {sql_quantize('xt - ewma_prior', 6)} AS resid
-      FROM sm
-    ),
-    sig AS (
-      SELECT {sql_quantize(
-          'sqrt(sum(resid * resid) / count(*))', 4)} AS sigma
-      FROM scored
-    )
-    SELECT ht AS hour, xt AS n_events, ewma_prior,
-           {sql_quantize('resid', 4)} AS residual,
-           sig.sigma,
-           (abs(resid) > 3 * sig.sigma) AS breach
-    FROM scored, sig
-"""
-
 ORACLE["events_session_stats"] = """
     WITH base AS (
       SELECT user_id, epoch_us(ts) AS ts_us,
@@ -3334,50 +1927,6 @@ ORACLE["events_hour_concentration"] = f"""
     FROM per
 """
 
-ORACLE["events_l_diversity"] = f"""
-    WITH cells AS (
-      SELECT event_type, hour(ts) AS hod,
-             CAST(floor(value / 10.0) AS BIGINT) AS vb,
-             CAST(count(*) AS BIGINT) AS g,
-             CAST(count(DISTINCT user_id) AS BIGINT) AS l
-      FROM events GROUP BY 1, 2, 3
-    )
-    SELECT CAST(sum(g) AS BIGINT) AS n_rows,
-           CAST(count(*) AS BIGINT) AS n_groups,
-           CAST(min(l) AS BIGINT) AS min_diversity,
-           CAST(sum(CASE WHEN l < {L_DIVERSITY} THEN 1 ELSE 0 END)
-             AS BIGINT) AS n_low_diversity_groups,
-           CAST(sum(CASE WHEN l < {L_DIVERSITY} THEN g ELSE 0 END)
-             AS BIGINT) AS rows_at_risk,
-           {sql_quantize(
-               'CAST(sum(CASE WHEN l < ' + str(L_DIVERSITY) +
-               ' THEN g ELSE 0 END) AS DOUBLE) / sum(g)', 6)}
-             AS risk_share
-    FROM cells
-"""
-
-ORACLE["events_adoption_curve"] = f"""
-    WITH first_seen AS (
-      SELECT user_id, min(date_trunc('day', ts)) AS first_day
-      FROM events GROUP BY 1
-    ),
-    daily AS (
-      SELECT first_day AS day,
-             CAST(count(*) AS BIGINT) AS n_first_seen
-      FROM first_seen GROUP BY 1
-    ),
-    cum AS (
-      SELECT a.day, a.n_first_seen,
-             CAST(sum(b.n_first_seen) AS BIGINT) AS cum_users
-      FROM daily a JOIN daily b ON b.day <= a.day
-      GROUP BY 1, 2
-    ),
-    tot AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM first_seen)
-    SELECT day, n_first_seen, cum_users,
-           {sql_quantize('CAST(cum_users AS DOUBLE) / n_total', 6)}
-             AS penetration
-    FROM cum CROSS JOIN tot
-"""
 
 ORACLE["events_concurrency_curve"] = f"""
     WITH sess AS ({ORACLE['events_sessionize']}),
@@ -3421,55 +1970,6 @@ ORACLE["events_dp_hourly"] = f"""
 """
 
 
-ORACLE["events_holt_linear"] = f"""
-    WITH RECURSIVE cells AS (
-      SELECT event_type,
-             epoch_us(date_trunc('hour', ts)) AS hour_us,
-             CAST(count(*) AS BIGINT) AS cnt
-      FROM events GROUP BY 1, 2
-    ),
-    b AS (SELECT min(hour_us) AS mn, max(hour_us) AS mx FROM cells),
-    cal AS (
-      SELECT t.event_type,
-             unnest(generate_series(b.mn, b.mx, {HOUR_US})) AS hour_us
-      FROM (SELECT DISTINCT event_type FROM cells) t CROSS JOIN b
-    ),
-    series AS (
-      SELECT cal.event_type, cal.hour_us,
-             CAST(coalesce(c.cnt, 0) AS DOUBLE) AS y,
-             row_number() OVER (
-               PARTITION BY cal.event_type ORDER BY cal.hour_us
-             ) AS rn
-      FROM cal LEFT JOIN cells c
-        ON c.event_type = cal.event_type AND c.hour_us = cal.hour_us
-    ),
-    walk AS (
-      SELECT event_type, rn, y AS lev, CAST(0.0 AS DOUBLE) AS tr
-      FROM series WHERE rn = 1
-      UNION ALL
-      SELECT s.event_type, s.rn,
-             {HOLT_ALPHA!r} * s.y
-               + {1.0 - HOLT_ALPHA!r} * (w.lev + w.tr),
-             {HOLT_BETA!r} * (({HOLT_ALPHA!r} * s.y
-               + {1.0 - HOLT_ALPHA!r} * (w.lev + w.tr)) - w.lev)
-               + {1.0 - HOLT_BETA!r} * w.tr
-      FROM walk w JOIN series s
-        ON s.event_type = w.event_type AND s.rn = w.rn + 1
-    ),
-    last AS (
-      SELECT event_type, rn, lev, tr,
-             row_number() OVER (
-               PARTITION BY event_type ORDER BY rn DESC
-             ) AS rev
-      FROM walk
-    )
-    SELECT event_type, CAST(rn AS BIGINT) AS n_hours,
-           {sql_quantize('lev', 4)} AS level,
-           {sql_quantize('tr', 4)} AS trend,
-           {sql_quantize('lev + tr', 4)} AS forecast_next
-    FROM last WHERE rev = 1
-"""
-
 ORACLE["events_absorption"] = """
     SELECT src AS event_type,
            CAST(count(*) AS BIGINT) AS n_out,
@@ -3512,34 +2012,6 @@ ORACLE["events_dp_user_total"] = f"""
 """
 
 
-ORACLE["events_dp_median"] = f"""
-    WITH bins AS (
-      SELECT CAST(floor(value) AS BIGINT) AS bin,
-             CAST(count(*) AS BIGINT) AS n_bin
-      FROM events GROUP BY 1
-    ),
-    tot AS (SELECT CAST(sum(n_bin) AS BIGINT) AS n FROM bins),
-    ranked AS (
-      SELECT a.bin, CAST(sum(b.n_bin) AS BIGINT) AS cum
-      FROM bins a JOIN bins b ON b.bin <= a.bin
-      GROUP BY 1
-    ),
-    scored AS (
-      SELECT r.bin,
-             {DP_MEDIAN_EPS / 4.0!r} * (-abs(2 * r.cum - t.n))
-             + (-ln(-ln(
-                 (CAST(CAST(('0x' || substr(md5(
-                    'dpm|' || CAST(r.bin AS VARCHAR)), 1, 8))
-                    AS BIGINT) AS DOUBLE) + 0.5) / {DP_U_SCALE!r}
-               ))) AS score
-      FROM ranked r CROSS JOIN tot t
-    )
-    SELECT CAST(bin AS BIGINT) AS dp_median_bin,
-           {DP_MEDIAN_EPS!r} AS epsilon
-    FROM scored ORDER BY score DESC, bin LIMIT 1
-"""
-
-
 _QTE_SELECTS = " UNION ALL ".join(
     f"""SELECT {q!r} AS q,
         {sql_quantize(f'quantile_cont(value, {q!r})'
@@ -3558,72 +2030,4 @@ ORACLE["events_quantile_treatment_effect"] = f"""
       SELECT (user_id % 2 = 0) AS treat, value FROM events
     )
     {_QTE_SELECTS}
-"""
-
-ORACLE["events_holt_winters"] = f"""
-    WITH RECURSIVE cells AS (
-      SELECT event_type,
-             epoch_us(date_trunc('hour', ts)) AS hour_us,
-             CAST(count(*) AS BIGINT) AS cnt
-      FROM events GROUP BY 1, 2
-    ),
-    b AS (SELECT min(hour_us) AS mn, max(hour_us) AS mx FROM cells),
-    cal AS (
-      SELECT t.event_type,
-             unnest(generate_series(b.mn, b.mx, {HOUR_US})) AS hour_us
-      FROM (SELECT DISTINCT event_type FROM cells) t CROSS JOIN b
-    ),
-    series AS (
-      SELECT cal.event_type, cal.hour_us,
-             CAST(coalesce(c.cnt, 0) AS DOUBLE) AS y,
-             row_number() OVER (
-               PARTITION BY cal.event_type ORDER BY cal.hour_us
-             ) AS rn
-      FROM cal LEFT JOIN cells c
-        ON c.event_type = cal.event_type AND c.hour_us = cal.hour_us
-    ),
-    nmax AS (
-      SELECT event_type, max(rn) AS n FROM series GROUP BY 1
-    ),
-    init AS (
-      SELECT event_type,
-             sum(CASE WHEN rn <= {HW_PERIOD} THEN y ELSE 0 END)
-               / {float(HW_PERIOD)!r} AS lev0,
-             list(y ORDER BY rn)
-               FILTER (WHERE rn <= {HW_PERIOD}) AS y0
-      FROM series GROUP BY 1
-    ),
-    walk(event_type, rn, lev, tr, s) AS (
-      SELECT event_type, CAST({HW_PERIOD} AS BIGINT), lev0,
-             CAST(0.0 AS DOUBLE),
-             list_transform(y0, v -> v - lev0)
-      FROM init
-      UNION ALL
-      SELECT w.event_type, w.rn + 1,
-             {HOLT_ALPHA!r} * (sr.y - w.s[1])
-               + {1.0 - HOLT_ALPHA!r} * (w.lev + w.tr),
-             {HOLT_BETA!r} * (({HOLT_ALPHA!r} * (sr.y - w.s[1])
-               + {1.0 - HOLT_ALPHA!r} * (w.lev + w.tr)) - w.lev)
-               + {1.0 - HOLT_BETA!r} * w.tr,
-             list_append(w.s[2:{HW_PERIOD}],
-               {HW_GAMMA!r} * (sr.y - ({HOLT_ALPHA!r} * (sr.y - w.s[1])
-                 + {1.0 - HOLT_ALPHA!r} * (w.lev + w.tr)))
-               + {1.0 - HW_GAMMA!r} * w.s[1])
-      FROM walk w JOIN series sr
-        ON sr.event_type = w.event_type AND sr.rn = w.rn + 1
-    ),
-    last AS (
-      SELECT w.event_type, w.rn, w.lev, w.tr, w.s
-      FROM walk w JOIN nmax x
-        ON x.event_type = w.event_type AND w.rn = x.n
-    ),
-    ks AS (SELECT unnest(generate_series(1, {HW_PERIOD})) AS k)
-    SELECT l.event_type,
-           CAST((l.rn - {HW_PERIOD} + ks.k - 1) % {HW_PERIOD}
-                AS BIGINT) AS season_slot,
-           {sql_quantize('l.s[CAST(ks.k AS INT)]', 4)} AS seasonal,
-           {sql_quantize('l.lev', 4)} AS level,
-           {sql_quantize('l.tr', 4)} AS trend,
-           {sql_quantize('l.lev + l.tr + l.s[1]', 4)} AS forecast_next
-    FROM last l CROSS JOIN ks
 """

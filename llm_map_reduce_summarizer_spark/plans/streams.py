@@ -16,22 +16,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..streaming.stream_ops import (
-    dedup_stream,
     hourly_counts,
     latest_sessions,
     read_documents_stream,
     read_events_stream,
     run_available_now,
     sessionize_stream,
-    view_click_interval_join,
 )
 from .documents import ORACLE as _DOCS_ORACLE
-from .documents import (
-    DOMAIN_CAP,
-    PREP_QUALITY_MIN,
-    incr_dedup_oracle_sql,
-    quality_gate_sql,
-)
 from .events import ORACLE as _EVENTS_ORACLE
 
 
@@ -44,42 +36,6 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_events_stream(spark, sf_dir)
     updates = run_available_now(sessionize_stream(ev), output_mode="update")
     return latest_sessions(updates)
-
-
-def stream_view_click_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = read_events_stream(spark, sf_dir)
-    return run_available_now(
-        view_click_interval_join(ev), output_mode="append"
-    )
-
-
-def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ingestion-time exact dedup; a drain of the static corpus equals
-    the batch ``dedup_apply`` (keep min doc_id per content group), so
-    it shares that oracle."""
-    docs = read_documents_stream(spark, sf_dir)
-    return run_available_now(dedup_stream(docs), output_mode="update")
-
-
-def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ingestion-time quality gate: the stateless streaming transform
-    case — pure column expressions (quality score) applied per
-    micro-batch with append semantics, no state at all. At 100 TB this
-    is the shape of every filter/enrich stage in a streaming corpus
-    intake: scan-speed, trivially parallel, nothing to checkpoint but
-    source offsets.
-    """
-    from pyspark.sql import functions as F
-
-    from .documents import quality_score_col
-
-    docs = read_documents_stream(spark, sf_dir)
-    gated = (
-        docs.withColumn("quality_score", quality_score_col())
-        .filter(F.col("quality_score") >= PREP_QUALITY_MIN)
-        .select("doc_id", "lang", "source", "n_chars", "quality_score")
-    )
-    return run_available_now(gated, output_mode="append")
 
 
 def stream_langid_injection_eval(
@@ -351,202 +307,6 @@ def stream_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def stream_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming benchmark-decontamination gate: score every arriving
-    doc's max 3-gram overlap against the (static) benchmark suite AT
-    INGEST — the streaming shape of ``corpus_contamination``.
-
-    Streaming-safe by construction: the benchmark shingle→ids map is
-    built batch-side once (the bench suite is fixed by definition) and
-    broadcast; each doc's shingle ARRAY is computed by the same JVM
-    expressions as the batch operator (no Python re-tokenization to
-    drift); scoring is a STATELESS Arrow-batched lookup — zero
-    streaming state, append mode, any number of micro-batches. The
-    batch operator's counted-broadcast contract applies strictly here:
-    a stream cannot shuffle-join per-doc aggregates without unbounded
-    state, so an oversized bench suite raises instead of degrading.
-
-    Drain of the static corpus equals the batch entry, so it shares
-    its oracle.
-    """
-    from pyspark.sql import functions as F
-
-    from ..functions.hashing import shingles_3gram, words
-    from ..sources.tables import load_table
-    from .documents import (
-        CONTAM_BENCH_MAX_DOCS,
-        CONTAM_MOD,
-        CONTAM_THRESHOLD,
-    )
-    from ..operators.dedup import doc_shingles
-
-    batch_docs = load_table(spark, sf_dir, "documents")
-    n_bench_docs = (
-        batch_docs.filter(F.col("doc_id") % CONTAM_MOD == 0)
-        .select("doc_id")
-        .count()
-    )
-    if n_bench_docs > CONTAM_BENCH_MAX_DOCS:
-        raise ValueError(
-            f"benchmark suite has {n_bench_docs} docs > "
-            f"{CONTAM_BENCH_MAX_DOCS}: the streaming gate requires the "
-            "broadcastable-bench contract (see docstring)"
-        )
-    bench_rows = (
-        doc_shingles(batch_docs.filter(F.col("doc_id") % CONTAM_MOD == 0))
-        .collect()
-    )
-    bench_map: dict = {}
-    for r in bench_rows:
-        bench_map.setdefault(r["s"], []).append(r["doc_id"])
-    bc = spark.sparkContext.broadcast(bench_map)
-
-    def _score(batches):
-        import pandas as pd
-
-        bm = bc.value
-        for pdf in batches:
-            out = []
-            for doc_id, sh in zip(pdf["doc_id"], pdf["sh"]):
-                sset = set(sh)
-                counts: dict = {}
-                for s in sset:
-                    for b in bm.get(s, ()):
-                        counts[b] = counts.get(b, 0) + 1
-                if not counts:
-                    continue
-                n = len(sset)
-                # max ratio, ties -> smallest bench_id (the batch
-                # window's ORDER BY ratio DESC, bench_id)
-                best_b, best_c = None, -1
-                for b in sorted(counts):
-                    if counts[b] > best_c:
-                        best_b, best_c = b, counts[b]
-                import math
-
-                ratio = math.floor(best_c / n * 10000.0 + 0.5) / 10000.0
-                out.append(
-                    {
-                        "doc_id": int(doc_id),
-                        "bench_id": int(best_b),
-                        "overlap_ratio": ratio,
-                        "contaminated": ratio >= CONTAM_THRESHOLD,
-                    }
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id",
-                    "bench_id",
-                    "overlap_ratio",
-                    "contaminated",
-                ],
-            )
-
-    docs = read_documents_stream(spark, sf_dir)
-    w = words(F.col("text"))
-    shingled = (
-        docs.filter(F.col("doc_id") % CONTAM_MOD != 0)
-        .withColumn("w", w)
-        .filter(F.size("w") >= 3)
-        .select(
-            "doc_id",
-            F.array_distinct(shingles_3gram(F.col("w"))).alias("sh"),
-        )
-    )
-    scored = shingled.mapInPandas(
-        _score,
-        schema="doc_id long, bench_id long, overlap_ratio double, "
-        "contaminated boolean",
-    )
-    return run_available_now(scored, output_mode="append")
-
-
-def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming continual-ingest dedup: every arriving micro-batch is
-    screened against the PRECOMPUTED existing-corpus index
-    (stop-shingles, capped shingle table, LSH band buckets, digest
-    set — the tables a production pipeline maintains alongside the
-    corpus) via ``foreachBatch`` running the batch verdict core.
-
-    Zero streaming state: each doc's verdict depends only on
-    (doc, index), so results are invariant to the micro-batch split —
-    asserted in tests. The per-batch sink writes under its own
-    ``batch_id`` partition with dynamic overwrite (exactly-once: a
-    retried batch replaces itself, never appends duplicates).
-
-    Scale: per micro-batch the work is |delta| digest probes + |delta|
-    band probes x bucket occupancy + verify on candidates — never
-    proportional to the existing corpus; the index is built once.
-    The stop-shingle list comes from the EXISTING corpus only (the
-    boilerplate list is corpus-maintained), which is the one semantic
-    difference from batch ``corpus_dedup_incremental``'s
-    whole-union df cap — the oracle mirrors it.
-    """
-    import os
-    import tempfile
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from ..operators.dedup import (
-        dedup_reference_index,
-        incremental_verdicts_against_index,
-    )
-    from ..sources.tables import load_table
-    from .documents import INCR_BATCH_MOD, MINHASH_DF_CAP, MINHASH_THRESHOLD
-
-    docs_static = load_table(spark, sf_dir, "documents")
-    is_batch = (F.col("doc_id") % INCR_BATCH_MOD) == 0
-    index = dedup_reference_index(
-        docs_static.filter(~is_batch), df_cap=MINHASH_DF_CAP
-    )
-
-    run = uuid.uuid4().hex[:12]
-    out_path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_incr_{run}"
-    )
-    ckpt = os.path.join(tempfile.gettempdir(), f"spark_graft_incr_ck_{run}")
-
-    def _screen(bdf: DataFrame, batch_id: int) -> None:
-        (
-            incremental_verdicts_against_index(
-                bdf, index, threshold=MINHASH_THRESHOLD
-            )
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            .write.partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(out_path)
-        )
-
-    q = (
-        read_documents_stream(spark, sf_dir)
-        .filter(is_batch)
-        .writeStream.foreachBatch(_screen)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out_path).select("doc_id", "lang", "verdict")
-
-
-def stream_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming sequence packing at ingest (stream_ops.pack_stream):
-    per-source open-pack state (two integers per stream) carries
-    across micro-batches, so packs fill across batch boundaries
-    exactly as the batch recurrence would. A drain of the static
-    corpus equals batch ``corpus_pack``, whose oracle it shares."""
-    from ..streaming.stream_ops import pack_stream
-    from .documents import PACK_BUDGET_TOKENS
-
-    docs = read_documents_stream(spark, sf_dir)
-    return run_available_now(
-        pack_stream(docs, PACK_BUDGET_TOKENS), output_mode="update"
-    )
-
-
 def stream_topk_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming heavy hitters with TRULY bounded state: the count-min
     cells aggregate in complete mode holds d*w integers NO MATTER the
@@ -568,60 +328,6 @@ def stream_topk_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "events").select("user_id")
     )
     return cms_topk_probe(hashed, cells)
-
-
-def stream_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming per-source admission cap — crawl governance AT INGEST
-    (the arrival-order twin of batch ``corpus_domain_cap``'s
-    draw-rank policy): the first CAP docs of each source stream are
-    admitted, later arrivals marked dropped.
-
-    State is ONE counter per domain — bounded by domain count, never
-    stream length. For doc_id-contiguous arrival (the file-ingest
-    order) the drain equals the first-cap-by-doc_id rule, so the op
-    carries its own full SQL oracle.
-    """
-    from ..streaming.stream_ops import domain_cap_stream
-
-    docs = read_documents_stream(spark, sf_dir)
-    return run_available_now(
-        domain_cap_stream(docs, DOMAIN_CAP), output_mode="update"
-    )
-
-
-def stream_sample_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming deterministic reservoir sample — the bottom-k sketch
-    running AT INGEST: each shard's state is the k smallest seeded
-    draws seen so far (k rows per shard, never stream length), and
-    min-k is a SET property, so the drained sample is invariant to
-    micro-batch splits and arrival order — bit-equal to batch
-    ``corpus_sample_fixed``, whose oracle it shares.
-
-    The post-drain step keeps each shard's final reservoir (max state
-    seq) and merges the global k smallest — k x n_shards rows on the
-    driver session, the established post-drain ranking pattern.
-    """
-    from ..streaming.stream_ops import sample_stream
-    from .documents import FIXED_SAMPLE_K
-
-    from pyspark.sql import functions as F
-
-    docs = read_documents_stream(spark, sf_dir)
-    from pyspark.sql.window import Window
-
-    drained = run_available_now(
-        sample_stream(docs, FIXED_SAMPLE_K), output_mode="update"
-    )
-    # final reservoir per shard = the max-seq emission (window, not a
-    # self-join: the memory-sink view can't join itself)
-    w = Window.partitionBy("shard")
-    return (
-        drained.withColumn("max_seq", F.max("seq").over(w))
-        .filter(F.col("seq") == F.col("max_seq"))
-        .orderBy("sample_key")
-        .limit(FIXED_SAMPLE_K)
-        .select("doc_id", "lang", "source", "sample_key")
-    )
 
 
 def stream_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -659,93 +365,6 @@ def stream_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def stream_bot_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming bot screen: per-user traffic counters accumulate AT
-    INGEST with FOUR integers of state per user; the rate/threshold
-    verdict applies to the latest emission per user post-drain. Drain
-    == batch `events_bot_detection`, whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from ..functions.text import quantize
-    from ..streaming.stream_ops import bot_counters_stream
-    from .events import BOT_MIN_EVENTS, BOT_RATE_PER_MIN
-
-    ev = read_events_stream(spark, sf_dir)
-    drained = run_available_now(
-        bot_counters_stream(ev), output_mode="update"
-    )
-    # latest emission per user = the max-n update (counters only grow)
-    w = Window.partitionBy("user_id")
-    latest = drained.withColumn(
-        "mx", F.max("n_events").over(w)
-    ).filter(F.col("n_events") == F.col("mx"))
-    rate = (
-        F.col("n_events").cast("double")
-        / (F.col("span_us").cast("double") / 60_000_000.0)
-    )
-    q_rate = quantize(
-        F.when(F.col("span_us") > 0, rate).otherwise(F.lit(0.0)), 4
-    )
-    return latest.select(
-        "user_id",
-        "n_events",
-        "span_us",
-        "min_gap_us",
-        q_rate.alias("events_per_min"),
-        (
-            (F.col("n_events") >= BOT_MIN_EVENTS)
-            & (F.col("span_us") > 0)
-            & (q_rate >= BOT_RATE_PER_MIN)
-        ).alias("bot_suspect"),
-    )
-
-
-def stream_interarrival(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming per-user cadence profile: inter-event gaps computed
-    AT INGEST (ONE long of state per user — the last event time; the
-    carried value stitches micro-batch boundary pairs), quantile
-    rollup post-drain. Drain == batch `events_interarrival`, whose
-    oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from ..functions.text import quantize
-    from ..streaming.stream_ops import gaps_stream
-
-    ev = read_events_stream(spark, sf_dir)
-    gaps = run_available_now(gaps_stream(ev), output_mode="append")
-    return gaps.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_gaps"),
-        quantize(F.expr("percentile(gap_us, 0.5)"), 4).alias("med_gap_us"),
-        quantize(F.expr("percentile(gap_us, 0.9)"), 4).alias("p90_gap_us"),
-        F.max("gap_us").cast("long").alias("max_gap_us"),
-    )
-
-
-def stream_ewma_control(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming EWMA control chart: the hourly count series
-    accumulates AT INGEST (the same calendar-bounded tumbling-window
-    state as `stream_hourly` — state = hours × types, never stream
-    length), and the EWMA scoring runs post-drain on the
-    hours-bounded snapshot via the exact batch computation
-    (`events.ewma_from_hourly`). Drain == batch
-    `events_ewma_control`, whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from ..streaming.stream_ops import hourly_counts
-    from .events import ewma_from_hourly
-
-    ev = read_events_stream(spark, sf_dir)
-    snap = run_available_now(hourly_counts(ev), output_mode="complete")
-    hourly = snap.groupBy("hour").agg(
-        F.sum("n_events").cast("long").alias("n")
-    )
-    return ewma_from_hourly(hourly)
-
-
 def stream_hour_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming hour-of-day concentration: the same ingest-time
     hourly state, re-binned post-drain to the 24-hour clock (hourly
@@ -765,29 +384,6 @@ def stream_hour_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", F.hour("hour").cast("long").alias("hod")
     ).agg(F.sum("n_events").cast("long").alias("cnt"))
     return hour_concentration_from_hist(hist)
-
-
-def stream_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming calendar-coverage audit: the per-type hourly count
-    series accumulates AT INGEST (the `stream_hourly` calendar-bounded
-    tumbling state) and the observed-vs-span + longest-silence scan
-    runs post-drain on the hours-bounded snapshot
-    (`events.coverage_from_hourly`). Drain == batch `events_coverage`,
-    whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from ..streaming.stream_ops import hourly_counts
-    from .events import coverage_from_hourly
-
-    ev = read_events_stream(spark, sf_dir)
-    snap = run_available_now(hourly_counts(ev), output_mode="complete")
-    hourly = snap.select(
-        "event_type",
-        "hour",
-        F.col("n_events").cast("long").alias("n"),
-    )
-    return coverage_from_hourly(hourly)
 
 
 def stream_forecast_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -829,27 +425,6 @@ def stream_ab_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
     return srm_from_users(snap.select("user_id"))
 
 
-def stream_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming two-way decomposition: the hourly tumbling state
-    accumulates AT INGEST (type cells sum to the overall series
-    post-drain — exact) and the day/hour-of-day additive fit runs on
-    the hours-bounded snapshot (`events.decompose_from_hourly`).
-    Drain == batch `events_seasonal_decompose`, whose oracle it
-    shares.
-    """
-    from pyspark.sql import functions as F
-
-    from ..streaming.stream_ops import hourly_counts
-    from .events import decompose_from_hourly
-
-    ev = read_events_stream(spark, sf_dir)
-    snap = run_available_now(hourly_counts(ev), output_mode="complete")
-    hourly = snap.groupBy("hour").agg(
-        F.sum("n_events").cast("long").alias("n")
-    )
-    return decompose_from_hourly(hourly)
-
-
 def stream_hourly_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming trailing-window anomaly screen: the per-(type, hour)
     tumbling state accumulates AT INGEST and the 24-hour trailing
@@ -863,31 +438,6 @@ def stream_hourly_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     snap = run_available_now(hourly_counts(ev), output_mode="complete")
     return trailing_anomaly_from_hourly(
         snap.select("event_type", "hour", "n_events")
-    )
-
-
-def stream_anomaly_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming deseasonalized anomaly screen: decompose the drained
-    hourly state with the shared two-way fit, then apply the
-    median/MAD residual screen (`events.residual_screen_from_
-    decomposed`). Drain == batch `events_anomaly_residual`, whose
-    oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from ..streaming.stream_ops import hourly_counts
-    from .events import (
-        decompose_from_hourly,
-        residual_screen_from_decomposed,
-    )
-
-    ev = read_events_stream(spark, sf_dir)
-    snap = run_available_now(hourly_counts(ev), output_mode="complete")
-    hourly = snap.groupBy("hour").agg(
-        F.sum("n_events").cast("long").alias("n")
-    )
-    return residual_screen_from_decomposed(
-        decompose_from_hourly(hourly)
     )
 
 
@@ -954,7 +504,7 @@ def stream_user_activity_quantiles(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Streaming entity-activity quantiles: per-user counters
-    accumulate AT INGEST (the `stream_gini` entity-bounded state) and
+    accumulate AT INGEST (entity-bounded state) and
     the exact percentile scan runs post-drain on the users-bounded
     snapshot. Drain == batch `events_user_activity_quantiles`, whose
     oracle it shares.
@@ -1012,24 +562,6 @@ def stream_dp_user_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dp_user_release_from_counts(snap)
 
 
-def stream_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming activity-inequality monitor: per-user event counts
-    accumulate AT INGEST (one counter per active user — the
-    `stream_dau` entity-bounded class, mergeable ⇒ split-invariant)
-    and the exact counts-of-counts Gini evaluates post-drain
-    (`events.gini_from_user_counts`). Drain == batch `events_gini`,
-    whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from .events import gini_from_user_counts
-
-    ev = read_events_stream(spark, sf_dir)
-    per = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("v"))
-    snap = run_available_now(per, output_mode="complete")
-    return gini_from_user_counts(snap)
-
-
 def stream_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming acquisition split: activity dedups to (day, user)
     pair state AT INGEST and the new-vs-returning scan runs
@@ -1066,26 +598,6 @@ def stream_hourly_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def stream_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming temporal-dependence monitor: the hourly tumbling
-    state accumulates AT INGEST (type cells sum to the overall series
-    post-drain — exact) and the lag-1/lag-24 ACF scan runs on the
-    hours-bounded snapshot. Drain == batch `events_autocorr`, whose
-    oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from ..streaming.stream_ops import hourly_counts
-    from .events import autocorr_from_hourly
-
-    ev = read_events_stream(spark, sf_dir)
-    snap = run_available_now(hourly_counts(ev), output_mode="complete")
-    hourly = snap.groupBy("hour").agg(
-        F.sum("n_events").cast("long").alias("n")
-    )
-    return autocorr_from_hourly(hourly)
-
-
 def stream_concurrency_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming concurrency gauge: sessions form AT INGEST (the
     `stream_sessionize` per-user state) and the interval→hour overlap
@@ -1096,26 +608,6 @@ def stream_concurrency_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .events import concurrency_from_sessions
 
     return concurrency_from_sessions(stream_sessionize(spark, sf_dir))
-
-
-def stream_adoption_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming adoption curve: per-user FIRST-seen day min-folds AT
-    INGEST (state = one day per active user — entity-bounded and
-    mergeable, so any micro-batch split drains identically) and the
-    cumulative S-curve scan runs post-drain on the days-bounded
-    snapshot. Drain == batch `events_adoption_curve`, whose oracle
-    it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from .events import adoption_from_first_seen
-
-    ev = read_events_stream(spark, sf_dir)
-    first = ev.groupBy("user_id").agg(
-        F.min(F.date_trunc("day", F.col("ts"))).alias("first_day")
-    )
-    snap = run_available_now(first, output_mode="complete")
-    return adoption_from_first_seen(snap)
 
 
 def stream_user_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1163,28 +655,6 @@ def stream_type_share_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     return type_share_from_cells(snap)
 
 
-def stream_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming robust anomaly profile: the hourly count series
-    accumulates AT INGEST (the same calendar-bounded tumbling-window
-    state as `stream_hourly`; the per-type cells just sum to the
-    overall series post-drain — exact), and the median/MAD screen
-    runs on the hours-bounded snapshot via the exact batch
-    computation (`events.mad_from_hourly`). Drain == batch
-    `events_anomaly_mad`, whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from ..streaming.stream_ops import hourly_counts
-    from .events import mad_from_hourly
-
-    ev = read_events_stream(spark, sf_dir)
-    snap = run_available_now(hourly_counts(ev), output_mode="complete")
-    hourly = snap.groupBy("hour").agg(
-        F.sum("n_events").cast("long").alias("n")
-    )
-    return mad_from_hourly(hourly)
-
-
 def stream_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Theil–Sen trend: the hourly count series accumulates
     AT INGEST (the `stream_hourly` calendar-bounded tumbling state,
@@ -1207,34 +677,6 @@ def stream_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sen_from_hourly(hourly)
 
 
-def stream_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming l-diversity monitor: (QI, user) pair counts
-    accumulate AT INGEST (state = active QI×user pairs — bounded by
-    the QI domain times the user population, never stream length;
-    pair counts are mergeable so ANY micro-batch split drains
-    identically) and collapse post-drain to the per-cell
-    distinct-user cells the shared summary reads. Drain == batch
-    `events_l_diversity`, whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from .events import l_diversity_from_cells
-
-    ev = read_events_stream(spark, sf_dir)
-    pairs = ev.groupBy(
-        "event_type",
-        F.hour("ts").alias("hod"),
-        F.floor(F.col("value") / 10.0).cast("long").alias("vb"),
-        "user_id",
-    ).agg(F.count(F.lit(1)).cast("long").alias("n"))
-    snap = run_available_now(pairs, output_mode="complete")
-    cells = snap.groupBy("event_type", "hod", "vb").agg(
-        F.sum("n").cast("long").alias("g"),
-        F.count(F.lit(1)).cast("long").alias("l"),
-    )
-    return l_diversity_from_cells(cells)
-
-
 def stream_emb_norm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming embedding-health monitor — the streaming tier's
     first VECTOR-table op: (dim, quantized-norm) cell counts
@@ -1251,25 +693,6 @@ def stream_emb_norm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb_norm_cells(emb), output_mode="complete"
     )
     return emb_norm_audit_from_cells(snap)
-
-
-def stream_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming Mann-Kendall trend monitor over the drained
-    hours-bounded tumbling state (type cells summed to the overall
-    series — exact). Drain == batch `events_mann_kendall`, whose
-    oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from ..streaming.stream_ops import hourly_counts
-    from .events import mk_from_hourly
-
-    ev = read_events_stream(spark, sf_dir)
-    snap = run_available_now(hourly_counts(ev), output_mode="complete")
-    hourly = snap.groupBy("hour").agg(
-        F.sum("n_events").cast("long").alias("n")
-    )
-    return mk_from_hourly(hourly)
 
 
 def stream_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1296,8 +719,7 @@ def stream_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_shard_rendezvous(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming HRW shard routing: the assignment is a pure function
     of doc_id (S+1 md5 draws + one array argmax), so the streaming
-    form is a STATELESS append transform — the `stream_quality_gate`
-    shape, which is exactly why rendezvous routing works at intake
+    form is a STATELESS append transform, which is exactly why rendezvous routing works at intake
     time with nothing to checkpoint but offsets. Drain == batch
     `corpus_shard_rendezvous`, whose oracle it shares.
     """
@@ -1322,154 +744,6 @@ def stream_shard_rendezvous(spark: SparkSession, sf_dir: str) -> DataFrame:
         (keys[HRW_SHARDS] > best["k"]).alias("moves_on_scale_out"),
     )
     return run_available_now(routed, output_mode="append")
-
-
-def stream_dp_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming DP median: the dollar-bin count state is bounded by
-    the value range, and the exponential-mechanism release (keyed
-    Gumbel draws over the drained bins) is a pure post-drain
-    computation — rerunning it on every drain costs no extra privacy
-    ONLY because the draw is keyed (a fresh-noise rerun would);
-    the deterministic mechanism is what makes a streaming DP release
-    coherent. Drain == batch `events_dp_median`, whose oracle it
-    shares.
-    """
-    from pyspark.sql import functions as F
-
-    from .events import DP_MEDIAN_EPS, DP_U_SCALE
-
-    ev = read_events_stream(spark, sf_dir)
-    bins = ev.groupBy(
-        F.floor(F.col("value")).cast("long").alias("bin")
-    ).agg(F.count(F.lit(1)).cast("long").alias("n_bin"))
-    snap = run_available_now(bins, output_mode="complete")
-    tot = snap.agg(F.sum("n_bin").cast("long").alias("n"))
-    lower = snap.select(
-        F.col("bin").alias("b2"), F.col("n_bin").alias("nb2")
-    )
-    ranked = (
-        snap.join(F.broadcast(lower), F.col("b2") <= F.col("bin"))
-        .groupBy("bin", "n_bin")
-        .agg(F.sum("nb2").cast("long").alias("cum"))
-        .crossJoin(F.broadcast(tot))
-    )
-    util = -F.abs(2 * F.col("cum") - F.col("n"))
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("dpm|"), F.col("bin").cast("string"))),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("double")
-    u = (h + F.lit(0.5)) / F.lit(DP_U_SCALE)
-    gumbel = -F.log(-F.log(u))
-    score = F.lit(DP_MEDIAN_EPS / 4.0) * util + gumbel
-    return ranked.withColumn("score", score).agg(
-        F.expr("max_by(bin, struct(score, -bin))")
-        .cast("long")
-        .alias("dp_median_bin"),
-        F.lit(DP_MEDIAN_EPS).alias("epsilon"),
-    )
-
-
-def stream_dp_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming DP vocabulary release: each arriving doc's top-k term
-    votes are a STATELESS per-row extraction (docs arrive whole), the
-    per-term vote counts accumulate as vocabulary-bounded mergeable
-    state, and the noise + threshold release runs post-drain with the
-    same deterministic draw. Drain == batch `corpus_dp_vocab`, whose
-    oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from .documents import DP_VOCAB_CLIP, DP_VOCAB_EPS, DP_VOCAB_THRESHOLD
-    from .events import dp_noise_col
-
-    docs = read_documents_stream(spark, sf_dir)
-    # per-doc top-k by tf (ties by term): an aggregate over the doc's
-    # own token array — no cross-row state, pure map
-    votes = docs.select(
-        F.explode(
-            F.slice(
-                F.expr(
-                    """
-                    transform(
-                      array_sort(
-                        transform(
-                          array_distinct(split(lower(trim(text)), '\\\\s+')),
-                          t -> struct(
-                            -size(filter(split(lower(trim(text)), '\\\\s+'),
-                                         x -> x = t)) AS neg,
-                            t AS term)
-                        )
-                      ),
-                      s -> s.term
-                    )
-                    """
-                ),
-                1,
-                DP_VOCAB_CLIP,
-            )
-        ).alias("term")
-    )
-    counts = votes.groupBy("term").agg(
-        F.count(F.lit(1)).cast("long").alias("df")
-    )
-    snap = run_available_now(counts, output_mode="complete")
-    noise = dp_noise_col(
-        F.concat(F.lit("dpv|"), F.col("term")),
-        eps=DP_VOCAB_EPS / DP_VOCAB_CLIP,
-    )
-    return (
-        snap.select(
-            "term",
-            F.greatest(F.lit(0), F.col("df") + noise)
-            .cast("long")
-            .alias("dp_df"),
-        )
-        .filter(F.col("dp_df") >= DP_VOCAB_THRESHOLD)
-    )
-
-
-def stream_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming Holt linear smoothing: the (event_type, hour) count
-    cells accumulate at ingest (calendar-bounded mergeable state) and
-    the level/trend recurrence runs post-drain via the exact batch
-    computation (`events.holt_from_cells`). Drain == batch
-    `events_holt_linear`, whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from .events import holt_from_cells
-
-    ev = read_events_stream(spark, sf_dir)
-    cells = ev.groupBy(
-        "event_type",
-        F.unix_micros(F.date_trunc("hour", F.col("ts"))).alias("hour_us"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    snap = run_available_now(cells, output_mode="complete")
-    return holt_from_cells(snap)
-
-
-def stream_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming Holt–Winters: the same (event_type, hour) count cells
-    as `stream_holt_linear` accumulate at ingest, with the seasonal
-    fit running post-drain (`events.hw_from_cells`). Drain == batch
-    `events_holt_winters`, whose oracle it shares.
-    """
-    from pyspark.sql import functions as F
-
-    from .events import hw_from_cells
-
-    ev = read_events_stream(spark, sf_dir)
-    cells = ev.groupBy(
-        "event_type",
-        F.unix_micros(F.date_trunc("hour", F.col("ts"))).alias("hour_us"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    snap = run_available_now(cells, output_mode="complete")
-    return hw_from_cells(snap)
 
 
 def stream_dp_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1794,13 +1068,9 @@ def stream_token_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES = {
     "stream_dp_hourly": stream_dp_hourly,
-    "stream_holt_linear": stream_holt_linear,
-    "stream_holt_winters": stream_holt_winters,
     "stream_absorption": stream_absorption,
     "stream_dp_user_total": stream_dp_user_total,
-    "stream_dp_vocab": stream_dp_vocab,
     "stream_shard_rendezvous": stream_shard_rendezvous,
-    "stream_dp_median": stream_dp_median,
     "stream_token_histogram": stream_token_histogram,
     "stream_ngrams_topk": stream_ngrams_topk,
     "stream_yule_k": stream_yule_k,
@@ -1815,38 +1085,25 @@ QUERIES = {
     "stream_charclass_mix": stream_charclass_mix,
     "stream_conversion_ztest": stream_conversion_ztest,
     "stream_session_stats": stream_session_stats,
-    "stream_ewma_control": stream_ewma_control,
     "stream_forecast_scorecard": stream_forecast_scorecard,
     "stream_ab_design": stream_ab_design,
     "stream_ab_srm": stream_ab_srm,
-    "stream_seasonal_decompose": stream_seasonal_decompose,
     "stream_hourly_anomaly": stream_hourly_anomaly,
-    "stream_anomaly_residual": stream_anomaly_residual,
     "stream_forecast_hourly": stream_forecast_hourly,
     "stream_json_props": stream_json_props,
     "stream_retention_hourly": stream_retention_hourly,
     "stream_user_activity_quantiles":
         stream_user_activity_quantiles,
-    "stream_gini": stream_gini,
     "stream_new_vs_returning": stream_new_vs_returning,
     "stream_hourly_profile": stream_hourly_profile,
-    "stream_autocorr": stream_autocorr,
     "stream_concurrency_curve": stream_concurrency_curve,
-    "stream_adoption_curve": stream_adoption_curve,
     "stream_user_paths": stream_user_paths,
     "stream_type_share_trend": stream_type_share_trend,
-    "stream_l_diversity": stream_l_diversity,
     "stream_emb_norm_audit": stream_emb_norm_audit,
-    "stream_coverage": stream_coverage,
     "stream_hour_concentration": stream_hour_concentration,
-    "stream_anomaly_mad": stream_anomaly_mad,
     "stream_sen_slope": stream_sen_slope,
-    "stream_mann_kendall": stream_mann_kendall,
     "stream_hourly": stream_hourly,
     "stream_sessionize": stream_sessionize,
-    "stream_view_click_join": stream_view_click_join,
-    "stream_dedup": stream_dedup,
-    "stream_quality_gate": stream_quality_gate,
     "stream_pii_scrub": stream_pii_scrub,
     "stream_doc_tokens": stream_doc_tokens,
     "stream_langid_injection_eval": stream_langid_injection_eval,
@@ -1855,38 +1112,22 @@ QUERIES = {
     "stream_mix_report": stream_mix_report,
     "stream_dau": stream_dau,
     "stream_value_quantiles": stream_value_quantiles,
-    "stream_contamination": stream_contamination,
-    "stream_dedup_incremental": stream_dedup_incremental,
-    "stream_domain_cap": stream_domain_cap,
-    "stream_sample_fixed": stream_sample_fixed,
     "stream_latest_state": stream_latest_state,
-    "stream_bot_gate": stream_bot_gate,
-    "stream_pack": stream_pack,
     "stream_topk_cms": stream_topk_cms,
-    "stream_interarrival": stream_interarrival,
 }
 
 ORACLE = {
     "stream_dp_hourly": _EVENTS_ORACLE["events_dp_hourly"],
-    "stream_holt_linear": _EVENTS_ORACLE["events_holt_linear"],
-    "stream_holt_winters": _EVENTS_ORACLE["events_holt_winters"],
     "stream_absorption": _EVENTS_ORACLE["events_absorption"],
     "stream_dp_user_total": _EVENTS_ORACLE["events_dp_user_total"],
-    "stream_dp_vocab": _DOCS_ORACLE["corpus_dp_vocab"],
     "stream_shard_rendezvous":
         _DOCS_ORACLE["corpus_shard_rendezvous"],
-    "stream_dp_median": _EVENTS_ORACLE["events_dp_median"],
-    "stream_ewma_control": _EVENTS_ORACLE["events_ewma_control"],
     "stream_forecast_scorecard":
         _EVENTS_ORACLE["events_forecast_scorecard"],
     "stream_ab_design": _EVENTS_ORACLE["events_ab_design"],
     "stream_ab_srm": _EVENTS_ORACLE["events_ab_srm"],
-    "stream_seasonal_decompose":
-        _EVENTS_ORACLE["events_seasonal_decompose"],
     "stream_hourly_anomaly":
         _EVENTS_ORACLE["events_hourly_anomaly"],
-    "stream_anomaly_residual":
-        _EVENTS_ORACLE["events_anomaly_residual"],
     "stream_forecast_hourly":
         _EVENTS_ORACLE["events_forecast_hourly"],
     "stream_json_props":
@@ -1895,27 +1136,19 @@ ORACLE = {
         _EVENTS_ORACLE["events_retention_hourly"],
     "stream_user_activity_quantiles":
         _EVENTS_ORACLE["events_user_activity_quantiles"],
-    "stream_gini": _EVENTS_ORACLE["events_gini"],
     "stream_new_vs_returning":
         _EVENTS_ORACLE["events_new_vs_returning"],
     "stream_hourly_profile":
         _EVENTS_ORACLE["events_hourly_profile"],
-    "stream_autocorr": _EVENTS_ORACLE["events_autocorr"],
     "stream_concurrency_curve":
         _EVENTS_ORACLE["events_concurrency_curve"],
-    "stream_adoption_curve":
-        _EVENTS_ORACLE["events_adoption_curve"],
     "stream_user_paths": _EVENTS_ORACLE["events_user_paths"],
     "stream_type_share_trend":
         _EVENTS_ORACLE["events_type_share_trend"],
-    "stream_l_diversity": _EVENTS_ORACLE["events_l_diversity"],
     "stream_emb_norm_audit": _DOCS_ORACLE["emb_norm_audit"],
-    "stream_coverage": _EVENTS_ORACLE["events_coverage"],
     "stream_hour_concentration":
         _EVENTS_ORACLE["events_hour_concentration"],
-    "stream_anomaly_mad": _EVENTS_ORACLE["events_anomaly_mad"],
     "stream_sen_slope": _EVENTS_ORACLE["events_sen_slope"],
-    "stream_mann_kendall": _EVENTS_ORACLE["events_mann_kendall"],
     "stream_session_stats": _EVENTS_ORACLE["events_session_stats"],
     "stream_conversion_ztest": _EVENTS_ORACLE["events_conversion_ztest"],
     "stream_quality_length_corr": _DOCS_ORACLE["corpus_quality_length_corr"],
@@ -1933,8 +1166,6 @@ ORACLE = {
     "stream_token_gini": _DOCS_ORACLE["corpus_token_gini"],
     "stream_hourly": _EVENTS_ORACLE["events_hourly"],
     "stream_sessionize": _EVENTS_ORACLE["events_sessionize"],
-    "stream_dedup": _DOCS_ORACLE["dedup_apply"],
-    "stream_quality_gate": quality_gate_sql(PREP_QUALITY_MIN),
     "stream_pii_scrub": _DOCS_ORACLE["doc_pii_scrub"],
     "stream_doc_tokens": _DOCS_ORACLE["doc_tokens"],
     "stream_langid_injection_eval":
@@ -1945,43 +1176,8 @@ ORACLE = {
     # same invariant oracle as the batch sketch tier: TRUE per day
     "stream_dau": _EVENTS_ORACLE["events_dau_approx"],
     "stream_value_quantiles": _EVENTS_ORACLE["events_value_quantiles_approx"],
-    "stream_contamination": _DOCS_ORACLE["corpus_contamination"],
-    # the streaming variant's one semantic difference from the batch
-    # entry is the df-cap population (existing corpus only)
-    "stream_dedup_incremental": incr_dedup_oracle_sql("existing"),
-    "stream_sample_fixed": _DOCS_ORACLE["corpus_sample_fixed"],
     "stream_latest_state": _DOCS_ORACLE["events_latest_state"],
-    "stream_bot_gate": _EVENTS_ORACLE["events_bot_detection"],
-    # each gap emits exactly once at ingest; drained set == batch lag
-    "stream_interarrival": _EVENTS_ORACLE["events_interarrival"],
-    "stream_domain_cap": f"""
-        SELECT doc_id, source, rk, (rk <= {DOMAIN_CAP}) AS kept FROM (
-          SELECT doc_id, source,
-                 row_number() OVER (
-                   PARTITION BY source ORDER BY doc_id
-                 ) AS rk
-          FROM documents
-        )
-    """,
-    # single-batch drain of the static corpus == batch greedy packing
-    "stream_pack": _DOCS_ORACLE["corpus_pack"],
     # cell-sum mergeability makes the drained sketch equal the batch
     # sketch regardless of micro-batching
     "stream_topk_cms": _EVENTS_ORACLE["events_topk_cms"],
-    # on static input the drained stream-stream inner join equals the
-    # batch interval join, so it gets a full SQL oracle
-    "stream_view_click_join": """
-        SELECT c.user_id AS user_id,
-               v.event_id AS view_id,
-               c.event_id AS click_id,
-               epoch_us(v.ts) AS view_us,
-               epoch_us(c.ts) AS click_us
-        FROM events c
-        JOIN events v
-          ON c.user_id = v.user_id
-         AND v.event_type = 'view'
-         AND c.event_type = 'click'
-         AND epoch_us(v.ts) <= epoch_us(c.ts)
-         AND epoch_us(v.ts) >= epoch_us(c.ts) - 3600000000
-    """,
 }

@@ -299,7 +299,8 @@ def test_cli_cost_uses_model_tier(spark, tmp_path, monkeypatch):
 def test_query_runner_lists_and_rejects(capsys):
     """Catalog query runner: no key lists every catalog entry (no Spark
     session involved), with no star-schema entry and none of the
-    retired event analytics or their stream twins; an unknown key
+    retired event analytics, their stream twins or the retired
+    stream-only ingest keys; an unknown key
     exits 2 with a message."""
     from llm_map_reduce_summarizer_spark.query import main
 
@@ -323,6 +324,7 @@ def test_query_runner_lists_and_rejects(capsys):
         "events_type_correlation", "events_wau_merge",
         "events_rolling_actives", "events_power_law_fit",
         "events_session_funnel", "events_cem_att", "events_window_funnel",
+        "events_bot_detection", "events_value_psi",
     }
     with_stream_twin = {
         "theta_forecast", "k_anonymity", "dow_hour_heatmap",
@@ -339,11 +341,21 @@ def test_query_runner_lists_and_rejects(capsys):
         "t_closeness", "churn_half_life", "survival", "cohort_retention",
         "stickiness", "incident_table", "mttr", "cusum", "funnel",
         "funnel_ci", "changepoint", "anomaly_ensemble", "error_budget",
+        "holt_winters", "anomaly_residual", "seasonal_decompose",
+        "holt_linear", "autocorr", "mann_kendall", "dp_median",
+        "ewma_control", "gini", "l_diversity", "coverage",
+        "adoption_curve", "interarrival", "anomaly_mad",
+    }
+    stream_only = {
+        "dedup_incremental", "sample_fixed", "contamination", "bot_gate",
+        "view_click_join", "dp_vocab", "domain_cap", "pack",
+        "quality_gate", "dedup",
     }
     retired_events.add("events_watermark_audit")
     for name in with_stream_twin:
         retired_events |= {f"events_{name}", f"stream_{name}"}
-    assert len(retired_events) == 110
+    retired_events |= {f"stream_{name}" for name in stream_only}
+    assert len(retired_events) == 150
     assert not retired_events & set(listed)
 
     assert main(["definitely_not_a_key"]) == 2

@@ -27,12 +27,6 @@ QUERIES = entrymod.queries()
 SKIP = {k for k in QUERIES if k.startswith("stream_")}
 STREAM_KEYS = sorted(SKIP)
 
-# Entries that drive writeStream.foreachBatch themselves instead of
-# returning a frame through run_available_now — there is no pre-drain
-# streaming DataFrame to intercept. Their per-batch verdict core is
-# batch code audited via the batch twin (corpus_dedup_incremental).
-FOREACH_BATCH_KEYS = {"stream_dedup_incremental"}
-
 
 # Every physical Window node prints each window function's
 # ``windowspecdefinition(partitionCols..., orderCols..., frame)``. When
@@ -126,13 +120,6 @@ def test_stream_pre_drain_plan_audit(spark, name, monkeypatch):
     a real regression, not a bounded-table exception.
     """
     from llm_map_reduce_summarizer_spark.plans import streams as streams_mod
-
-    if name in FOREACH_BATCH_KEYS:
-        pytest.skip(
-            f"{name} drives foreachBatch directly (no pre-drain frame "
-            "to capture); its per-batch verdict core is the batch "
-            "entry the main audit already covers"
-        )
 
     captured = []
 

@@ -36,7 +36,6 @@ HUB_ZERO_SCAN = [
     "corpus_keyphrase_rake",
     "search_map",
     "search_mrr",
-    "events_value_psi",
     "corpus_ppl_buckets",
     "corpus_burrows_delta",
     "corpus_entropy_rate",

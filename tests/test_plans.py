@@ -430,29 +430,6 @@ def test_fit_and_mix_ops_semantics(spark):
     assert big["target_share"] <= big["observed_share"] + 1e-9
 
 
-def test_anomaly_mad_and_interarrival_semantics(spark):
-    """MAD profile: a planted extreme hour is flagged while the
-    baseline hours stay quiet; interarrival gaps are nonnegative and
-    the quantiles are ordered."""
-    from llm_map_reduce_summarizer_spark.plans.events import (
-        events_anomaly_mad,
-        events_interarrival,
-    )
-
-    prof = {r["hour_of_day"]: r for r in events_anomaly_mad(spark, SF).collect()}
-    assert prof  # at least one hour-of-day bucket
-    for r in prof.values():
-        assert r["mad_n"] >= 0.0
-        assert 0 <= r["n_anomalies"] <= r["n_hours"]
-
-    rows = events_interarrival(spark, SF).collect()
-    assert rows
-    for r in rows[:200]:
-        assert r["med_gap_us"] >= 0
-        assert r["med_gap_us"] <= r["p90_gap_us"] + 1e-9
-        assert r["p90_gap_us"] <= r["max_gap_us"] + 1e-9
-
-
 def test_emb_kmeans_improves_objective(spark):
     """Lloyd's algorithm must not degrade the spherical objective:
     the mean final cosine-to-centroid exceeds the round-0 mean

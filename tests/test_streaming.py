@@ -76,140 +76,6 @@ def test_stream_parquet_file_sink(spark, tmp_path):
     assert compare_frames(back.toPandas(), closed.toPandas()) == []
 
 
-def test_stream_dedup_matches_batch_and_carries_state(spark, tmp_path):
-    from llm_map_reduce_summarizer_spark.plans.documents import dedup_apply
-    from llm_map_reduce_summarizer_spark.plans.streams import stream_dedup
-    from llm_map_reduce_summarizer_spark.streaming.stream_ops import (
-        DOCS_SCHEMA,
-        dedup_stream,
-        run_available_now,
-    )
-    import pandas as pd
-
-    # drain of the static corpus == batch keep-min-id dedup
-    stream = stream_dedup(spark, SF).toPandas()
-    batch = dedup_apply(spark, SF).toPandas()
-    assert len(stream) > 0
-    assert compare_frames(stream, batch) == []
-
-    # two micro-batches: a batch-2 copy of batch-1 content must drop
-    # purely from carried state; new content still passes
-    src = tmp_path / "docs_stream"
-    src.mkdir()
-    pd.DataFrame(
-        [dict(doc_id=1, text="alpha beta", lang="en", source="s", n_chars=10)]
-    ).to_parquet(src / "part-000.parquet")
-    pd.DataFrame(
-        [
-            dict(doc_id=2, text="ALPHA   beta", lang="en", source="s",
-                 n_chars=12),  # same normalized content -> dropped
-            dict(doc_id=3, text="gamma", lang="en", source="s", n_chars=5),
-        ]
-    ).to_parquet(src / "part-001.parquet")
-    raw = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(str(src))
-    )
-    out = run_available_now(dedup_stream(raw), output_mode="update").toPandas()
-    assert sorted(out["doc_id"]) == [1, 3]
-
-
-def test_stream_dedup_incremental_matches_batch_core_and_split_invariant(
-    spark,
-):
-    """The streamed drain equals the batch verdict core run on the full
-    ingest slice, and the core itself is micro-batch-split invariant:
-    screening three arbitrary sub-batches against the same index and
-    unioning equals screening the whole slice at once (each doc's
-    verdict depends only on (doc, index)) — the property that makes
-    the foreachBatch intake correct for ANY trigger cadence."""
-    from llm_map_reduce_summarizer_spark.operators.dedup import (
-        dedup_reference_index,
-        incremental_verdicts_against_index,
-    )
-    from llm_map_reduce_summarizer_spark.plans.documents import (
-        INCR_BATCH_MOD,
-        MINHASH_DF_CAP,
-        MINHASH_THRESHOLD,
-    )
-    from llm_map_reduce_summarizer_spark.plans.streams import (
-        stream_dedup_incremental,
-    )
-    from llm_map_reduce_summarizer_spark.sources.tables import load_table
-    from pyspark.sql import functions as F
-
-    docs = load_table(spark, SF, "documents")
-    is_batch = (F.col("doc_id") % INCR_BATCH_MOD) == 0
-    index = dedup_reference_index(
-        docs.filter(~is_batch), df_cap=MINHASH_DF_CAP
-    )
-    whole = incremental_verdicts_against_index(
-        docs.filter(is_batch), index, threshold=MINHASH_THRESHOLD
-    ).toPandas()
-    assert set(whole["verdict"]) >= {"dup_near", "keep"}
-
-    streamed = stream_dedup_incremental(spark, SF).toPandas()
-    assert compare_frames(streamed, whole) == []
-
-    parts = [
-        incremental_verdicts_against_index(
-            docs.filter(is_batch & (F.col("doc_id") % 3 == r)),
-            index,
-            threshold=MINHASH_THRESHOLD,
-        ).toPandas()
-        for r in range(3)
-    ]
-    import pandas as pd
-
-    unioned = pd.concat(parts, ignore_index=True)
-    assert compare_frames(unioned, whole) == []
-
-
-def test_stream_pack_fills_across_micro_batch_boundary(spark, tmp_path):
-    """A pack that is part-filled when a micro-batch ends must keep
-    filling from the next batch (carried state), and the drained
-    result must equal the batch recurrence on the same rows."""
-    import pandas as pd
-
-    from llm_map_reduce_summarizer_spark.streaming.stream_ops import (
-        DOCS_SCHEMA,
-        pack_stream,
-        run_available_now,
-    )
-
-    def doc(i, n_words):
-        return dict(
-            doc_id=i,
-            text=" ".join(["tok"] * n_words),
-            lang="en",
-            source="s",
-            n_chars=4 * n_words,
-        )
-
-    src = tmp_path / "docs_pack"
-    src.mkdir()
-    # budget 10: batch 1 fills pack 0 to 9 tokens; batch 2's first doc
-    # (4 tokens) must overflow into pack 1 purely from carried state
-    pd.DataFrame([doc(1, 6), doc(2, 3)]).to_parquet(src / "part-000.parquet")
-    pd.DataFrame([doc(3, 4), doc(4, 5)]).to_parquet(src / "part-001.parquet")
-    raw = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(str(src))
-    )
-    out = (
-        run_available_now(pack_stream(raw, budget=10), output_mode="update")
-        .toPandas()
-        .set_index("doc_id")["pack_id"]
-    )
-    assert out[1] == 0 and out[2] == 0  # 6 + 3 <= 10
-    assert out[3] == 1  # 9 + 4 > 10 -> next pack, across the boundary
-    assert out[4] == 1  # 4 + 5 <= 10
-
-
 def test_stream_value_histogram_accumulates_across_batches(spark, tmp_path):
     """Two micro-batches hitting the same (type, bucket) cell must
     produce ONE accumulated row in complete mode — counts summed,
@@ -556,174 +422,6 @@ def test_stream_value_quantiles_invariant_and_exact_columns(spark):
     assert got["sketch_within_rank_tol"].all()
     for col in ("p25", "p5", "p9", "p99", "n_events"):
         assert (got[col] == exact[col]).all(), col
-
-
-def test_stream_contamination_matches_batch(spark):
-    """The streamed decontamination gate must equal the batch screen
-    on a drain of the static corpus — same winning bench doc, same
-    quantized ratio, same flag."""
-    from llm_map_reduce_summarizer_spark.plans.documents import (
-        corpus_contamination,
-    )
-    from llm_map_reduce_summarizer_spark.plans.streams import (
-        stream_contamination,
-    )
-
-    stream = stream_contamination(spark, SF).toPandas()
-    batch = corpus_contamination(spark, SF).toPandas()
-    assert len(stream) > 0
-    assert compare_frames(stream, batch) == []
-
-
-def test_stream_domain_cap_binds_across_micro_batches(spark, tmp_path):
-    """The admission counter must carry across micro-batch boundaries:
-    a source that used its whole cap in batch 1 admits NOTHING from
-    batch 2, and a two-batch split equals the single-batch drain."""
-    import pandas as pd
-
-    from llm_map_reduce_summarizer_spark.streaming.stream_ops import (
-        DOCS_SCHEMA,
-        domain_cap_stream,
-        run_available_now,
-    )
-
-    def doc(i, source):
-        return dict(
-            doc_id=i, text="x", lang="en", source=source, n_chars=1
-        )
-
-    src = tmp_path / "docs_cap"
-    src.mkdir()
-    # cap=2: source a fills its cap in batch 1; source b spans both
-    pd.DataFrame(
-        [doc(1, "a"), doc(2, "a"), doc(3, "b")]
-    ).to_parquet(src / "part-000.parquet")
-    pd.DataFrame(
-        [doc(4, "a"), doc(5, "b"), doc(6, "b")]
-    ).to_parquet(src / "part-001.parquet")
-    raw = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(str(src))
-    )
-    out = (
-        run_available_now(domain_cap_stream(raw, cap=2), output_mode="update")
-        .toPandas()
-        .set_index("doc_id")
-    )
-    assert out.loc[1, "kept"] and out.loc[2, "kept"]
-    assert not out.loc[4, "kept"]  # a's cap consumed in batch 1
-    assert out.loc[3, "kept"] and out.loc[5, "kept"]  # b: rk 1, 2
-    assert not out.loc[6, "kept"]  # b's third arrival
-    assert list(out.sort_index()["rk"]) == [1, 2, 1, 3, 2, 3]
-
-
-def test_stream_reservoir_displacement_across_batches(spark, tmp_path):
-    """A later micro-batch's smaller draw must DISPLACE an earlier
-    reservoir member (state carries the bottom-k set, and the final
-    emission reflects the displacement), and the drain must equal the
-    batch bottom-k on the union of both files."""
-    import hashlib
-
-    import pandas as pd
-
-    from llm_map_reduce_summarizer_spark.streaming.stream_ops import (
-        DOCS_SCHEMA,
-        run_available_now,
-        sample_stream,
-    )
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    def doc(i):
-        return dict(doc_id=i, text="x", lang="en", source="s", n_chars=1)
-
-    ids_a, ids_b = [1, 2, 3, 4], [5, 6, 7, 8]
-    src = tmp_path / "docs_res"
-    src.mkdir()
-    pd.DataFrame([doc(i) for i in ids_a]).to_parquet(src / "part-000.parquet")
-    pd.DataFrame([doc(i) for i in ids_b]).to_parquet(src / "part-001.parquet")
-    raw = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(str(src))
-    )
-    k = 3
-    drained = run_available_now(
-        sample_stream(raw, k, n_shards=1), output_mode="update"
-    )
-    w = Window.partitionBy("shard")
-    final = (
-        drained.withColumn("mx", F.max("seq").over(w))
-        .filter(F.col("seq") == F.col("mx"))
-        .toPandas()
-    )
-    draws = {
-        i: hashlib.md5(f"usample|{i}".encode()).hexdigest()
-        for i in ids_a + ids_b
-    }
-    expect = sorted(draws, key=lambda i: draws[i])[:k]
-    assert sorted(final["doc_id"]) == sorted(expect)
-    # the two-batch split must have displaced at least one member of
-    # batch 1's reservoir (otherwise this test proves nothing)
-    first_k = sorted(ids_a, key=lambda i: draws[i])[:k]
-    assert set(first_k) != set(expect)
-
-
-def test_stream_bot_gate_min_gap_spans_batch_boundary(spark, tmp_path):
-    """The minimum inter-event gap must consider the pair that spans a
-    micro-batch boundary (carried last_ts), and counters must equal
-    the batch aggregation on the drained input."""
-    import pandas as pd
-
-    from llm_map_reduce_summarizer_spark.streaming.stream_ops import (
-        EVENTS_SCHEMA,
-        bot_counters_stream,
-        run_available_now,
-    )
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    base = 1_700_000_000_000_000_000  # ns for the legacy long schema
-    us = 1_000
-
-    def ev(eid, ts_us):
-        return dict(
-            event_id=eid, ts=base + ts_us * 1000, user_id=1,
-            event_type="view", value=0.0, props="{}",
-        )
-
-    src = tmp_path / "events_bot"
-    src.mkdir()
-    # in-batch gaps: 500; the boundary pair (1000 -> 1200) gives 200 —
-    # the true minimum only exists ACROSS the file boundary
-    pd.DataFrame([ev(1, 0), ev(2, 500), ev(3, 1000)]).to_parquet(
-        src / "part-000.parquet"
-    )
-    pd.DataFrame([ev(4, 1200), ev(5, 1800)]).to_parquet(
-        src / "part-001.parquet"
-    )
-    raw = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(str(src))
-    ).withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    drained = run_available_now(
-        bot_counters_stream(raw), output_mode="update"
-    )
-    w = Window.partitionBy("user_id")
-    latest = (
-        drained.withColumn("mx", F.max("n_events").over(w))
-        .filter(F.col("n_events") == F.col("mx"))
-        .toPandas()
-    )
-    assert len(latest) == 1
-    assert latest.iloc[0]["n_events"] == 5
-    assert latest.iloc[0]["span_us"] == 1800
-    assert latest.iloc[0]["min_gap_us"] == 200  # the boundary pair
 
 
 @pytest.mark.slow
