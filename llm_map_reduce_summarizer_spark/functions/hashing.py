@@ -1,4 +1,4 @@
-"""Hash-based Column builders for dedup: shingles, MinHash, SimHash.
+"""Hash-based Column builders for dedup: shingles and MinHash.
 
 Everything is derived from md5 hex strings so any ANSI engine computes
 bit-identical values (Spark's murmur ``hash()`` is engine-specific; md5
@@ -129,44 +129,6 @@ def band_hashes() -> list[Column]:
     return out
 
 
-SIMHASH_WORDS = 4  # 64-bit fingerprint as 4 x 16-bit band words
-
-
-def simhash64_word_aggs(token_col: str = "t") -> list[Column]:
-    """64-bit SimHash as four 16-bit words (``sim0..sim3``), bit-majority
-    over md5(token)'s first 16 hex digits (4 bits per digit).
-
-    Word k covers hex digits ``4k+1..4k+4``; within the word, digit i /
-    bit b carries weight ``2**(4*i + b)``. Each word is a bigint in
-    [0, 65535], so no signed-64 overflow anywhere — and the words ARE
-    the LSH bands: for Hamming <= 3 over 64 bits, pigeonhole guarantees
-    at least one of the 4 words matches exactly, so banding on the words
-    is lossless (no 2^16-space saturation, no quadratic bucket scan).
-
-    Portable: digit value via conv(hex,16,10) here, strpos-lookup in the
-    DuckDB twin; both reduce to integer shift/mask + conditional sums.
-    """
-    h = F.md5(F.col(token_col))
-    out = []
-    for k in range(SIMHASH_WORDS):
-        terms = []
-        for i in range(4):  # hex digit within word
-            v = F.conv(F.substring(h, 4 * k + i + 1, 1), 16, 10).cast("int")
-            for b in range(4):  # bit within digit
-                hit = F.shiftright(v, b).bitwiseAND(F.lit(1))
-                terms.append(
-                    F.when(
-                        F.sum(hit) * 2 > F.count(F.lit(1)),
-                        F.lit(2 ** (4 * i + b)),
-                    ).otherwise(F.lit(0))
-                )
-        word = terms[0]
-        for t in terms[1:]:
-            word = word + t
-        out.append(word.cast("long").alias(f"sim{k}"))
-    return out
-
-
 # ------------------------------------------------------------- SQL twins
 
 SQL_WORDS = r"regexp_split_to_array(lower(trim({c})), '\s+')"
@@ -197,20 +159,3 @@ def sql_band_hashes() -> str:
     return ", ".join(parts)
 
 
-def sql_simhash64_words(token_col: str = "t") -> list[str]:
-    """DuckDB twins of :func:`simhash64_word_aggs` — one expr per word."""
-    words_sql = []
-    for k in range(SIMHASH_WORDS):
-        terms = []
-        for i in range(4):
-            v = (
-                f"(strpos('0123456789abcdef', "
-                f"substr(md5({token_col}), {4 * k + i + 1}, 1)) - 1)"
-            )
-            for b in range(4):
-                terms.append(
-                    f"CASE WHEN sum(({v} >> {b}) & 1) * 2 > count(*) "
-                    f"THEN {2 ** (4 * i + b)} ELSE 0 END"
-                )
-        words_sql.append("CAST(" + " + ".join(terms) + f" AS BIGINT) AS sim{k}")
-    return words_sql

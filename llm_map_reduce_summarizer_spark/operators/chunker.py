@@ -71,22 +71,12 @@ def assign_chunks(
 
     With ``doc_col`` the cumulative sum is an ordinary per-document
     window (each document sorts inside its own partition). Without it
-    the order is global, so the naive window would collapse to one
-    task — instead the exclusive prefix sum runs as a distributed
-    two-pass scan (operators/scan.py), keeping every partition busy.
+    the order is global and the window runs as one task.
 
     ``counter='tiktoken'`` reproduces the reference's BPE-exact chunk
     boundaries (big_chunkeroosky.py:43) when tiktoken is installed.
     """
-    from .scan import scan_enabled, with_prefix_sums
-
     counted = with_token_counts(segments, counter)
-    if doc_col is None and scan_enabled(segments):
-        scanned = with_prefix_sums(counted, "seg_id", {"_cum_prev": "n_tokens"})
-        return scanned.withColumn(
-            "chunk_id",
-            F.floor(F.col("_cum_prev") / F.lit(max_tokens_per_chunk)),
-        ).drop("_cum_prev")
     w = Window.partitionBy(*_part(doc_col)).orderBy("seg_id")
     cum_prev = F.coalesce(
         F.sum("n_tokens").over(w.rowsBetween(Window.unboundedPreceding, -1)),

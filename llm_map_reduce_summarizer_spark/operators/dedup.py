@@ -12,9 +12,6 @@ Scale design (100 TB):
   buckets (sig agreement on any band), then true Jaccard verifies just
   those pairs. Shuffles: one explode+agg for signatures, one bucket
   join, one verify join restricted to candidates.
-* SimHash: near-exact dedup for boilerplate — 64-bit fingerprint banded
-  into 4x16-bit words; candidates only from exact band matches
-  (lossless for Hamming <= 3), Hamming verified on candidates only.
 """
 
 from __future__ import annotations
@@ -27,7 +24,6 @@ from ..functions.hashing import (
     minhash_aggs,
     shingle_key,
     shingles_3gram,
-    simhash64_word_aggs,
     words,
 )
 from ..functions.text import quantize
@@ -218,17 +214,6 @@ def minhash_signatures(shingles: DataFrame, id_col: str = "doc_id") -> DataFrame
     return shingles.groupBy(id_col).agg(*minhash_aggs("s"))
 
 
-def band_bucket_rows(shingles: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(id, bk, bv) band-bucket rows from a (capped) shingle table —
-    the LSH index rows a document publishes (corpus side) or probes
-    (incremental-ingest side)."""
-    sigs = minhash_signatures(shingles, id_col).select(id_col, *band_hashes())
-    return sigs.selectExpr(
-        id_col,
-        "stack(4, 0, band0, 1, band1, 2, band2, 3, band3) AS (bk, bv)",
-    )
-
-
 def band_bucket_rows_sets(sets: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, bk, bv) band-bucket rows derived NARROWLY from a set-table
     row that already carries the ``minhash_aggs`` signature columns
@@ -249,9 +234,9 @@ def jaccard_verify_sets(
     """Exact Jaccard on candidate pairs via per-doc shingle-set ARRAYS:
     two doc-keyed joins attach each side's array, ``array_intersect``
     (exact — the arrays are distinct 60-bit keys) gives |A ∩ B|, sizes
-    come free from the arrays. Same integers, same quantize as
-    :func:`jaccard_verify`; the exploded (id, s)-keyed verify join —
-    Σ|candidate doc| shuffle rows — is replaced by |candidates| +
+    come free from the arrays. Same integers, same quantize as the
+    exploded (id, s)-keyed join of :func:`jaccard_pairs`; its
+    Σ|candidate doc| shuffle rows are replaced by |candidates| +
     2·|docs| array rows. Requires ``threshold > 0`` (a no-overlap pair
     never appears in the exploded formulation; here it would surface
     with jaccard 0, so the filter must drop it)."""
@@ -273,42 +258,6 @@ def jaccard_verify_sets(
                 / (F.size("sa") + F.size("sb") - F.col("c")),
                 4,
             ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("da", "db", "jaccard")
-    )
-
-
-def jaccard_verify(
-    shingles: DataFrame,
-    candidates: DataFrame,
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Exact Jaccard restricted to a candidate pair set.
-
-    Intersections are computed only for candidate pairs (join candidates
-    -> left shingles -> match right shingles), so the cost is
-    sum over candidates of |A| — NOT the full shingle self-join. This is
-    what makes LSH a pruning step rather than a decoration.
-    """
-    sizes = shingles.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
-    a = shingles.select(F.col(id_col).alias("da"), "s")
-    b = shingles.select(F.col(id_col).alias("db"), "s")
-    common = (
-        candidates.join(a, "da")
-        .join(b, ["db", "s"])
-        .groupBy("da", "db")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    return (
-        common.join(
-            sizes.select(F.col(id_col).alias("da"), F.col("n").alias("na")), "da"
-        )
-        .join(sizes.select(F.col(id_col).alias("db"), F.col("n").alias("nb")), "db")
-        .withColumn(
-            "jaccard",
-            quantize(F.col("c") / (F.col("na") + F.col("nb") - F.col("c")), 4),
         )
         .filter(F.col("jaccard") >= threshold)
         .select("da", "db", "jaccard")
@@ -363,77 +312,6 @@ def minhash_lsh_pairs(
         .distinct()
     )
     return jaccard_verify_sets(sets, candidates, id_col, threshold)
-
-
-def incremental_dedup_verdicts(
-    batch: DataFrame,
-    existing: DataFrame,
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-    df_cap: int | None = 100,
-) -> DataFrame:
-    """Continual-ingest dedup core: verdict per batch doc against the
-    existing corpus — ``dup_exact`` (normalized digest already
-    present), ``dup_near`` (verified MinHash near-dup at ``threshold``),
-    else ``keep``.
-
-    Scale: the exact tier is a digest semi-join (text never shuffles);
-    the near tier bands ONLY batch x existing (the batch's band
-    buckets probe the existing index — in production the existing
-    side's signatures are precomputed and stored), so compare volume
-    is |batch| x bucket occupancy, never corpus x corpus. Jaccard
-    verify runs on candidates only. The df cap is computed over
-    batch+existing, matching the corpus LSH path's stop-shingle
-    semantics.
-    """
-    exact_hit = (
-        fingerprint(batch)
-        .join(fingerprint(existing).select("fp"), "fp", "left_semi")
-        .select(id_col)
-        .withColumn("is_exact", F.lit(True))
-    )
-
-    docs = batch.select(id_col, "text").unionByName(
-        existing.select(id_col, "text")
-    )
-    sh = doc_shingles(docs, id_col, keyed=True)
-    if df_cap is not None:
-        # raw table read twice before the cap (df agg + anti-join):
-        # lazy checkpoint, fused into the eager capped-table
-        # materialize below (see minhash_lsh_pairs)
-        sh = drop_stop_shingles(
-            sh.transform(materialize_lazy), df_cap, id_col, lazy=True
-        )
-    sh = sh.transform(materialize)
-    bands = band_bucket_rows(sh, id_col)
-    bb = bands.join(batch.select(id_col), id_col, "left_semi")
-    be = bands.join(existing.select(id_col), id_col, "left_semi")
-    candidates = (
-        bb.select(F.col(id_col).alias("da"), "bk", "bv")
-        .join(be.select(F.col(id_col).alias("db"), "bk", "bv"), ["bk", "bv"])
-        .select("da", "db")
-        .distinct()
-    )
-    near_hit = (
-        jaccard_verify(sh, candidates, id_col, threshold)
-        .select(F.col("da").alias(id_col))
-        .distinct()
-        .withColumn("is_near", F.lit(True))
-    )
-
-    return (
-        batch.select(id_col, "lang")
-        .join(exact_hit, id_col, "left")
-        .join(near_hit, id_col, "left")
-        .select(
-            id_col,
-            "lang",
-            F.when(F.col("is_exact"), F.lit("dup_exact"))
-            .when(F.col("is_near"), F.lit("dup_near"))
-            .otherwise(F.lit("keep"))
-            .alias("verdict"),
-        )
-    )
 
 
 # Edge-count bound for the driver-side union-find fast path in
@@ -675,64 +553,3 @@ def connected_components(
     return labels.select("id", F.col("lbl").alias("component"))
 
 
-def simhash_fingerprints(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """64-bit SimHash per doc as four 16-bit words ``sim0..sim3``."""
-    toks = docs.select(
-        F.col(id_col), F.explode(words(F.col("text"))).alias("t")
-    )
-    return toks.groupBy(id_col).agg(*simhash64_word_aggs("t"))
-
-
-def simhash_pairs(
-    docs: DataFrame, id_col: str = "doc_id", max_hamming: int = 3
-) -> DataFrame:
-    """Hamming <= max_hamming pairs over 64-bit SimHash via 4x16-bit
-    band tables.
-
-    Candidates come only from an exact match on one of the four 16-bit
-    words — pigeonhole makes that lossless for max_hamming <= 3 over 64
-    bits (4 bands can miss a pair only when all 4 differ, i.e. Hamming
-    >= 4); larger bounds would silently drop true pairs, so they are
-    rejected. The join key is (band index, word value), so bucket
-    population is bounded by real near-duplicate density, not by a
-    saturating fingerprint space; no O(bucket^2) scan over unrelated
-    docs.
-    """
-    if not 0 <= max_hamming <= 3:
-        raise ValueError(
-            f"max_hamming={max_hamming}: the 4x16-bit banding is only "
-            "lossless for 0 <= max_hamming <= 3; a larger bound needs "
-            "more bands"
-        )
-    fp = simhash_fingerprints(docs, id_col)
-    sims = [f"sim{k}" for k in range(4)]
-    bands = fp.selectExpr(
-        id_col,
-        *sims,
-        "stack(4, 0, sim0, 1, sim1, 2, sim2, 3, sim3) AS (bk, bv)",
-    )
-    a = bands.select(
-        F.col(id_col).alias("da"),
-        *[F.col(s).alias(f"sa{k}") for k, s in enumerate(sims)],
-        "bk",
-        "bv",
-    )
-    b = bands.select(
-        F.col(id_col).alias("db"),
-        *[F.col(s).alias(f"sb{k}") for k, s in enumerate(sims)],
-        "bk",
-        "bv",
-    )
-    hamming = sum(
-        F.bit_count(F.col(f"sa{k}").bitwiseXOR(F.col(f"sb{k}")))
-        for k in range(4)
-    )
-    return (
-        a.join(b, ["bk", "bv"])
-        .filter(F.col("da") < F.col("db"))
-        .select("da", "db", *[f"sa{k}" for k in range(4)],
-                *[f"sb{k}" for k in range(4)])
-        .distinct()  # a close pair can agree on >1 band
-        .withColumn("hamming", hamming.cast("long"))
-        .filter(F.col("hamming") <= max_hamming)
-    )

@@ -204,38 +204,3 @@ def payload_byte_features(
     return docs.select(id_col, payload_col).mapInPandas(_feat, schema=schema)
 
 
-def payload_phash(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    n_bins: int = 16,
-) -> DataFrame:
-    """Perceptual-style 16-bit hash over binary payloads: bit b is set
-    iff the byte LOW-nibble-b count exceeds the payload's own median
-    bin count (rank-relative bits, the aHash/pHash thresholding idiom
-    — an absolute threshold would collapse every same-encoding
-    payload onto one code). Near-identical payloads flip few bits, so
-    Hamming-adjacent codes are near-dup candidates — the codec-free
-    stand-in for an image pHash, with the same multi-probe
-    exact-match join shape.
-
-    Scale: one Arrow-batched scan, numpy bincount per payload, one
-    integer code per doc — narrow map, no shuffle.
-    """
-
-    def _hash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        weights = 1 << np.arange(n_bins, dtype=np.int64)
-        for pdf in batches:
-            ids, codes = [], []
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                arr = np.frombuffer(bytes(p), dtype=np.uint8)
-                hist = np.bincount(arr & 15, minlength=n_bins)[:n_bins]
-                med = int(np.sort(hist)[n_bins // 2])  # upper median
-                bits = hist > med
-                ids.append(int(i))
-                codes.append(int((weights * bits).sum()))
-            yield pd.DataFrame({"doc_id": ids, "phash": codes})
-
-    return docs.select(id_col, payload_col).mapInPandas(
-        _hash, schema="doc_id long, phash long"
-    )

@@ -453,16 +453,14 @@ def embedding_neardup_blocked(
     )
 
 
-# The broadcast-closure operators (cosine_topk_blocked /
-# cosine_screen_broadcast) hold their query/delta side as a
-# driver-side numpy matrix and score one (arrow_batch x side) dgemm
-# per corpus batch. Their contract is "the closure side is
-# broadcast-SMALL"; above this many rows they RAISE (same enforced
-# discipline as EXACT_COSINE_CONF — the r9 100x sweep caught
-# knn_graph_recall passing the whole corpus as the query set and
-# emb_dedup_incremental screening a half-corpus delta). Fetched via
-# limit(cap+1), so an oversized side is detected WITHOUT collecting
-# it. Override per session via the conf; 0 disables.
+# The broadcast-closure operator (cosine_topk_blocked) holds its
+# query side as a driver-side numpy matrix and scores one
+# (arrow_batch x side) dgemm per corpus batch. Its contract is "the
+# closure side is broadcast-SMALL"; above this many rows it RAISES
+# (same enforced discipline as EXACT_COSINE_CONF — the r9 100x sweep
+# caught a caller passing the whole corpus as the query set).
+# Fetched via limit(cap+1), so an oversized side is detected WITHOUT
+# collecting it. Override per session via the conf; 0 disables.
 BROADCAST_SIDE_MAX_ROWS = 65_536
 BROADCAST_SIDE_CONF = (
     "spark.llm_map_reduce_summarizer.broadcastSideMaxRows"
@@ -1381,283 +1379,3 @@ def cosine_knn_graph(
     )
 
 
-def cosine_screen_broadcast(
-    batch: DataFrame,
-    corpus: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """All (batch_id, corpus_id, cos) hits with cos >= threshold, by
-    broadcasting the BATCH side and scanning the corpus once.
-
-    The continual-ingest screen shape: the delta is small relative to
-    the corpus, so it rides the closure like ``cosine_topk_blocked``'s
-    query matrix — one dgemm per Arrow batch of the corpus scan, zero
-    corpus shuffle, output bounded by the number of above-threshold
-    pairs. The broadcast-small contract is ENFORCED
-    (``BROADCAST_SIDE_CONF``): a delta too big to broadcast raises and
-    points at the banded-LSH self-join (``cosine_knn_graph``), the
-    fallback shape.
-    """
-    import numpy as np
-    import pandas as pd
-
-    qpdf = _broadcast_side_pdf(
-        batch,
-        [id_col, vec_col],
-        "cosine_screen_broadcast's ingest delta",
-        "banded-LSH self-join (cosine_knn_graph) over delta+corpus",
-    )
-    if len(qpdf) == 0:
-        # empty ingest delta -> no matches (must not crash the screen)
-        return corpus.sparkSession.createDataFrame(
-            [], "bid long, match_id long, cos double"
-        )
-    qu = _unit_rows(qpdf[vec_col])
-    qids = qpdf[id_col].to_numpy()
-    bc = corpus.sparkSession.sparkContext.broadcast((qids, qu))
-
-    def _score(batches):
-        q_ids, q_mat = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cu = _unit_rows(pdf[vec_col])
-            cids = pdf[id_col].to_numpy()
-            for j0 in range(0, len(q_ids), _DGEMM_COL_CHUNK):
-                # delta-column chunks bound the sims allocation at
-                # arrow_rows x chunk doubles
-                sims = _quantize_np(
-                    cu @ q_mat[j0 : j0 + _DGEMM_COL_CHUNK].T, inplace=True
-                )
-                ii, jj = np.nonzero(sims >= threshold)
-                yield pd.DataFrame(
-                    {
-                        "bid": q_ids[j0 + jj],
-                        "match_id": cids[ii],
-                        "cos": sims[ii, jj],
-                    }
-                )
-
-    return corpus.select(id_col, vec_col).mapInPandas(
-        _score, schema="bid long, match_id long, cos double"
-    )
-
-
-def cosine_screen_chunked(
-    batch: DataFrame,
-    corpus: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_batch: int | None = None,
-) -> DataFrame:
-    """``cosine_screen_broadcast`` for deltas of ANY size: when the
-    delta fits the broadcast cap it IS the single-scan screen
-    (bit-identical plan and result); above the cap the delta is split
-    into crc32-keyed chunks of at most half the cap each and every
-    chunk screens against the corpus independently — the union is
-    EXACTLY the one-shot hit set (each batch vector's matches are
-    computed against the full corpus regardless of its chunk), so the
-    result is invariant to the chunking. This is the documented
-    fallback the r9 ADVICE flagged as missing: the enforced
-    ``BROADCAST_SIDE_CONF`` contract stops being a dead end for
-    continual-ingest deltas that outgrow one closure.
-
-    Cost: ceil(|delta| / (cap/2)) corpus scans — the classic blocked
-    screen. A delta MANY multiples of the cap should use the banded-
-    LSH self-join (``cosine_knn_graph``) instead, which pays one
-    shuffle rather than k scans; the chunked screen is the exact-
-    semantics middle tier.
-
-    ``n_batch``: caller-supplied delta row-count upper bound (parquet
-    footer metadata); a conservative bound only raises the chunk
-    count — never the result. When absent the operator runs one
-    ``count()`` of the delta.
-
-    Skew handling: the chunk target is cap/2, so crc32 spread keeps
-    chunks comfortably under the cap in the common case — but hash
-    skew (or a delta with few distinct ids) CAN overfill a chunk. A
-    chunk that trips the broadcast cap is re-split in two with a
-    salted key and retried recursively (ADVICE r10), so the function
-    never raises for splittable skew. The one residual raise: a chunk
-    whose rows share so few distinct ids that no key split can get it
-    under the cap (recursion depth-bounded at ``_RESPLIT_MAX_DEPTH``)
-    — then the original cap error propagates with a note, because no
-    id-keyed chunking can screen that delta.
-    """
-    spark = batch.sparkSession
-    cap = int(
-        spark.conf.get(BROADCAST_SIDE_CONF, str(BROADCAST_SIDE_MAX_ROWS))
-    )
-    if n_batch is None:
-        n_batch = batch.count()
-    if cap <= 0 or n_batch <= cap:
-        return cosine_screen_broadcast(
-            batch, corpus, threshold, id_col, vec_col
-        )
-    # chunk target = cap/2: crc32 spread over thousands of rows keeps
-    # every chunk comfortably under the cap, so the per-chunk
-    # _broadcast_side_pdf fetch rarely trips its own guard (and a
-    # skew-overfilled chunk re-splits, see docstring)
-    n_chunks = -(-n_batch // max(cap // 2, 1))
-    out = None
-    for i in range(n_chunks):
-        part = batch.filter(
-            F.crc32(F.col(id_col).cast("string")) % n_chunks == i
-        )
-        hits = _screen_chunk_resplit(
-            part, corpus, threshold, id_col, vec_col, depth=0
-        )
-        out = hits if out is None else out.unionByName(hits)
-    return out
-
-
-_RESPLIT_MAX_DEPTH = 20
-
-
-def _screen_chunk_resplit(
-    part: DataFrame,
-    corpus: DataFrame,
-    threshold: float,
-    id_col: str,
-    vec_col: str,
-    depth: int,
-) -> DataFrame:
-    """One chunk of the chunked screen, with skew recovery: if the
-    broadcast-side cap fires (crc32 skew overfilled this chunk —
-    ``cosine_screen_broadcast`` raises EAGERLY, its delta fetch is a
-    driver-side toPandas), split the chunk in two on a depth-salted
-    key and recurse. Depth-bounded: past ``_RESPLIT_MAX_DEPTH`` the
-    rows evidently share too few distinct ids for any key split to
-    separate them, and the cap error propagates annotated."""
-    try:
-        return cosine_screen_broadcast(
-            part, corpus, threshold, id_col, vec_col
-        )
-    except ValueError as exc:
-        if BROADCAST_SIDE_CONF not in str(exc):
-            raise
-        if depth >= _RESPLIT_MAX_DEPTH:
-            raise ValueError(
-                f"{exc} [cosine_screen_chunked: a chunk stayed above "
-                f"the cap after {depth} salted re-splits — the delta "
-                "has too few distinct ids to chunk by key]"
-            ) from exc
-        salted = F.crc32(
-            F.concat(F.col(id_col).cast("string"), F.lit(f"#{depth}"))
-        )
-        return _screen_chunk_resplit(
-            part.filter(salted % 2 == 0),
-            corpus, threshold, id_col, vec_col, depth + 1,
-        ).unionByName(
-            _screen_chunk_resplit(
-                part.filter(salted % 2 == 1),
-                corpus, threshold, id_col, vec_col, depth + 1,
-            )
-        )
-
-
-def cosine_topk_ivfpq(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    m_sub: int = PQ_M,
-    n_codes: int = PQ_CODES,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF-pruned PQ-ADC top-k — the composition billion-vector
-    indexes actually ship (FAISS's IVFPQ): the coarse quantizer
-    prunes the scan to each query's nprobe lists, and ranking within
-    the surviving lists reads 8 sub-codes per vector, never raw
-    floats.
-
-    In production both artifacts are stored tables (`emb_pq_export`'s
-    codes + the IVF list assignment) partitioned by list id, so a
-    probe touches nprobe/n_centroids of the index; here both derive
-    in the same single corpus scan to keep the operator
-    self-contained. Every double op (sub-distance fold, quantized
-    table entries, subspace-ordered ADC accumulation, argmin/argmax
-    first-hit tie-breaks) matches the SQL twin bit-for-bit.
-    """
-    import numpy as np
-    import pandas as pd
-
-    spark = corpus.sparkSession
-    _, cmat = pq_codebook(corpus, n_codes, id_col, vec_col)
-    dim = cmat.shape[1]
-    sub = dim // m_sub
-    cm = cmat.reshape(n_codes, m_sub, sub)
-    ivf_ids, ivf_mat = centroid_matrix(corpus, n_centroids, id_col, vec_col)
-
-    qpdf = queries.select(id_col, vec_col).toPandas()
-    if len(qpdf) == 0:
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, adc double, rk long"
-        )
-    qu = _unit_rows(qpdf[vec_col])
-    qids = qpdf[id_col].to_numpy()
-    qm = qu.reshape(len(qids), m_sub, sub)
-    qd = np.empty((len(qids), m_sub, n_codes))
-    for m in range(m_sub):
-        qd[:, m, :] = _quantize_np(
-            ((qm[:, m, None, :] - cm[None, :, m, :]) ** 2).sum(-1)
-        )
-    # probed lists per query: quantized cosine DESC, centroid id ASC
-    qsims = _quantize_np(qu @ ivf_mat.T)
-    probed = np.zeros((len(qids), len(ivf_ids)), dtype=bool)
-    for i in range(len(qids)):
-        order = np.lexsort((ivf_ids, -qsims[i]))[:nprobe]
-        probed[i, order] = True
-    bc = spark.sparkContext.broadcast((qids, qd, cm, ivf_mat, probed))
-
-    def _score(batches):
-        q_ids, q_tab, cb, c_mat, prob = bc.value
-        n_q = len(q_ids)
-        for pdf in batches:
-            cu = _unit_rows(pdf[vec_col])
-            cids = pdf[id_col].to_numpy()
-            # list assignment: first max = smallest centroid id,
-            # matching the SQL row_number tie break
-            bpos = _quantize_np(cu @ c_mat.T).argmax(axis=1)
-            vm = cu.reshape(len(cids), m_sub, sub)
-            adc = np.zeros((len(cids), n_q))
-            for m in range(m_sub):
-                dm = _quantize_np(
-                    ((vm[:, m, None, :] - cb[None, :, m, :]) ** 2).sum(-1)
-                )
-                codes = np.argmin(dm, axis=1)  # first min = smallest cid
-                adc += q_tab[:, m, codes].T
-            adc = _quantize_np(adc)
-            adc[cids[:, None] == q_ids[None, :]] = np.inf  # self-match
-            adc[~prob[:, bpos].T] = np.inf  # IVF prune: unprobed lists
-            out_q, out_n, out_d = [], [], []
-            for j in range(n_q):
-                col = adc[:, j]
-                if len(col) > k:
-                    kth = np.partition(col, k - 1)[k - 1]
-                    keep = np.nonzero((col <= kth) & (col < np.inf))[0]
-                else:
-                    keep = np.nonzero(col < np.inf)[0]
-                out_q.extend([q_ids[j]] * len(keep))
-                out_n.extend(cids[keep])
-                out_d.extend(col[keep])
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "adc": out_d}
-            )
-
-    candidates = corpus.select(id_col, vec_col).mapInPandas(
-        _score, schema="query_id long, neighbor_id long, adc double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc").asc(), F.col("neighbor_id")
-    )
-    return (
-        candidates.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "adc", "rk")
-    )

@@ -23,7 +23,6 @@ from ..functions.hashing import (
     shuffle_sort_key,
     sql_band_hashes,
     sql_minhash_aggs,
-    sql_simhash64_words,
     words,
 )
 from ..functions.text import (
@@ -47,9 +46,7 @@ from ..functions.vectors import (
     sql_sign_bucket_dynamic,
     sql_unit_cte,
 )
-from ..operators.grouped import grouped_map_batched
 from ..operators.persist import materialize
-from ..operators.profile import profile_oracle_sql
 from ..operators.dedup import (
     connected_components,
     exact_dedup,
@@ -57,7 +54,6 @@ from ..operators.dedup import (
     fingerprint,
     jaccard_pairs,
     minhash_lsh_pairs,
-    simhash_pairs,
 )
 from ..operators.similarity import (
     PQ_CODES,
@@ -327,9 +323,8 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end LSH recall audit: the MinHash-LSH pair set (banded
     candidates + df-capped shingles, verified at τ=0.5) measured
     against the EXACT all-pairs Jaccard set at the same τ — what the
-    banding + stop-shingle cap actually MISS, which the per-pair
-    estimator check (`dedup_minhash_est_check`, candidates only) is
-    structurally blind to. The 38d S-curve predicts this recall;
+    banding + stop-shingle cap actually MISS, which a per-pair
+    estimator check (candidates only) is structurally blind to. The 38d S-curve predicts this recall;
     here it is measured.
 
     Scale: the exact side is the verification-set tool (documented —
@@ -413,10 +408,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         threshold=MINHASH_THRESHOLD,
         df_cap=MINHASH_DF_CAP,
     )
-
-
-def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return simhash_pairs(_docs(spark, sf_dir))
 
 
 def emb_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -627,34 +618,10 @@ def emb_pq_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pq_encode(_embs(spark, sf_dir))
 
 
-IVFPQ_NPROBE = 4
-
-
-def knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVFPQ ANN — the composition billion-vector indexes ship: the
-    IVF coarse quantizer prunes each query's scan to its nprobe lists,
-    and ranking within the surviving lists is PQ asymmetric distance
-    over 8 sub-codes (operators/similarity.py cosine_topk_ivfpq).
-    nprobe=4 matches `knn_ivf_trained`'s setting for the isotropic
-    synthetic embeddings (the adversarial case for IVF recall).
-
-    Scale: a probe reads nprobe/n_centroids of a code table that is
-    32 bits/vector — both pruning ratios compound, which is why this
-    shape serves billion-vector corpora.
-    """
-    from ..operators.similarity import cosine_topk_ivfpq
-
-    e = _embs(spark, sf_dir)
-    q = e.filter(F.col("vec_id") < N_QUERY_VECS)
-    return cosine_topk_ivfpq(
-        q, e, k=KNN_K, n_centroids=IVF_CENTROIDS, nprobe=IVFPQ_NPROBE
-    )
-
-
 def emb_ivf_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The stored IVF list-assignment table: per-vector coarse-list id
     — the third stored index artifact (alongside `emb_pq_export`'s
-    codes and `dedup_index_export`'s bands); `knn_ivfpq` probes read
+    codes and `dedup_index_export`'s bands); IVF probes read
     exactly this table, list-partitioned, in production.
 
     Scale: one corpus scan (broadcast d×K centroid matrix, dgemm per
@@ -1319,7 +1286,7 @@ def corpus_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def dedup_index_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The stored near-dup index table: per-doc MinHash LSH band keys
-    — the existing-corpus side that ``corpus_dedup_incremental``
+    — the existing-corpus side that an incremental delta screen
     probes; maintaining it alongside the
     corpus is what makes delta screening O(delta), not O(corpus)."""
     from ..functions.hashing import band_hashes
@@ -2138,79 +2105,6 @@ def corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def corpus_split_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Split-hygiene check #2: χ² independence of (split × lang) —
-    the id-hash split is content-blind, so language mix MUST be
-    statistically identical across train/val/test; a significant χ²
-    means the id space is correlated with content (e.g. ids assigned
-    per-source in ranges) and every per-split metric is confounded.
-    Completes the split-audit pair with `corpus_split_leakage`
-    (duplicate-content straddles).
-
-    Scale: one (split, lang) partial agg (cells = 3 × languages);
-    margins broadcast; exact integer counts → closed-form χ², the
-    `corpus_chi2_independence` shape on the split axis.
-    """
-    d = _docs(spark, sf_dir)
-    cells = d.select(split_col().alias("split"), "lang").groupBy(
-        "split", "lang"
-    ).agg(F.count(F.lit(1)).cast("long").alias("n"))
-    rm = cells.groupBy(F.col("split").alias("s_m")).agg(
-        F.sum("n").cast("long").alias("row_n")
-    )
-    cm = cells.groupBy(F.col("lang").alias("l_m")).agg(
-        F.sum("n").cast("long").alias("col_n")
-    )
-    tot = cells.agg(F.sum("n").cast("long").alias("total"))
-    j = (
-        cells.join(F.broadcast(rm), F.col("split") == F.col("s_m"))
-        .join(F.broadcast(cm), F.col("lang") == F.col("l_m"))
-        .crossJoin(F.broadcast(tot))
-    )
-    exp = (
-        F.col("row_n").cast("double")
-        * F.col("col_n").cast("double")
-        / F.col("total")
-    )
-    dev = (F.col("n").cast("double") - exp)
-    per = j.select(
-        (dev * dev / exp).alias("term"),
-        "split",
-        "lang",
-    )
-    counts = cells.agg(
-        F.count_distinct("split").cast("long").alias("n_splits"),
-        F.count_distinct("lang").cast("long").alias("n_langs"),
-    )
-    out = per.agg(F.sum("term").alias("chi2_raw")).crossJoin(
-        F.broadcast(counts)
-    )
-    dof = (F.col("n_splits") - 1) * (F.col("n_langs") - 1)
-    # chi2 95% critical values for dof 1..12 (both engines pick from
-    # the same literal table, so the verdict is parity-exact)
-    crit = F.element_at(
-        F.array(
-            *[
-                F.lit(v)
-                for v in (
-                    3.841, 5.991, 7.815, 9.488, 11.070, 12.592,
-                    14.067, 15.507, 16.919, 18.307, 19.675, 21.026,
-                )
-            ]
-        ),
-        F.least(dof, F.lit(12)).cast("int"),
-    )
-    return out.select(
-        "n_splits",
-        "n_langs",
-        dof.cast("long").alias("dof"),
-        quantize(F.col("chi2_raw"), 4).alias("chi2"),
-        F.when(
-            dof >= 1, quantize(F.col("chi2_raw"), 4) > crit
-        ).alias("mix_skewed_95"),
-    )
-
-
 # Target token share per language for the rebalanced training mix.
 MIX_TARGETS = {"en": 0.4, "de": 0.15, "es": 0.15, "fr": 0.15, "zh": 0.15}
 
@@ -2617,53 +2511,6 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", F.col("bin").cast("long").alias("bin"), "share")
 
 
-def multimodal_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual-hash near-dup census for binary payloads: a 16-bit
-    byte-mix signature per payload (`operators/multimodal.py
-    payload_phash`), then per-doc exact-dup count (same code) and
-    near-dup count (Hamming distance exactly 1) via multi-probe
-    exact-match — the third member of the multimodal dedup family
-    (`multimodal_dedup` = exact digest, `multimodal_neardup` =
-    cosine over byte histograms, this one = constant-size code with
-    an index-friendly candidate join).
-
-    Scale: the code census is one natural-key partial agg; the
-    Hamming-1 probe explodes each doc into 16 neighbor keys and joins
-    the (≤65536-row, broadcastable) census — linear in corpus size,
-    never pairwise.
-    """
-    from ..operators.multimodal import payload_phash
-
-    d = _docs(spark, sf_dir).withColumn(
-        "payload", F.encode(F.col("text"), "UTF-8")
-    )
-    codes = payload_phash(d)
-    census = codes.groupBy("phash").agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    )
-    masks = spark.createDataFrame(
-        [(1 << b,) for b in range(16)], "mask long"
-    )
-    probes = codes.crossJoin(F.broadcast(masks)).select(
-        "doc_id", F.col("phash").bitwiseXOR(F.col("mask")).alias("nb")
-    )
-    near = probes.join(
-        F.broadcast(census.withColumnRenamed("phash", "nb")), "nb"
-    ).groupBy("doc_id").agg(F.sum("n").cast("long").alias("near_dups"))
-    return (
-        codes.join(F.broadcast(census), "phash")
-        .join(near, "doc_id", "left")
-        .select(
-            "doc_id",
-            "phash",
-            (F.col("n") - 1).cast("long").alias("exact_dups"),
-            F.coalesce(F.col("near_dups"), F.lit(0))
-            .cast("long")
-            .alias("near_dups"),
-        )
-    )
-
-
 VAD_FRAME_BYTES = 160  # 10 ms at 16 kHz / 8-bit — the classic frame
 
 
@@ -2961,36 +2808,6 @@ def quality_ensemble_of(d: DataFrame) -> DataFrame:
         "mean_surprisal",
         flags.cast("long").alias("n_flags"),
         (flags == 0).alias("keep"),
-    )
-
-
-INCR_BATCH_MOD = 5  # docs with doc_id % 5 == 0 simulate the new ingest
-
-
-def corpus_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Continual-ingest dedup: screen a NEW batch against the EXISTING
-    corpus — the shape a 100 TB pipeline actually runs daily (dedup
-    the crawl delta, never re-pair the whole corpus). Verdict per
-    batch doc: ``dup_exact`` (normalized digest already in the
-    corpus), ``dup_near`` (verified MinHash near-dup of an existing
-    doc at the corpus threshold), else ``keep``.
-
-    Scale: the exact tier is a digest semi-join (batch never shuffles
-    text); the near tier bands ONLY batch x existing (the batch's band
-    buckets probe the existing index — in production the existing
-    side's signatures are precomputed and stored), so compare volume
-    is |batch| x bucket occupancy, not corpus x corpus. Jaccard
-    verify runs on candidates only.
-    """
-    from ..operators.dedup import incremental_dedup_verdicts
-
-    docs = _docs(spark, sf_dir)
-    is_batch = (F.col("doc_id") % INCR_BATCH_MOD) == 0
-    return incremental_dedup_verdicts(
-        docs.filter(is_batch),
-        docs.filter(~is_batch),
-        threshold=MINHASH_THRESHOLD,
-        df_cap=MINHASH_DF_CAP,
     )
 
 
@@ -3307,83 +3124,14 @@ def search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def search_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Retrieval-quality evaluation as an operator: NDCG@10, DCG, and
-    recall of the lexical BM25 ranking against the semantic top-10 as
-    the (binary) relevance set, per query — the offline eval loop a
-    retrieval stack runs after every index or scorer change, here as
-    one declarative query instead of a notebook. Complements
-    `knn_recall_report` (ANN vs exact) by scoring ACROSS retrievers
-    (lexical vs semantic), and `search_rrf` by measuring what the
-    fusion is fusing.
-
-    Scale: both retriever outputs are queries × k rows by
-    construction (each retriever's own scale-shaped plan does the
-    corpus work), so the relevance join and the per-query rollup are
-    broadcast-sized; IDCG folds a ≤k integer sequence per query — no
-    corpus-sized anything past the retrievers.
-    """
-    from ..operators.similarity import cosine_topk_blocked
-
-    e = _embs(spark, sf_dir)
-    q = e.filter(F.col("vec_id") < N_QUERY_VECS)
-    # queries x k rows, materialized once: both the relevance join and
-    # the per-query n_rel rollup read it — without the cut the
-    # blocked-dgemm semantic retriever ran twice
-    rel = cosine_topk_blocked(q, e, k=BM25_K).select(
-        "query_id",
-        F.col("neighbor_id").alias("doc_id"),
-        F.lit(1).alias("hit"),
-    ).transform(materialize)
-    lex = _bm25_scored(spark, sf_dir, BM25_K).select(
-        "query_id", "doc_id", "rk"
-    )
-    joined = lex.join(F.broadcast(rel), ["query_id", "doc_id"], "left")
-    per = joined.groupBy("query_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_ranked"),
-        F.sum(F.coalesce(F.col("hit"), F.lit(0)))
-        .cast("long")
-        .alias("n_hits"),
-        F.sum(
-            F.when(
-                F.col("hit").isNotNull(),
-                F.lit(1.0) / F.log2(F.col("rk") + 1),
-            ).otherwise(0.0)
-        ).alias("dcg_raw"),
-    )
-    reln = rel.groupBy("query_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_rel")
-    )
-    out = per.join(F.broadcast(reln), "query_id")
-    idcg = F.expr(
-        f"aggregate(sequence(1, int(least(n_rel, {BM25_K}))),"
-        " cast(0.0 as double), (acc, i) -> acc + 1.0 / log2(i + 1))"
-    )
-    return out.select(
-        "query_id",
-        "n_rel",
-        "n_hits",
-        quantize(F.col("dcg_raw"), 6).alias("dcg"),
-        F.when(F.col("n_rel") > 0, quantize(F.col("dcg_raw") / idcg, 6)).alias(
-            "ndcg"
-        ),
-        F.when(
-            F.col("n_rel") > 0,
-            quantize(
-                F.col("n_hits").cast("double") / F.col("n_rel"), 6
-            ),
-        ).alias("recall"),
-    )
-
-
 def search_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mean reciprocal rank of the BM25 ranking against the semantic
-    relevance set — the third leg of the retrieval-eval triple
-    (`search_ndcg` grades the whole ranking, recall the coverage;
-    MRR grades TIME-TO-FIRST-HIT, what a user scanning top-down
-    feels), reported per query with the corpus mean alongside.
+    relevance set — a leg of the retrieval-eval suite (`search_map`
+    grades the whole ranking; MRR grades TIME-TO-FIRST-HIT, what a
+    user scanning top-down feels), reported per query with the corpus
+    mean alongside.
 
-    Scale: same queries × k shapes as NDCG — broadcast join, 1-row
+    Scale: same queries × k shapes as MAP — broadcast join, 1-row
     mean broadcast back.
     """
     from ..operators.similarity import cosine_topk_blocked
@@ -3619,132 +3367,6 @@ def langid_eval_from_cells(cells: DataFrame) -> DataFrame:
     )
 
 
-BURROWS_K = 50  # marker-word panel size for the stylometric delta
-
-
-def corpus_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Burrows' Delta between sources (the classic stylometric
-    distance): z-score each source's relative frequency of the
-    corpus's top-``BURROWS_K`` marker words across sources, then
-    Delta(a,b) = mean |z_a − z_b| over the panel — near-zero means
-    two "sources" share a register (template farms, mirrored sites),
-    exactly the provenance signal a mix planner wants before trusting
-    source labels.
-
-    Exactness: frequencies scale to integer parts-per-1e9 (an
-    engine-identical double fold), z-scores reduce to
-    (S·f − Σf)/√(S·Σf² − (Σf)²) over those exact integers and
-    quantize to micro-units before the pairwise fold, so every Delta
-    is a ratio of exact integers. Scale: marker panel = top-K
-    TakeOrderedAndProject; grid = sources × K (domain-bounded,
-    broadcast); the pairwise stage is S²·K over the SOURCE domain,
-    never over documents."""
-    d = _docs(spark, sf_dir)
-    toks = d.select(
-        "source", F.explode(words(F.col("text"))).alias("term")
-    )
-    # sources x vocab bounded, materialized once: source totals, the
-    # marker-panel top-K, and the panel join all read this table, and
-    # composed as plans each re-ran the corpus token explode
-    # (census: 16 parquet scans for this query)
-    st = toks.groupBy("source", "term").agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    ).transform(materialize)
-    stot = st.groupBy("source").agg(
-        F.sum("n").cast("long").alias("tot")
-    )
-    topk = (
-        st.groupBy("term")
-        .agg(F.sum("n").cast("long").alias("c"))
-        .orderBy(F.col("c").desc(), "term")
-        .limit(BURROWS_K)
-        .select(F.col("term").alias("term_k"))
-    )
-    # keys rename on the self-lineage joins (drained-relation rule)
-    ck = st.join(
-        F.broadcast(topk), F.col("term") == F.col("term_k")
-    ).select(
-        F.col("source").alias("src_c"),
-        F.col("term").alias("term_c"),
-        F.col("n").alias("n_c"),
-    )
-    grid = stot.crossJoin(F.broadcast(topk))
-    f9 = F.floor(
-        (
-            F.coalesce(F.col("n_c"), F.lit(0)).cast("double")
-            / F.col("tot")
-        )
-        * 1e9
-    ).cast("long")
-    gj = grid.join(
-        ck,
-        (F.col("source") == F.col("src_c"))
-        & (F.col("term_k") == F.col("term_c")),
-        "left",
-    ).select("source", F.col("term_k").alias("term"), f9.alias("f9"))
-    mt = gj.groupBy(F.col("term").alias("term_m")).agg(
-        F.count(F.lit(1)).cast("long").alias("s_n"),
-        F.sum("f9").cast("decimal(38,0)").alias("sf"),
-        F.sum(
-            F.col("f9").cast("decimal(38,0)") * F.col("f9")
-        ).alias("sff"),
-    )
-    zt = gj.join(
-        F.broadcast(mt), F.col("term") == F.col("term_m")
-    ).select(
-        "source",
-        "term",
-        F.when(
-            (
-                F.col("s_n").cast("decimal(38,0)") * F.col("sff")
-                - F.col("sf") * F.col("sf")
-            ).cast("double")
-            > 0,
-            F.floor(
-                (
-                    (
-                        F.col("s_n").cast("decimal(38,0)")
-                        * F.col("f9").cast("decimal(38,0)")
-                        - F.col("sf")
-                    ).cast("double")
-                    / F.sqrt(
-                        (
-                            F.col("s_n").cast("decimal(38,0)")
-                            * F.col("sff")
-                            - F.col("sf") * F.col("sf")
-                        ).cast("double")
-                    )
-                )
-                * 1e6
-                + 0.5
-            ).cast("long"),
-        )
-        .otherwise(0)
-        .alias("zq"),
-    )
-    zb = zt.select(
-        F.col("source").alias("source_b"),
-        F.col("term").alias("term_b"),
-        F.col("zq").alias("zq_b"),
-    )
-    pairs = zt.join(
-        zb,
-        (F.col("term") == F.col("term_b"))
-        & (F.col("source") < F.col("source_b")),
-    )
-    per = pairs.groupBy(
-        F.col("source").alias("source_a"), "source_b"
-    ).agg(F.sum(F.abs(F.col("zq") - F.col("zq_b"))).cast("long").alias("s"))
-    return per.select(
-        "source_a",
-        "source_b",
-        quantize(
-            F.col("s").cast("double") / F.lit(float(BURROWS_K * 1_000_000)),
-            6,
-        ).alias("delta"),
-    )
-
-
 BPE_TOP = 20  # exported head of the pair-merge census
 
 
@@ -3872,10 +3494,10 @@ assert all(_AP_LCM % i == 0 for i in range(1, BM25_K + 1))
 
 def search_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mean average precision of the BM25 ranking against the
-    semantic relevance set — the rank-weighted coverage grade the
-    retrieval triple (NDCG / MRR / recall) lacks: AP@k integrates
-    precision at every hit position, so burying relevant docs at the
-    tail costs exactly what a user scanning top-down loses. AP's
+    semantic relevance set — the rank-weighted coverage grade MRR
+    lacks: AP@k integrates precision at every hit position, so burying
+    relevant docs at the tail costs exactly what a user scanning
+    top-down loses. AP's
     harmonic terms fold as exact integers scaled by lcm(1..k), so
     every reported double is bit-identical across engines.
 
@@ -4201,70 +3823,6 @@ def dedup_injection_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-RECALL_AUDIT_CAP = 16_384
-RECALL_SAMPLE_DENOM = 1 << 20
-
-
-def knn_graph_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-wide k-NN-graph recall, hash-verified: the banded-LSH
-    approximate graph (`knn_graph`) scored against the exact top-k
-    edge set — the round-5 scale fix's quality, promoted from a unit
-    test to a driver-checked catalog artifact. One row: exact edges,
-    hits, recall. NOTE the expected magnitude: this corpus's
-    embeddings are isotropic random vectors — sign-LSH's adversarial
-    case (true top-3 cos ≈ 0.4 → per-plane agreement ≈ 0.63 → ≈ 10%
-    for the 4-band union; measured 6.7-7.5% here, floor pinned in
-    tests/test_operators.py). Clustered real embeddings score far
-    higher at the same setting — the entry exists precisely so that
-    number is MEASURED per corpus, not assumed.
-
-    Scale: the exact side audits a SAMPLED query slice above
-    ``RECALL_AUDIT_CAP`` vectors — the same md5-hash keep set the
-    kmeans trainer uses (``keep = DENOM * CAP // n``, identical
-    integer arithmetic in the SQL twin; at or under the cap the
-    filter passes every row, so gate-scale results are bit-identical
-    to the full audit). That keeps the blocked-dgemm query closure
-    under the enforced ``BROADCAST_SIDE_CONF`` at ANY corpus size —
-    the r9 100x sweep caught the old path passing the whole corpus as
-    the query set. Recall over a 16k-query hash sample estimates
-    corpus recall to ±1% — the audit's purpose — while the
-    approximate side and the hit join still touch only k·n edge rows.
-    """
-    e = _embs(spark, sf_dir)
-    n_vecs = e.count()
-    keep = (RECALL_SAMPLE_DENOM * RECALL_AUDIT_CAP) // max(n_vecs, 1)
-    q = e
-    if keep < RECALL_SAMPLE_DENOM:
-        q = e.filter(
-            shingle_key(F.col("vec_id").cast("string"))
-            % RECALL_SAMPLE_DENOM
-            < keep
-        )
-    exact = cosine_topk_blocked(q, e, k=KNN_GRAPH_K).select(
-        F.col("query_id").alias("da"),
-        F.col("neighbor_id").alias("db"),
-    )
-    from ..operators.similarity import cosine_knn_graph
-
-    approx = cosine_knn_graph(e, k=KNN_GRAPH_K).select("da", "db")
-    hits = exact.join(approx, ["da", "db"])
-    n_exact = exact.agg(
-        F.count(F.lit(1)).cast("long").alias("n_exact")
-    )
-    return (
-        n_exact.crossJoin(
-            hits.agg(F.count(F.lit(1)).cast("long").alias("n_hit"))
-        )
-        .select(
-            "n_exact",
-            "n_hit",
-            quantize(
-                F.col("n_hit").cast("double") / F.col("n_exact"), 6
-            ).alias("recall"),
-        )
-    )
-
-
 def dedup_method_agreement(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -4398,106 +3956,6 @@ def corpus_shard_rendezvous_balance(
     )
 
 
-SUMMARY_K_SEGMENTS = 2
-SUMMARY_SEG_TOKENS = 8
-
-
-def doc_extractive_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic EXTRACTIVE summarization — the LLM-free analogue
-    of the reference's map-summarize step (reference main.py drives
-    an LLM per chunk; this op is the classic Luhn-family fallback a
-    pipeline runs when no model is available): segment each doc into
-    fixed 8-token windows (the segmentation any summarizer needs for
-    unpunctuated/ASR-style text — this corpus has no sentence
-    punctuation), score every segment by its total corpus-LM
-    surprisal (informative segments carry rare tokens), keep the
-    top-k per doc, and emit them in document order. Per-token
-    surprisal is quantized BEFORE the segment sum (the BM25
-    discipline), so ranking replays exactly in the SQL twin.
-
-    Scale: the corpus LM is the `doc_unigram_surprisal` pair of
-    natural-key aggs; segments/tokens are narrow explodes off the
-    scan; the top-k is a per-doc window — every shuffle keys on
-    doc_id or term, nothing global.
-    """
-    from pyspark.sql.window import Window
-
-    from ..functions.hashing import words as _words
-
-    d = _docs(spark, sf_dir).select(
-        "doc_id", _words(F.col("text")).alias("w")
-    )
-    toks = d.select(
-        "doc_id", F.posexplode(F.col("w")).alias("pos", "term")
-    )
-    cf = toks.groupBy("term").agg(F.count(F.lit(1)).alias("ctf"))
-    tot = cf.agg(F.sum("ctf").cast("double").alias("corpus_tokens"))
-    seg_tok = toks.withColumn(
-        "seg", (F.col("pos") / SUMMARY_SEG_TOKENS).cast("long")
-    )
-    w_tok = (
-        seg_tok.join(cf, "term")
-        .crossJoin(F.broadcast(tot))
-        .withColumn(
-            "srp",
-            quantize(
-                -F.log(F.col("ctf").cast("double") / F.col("corpus_tokens")),
-                6,
-            ),
-        )
-    )
-    scored = w_tok.groupBy("doc_id", "seg").agg(
-        quantize(F.sum("srp"), 6).alias("score")
-    )
-    rk = Window.partitionBy("doc_id").orderBy(
-        F.col("score").desc(), F.col("seg")
-    )
-    top = (
-        scored.withColumn("rk", F.row_number().over(rk))
-        .filter(F.col("rk") <= SUMMARY_K_SEGMENTS)
-        .join(d, "doc_id")
-        .select(
-            "doc_id",
-            "seg",
-            F.array_join(
-                F.slice(
-                    F.col("w"),
-                    (F.col("seg") * SUMMARY_SEG_TOKENS + 1).cast("int"),
-                    SUMMARY_SEG_TOKENS,
-                ),
-                " ",
-            ).alias("passage"),
-        )
-    )
-    summarized = top.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_kept"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("seg", "passage"))),
-                lambda s: s.passage,
-            ),
-            " ",
-        ).alias("summary"),
-    )
-    n_segs = d.select(
-        "doc_id",
-        F.ceil(F.size("w") / F.lit(SUMMARY_SEG_TOKENS))
-        .cast("long")
-        .alias("n_segments"),
-    )
-    return (
-        n_segs.join(summarized, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_segments",
-            F.coalesce(F.col("n_kept"), F.lit(0))
-            .cast("long")
-            .alias("n_kept"),
-            F.coalesce(F.col("summary"), F.lit("")).alias("summary"),
-        )
-    )
-
-
 def corpus_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup applied to the DOCUMENT corpus: the cosine-threshold
     near-dup components over the embedding column (the
@@ -4597,7 +4055,7 @@ _RBO_EXT_W = round(RBO_P**RBO_DEPTH / RBO_DEPTH * _RBO_SCALE)
 def search_rbo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rank-biased overlap (Webber et al.) between the semantic and
     lexical rankings, per query — the fourth leg of the retrieval-eval
-    suite: NDCG/MRR grade one ranking against a relevance set, RBO
+    suite: MAP/MRR grade one ranking against a relevance set, RBO
     grades two RANKINGS against each other (top-weighted, p=0.9), i.e.
     "how much is the fusion in `search_rrf` actually fusing?". Emits
     the lower bound (RBO_min over the observed depth) and the
@@ -4845,50 +4303,6 @@ def emb_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             "label",
             cos.alias("cos_centroid"),
             (cos < OUTLIER_COS).alias("outlier"),
-        )
-    )
-
-
-def emb_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Continual-ingest SEMANTIC dedup: screen a new embedding batch
-    against the EXISTING corpus (verdict dup_near / keep per batch
-    vector, with the best existing match) — the cosine twin of
-    ``corpus_dedup_incremental``, and the daily shape at 100 TB:
-    compare the delta against the corpus, never re-pair the corpus.
-
-    Scale: a delta within the enforced broadcast cap
-    (``BROADCAST_SIDE_CONF``) rides the closure — the existing corpus
-    is scanned ONCE with a dgemm per Arrow batch and never shuffles;
-    the only exchange is the above-threshold hit list (bounded by
-    near-dup density). A delta ABOVE the cap is screened in crc32-
-    keyed chunks of at most half the cap (``cosine_screen_chunked``),
-    one corpus scan per chunk — result-invariant, so this entry keeps
-    its frozen oracle at every scale instead of contract-raising (the
-    r9 100x sweep caught the old single-closure path raising on a
-    half-corpus delta). Deltas MANY multiples of the cap should use
-    the banded-LSH self-join (`knn_graph`'s shape).
-    """
-    from ..operators.similarity import cosine_screen_chunked
-
-    e = _embs(spark, sf_dir)
-    ex = e.filter(F.col("vec_id") % 2 == 0)
-    bt = e.filter(F.col("vec_id") % 2 == 1)
-    hits = cosine_screen_chunked(bt, ex, NEARDUP_COS)
-    best = hits.groupBy(F.col("bid").alias("vec_id")).agg(
-        F.max(
-            F.struct(F.col("cos"), (-F.col("match_id")).alias("neg"))
-        ).alias("m")
-    )
-    return (
-        bt.select("vec_id")
-        .join(best, "vec_id", "left")
-        .select(
-            "vec_id",
-            F.when(F.col("m").isNotNull(), F.lit("dup_near"))
-            .otherwise(F.lit("keep"))
-            .alias("verdict"),
-            (-F.col("m.neg")).cast("long").alias("match_id"),
-            F.col("m.cos").alias("cos"),
         )
     )
 
@@ -5373,81 +4787,6 @@ def corpus_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def dedup_minhash_est_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-estimator certification: for every LSH candidate pair,
-    the signature-overlap estimate (matching slots / 16) NEXT TO the
-    exact Jaccard it estimates, with the absolute error and the
-    3-sigma binomial-bound flag — the value-level audit of the sketch
-    the whole near-dup pipeline trusts (the sketch-tier-certification
-    pattern of `events_dau_approx` / `emb_pca_check`). Both engines
-    compute estimate AND exact from scratch, so this is full parity,
-    not just a bound assertion.
-
-    Scale: everything reuses the LSH pipeline's bounded shapes — the
-    signature table is 16 ints per doc, candidates come from band
-    buckets (never all pairs), and the exact Jaccard runs only on
-    candidates.
-    """
-    from ..functions.hashing import N_MINHASH, band_hashes
-    from ..operators.dedup import (
-        drop_stop_shingles,
-        jaccard_verify,
-        minhash_signatures,
-    )
-
-    sh = doc_shingles(_docs(spark, sf_dir), keyed=True)
-    sh = drop_stop_shingles(
-        sh.transform(materialize), MINHASH_DF_CAP
-    )
-    sh = sh.transform(materialize)
-    sigs = minhash_signatures(sh).transform(materialize)
-    bands = sigs.select("doc_id", *band_hashes()).selectExpr(
-        "doc_id",
-        "stack(4, 0, band0, 1, band1, 2, band2, 3, band3) AS (bk, bv)",
-    )
-    a = bands.select(F.col("doc_id").alias("da"), "bk", "bv")
-    b = bands.select(F.col("doc_id").alias("db"), "bk", "bv")
-    cand = (
-        a.join(b, ["bk", "bv"])
-        .filter(F.col("da") < F.col("db"))
-        .select("da", "db")
-        .distinct()
-    )
-    siga = sigs.select(
-        F.col("doc_id").alias("da"),
-        *[F.col(f"h{j}").alias(f"a{j}") for j in range(N_MINHASH)],
-    )
-    sigb = sigs.select(
-        F.col("doc_id").alias("db"),
-        *[F.col(f"h{j}").alias(f"b{j}") for j in range(N_MINHASH)],
-    )
-    matches = sum(
-        (F.col(f"a{j}") == F.col(f"b{j}")).cast("long")
-        for j in range(N_MINHASH)
-    )
-    est = (
-        cand.join(siga, "da")
-        .join(sigb, "db")
-        .select("da", "db", matches.alias("est_matches"))
-    )
-    exact = jaccard_verify(sh, cand, threshold=0.0)
-    ej = F.col("est_matches").cast("double") / N_MINHASH
-    sd3 = 3 * F.sqrt(
-        F.col("jaccard") * (1 - F.col("jaccard")) / N_MINHASH
-    )
-    return est.join(exact, ["da", "db"]).select(
-        "da",
-        "db",
-        "est_matches",
-        quantize(ej, 4).alias("est_jaccard"),
-        "jaccard",
-        quantize(F.abs(ej - F.col("jaccard")), 4).alias("abs_err"),
-        (F.abs(ej - F.col("jaccard")) <= sd3 + 1.0 / 32).alias(
-            "within_3sd"
-        ),
-    )
-
-
 def corpus_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lexical-diversity profile per source: token count, vocabulary
     size, type-token ratio, and hapax share (terms appearing exactly
@@ -5482,29 +4821,6 @@ def corpus_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         quantize(
             F.col("n_hapax").cast("double") / F.col("vocab_size"), 6
         ).alias("hapax_share"),
-    )
-
-
-def docs_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Column-level data-quality profile of the documents table —
-    null floods, cardinality collapse (a lang or source column
-    suddenly reading one value), and length-range excursions, checked
-    BEFORE any downstream curation trusts a new corpus drop. Same
-    generic single-scan wide-agg + stack transpose
-    (`operators/profile.py`).
-    """
-    from pyspark.sql import functions as F
-
-    from ..operators.profile import column_profile
-
-    d = _docs(spark, sf_dir)
-    return column_profile(
-        d,
-        ["doc_id", "text", "lang", "source", "n_chars"],
-        {
-            "doc_id": F.col("doc_id").cast("double"),
-            "n_chars": F.col("n_chars").cast("double"),
-        },
     )
 
 
@@ -5838,58 +5154,6 @@ def corpus_partition_layout_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("part_bytes")
             < F.lit(LAYOUT_TARGET_BYTES // 4)
         ).alias("small_files_risk"),
-    )
-
-
-def corpus_shard_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shard balance QA for the deterministic training shuffle: docs
-    and token mass per shard rolled into a skew report (min/max/CV of
-    shard token loads, max-to-mean ratio) — a skewed shard is a
-    training-loader straggler, so packing QA gates on this before any
-    epoch runs.
-
-    Scale: the shard assignment is the same map-side hash as
-    `corpus_shuffle_shards` (no shuffle to assign); one shard-keyed
-    partial agg (shards-bounded) then a 1-row skew rollup of exact
-    integer sums.
-    """
-    from ..functions.hashing import knuth_shard
-
-    d = _docs(spark, sf_dir).select(
-        knuth_shard(F.col("doc_id"), N_SHARDS).alias("shard"),
-        token_count(F.col("text")).cast("long").alias("n_tokens"),
-    )
-    per = d.groupBy("shard").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("n_tokens").cast("long").alias("shard_tokens"),
-    )
-    n = F.col("n_shards").cast("double")
-    mean = F.col("total_tokens").cast("double") / n
-    var = (
-        F.col("sq").cast("double")
-        - F.col("total_tokens").cast("double") * mean
-    ) / n
-    return per.agg(
-        F.count(F.lit(1)).cast("long").alias("n_shards"),
-        F.sum("n_docs").cast("long").alias("n_docs"),
-        F.sum("shard_tokens").cast("long").alias("total_tokens"),
-        F.min("shard_tokens").cast("long").alias("min_shard_tokens"),
-        F.max("shard_tokens").cast("long").alias("max_shard_tokens"),
-        F.sum(F.col("shard_tokens") * F.col("shard_tokens"))
-        .cast("decimal(38,0)")
-        .alias("sq"),
-    ).select(
-        "n_shards",
-        "n_docs",
-        "total_tokens",
-        "min_shard_tokens",
-        "max_shard_tokens",
-        quantize(F.sqrt(F.greatest(var, F.lit(0.0))) / mean, 6).alias(
-            "load_cv"
-        ),
-        quantize(
-            F.col("max_shard_tokens").cast("double") / mean, 6
-        ).alias("max_to_mean"),
     )
 
 
@@ -6289,8 +5553,8 @@ def corpus_lang_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     unigram distributions — which languages' corpora actually share
     vocabulary mass (low JS between two langs predicts langid
     confusion and cross-lingual contamination; the distributional
-    companion to `corpus_source_overlap`'s set-based Jaccard and the
-    per-source drift of `corpus_source_divergence`).
+    companion to the per-source drift of
+    `corpus_source_divergence`).
 
     Scale: (lang, term) frequencies are one natural-key partial agg;
     the pair join is keyed on term (compare volume Σ langs-per-term²,
@@ -6421,67 +5685,6 @@ def emb_intrinsic_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
         quantize(
             F.count(F.lit(1)) / F.sum("ln_mu"), 3
         ).alias("intrinsic_dim"),
-    )
-
-
-def emb_label_homophily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Label homophily of the kNN graph: the share of neighbor edges
-    connecting SAME-label vectors vs the expectation under label
-    shuffling (Σ p_ℓ²) — the supervised read on embedding quality
-    (lift ≫ 1 means the space separates the labels; lift ≈ 1 means
-    the labels are not encoded and any label-based downstream use of
-    these embeddings is wishful).
-
-    Scale: composes the adaptive-band kNN graph (no new pairwise
-    stage); labels join both edge ends on the vec_id key (dim-table
-    broadcast); observed share and the label marginals are exact
-    integer ratios — one edge agg + one labels-bounded agg.
-    """
-    g = knn_graph(spark, sf_dir)
-    lab = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label"
-    )
-    la = lab.select(
-        F.col("vec_id").alias("da"), F.col("label").alias("label_a")
-    )
-    lb = lab.select(
-        F.col("vec_id").alias("db"), F.col("label").alias("label_b")
-    )
-    edges = g.join(F.broadcast(la), "da").join(F.broadcast(lb), "db")
-    obs = edges.agg(
-        F.count(F.lit(1)).cast("long").alias("n_edges"),
-        F.sum((F.col("label_a") == F.col("label_b")).cast("int"))
-        .cast("long")
-        .alias("n_same"),
-    )
-    marg = lab.groupBy("label").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    tot = marg.agg(F.sum("c").cast("long").alias("n"))
-    exp = (
-        marg.crossJoin(F.broadcast(tot))
-        .agg(
-            quantize(
-                F.sum(
-                    (F.col("c").cast("double") / F.col("n"))
-                    * (F.col("c").cast("double") / F.col("n"))
-                ),
-                9,
-            ).alias("expected_same_share")
-        )
-    )
-    return obs.crossJoin(F.broadcast(exp)).select(
-        "n_edges",
-        "n_same",
-        quantize(
-            F.col("n_same").cast("double") / F.col("n_edges"), 6
-        ).alias("same_label_share"),
-        "expected_same_share",
-        quantize(
-            (F.col("n_same").cast("double") / F.col("n_edges"))
-            / F.col("expected_same_share"),
-            4,
-        ).alias("homophily_lift"),
     )
 
 
@@ -6796,95 +5999,6 @@ def corpus_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-BOOT_B = 32  # bootstrap replicates
-BOOT_SEED = "boot-v1"
-# Poisson(1) CDF thresholds (exact double literals shared verbatim
-# with the SQL twin — the inverse-CDF draw must branch identically)
-BOOT_CDF = (
-    0.36787944117144233,
-    0.7357588823428847,
-    0.9196986029286058,
-    0.9810118431238463,
-    0.9963401531726563,
-    0.9994058151824183,
-    0.999916758850712,
-    0.9999897508033253,
-)
-
-
-def corpus_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Poisson-bootstrap confidence interval for the corpus mean
-    quality score — THE distributed bootstrap (each doc enters each
-    replicate Poisson(1) times, so no with-replacement index pass is
-    needed): 32 deterministic hash-seeded replicates, their weighted
-    means, and the 2.5/97.5 percentile band. The statistics tier that
-    turns a point estimate into an uncertainty statement without any
-    RNG state (reproducible across engines AND runs).
-
-    Scale: the replicate weights are a map-side hash draw (docs x B
-    rows, ONE narrow explode); replicate means are a B-bounded
-    partial agg; the CI is a percentile over B rows. Weighted sums
-    use 1e-4-grid quality scores scaled to exact integers, so the
-    replicate means have no float-order surface.
-    """
-    d = _docs(spark, sf_dir)
-    q = d.select(
-        "doc_id",
-        # 1e-4-quantized score scaled to an exact integer
-        F.round(quality_score_col() * 10000).cast("long").alias("qi"),
-    )
-    reps = q.crossJoin(
-        F.broadcast(
-            spark.range(BOOT_B).select(F.col("id").alias("b"))
-        )
-    )
-    # uniform in [0, 1): 60-bit md5 fold of (seed, b, doc_id)
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit(BOOT_SEED + "|"),
-                        F.col("b").cast("string"),
-                        F.lit("|"),
-                        F.col("doc_id").cast("string"),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("double")
-        / F.lit(float(2**60))
-    )
-    w = F.lit(len(BOOT_CDF))
-    for k in range(len(BOOT_CDF) - 1, -1, -1):
-        w = F.when(u < F.lit(BOOT_CDF[k]), F.lit(k)).otherwise(w)
-    weighted = reps.select("b", "qi", w.cast("long").alias("w"))
-    means = weighted.groupBy("b").agg(
-        (
-            F.sum(F.col("w") * F.col("qi")).cast("double")
-            / (F.sum("w") * 10000.0)
-        ).alias("rep_mean")
-    )
-    base = q.agg(
-        (F.sum("qi").cast("double") / (F.count(F.lit(1)) * 10000.0)).alias(
-            "mean_quality"
-        )
-    )
-    return means.agg(
-        F.count(F.lit(1)).cast("long").alias("n_replicates"),
-        quantize(F.expr("percentile(rep_mean, 0.025)"), 6).alias("ci_lo"),
-        quantize(F.expr("percentile(rep_mean, 0.975)"), 6).alias("ci_hi"),
-    ).crossJoin(F.broadcast(base)).select(
-        quantize(F.col("mean_quality"), 6).alias("mean_quality"),
-        "n_replicates",
-        "ci_lo",
-        "ci_hi",
-    )
-
-
 def corpus_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Table profiler over the documents corpus: per column, row
     count, null count, empty-string count, distinct cardinality, and
@@ -6928,89 +6042,6 @@ def corpus_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_distinct").cast("long").alias("n_distinct"),
         "min_str",
         "max_str",
-    )
-
-
-def corpus_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Information rate of the corpus per lang: unigram entropy H1,
-    bigram conditional entropy rate H2 = H(w_n | w_{n-1}), and the
-    redundancy 1 − H2/H1 — the compressibility / predictability law
-    of the text (language ≈ low H2; template spam collapses it to
-    ~0). Complements the per-doc surprisal scores with the
-    corpus-level constant they average toward.
-
-    Scale: unigram and within-doc-bigram tables are natural-key
-    partial aggs (shingle-table shape); entropy terms use EXACT
-    integer count ratios quantized 1e-9 before the lang-bounded sums
-    (quantized 1e-6).
-    """
-    d = _docs(spark, sf_dir)
-    # the exploded token table feeds the unigram agg plus BOTH sides
-    # of the bigram self-join, and the vocab-bounded count tables are
-    # each read 2-3 ways downstream; materialize all three hubs so the
-    # corpus explode runs exactly once (census: 8 parquet scans).
-    # FOOTPRINT (ADVICE r11): `toks` is corpus-TOKEN-scale — the
-    # largest class of pinned block this repo uses; it spills under
-    # MEMORY_AND_DISK and lives only for this query, but at 100 TB
-    # gate it on corpus size or unpersist once `uni`/`bi` (the
-    # vocab-bounded hubs) are materialized
-    toks = d.select(
-        "lang", "doc_id", F.posexplode(words(F.col("text"))).alias("i", "w")
-    ).transform(materialize)
-    uni = toks.groupBy("lang", "w").agg(
-        F.count(F.lit(1)).alias("f1")
-    ).transform(materialize)
-    n1 = uni.groupBy("lang").agg(F.sum("f1").alias("n_tokens"))
-    nxt = toks.select(
-        "lang", "doc_id", (F.col("i") - 1).alias("i"), F.col("w").alias("w2")
-    )
-    bi = (
-        toks.join(nxt, ["lang", "doc_id", "i"])
-        .groupBy("lang", "w", "w2")
-        .agg(F.count(F.lit(1)).alias("f12"))
-        .transform(materialize)
-    )
-    w1m = bi.groupBy("lang", "w").agg(F.sum("f12").alias("fw1"))
-    nb = bi.groupBy("lang").agg(F.sum("f12").alias("n_bigrams"))
-    p1 = quantize(F.col("f1") / F.col("n_tokens"), 9)
-    h1 = (
-        uni.join(F.broadcast(n1), "lang")
-        .groupBy("lang")
-        .agg(
-            F.first("n_tokens").cast("long").alias("n_tokens"),
-            quantize(
-                F.sum(
-                    F.when(p1 > 0, -p1 * F.log2(p1)).otherwise(F.lit(0.0))
-                ),
-                6,
-            ).alias("h1_bits"),
-        )
-    )
-    pj = quantize(F.col("f12") / F.col("n_bigrams"), 9)
-    pc = quantize(F.col("f12") / F.col("fw1"), 9)
-    h2 = (
-        bi.join(w1m, ["lang", "w"])
-        .join(F.broadcast(nb), "lang")
-        .groupBy("lang")
-        .agg(
-            quantize(
-                F.sum(
-                    F.when(
-                        (pj > 0) & (pc > 0), -pj * F.log2(pc)
-                    ).otherwise(F.lit(0.0))
-                ),
-                6,
-            ).alias("h2_bits"),
-        )
-    )
-    return h1.join(h2, "lang").select(
-        "lang",
-        "n_tokens",
-        "h1_bits",
-        "h2_bits",
-        quantize(1 - F.col("h2_bits") / F.col("h1_bits"), 6).alias(
-            "redundancy"
-        ),
     )
 
 
@@ -7411,75 +6442,6 @@ def corpus_quality_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def corpus_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise vocabulary overlap between sources: Jaccard similarity
-    of each source pair's term sets — the source-clustering input
-    (`corpus_source_divergence` scores each source against the corpus;
-    this says which sources resemble EACH OTHER, e.g. mirrors or
-    shared upstreams worth deduplicating jointly).
-
-    Scale: (source, term) distinct pairs are one natural-key shuffle;
-    the pair join is keyed on term, so compare volume is
-    Σ sources-per-term² — bounded by the SOURCES dimension squared
-    per term, never terms²; set sizes broadcast back; Jaccard is an
-    exact integer ratio.
-    """
-    from ..functions.hashing import words
-
-    d = _docs(spark, sf_dir)
-    # three consumers (sizes + both self-join sides) — one eager
-    # localCheckpoint scans the corpus ONCE instead of per branch
-    # (the jaccard_pairs discipline)
-    st = (
-        d.select(
-            "source", F.explode(words(F.col("text"))).alias("term")
-        )
-        .distinct()
-        .transform(materialize)
-    )
-    sizes = st.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_terms")
-    )
-    a = st.select("term", F.col("source").alias("sa"))
-    b = st.select("term", F.col("source").alias("sb"))
-    inter = (
-        a.join(b, "term")
-        .filter(F.col("sa") < F.col("sb"))
-        .groupBy("sa", "sb")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_common"))
-    )
-    j = (
-        inter.join(
-            F.broadcast(
-                sizes.select(
-                    F.col("source").alias("sa"),
-                    F.col("n_terms").alias("na"),
-                )
-            ),
-            "sa",
-        )
-        .join(
-            F.broadcast(
-                sizes.select(
-                    F.col("source").alias("sb"),
-                    F.col("n_terms").alias("nb"),
-                )
-            ),
-            "sb",
-        )
-    )
-    return j.select(
-        F.col("sa").alias("source_a"),
-        F.col("sb").alias("source_b"),
-        "n_common",
-        quantize(
-            F.col("n_common").cast("double")
-            / (F.col("na") + F.col("nb") - F.col("n_common")),
-            6,
-        ).alias("jaccard"),
-    )
-
-
 COS_HIST_STRIDES = (1, 17)
 
 
@@ -7562,139 +6524,6 @@ def corpus_boilerplate_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.count(F.lit(1)),
             6,
         ).alias("boilerplate_rate"),
-    )
-
-
-VOCAB_COV_NS = (5, 10, 25, 100, 1000, 10000)
-
-
-def corpus_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vocabulary coverage curve: share of total token mass covered by
-    the top-100 / top-1k / top-10k terms — the tokenizer-budget
-    planning read (`corpus_vocab_growth` gives Heaps growth; this
-    gives the Zipf mass concentration a vocab size actually buys).
-
-    Scale: term frequencies are ONE term-keyed partial agg; top-K =
-    `TakeOrderedAndProject` on a (freq, term) total order; ranks
-    assigned window-free by the pack-and-posexplode idiom on the
-    K-row result; the curve is a 3-row rollup with exact integer
-    shares.
-    """
-    from ..functions.hashing import words
-
-    d = _docs(spark, sf_dir)
-    toks = d.select(F.explode(words(F.col("text"))).alias("term"))
-    cf = toks.groupBy("term").agg(
-        F.count(F.lit(1)).cast("long").alias("f")
-    )
-    tot = cf.agg(
-        F.sum("f").cast("long").alias("total_tokens"),
-        F.count(F.lit(1)).cast("long").alias("vocab_size"),
-    )
-    top = cf.orderBy(F.col("f").desc(), "term").limit(max(VOCAB_COV_NS))
-    packed = top.agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct((-F.col("f")).alias("neg_f"), F.col("term"))
-            )
-        ).alias("arr")
-    )
-    ranked = packed.select(
-        F.posexplode("arr").alias("pos", "e")
-    ).select(
-        (F.col("pos") + 1).cast("long").alias("rk"),
-        (-F.col("e.neg_f")).cast("long").alias("f"),
-    )
-    ns = spark.createDataFrame(
-        [(n,) for n in VOCAB_COV_NS], "top_n long"
-    )
-    cov = (
-        ns.crossJoin(ranked)
-        .filter(F.col("rk") <= F.col("top_n"))
-        .groupBy("top_n")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_terms"),
-            F.sum("f").cast("long").alias("covered_tokens"),
-        )
-    )
-    return cov.crossJoin(F.broadcast(tot)).select(
-        "top_n",
-        "n_terms",
-        "covered_tokens",
-        "total_tokens",
-        "vocab_size",
-        quantize(
-            F.col("covered_tokens").cast("double")
-            / F.col("total_tokens"),
-            6,
-        ).alias("covered_share"),
-    )
-
-
-def emb_knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Leave-one-out kNN classification accuracy per label: each
-    vector's label predicted by majority vote of its kNN-graph
-    neighbors (ties broken toward the lexicographically first label),
-    scored against its own label — the eval-as-operator for "do these
-    embeddings encode their labels?", sharper than
-    `emb_label_homophily`'s edge-agreement rate because it scores the
-    DECISION the label-propagation / retrieval stack would actually
-    make.
-
-    Scale: the kNN graph is the adaptive-band LSH operator (≈linear
-    compare volume); the vote is a (vector, label) partial agg over
-    ≤k·n edge rows with a struct-max argmax — no ranking window; the
-    per-label accuracy rollup is labels-bounded.
-    """
-    from ..operators.similarity import cosine_knn_graph
-
-    e = _embs(spark, sf_dir)
-    edges = cosine_knn_graph(e, k=KNN_GRAPH_K).select("da", "db")
-    lab = e.select(
-        F.col("vec_id").alias("db"), F.col("label").alias("nb_label")
-    )
-    votes = (
-        edges.join(lab, "db")
-        .groupBy(F.col("da").alias("vec_id"), "nb_label")
-        .agg(F.count(F.lit(1)).cast("long").alias("v"))
-    )
-    # argmax by (votes DESC, label ASC): max-votes per vector, then
-    # the lexicographically first label among the tied winners — two
-    # vector-keyed partial aggs, no ranking window
-    mx = votes.groupBy("vec_id").agg(F.max("v").alias("max_v"))
-    pred = (
-        votes.join(mx, "vec_id")
-        .filter(F.col("v") == F.col("max_v"))
-        .groupBy("vec_id")
-        .agg(F.min("nb_label").alias("pred_label"))
-    )
-    own = e.select("vec_id", "label")
-    j = own.join(pred, "vec_id", "left").select(
-        "label",
-        (F.col("pred_label") == F.col("label")).alias("hit"),
-        F.col("pred_label").isNotNull().alias("voted"),
-    )
-    per = j.groupBy("label").agg(
-        F.count(F.lit(1)).cast("long").alias("n_vectors"),
-        F.sum(F.when(F.col("voted"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_voted"),
-        F.sum(F.when(F.col("hit"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_correct"),
-    )
-    return per.select(
-        "label",
-        "n_vectors",
-        "n_voted",
-        "n_correct",
-        F.when(
-            F.col("n_voted") > 0,
-            quantize(
-                F.col("n_correct").cast("double") / F.col("n_voted"),
-                6,
-            ),
-        ).alias("loo_accuracy"),
     )
 
 
@@ -7834,72 +6663,6 @@ def emb_norm_audit_from_cells(cells: DataFrame) -> DataFrame:
     )
 
 
-def corpus_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Eval-hygiene audit of the train/val/test split: documents with
-    IDENTICAL normalized content landing in different splits leak the
-    evaluation — this reports duplicate-content groups, how many span
-    a split boundary, the cross-split pair counts, and the number of
-    val/test docs whose content also appears in train (the
-    contaminated-eval headcount). The split is content-blind
-    (hash-of-id), so exact duplicates WILL straddle boundaries unless
-    dedup runs first — this measures exactly that risk.
-
-    Scale: one narrow split map + the content-digest map, then ONE
-    32-byte-key partial agg per digest (the `dedup_exact` shape);
-    every output is an exact integer from the digest-group table —
-    docs never self-join.
-    """
-    sp = corpus_split(spark, sf_dir).select("doc_id", "split")
-    fp = fingerprint(_docs(spark, sf_dir)).select("doc_id", "fp")
-    g = (
-        sp.join(fp, "doc_id")
-        .groupBy("fp")
-        .agg(
-            F.sum((F.col("split") == "train").cast("int")).alias("tr"),
-            F.sum((F.col("split") == "val").cast("int")).alias("va"),
-            F.sum((F.col("split") == "test").cast("int")).alias("te"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .filter(F.col("n") >= 2)
-    )
-    zero = F.lit(0)
-    return g.agg(
-        F.count(F.lit(1)).cast("long").alias("n_dup_groups"),
-        F.coalesce(
-            F.sum(
-                (
-                    (F.col("tr") > 0).cast("int")
-                    + (F.col("va") > 0).cast("int")
-                    + (F.col("te") > 0).cast("int")
-                    > 1
-                ).cast("int")
-            ),
-            zero,
-        )
-        .cast("long")
-        .alias("n_cross_split_groups"),
-        F.coalesce(F.sum(F.col("tr") * F.col("va")), zero)
-        .cast("long")
-        .alias("pairs_train_val"),
-        F.coalesce(F.sum(F.col("tr") * F.col("te")), zero)
-        .cast("long")
-        .alias("pairs_train_test"),
-        F.coalesce(F.sum(F.col("va") * F.col("te")), zero)
-        .cast("long")
-        .alias("pairs_val_test"),
-        F.coalesce(
-            F.sum(F.when(F.col("tr") > 0, F.col("va")).otherwise(0)), zero
-        )
-        .cast("long")
-        .alias("leaked_val_docs"),
-        F.coalesce(
-            F.sum(F.when(F.col("tr") > 0, F.col("te")).otherwise(0)), zero
-        )
-        .cast("long")
-        .alias("leaked_test_docs"),
-    )
-
-
 WEIGHTED_SAMPLE_K = 100
 WEIGHTED_SAMPLE_SEED = "wsample"
 
@@ -7993,98 +6756,6 @@ def corpus_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-RAKE_TOPK = 20
-
-
-def corpus_keyphrase_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RAKE keyphrase extraction (Rose et al.) at corpus scale:
-    candidate phrases are maximal runs of consecutive non-stopword
-    tokens (per-language stopword sets; langs without one contribute
-    whole-line candidates), word scores are the classic
-    degree/frequency ratio computed corpus-wide, a phrase scores the
-    sum of its members' ratios, and the corpus keeps the top-20
-    phrases (≥2 occurrences, ≤4 words — RAKE's noise fences).
-
-    Scale: tokenization is a narrow posexplode; phrase segmentation
-    is the gaps-and-islands cumulative-sum window on the doc natural
-    key (the sessionization shape); word stats are a vocab-bounded
-    partial agg joined back on the word natural key; the final
-    ranking is TakeOrderedAndProject — no global sort, nothing
-    corpus-pairwise.
-    """
-    from pyspark.sql.window import Window
-
-    d = _docs(spark, sf_dir)
-    toks = d.select(
-        "doc_id",
-        "lang",
-        F.posexplode(words(F.col("text"))).alias("i", "w"),
-    )
-    stop = F.lit(False)
-    for lang, stops in STOPWORDS.items():
-        stop = F.when(
-            F.col("lang") == lang,
-            F.col("w").isin(*stops),
-        ).otherwise(stop)
-    wo = Window.partitionBy("doc_id").orderBy("i")
-    seg = toks.withColumn("is_stop", stop).withColumn(
-        "phrase_id",
-        F.sum(F.col("is_stop").cast("long")).over(wo),
-    )
-    # phrase length rides a second window over the SAME exploded
-    # token pass instead of a members-x-phrases self-join, and the
-    # resulting occurrence table is materialized once: phrases,
-    # word stats, and token scoring all fold this hub (the un-hubbed
-    # plan re-ran the posexplode + window 5x — 10 corpus scans).
-    # FOOTPRINT (ADVICE r11): `occ` is corpus-token-scale (spillable,
-    # query-lifetime) — at 100 TB gate on corpus size if pinning it
-    # competes with execution memory
-    wp = Window.partitionBy("doc_id", "phrase_id")
-    occ = (
-        seg.filter(~F.col("is_stop"))
-        .withColumn("plen", F.count(F.lit(1)).over(wp))
-        .select("doc_id", "phrase_id", "i", "w", "plen")
-        .transform(materialize)
-    )
-    phrases = occ.groupBy("doc_id", "phrase_id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("i", "w"))
-                ),
-                lambda s: s["w"],
-            ),
-            " ",
-        ).alias("phrase"),
-        F.count(F.lit(1)).cast("long").alias("plen"),
-    )
-    wstats = occ.groupBy("w").agg(
-        F.count(F.lit(1)).cast("long").alias("freq"),
-        F.sum("plen").cast("long").alias("degree"),
-    )
-    scored_tokens = occ.join(wstats, "w").select(
-        "doc_id",
-        "phrase_id",
-        (F.col("degree").cast("double") / F.col("freq")).alias("ws"),
-    )
-    pscore = scored_tokens.groupBy("doc_id", "phrase_id").agg(
-        F.sum("ws").alias("score")
-    )
-    per_phrase = (
-        phrases.join(pscore, ["doc_id", "phrase_id"])
-        .filter(F.col("plen") <= 4)
-        .groupBy("phrase")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_occurrences"),
-            quantize(F.max("score"), 4).alias("score"),
-        )
-        .filter(F.col("n_occurrences") >= 2)
-    )
-    return per_phrase.orderBy(
-        F.col("score").desc(), F.col("phrase")
-    ).limit(RAKE_TOPK)
-
-
 MM_NEARDUP_COS = 0.99999  # near-identical byte distribution
 
 
@@ -8122,556 +6793,6 @@ def multimodal_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("da").cast("long").alias("da"),
         F.col("db").cast("long").alias("db"),
         "cos",
-    )
-
-
-# Banded tier of the byte-histogram near-dup screen (VERDICT r10
-# item 5): tercile cuts per INFORMATIVE histogram dim give
-# DATA-DEPENDENT banding (corpus-independent sign bits are useless
-# here — same-modality byte distributions all share one shape, so
-# every fixed projection collapses to one bucket; and for ASCII text
-# the high-nibble bins 8-15 are identically zero, so a band built on
-# them degenerates to ONE bucket = all-pairs), and per-doc top-k
-# bounds the OUTPUT, which is what actually goes quadratic on a
-# duplicate-heavy corpus at the exact tier's 0.99999 threshold.
-MM_BANDED_BAND_DIMS = 6  # informative dims per band (stride-2 wrap)
-MM_BANDED_BANDS = 4
-MM_BANDED_TOPK = 5
-
-
-def multimodal_neardup_banded(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Scale-safe tier of ``multimodal_neardup``: per-doc top-k
-    near-identical byte-distribution partners (cosine ≥ 0.99999 on the
-    16-bin high-nibble histogram), candidates restricted to banded
-    tercile-signature buckets — the bounded path the exact all-pairs
-    tier contract-raises toward at corpus scale.
-
-    Banding: each unit-histogram dim is cut at its CORPUS terciles
-    (exact percentiles, 1e-9-quantized before comparison — the
-    ``corpus_ppl_buckets`` float-boundary discipline). Only
-    INFORMATIVE dims (c1 < c2) band: ASCII text zeroes bins 8-15, and
-    a band of constant dims is one bucket holding the whole corpus.
-    The (≤8) informative dims spread over 4 bands of 6 at stride-2
-    wrap, so each dim is absent from exactly one band: a pair whose
-    byte distributions straddle a cut in ONE dim is still caught by
-    the band that skips that dim — misses need straddles covering
-    all four bands. Buckets per band: 3^6 = 729, marginally balanced
-    by the tercile construction.
-
-    Scale: per-band compare volume is Σ n_b² (~n²/729 at balance;
-    scored as ONE numpy dgemm per bucket via ``applyInPandas``, the
-    ``embedding_neardup_blocked`` shape — never per-pair expression
-    dots); at true corpus scale widen the histogram to 256 bins for
-    hundreds of tercile digits of banding depth. OUTPUT is bounded at
-    n·k rows by the per-doc top-k, which is what the exact tier
-    cannot bound (its true pair set is quadratic on a duplicate-heavy
-    corpus — the 416M-pair 100× rung finding). Approximate by design;
-    the exact tier remains the verification tool.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.window import Window
-
-    from ..operators.multimodal import payload_byte_features
-
-    d = _docs(spark, sf_dir).withColumn(
-        "payload", F.encode(F.col("text"), "UTF-8")
-    )
-    feats = payload_byte_features(d)
-    fu = (
-        feats.withColumn(
-            "nrm",
-            F.sqrt(
-                F.aggregate(
-                    "features", F.lit(0.0), lambda a, x: a + x * x
-                )
-            ),
-        )
-        .select(
-            "doc_id",
-            F.transform("features", lambda x: x / F.col("nrm")).alias(
-                "u"
-            ),
-        )
-        # the cuts agg AND the bucketed build both read fu:
-        # materialize so the Arrow byte-histogram UDF (the dominant
-        # 100x-rung cost — it rescans every payload) runs ONCE
-        .transform(materialize)
-    )
-    # per-dim tercile cuts: ONE dims-bounded exact-percentile agg over
-    # the exploded (dim, value) pairs, packed with the informative-dim
-    # id list into one broadcastable row (scalar-broadcast idiom)
-    cuts = (
-        fu.select(F.posexplode("u").alias("i", "val"))
-        .groupBy("i")
-        .agg(
-            quantize(
-                F.expr("percentile(val, 0.3333333333333333)"), 9
-            ).alias("c1"),
-            quantize(
-                F.expr("percentile(val, 0.6666666666666666)"), 9
-            ).alias("c2"),
-        )
-    )
-    cut_arrays = cuts.agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("i", "c1"))),
-            lambda s: s["c1"],
-        ).alias("c1s"),
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("i", "c2"))),
-            lambda s: s["c2"],
-        ).alias("c2s"),
-        F.array_sort(
-            F.collect_list(F.when(F.col("c1") < F.col("c2"), F.col("i")))
-        ).alias("inf"),
-    )
-
-    def band_bucket(band: int):
-        """Base-3 pack of the band's 6 informative-dim tercile digits.
-        Dim ids index into ``inf`` with stride-2 wrap; an empty
-        ``inf`` (fully constant corpus) makes every element_at NULL →
-        every digit takes the ELSE branch → one shared bucket, the
-        correct degenerate behavior (no crash, exact within-bucket
-        scoring)."""
-        out = F.lit(0)
-        n_inf = F.greatest(F.size("inf"), F.lit(1))
-        for p in range(MM_BANDED_BAND_DIMS):
-            # inf holds 0-based dim ids; +1 for 1-based element_at
-            dim = (
-                F.element_at(
-                    F.col("inf"),
-                    ((F.lit(2 * band + p) % n_inf) + 1).cast("int"),
-                )
-                + 1
-            ).cast("int")
-            uj = F.element_at(F.col("u"), dim)
-            digit = (
-                F.when(uj <= F.element_at(F.col("c1s"), dim), F.lit(0))
-                .when(uj <= F.element_at(F.col("c2s"), dim), F.lit(1))
-                .otherwise(F.lit(2))
-            )
-            out = out + digit * F.lit(3**p)
-        return out.cast("long")
-
-    bucketed = (
-        fu.crossJoin(F.broadcast(cut_arrays))
-        .select(
-            "doc_id",
-            "u",
-            F.posexplode(
-                F.array(*[band_bucket(b) for b in range(MM_BANDED_BANDS)])
-            ).alias("band", "bucket"),
-        )
-        # consumed by every band group of the grouped-map scorer:
-        # materialize so the banding projection runs once
-        .transform(materialize)
-    )
-
-    # deliberately UNannotated (grouped-map eval-type inference warns
-    # on partial hints); schema comes from the applyInPandas argument
-    def _bucket_hits(key, pdf):
-        """Per-row TOP-K above-threshold partners within the bucket —
-        LOSSLESS for the global per-doc top-k (every bucket candidate
-        is a global candidate, so a global-top-k partner beats < k
-        candidates in any shared bucket too), and it bounds the
-        emitted volume at n_b·k rows per bucket: a duplicate-heavy
-        corpus has a QUADRATIC above-threshold pair set (the 416M-pair
-        100× finding), and emitting it all just to window it away
-        re-creates the output blowup this tier exists to avoid. The
-        dgemm runs in row chunks so peak memory is chunk × n_b, not
-        n_b², regardless of bucket skew."""
-        n_b = len(pdf)
-        if n_b < 2:
-            return pd.DataFrame({"da": [], "db": [], "cos": []})
-        # u is already unit-normalized ONCE upstream (exactly like the
-        # oracle's unitf CTE): dot it raw — re-normalizing here would
-        # move values a ulp off the SQL twin's
-        uu = np.stack(pdf["u"].to_list()).astype(np.float64)
-        ids = pdf["doc_id"].to_numpy()
-        chunk = max(16, 30_000_000 // n_b)  # ≤ ~240 MB of sims
-        # integer threshold of the quantize grid: floor(y) >= n is
-        # EXACTLY y >= n for integer n, so masking the RAW dgemm with
-        # y = sims*1e6 + 0.5 selects precisely the pairs whose
-        # 1e-6-QUANTIZED cosine clears the SQL twin's threshold —
-        # without paying the floor+divide over the whole matrix
-        # (quantization then touches only the few selected values)
-        thr_i = round(MM_NEARDUP_COS * 1e6)
-        out_a, out_b, out_c = [], [], []
-        for i0 in range(0, n_b, chunk):
-            sims = uu[i0 : i0 + chunk] @ uu.T
-            m = sims.shape[0]
-            rr = np.arange(m)
-            sims[rr, i0 + rr] = -np.inf  # self (ids unique per bucket)
-            # transform IN PLACE to y = sims*1e6 + 0.5 (one fresh
-            # dgemm output is the only full-size allocation per chunk
-            # — an expression temp here would double the memory
-            # traffic of the whole operator)
-            np.multiply(sims, 1e6, out=sims)
-            np.add(sims, 0.5, out=sims)
-            mask = sims >= thr_i
-            for r in np.nonzero(mask.any(axis=1))[0]:
-                cand = np.nonzero(mask[r])[0]
-                c_q = np.floor(sims[r, cand]) / 1e6
-                if len(cand) > MM_BANDED_TOPK:
-                    # (cos desc, db asc) on the QUANTIZED values (the
-                    # SQL twin's rank key); lexsort keys minor-to-major
-                    order = np.lexsort((ids[cand], -c_q))
-                    sel = order[: MM_BANDED_TOPK]
-                    cand, c_q = cand[sel], c_q[sel]
-                out_a.extend([ids[i0 + r]] * len(cand))
-                out_b.extend(ids[cand])
-                out_c.extend(c_q)
-        return pd.DataFrame({"da": out_a, "db": out_b, "cos": out_c})
-
-    # 4 x 729 mostly-tiny band buckets: batch-dispatched grouped map
-    # (operators/grouped.py), same per-group dgemm
-    hits = grouped_map_batched(
-        bucketed,
-        ["band", "bucket"],
-        _bucket_hits,
-        schema="da long, db long, cos double",
-        with_key=True,
-        # the same pair can collide in up to all four bands
-    ).distinct()
-    w = Window.partitionBy("da").orderBy(
-        F.col("cos").desc(), F.col("db").asc()
-    )
-    return hits.select(
-        "da",
-        "db",
-        "cos",
-        F.row_number().over(w).cast("long").alias("rk"),
-    ).filter(F.col("rk") <= MM_BANDED_TOPK)
-
-
-WATERFILL_BUDGET_SHARE = 0.5  # token budget = this share of the corpus
-
-
-def corpus_budget_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Water-filling token-budget allocation across sources: spread a
-    corpus-wide token budget (50% of total tokens) EQUALLY across
-    sources, except no source can contribute more than it has — the
-    max-min-fair allocation (λ water level, alloc = min(avail, λ))
-    that `corpus_mix_plan`'s temperature weighting doesn't give: small
-    sources are taken whole, the surplus re-spreads over the rest.
-
-    Scale: per-source availability is one source-keyed partial agg;
-    the water level λ comes from the sources²-bounded D² self-join
-    prefix sums (NO unpartitioned window) and collapses to a 1-row
-    broadcast; allocation is a narrow map over the sources-bounded
-    table. Exact integer token sums; λ is one double division.
-    """
-    d = _docs(spark, sf_dir)
-    per = d.groupBy("source").agg(
-        F.sum(token_count(F.col("text")))
-        .cast("long")
-        .alias("avail")
-    )
-    tot = per.agg(
-        F.sum("avail").cast("long").alias("total"),
-        F.count(F.lit(1)).cast("long").alias("n_src"),
-    ).select(
-        "total",
-        "n_src",
-        F.floor(F.col("total") * WATERFILL_BUDGET_SHARE)
-        .cast("long")
-        .alias("budget"),
-    )
-    # D² self-join prefix sums over the sources-bounded table: rank
-    # and prefix in the (avail, source) total order, no window
-    b = per.select(
-        F.col("source").alias("src_b"), F.col("avail").alias("av_b")
-    )
-    before = (F.col("av_b") < F.col("avail")) | (
-        (F.col("av_b") == F.col("avail"))
-        & (F.col("src_b") < F.col("source"))
-    )
-    ranked = (
-        per.join(b, before, "left")
-        .groupBy("source", "avail")
-        .agg(
-            F.count("src_b").cast("long").alias("n_before"),
-            F.coalesce(F.sum("av_b"), F.lit(0))
-            .cast("long")
-            .alias("prev_prefix"),
-        )
-    )
-    cand = ranked.crossJoin(F.broadcast(tot)).select(
-        "source",
-        "avail",
-        "n_before",
-        (
-            (F.col("budget") - F.col("prev_prefix")).cast("double")
-            / (F.col("n_src") - F.col("n_before")).cast("double")
-        ).alias("lam"),
-    )
-    level = cand.filter(F.col("lam") <= F.col("avail")).agg(
-        F.min_by("lam", "n_before").alias("lam")
-    )
-    alloc = F.when(
-        F.col("lam").isNull(), F.col("avail").cast("double")
-    ).otherwise(F.least(F.col("avail").cast("double"), F.col("lam")))
-    return (
-        per.crossJoin(F.broadcast(level))
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "source",
-            "avail",
-            "budget",
-            quantize(alloc, 4).alias("allocation"),
-            quantize(alloc / F.col("avail"), 6).alias("fill_share"),
-            (alloc >= F.col("avail").cast("double")).alias("capped"),
-        )
-    )
-
-
-TEXTRANK_ITERS = 3
-TEXTRANK_DAMP = 0.85
-TEXTRANK_TOPK = 20
-
-
-def corpus_textrank_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TextRank keyword extraction (Mihalcea & Tarau): PageRank over
-    the word co-occurrence graph — content words (per-language
-    stopwords dropped) linked when within distance ≤2 in the ORIGINAL
-    token sequence, 3 unrolled power iterations at damping 0.85,
-    top-20 terms by rank. The graph-centrality complement to RAKE's
-    phrase scoring: RAKE finds multiword phrases, TextRank finds the
-    pivotal single terms.
-
-    Scale: co-occurrence pairs come from TWO equi-joins on
-    (doc_id, i+offset) — linear in corpus tokens, never per-doc
-    quadratic; the distinct edge list is vocab²-bounded and
-    materialized once for the 2·ITERS consumers; each round is one
-    src-keyed join + dst-keyed partial agg with per-round 1e-9
-    quantization (so engine summation order can't drift the
-    fixpoint); final ranking is TakeOrderedAndProject.
-    """
-    d = _docs(spark, sf_dir)
-    toks = d.select(
-        "doc_id",
-        "lang",
-        F.posexplode(words(F.col("text"))).alias("i", "w"),
-    )
-    stop = F.lit(False)
-    for lang, stops in STOPWORDS.items():
-        stop = F.when(
-            F.col("lang") == lang, F.col("w").isin(*stops)
-        ).otherwise(stop)
-    content = toks.withColumn("is_stop", stop).filter(
-        ~F.col("is_stop")
-    ).select("doc_id", "i", "w")
-    pair_parts = []
-    for off in (1, 2):
-        b = content.select(
-            "doc_id",
-            (F.col("i") - off).alias("i"),
-            F.col("w").alias("w2"),
-        )
-        pair_parts.append(
-            content.join(b, ["doc_id", "i"]).select(
-                F.col("w").alias("w1"), "w2"
-            )
-        )
-    pairs = pair_parts[0].unionAll(pair_parts[1]).filter(
-        F.col("w1") != F.col("w2")
-    )
-    edges = (
-        pairs.select("w1", "w2")
-        .unionAll(
-            pairs.select(
-                F.col("w2").alias("w1"), F.col("w1").alias("w2")
-            )
-        )
-        .distinct()
-        .select(F.col("w1").alias("src"), F.col("w2").alias("dst"))
-        .transform(materialize)
-    )
-    # static node/degree table, materialized once: each unrolled round
-    # references the PREVIOUS ranks exactly once (inside contrib) and
-    # rebinds deg from this table — the same CTE chain the oracle uses
-    # (deg d JOIN c{i}); binding deg through the evolving ranks frame
-    # instead made every round's plan embed the prior round TWICE,
-    # i.e. a 2^ITERS-subtree physical plan (measured: 252 nodes, ~50
-    # runtime exchanges for 3 rounds)
-    nodes = (
-        edges.groupBy("src")
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .select(F.col("src").alias("term"), "deg")
-        .transform(materialize)
-    )
-    n_tot = nodes.agg(F.count(F.lit(1)).alias("n"))
-    ranks = nodes.crossJoin(F.broadcast(n_tot)).select(
-        "term", "deg", quantize(F.lit(1.0) / F.col("n"), 9).alias("r")
-    )
-    for _ in range(TEXTRANK_ITERS):
-        contrib = (
-            edges.join(
-                ranks.select(
-                    F.col("term").alias("src"),
-                    (F.col("r") / F.col("deg")).alias("wgt"),
-                ),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("term"))
-            .agg(F.sum("wgt").alias("c"))
-        )
-        ranks = (
-            nodes.join(contrib, "term")
-            .crossJoin(F.broadcast(n_tot))
-            .select(
-                "term",
-                "deg",
-                quantize(
-                    (1.0 - TEXTRANK_DAMP) / F.col("n")
-                    + TEXTRANK_DAMP * F.col("c"),
-                    9,
-                ).alias("r"),
-            )
-        )
-    scored = ranks.select(
-        "term",
-        F.col("deg").cast("long").alias("degree"),
-        quantize(F.col("r"), 8).alias("rank"),
-    )
-    return scored.orderBy(
-        F.col("rank").desc(), F.col("term")
-    ).limit(TEXTRANK_TOPK)
-
-
-MATRYOSHKA_DIMS = (8, 16, 32)  # prefix widths evaluated against full-dim
-
-
-def emb_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Matryoshka-style prefix-dimension evaluation: rerun the
-    brute-force top-k retrieval using only the FIRST m coordinates of
-    every embedding (m = 8/16/32) and report recall against the
-    full-64-dim truth — the measurement behind "can we store/scan a
-    truncated prefix of the vector column?" (MRL-trained embeddings
-    make prefixes usable; this op tells you whether YOURS are).
-
-    Scale: one blocked-dgemm pass per prefix width (same
-    `cosine_topk_blocked` shape as `knn_bruteforce` — queries
-    broadcast, corpus never shuffles); truth is queries×k rows,
-    localCheckpointed once and broadcast into each prefix's hit join;
-    the report is |prefixes| rows of exact integer counts.
-    """
-    e = _embs(spark, sf_dir)
-    q = e.filter(F.col("vec_id") < N_QUERY_VECS)
-    truth = (
-        cosine_topk_blocked(q, e, k=KNN_K)
-        .select("query_id", "neighbor_id")
-        .transform(materialize)
-    )
-    n_truth = truth.agg(
-        F.count(F.lit(1)).cast("long").alias("n_truth")
-    )
-    parts = []
-    for m in MATRYOSHKA_DIMS:
-        pe = e.select(
-            "vec_id", F.slice("embedding", 1, m).alias("embedding")
-        )
-        pq = pe.filter(F.col("vec_id") < N_QUERY_VECS)
-        approx = cosine_topk_blocked(pq, pe, k=KNN_K).select(
-            "query_id", "neighbor_id"
-        )
-        hits = approx.join(
-            F.broadcast(truth), ["query_id", "neighbor_id"]
-        ).agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
-        parts.append(
-            hits.crossJoin(F.broadcast(n_truth)).select(
-                F.lit(m).cast("long").alias("prefix_dim"),
-                "n_truth",
-                "n_hits",
-                quantize(
-                    F.col("n_hits").cast("double") / F.col("n_truth"),
-                    6,
-                ).alias("recall"),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
-    return out
-
-
-def emb_binary_hash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-embedding retrieval evaluation: replace each vector by
-    its 64 SIGN BITS, retrieve top-k by Hamming distance, and report
-    per-query recall against the full float-cosine truth — the
-    64×-compression counterpart of `emb_matryoshka_eval`'s prefix
-    truncation (binary codes are the cheapest vector index a 100 TB
-    corpus can store; this measures what that costs in recall).
-
-    Scale: queries are a broadcast (queries×d cells); Hamming is an
-    exact-integer 64-term fold per (query, corpus) row — n·|queries|
-    narrow rows, no float drift anywhere; ranking is a query-
-    partitioned window; truth is queries×k rows localCheckpointed
-    and broadcast into the hit join.
-    """
-    e = _embs(spark, sf_dir)
-    q = e.filter(F.col("vec_id") < N_QUERY_VECS)
-    truth = (
-        cosine_topk_blocked(q, e, k=KNN_K)
-        .select("query_id", "neighbor_id")
-        .transform(materialize)
-    )
-    qb = F.broadcast(
-        q.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qe"),
-        )
-    )
-    ham = F.aggregate(
-        F.zip_with(
-            F.col("qe"),
-            F.col("embedding"),
-            lambda x, y: ((x >= 0) != (y >= 0)).cast("long"),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    scored = (
-        e.crossJoin(qb)
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), ham.alias("hamming"))
-    )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        "hamming", "neighbor_id"
-    )
-    topk = scored.withColumn(
-        "rk", F.row_number().over(w).cast("long")
-    ).filter(F.col("rk") <= KNN_K)
-    hits = (
-        topk.join(F.broadcast(truth), ["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
-    )
-    per_q = truth.groupBy("query_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_truth")
-    )
-    return (
-        per_q.join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            "n_truth",
-            F.coalesce(F.col("n_hits"), F.lit(0))
-            .cast("long")
-            .alias("n_hits"),
-        )
-        .select(
-            "query_id",
-            "n_truth",
-            "n_hits",
-            quantize(
-                F.col("n_hits").cast("double") / F.col("n_truth"), 6
-            ).alias("recall"),
-        )
     )
 
 
@@ -9107,24 +7228,17 @@ def corpus_kn_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 QUERIES = {
-    "corpus_keyphrase_rake": corpus_keyphrase_rake,
     "corpus_dsir_model": corpus_dsir_model,
     "corpus_dsir_weights": corpus_dsir_weights,
     "corpus_kn_bigram_lm": corpus_kn_bigram_lm,
     "search_map": search_map,
     "corpus_bpe_pair_census": corpus_bpe_pair_census,
-    "corpus_burrows_delta": corpus_burrows_delta,
     "langid_injection_eval": langid_injection_eval,
     "corpus_dsir_sample": corpus_dsir_sample,
     "corpus_contrastive_pairs": corpus_contrastive_pairs,
     "corpus_select_e2e": corpus_select_e2e,
-    "corpus_textrank_terms": corpus_textrank_terms,
-    "corpus_budget_waterfill": corpus_budget_waterfill,
     "multimodal_neardup": multimodal_neardup,
-    "multimodal_neardup_banded": multimodal_neardup_banded,
     "corpus_pack_efficiency": corpus_pack_efficiency,
-    "emb_matryoshka_eval": emb_matryoshka_eval,
-    "emb_binary_hash_eval": emb_binary_hash_eval,
     "emb_random_projection": emb_random_projection,
     "emb_jl_distortion": emb_jl_distortion,
     "corpus_prep_e2e": corpus_prep_e2e,
@@ -9141,7 +7255,6 @@ QUERIES = {
     "dedup_lsh_s_curve": dedup_lsh_s_curve,
     "dedup_lsh_recall": dedup_lsh_recall,
     "dedup_minhash_lsh": dedup_minhash_lsh,
-    "dedup_simhash": dedup_simhash,
     "emb_neardup": emb_neardup,
     "emb_dedup_apply": emb_dedup_apply,
     "knn_bruteforce": knn_bruteforce,
@@ -9161,11 +7274,9 @@ QUERIES = {
     "corpus_soft_dedup": corpus_soft_dedup,
     "corpus_dp_vocab": corpus_dp_vocab,
     "corpus_semantic_dedup": corpus_semantic_dedup,
-    "doc_extractive_summary": doc_extractive_summary,
     "corpus_shard_rendezvous": corpus_shard_rendezvous,
     "corpus_bm25_index": corpus_bm25_index,
     "dedup_method_agreement": dedup_method_agreement,
-    "knn_graph_recall": knn_graph_recall,
     "multimodal_vad": multimodal_vad,
     "dedup_injection_eval": dedup_injection_eval,
     "quality_injection_eval": quality_injection_eval,
@@ -9183,12 +7294,10 @@ QUERIES = {
     "emb_covariance": emb_covariance,
     "emb_pca_project": emb_pca_project,
     "corpus_split": corpus_split,
-    "corpus_split_balance": corpus_split_balance,
     "doc_char_entropy": doc_char_entropy,
     "multimodal_resize": multimodal_resize,
     "multimodal_features": multimodal_features,
     "multimodal_pack": multimodal_pack,
-    "multimodal_phash": multimodal_phash,
     "doc_bigram_surprisal": doc_bigram_surprisal,
     "knn_graph": knn_graph,
     "emb_clusters": emb_clusters,
@@ -9196,21 +7305,17 @@ QUERIES = {
     "emb_quantize_int8": emb_quantize_int8,
     "knn_pq": knn_pq,
     "knn_pq_rerank": knn_pq_rerank,
-    "corpus_dedup_incremental": corpus_dedup_incremental,
     "doc_quality_ensemble": doc_quality_ensemble,
     "emb_pq_export": emb_pq_export,
     "dedup_index_export": dedup_index_export,
     "doc_bm25_topk": doc_bm25_topk,
     "search_rrf": search_rrf,
     "search_rbo": search_rbo,
-    "search_ndcg": search_ndcg,
     "search_mrr": search_mrr,
     "corpus_sample_fixed": corpus_sample_fixed,
     "corpus_domain_cap": corpus_domain_cap,
     "dedup_bloom": dedup_bloom,
-    "emb_dedup_incremental": emb_dedup_incremental,
     "emb_outliers": emb_outliers,
-    "knn_ivfpq": knn_ivfpq,
     "emb_ivf_export": emb_ivf_export,
     "corpus_token_histogram": corpus_token_histogram,
     "dedup_containment": dedup_containment,
@@ -9237,23 +7342,18 @@ QUERIES = {
     "emb_cluster_quality": emb_cluster_quality,
     "knn_ivf_lloyd": knn_ivf_lloyd,
     "corpus_tokenizer_fertility": corpus_tokenizer_fertility,
-    "dedup_minhash_est_check": dedup_minhash_est_check,
     "corpus_lexical_diversity": corpus_lexical_diversity,
     "corpus_yule_k": corpus_yule_k,
     "corpus_term_burstiness": corpus_term_burstiness,
-    "corpus_shard_skew": corpus_shard_skew,
     "corpus_partition_layout_plan": corpus_partition_layout_plan,
     "doc_readability": doc_readability,
     "doc_charclass_mix": doc_charclass_mix,
     "corpus_length_lognormal": corpus_length_lognormal,
     "corpus_cross_perplexity": corpus_cross_perplexity,
     "corpus_vocab_coverage": corpus_vocab_coverage,
-    "docs_column_profile": docs_column_profile,
     "multimodal_entropy": multimodal_entropy,
     "corpus_source_divergence": corpus_source_divergence,
-    "corpus_bootstrap_ci": corpus_bootstrap_ci,
     "corpus_profile": corpus_profile,
-    "corpus_entropy_rate": corpus_entropy_rate,
     "corpus_collocations": corpus_collocations,
     "corpus_ks_drift": corpus_ks_drift,
     "corpus_chi2_independence": corpus_chi2_independence,
@@ -9264,11 +7364,7 @@ QUERIES = {
     "emb_norm_audit": emb_norm_audit,
     "emb_isotropy": emb_isotropy,
     "emb_dim_variance": emb_dim_variance,
-    "emb_knn_label_eval": emb_knn_label_eval,
-    "corpus_split_leakage": corpus_split_leakage,
-    "corpus_ngram_coverage": corpus_ngram_coverage,
     "corpus_boilerplate_rate": corpus_boilerplate_rate,
-    "corpus_source_overlap": corpus_source_overlap,
     "emb_cosine_hist": emb_cosine_hist,
     "multimodal_integrity": multimodal_integrity,
     "knn_recall_report": knn_recall_report,
@@ -9282,7 +7378,6 @@ QUERIES = {
     "emb_hubness": emb_hubness,
     "knn_ivf_nprobe_curve": knn_ivf_nprobe_curve,
     "corpus_token_gini": corpus_token_gini,
-    "emb_label_homophily": emb_label_homophily,
 }
 
 
@@ -9401,18 +7496,12 @@ def _int8_oracle_sql() -> str:
 _INT8_ORACLE = _int8_oracle_sql()
 
 
-def _pq_ctes(ivf: tuple[int, int] | None = None) -> str:
+def _pq_ctes() -> str:
     """Shared PQ CTE chain ending in ``adcrk(query_id, neighbor_id,
     adc, rk)``: encode = rank-1 codeword per (vector, subspace) by
     quantized squared L2 with cid tie-break; ADC = the 8 quantized
     table entries summed in subspace order via an ordered list — every
-    double op in the same order as the numpy path.
-
-    ``ivf=(n_centroids, nprobe)`` adds the IVFPQ mask: corpus vectors
-    assign to their rank-1 coarse centroid, queries probe their nprobe
-    nearest lists, and the gather keeps only (query, vector) pairs in
-    a probed list — the same quantized-cos DESC / cid ASC tie-breaks
-    as the numpy path."""
+    double op in the same order as the numpy path."""
     sub = DIM // PQ_M
 
     def dist(a: str, b: str) -> str:
@@ -9426,45 +7515,6 @@ def _pq_ctes(ivf: tuple[int, int] | None = None) -> str:
     adc_chain = "(0.0 + " + " + ".join(
         f"ds[{m}]" for m in range(1, PQ_M + 1)
     ) + ")"
-    ivf_ctes = ""
-    ivf_joins = ""
-    if ivf is not None:
-        n_cent, nprobe = ivf
-        qcos = (
-            f"(floor({sql_dot('v.u', 'c.cu')} * 1000000.0 + 0.5)"
-            f" / 1000000.0)"
-        )
-        ivf_ctes = f"""ivfc AS (
-          SELECT vec_id AS cid, u AS cu FROM unitv
-          WHERE vec_id < {n_cent}
-        ),
-        iassign AS (
-          SELECT vec_id, cid AS bucket FROM (
-            SELECT v.vec_id, c.cid,
-                   row_number() OVER (
-                     PARTITION BY v.vec_id
-                     ORDER BY {qcos} DESC, c.cid
-                   ) AS rk
-            FROM unitv v CROSS JOIN ivfc c
-          ) WHERE rk = 1
-        ),
-        iprobes AS (
-          SELECT vec_id AS query_id, cid AS bucket FROM (
-            SELECT v.vec_id, c.cid,
-                   row_number() OVER (
-                     PARTITION BY v.vec_id
-                     ORDER BY {qcos} DESC, c.cid
-                   ) AS rk
-            FROM unitv v CROSS JOIN ivfc c
-            WHERE v.vec_id < {N_QUERY_VECS}
-          ) WHERE rk <= {nprobe}
-        ),
-        """
-        ivf_joins = (
-            "JOIN iassign a ON a.vec_id = e.vec_id\n"
-            "          JOIN iprobes p ON p.query_id = qd.query_id"
-            " AND p.bucket = a.bucket\n          "
-        )
     return f"""{sql_unit_cte()},
         subsp AS (SELECT unnest(generate_series(0, {PQ_M - 1})) AS m),
         cw AS (SELECT vec_id AS cid, u FROM unitv WHERE vec_id < {PQ_CODES}),
@@ -9483,11 +7533,11 @@ def _pq_ctes(ivf: tuple[int, int] | None = None) -> str:
           FROM unitv q CROSS JOIN subsp s CROSS JOIN cw c
           WHERE q.vec_id < {N_QUERY_VECS}
         ),
-        {ivf_ctes}gath AS (
+        gath AS (
           SELECT qd.query_id, e.vec_id AS neighbor_id,
                  list(qd.d ORDER BY e.m) AS ds
           FROM enc e JOIN qd ON qd.m = e.m AND qd.cid = e.code
-          {ivf_joins}WHERE e.vec_id <> qd.query_id
+          WHERE e.vec_id <> qd.query_id
           GROUP BY 1, 2
         ),
         adct AS (
@@ -9528,74 +7578,6 @@ _PQ_RERANK_ORACLE = f"""
       FROM rer
     ) WHERE rk <= {KNN_K}
 """.format(shortlist=PQ_SHORTLIST)
-
-def incr_dedup_oracle_sql(stop_scope: str) -> str:
-    """Twin of the incremental-dedup verdicts. ``stop_scope`` picks the
-    df-cap population: ``"union"`` (batch entry — cap over batch +
-    existing, matching the corpus LSH path) or ``"existing"``
-    (streaming entry — the boilerplate list is corpus-maintained, so
-    an arriving doc's verdict never depends on its micro-batch)."""
-    stop_where = (
-        ""
-        if stop_scope == "union"
-        else f"WHERE doc_id % {INCR_BATCH_MOD} <> 0 "
-    )
-    return f"""
-        WITH {_SH_CTES}, {_SHK_CTE},
-        shci AS (
-          SELECT doc_id, s FROM shk
-          WHERE s NOT IN (
-            SELECT s FROM shk {stop_where}
-            GROUP BY s HAVING count(*) > {MINHASH_DF_CAP}
-          )
-        ),
-        sigs AS (
-          SELECT doc_id, {sql_minhash_aggs()} FROM shci GROUP BY doc_id
-        ), bandsw AS (
-          SELECT doc_id, {sql_band_hashes()} FROM sigs
-        ), bands AS (
-          SELECT doc_id, 0 AS bk, band0 AS bv FROM bandsw
-          UNION ALL SELECT doc_id, 1, band1 FROM bandsw
-          UNION ALL SELECT doc_id, 2, band2 FROM bandsw
-          UNION ALL SELECT doc_id, 3, band3 FROM bandsw
-        ), cand AS (
-          SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-          FROM bands a JOIN bands b ON a.bk = b.bk AND a.bv = b.bv
-          WHERE a.doc_id % {INCR_BATCH_MOD} = 0
-            AND b.doc_id % {INCR_BATCH_MOD} <> 0
-        ), sizes AS (
-          SELECT doc_id, count(*) AS n FROM shci GROUP BY doc_id
-        ), common AS (
-          SELECT c.da, c.db, count(*) AS c
-          FROM cand c
-          JOIN shci a ON a.doc_id = c.da
-          JOIN shci b ON b.doc_id = c.db AND b.s = a.s
-          GROUP BY 1, 2
-        ), near AS (
-          SELECT DISTINCT common.da AS doc_id
-          FROM common
-          JOIN sizes sa ON common.da = sa.doc_id
-          JOIN sizes sb ON common.db = sb.doc_id
-          WHERE (floor((common.c / (sa.n + sb.n - common.c)) * 10000.0 + 0.5)
-                 / 10000.0) >= {MINHASH_THRESHOLD}
-        ), fps AS (
-          SELECT doc_id,
-                 md5(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS fp
-          FROM documents
-        ), exact AS (
-          SELECT DISTINCT b.doc_id
-          FROM fps b JOIN fps e
-            ON b.fp = e.fp AND e.doc_id % {INCR_BATCH_MOD} <> 0
-          WHERE b.doc_id % {INCR_BATCH_MOD} = 0
-        )
-        SELECT d.doc_id, d.lang,
-               CASE WHEN d.doc_id IN (SELECT doc_id FROM exact)
-                      THEN 'dup_exact'
-                    WHEN d.doc_id IN (SELECT doc_id FROM near)
-                      THEN 'dup_near'
-                    ELSE 'keep' END AS verdict
-        FROM documents d WHERE d.doc_id % {INCR_BATCH_MOD} = 0
-    """
 
 
 _SAMPLE_CASE = "CASE lang " + " ".join(
@@ -10027,32 +8009,6 @@ ORACLE = {
         FROM qdocs q
         WHERE q.doc_id NOT IN (SELECT doc_id FROM clusters)
     """,
-    "dedup_simhash": f"""
-        WITH toks AS (
-          SELECT doc_id, unnest({_W}) AS t FROM documents
-        ), fp AS (
-          SELECT doc_id, {', '.join(sql_simhash64_words('t'))}
-          FROM toks GROUP BY doc_id
-        ), bands AS (
-          SELECT doc_id, sim0, sim1, sim2, sim3, k.bk,
-                 CASE k.bk WHEN 0 THEN sim0 WHEN 1 THEN sim1
-                           WHEN 2 THEN sim2 ELSE sim3 END AS bv
-          FROM fp, (SELECT unnest([0, 1, 2, 3]) AS bk) k
-        ), cand AS (
-          SELECT DISTINCT a.doc_id AS da, b.doc_id AS db,
-                 a.sim0 AS sa0, a.sim1 AS sa1, a.sim2 AS sa2, a.sim3 AS sa3,
-                 b.sim0 AS sb0, b.sim1 AS sb1, b.sim2 AS sb2, b.sim3 AS sb3
-          FROM bands a JOIN bands b
-            ON a.bk = b.bk AND a.bv = b.bv AND a.doc_id < b.doc_id
-        )
-        SELECT da, db, sa0, sa1, sa2, sa3, sb0, sb1, sb2, sb3,
-               CAST(bit_count(xor(sa0, sb0)) + bit_count(xor(sa1, sb1))
-                  + bit_count(xor(sa2, sb2)) + bit_count(xor(sa3, sb3))
-                 AS BIGINT) AS hamming
-        FROM cand
-        WHERE bit_count(xor(sa0, sb0)) + bit_count(xor(sa1, sb1))
-            + bit_count(xor(sa2, sb2)) + bit_count(xor(sa3, sb3)) <= 3
-    """,
     "emb_neardup": f"""
         WITH {sql_unit_cte()}
         SELECT a.vec_id AS da, b.vec_id AS db,
@@ -10134,7 +8090,6 @@ ORACLE = {
         )
         SELECT doc_id, {sql_band_hashes()} FROM sigs
     """,
-    "corpus_dedup_incremental": incr_dedup_oracle_sql("union"),
     "knn_lsh": f"""
         WITH {sql_unit_cte()},
         {sql_adaptive_bits_cte('embeddings')},
@@ -10724,57 +8679,6 @@ ORACLE["search_mrr"] = f"""
     FROM scored CROSS JOIN m
 """
 
-ORACLE["search_ndcg"] = f"""
-    WITH {sql_unit_cte()},
-    rel AS (
-      SELECT query_id, neighbor_id AS doc_id FROM (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               row_number() OVER (
-                 PARTITION BY q.vec_id
-                 ORDER BY (floor({sql_dot('q.u', 'c.u')} * 1000000.0 + 0.5)
-                           / 1000000.0) DESC,
-                          c.vec_id
-               ) AS rk
-        FROM unitv q JOIN unitv c ON q.vec_id <> c.vec_id
-        WHERE q.vec_id < {N_QUERY_VECS}
-      ) WHERE rk <= {BM25_K}
-    ),
-    {_bm25_oracle_ctes(BM25_K)},
-    joined AS (
-      SELECT l.query_id, l.doc_id, l.rk,
-             CASE WHEN r.doc_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-      FROM lex l LEFT JOIN rel r
-        ON l.query_id = r.query_id AND l.doc_id = r.doc_id
-    ),
-    per AS (
-      SELECT query_id,
-             CAST(count(*) AS BIGINT) AS n_ranked,
-             CAST(sum(hit) AS BIGINT) AS n_hits,
-             sum(CASE WHEN hit = 1
-                 THEN 1.0 / log2(rk + 1) ELSE 0.0 END) AS dcg_raw
-      FROM joined GROUP BY 1
-    ),
-    reln AS (
-      SELECT query_id, CAST(count(*) AS BIGINT) AS n_rel
-      FROM rel GROUP BY 1
-    ),
-    ig AS (
-      SELECT a.i AS m, sum(1.0 / log2(b.i + 1)) AS idcg
-      FROM generate_series(1, {BM25_K}) a(i)
-      JOIN generate_series(1, {BM25_K}) b(i) ON b.i <= a.i
-      GROUP BY 1
-    )
-    SELECT p.query_id, n.n_rel, p.n_hits,
-           {sql_quantize('p.dcg_raw', 6)} AS dcg,
-           CASE WHEN n.n_rel > 0 THEN
-             {sql_quantize('p.dcg_raw / g.idcg', 6)}
-           END AS ndcg,
-           CASE WHEN n.n_rel > 0 THEN
-             {sql_quantize('CAST(p.n_hits AS DOUBLE) / n.n_rel', 6)}
-           END AS recall
-    FROM per p JOIN reln n USING (query_id)
-    JOIN ig g ON g.m = least(n.n_rel, {BM25_K})
-"""
 
 ORACLE["search_rrf"] = f"""
     WITH {sql_unit_cte()},
@@ -10875,34 +8779,6 @@ ORACLE["dedup_bloom"] = f"""
     FROM bflags GROUP BY doc_id
 """
 
-ORACLE["emb_dedup_incremental"] = f"""
-    WITH {sql_unit_cte()},
-    iex AS (SELECT vec_id, u FROM unitv WHERE vec_id % 2 = 0),
-    ibt AS (SELECT vec_id, u FROM unitv WHERE vec_id % 2 = 1),
-    ihits AS (
-      SELECT b.vec_id, e.vec_id AS match_id,
-             (floor({sql_dot('b.u', 'e.u')} * 1000000.0 + 0.5)
-              / 1000000.0) AS cos
-      FROM ibt b JOIN iex e
-        ON (floor({sql_dot('b.u', 'e.u')} * 1000000.0 + 0.5)
-            / 1000000.0) >= {NEARDUP_COS}
-    ),
-    ibest AS (
-      SELECT vec_id, match_id, cos FROM (
-        SELECT vec_id, match_id, cos,
-               row_number() OVER (
-                 PARTITION BY vec_id ORDER BY cos DESC, match_id
-               ) AS rn
-        FROM ihits
-      ) WHERE rn = 1
-    )
-    SELECT b.vec_id,
-           CASE WHEN ibest.vec_id IS NOT NULL
-                THEN 'dup_near' ELSE 'keep' END AS verdict,
-           ibest.match_id, ibest.cos
-    FROM (SELECT vec_id FROM embeddings WHERE vec_id % 2 = 1) b
-    LEFT JOIN ibest ON b.vec_id = ibest.vec_id
-"""
 
 _OUTLIER_COS_EXPR = sql_quantize(
     sql_cosine("e.embedding", "carr.centroid"), 6
@@ -10928,11 +8804,6 @@ ORACLE["emb_outliers"] = f"""
     FROM embeddings e JOIN carr ON e.label = carr.label
 """
 
-ORACLE["knn_ivfpq"] = f"""
-    WITH {_pq_ctes((IVF_CENTROIDS, IVFPQ_NPROBE))}
-    SELECT query_id, neighbor_id, adc, rk
-    FROM adcrk WHERE rk <= {KNN_K}
-"""
 
 ORACLE["emb_ivf_export"] = f"""
     WITH {sql_unit_cte()},
@@ -11608,40 +9479,6 @@ ORACLE["corpus_tokenizer_fertility"] = f"""
 """
 
 
-def _minhash_est_check_oracle() -> str:
-    eq = " + ".join(
-        f"(CASE WHEN sa.h{j} = sb.h{j} THEN 1 ELSE 0 END)"
-        for j in range(16)
-    )
-    return f"""
-    WITH {_LSH_PAIR_CTES},
-    est AS (
-      SELECT c.da, c.db, ({eq}) AS m
-      FROM cand c
-      JOIN sigs sa ON sa.doc_id = c.da
-      JOIN sigs sb ON sb.doc_id = c.db
-    )
-    SELECT est.da, est.db,
-           CAST(est.m AS BIGINT) AS est_matches,
-           {sql_quantize('est.m / 16.0', 4)} AS est_jaccard,
-           jac.jaccard,
-           {sql_quantize('abs(est.m / 16.0 - jac.jaccard)', 4)}
-             AS abs_err,
-           (abs(est.m / 16.0 - jac.jaccard)
-            <= 3 * sqrt(jac.jaccard * (1 - jac.jaccard) / 16.0)
-               + 1.0 / 32) AS within_3sd
-    FROM est JOIN jac ON est.da = jac.da AND est.db = jac.db
-"""
-
-
-ORACLE["dedup_minhash_est_check"] = _minhash_est_check_oracle()
-
-ORACLE["docs_column_profile"] = profile_oracle_sql(
-    "documents",
-    ["doc_id", "text", "lang", "source", "n_chars"],
-    {"doc_id": "doc_id", "n_chars": "n_chars"},
-)
-
 ORACLE["corpus_vocab_coverage"] = f"""
     WITH toks AS (
       SELECT unnest({_W}) AS term FROM documents
@@ -11835,46 +9672,6 @@ ORACLE["corpus_partition_layout_plan"] = f"""
     FROM per CROSS JOIN tot
 """
 
-ORACLE["corpus_shard_skew"] = f"""
-    WITH d AS (
-      SELECT CAST((CAST(doc_id * 2654435761 AS BIGINT) % 1000000)
-                  % {N_SHARDS} AS BIGINT) AS shard,
-             CAST({SQL_TOKEN_COUNT.format(c='text')} AS BIGINT)
-               AS n_tokens
-      FROM documents
-    ),
-    per AS (
-      SELECT shard,
-             CAST(count(*) AS BIGINT) AS n_docs,
-             CAST(sum(n_tokens) AS BIGINT) AS shard_tokens
-      FROM d GROUP BY 1
-    ),
-    agg AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_shards,
-             CAST(sum(n_docs) AS BIGINT) AS n_docs,
-             CAST(sum(shard_tokens) AS BIGINT) AS total_tokens,
-             CAST(min(shard_tokens) AS BIGINT) AS min_shard_tokens,
-             CAST(max(shard_tokens) AS BIGINT) AS max_shard_tokens,
-             sum(shard_tokens * shard_tokens) AS sq
-      FROM per
-    ),
-    m AS (
-      SELECT *,
-             CAST(total_tokens AS DOUBLE) / n_shards AS mean,
-             greatest((CAST(sq AS DOUBLE)
-               - CAST(total_tokens AS DOUBLE)
-                 * (CAST(total_tokens AS DOUBLE) / n_shards))
-               / n_shards, 0.0) AS var
-      FROM agg
-    )
-    SELECT n_shards, n_docs, total_tokens,
-           min_shard_tokens, max_shard_tokens,
-           {sql_quantize('sqrt(var) / mean', 6)} AS load_cv,
-           {sql_quantize(
-               'CAST(max_shard_tokens AS DOUBLE) / mean', 6)}
-             AS max_to_mean
-    FROM m
-"""
 
 ORACLE["dedup_lsh_recall"] = ORACLE["dedup_lsh_recall"].replace(
     "{LSH_ORACLE}", ORACLE["dedup_minhash_lsh"]
@@ -11905,46 +9702,6 @@ ORACLE["emb_dim_variance"] = f"""
     FROM scored CROSS JOIN tot
 """
 
-ORACLE["emb_knn_label_eval"] = f"""
-    WITH edges AS (
-      SELECT da, db FROM ({ORACLE['knn_graph']})
-    ),
-    votes AS (
-      SELECT e.da AS vec_id, l.label AS nb_label,
-             CAST(count(*) AS BIGINT) AS v
-      FROM edges e JOIN embeddings l ON e.db = l.vec_id
-      GROUP BY 1, 2
-    ),
-    mx AS (
-      SELECT vec_id, CAST(max(v) AS BIGINT) AS max_v
-      FROM votes GROUP BY 1
-    ),
-    pred AS (
-      SELECT v.vec_id, min(v.nb_label) AS pred_label
-      FROM votes v JOIN mx USING (vec_id)
-      WHERE v.v = mx.max_v GROUP BY 1
-    ),
-    j AS (
-      SELECT o.label,
-             p.pred_label = o.label AS hit,
-             p.pred_label IS NOT NULL AS voted
-      FROM embeddings o LEFT JOIN pred p ON o.vec_id = p.vec_id
-    ),
-    per AS (
-      SELECT label,
-             CAST(count(*) AS BIGINT) AS n_vectors,
-             CAST(sum(CASE WHEN voted THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_voted,
-             CAST(sum(CASE WHEN hit THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_correct
-      FROM j GROUP BY 1
-    )
-    SELECT label, n_vectors, n_voted, n_correct,
-           CASE WHEN n_voted > 0 THEN
-             {sql_quantize('CAST(n_correct AS DOUBLE) / n_voted', 6)}
-           END AS loo_accuracy
-    FROM per
-"""
 
 ORACLE["emb_isotropy"] = f"""
     WITH {sql_unit_cte()},
@@ -12019,59 +9776,6 @@ ORACLE["corpus_term_burstiness"] = f"""
     LIMIT {BURST_TOP_K}
 """
 
-ORACLE["corpus_split_balance"] = f"""
-    WITH assigned AS (
-      SELECT CASE
-               WHEN (CAST(doc_id * 2654435761 AS BIGINT) % 1000000)
-                    / 1000000.0 < 0.9 THEN 'train'
-               WHEN (CAST(doc_id * 2654435761 AS BIGINT) % 1000000)
-                    / 1000000.0 < 0.95 THEN 'val'
-               ELSE 'test'
-             END AS split, lang
-      FROM documents
-    ),
-    cells AS (
-      SELECT split, lang, CAST(count(*) AS BIGINT) AS n
-      FROM assigned GROUP BY 1, 2
-    ),
-    rm AS (SELECT split, CAST(sum(n) AS BIGINT) AS row_n
-           FROM cells GROUP BY 1),
-    cm AS (SELECT lang, CAST(sum(n) AS BIGINT) AS col_n
-           FROM cells GROUP BY 1),
-    tot AS (SELECT CAST(sum(n) AS BIGINT) AS total FROM cells),
-    terms AS (
-      SELECT (CAST(c.n AS DOUBLE)
-              - CAST(r.row_n AS DOUBLE) * m.col_n / t.total)
-             * (CAST(c.n AS DOUBLE)
-                - CAST(r.row_n AS DOUBLE) * m.col_n / t.total)
-             / (CAST(r.row_n AS DOUBLE) * m.col_n / t.total) AS term
-      FROM cells c JOIN rm r USING (split) JOIN cm m USING (lang)
-      CROSS JOIN tot t
-    ),
-    counts AS (
-      SELECT CAST(count(DISTINCT split) AS BIGINT) AS n_splits,
-             CAST(count(DISTINCT lang) AS BIGINT) AS n_langs
-      FROM cells
-    ),
-    agg AS (
-      SELECT sum(term) AS chi2_raw, n_splits, n_langs,
-             (n_splits - 1) * (n_langs - 1) AS dof
-      FROM terms CROSS JOIN counts GROUP BY 2, 3
-    )
-    SELECT n_splits, n_langs, CAST(dof AS BIGINT) AS dof,
-           {sql_quantize('chi2_raw', 4)} AS chi2,
-           CASE WHEN dof >= 1 THEN
-             {sql_quantize('chi2_raw', 4)} >
-               (CASE least(dof, 12)
-                  WHEN 1 THEN 3.841 WHEN 2 THEN 5.991
-                  WHEN 3 THEN 7.815 WHEN 4 THEN 9.488
-                  WHEN 5 THEN 11.070 WHEN 6 THEN 12.592
-                  WHEN 7 THEN 14.067 WHEN 8 THEN 15.507
-                  WHEN 9 THEN 16.919 WHEN 10 THEN 18.307
-                  WHEN 11 THEN 19.675 WHEN 12 THEN 21.026 END)
-           END AS mix_skewed_95
-    FROM agg
-"""
 
 ORACLE["doc_charclass_mix"] = f"""
     WITH per_doc AS (
@@ -12242,57 +9946,6 @@ ORACLE["corpus_source_divergence"] = f"""
 """
 
 
-def _bootstrap_ci_oracle() -> str:
-    from ..functions.hashing import sql_shingle_key
-
-    fold = sql_shingle_key(
-        f"concat('{BOOT_SEED}|', CAST(b.b AS VARCHAR), '|',"
-        " CAST(qi.doc_id AS VARCHAR))"
-    )
-    cases = " ".join(
-        f"WHEN u < {BOOT_CDF[k]!r} THEN {k}" for k in range(len(BOOT_CDF))
-    )
-    return f"""
-    WITH {_quality_docs_cte()},
-    qi AS (
-      SELECT doc_id,
-             CAST(round(quality_score * 10000) AS BIGINT) AS qi
-      FROM qdocs
-    ),
-    b AS (SELECT unnest(generate_series(0, {BOOT_B - 1})) AS b),
-    reps AS (
-      SELECT b.b, qi.qi,
-             CAST({fold} AS DOUBLE) / 1152921504606846976.0 AS u
-      FROM qi, b
-    ),
-    w AS (
-      SELECT b, qi,
-             CAST(CASE {cases} ELSE {len(BOOT_CDF)} END AS BIGINT) AS w
-      FROM reps
-    ),
-    means AS (
-      SELECT b,
-             CAST(sum(w * qi) AS DOUBLE) / (sum(w) * 10000.0)
-               AS rep_mean
-      FROM w GROUP BY 1
-    ),
-    base AS (
-      SELECT CAST(sum(qi) AS DOUBLE) / (count(*) * 10000.0)
-               AS mean_quality
-      FROM qi
-    )
-    SELECT {sql_quantize('any_value(base.mean_quality)', 6)}
-             AS mean_quality,
-           CAST(count(*) AS BIGINT) AS n_replicates,
-           {sql_quantize('quantile_cont(rep_mean, 0.025)', 6)} AS ci_lo,
-           {sql_quantize('quantile_cont(rep_mean, 0.975)', 6)} AS ci_hi
-    FROM means, base
-"""
-
-
-ORACLE["corpus_bootstrap_ci"] = _bootstrap_ci_oracle()
-
-
 def _profile_oracle() -> str:
     cols = ["doc_id", "text", "lang", "source", "n_chars"]
     branches = "\n      UNION ALL ".join(
@@ -12313,62 +9966,6 @@ def _profile_oracle() -> str:
 
 ORACLE["corpus_profile"] = _profile_oracle()
 
-ORACLE["corpus_entropy_rate"] = f"""
-    WITH toks AS (
-      SELECT lang, doc_id,
-             unnest(generate_series(1, len({_W}))) AS i,
-             unnest({_W}) AS w
-      FROM documents
-    ),
-    uni AS (
-      SELECT lang, w, count(*) AS f1 FROM toks GROUP BY 1, 2
-    ),
-    n1 AS (SELECT lang, sum(f1) AS n_tokens FROM uni GROUP BY 1),
-    bi AS (
-      SELECT a.lang, a.w, b.w AS w2, count(*) AS f12
-      FROM toks a
-      JOIN toks b
-        ON a.lang = b.lang AND a.doc_id = b.doc_id AND b.i = a.i + 1
-      GROUP BY 1, 2, 3
-    ),
-    w1m AS (SELECT lang, w, sum(f12) AS fw1 FROM bi GROUP BY 1, 2),
-    nb AS (SELECT lang, sum(f12) AS n_bigrams FROM bi GROUP BY 1),
-    h1 AS (
-      SELECT uni.lang,
-             CAST(any_value(n1.n_tokens) AS BIGINT) AS n_tokens,
-             {sql_quantize(
-                 'sum(CASE WHEN p1 > 0 THEN -p1 * log2(p1)'
-                 ' ELSE 0.0 END)', 6)} AS h1_bits
-      FROM (
-        SELECT uni.*,
-               floor(uni.f1 / n1.n_tokens * 1000000000.0 + 0.5)
-                 / 1000000000.0 AS p1
-        FROM uni JOIN n1 USING (lang)
-      ) uni JOIN n1 USING (lang)
-      GROUP BY 1
-    ),
-    h2 AS (
-      SELECT lang,
-             {sql_quantize(
-                 'sum(CASE WHEN pj > 0 AND pc > 0'
-                 ' THEN -pj * log2(pc) ELSE 0.0 END)', 6)} AS h2_bits
-      FROM (
-        SELECT bi.lang,
-               floor(bi.f12 / nb.n_bigrams * 1000000000.0 + 0.5)
-                 / 1000000000.0 AS pj,
-               floor(bi.f12 / w1m.fw1 * 1000000000.0 + 0.5)
-                 / 1000000000.0 AS pc
-        FROM bi
-        JOIN w1m ON bi.lang = w1m.lang AND bi.w = w1m.w
-        JOIN nb ON bi.lang = nb.lang
-      )
-      GROUP BY 1
-    )
-    SELECT h1.lang, h1.n_tokens, h1.h1_bits, h2.h2_bits,
-           {sql_quantize('1 - h2.h2_bits / h1.h1_bits', 6)}
-             AS redundancy
-    FROM h1 JOIN h2 USING (lang)
-"""
 
 ORACLE["corpus_collocations"] = f"""
     WITH toks AS (
@@ -12618,72 +10215,6 @@ ORACLE["emb_norm_audit"] = f"""
     FROM n
 """
 
-ORACLE["corpus_split_leakage"] = f"""
-    WITH sp AS ({ORACLE['corpus_split']}),
-    fp AS (
-      SELECT doc_id,
-             md5(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS fp
-      FROM documents
-    ),
-    g AS (
-      SELECT fp.fp,
-             sum(CASE WHEN sp.split = 'train' THEN 1 ELSE 0 END) AS tr,
-             sum(CASE WHEN sp.split = 'val' THEN 1 ELSE 0 END) AS va,
-             sum(CASE WHEN sp.split = 'test' THEN 1 ELSE 0 END) AS te,
-             count(*) AS n
-      FROM sp JOIN fp USING (doc_id)
-      GROUP BY 1
-      HAVING count(*) >= 2
-    )
-    SELECT CAST(count(*) AS BIGINT) AS n_dup_groups,
-           CAST(coalesce(sum(CASE WHEN
-                 (CASE WHEN tr > 0 THEN 1 ELSE 0 END)
-               + (CASE WHEN va > 0 THEN 1 ELSE 0 END)
-               + (CASE WHEN te > 0 THEN 1 ELSE 0 END) > 1
-               THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_cross_split_groups,
-           CAST(coalesce(sum(tr * va), 0) AS BIGINT) AS pairs_train_val,
-           CAST(coalesce(sum(tr * te), 0) AS BIGINT) AS pairs_train_test,
-           CAST(coalesce(sum(va * te), 0) AS BIGINT) AS pairs_val_test,
-           CAST(coalesce(sum(CASE WHEN tr > 0 THEN va ELSE 0 END), 0)
-             AS BIGINT) AS leaked_val_docs,
-           CAST(coalesce(sum(CASE WHEN tr > 0 THEN te ELSE 0 END), 0)
-             AS BIGINT) AS leaked_test_docs
-    FROM g
-"""
-
-ORACLE["corpus_ngram_coverage"] = f"""
-    WITH tk AS (
-      SELECT unnest({SQL_WORDS.format(c='text')}) AS term FROM documents
-    ),
-    cf AS (
-      SELECT term, CAST(count(*) AS BIGINT) AS f FROM tk GROUP BY 1
-    ),
-    tot AS (
-      SELECT CAST(sum(f) AS BIGINT) AS total_tokens,
-             CAST(count(*) AS BIGINT) AS vocab_size
-      FROM cf
-    ),
-    ranked AS (
-      SELECT f, row_number() OVER (ORDER BY f DESC, term) AS rk
-      FROM cf
-    ),
-    ns AS (
-      SELECT unnest([{", ".join(str(n) for n in VOCAB_COV_NS)}]) AS top_n
-    ),
-    cov AS (
-      SELECT CAST(ns.top_n AS BIGINT) AS top_n,
-             CAST(count(*) AS BIGINT) AS n_terms,
-             CAST(sum(ranked.f) AS BIGINT) AS covered_tokens
-      FROM ns JOIN ranked ON ranked.rk <= ns.top_n
-      GROUP BY 1
-    )
-    SELECT cov.top_n, cov.n_terms, cov.covered_tokens,
-           tot.total_tokens, tot.vocab_size,
-           {sql_quantize(
-               'CAST(cov.covered_tokens AS DOUBLE) / tot.total_tokens', 6)}
-             AS covered_share
-    FROM cov, tot
-"""
 
 ORACLE["corpus_boilerplate_rate"] = f"""
     WITH {_SH_CTES}, {_SHK_CTE},
@@ -12703,31 +10234,6 @@ ORACLE["corpus_boilerplate_rate"] = f"""
     GROUP BY 1
 """
 
-ORACLE["corpus_source_overlap"] = f"""
-    WITH st AS (
-      SELECT DISTINCT source,
-             unnest({SQL_WORDS.format(c='text')}) AS term
-      FROM documents
-    ),
-    sizes AS (
-      SELECT source, CAST(count(*) AS BIGINT) AS n_terms
-      FROM st GROUP BY 1
-    ),
-    inter AS (
-      SELECT a.source AS source_a, b.source AS source_b,
-             CAST(count(*) AS BIGINT) AS n_common
-      FROM st a JOIN st b ON a.term = b.term AND a.source < b.source
-      GROUP BY 1, 2
-    )
-    SELECT i.source_a, i.source_b, i.n_common,
-           {sql_quantize(
-               'CAST(i.n_common AS DOUBLE)'
-               ' / (sa.n_terms + sb.n_terms - i.n_common)', 6)}
-             AS jaccard
-    FROM inter i
-    JOIN sizes sa ON sa.source = i.source_a
-    JOIN sizes sb ON sb.source = i.source_b
-"""
 
 _COS_AB = (
     f"({sql_dot('a.embedding', 'b.embedding')}"
@@ -13090,42 +10596,6 @@ ORACLE["corpus_token_gini"] = f"""
     FROM mad, tot
 """
 
-ORACLE["emb_label_homophily"] = f"""
-    WITH {_KNN_GRAPH_CTES},
-    edges AS (
-      SELECT la.label AS label_a, lb.label AS label_b
-      FROM knng
-      JOIN embeddings la ON la.vec_id = knng.da
-      JOIN embeddings lb ON lb.vec_id = knng.db
-    ),
-    obs AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_edges,
-             CAST(sum(CASE WHEN label_a = label_b THEN 1 ELSE 0 END)
-               AS BIGINT) AS n_same
-      FROM edges
-    ),
-    marg AS (
-      SELECT label, CAST(count(*) AS BIGINT) AS c
-      FROM embeddings GROUP BY 1
-    ),
-    tot AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM marg),
-    expd AS (
-      SELECT {sql_quantize(
-          'sum((CAST(marg.c AS DOUBLE) / tot.n)'
-          ' * (CAST(marg.c AS DOUBLE) / tot.n))', 9)}
-        AS expected_same_share
-      FROM marg, tot
-    )
-    SELECT obs.n_edges, obs.n_same,
-           {sql_quantize(
-               'CAST(obs.n_same AS DOUBLE) / obs.n_edges', 6)}
-             AS same_label_share,
-           expd.expected_same_share,
-           {sql_quantize(
-               '(CAST(obs.n_same AS DOUBLE) / obs.n_edges)'
-               ' / expd.expected_same_share', 4)} AS homophily_lift
-    FROM obs, expd
-"""
 
 _JL_PROJ_CTE = f"""
     r AS (
@@ -13174,245 +10644,6 @@ ORACLE["emb_jl_distortion"] = f"""
     FROM scored
 """
 
-def _matryoshka_oracle() -> str:
-    """Per-prefix unit CTEs + top-k + hit counts vs full-dim truth."""
-    q6 = lambda x: f"(floor({x} * 1000000.0 + 0.5) / 1000000.0)"
-
-    def unit_cte(m: int) -> str:
-        return (
-            f"unit{m} AS (SELECT vec_id, "
-            f"list_transform(embedding[1:{m}], x -> "
-            f"CAST(x AS DOUBLE) / "
-            f"sqrt({sql_dot('embedding', 'embedding', m)})) AS u "
-            f"FROM embeddings)"
-        )
-
-    def knn_cte(name: str, src: str, dim: int) -> str:
-        cos = q6(sql_dot("q.u", "c.u", dim))
-        return (
-            f"{name} AS (SELECT query_id, neighbor_id FROM ("
-            f"SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, "
-            f"row_number() OVER (PARTITION BY q.vec_id "
-            f"ORDER BY {cos} DESC, c.vec_id) AS rk "
-            f"FROM {src} q JOIN {src} c ON q.vec_id <> c.vec_id "
-            f"WHERE q.vec_id < {N_QUERY_VECS}"
-            f") WHERE rk <= {KNN_K})"
-        )
-
-    ctes = [sql_unit_cte(), knn_cte("truth", "unitv", DIM)]
-    selects = []
-    for m in MATRYOSHKA_DIMS:
-        ctes.append(unit_cte(m))
-        ctes.append(knn_cte(f"knn{m}", f"unit{m}", m))
-        selects.append(
-            f"SELECT CAST({m} AS BIGINT) AS prefix_dim, "
-            f"(SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_truth, "
-            f"(SELECT CAST(count(*) AS BIGINT) FROM knn{m} h "
-            f" JOIN truth t ON h.query_id = t.query_id "
-            f" AND h.neighbor_id = t.neighbor_id) AS n_hits"
-        )
-    body = " UNION ALL ".join(
-        f"SELECT prefix_dim, n_truth, n_hits, "
-        f"{sql_quantize('CAST(n_hits AS DOUBLE) / n_truth', 6)} AS recall "
-        f"FROM ({s})"
-        for s in selects
-    )
-    return "WITH " + ",\n".join(ctes) + "\n" + body
-
-
-ORACLE["emb_matryoshka_eval"] = _matryoshka_oracle()
-
-def _rake_oracle() -> str:
-    stop_case = " ".join(
-        "WHEN '{}' THEN w IN ({})".format(
-            lang, ", ".join(f"'{w}'" for w in stops)
-        )
-        for lang, stops in STOPWORDS.items()
-    )
-    return f"""
-    WITH base AS (
-      SELECT doc_id, lang,
-             {SQL_WORDS.format(c='text')} AS arr
-      FROM documents
-    ),
-    idx AS (
-      SELECT doc_id, lang, arr,
-             unnest(generate_series(1, len(arr))) AS i
-      FROM base
-    ),
-    tok AS (
-      SELECT doc_id, i, arr[i] AS w,
-             CASE lang {stop_case} ELSE FALSE END AS is_stop
-      FROM idx
-    ),
-    seg AS (
-      SELECT doc_id, i, w, is_stop,
-             sum(CASE WHEN is_stop THEN 1 ELSE 0 END)
-               OVER (PARTITION BY doc_id ORDER BY i) AS phrase_id
-      FROM tok
-    ),
-    members AS (
-      SELECT doc_id, phrase_id, i, w FROM seg WHERE NOT is_stop
-    ),
-    phrases AS (
-      SELECT doc_id, phrase_id,
-             string_agg(w, ' ' ORDER BY i) AS phrase,
-             CAST(count(*) AS BIGINT) AS plen
-      FROM members GROUP BY 1, 2
-    ),
-    wstats AS (
-      SELECT m.w, CAST(count(*) AS BIGINT) AS freq,
-             CAST(sum(p.plen) AS BIGINT) AS degree
-      FROM members m
-      JOIN phrases p USING (doc_id, phrase_id)
-      GROUP BY 1
-    ),
-    pscore AS (
-      SELECT m.doc_id, m.phrase_id,
-             sum(CAST(s.degree AS DOUBLE) / s.freq) AS score
-      FROM members m JOIN wstats s USING (w)
-      GROUP BY 1, 2
-    ),
-    per AS (
-      SELECT p.phrase,
-             CAST(count(*) AS BIGINT) AS n_occurrences,
-             {sql_quantize('max(ps.score)', 4)} AS score
-      FROM phrases p JOIN pscore ps USING (doc_id, phrase_id)
-      WHERE p.plen <= 4
-      GROUP BY 1
-      HAVING count(*) >= 2
-    )
-    SELECT phrase, n_occurrences, score FROM per
-    ORDER BY score DESC, phrase LIMIT {RAKE_TOPK}
-"""
-
-
-ORACLE["corpus_keyphrase_rake"] = _rake_oracle()
-
-def _textrank_oracle() -> str:
-    q9 = lambda e: sql_quantize(e, 9)  # noqa: E731
-    stop_case = " ".join(
-        "WHEN '{}' THEN w IN ({})".format(
-            lang, ", ".join(f"'{w}'" for w in stops)
-        )
-        for lang, stops in STOPWORDS.items()
-    )
-    parts = [
-        f"""base AS (
-      SELECT doc_id, lang, {SQL_WORDS.format(c='text')} AS arr
-      FROM documents
-    )""",
-        """idx AS (
-      SELECT doc_id, lang, arr,
-             unnest(generate_series(1, len(arr))) AS i
-      FROM base
-    )""",
-        f"""tok AS (
-      SELECT doc_id, i, arr[i] AS w
-      FROM idx
-      WHERE NOT (CASE lang {stop_case} ELSE FALSE END)
-    )""",
-        """prs AS (
-      SELECT a.w AS w1, b.w AS w2
-      FROM tok a JOIN tok b
-        ON a.doc_id = b.doc_id AND b.i = a.i + 1
-      UNION ALL
-      SELECT a.w AS w1, b.w AS w2
-      FROM tok a JOIN tok b
-        ON a.doc_id = b.doc_id AND b.i = a.i + 2
-    )""",
-        """edges AS (
-      SELECT DISTINCT src, dst FROM (
-        SELECT w1 AS src, w2 AS dst FROM prs WHERE w1 <> w2
-        UNION ALL
-        SELECT w2 AS src, w1 AS dst FROM prs WHERE w1 <> w2
-      )
-    )""",
-        """deg AS (SELECT src AS term, count(*) AS deg
-      FROM edges GROUP BY 1)""",
-        """tot AS (SELECT count(*) AS n FROM deg)""",
-        f"""r0 AS (SELECT term, deg, {q9('1.0 / tot.n')} AS r
-      FROM deg, tot)""",
-    ]
-    prev = "r0"
-    for i in range(1, TEXTRANK_ITERS + 1):
-        parts.append(
-            f"""c{i} AS (
-      SELECT e.dst AS term, sum(p.r / p.deg) AS c
-      FROM edges e JOIN {prev} p ON p.term = e.src
-      GROUP BY 1
-    )"""
-        )
-        parts.append(
-            f"""r{i} AS (
-      SELECT d.term, d.deg,
-             {q9(
-                 f'(1.0 - {TEXTRANK_DAMP}) / tot.n'
-                 f' + {TEXTRANK_DAMP} * c{i}.c')} AS r
-      FROM deg d JOIN c{i} ON d.term = c{i}.term, tot
-    )"""
-        )
-        prev = f"r{i}"
-    return (
-        "WITH "
-        + ",\n    ".join(parts)
-        + f"""
-    SELECT term, CAST(deg AS BIGINT) AS degree,
-           {sql_quantize('r', 8)} AS rank
-    FROM {prev}
-    ORDER BY rank DESC, term LIMIT {TEXTRANK_TOPK}
-"""
-    )
-
-
-ORACLE["corpus_textrank_terms"] = _textrank_oracle()
-
-ORACLE["corpus_budget_waterfill"] = f"""
-    WITH per AS (
-      SELECT source,
-             CAST(sum({SQL_TOKEN_COUNT.format(c='text')}) AS BIGINT)
-               AS avail
-      FROM documents GROUP BY 1
-    ),
-    tot AS (
-      SELECT CAST(sum(avail) AS BIGINT) AS total,
-             CAST(count(*) AS BIGINT) AS n_src,
-             CAST(floor(sum(avail) * {WATERFILL_BUDGET_SHARE})
-               AS BIGINT) AS budget
-      FROM per
-    ),
-    ranked AS (
-      SELECT p.source, p.avail,
-             CAST(count(b.source) AS BIGINT) AS n_before,
-             CAST(coalesce(sum(b.avail), 0) AS BIGINT) AS prev_prefix
-      FROM per p LEFT JOIN per b
-        ON b.avail < p.avail
-        OR (b.avail = p.avail AND b.source < p.source)
-      GROUP BY 1, 2
-    ),
-    cand AS (
-      SELECT r.source, r.avail, r.n_before,
-             CAST(t.budget - r.prev_prefix AS DOUBLE)
-               / CAST(t.n_src - r.n_before AS DOUBLE) AS lam
-      FROM ranked r CROSS JOIN tot t
-    ),
-    level AS (
-      SELECT min_by(lam, n_before) AS lam
-      FROM cand WHERE lam <= avail
-    ),
-    alloc AS (
-      SELECT p.source, p.avail, t.budget,
-             CASE WHEN l.lam IS NULL THEN CAST(p.avail AS DOUBLE)
-                  ELSE least(CAST(p.avail AS DOUBLE), l.lam)
-             END AS a
-      FROM per p CROSS JOIN level l CROSS JOIN tot t
-    )
-    SELECT source, avail, budget,
-           {sql_quantize('a', 4)} AS allocation,
-           {sql_quantize('a / avail', 6)} AS fill_share,
-           a >= CAST(avail AS DOUBLE) AS capped
-    FROM alloc
-"""
 
 ORACLE["multimodal_neardup"] = f"""
     WITH feats AS ({ORACLE['multimodal_features']}),
@@ -13434,147 +10665,6 @@ ORACLE["multimodal_neardup"] = f"""
              / 1000000.0) >= {MM_NEARDUP_COS}
 """
 
-
-def _mm_banded_bucket_sql(band: int) -> str:
-    """Base-3 tercile-signature bucket of one 6-informative-dim band
-    (stride-2 wrap over the ``inf`` id list) — twin of
-    ``multimodal_neardup_banded``'s ``band_bucket`` Column. ``inf``
-    holds 0-based dim ids; DuckDB lists are 1-indexed, hence the two
-    ``+ 1`` adjustments (list position, then dim id -> u index)."""
-    terms = []
-    for p in range(MM_BANDED_BAND_DIMS):
-        dim = (
-            f"CAST(c.inf[(({2 * band + p}) % "
-            f"greatest(len(c.inf), 1)) + 1] + 1 AS INT)"
-        )
-        terms.append(
-            f"(CASE WHEN u[{dim}] <= c.c1s[{dim}] THEN 0 "
-            f"WHEN u[{dim}] <= c.c2s[{dim}] THEN 1 ELSE 2 END) "
-            f"* {3 ** p}"
-        )
-    return "CAST(" + " + ".join(terms) + " AS BIGINT)"
-
-
-def _mm_banded_bucketed_sql() -> str:
-    legs = [
-        f"SELECT doc_id, u, {b} AS band,\n"
-        f"             {_mm_banded_bucket_sql(b)} AS bucket\n"
-        f"      FROM unitf, cutarr c"
-        for b in range(MM_BANDED_BANDS)
-    ]
-    return "\n      UNION ALL\n      ".join(legs)
-
-
-ORACLE["multimodal_neardup_banded"] = f"""
-    WITH feats AS ({ORACLE['multimodal_features']}),
-    flist AS (
-      SELECT doc_id, list(share ORDER BY bin) AS f
-      FROM feats GROUP BY 1
-    ),
-    unitf AS (
-      SELECT doc_id,
-             list_transform(f, x -> CAST(x AS DOUBLE) /
-               sqrt({sql_dot('f', 'f', 16)})) AS u
-      FROM flist
-    ),
-    cuts AS (
-      SELECT i,
-             {sql_quantize('quantile_cont(val, 0.3333333333333333)', 9)}
-               AS c1,
-             {sql_quantize('quantile_cont(val, 0.6666666666666666)', 9)}
-               AS c2
-      FROM (
-        SELECT u[CAST(d.i AS INT)] AS val, d.i AS i
-        FROM unitf, (SELECT unnest(range(1, 17)) AS i) d
-      ) GROUP BY 1
-    ),
-    cutarr AS (
-      -- inf = 0-based ids of the informative dims (c1 < c2), the
-      -- twin of the Spark side's filtered collect_list
-      SELECT list(c1 ORDER BY i) AS c1s, list(c2 ORDER BY i) AS c2s,
-             list(i - 1 ORDER BY i) FILTER (WHERE c1 < c2) AS inf
-      FROM cuts
-    ),
-    bucketed AS (
-      {_mm_banded_bucketed_sql()}
-    ),
-    hits AS (
-      SELECT DISTINCT a.doc_id AS da, b.doc_id AS db,
-             (floor({sql_dot('a.u', 'b.u', 16)} * 1000000.0 + 0.5)
-               / 1000000.0) AS cos
-      FROM bucketed a JOIN bucketed b
-        ON a.band = b.band AND a.bucket = b.bucket
-        AND a.doc_id <> b.doc_id
-      WHERE (floor({sql_dot('a.u', 'b.u', 16)} * 1000000.0 + 0.5)
-               / 1000000.0) >= {MM_NEARDUP_COS}
-    )
-    SELECT da, db, cos, rk FROM (
-      SELECT da, db, cos,
-             CAST(row_number() OVER (
-               PARTITION BY da ORDER BY cos DESC, db
-             ) AS BIGINT) AS rk
-      FROM hits
-    ) WHERE rk <= {MM_BANDED_TOPK}
-"""
-
-def _binary_hash_oracle() -> str:
-    q6 = lambda x: f"(floor({x} * 1000000.0 + 0.5) / 1000000.0)"
-    hamming = " + ".join(
-        f"CASE WHEN (q.embedding[{i}] >= 0) <> (c.embedding[{i}] >= 0)"
-        f" THEN 1 ELSE 0 END"
-        for i in range(1, DIM + 1)
-    )
-    cos = q6(sql_dot("a.u", "b.u", DIM))
-    return f"""
-    WITH {sql_unit_cte()},
-    truth AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-               row_number() OVER (
-                 PARTITION BY a.vec_id
-                 ORDER BY {cos} DESC, b.vec_id
-               ) AS rk
-        FROM unitv a JOIN unitv b ON a.vec_id <> b.vec_id
-        WHERE a.vec_id < {N_QUERY_VECS}
-      ) WHERE rk <= {KNN_K}
-    ),
-    scored AS (
-      SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             CAST({hamming} AS BIGINT) AS hamming
-      FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-      WHERE q.vec_id < {N_QUERY_VECS}
-    ),
-    topk AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (
-                 PARTITION BY query_id
-                 ORDER BY hamming, neighbor_id
-               ) AS rk
-        FROM scored
-      ) WHERE rk <= {KNN_K}
-    ),
-    hits AS (
-      SELECT t.query_id, CAST(count(*) AS BIGINT) AS n_hits
-      FROM topk k JOIN truth t
-        ON k.query_id = t.query_id
-        AND k.neighbor_id = t.neighbor_id
-      GROUP BY 1
-    ),
-    per_q AS (
-      SELECT query_id, CAST(count(*) AS BIGINT) AS n_truth
-      FROM truth GROUP BY 1
-    )
-    SELECT p.query_id, p.n_truth,
-           CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-           {sql_quantize(
-               'CAST(coalesce(h.n_hits, 0) AS DOUBLE) / p.n_truth', 6)}
-             AS recall
-    FROM per_q p LEFT JOIN hits h ON p.query_id = h.query_id
-"""
-
-
-ORACLE["emb_binary_hash_eval"] = _binary_hash_oracle()
 
 ORACLE["corpus_pack_efficiency"] = f"""
     WITH RECURSIVE packed AS ({ORACLE['corpus_pack']}),
@@ -13689,68 +10779,6 @@ ORACLE["multimodal_pack"] = f"""
     SELECT doc_id, fmt, n_bytes, shard_id FROM walk
 """
 
-_PHASH_MASKS = ", ".join(f"({1 << b})" for b in range(16))
-
-ORACLE["multimodal_phash"] = f"""
-    WITH hx AS (
-      SELECT doc_id, lower(to_hex(encode(text))) AS h
-      FROM documents
-    ),
-    nib AS (
-      SELECT doc_id,
-             CAST(strpos('0123456789abcdef', substr(h, CAST(p AS INT), 1))
-                  - 1 AS BIGINT) AS bin
-      FROM (
-        SELECT doc_id, h,
-               unnest(generate_series(2, length(h), 2)) AS p
-        FROM hx
-      )
-    ),
-    bins AS (SELECT unnest(generate_series(0, 15)) AS bin),
-    cnt AS (
-      SELECT hx.doc_id, CAST(b.bin AS BIGINT) AS bin,
-             CAST(coalesce(n.c, 0) AS BIGINT) AS c
-      FROM hx CROSS JOIN bins b
-      LEFT JOIN (
-        SELECT doc_id, bin, count(*) AS c FROM nib GROUP BY 1, 2
-      ) n ON n.doc_id = hx.doc_id AND n.bin = b.bin
-    ),
-    ranked AS (
-      SELECT doc_id, bin, c,
-             row_number() OVER (
-               PARTITION BY doc_id ORDER BY c, bin
-             ) AS rk
-      FROM cnt
-    ),
-    med AS (
-      SELECT doc_id, c AS med FROM ranked WHERE rk = 9
-    ),
-    code AS (
-      SELECT r.doc_id,
-             CAST(coalesce(sum(CASE WHEN r.c > m.med
-               THEN (CAST(1 AS BIGINT) << CAST(r.bin AS INT))
-               ELSE 0 END), 0) AS BIGINT) AS phash
-      FROM ranked r JOIN med m ON m.doc_id = r.doc_id
-      GROUP BY 1
-    ),
-    census AS (
-      SELECT phash, CAST(count(*) AS BIGINT) AS n FROM code GROUP BY 1
-    ),
-    masks(mask) AS (VALUES {_PHASH_MASKS}),
-    near AS (
-      SELECT c.doc_id, CAST(sum(g.n) AS BIGINT) AS near_dups
-      FROM code c
-      CROSS JOIN masks m
-      JOIN census g ON g.phash = xor(c.phash, m.mask)
-      GROUP BY 1
-    )
-    SELECT c.doc_id, c.phash,
-           CAST(g.n - 1 AS BIGINT) AS exact_dups,
-           CAST(coalesce(near.near_dups, 0) AS BIGINT) AS near_dups
-    FROM code c
-    JOIN census g ON g.phash = c.phash
-    LEFT JOIN near ON near.doc_id = c.doc_id
-"""
 
 ORACLE["corpus_soft_dedup"] = f"""
     WITH RECURSIVE {_LSH_PAIR_CTES},
@@ -13844,57 +10872,6 @@ ORACLE["corpus_semantic_dedup"] = f"""
     WHERE d.doc_id NOT IN (SELECT id FROM dropset)
 """
 
-ORACLE["doc_extractive_summary"] = f"""
-    WITH docs_w AS (
-      SELECT doc_id, {_W} AS w FROM documents
-    ),
-    toks AS (
-      SELECT doc_id,
-             generate_subscripts(w, 1) - 1 AS pos,
-             unnest(w) AS term
-      FROM docs_w
-    ),
-    cf AS (SELECT term, count(*) AS ctf FROM toks GROUP BY 1),
-    tot AS (SELECT CAST(sum(ctf) AS DOUBLE) AS corpus_tokens FROM cf),
-    wtok AS (
-      SELECT t.doc_id, CAST(t.pos // {SUMMARY_SEG_TOKENS} AS BIGINT)
-               AS seg,
-             {sql_quantize('-ln(cf.ctf / x.corpus_tokens)', 6)} AS srp
-      FROM toks t JOIN cf ON cf.term = t.term CROSS JOIN tot x
-    ),
-    scored AS (
-      SELECT doc_id, seg, {sql_quantize('sum(srp)', 6)} AS score
-      FROM wtok GROUP BY 1, 2
-    ),
-    top AS (
-      SELECT doc_id, seg FROM (
-        SELECT doc_id, seg,
-               row_number() OVER (
-                 PARTITION BY doc_id ORDER BY score DESC, seg
-               ) AS rk
-        FROM scored
-      ) WHERE rk <= {SUMMARY_K_SEGMENTS}
-    ),
-    passages AS (
-      SELECT t.doc_id, t.seg,
-             array_to_string(list_slice(d.w,
-               CAST(t.seg * {SUMMARY_SEG_TOKENS} + 1 AS INT),
-               CAST(t.seg * {SUMMARY_SEG_TOKENS}
-                    + {SUMMARY_SEG_TOKENS} AS INT)), ' ') AS passage
-      FROM top t JOIN docs_w d ON d.doc_id = t.doc_id
-    ),
-    summarized AS (
-      SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
-             string_agg(passage, ' ' ORDER BY seg) AS summary
-      FROM passages GROUP BY 1
-    )
-    SELECT d.doc_id,
-           CAST(ceil(len(d.w) / {SUMMARY_SEG_TOKENS}.0) AS BIGINT)
-             AS n_segments,
-           CAST(coalesce(m.n_kept, 0) AS BIGINT) AS n_kept,
-           coalesce(m.summary, '') AS summary
-    FROM docs_w d LEFT JOIN summarized m ON m.doc_id = d.doc_id
-"""
 
 def _hrw_sql_key(shard: int) -> str:
     return (
@@ -14007,40 +10984,6 @@ ORACLE["dedup_method_agreement"] = f"""
     FROM counts
 """
 
-ORACLE["knn_graph_recall"] = f"""
-    WITH {_KNN_GRAPH_CTES},
-    exact AS (
-      SELECT da, db FROM (
-        SELECT a.vec_id AS da, b.vec_id AS db,
-               row_number() OVER (
-                 PARTITION BY a.vec_id
-                 ORDER BY (floor({sql_dot('a.u', 'b.u')} * 1000000.0
-                           + 0.5) / 1000000.0) DESC,
-                          b.vec_id
-               ) AS rk
-        FROM unitv a JOIN unitv b ON a.vec_id <> b.vec_id
-        WHERE ({sql_shingle_key('CAST(a.vec_id AS VARCHAR)')}
-               % {RECALL_SAMPLE_DENOM})
-              < ((CAST({RECALL_SAMPLE_DENOM} AS BIGINT)
-                  * {RECALL_AUDIT_CAP})
-                 -- greatest(..., 1) mirrors the Spark twin's
-                 -- max(n_vecs, 1) empty-source guard (ADVICE r10)
-                 // greatest((SELECT count(*) FROM embeddings), 1))
-      ) WHERE rk <= {KNN_GRAPH_K}
-    ),
-    hits AS (
-      SELECT count(*) AS n_hit
-      FROM exact e JOIN knng g ON g.da = e.da AND g.db = e.db
-    ),
-    counts AS (
-      SELECT (SELECT CAST(count(*) AS BIGINT) FROM exact) AS n_exact,
-             (SELECT CAST(n_hit AS BIGINT) FROM hits) AS n_hit
-    )
-    SELECT n_exact, n_hit,
-           {sql_quantize('CAST(n_hit AS DOUBLE) / n_exact', 6)}
-             AS recall
-    FROM counts
-"""
 
 ORACLE["multimodal_vad"] = f"""
     WITH hx AS (
@@ -14415,64 +11358,6 @@ ORACLE["corpus_bpe_pair_census"] = f"""
            total_symbols - n AS symbols_after_merge
     FROM pc CROSS JOIN tot
     ORDER BY n_occurrences DESC, pair LIMIT {BPE_TOP}
-"""
-
-
-ORACLE["corpus_burrows_delta"] = f"""
-    WITH toks AS (
-      SELECT source, unnest({_W}) AS term FROM documents
-    ),
-    st AS (
-      SELECT source, term, CAST(count(*) AS BIGINT) AS n
-      FROM toks GROUP BY 1, 2
-    ),
-    stot AS (
-      SELECT source, CAST(sum(n) AS BIGINT) AS tot
-      FROM st GROUP BY 1
-    ),
-    topk AS (
-      SELECT term FROM (
-        SELECT term, CAST(sum(n) AS BIGINT) AS c
-        FROM st GROUP BY 1 ORDER BY c DESC, term
-        LIMIT {BURROWS_K}
-      )
-    ),
-    grid AS (
-      SELECT s.source, s.tot, k.term FROM stot s CROSS JOIN topk k
-    ),
-    gj AS (
-      SELECT g.source, g.term,
-             CAST(floor((CAST(coalesce(c.n, 0) AS DOUBLE) / g.tot)
-               * 1e9) AS BIGINT) AS f9
-      FROM grid g LEFT JOIN st c
-        ON c.source = g.source AND c.term = g.term
-    ),
-    mt AS (
-      SELECT term, CAST(count(*) AS BIGINT) AS s_n,
-             sum(f9) AS sf, sum(f9 * f9) AS sff
-      FROM gj GROUP BY 1
-    ),
-    zt AS (
-      SELECT gj.source, gj.term,
-        CASE WHEN CAST(mt.s_n * mt.sff - mt.sf * mt.sf AS DOUBLE) > 0
-          THEN CAST(floor((CAST(mt.s_n * gj.f9 - mt.sf AS DOUBLE)
-            / sqrt(CAST(mt.s_n * mt.sff - mt.sf * mt.sf
-                        AS DOUBLE))) * 1e6 + 0.5) AS BIGINT)
-          ELSE 0 END AS zq
-      FROM gj JOIN mt USING (term)
-    ),
-    pairs AS (
-      SELECT a.source AS source_a, b.source AS source_b,
-             CAST(sum(abs(a.zq - b.zq)) AS BIGINT) AS s
-      FROM zt a JOIN zt b
-        ON a.term = b.term AND a.source < b.source
-      GROUP BY 1, 2
-    )
-    SELECT source_a, source_b,
-           {sql_quantize(
-               'CAST(s AS DOUBLE) / '
-               + str(float(BURROWS_K * 1_000_000)), 6)} AS delta
-    FROM pairs
 """
 
 

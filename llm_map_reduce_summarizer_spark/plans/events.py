@@ -1019,7 +1019,7 @@ def scorecard_from_backtest(fc: DataFrame) -> DataFrame:
     )
 
 
-MK_CRIT_95 = 1.96  # two-sided normal 95% critical value
+Z_CRIT_95 = 1.96  # two-sided normal 95% critical value
 
 
 def events_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1167,7 +1167,7 @@ def conversion_ztest_from_users(per_user: DataFrame) -> DataFrame:
         F.when(F.col("n_a") > 0, quantize(p_a, 6)).alias("p_a"),
         F.when(F.col("n_b") > 0, quantize(p_b, 6)).alias("p_b"),
         guarded(quantize(z, 4)).alias("z_stat"),
-        guarded(F.abs(quantize(z, 4)) > MK_CRIT_95).alias(
+        guarded(F.abs(quantize(z, 4)) > Z_CRIT_95).alias(
             "significant_95"
         ),
     )

@@ -299,9 +299,9 @@ def test_cli_cost_uses_model_tier(spark, tmp_path, monkeypatch):
 def test_query_runner_lists_and_rejects(capsys):
     """Catalog query runner: no key lists every catalog entry (no Spark
     session involved), with no star-schema entry and none of the
-    retired event analytics, their stream twins or the retired
-    stream-only ingest keys; an unknown key
-    exits 2 with a message."""
+    retired event analytics, their stream twins, the retired
+    stream-only ingest keys or the retired document analytics; an
+    unknown key exits 2 with a message."""
     from llm_map_reduce_summarizer_spark.query import main
 
     assert main([]) == 0
@@ -357,6 +357,22 @@ def test_query_runner_lists_and_rejects(capsys):
     retired_events |= {f"stream_{name}" for name in stream_only}
     assert len(retired_events) == 150
     assert not retired_events & set(listed)
+    retired_documents = {
+        "multimodal_neardup_banded", "emb_binary_hash_eval",
+        "corpus_dedup_incremental", "dedup_minhash_est_check",
+        "docs_column_profile", "corpus_split_balance", "search_ndcg",
+        "corpus_keyphrase_rake", "corpus_textrank_terms",
+        "doc_extractive_summary", "corpus_burrows_delta",
+        "multimodal_phash", "emb_knn_label_eval", "dedup_simhash",
+        "corpus_entropy_rate", "emb_dedup_incremental",
+        "corpus_bootstrap_ci", "emb_matryoshka_eval",
+        "corpus_split_leakage", "knn_ivfpq", "corpus_ngram_coverage",
+        "emb_label_homophily", "knn_graph_recall",
+        "corpus_budget_waterfill", "corpus_source_overlap",
+        "corpus_shard_skew",
+    }
+    assert len(retired_documents) == 26
+    assert not retired_documents & set(listed)
 
     assert main(["definitely_not_a_key"]) == 2
     assert "unknown query key" in capsys.readouterr().err

@@ -9,9 +9,9 @@ Two sanctioned behaviors:
   over nothing is undefined, and a clear error beats a silent empty
   index.
 
-The audit that produced this contract ran every batch entry against a
-schema-preserving 0-row copy of the testdata: 349/361 graceful, 12
-documented raises (all in the two classes pinned below).
+The audit behind this contract runs every batch entry against a
+schema-preserving 0-row copy of the testdata: every entry is graceful
+except the eleven documented raises pinned below.
 """
 
 from __future__ import annotations
@@ -27,12 +27,11 @@ import __spark_entry__ as entrymod
 QUERIES = entrymod.queries()
 
 # documented index-undefined raises: builder -> message fragment.
-# EXACTLY these twelve may raise; every other batch entry must return
+# EXACTLY these eleven may raise; every other batch entry must return
 # a defined result on 0-row sources.
 RAISERS = {
     "knn_pq": "PQ codebook undefined",
     "knn_pq_rerank": "PQ codebook undefined",
-    "knn_ivfpq": "PQ codebook undefined",
     "emb_pq_export": "PQ codebook undefined",
     "knn_ivf": "IVF coarse quantizer undefined",
     "knn_ivf_nprobe_curve": "IVF coarse quantizer undefined",

@@ -368,85 +368,6 @@ def test_pq_encode_deterministic_and_bounded(spark):
     assert (one["adc"] >= 0).all() and (one["adc"] <= 4.0 + 1e-9).all()
 
 
-def test_distributed_prefix_scan_matches_window(spark):
-    from pyspark.sql.window import Window
-
-    from llm_map_reduce_summarizer_spark.operators.scan import (
-        with_lag_over_order,
-        with_prefix_sums,
-    )
-
-    df = spark.range(0, 10_000).select(
-        F.col("id").alias("k"),
-        (F.col("id") % 7 + 1).alias("v"),
-        (F.col("id") % 3).cast("string").alias("s"),
-    )
-    scanned = with_prefix_sums(df, "k", {"cum_prev": "v"})
-    w = Window.orderBy("k").rowsBetween(Window.unboundedPreceding, -1)
-    expected = df.withColumn(
-        "cum_prev", F.coalesce(F.sum("v").over(w), F.lit(0).cast("long"))
-    )
-    assert (
-        scanned.select("k", "cum_prev").exceptAll(
-            expected.select("k", "cum_prev")
-        ).count()
-        == 0
-    )
-
-    lagged = with_lag_over_order(df, "k", "s", "prev_s")
-    expected_lag = df.withColumn("prev_s", F.lag("s").over(Window.orderBy("k")))
-    assert (
-        lagged.select("k", "prev_s").exceptAll(
-            expected_lag.select("k", "prev_s")
-        ).count()
-        == 0
-    )
-
-
-def test_scan_conf_path_equals_window_path(spark):
-    from llm_map_reduce_summarizer_spark.operators.scan import SCAN_CONF
-
-    rows = [
-        (i, i * 10.0, i * 10.0 + 30.0, f"SPK_{(i // 3) % 4}", f"text {i}")
-        for i in range(200)
-    ]
-    segs = preprocess_segments(_segments(spark, rows))
-    default_merge = merge_same_speaker(segs).toPandas()
-    default_chunks = assign_chunks(segs, 50).toPandas()
-    spark.conf.set(SCAN_CONF, "true")
-    try:
-        scan_merge = merge_same_speaker(segs).toPandas()
-        scan_chunks = assign_chunks(segs, 50).toPandas()
-    finally:
-        spark.conf.set(SCAN_CONF, "false")
-
-    for a, b in ((default_merge, scan_merge), (default_chunks, scan_chunks)):
-        a = a.sort_values(list(a.columns)).reset_index(drop=True)
-        b = b[a.columns].sort_values(list(a.columns)).reset_index(drop=True)
-        assert a.equals(b)
-
-
-def test_scan_plan_has_no_single_partition_window(spark):
-    from llm_map_reduce_summarizer_spark.operators.scan import with_prefix_sums
-
-    df = spark.range(0, 1000).select(
-        F.col("id").alias("k"), F.lit(1).alias("v")
-    )
-    scanned = with_prefix_sums(df, "k", {"cum_prev": "v"})
-    import contextlib
-    import io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        scanned.explain(mode="formatted")
-    plan = buf.getvalue()
-    # the bulk data goes through a RANGE exchange (parallel scan), and
-    # any empty-partition-spec window runs only on the tiny per-pid
-    # offsets relation, never on the row data (guarded by row counts in
-    # the companion correctness test)
-    assert "rangepartitioning" in plan.lower()
-
-
 def test_resolve_prompt_priority(tmp_path):
     from llm_map_reduce_summarizer_spark.operators.executor import (
         DEFAULT_PROMPT,
@@ -698,48 +619,6 @@ def test_stop_shingle_df_cap_kills_boilerplate_explosion(spark):
     assert set(zip(pairs["da"], pairs["db"])) == {(0, 1)}
 
 
-def test_incremental_dedup_verdict_tiers(spark):
-    """All three verdicts on a constructed ingest: an exact copy of an
-    existing doc (modulo whitespace/case normalization), a near-dup
-    sharing most shingles, and a fresh doc. Exact precedence beats
-    near (an exact copy is also a near-dup candidate)."""
-    from llm_map_reduce_summarizer_spark.operators.dedup import (
-        incremental_dedup_verdicts,
-    )
-
-    base = "the quick brown fox jumps over the lazy dog near the river bank today"
-    existing = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "doc_id": [100, 101],
-                "text": [base, "completely different content about spark engines"],
-                "lang": ["en", "en"],
-            }
-        )
-    )
-    batch = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "doc_id": [1, 2, 3],
-                "text": [
-                    "The  quick brown fox jumps over the lazy dog near the river bank today",
-                    base + " extra tail words appended here",
-                    "an entirely novel document with unique vocabulary throughout",
-                ],
-                "lang": ["en", "en", "en"],
-            }
-        )
-    )
-    out = (
-        incremental_dedup_verdicts(batch, existing, threshold=0.5, df_cap=None)
-        .toPandas()
-        .set_index("doc_id")["verdict"]
-    )
-    assert out[1] == "dup_exact"
-    assert out[2] == "dup_near"
-    assert out[3] == "keep"
-
-
 def test_token_counter_backends(spark):
     from llm_map_reduce_summarizer_spark.functions.tokenize import (
         HAS_TIKTOKEN,
@@ -826,24 +705,6 @@ def test_seg_clean_full_removes_repeated_words(spark):
     )
     out = preprocess_segments(src, full_fidelity=True).first()["text"]
     assert out == "the quick brown fox"
-
-
-def test_simhash_max_hamming_guard(spark):
-    """The 4x16-bit banding is only lossless to Hamming 3; larger
-    bounds must be rejected, not silently lose recall."""
-    from llm_map_reduce_summarizer_spark.operators.dedup import (
-        simhash_pairs,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma"), (2, "alpha beta gamma")],
-        "doc_id long, text string",
-    )
-    for bad in (4, 64, -1):
-        with pytest.raises(ValueError, match="max_hamming"):
-            simhash_pairs(docs, max_hamming=bad)
-    # the boundary value still runs
-    assert simhash_pairs(docs, max_hamming=3).count() == 1
 
 
 def test_catalog_ivf_trained_recall_pinned(spark):

@@ -33,10 +33,7 @@ STREAM_KEYS = sorted(SKIP)
 # the window has NO partition keys the spec's first argument is a sort
 # order (`col ASC/DESC NULLS ...`) or the bare frame — and the exchange
 # below it is SinglePartition: the whole input funnels through one
-# task. operators/scan.py's offset windows are the deliberate exception
-# (they run over #partitions rows, one per partition, by construction)
-# but are gated behind SCAN_CONF and never appear in default-config
-# plans, so no allowlist is needed.
+# task.
 _WSPEC = re.compile(r"windowspecdefinition\(([^,)]*)[,)]")
 
 
@@ -44,11 +41,6 @@ def _global_window_blocks(plan: str) -> list[str]:
     out = []
     for m in _WSPEC.finditer(plan):
         first = m.group(1).strip()
-        if first.startswith("_pid#"):
-            # operators/scan.py offset windows: they rank the
-            # per-partition TOTALS table — #partitions rows, one per
-            # partition by construction — never row data
-            continue
         if (
             re.search(r" (ASC|DESC) NULLS", first)
             or first.startswith("specifiedwindowframe")
@@ -62,10 +54,7 @@ def _global_window_blocks(plan: str) -> list[str]:
 # prefix-sum windows order ONE transcript's segments — bounded by
 # transcript length, not corpus size (multi-transcript callers pass
 # doc_col and the same windows hash-partition; the CLI does exactly
-# that). The corpus-scale path for a genuinely global order is
-# operators/scan.py's two-pass scan, plan-asserted below in
-# test_transcript_stream_scan_path_has_no_global_window and
-# result-equal in test_operators.py::test_scan_conf_path_equals_window_path.
+# that).
 TRANSCRIPT_STREAM = {
     "seg_merge_speaker",
     "chunk_assign",
@@ -193,26 +182,6 @@ def test_global_window_detector_fires(spark):
         with contextlib.redirect_stdout(buf):
             frame.explain(mode="formatted")
         assert len(_global_window_blocks(buf.getvalue())) == n_expected
-
-
-def test_transcript_stream_scan_path_has_no_global_window(spark):
-    """With the distributed scan enabled, the TRANSCRIPT_STREAM plans
-    must lose their global-order windows entirely (modulo scan.py's
-    #partitions-row _pid offsets) — this is the plan shape a 100 TB
-    single-stream run would use."""
-    from llm_map_reduce_summarizer_spark.operators.scan import SCAN_CONF
-
-    spark.conf.set(SCAN_CONF, "true")
-    try:
-        for name in ("seg_merge_speaker", "chunk_assign", "pipeline_e2e"):
-            df = QUERIES[name](spark, SF)
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain(mode="formatted")
-            offenders = _global_window_blocks(buf.getvalue())
-            assert not offenders, f"{name} (scan mode): {offenders}"
-    finally:
-        spark.conf.set(SCAN_CONF, "false")
 
 
 def test_chunk_greedy_is_not_single_task(spark):

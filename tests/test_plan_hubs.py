@@ -1,17 +1,12 @@
 """Focused r11-optimization regressions: queries whose composed
 branches used to re-run corpus-sized upstreams (duplicated lineage)
-now fold everything off one materialized hub. Three pins:
+now fold everything off one materialized hub. Two pins:
 
 1. HUB_ZERO_SCAN keys: the FINAL plan holds zero parquet scans — all
    corpus work happens exactly once, inside the hub materialize job
    (the plan reads only checkpointed RDDs afterwards). A regression
    re-introducing a second corpus pass re-adds a `Scan parquet` node.
-2. The unrolled power iteration (textrank) stays LINEAR in
-   the iteration count: binding deg through the evolving ranks frame
-   made the plan 2^ITERS-sized (252 nodes for 3 rounds); the static
-   node-table formulation is ~79. The bound catches the exponential
-   shape long before it matters, without pinning exact node counts.
-3. corpus_prep_e2e reads the documents table in ONE parquet scan over
+2. corpus_prep_e2e reads the documents table in ONE parquet scan over
    a whole pass — every SQL execution it starts, checkpoints included —
    so the quality and language scoring runs once per document.
 """
@@ -30,15 +25,11 @@ SF = "/root/testdata/sf0.001"
 QUERIES = entrymod.queries()
 
 HUB_ZERO_SCAN = [
-    "corpus_textrank_terms",
     "corpus_dsir_weights",
     "corpus_dsir_sample",
-    "corpus_keyphrase_rake",
     "search_map",
     "search_mrr",
     "corpus_ppl_buckets",
-    "corpus_burrows_delta",
-    "corpus_entropy_rate",
     "corpus_collocations",
     "corpus_quality_length_spearman",
     "emb_cluster_quality",
@@ -48,7 +39,6 @@ HUB_ZERO_SCAN = [
     "corpus_prep_e2e",
 ]
 
-_NODES = re.compile(r"^\(\d+\) ", re.M)
 _FINAL_PLANS = re.compile(r"== Final Plan ==(.*?)== Initial Plan ==", re.S)
 _SCANS = re.compile(r"Scan parquet\s+\((\d+)\)")
 
@@ -67,14 +57,6 @@ def test_final_plan_reads_only_the_materialized_hub(spark, key):
         f"{key}: a branch re-reads the source table — the hub "
         "materialize no longer covers every consumer"
     )
-
-
-@pytest.mark.parametrize("key", ["corpus_textrank_terms"])
-def test_power_iteration_plan_is_linear_in_rounds(spark, key):
-    n = len(_NODES.findall(_plan(spark, key)))
-    # linear shape is ~79 nodes for 3 rounds; the doubled-lineage
-    # shape was 252 and grows 2^k — 150 separates them with margin
-    assert n < 150, f"{key}: {n} plan nodes — lineage doubling is back"
 
 
 def _parquet_scans_since(spark, last_id: int) -> tuple[int, int]:

@@ -223,18 +223,16 @@ def test_inplace_quantize_matches_allocating_path():
 
 # ------------------------------------------- broadcast-closure operators
 #
-# The r9 100x scale sweep caught two keys
-# violating the broadcast-closure operators' documented-but-unenforced
-# "closure side is broadcast-small" contract: knn_graph_recall passed
-# the whole corpus as cosine_topk_blocked's query matrix and
-# emb_dedup_incremental screened a half-corpus delta. The contract is
-# now enforced via a limit(cap+1) fetch — an oversized side raises
-# BEFORE it lands on the driver — and the closure-side dgemms run in
-# bounded column chunks.
+# The r9 100x scale sweep caught a caller violating the
+# broadcast-closure operator's documented-but-unenforced "closure side
+# is broadcast-small" contract: it passed the whole corpus as
+# cosine_topk_blocked's query matrix. The contract is now enforced via
+# a limit(cap+1) fetch — an oversized side raises BEFORE it lands on
+# the driver — and the closure-side dgemms run in bounded column
+# chunks.
 
 from llm_map_reduce_summarizer_spark.operators.similarity import (  # noqa: E402
     BROADCAST_SIDE_CONF,
-    cosine_screen_broadcast,
     cosine_topk_blocked,
 )
 
@@ -265,27 +263,11 @@ def test_topk_query_side_guard(spark, tiny_vecs):
         _restore_side_conf(spark, old)
 
 
-def test_screen_delta_side_guard(spark, tiny_vecs):
-    old = _with_side_conf(spark, "5")
-    try:
-        with pytest.raises(ValueError, match="cosine_knn_graph"):
-            cosine_screen_broadcast(tiny_vecs, tiny_vecs, 0.5)
-        for conf in ("12", "0"):
-            _with_side_conf(spark, conf)
-            assert (
-                cosine_screen_broadcast(tiny_vecs, tiny_vecs, 0.5).count()
-                >= 0
-            )
-    finally:
-        _restore_side_conf(spark, old)
-
-
 def test_column_chunking_is_result_invariant(spark):
     """Chunked closure-side dgemms emit exactly what one big dgemm
     did. The chunk constant is patched down to 3 so a 7-query set
     spans multiple chunks, then top-k parity is checked against the
-    expression-tree exact operator and screen parity against a
-    single-matrix numpy reference."""
+    expression-tree exact operator."""
     import numpy as np
 
     from llm_map_reduce_summarizer_spark.operators import similarity as S
@@ -306,23 +288,9 @@ def test_column_chunking_is_result_invariant(spark):
         got_topk = sorted(
             map(tuple, cosine_topk_blocked(q, df, k=3).collect())
         )
-        got_screen = cosine_screen_broadcast(q, df, 0.2).collect()
     finally:
         S._DGEMM_COL_CHUNK = orig
     assert got_topk == want
-    # screen parity: every (bid, match_id) pair above threshold from a
-    # single-matrix reference computed in numpy
-    m = np.stack([r[1] for r in rows])
-    u = m / np.linalg.norm(m, axis=1, keepdims=True)
-    sims = np.floor(u[:7] @ u.T * 1e6 + 0.5) / 1e6
-    want_pairs = {
-        (q_i, c_i)
-        for q_i in range(7)
-        for c_i in range(40)
-        if sims[q_i, c_i] >= 0.2
-    }
-    got_pairs = {(r["bid"], r["match_id"]) for r in got_screen}
-    assert got_pairs == want_pairs
 
 
 # ---------------------------------------------- output-volume contract
@@ -429,52 +397,3 @@ def test_block_pair_table_distributed_path_matches_literal(spark):
     ]
     # the big-grid count is exact without materializing a list
     assert _block_pair_table(spark, 600).count() == 600 * 601 // 2
-
-
-def test_screen_chunked_is_result_invariant(spark):
-    """cosine_screen_chunked above the cap unions per-chunk screens of
-    the SAME corpus — the hit set must equal the one-shot screen's
-    (each delta vector scores against the full corpus regardless of
-    its chunk). This is the enforced-cap fallback emb_dedup_incremental
-    rides, so its frozen oracle holds at every scale."""
-    import numpy as np
-
-    from llm_map_reduce_summarizer_spark.operators.similarity import (
-        cosine_screen_chunked,
-    )
-
-    import zlib
-
-    rng = np.random.default_rng(5)
-    rows = [
-        (i, [float(x) for x in rng.normal(size=6)]) for i in range(30)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    delta = df.filter(F.col("vec_id") % 2 == 1)  # 15 rows
-    corpus = df.filter(F.col("vec_id") % 2 == 0)
-    want = sorted(
-        map(tuple, cosine_screen_broadcast(delta, corpus, 0.2).collect())
-    )
-    # pick a cap that (a) forces chunking at 15 rows and (b) no crc32
-    # chunk overfills past the cap at this toy scale (at production
-    # scale chunks hold ~cap/2 of 32k+ rows and binomial concentration
-    # makes overfill impossible; at 15 rows we check explicitly)
-    ids = [i for i in range(30) if i % 2 == 1]
-    cap = None
-    for cand in range(4, 15):
-        n_chunks = -(-15 // max(cand // 2, 1))
-        sizes = [0] * n_chunks
-        for i in ids:
-            sizes[zlib.crc32(str(i).encode()) % n_chunks] += 1
-        if max(sizes) <= cand:
-            cap = cand
-            break
-    assert cap is not None
-    old = _with_side_conf(spark, str(cap))
-    try:
-        got = sorted(
-            map(tuple, cosine_screen_chunked(delta, corpus, 0.2).collect())
-        )
-    finally:
-        _restore_side_conf(spark, old)
-    assert got == want and len(got) > 0
